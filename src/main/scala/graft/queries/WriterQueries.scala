@@ -1336,17 +1336,10 @@ object WriterQueries {
               """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},{"name":"txt","type":"string"}]}"""
             def rec(v: Long): Array[Byte] = {
               val out = new java.io.ByteArrayOutputStream()
-              def zz(x: Long): Unit = {
-                var z = (x << 1) ^ (x >> 63)
-                while ((z & ~0x7fL) != 0) {
-                  out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-                }
-                out.write(z.toInt)
-              }
-              zz(v)
+              graft.sources.Bytes.putZigzag(out, v)
               val tb = ("doc-" + v + "-" + ("x" * (v % 17).toInt))
                 .getBytes("UTF-8")
-              zz(tb.length.toLong)
+              graft.sources.Bytes.putZigzag(out, tb.length.toLong)
               out.write(tb, 0, tb.length)
               out.toByteArray
             }

@@ -36,6 +36,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * (blocks are independent); a malformed HEADER yields Nil.
   */
 object Avro {
+  import Bytes.{Reader, damage, putZigzag}
 
   /** One input blob: an .avro container's raw bytes. */
   case class AvroBlob(blob_id: Long, content: Array[Byte])
@@ -47,37 +48,29 @@ object Avro {
 
   private val Magic = Array[Byte]('O', 'b', 'j', 1)
 
-  /** Zigzag-varint encode into `out`. */
-  private[graft] def putVarint(out: java.io.ByteArrayOutputStream, n: Long): Unit = {
-    var z = (n << 1) ^ (n >> 63)
-    while ((z & ~0x7fL) != 0) {
-      out.write(((z & 0x7f) | 0x80).toInt)
-      z >>>= 7
-    }
-    out.write(z.toInt)
-  }
-
-  /** Zigzag-varint decode at `pos`; returns (value, nextPos) or null on
-    * truncation/overlong (> 10 bytes).
-    */
-  private[graft] def varint(b: Array[Byte], pos: Int): (Long, Int) = {
-    var z = 0L
-    var shift = 0
-    var p = pos
-    while (p < b.length && shift <= 63) {
-      val byte = b(p) & 0xff
-      z |= (byte & 0x7fL) << shift
-      p += 1
-      if ((byte & 0x80) == 0) return ((z >>> 1) ^ -(z & 1L), p)
-      shift += 7
-    }
-    null
-  }
-
   private def putString(out: java.io.ByteArrayOutputStream, s: String): Unit = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    putVarint(out, b.length.toLong)
+    putZigzag(out, b.length.toLong)
     out.write(b, 0, b.length)
+  }
+
+  /** An Avro string or bytes payload: zigzag length, then the bytes. */
+  private[sources] def str(r: Reader): String = r.utf8(r.len(r.zigzag()))
+
+  /** The container header's metadata map: count-prefixed blocks of
+    * string pairs, 0-terminated. A negative count (the block-size
+    * form) is not emitted by any writer this walk targets: Damage.
+    */
+  private[sources] def meta(r: Reader): Map[String, String] = {
+    val m = Map.newBuilder[String, String]
+    var n = r.zigzag()
+    while (n != 0) {
+      if (n < 0) damage()
+      var i = 0L
+      while (i < n) { m += str(r) -> str(r); i += 1 }
+      n = r.zigzag()
+    }
+    m.result()
   }
 
   /** The corpus record schema, as the writer declares it. */
@@ -100,17 +93,17 @@ object Avro {
     val out = new java.io.ByteArrayOutputStream()
     out.write(Magic, 0, 4)
     // file metadata map: one count-prefixed group, then the 0 terminator
-    putVarint(out, 2L)
+    putZigzag(out, 2L)
     putString(out, "avro.schema")
     putString(out, SchemaJson)
     putString(out, "avro.codec")
     putString(out, codec)
-    putVarint(out, 0L)
+    putZigzag(out, 0L)
     out.write(sync, 0, 16)
     records.grouped(blockRecords).foreach { group =>
       val body = new java.io.ByteArrayOutputStream()
       group.foreach { case (id, payload) =>
-        putVarint(body, id)
+        putZigzag(body, id)
         putString(body, payload)
       }
       val raw = body.toByteArray
@@ -140,8 +133,8 @@ object Avro {
             bos.toByteArray
           } finally d.end()
         }
-      putVarint(out, group.length.toLong)
-      putVarint(out, data.length.toLong)
+      putZigzag(out, group.length.toLong)
+      putZigzag(out, data.length.toLong)
       out.write(data, 0, data.length)
       out.write(sync, 0, 16)
     }
@@ -157,39 +150,10 @@ object Avro {
   def parse(blobId: Long, b: Array[Byte]): Seq[AvroRecord] = {
     if (b.length < 20 || !Magic.indices.forall(i => b(i) == Magic(i)))
       return Nil
-    // ---- metadata map --------------------------------------------------
-    var pos = 4
-    var codec = "null"
-    var schema: String = null
-    var mapDone = false
-    while (!mapDone) {
-      val c = varint(b, pos)
-      if (c == null) return Nil
-      pos = c._2
-      val n = c._1
-      if (n == 0) mapDone = true
-      else {
-        // negative counts carry a byte size (spec) — not emitted by any
-        // writer this walk targets; treat as malformation
-        if (n < 0) return Nil
-        var i = 0L
-        while (i < n) {
-          val k = varint(b, pos)
-          if (k == null || k._1 < 0 || k._2 + k._1 > b.length) return Nil
-          val key = new String(b, k._2, k._1.toInt,
-            java.nio.charset.StandardCharsets.UTF_8)
-          pos = k._2 + k._1.toInt
-          val v = varint(b, pos)
-          if (v == null || v._1 < 0 || v._2 + v._1 > b.length) return Nil
-          val value = new String(b, v._2, v._1.toInt,
-            java.nio.charset.StandardCharsets.UTF_8)
-          pos = v._2 + v._1.toInt
-          if (key == "avro.codec") codec = value
-          if (key == "avro.schema") schema = value
-          i += 1
-        }
-      }
-    }
+    val r = new Reader(b, 4, b.length)
+    val m = Bytes.total(meta(r)).getOrElse(return Nil)
+    val codec = m.getOrElse("avro.codec", "null")
+    val schema = m.getOrElse("avro.schema", null)
     // The record layout below is a CONTRACT, not an assumption: the
     // declared schema must be the (long, string) shape this walk
     // decodes, field order and types included — whitespace-insensitive,
@@ -202,94 +166,79 @@ object Avro {
     if (codec != "null" && codec != "deflate" && codec != "snappy" &&
       codec != "zstandard")
       return Nil // route elsewhere
-    if (pos + 16 > b.length) return Nil
-    val sync = java.util.Arrays.copyOfRange(b, pos, pos + 16)
-    pos += 16
+    if (r.remaining < 16) return Nil
+    val sync = r.bytes(16)
     // ---- block walk ----------------------------------------------------
     val out = scala.collection.mutable.ArrayBuffer.empty[AvroRecord]
     var blockIdx = 0
     var stop = false
-    while (!stop && pos < b.length) {
-      val cnt = varint(b, pos)
-      if (cnt == null || cnt._1 <= 0) { stop = true }
+    while (!stop && r.remaining > 0) {
+      val head = Bytes.total {
+        val cnt = r.zigzag()
+        if (cnt <= 0) damage()
+        val len = r.len(r.zigzag())
+        if (len > r.remaining - 16) damage()
+        (cnt, len)
+      }
+      if (head.isEmpty) stop = true
       else {
-        val sz = varint(b, cnt._2)
-        if (sz == null || sz._1 < 0 ||
-          sz._2 + sz._1 + 16 > b.length) { stop = true }
-        else {
-          val dataOff = sz._2
-          val dataLen = sz._1.toInt
-          val raw: Array[Byte] =
-            if (codec == "null")
-              java.util.Arrays.copyOfRange(b, dataOff, dataOff + dataLen)
-            else if (codec == "snappy")
-              snappyBlock(b, dataOff, dataLen)
-            else if (codec == "zstandard")
-              // one zstd frame per block, engine-owned full decode
-              Zstd.walk(java.util.Arrays.copyOfRange(
-                  b, dataOff, dataOff + dataLen)) match {
-                case Some(Seq(fr)) if fr.kind == "zstd" => fr.decoded
-                case _ => null
-              }
-            else {
-              val inf = new java.util.zip.Inflater(true)
-              try {
-                inf.setInput(b, dataOff, dataLen)
-                val bos = new java.io.ByteArrayOutputStream(dataLen * 2 + 64)
-                val chunk = new Array[Byte](8192)
-                var err = false
-                while (!err && !inf.finished()) {
-                  val n =
-                    try inf.inflate(chunk)
-                    catch {
-                      case _: java.util.zip.DataFormatException =>
-                        err = true; 0
-                    }
-                  if (n > 0) bos.write(chunk, 0, n)
-                  else if (!err && !inf.finished()) err = true
-                  // adversarial-allocation bound (same 2^26 cap as the
-                  // PNG/GIF/JPEG decoders): a crafted ~1000:1 block must
-                  // hit the damage path, not grow the task heap unbounded
-                  if (bos.size() > (1 << 26)) err = true
-                }
-                if (err) null else bos.toByteArray
-              } finally inf.end()
+        val (cnt, dataLen) = head.get
+        val dataOff = r.pos
+        val raw: Array[Byte] =
+          if (codec == "null")
+            java.util.Arrays.copyOfRange(b, dataOff, dataOff + dataLen)
+          else if (codec == "snappy")
+            snappyBlock(b, dataOff, dataLen)
+          else if (codec == "zstandard")
+            // one zstd frame per block, engine-owned full decode
+            Zstd.walk(java.util.Arrays.copyOfRange(
+                b, dataOff, dataOff + dataLen)) match {
+              case Some(Seq(fr)) if fr.kind == "zstd" => fr.decoded
+              case _ => null
             }
-          if (raw == null) stop = true
           else {
-            // records: exactly `cnt` (id, payload) pairs, nothing left
-            val recs = scala.collection.mutable.ArrayBuffer
-              .empty[(Long, String)]
-            var rp = 0
-            var bad = false
-            var i = 0L
-            while (!bad && i < cnt._1) {
-              val idv = varint(raw, rp)
-              if (idv == null) bad = true
-              else {
-                val lv = varint(raw, idv._2)
-                if (lv == null || lv._1 < 0 ||
-                  lv._2 + lv._1 > raw.length) bad = true
-                else {
-                  recs += ((idv._1, new String(raw, lv._2, lv._1.toInt,
-                    java.nio.charset.StandardCharsets.UTF_8)))
-                  rp = lv._2 + lv._1.toInt
-                }
+            val inf = new java.util.zip.Inflater(true)
+            try {
+              inf.setInput(b, dataOff, dataLen)
+              val bos = new java.io.ByteArrayOutputStream(dataLen * 2 + 64)
+              val chunk = new Array[Byte](8192)
+              var err = false
+              while (!err && !inf.finished()) {
+                val n =
+                  try inf.inflate(chunk)
+                  catch {
+                    case _: java.util.zip.DataFormatException =>
+                      err = true; 0
+                  }
+                if (n > 0) bos.write(chunk, 0, n)
+                else if (!err && !inf.finished()) err = true
+                // adversarial-allocation bound (same 2^26 cap as the
+                // PNG/GIF/JPEG decoders): a crafted ~1000:1 block must
+                // hit the damage path, not grow the task heap unbounded
+                if (bos.size() > (1 << 26)) err = true
               }
-              i += 1
-            }
-            if (bad || rp != raw.length) stop = true
-            else {
-              val syncAt = dataOff + dataLen
-              val syncOk = (0 until 16).forall(i => b(syncAt + i) == sync(i))
-              recs.zipWithIndex.foreach { case ((id, pl), ri) =>
-                out += AvroRecord(blobId, blockIdx, ri, id, pl, codec, syncOk)
-              }
-              if (!syncOk) stop = true // damage observable, walk ends
-              pos = syncAt + 16
-              blockIdx += 1
-            }
+              if (err) null else bos.toByteArray
+            } finally inf.end()
           }
+        // records: exactly `cnt` (id, payload) pairs, nothing left
+        val recs = if (raw == null) None else Bytes.total {
+          val rr = new Reader(raw, 0, raw.length)
+          val recs = scala.collection.mutable.ArrayBuffer
+            .empty[(Long, String)]
+          var i = 0L
+          while (i < cnt) { recs += (rr.zigzag() -> str(rr)); i += 1 }
+          if (rr.remaining != 0) damage()
+          recs
+        }
+        if (recs.isEmpty) stop = true
+        else {
+          r.skip(dataLen)
+          val syncOk = (0 until 16).forall(i => r.u8().toByte == sync(i))
+          recs.get.zipWithIndex.foreach { case ((id, pl), ri) =>
+            out += AvroRecord(blobId, blockIdx, ri, id, pl, codec, syncOk)
+          }
+          if (!syncOk) stop = true // damage observable, walk ends
+          blockIdx += 1
         }
       }
     }
@@ -317,9 +266,7 @@ object Avro {
       case Some(d) =>
         val crc = new java.util.zip.CRC32()
         crc.update(d)
-        val p = off + len - 4
-        val want = ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-          ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
+        val want = Bytes.be32(b, off + len - 4) & 0xffffffffL
         if ((crc.getValue & 0xffffffffL) == want) d else null
       case None => null
     }

@@ -58,8 +58,7 @@ object AvroGeneric {
   final case class SRef(name: String,
                         named: collection.Map[String, Schema]) extends Schema
 
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Bytes.{Damage, Reader, damage}
 
   /** Parse a schema JSON string into the type tree. */
   def parseSchema(json: String): Option[Schema] =
@@ -67,13 +66,13 @@ object AvroGeneric {
       try {
         val named = scala.collection.mutable.Map.empty[String, Schema]
         Some(schemaOf(j, named, 0))
-      } catch { case _: Bad => None }
+      } catch { case _: Damage => None }
     }
 
   private def schemaOf(j: JValue,
                        named: scala.collection.mutable.Map[String, Schema],
                        depth: Int): Schema = {
-    if (depth > 32) bad()
+    if (depth > 32) damage()
     j match {
       case JString(s) => primOrRef(s, named)
       case JArray(branches) =>
@@ -84,17 +83,17 @@ object AvroGeneric {
           case Some(inner @ (_: JObject | _: JArray)) =>
             // {"type": {...}} nesting (logical-type wrappers)
             return schemaOf(inner, named, depth + 1)
-          case _ => bad()
+          case _ => damage()
         }
         t match {
           case "record" =>
             val name = o.get("name") match {
               case Some(JString(n)) => n
-              case _ => bad()
+              case _ => damage()
             }
             val fieldsJ = o.get("fields") match {
               case Some(JArray(fs)) => fs
-              case _ => bad()
+              case _ => damage()
             }
             // two-phase so self-references inside fields resolve — via
             // a LAZY ref, not a placeholder record (an empty-fields
@@ -104,42 +103,42 @@ object AvroGeneric {
               case fo: JObject =>
                 val fn = fo.get("name") match {
                   case Some(JString(n)) => n
-                  case _ => bad()
+                  case _ => damage()
                 }
-                val ft = fo.get("type").getOrElse(bad())
+                val ft = fo.get("type").getOrElse(damage())
                 fn -> schemaOf(ft, named, depth + 1)
-              case _ => bad()
+              case _ => damage()
             }
             val full = SRecord(name, resolved)
             named(name) = full
             full
           case "enum" =>
             val name = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val n = o.get("symbols") match {
               case Some(JArray(ss)) => ss.length
-              case _ => bad()
+              case _ => damage()
             }
             val e = SEnum(name, n); named(name) = e; e
           case "fixed" =>
             val name = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val size = o.get("size") match {
               case Some(JLong(s)) if s >= 0 && s <= (1 << 20) => s.toInt
-              case _ => bad()
+              case _ => damage()
             }
             val f = SFixed(name, size); named(name) = f; f
           case "array" =>
-            SArray(schemaOf(o.get("items").getOrElse(bad()), named,
+            SArray(schemaOf(o.get("items").getOrElse(damage()), named,
               depth + 1))
           case "map" =>
-            SMap(schemaOf(o.get("values").getOrElse(bad()), named,
+            SMap(schemaOf(o.get("values").getOrElse(damage()), named,
               depth + 1))
           case prim => primOrRef(prim, named)
         }
-      case _ => bad()
+      case _ => damage()
     }
   }
 
@@ -155,7 +154,7 @@ object AvroGeneric {
       case "double" => SDouble
       case "bytes" => SBytes
       case "string" => SString
-      case ref => named.getOrElse(ref, bad())
+      case ref => named.getOrElse(ref, damage())
     }
 
   // ---- decoded values ----------------------------------------------------
@@ -208,136 +207,69 @@ object AvroGeneric {
 
   private val MaxItems = 1 << 22 // per-collection adversarial bound
 
-  /** Decode one datum of `schema` at `pos`; returns (value, nextPos). */
-  private def datum(b: Array[Byte], pos: Int, schema: Schema,
-                    depth: Int): (V, Int) = {
-    if (depth > 48) bad()
+  /** Decode one datum of `schema` at the reader's position. */
+  private def datum(r: Reader, schema: Schema, depth: Int): V = {
+    if (depth > 48) damage()
     schema match {
-      case SNull => (VNull, pos)
+      case SNull => VNull
       case SBool =>
-        if (pos >= b.length) bad()
-        val x = b(pos) & 0xff
-        if (x > 1) bad()
-        (VBool(x == 1), pos + 1)
-      case SInt | SLong =>
-        val v = Avro.varint(b, pos)
-        if (v == null) bad()
-        (VLong(v._1), v._2)
+        val x = r.u8()
+        if (x > 1) damage()
+        VBool(x == 1)
+      case SInt | SLong => VLong(r.zigzag())
       case SFloat =>
-        if (pos + 4 > b.length) bad()
-        val bits = (b(pos) & 0xff) | (b(pos + 1) & 0xff) << 8 |
-          (b(pos + 2) & 0xff) << 16 | (b(pos + 3) & 0xff) << 24
-        (VDouble(java.lang.Float.intBitsToFloat(bits).toDouble), pos + 4)
-      case SDouble =>
-        if (pos + 8 > b.length) bad()
-        var bits = 0L
-        var i = 7
-        while (i >= 0) { bits = (bits << 8) | (b(pos + i) & 0xffL); i -= 1 }
-        (VDouble(java.lang.Double.longBitsToDouble(bits)), pos + 8)
-      case SBytes =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._2 + v._1 > b.length) bad()
-        val n = v._1.toInt
-        val content =
-          if (n <= MaxCapturedBytes)
-            java.util.Arrays.copyOfRange(b, v._2, v._2 + n)
-          else null
-        (VBytes(n, content), v._2 + n)
-      case SString =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._2 + v._1 > b.length) bad()
-        (VString(new String(b, v._2, v._1.toInt,
-          java.nio.charset.StandardCharsets.UTF_8)), v._2 + v._1.toInt)
+        VDouble(java.lang.Float.intBitsToFloat(r.le32()).toDouble)
+      case SDouble => VDouble(java.lang.Double.longBitsToDouble(r.le64()))
+      case SBytes => bytesOf(r, r.len(r.zigzag()))
+      case SString => VString(Avro.str(r))
       case SEnum(_, n) =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= n) bad()
-        (VEnum(v._1.toInt), v._2)
-      case SFixed(_, size) =>
-        if (pos + size > b.length) bad()
-        val content =
-          if (size <= MaxCapturedBytes)
-            java.util.Arrays.copyOfRange(b, pos, pos + size)
-          else null
-        (VBytes(size, content), pos + size)
+        val v = r.zigzag()
+        if (v < 0 || v >= n) damage()
+        VEnum(v.toInt)
+      case SFixed(_, size) => bytesOf(r, size)
       case SRef(n, named) =>
-        datum(b, pos, named.getOrElse(n, bad()), depth + 1)
+        datum(r, named.getOrElse(n, damage()), depth + 1)
       case SUnion(branches) =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= branches.length) bad()
-        datum(b, v._2, branches(v._1.toInt), depth + 1)
+        val v = r.zigzag()
+        if (v < 0 || v >= branches.length) damage()
+        datum(r, branches(v.toInt), depth + 1)
       case SRecord(_, fields) =>
-        var p = pos
-        val out = Vector.newBuilder[(String, V)]
-        fields.foreach { case (fn, fs) =>
-          val (fv, np) = datum(b, p, fs, depth + 1)
-          out += fn -> fv
-          p = np
-        }
-        (VRecord(out.result()), p)
+        VRecord(fields.map { case (fn, fs) => fn -> datum(r, fs, depth + 1) })
       case SArray(items) =>
-        var p = pos
         val out = Vector.newBuilder[V]
-        var total = 0L
-        var stop = false
-        while (!stop) {
-          val c = Avro.varint(b, p)
-          if (c == null) bad()
-          p = c._2
-          var n = c._1
-          if (n == 0) stop = true
-          else {
-            if (n < 0) { // block-size form: size varint precedes items
-              val sz = Avro.varint(b, p)
-              if (sz == null || sz._1 < 0) bad()
-              p = sz._2
-              n = -n
-            }
-            total += n
-            if (total > MaxItems) bad()
-            var i = 0L
-            while (i < n) {
-              val (v, np) = datum(b, p, items, depth + 1)
-              out += v
-              p = np
-              i += 1
-            }
-          }
-        }
-        (VArray(out.result()), p)
+        blocks(r) { () => out += datum(r, items, depth + 1) }
+        VArray(out.result())
       case SMap(values) =>
-        var p = pos
         val out = Vector.newBuilder[(String, V)]
-        var total = 0L
-        var stop = false
-        while (!stop) {
-          val c = Avro.varint(b, p)
-          if (c == null) bad()
-          p = c._2
-          var n = c._1
-          if (n == 0) stop = true
-          else {
-            if (n < 0) {
-              val sz = Avro.varint(b, p)
-              if (sz == null || sz._1 < 0) bad()
-              p = sz._2
-              n = -n
-            }
-            total += n
-            if (total > MaxItems) bad()
-            var i = 0L
-            while (i < n) {
-              val k = Avro.varint(b, p)
-              if (k == null || k._1 < 0 || k._2 + k._1 > b.length) bad()
-              val key = new String(b, k._2, k._1.toInt,
-                java.nio.charset.StandardCharsets.UTF_8)
-              val (v, np) = datum(b, k._2 + k._1.toInt, values, depth + 1)
-              out += key -> v
-              p = np
-              i += 1
-            }
-          }
+        blocks(r) { () =>
+          val key = Avro.str(r)
+          out += key -> datum(r, values, depth + 1)
         }
-        (VMap(out.result()), p)
+        VMap(out.result())
+    }
+  }
+
+  /** `n` bytes as a [[VBytes]]; content kept up to the capture cap. */
+  private def bytesOf(r: Reader, n: Int): VBytes =
+    if (n <= MaxCapturedBytes) VBytes(n, r.bytes(n))
+    else { r.skip(n); VBytes(n, null) }
+
+  /** Array/map blocks: a count (negative = block-size form, its byte
+    * size follows), `item` run that many times, until a 0 count.
+    */
+  private[sources] def blocks(r: Reader)(item: () => Unit): Unit = {
+    var total = 0L
+    var n = r.zigzag()
+    while (n != 0) {
+      if (n < 0) {
+        if (r.zigzag() < 0) damage()
+        n = -n
+      }
+      total += n
+      if (total > MaxItems) damage()
+      var i = 0L
+      while (i < n) { item(); i += 1 }
+      n = r.zigzag()
     }
   }
 
@@ -351,8 +283,10 @@ object AvroGeneric {
     */
   def parseDatum(b: Array[Byte], pos: Int,
                  schema: Schema): Option[(V, Int)] =
-    try Some(datum(b, pos, schema, 0))
-    catch { case _: Bad => None }
+    Bytes.total {
+      val r = new Reader(b, pos, b.length)
+      (datum(r, schema, 0), r.pos)
+    }
 
   /** Inverse of [[AvroWrite.decimalBytes]]: big-endian two's
     * complement unscaled value, sign-extended; None over 8 bytes or
@@ -388,18 +322,13 @@ object AvroGeneric {
         val schema = parseSchema(rb.schemaJson).getOrElse(return None)
         val out = Vector.newBuilder[V]
         rb.blocks.foreach { case (cnt, raw) =>
-          var rp = 0
+          val r = new Reader(raw, 0, raw.length)
           var i = 0L
-          while (i < cnt) {
-            val (v, np) = datum(raw, rp, schema, 0)
-            out += v
-            rp = np
-            i += 1
-          }
-          if (rp != raw.length) return None // leftover bytes = desync
+          while (i < cnt) { out += datum(r, schema, 0); i += 1 }
+          if (r.remaining != 0) return None // leftover bytes = desync
         }
         Some(Decoded(rb.schemaJson, out.result()))
-      } catch { case _: Bad => None }
+      } catch { case _: Damage => None }
     }
 
   /** Frame walk: magic, metadata map (schema + codec), sync-verified
@@ -410,53 +339,24 @@ object AvroGeneric {
     try {
       if (b.length < 20 || b(0) != 'O' || b(1) != 'b' || b(2) != 'j' ||
         b(3) != 1) return None
-      var pos = 4
-      var codec = "null"
-      var schemaJson: String = null
-      var mapDone = false
-      while (!mapDone) {
-        val c = Avro.varint(b, pos)
-        if (c == null || c._1 < 0) return None
-        pos = c._2
-        if (c._1 == 0) mapDone = true
-        else {
-          var i = 0L
-          while (i < c._1) {
-            val k = Avro.varint(b, pos)
-            if (k == null || k._1 < 0 || k._2 + k._1 > b.length) return None
-            val key = new String(b, k._2, k._1.toInt,
-              java.nio.charset.StandardCharsets.UTF_8)
-            pos = k._2 + k._1.toInt
-            val v = Avro.varint(b, pos)
-            if (v == null || v._1 < 0 || v._2 + v._1 > b.length) return None
-            val value = new String(b, v._2, v._1.toInt,
-              java.nio.charset.StandardCharsets.UTF_8)
-            pos = v._2 + v._1.toInt
-            if (key == "avro.codec") codec = value
-            if (key == "avro.schema") schemaJson = value
-            i += 1
-          }
-        }
-      }
-      if (schemaJson == null) return None
+      val r = new Reader(b, 4, b.length)
+      val m = Avro.meta(r)
+      val schemaJson = m.getOrElse("avro.schema", return None)
+      val codec = m.getOrElse("avro.codec", "null")
       if (codec != "null" && codec != "deflate" && codec != "snappy" &&
         codec != "zstandard" && codec != "bzip2" && codec != "xz")
         return None
-      if (pos + 16 > b.length) return None
-      val sync = java.util.Arrays.copyOfRange(b, pos, pos + 16)
-      pos += 16
+      val sync = r.bytes(16)
       val out = Vector.newBuilder[(Long, Array[Byte])]
-      while (pos < b.length) {
-        val cnt = Avro.varint(b, pos)
+      while (r.remaining > 0) {
+        val cnt = r.zigzag()
         // MaxItems bound: the count is attacker-controlled (up to
         // 2^63) and a zero-byte datum schema never advances rp, so an
         // unbounded loop would hang/OOM before the leftover-bytes check
-        if (cnt == null || cnt._1 <= 0 || cnt._1 > MaxItems) return None
-        val sz = Avro.varint(b, cnt._2)
-        if (sz == null || sz._1 < 0 ||
-          sz._2 + sz._1 + 16 > b.length) return None
-        val dataOff = sz._2
-        val dataLen = sz._1.toInt
+        if (cnt <= 0 || cnt > MaxItems) return None
+        val dataLen = r.len(r.zigzag())
+        if (dataLen > r.remaining - 16) return None
+        val dataOff = r.pos
         val raw: Array[Byte] =
           if (codec == "null")
             java.util.Arrays.copyOfRange(b, dataOff, dataOff + dataLen)
@@ -493,17 +393,12 @@ object AvroGeneric {
               case None => return None
             }
           } else inflateRaw(b, dataOff, dataLen).getOrElse(return None)
-        out += cnt._1 -> raw
-        val syncAt = dataOff + dataLen
-        var j = 0
-        while (j < 16) {
-          if (b(syncAt + j) != sync(j)) return None
-          j += 1
-        }
-        pos = syncAt + 16
+        out += cnt -> raw
+        r.skip(dataLen)
+        if (!java.util.Arrays.equals(r.bytes(16), sync)) return None
       }
       Some(RawBlocks(schemaJson, out.result()))
-    } catch { case _: Bad => None }
+    } catch { case _: Damage => None }
   }
 
   /** SPLIT READ — the contract that makes a 100 TB Avro corpus
@@ -525,41 +420,13 @@ object AvroGeneric {
       // to find schema/codec and the first block offset)
       if (b.length < 20 || b(0) != 'O' || b(1) != 'b' || b(2) != 'j' ||
         b(3) != 1) return None
-      var pos = 4
-      var codec = "null"
-      var schemaJson: String = null
-      var mapDone = false
-      while (!mapDone) {
-        val c = Avro.varint(b, pos)
-        if (c == null || c._1 < 0) return None
-        pos = c._2
-        if (c._1 == 0) mapDone = true
-        else {
-          var i = 0L
-          while (i < c._1) {
-            val k = Avro.varint(b, pos)
-            if (k == null || k._1 < 0 || k._2 + k._1 > b.length)
-              return None
-            val key = new String(b, k._2, k._1.toInt,
-              java.nio.charset.StandardCharsets.UTF_8)
-            pos = k._2 + k._1.toInt
-            val v = Avro.varint(b, pos)
-            if (v == null || v._1 < 0 || v._2 + v._1 > b.length)
-              return None
-            val value = new String(b, v._2, v._1.toInt,
-              java.nio.charset.StandardCharsets.UTF_8)
-            pos = v._2 + v._1.toInt
-            if (key == "avro.codec") codec = value
-            if (key == "avro.schema") schemaJson = value
-            i += 1
-          }
-        }
-      }
-      if (schemaJson == null || codec != "null") return None
+      val r = new Reader(b, 4, b.length)
+      val m = Avro.meta(r)
+      val schemaJson = m.getOrElse("avro.schema", return None)
+      if (m.getOrElse("avro.codec", "null") != "null") return None
       val schema = parseSchema(schemaJson).getOrElse(return None)
-      if (pos + 16 > b.length) return None
-      val sync = java.util.Arrays.copyOfRange(b, pos, pos + 16)
-      val firstBlock = pos + 16
+      val sync = r.bytes(16)
+      val firstBlock = r.pos
       // synchronize: the first block starting at-or-after `start`
       // (block starts are the bytes FOLLOWING a sync marker)
       var cur =
@@ -585,33 +452,20 @@ object AvroGeneric {
         }
       val out = Vector.newBuilder[V]
       while (cur < end && cur < b.length) {
-        val blockStart = cur
-        val cnt = Avro.varint(b, blockStart.toInt)
-        if (cnt == null || cnt._1 <= 0 || cnt._1 > MaxItems)
-          return None
-        val sz = Avro.varint(b, cnt._2)
-        if (sz == null || sz._1 < 0 ||
-          sz._2 + sz._1 + 16 > b.length) return None
-        val dataOff = sz._2
-        val dataLen = sz._1.toInt
-        var rp = dataOff
+        val br = new Reader(b, cur.toInt, b.length)
+        val cnt = br.zigzag()
+        if (cnt <= 0 || cnt > MaxItems) return None
+        val dataLen = br.len(br.zigzag())
+        if (dataLen > br.remaining - 16) return None
+        val blk = br.sub(dataLen)
         var i = 0L
-        while (i < cnt._1) {
-          val (v, np) = datum(b, rp, schema, 0)
-          out += v
-          rp = np
-          i += 1
-        }
-        if (rp != dataOff + dataLen) return None // leftover = desync
-        var j = 0
-        while (j < 16) {
-          if (b(dataOff + dataLen + j) != sync(j)) return None
-          j += 1
-        }
-        cur = (dataOff + dataLen + 16).toLong
+        while (i < cnt) { out += datum(blk, schema, 0); i += 1 }
+        if (blk.remaining != 0) return None // leftover = desync
+        if (!java.util.Arrays.equals(br.bytes(16), sync)) return None
+        cur = br.pos.toLong
       }
       Some(out.result())
-    } catch { case _: Bad => None }
+    } catch { case _: Damage => None }
   }
 
   private def inflateRaw(b: Array[Byte], off: Int,

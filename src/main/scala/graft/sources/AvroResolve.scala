@@ -43,8 +43,7 @@ object AvroResolve {
   import AvroGeneric.{V, VNull, VBool, VLong, VDouble, VBytes,
     VString, VEnum, VRecord, VArray, VMap}
 
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Bytes.{Damage, Reader, damage}
 
   // ---- rich schema tree (defaults, aliases, symbols) ----------------------
 
@@ -78,8 +77,8 @@ object AvroResolve {
 
   private def deref(s: S, depth: Int = 0): S = s match {
     case RefS(n, named) =>
-      if (depth > 32) bad()
-      deref(named.getOrElse(n, bad()), depth + 1)
+      if (depth > 32) damage()
+      deref(named.getOrElse(n, damage()), depth + 1)
     case other => other
   }
 
@@ -89,21 +88,21 @@ object AvroResolve {
       try {
         val named = scala.collection.mutable.Map.empty[String, S]
         Some(schemaOf(j, named, 0))
-      } catch { case _: Bad => None }
+      } catch { case _: Damage => None }
     }
 
   private def aliasesOf(o: JObject): Set[String] =
     o.get("aliases") match {
       case Some(JArray(xs)) =>
-        xs.map { case JString(a) => a; case _ => bad() }.toSet
+        xs.map { case JString(a) => a; case _ => damage() }.toSet
       case None => Set.empty
-      case _ => bad()
+      case _ => damage()
     }
 
   private def schemaOf(j: JValue,
                        named: scala.collection.mutable.Map[String, S],
                        depth: Int): S = {
-    if (depth > 32) bad()
+    if (depth > 32) damage()
     j match {
       case JString(s) => primOrRef(s, named)
       case JArray(branches) =>
@@ -113,68 +112,68 @@ object AvroResolve {
           case Some(JString(s)) => s
           case Some(inner @ (_: JObject | _: JArray)) =>
             return schemaOf(inner, named, depth + 1)
-          case _ => bad()
+          case _ => damage()
         }
         t match {
           case "record" =>
             val name = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val fieldsJ = o.get("fields") match {
-              case Some(JArray(fs)) => fs; case _ => bad()
+              case Some(JArray(fs)) => fs; case _ => damage()
             }
             named(name) = RefS(name, named)
             val fields = fieldsJ.map {
               case fo: JObject =>
                 val fn = fo.get("name") match {
-                  case Some(JString(n)) => n; case _ => bad()
+                  case Some(JString(n)) => n; case _ => damage()
                 }
-                val fs = schemaOf(fo.get("type").getOrElse(bad()),
+                val fs = schemaOf(fo.get("type").getOrElse(damage()),
                   named, depth + 1)
                 FieldS(fn, aliasesOf(fo), fs, fo.get("default"))
-              case _ => bad()
+              case _ => damage()
             }
             val full = RecordS(name, aliasesOf(o), fields)
             named(name) = full
             full
           case "enum" =>
             val name = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val symbols = o.get("symbols") match {
               case Some(JArray(ss)) => ss.map {
-                case JString(x) => x; case _ => bad()
+                case JString(x) => x; case _ => damage()
               }
-              case _ => bad()
+              case _ => damage()
             }
             val dflt = o.get("default") match {
               case Some(JString(d)) =>
-                if (!symbols.contains(d)) bad()
+                if (!symbols.contains(d)) damage()
                 Some(d)
               case None => None
-              case _ => bad()
+              case _ => damage()
             }
             val e = EnumS(name, aliasesOf(o), symbols, dflt)
             named(name) = e; e
           case "fixed" =>
             val name = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val size = o.get("size") match {
               case Some(JLong(s)) if s >= 0 && s <= (1 << 20) => s.toInt
-              case _ => bad()
+              case _ => damage()
             }
             val f = FixedS(name, aliasesOf(o), size)
             named(name) = f; f
           case "array" =>
-            ArrayS(schemaOf(o.get("items").getOrElse(bad()), named,
+            ArrayS(schemaOf(o.get("items").getOrElse(damage()), named,
               depth + 1))
           case "map" =>
-            MapS(schemaOf(o.get("values").getOrElse(bad()), named,
+            MapS(schemaOf(o.get("values").getOrElse(damage()), named,
               depth + 1))
           case prim => primOrRef(prim, named)
         }
-      case _ => bad()
+      case _ => damage()
     }
   }
 
@@ -190,7 +189,7 @@ object AvroResolve {
       case "double" => DoubleS
       case "bytes" => BytesS
       case "string" => StringS
-      case ref => named.getOrElse(ref, bad())
+      case ref => named.getOrElse(ref, damage())
     }
 
   // ---- name matching -------------------------------------------------------
@@ -237,7 +236,7 @@ object AvroResolve {
     * branch).
     */
   private def defaultV(r0: S, j: JValue, depth: Int): V = {
-    if (depth > 48) bad()
+    if (depth > 48) damage()
     (deref(r0), j) match {
       case (NullS, JNull) => VNull
       case (BoolS, JBool(x)) => VBool(x)
@@ -250,11 +249,11 @@ object AvroResolve {
         VBytes(b.length, b)
       case (f: FixedS, JString(x)) =>
         val b = x.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-        if (b.length != f.size) bad()
+        if (b.length != f.size) damage()
         VBytes(b.length, b)
       case (e: EnumS, JString(x)) =>
         val i = e.symbols.indexOf(x)
-        if (i < 0) bad()
+        if (i < 0) damage()
         VEnum(i)
       case (ArrayS(items), JArray(xs)) =>
         VArray(xs.map(defaultV(items, _, depth + 1)))
@@ -264,13 +263,13 @@ object AvroResolve {
         })
       case (rec: RecordS, o: JObject) =>
         VRecord(rec.fields.map { f =>
-          val fj = o.get(f.name).orElse(f.default).getOrElse(bad())
+          val fj = o.get(f.name).orElse(f.default).getOrElse(damage())
           f.name -> defaultV(f.schema, fj, depth + 1)
         })
       case (UnionS(branches), _) =>
-        if (branches.isEmpty) bad()
+        if (branches.isEmpty) damage()
         defaultV(branches.head, j, depth + 1)
-      case _ => bad()
+      case _ => damage()
     }
   }
 
@@ -283,103 +282,70 @@ object AvroResolve {
     * Array/map blocks written in the negative-count form skip by
     * their declared byte size without touching the items.
     */
-  private def skip(b: Array[Byte], pos: Int, s0: S, depth: Int): Int = {
-    if (depth > 48) bad()
+  private def skip(in: Reader, s0: S, depth: Int): Unit = {
+    if (depth > 48) damage()
     deref(s0) match {
-      case NullS => pos
-      case BoolS =>
-        if (pos >= b.length || (b(pos) & 0xff) > 1) bad()
-        pos + 1
-      case IntS | LongS =>
-        val v = Avro.varint(b, pos); if (v == null) bad(); v._2
-      case FloatS =>
-        if (pos + 4 > b.length) bad(); pos + 4
-      case DoubleS =>
-        if (pos + 8 > b.length) bad(); pos + 8
-      case BytesS | StringS =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._2 + v._1 > b.length) bad()
-        v._2 + v._1.toInt
+      case NullS => ()
+      case BoolS => if (in.u8() > 1) damage()
+      case IntS | LongS => in.zigzag()
+      case FloatS => in.skip(4)
+      case DoubleS => in.skip(8)
+      case BytesS | StringS => in.skip(in.len(in.zigzag()))
       case e: EnumS =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= e.symbols.length) bad()
-        v._2
-      case f: FixedS =>
-        if (pos + f.size > b.length) bad()
-        pos + f.size
+        val v = in.zigzag()
+        if (v < 0 || v >= e.symbols.length) damage()
+      case f: FixedS => in.skip(f.size)
       case UnionS(branches) =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= branches.length) bad()
-        skip(b, v._2, branches(v._1.toInt), depth + 1)
+        val v = in.zigzag()
+        if (v < 0 || v >= branches.length) damage()
+        skip(in, branches(v.toInt), depth + 1)
       case RecordS(_, _, fields) =>
-        var p = pos
-        fields.foreach(f => p = skip(b, p, f.schema, depth + 1))
-        p
-      case ArrayS(items) => skipBlocks(b, pos, items, keyed = false, depth)
-      case MapS(values) => skipBlocks(b, pos, values, keyed = true, depth)
-      case _: RefS => bad() // deref above makes this unreachable
+        fields.foreach(f => skip(in, f.schema, depth + 1))
+      case ArrayS(items) => skipBlocks(in, items, keyed = false, depth)
+      case MapS(values) => skipBlocks(in, values, keyed = true, depth)
+      case _: RefS => damage() // deref above makes this unreachable
     }
   }
 
-  private def skipBlocks(b: Array[Byte], pos: Int, item: S,
-                         keyed: Boolean, depth: Int): Int = {
-    var p = pos
+  private def skipBlocks(in: Reader, item: S, keyed: Boolean,
+                         depth: Int): Unit = {
     var total = 0L
-    var stop = false
-    while (!stop) {
-      val c = Avro.varint(b, p)
-      if (c == null) bad()
-      p = c._2
-      var n = c._1
-      if (n == 0) stop = true
-      else if (n < 0) {
+    var n = in.zigzag()
+    while (n != 0) {
+      if (n < 0) {
         // negative count: a byte size follows — skip wholesale
-        val sz = Avro.varint(b, p)
-        if (sz == null || sz._1 < 0 || sz._2 + sz._1 > b.length) bad()
+        in.skip(in.len(in.zigzag()))
         total -= n
-        if (total > MaxItems) bad()
-        p = (sz._2 + sz._1).toInt
+        if (total > MaxItems) damage()
       } else {
         total += n
-        if (total > MaxItems) bad()
+        if (total > MaxItems) damage()
         var i = 0L
         while (i < n) {
-          if (keyed) {
-            val k = Avro.varint(b, p)
-            if (k == null || k._1 < 0 || k._2 + k._1 > b.length) bad()
-            p = k._2 + k._1.toInt
-          }
-          p = skip(b, p, item, depth + 1)
+          if (keyed) in.skip(in.len(in.zigzag()))
+          skip(in, item, depth + 1)
           i += 1
         }
       }
+      n = in.zigzag()
     }
-    p
   }
 
   // ---- resolving decode ------------------------------------------------------
 
   private val MaxCapturedBytes = 1 << 16
 
-  private def lenPrefixed(b: Array[Byte], pos: Int): (Array[Byte], Int) = {
-    val v = Avro.varint(b, pos)
-    if (v == null || v._1 < 0 || v._2 + v._1 > b.length) bad()
-    (java.util.Arrays.copyOfRange(b, v._2, v._2 + v._1.toInt),
-      v._2 + v._1.toInt)
-  }
-
-  private def datum(b: Array[Byte], pos: Int, w0: S, r0: S,
-                    depth: Int): (V, Int) = {
-    if (depth > 48) bad()
+  private def datum(in: Reader, w0: S, r0: S, depth: Int): V = {
+    if (depth > 48) damage()
     val w = deref(w0)
     val r = deref(r0)
     (w, r) match {
       // writer union first: the branch index is IN THE BYTES and must
       // be consumed regardless of the reader's shape
       case (UnionS(wbs), _) =>
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= wbs.length) bad()
-        datum(b, v._2, wbs(v._1.toInt), r, depth + 1)
+        val v = in.zigzag()
+        if (v < 0 || v >= wbs.length) damage()
+        datum(in, wbs(v.toInt), r, depth + 1)
       // reader union: first matching branch, exact pass then promotions
       case (_, UnionS(rbs)) =>
         val bi = {
@@ -387,67 +353,49 @@ object AvroResolve {
           if (ex >= 0) ex
           else rbs.indexWhere(branchMatch(w, _, exact = false))
         }
-        if (bi < 0) bad()
-        datum(b, pos, w, rbs(bi), depth + 1)
-      case (NullS, NullS) => (VNull, pos)
+        if (bi < 0) damage()
+        datum(in, w, rbs(bi), depth + 1)
+      case (NullS, NullS) => VNull
       case (BoolS, BoolS) =>
-        if (pos >= b.length) bad()
-        val x = b(pos) & 0xff
-        if (x > 1) bad()
-        (VBool(x == 1), pos + 1)
+        val x = in.u8()
+        if (x > 1) damage()
+        VBool(x == 1)
       case (IntS | LongS, IntS | LongS) =>
         // int may NOT narrow into int-only readers from a long writer
-        if (w == LongS && r == IntS) bad()
-        val v = Avro.varint(b, pos); if (v == null) bad()
-        (VLong(v._1), v._2)
+        if (w == LongS && r == IntS) damage()
+        VLong(in.zigzag())
       case (IntS | LongS, FloatS | DoubleS) =>
-        val v = Avro.varint(b, pos); if (v == null) bad()
-        (VDouble(v._1.toDouble), v._2)
+        VDouble(in.zigzag().toDouble)
       case (FloatS, FloatS | DoubleS) =>
-        if (pos + 4 > b.length) bad()
-        val bits = (b(pos) & 0xff) | (b(pos + 1) & 0xff) << 8 |
-          (b(pos + 2) & 0xff) << 16 | (b(pos + 3) & 0xff) << 24
-        (VDouble(java.lang.Float.intBitsToFloat(bits).toDouble), pos + 4)
+        VDouble(java.lang.Float.intBitsToFloat(in.le32()).toDouble)
       case (DoubleS, DoubleS) =>
-        if (pos + 8 > b.length) bad()
-        var bits = 0L
-        var i = 7
-        while (i >= 0) { bits = (bits << 8) | (b(pos + i) & 0xffL); i -= 1 }
-        (VDouble(java.lang.Double.longBitsToDouble(bits)), pos + 8)
+        VDouble(java.lang.Double.longBitsToDouble(in.le64()))
       case (BytesS | StringS, BytesS) =>
-        val (raw, np) = lenPrefixed(b, pos)
-        (VBytes(raw.length, if (raw.length <= MaxCapturedBytes) raw
-        else null), np)
-      case (BytesS | StringS, StringS) =>
-        val (raw, np) = lenPrefixed(b, pos)
-        (VString(new String(raw,
-          java.nio.charset.StandardCharsets.UTF_8)), np)
+        val raw = in.bytes(in.len(in.zigzag()))
+        VBytes(raw.length, if (raw.length <= MaxCapturedBytes) raw
+        else null)
+      case (BytesS | StringS, StringS) => VString(Avro.str(in))
       case (we: EnumS, re: EnumS) =>
-        if (!nameOk(we.name, re.name, re.aliases)) bad()
-        val v = Avro.varint(b, pos)
-        if (v == null || v._1 < 0 || v._1 >= we.symbols.length) bad()
-        val sym = we.symbols(v._1.toInt)
+        if (!nameOk(we.name, re.name, re.aliases)) damage()
+        val v = in.zigzag()
+        if (v < 0 || v >= we.symbols.length) damage()
+        val sym = we.symbols(v.toInt)
         val ri = re.symbols.indexOf(sym)
-        if (ri >= 0) (VEnum(ri), v._2)
+        if (ri >= 0) VEnum(ri)
         else re.default match {
-          case Some(d) => (VEnum(re.symbols.indexOf(d)), v._2)
-          case None => bad()
+          case Some(d) => VEnum(re.symbols.indexOf(d))
+          case None => damage()
         }
       case (wf: FixedS, rf: FixedS) =>
         if (!nameOk(wf.name, rf.name, rf.aliases) ||
-          wf.size != rf.size) bad()
-        if (pos + wf.size > b.length) bad()
-        val content =
-          if (wf.size <= MaxCapturedBytes)
-            java.util.Arrays.copyOfRange(b, pos, pos + wf.size)
-          else null
-        (VBytes(wf.size, content), pos + wf.size)
+          wf.size != rf.size) damage()
+        if (wf.size <= MaxCapturedBytes) VBytes(wf.size, in.bytes(wf.size))
+        else { in.skip(wf.size); VBytes(wf.size, null) }
       case (wr: RecordS, rr: RecordS) =>
-        if (!nameOk(wr.name, rr.name, rr.aliases)) bad()
+        if (!nameOk(wr.name, rr.name, rr.aliases)) damage()
         // writer order drives the byte walk; reader order drives the
         // output. A reader field matches a writer field by name or by
         // any of the READER field's aliases.
-        var p = pos
         val byWriterField =
           scala.collection.mutable.Map.empty[String, V]
         wr.fields.foreach { wf =>
@@ -455,11 +403,9 @@ object AvroResolve {
             rf.name == wf.name || rf.aliases.contains(wf.name))
           rfOpt match {
             case Some(rf) =>
-              val (v, np) = datum(b, p, wf.schema, rf.schema, depth + 1)
-              byWriterField(rf.name) = v
-              p = np
-            case None =>
-              p = skip(b, p, wf.schema, depth + 1)
+              byWriterField(rf.name) = datum(in, wf.schema, rf.schema,
+                depth + 1)
+            case None => skip(in, wf.schema, depth + 1)
           }
         }
         val out = rr.fields.map { rf =>
@@ -467,75 +413,22 @@ object AvroResolve {
             case Some(v) => rf.name -> v
             case None =>
               rf.name -> defaultV(rf.schema,
-                rf.default.getOrElse(bad()), depth + 1)
+                rf.default.getOrElse(damage()), depth + 1)
           }
         }
-        (VRecord(out), p)
+        VRecord(out)
       case (ArrayS(wi), ArrayS(ri)) =>
-        var p = pos
         val out = Vector.newBuilder[V]
-        var total = 0L
-        var stop = false
-        while (!stop) {
-          val c = Avro.varint(b, p)
-          if (c == null) bad()
-          p = c._2
-          var n = c._1
-          if (n == 0) stop = true
-          else {
-            if (n < 0) {
-              val sz = Avro.varint(b, p)
-              if (sz == null || sz._1 < 0) bad()
-              p = sz._2
-              n = -n
-            }
-            total += n
-            if (total > MaxItems) bad()
-            var i = 0L
-            while (i < n) {
-              val (v, np) = datum(b, p, wi, ri, depth + 1)
-              out += v
-              p = np
-              i += 1
-            }
-          }
-        }
-        (VArray(out.result()), p)
+        AvroGeneric.blocks(in) { () => out += datum(in, wi, ri, depth + 1) }
+        VArray(out.result())
       case (MapS(wv), MapS(rv)) =>
-        var p = pos
         val out = Vector.newBuilder[(String, V)]
-        var total = 0L
-        var stop = false
-        while (!stop) {
-          val c = Avro.varint(b, p)
-          if (c == null) bad()
-          p = c._2
-          var n = c._1
-          if (n == 0) stop = true
-          else {
-            if (n < 0) {
-              val sz = Avro.varint(b, p)
-              if (sz == null || sz._1 < 0) bad()
-              p = sz._2
-              n = -n
-            }
-            total += n
-            if (total > MaxItems) bad()
-            var i = 0L
-            while (i < n) {
-              val k = Avro.varint(b, p)
-              if (k == null || k._1 < 0 || k._2 + k._1 > b.length) bad()
-              val key = new String(b, k._2, k._1.toInt,
-                java.nio.charset.StandardCharsets.UTF_8)
-              val (v, np) = datum(b, k._2 + k._1.toInt, wv, rv, depth + 1)
-              out += key -> v
-              p = np
-              i += 1
-            }
-          }
+        AvroGeneric.blocks(in) { () =>
+          val key = Avro.str(in)
+          out += key -> datum(in, wv, rv, depth + 1)
         }
-        (VMap(out.result()), p)
-      case _ => bad() // incompatible pair: fail CLOSED
+        VMap(out.result())
+      case _ => damage() // incompatible pair: fail CLOSED
     }
   }
 
@@ -544,8 +437,10 @@ object AvroResolve {
     */
   def parseDatum(b: Array[Byte], pos: Int, writer: S,
                  reader: S): Option[(V, Int)] =
-    try Some(datum(b, pos, writer, reader, 0))
-    catch { case _: Bad => None }
+    Bytes.total {
+      val in = new Reader(b, pos, b.length)
+      (datum(in, writer, reader, 0), in.pos)
+    }
 
   /** Read a whole object container under an EVOLVED reader schema:
     * the embedded writer schema drives the byte walk, `readerJson`
@@ -559,21 +454,15 @@ object AvroResolve {
       rb <- AvroGeneric.rawBlocks(b)
       writer <- parseSchema(rb.schemaJson)
       reader <- parseSchema(readerJson)
-      records <- try {
+      records <- Bytes.total {
         val out = Vector.newBuilder[V]
-        var ok = true
         rb.blocks.foreach { case (cnt, raw) =>
-          var rp = 0
+          val in = new Reader(raw, 0, raw.length)
           var i = 0L
-          while (ok && i < cnt) {
-            val (v, np) = datum(raw, rp, writer, reader, 0)
-            out += v
-            rp = np
-            i += 1
-          }
-          if (rp != raw.length) ok = false // leftover bytes = desync
+          while (i < cnt) { out += datum(in, writer, reader, 0); i += 1 }
+          if (in.remaining != 0) damage() // leftover bytes = desync
         }
-        if (ok) Some(out.result()) else None
-      } catch { case _: Bad => None }
+        out.result()
+      }
     } yield AvroGeneric.Decoded(rb.schemaJson, records)
 }

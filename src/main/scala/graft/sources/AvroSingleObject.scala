@@ -64,8 +64,7 @@ object AvroSingleObject {
 
   // ---- Parsing Canonical Form -------------------------------------------------
 
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Bytes.{Damage, damage}
 
   /** Minimal-JSON string escaping (the spec's [STRINGS] rule). */
   private def jstr(s: String): String = {
@@ -93,7 +92,7 @@ object AvroSingleObject {
     Json.parse(schemaJson).flatMap { j =>
       try Some(pcf(j, scala.collection.mutable.Set.empty[String],
         ns = "", depth = 0))
-      catch { case _: Bad => None }
+      catch { case _: Damage => None }
     }
 
   private def fullName(name: String, ns: String): String =
@@ -102,7 +101,7 @@ object AvroSingleObject {
   private def pcf(j: JValue,
                   defined: scala.collection.mutable.Set[String],
                   ns: String, depth: Int): String = {
-    if (depth > 32) bad()
+    if (depth > 32) damage()
     j match {
       case JString(s) =>
         if (Primitives(s)) jstr(s)
@@ -115,13 +114,13 @@ object AvroSingleObject {
           case Some(JString(s)) => s
           case Some(inner @ (_: JObject | _: JArray)) =>
             return pcf(inner, defined, ns, depth + 1)
-          case _ => bad()
+          case _ => damage()
         }
         t match {
           case p if Primitives(p) => jstr(p)
           case "record" | "enum" | "fixed" =>
             val rawName = o.get("name") match {
-              case Some(JString(n)) => n; case _ => bad()
+              case Some(JString(n)) => n; case _ => damage()
             }
             val ns1 = o.get("namespace") match {
               case Some(JString(x)) => x
@@ -142,48 +141,48 @@ object AvroSingleObject {
             t match {
               case "record" =>
                 val fieldsJ = o.get("fields") match {
-                  case Some(JArray(fs)) => fs; case _ => bad()
+                  case Some(JArray(fs)) => fs; case _ => damage()
                 }
                 val fs = fieldsJ.map {
                   case fo: JObject =>
                     val fname = fo.get("name") match {
-                      case Some(JString(x)) => x; case _ => bad()
+                      case Some(JString(x)) => x; case _ => damage()
                     }
-                    val ft = pcf(fo.get("type").getOrElse(bad()),
+                    val ft = pcf(fo.get("type").getOrElse(damage()),
                       defined, innerNs, depth + 1)
                     s"""{"name":${jstr(fname)},"type":$ft}"""
-                  case _ => bad()
+                  case _ => damage()
                 }
                 parts += s""""fields":${fs.mkString("[", ",", "]")}"""
               case "enum" =>
                 val syms = o.get("symbols") match {
                   case Some(JArray(ss)) => ss.map {
-                    case JString(x) => jstr(x); case _ => bad()
+                    case JString(x) => jstr(x); case _ => damage()
                   }
-                  case _ => bad()
+                  case _ => damage()
                 }
                 parts +=
                   s""""symbols":${syms.mkString("[", ",", "]")}"""
               case _ =>
                 val size = o.get("size") match {
-                  case Some(JLong(x)) if x >= 0 => x; case _ => bad()
+                  case Some(JLong(x)) if x >= 0 => x; case _ => damage()
                 }
                 parts += s""""size":$size"""
             }
             parts.result().mkString("{", ",", "}")
           case "array" =>
-            val items = pcf(o.get("items").getOrElse(bad()),
+            val items = pcf(o.get("items").getOrElse(damage()),
               defined, ns, depth + 1)
             s"""{"type":"array","items":$items}"""
           case "map" =>
-            val values = pcf(o.get("values").getOrElse(bad()),
+            val values = pcf(o.get("values").getOrElse(damage()),
               defined, ns, depth + 1)
             s"""{"type":"map","values":$values}"""
           case other =>
             if (Primitives(other)) jstr(other)
             else jstr(fullName(other, ns))
         }
-      case _ => bad()
+      case _ => damage()
     }
   }
 
@@ -196,9 +195,7 @@ object AvroSingleObject {
       AvroGeneric.parseSchema(schemaJson).map { schema =>
         val out = new java.io.ByteArrayOutputStream()
         out.write(0xc3); out.write(0x01)
-        var v = fp
-        var i = 0
-        while (i < 8) { out.write((v & 0xff).toInt); v >>>= 8; i += 1 }
+        Bytes.putLe64(out, fp)
         AvroWrite.datum(out, datum, schema)
         out.toByteArray
       }
@@ -217,11 +214,8 @@ object AvroSingleObject {
     // check below handles framing
     if (b.length < 10 || (b(0) & 0xff) != 0xc3 || b(1) != 0x01)
       return None
-    var fp = 0L
-    var i = 7
-    while (i >= 0) { fp = (fp << 8) | (b(2 + i) & 0xffL); i -= 1 }
     for {
-      writerJson <- registry.get(fp)
+      writerJson <- registry.get(Bytes.le64(b, 2))
       writer <- AvroResolve.parseSchema(writerJson)
       reader <- AvroResolve.parseSchema(readerJson)
       vp <- AvroResolve.parseDatum(b, 10, writer, reader)

@@ -25,9 +25,7 @@ object AvroWrite {
 
   import AvroGeneric._
 
-  private final class Damage
-    extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{damage, putLe32, putLe64, putZigzag}
 
   /** Avro `decimal` logical-type payload: the unscaled value as
     * minimal-length BIG-ENDIAN two's complement (Avro spec §Logical
@@ -60,17 +58,9 @@ object AvroWrite {
     out
   }
 
-  private def zigzag(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var z = (v << 1) ^ (v >> 63)
-    while ((z & ~0x7fL) != 0) {
-      out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-    }
-    out.write(z.toInt)
-  }
-
   private def utf8(out: java.io.ByteArrayOutputStream, s: String): Unit = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    zigzag(out, b.length.toLong)
+    putZigzag(out, b.length.toLong)
     out.write(b, 0, b.length)
   }
 
@@ -101,23 +91,19 @@ object AvroWrite {
             schema: Schema): Unit = (schema, v) match {
     case (SNull, VNull) => ()
     case (SBool, VBool(x)) => out.write(if (x) 1 else 0)
-    case (SInt | SLong, VLong(x)) => zigzag(out, x)
+    case (SInt | SLong, VLong(x)) => putZigzag(out, x)
     case (SFloat, VDouble(x)) =>
-      val bits = java.lang.Float.floatToIntBits(x.toFloat)
-      out.write(bits & 0xff); out.write((bits >> 8) & 0xff)
-      out.write((bits >> 16) & 0xff); out.write((bits >> 24) & 0xff)
+      putLe32(out, java.lang.Float.floatToIntBits(x.toFloat))
     case (SDouble, VDouble(x)) =>
-      var bits = java.lang.Double.doubleToLongBits(x)
-      var i = 0
-      while (i < 8) { out.write((bits & 0xff).toInt); bits >>>= 8; i += 1 }
+      putLe64(out, java.lang.Double.doubleToLongBits(x))
     case (SBytes, VBytes(n, content)) =>
       if (content == null || content.length != n) damage()
-      zigzag(out, n.toLong)
+      putZigzag(out, n.toLong)
       out.write(content, 0, n)
     case (SString, VString(s)) => utf8(out, s)
     case (SEnum(_, n), VEnum(i)) =>
       if (i < 0 || i >= n) damage()
-      zigzag(out, i.toLong)
+      putZigzag(out, i.toLong)
     case (SFixed(_, size), VBytes(n, content)) =>
       if (content == null || n != size || content.length != size) damage()
       out.write(content, 0, size)
@@ -131,23 +117,23 @@ object AvroWrite {
       }
     case (SArray(items), VArray(xs)) =>
       if (xs.nonEmpty) {
-        zigzag(out, xs.length.toLong)
+        putZigzag(out, xs.length.toLong)
         xs.foreach(datum(out, _, items))
       }
-      zigzag(out, 0L)
+      putZigzag(out, 0L)
     case (SMap(values), VMap(entries)) =>
       if (entries.nonEmpty) {
-        zigzag(out, entries.length.toLong)
+        putZigzag(out, entries.length.toLong)
         entries.foreach { case (k, ev) =>
           utf8(out, k)
           datum(out, ev, values)
         }
       }
-      zigzag(out, 0L)
+      putZigzag(out, 0L)
     case (SUnion(branches), _) =>
       val bi = branches.indexWhere(fits(v, _))
       if (bi < 0) damage()
-      zigzag(out, bi.toLong)
+      putZigzag(out, bi.toLong)
       datum(out, v, branches(bi))
     case (r: SRef, _) =>
       datum(out, v, r.named.getOrElse(r.name, damage()))
@@ -173,10 +159,10 @@ object AvroWrite {
       .getOrElse(throw new IllegalArgumentException("bad schema"))
     val out = new java.io.ByteArrayOutputStream()
     out.write('O'); out.write('b'); out.write('j'); out.write(1)
-    zigzag(out, 2L) // metadata map: one block of two entries
+    putZigzag(out, 2L) // metadata map: one block of two entries
     utf8(out, "avro.schema"); utf8(out, schemaJson)
     utf8(out, "avro.codec"); utf8(out, codec)
-    zigzag(out, 0L) // map end
+    putZigzag(out, 0L) // map end
     val sync = java.security.MessageDigest.getInstance("MD5")
       .digest(("sync:" + syncSeed).getBytes("UTF-8"))
     out.write(sync, 0, 16)
@@ -199,8 +185,8 @@ object AvroWrite {
         case "xz" => LzmaEncode.xz(plain)
         case _ => plain
       }
-      zigzag(out, chunk.length.toLong)
-      zigzag(out, body.length.toLong)
+      putZigzag(out, chunk.length.toLong)
+      putZigzag(out, body.length.toLong)
       out.write(body, 0, body.length)
       out.write(sync, 0, 16)
     }

@@ -45,18 +45,14 @@ object Bgzf {
     out.write('B'); out.write('C')
     out.write(2); out.write(0) // SLEN = 2
     val bsize = total - 1
-    out.write(bsize & 0xff); out.write((bsize >> 8) & 0xff)
+    Bytes.putLe16(out, bsize)
     out.write(body, 0, body.length)
     val crc = new java.util.zip.CRC32
     crc.update(data)
     val v = crc.getValue
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt)
-    out.write(((v >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, v.toInt)
     val sz = data.length.toLong
-    out.write((sz & 0xff).toInt); out.write(((sz >> 8) & 0xff).toInt)
-    out.write(((sz >> 16) & 0xff).toInt)
-    out.write(((sz >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, sz.toInt)
     out.toByteArray
   }
 

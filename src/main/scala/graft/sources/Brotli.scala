@@ -29,9 +29,7 @@ package graft.sources
   */
 object Brotli {
 
-  private final class Damage
-    extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, damage}
 
   // ---- RFC 7932 appendix data (resources) ---------------------------------
 

@@ -305,8 +305,7 @@ object BrotliEncode {
   private def parse(b: Array[Byte], from: Int, until: Int,
                     head: Array[Int], prev: Array[Int]): Seq[Cmd] = {
     def h4(i: Int): Int = {
-      val v = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8 |
-        (b(i + 2) & 0xff) << 16 | (b(i + 3) & 0xff) << 24
+      val v = Bytes.le32(b, i)
       (v * 0x9E3779B1) >>> (32 - HashBits)
     }
     val cmds = Seq.newBuilder[Cmd]

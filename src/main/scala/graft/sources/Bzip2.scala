@@ -25,8 +25,7 @@ package graft.sources
   */
 object Bzip2 {
 
-  private final class Damage extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, damage}
 
   /** CRC32, MSB-first, polynomial 0x04c11db7 (bzip2's own, NOT zlib's). */
   private val crcTable: Array[Int] = {

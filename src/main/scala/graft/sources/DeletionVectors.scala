@@ -36,9 +36,7 @@ package graft.sources
   */
 object DeletionVectors {
 
-  private final class Damage extends RuntimeException(null, null, false,
-    false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, Reader, damage}
 
   // ---- Z85 ---------------------------------------------------------------
 
@@ -87,12 +85,8 @@ object DeletionVectors {
     z85Decode(pathOrInlineDv.takeRight(20)).flatMap { b =>
       if (b.length != 16) None
       else {
-        var hi = 0L
-        var lo = 0L
-        var i = 0
-        while (i < 8) { hi = (hi << 8) | (b(i) & 0xffL); i += 1 }
-        while (i < 16) { lo = (lo << 8) | (b(i) & 0xffL); i += 1 }
-        val uuid = new java.util.UUID(hi, lo).toString
+        val uuid = new java.util.UUID(Bytes.be64(b, 0), Bytes.be64(b, 8))
+          .toString
         Some((if (prefix.nonEmpty) prefix + "/" else "") +
           s"deletion_vector_$uuid.bin")
       }
@@ -113,17 +107,14 @@ object DeletionVectors {
     if (offset < 1 || sizeInBytes <= 0 || sizeInBytes > (1 << 26) ||
       offset + 8 > file.length) return None
     val p = offset.toInt
-    val size = ((file(p) & 0xff) << 24) | ((file(p + 1) & 0xff) << 16) |
-      ((file(p + 2) & 0xff) << 8) | (file(p + 3) & 0xff)
+    val size = Bytes.be32(file, p)
     if (size.toLong != sizeInBytes) return None
     if ((p + 4).toLong + size + 4 > file.length) return None
     val data = java.util.Arrays.copyOfRange(file, p + 4, p + 4 + size)
     val crc = new java.util.zip.CRC32()
     crc.update(data)
     val q = p + 4 + size
-    val want = ((file(q) & 0xffL) << 24) | ((file(q + 1) & 0xffL) << 16) |
-      ((file(q + 2) & 0xffL) << 8) | (file(q + 3) & 0xffL)
-    if ((crc.getValue & 0xffffffffL) != want) return None
+    if (crc.getValue.toInt != Bytes.be32(file, q)) return None
     Some(data)
   }
 
@@ -137,24 +128,16 @@ object DeletionVectors {
     */
   def bitmap(d: Array[Byte]): Option[Array[Long]] = {
     try {
-      var p = 0
-      def u8(): Int = {
-        if (p >= d.length) damage()
-        val v = d(p) & 0xff; p += 1; v
-      }
-      def le16(): Int = u8() | (u8() << 8)
-      def le32(): Int = le16() | (le16() << 16)
-      def le64(): Long = (le32().toLong & 0xffffffffL) |
-        ((le32().toLong & 0xffffffffL) << 32)
-      if (le32() != PortableMagic) return None
-      val nBitmaps = le64()
+      val in = new Reader(d, 0, d.length)
+      if (in.le32() != PortableMagic) return None
+      val nBitmaps = in.le64()
       if (nBitmaps < 0 || nBitmaps > 64) return None
       val out = Seq.newBuilder[Long]
       var total = 0L
       var bm = 0L
       while (bm < nBitmaps) {
         val high = bm << 32
-        val cookie = le32()
+        val cookie = in.le32()
         var nRuns: Array[Boolean] = null
         val nContainers =
           if ((cookie & 0xffff) == 12347) {
@@ -164,7 +147,7 @@ object DeletionVectors {
             val flags = new Array[Boolean](n)
             var i = 0
             while (i < bytes) {
-              val x = u8()
+              val x = in.u8()
               var j = 0
               while (j < 8 && i * 8 + j < n) {
                 flags(i * 8 + j) = ((x >> j) & 1) != 0
@@ -175,7 +158,7 @@ object DeletionVectors {
             nRuns = flags
             n
           } else if (cookie == 12346) {
-            val n = le32()
+            val n = in.le32()
             if (n < 0 || n > (1 << 16)) damage()
             n
           } else damage()
@@ -183,15 +166,15 @@ object DeletionVectors {
         val cards = new Array[Int](nContainers)
         var i = 0
         while (i < nContainers) {
-          keys(i) = le16()
-          cards(i) = le16() + 1
+          keys(i) = in.le16()
+          cards(i) = in.le16() + 1
           i += 1
         }
         // offset table: always with the no-run cookie, and with runs
         // when the container count clears the NO_OFFSET_THRESHOLD (4)
         if (nRuns == null || nContainers >= 4) {
           var k = 0
-          while (k < nContainers) { le32(); k += 1 }
+          while (k < nContainers) { in.le32(); k += 1 }
         }
         i = 0
         while (i < nContainers) {
@@ -200,12 +183,12 @@ object DeletionVectors {
           total += cards(i)
           if (total > MaxValues) damage()
           if (isRun) {
-            val n = le16()
+            val n = in.le16()
             var got = 0L
             var r = 0
             while (r < n) {
-              val start = le16()
-              val len = le16() + 1
+              val start = in.le16()
+              val len = in.le16() + 1
               var v = 0
               while (v < len) { out += base | (start + v); v += 1 }
               got += len
@@ -217,7 +200,7 @@ object DeletionVectors {
             var v = 0
             var prev = -1
             while (v < cards(i)) {
-              val x = le16()
+              val x = in.le16()
               if (x <= prev) damage() // array containers are sorted
               out += base | x
               prev = x
@@ -227,7 +210,7 @@ object DeletionVectors {
             var w = 0
             var got = 0
             while (w < 1024) {
-              val word = le64()
+              val word = in.le64()
               var bit = 0
               while (bit < 64) {
                 if (((word >>> bit) & 1L) != 0) {
@@ -244,7 +227,7 @@ object DeletionVectors {
         }
         bm += 1
       }
-      if (p != d.length) damage() // trailing bytes = malformation
+      if (in.remaining != 0) damage() // trailing bytes = malformation
       Some(out.result().toArray)
     } catch { case _: Damage => None }
   }

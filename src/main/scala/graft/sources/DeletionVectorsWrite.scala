@@ -58,16 +58,6 @@ object DeletionVectorsWrite {
     z85Encode(b)
   }
 
-  private def le16(out: java.io.ByteArrayOutputStream,
-                   v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-  }
-
-  private def le32(out: java.io.ByteArrayOutputStream,
-                   v: Int): Unit = {
-    le16(out, v & 0xffff); le16(out, v >>> 16)
-  }
-
   /** Serialize sorted distinct 64-bit values as delta's portable
     * RoaringBitmapArray: LE32 magic, LE64 bitmap count (high-32
     * buckets, dense from 0), then each 32-bit bitmap with cookie
@@ -78,44 +68,38 @@ object DeletionVectorsWrite {
     require(values == values.sorted.distinct, "sorted distinct")
     require(values.forall(v => v >= 0), "non-negative")
     val out = new java.io.ByteArrayOutputStream()
-    le32(out, 1681511377)
+    Bytes.putLe32(out, 1681511377)
     val nBitmaps = if (values.isEmpty) 0L else (values.last >>> 32) + 1
     require(nBitmaps <= 64, "bitmap count")
-    var k = 0
-    while (k < 8) { out.write(((nBitmaps >>> (8 * k)) & 0xff).toInt)
-      k += 1 }
+    Bytes.putLe64(out, nBitmaps)
     val byHigh = values.groupBy(_ >>> 32)
     var bm = 0L
     while (bm < nBitmaps) {
       val vs = byHigh.getOrElse(bm, Seq.empty).map(v => (v & 0xffffffffL).toInt)
       val byKey = vs.groupBy(v => v >>> 16).toSeq.sortBy(_._1)
-      le32(out, 12346)
-      le32(out, byKey.length)
+      Bytes.putLe32(out, 12346)
+      Bytes.putLe32(out, byKey.length)
       byKey.foreach { case (key, xs) =>
-        le16(out, key)
-        le16(out, xs.length - 1)
+        Bytes.putLe16(out, key)
+        Bytes.putLe16(out, xs.length - 1)
       }
       // offset table: byte offsets of each container's payload from
       // the start of THIS bitmap's serialization
       var off = 4 + 4 + 4 * byKey.length + 4 * byKey.length
       byKey.foreach { case (_, xs) =>
-        le32(out, off)
+        Bytes.putLe32(out, off)
         off += (if (xs.length <= 4096) 2 * xs.length else 8192)
       }
       byKey.foreach { case (_, xs) =>
         if (xs.length <= 4096)
-          xs.foreach(v => le16(out, v & 0xffff))
+          xs.foreach(v => Bytes.putLe16(out, v & 0xffff))
         else {
           val words = new Array[Long](1024)
           xs.foreach { v =>
             val low = v & 0xffff
             words(low >>> 6) |= 1L << (low & 63)
           }
-          words.foreach { w =>
-            var i = 0
-            while (i < 8) { out.write(((w >>> (8 * i)) & 0xff).toInt)
-              i += 1 }
-          }
+          words.foreach(Bytes.putLe64(out, _))
         }
       }
       bm += 1
@@ -133,18 +117,11 @@ object DeletionVectorsWrite {
     out.write(1)
     val offs = vectors.map { v =>
       val off = out.size.toLong
-      out.write((v.length >>> 24) & 0xff)
-      out.write((v.length >>> 16) & 0xff)
-      out.write((v.length >>> 8) & 0xff)
-      out.write(v.length & 0xff)
+      Bytes.putBe32(out, v.length)
       out.write(v, 0, v.length)
       val crc = new java.util.zip.CRC32()
       crc.update(v)
-      val c = crc.getValue
-      out.write(((c >>> 24) & 0xff).toInt)
-      out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt)
-      out.write((c & 0xff).toInt)
+      Bytes.putBe32(out, crc.getValue.toInt)
       (off, v.length.toLong)
     }
     (out.toByteArray, offs)

@@ -45,13 +45,6 @@ object Gzip {
   private val FNAME = 8
   private val FCOMMENT = 16
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Walk every member in one blob. Stops (keeping earlier members) on
     * a malformed header, truncated stream, or inflate error; a member
     * whose trailer CRC32/ISIZE disagree with the inflated bytes is
@@ -73,7 +66,7 @@ object Gzip {
           // bytes it declares) must END the walk — proceeding at a wrong
           // offset would desync, and reading XLEN past the buffer throws.
           if (p + 2 <= b.length) {
-            val skip = 2 + le16(b, p)
+            val skip = 2 + Bytes.le16(b, p)
             if (p + skip <= b.length) p += skip else hdrOk = false
           } else hdrOk = false
         }
@@ -101,7 +94,8 @@ object Gzip {
           else {
             val crc = new java.util.zip.CRC32
             crc.update(b, pos, p - pos)
-            if (le16(b, p) != (crc.getValue & 0xffffL).toInt) hdrOk = false
+            if (Bytes.le16(b, p) != (crc.getValue & 0xffffL).toInt)
+              hdrOk = false
             p += 2
           }
         }
@@ -131,8 +125,8 @@ object Gzip {
               else {
                 val crc = new java.util.zip.CRC32
                 crc.update(inflated)
-                val crcOk = le32(b, trailerAt) == crc.getValue &&
-                  le32(b, trailerAt + 4) == (inflated.length & 0xffffffffL)
+                val crcOk = Bytes.le32u(b, trailerAt) == crc.getValue &&
+                  Bytes.le32(b, trailerAt + 4) == inflated.length
                 val end = trailerAt + 8
                 out += GzipMember(pos.toLong, (end - pos).toLong, name,
                   inflated.length.toLong, crcOk, inflated)
@@ -175,12 +169,8 @@ object Gzip {
     } finally d.end()
     val crc = new java.util.zip.CRC32
     crc.update(data)
-    val v = crc.getValue
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    val sz = data.length & 0xffffffffL
-    out.write((sz & 0xff).toInt); out.write(((sz >> 8) & 0xff).toInt)
-    out.write(((sz >> 16) & 0xff).toInt); out.write(((sz >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, crc.getValue.toInt)
+    Bytes.putLe32(out, data.length) // ISIZE
     out.toByteArray
   }
 
@@ -220,12 +210,8 @@ object Gzip {
     out.write(body, 0, body.length)
     val crc = new java.util.zip.CRC32
     crc.update(data)
-    val v = crc.getValue
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    val sz = data.length & 0xffffffffL
-    out.write((sz & 0xff).toInt); out.write(((sz >> 8) & 0xff).toInt)
-    out.write(((sz >> 16) & 0xff).toInt); out.write(((sz >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, crc.getValue.toInt)
+    Bytes.putLe32(out, data.length) // ISIZE
     out.toByteArray
   }
 }

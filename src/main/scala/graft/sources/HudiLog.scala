@@ -56,83 +56,60 @@ object HudiLog {
   private val MaxBlocks = 1 << 12
   private val MaxEntries = 1 << 20
 
-  private final class Damage
-    extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
-
-  private def be32(b: Array[Byte], p: Int): Int = {
-    if (p < 0 || p + 4 > b.length) damage()
-    ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) |
-      ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
-  }
-
-  private def be64(b: Array[Byte], p: Int): Long = {
-    if (p < 0 || p + 8 > b.length) damage()
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (b(p + i) & 0xffL); i += 1 }
-    v
-  }
+  import Bytes.{Damage, Reader, damage, putBe32, putBe64}
 
   /** BE32-count map of BE32 key -> length-prefixed UTF-8 value. */
-  private def readMap(b: Array[Byte],
-                      p0: Int): (Map[Int, String], Int) = {
-    val n = be32(b, p0)
+  private def readMap(in: Reader): Map[Int, String] = {
+    val n = in.be32()
     if (n < 0 || n > 64) damage()
-    var p = p0 + 4
     var m = Map.empty[Int, String]
     var i = 0
     while (i < n) {
-      val k = be32(b, p)
-      val len = be32(b, p + 4)
-      if (len < 0 || p + 8 + len > b.length) damage()
-      m += (k -> new String(b, p + 8, len, Utf8))
-      p += 8 + len
+      val k = in.be32()
+      m += (k -> in.utf8(in.len(in.be32())))
       i += 1
     }
-    (m, p)
+    m
+  }
+
+  /** A data or delete block's content: BE32 version, BE32 count, then
+    * that many BE32-length-prefixed entries and nothing after them.
+    */
+  private def entries(content: Reader): Vector[Array[Byte]] = {
+    content.skip(4)
+    val n = content.be32()
+    if (n < 0 || n > MaxEntries) damage()
+    val out = Vector.fill(n)(content.bytes(content.len(content.be32())))
+    if (content.remaining != 0) damage()
+    out
   }
 
   /** Walk a complete log file into its blocks, in file order. */
   def parse(b: Array[Byte]): Option[Vector[Block]] = {
     try {
       val out = Vector.newBuilder[Block]
-      var pos = 0
+      val in = new Reader(b, 0, b.length)
       var nBlocks = 0
-      while (pos < b.length) {
+      while (in.remaining > 0) {
         nBlocks += 1
         if (nBlocks > MaxBlocks) return None
-        val blockStart = pos
-        if (pos + 6 > b.length) return None
-        var i = 0
-        while (i < 6) {
-          if (b(pos + i) != Magic(i)) return None
-          i += 1
-        }
-        pos += 6
-        val blockSize = be64(b, pos)
-        pos += 8
+        val blockStart = in.pos
+        if (!java.util.Arrays.equals(in.bytes(6), Magic)) return None
+        val blockSize = in.be64()
         // blocksize covers version..totalLen inclusive; the empty
         // block is 4+4+4+8+4+8 = 32 bytes
-        if (blockSize < 32 || blockSize > b.length - pos) return None
-        val blockEnd = pos + blockSize.toInt
-        val version = be32(b, pos)
+        if (blockSize < 32 || blockSize > in.remaining) return None
+        val blockEnd = in.pos + blockSize.toInt
+        val version = in.be32()
         if (version != 1) return None
-        val blockType = be32(b, pos + 4)
-        pos += 8
-        val (header, afterHdr) = readMap(b, pos)
-        pos = afterHdr
-        val contentLen = be64(b, pos)
-        pos += 8
-        if (contentLen < 0 || contentLen > blockEnd - pos) return None
-        val contentStart = pos
-        val contentEnd = pos + contentLen.toInt
-        pos = contentEnd
-        val (_, afterFooter) = readMap(b, pos)
-        pos = afterFooter
-        if (pos + 8 != blockEnd) return None
-        val totalLen = be64(b, pos)
-        pos += 8
+        val blockType = in.be32()
+        val header = readMap(in)
+        val contentLen = in.be64()
+        if (contentLen < 0 || contentLen > blockEnd - in.pos) return None
+        val content = in.sub(contentLen.toInt)
+        readMap(in) // footer
+        if (in.pos + 8 != blockEnd) return None
+        val totalLen = in.be64()
         if (totalLen != (blockEnd - blockStart).toLong) return None
         val instant = header.getOrElse(HdrInstantTime, return None)
         val block = blockType match {
@@ -140,42 +117,16 @@ object HudiLog {
             val schemaJson = header.getOrElse(HdrSchema, return None)
             val schema = AvroGeneric.parseSchema(schemaJson)
               .getOrElse(return None)
-            if (contentEnd - contentStart < 8) return None
-            val nRecs = be32(b, contentStart + 4)
-            if (nRecs < 0 || nRecs > MaxEntries) return None
-            var p = contentStart + 8
-            val recs = Vector.newBuilder[AvroGeneric.V]
-            var r = 0
-            while (r < nRecs) {
-              val len = be32(b, p)
-              if (len < 0 || p + 4 + len > contentEnd) return None
-              val one = java.util.Arrays.copyOfRange(b, p + 4,
-                p + 4 + len)
+            val recs = entries(content).map { one =>
               AvroGeneric.parseDatum(one, 0, schema) match {
-                case Some((v, end)) if end == len => recs += v
+                case Some((v, end)) if end == one.length => v
                 case _ => return None // desync or leftover bytes
               }
-              p += 4 + len
-              r += 1
             }
-            if (p != contentEnd) return None
-            Block(blockType, instant, recs.result(), Vector.empty)
+            Block(blockType, instant, recs, Vector.empty)
           case TypeDelete =>
-            if (contentEnd - contentStart < 8) return None
-            val nKeys = be32(b, contentStart + 4)
-            if (nKeys < 0 || nKeys > MaxEntries) return None
-            var p = contentStart + 8
-            val keys = Vector.newBuilder[String]
-            var r = 0
-            while (r < nKeys) {
-              val len = be32(b, p)
-              if (len < 0 || p + 4 + len > contentEnd) return None
-              keys += new String(b, p + 4, len, Utf8)
-              p += 4 + len
-              r += 1
-            }
-            if (p != contentEnd) return None
-            Block(blockType, instant, Vector.empty, keys.result())
+            Block(blockType, instant, Vector.empty,
+              entries(content).map(new String(_, Utf8)))
           case TypeCommand | TypeCorrupt =>
             Block(blockType, instant, Vector.empty, Vector.empty,
               header.getOrElse(HdrTargetInstant, ""))
@@ -190,22 +141,12 @@ object HudiLog {
 
   // ---- write side (the fixture-free spec round trip) ---------------------
 
-  private def wBe32(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-    out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-  }
-
-  private def wBe64(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    var i = 56
-    while (i >= 0) { out.write(((v >>> i) & 0xff).toInt); i -= 8 }
-  }
-
   private def wMap(out: java.io.ByteArrayOutputStream,
                    m: Seq[(Int, String)]): Unit = {
-    wBe32(out, m.length)
+    putBe32(out, m.length)
     m.foreach { case (k, v) =>
       val vb = v.getBytes(Utf8)
-      wBe32(out, k); wBe32(out, vb.length); out.write(vb, 0, vb.length)
+      putBe32(out, k); putBe32(out, vb.length); out.write(vb, 0, vb.length)
     }
   }
 
@@ -213,19 +154,19 @@ object HudiLog {
   def writeBlock(blockType: Int, header: Seq[(Int, String)],
                  content: Array[Byte]): Array[Byte] = {
     val body = new java.io.ByteArrayOutputStream()
-    wBe32(body, 1) // format version
-    wBe32(body, blockType)
+    putBe32(body, 1) // format version
+    putBe32(body, blockType)
     wMap(body, header)
-    wBe64(body, content.length.toLong)
+    putBe64(body, content.length.toLong)
     body.write(content, 0, content.length)
     wMap(body, Seq.empty) // footer
     val blockSize = body.size() + 8 // + trailing total-length field
     val totalLen = 6 + 8 + blockSize
     val out = new java.io.ByteArrayOutputStream()
     out.write(Magic, 0, 6)
-    wBe64(out, blockSize.toLong)
+    putBe64(out, blockSize.toLong)
     body.writeTo(out)
-    wBe64(out, totalLen.toLong)
+    putBe64(out, totalLen.toLong)
     out.toByteArray
   }
 
@@ -234,9 +175,9 @@ object HudiLog {
     */
   def dataContent(records: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    wBe32(out, 1)
-    wBe32(out, records.length)
-    records.foreach { r => wBe32(out, r.length); out.write(r, 0, r.length) }
+    putBe32(out, 1)
+    putBe32(out, records.length)
+    records.foreach { r => putBe32(out, r.length); out.write(r, 0, r.length) }
     out.toByteArray
   }
 
@@ -245,11 +186,11 @@ object HudiLog {
     */
   def deleteContent(keys: Seq[String]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    wBe32(out, 1)
-    wBe32(out, keys.length)
+    putBe32(out, 1)
+    putBe32(out, keys.length)
     keys.foreach { k =>
       val kb = k.getBytes(Utf8)
-      wBe32(out, kb.length); out.write(kb, 0, kb.length)
+      putBe32(out, kb.length); out.write(kb, 0, kb.length)
     }
     out.toByteArray
   }

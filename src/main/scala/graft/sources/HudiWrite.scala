@@ -69,14 +69,7 @@ object HudiWrite {
   /** One bare avro record: zigzag varints for (rec_id, val). */
   def avroRec(recId: Long, v: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def zz(x: Long): Unit = {
-      var z = (x << 1) ^ (x >> 63)
-      while ((z & ~0x7fL) != 0) {
-        out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-      }
-      out.write(z.toInt)
-    }
-    zz(recId); zz(v)
+    Bytes.putZigzag(out, recId); Bytes.putZigzag(out, v)
     out.toByteArray
   }
 

@@ -17,6 +17,8 @@ package graft.sources
   */
 object IcebergWrite {
 
+  import Bytes.putZigzag
+
   /** Reduced-but-valid manifest schemas (no unions — every field
     * required), shared verbatim with the Python twin.
     */
@@ -25,19 +27,10 @@ object IcebergWrite {
   val ListSchema: String =
     """{"type":"record","name":"manifest_file","fields":[{"name":"manifest_path","type":"string"},{"name":"manifest_length","type":"long"},{"name":"added_files_count","type":"int"},{"name":"added_rows_count","type":"long"}]}"""
 
-  private def varint(out: java.io.ByteArrayOutputStream,
-                     v: Long): Unit = {
-    var z = (v << 1) ^ (v >> 63)
-    while ((z & ~0x7fL) != 0) {
-      out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-    }
-    out.write(z.toInt)
-  }
-
   private def str(out: java.io.ByteArrayOutputStream,
                   s: String): Unit = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    varint(out, b.length.toLong); out.write(b, 0, b.length)
+    putZigzag(out, b.length.toLong); out.write(b, 0, b.length)
   }
 
   /** One Avro object container, one block. `codec` "null" (stored)
@@ -52,18 +45,18 @@ object IcebergWrite {
     require(codec == "null" || codec == "deflate", codec)
     val out = new java.io.ByteArrayOutputStream()
     out.write('O'); out.write('b'); out.write('j'); out.write(1)
-    varint(out, 2L)
+    putZigzag(out, 2L)
     str(out, "avro.schema"); str(out, schemaJson)
     str(out, "avro.codec"); str(out, codec)
-    varint(out, 0L)
+    putZigzag(out, 0L)
     out.write(sync, 0, 16)
     val plain = new java.io.ByteArrayOutputStream()
     records.foreach(r => plain.write(r, 0, r.length))
     val body =
       if (codec == "deflate") Deflate.compressFixed(plain.toByteArray)
       else plain.toByteArray
-    varint(out, records.length.toLong)
-    varint(out, body.length.toLong)
+    putZigzag(out, records.length.toLong)
+    putZigzag(out, body.length.toLong)
     out.write(body, 0, body.length)
     out.write(sync, 0, 16)
     out.toByteArray
@@ -71,10 +64,10 @@ object IcebergWrite {
 
   def entry(path: String, rc: Long, fsz: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    varint(out, 1L) // status = ADDED
+    putZigzag(out, 1L) // status = ADDED
     str(out, path)
-    varint(out, rc)
-    varint(out, fsz)
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     out.toByteArray
   }
 
@@ -82,9 +75,9 @@ object IcebergWrite {
                       rows: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     str(out, path)
-    varint(out, length)
-    varint(out, files)
-    varint(out, rows)
+    putZigzag(out, length)
+    putZigzag(out, files)
+    putZigzag(out, rows)
     out.toByteArray
   }
 
@@ -105,13 +98,13 @@ object IcebergWrite {
 
   private def bytesV(out: java.io.ByteArrayOutputStream,
                      b: Array[Byte]): Unit = {
-    varint(out, b.length.toLong); out.write(b, 0, b.length)
+    putZigzag(out, b.length.toLong); out.write(b, 0, b.length)
   }
 
   /** Union: zigzag branch index, then the branch payload. */
   private def union(out: java.io.ByteArrayOutputStream, idx: Long)
                    (payload: => Unit): Unit = {
-    varint(out, idx); payload
+    putZigzag(out, idx); payload
   }
 
   private def le4(v: Int): Array[Byte] =
@@ -129,24 +122,24 @@ object IcebergWrite {
               lo: Long, hi: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     def boundMap(v: Long): Unit = union(out, 1) {
-      varint(out, 1L) // one block of one entry
-      varint(out, 1L) // key = field id 1 (rec_id)
+      putZigzag(out, 1L) // one block of one entry
+      putZigzag(out, 1L) // key = field id 1 (rec_id)
       bytesV(out, le8(v))
-      varint(out, 0L) // end of blocks
+      putZigzag(out, 0L) // end of blocks
     }
-    varint(out, 1L)               // status = ADDED
-    union(out, 1)(varint(out, 99L)) // snapshot_id
-    union(out, 1)(varint(out, 1L))  // sequence_number
-    union(out, 1)(varint(out, 1L))  // file_sequence_number
-    varint(out, 0L)               // data_file.content = DATA
+    putZigzag(out, 1L)               // status = ADDED
+    union(out, 1)(putZigzag(out, 99L)) // snapshot_id
+    union(out, 1)(putZigzag(out, 1L))  // sequence_number
+    union(out, 1)(putZigzag(out, 1L))  // file_sequence_number
+    putZigzag(out, 0L)               // data_file.content = DATA
     str(out, path)
     str(out, "PARQUET")
-    varint(out, part.toLong)      // partition r102{part}
-    varint(out, rc)
-    varint(out, fsz)
+    putZigzag(out, part.toLong)      // partition r102{part}
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     boundMap(lo)                  // lower_bounds {1: LE64}
     boundMap(hi)                  // upper_bounds {1: LE64}
-    union(out, 1)(varint(out, 0L)) // sort_order_id
+    union(out, 1)(putZigzag(out, 0L)) // sort_order_id
     out.toByteArray
   }
 
@@ -159,20 +152,20 @@ object IcebergWrite {
     val out = new java.io.ByteArrayOutputStream()
     val bound = le4(part)
     str(out, path)
-    varint(out, length)
-    varint(out, 0L)  // partition_spec_id
-    varint(out, 0L)  // content = data
-    varint(out, 1L); varint(out, 1L) // sequence numbers
-    varint(out, 99L) // added_snapshot_id
-    varint(out, files); varint(out, 0L); varint(out, 0L)
-    varint(out, rows); varint(out, 0L); varint(out, 0L)
+    putZigzag(out, length)
+    putZigzag(out, 0L)  // partition_spec_id
+    putZigzag(out, 0L)  // content = data
+    putZigzag(out, 1L); putZigzag(out, 1L) // sequence numbers
+    putZigzag(out, 99L) // added_snapshot_id
+    putZigzag(out, files); putZigzag(out, 0L); putZigzag(out, 0L)
+    putZigzag(out, rows); putZigzag(out, 0L); putZigzag(out, 0L)
     union(out, 1) {  // partitions: one field_summary
-      varint(out, 1L)
+      putZigzag(out, 1L)
       out.write(0)                  // contains_null = false
       union(out, 1)(out.write(0))   // contains_nan = false
       union(out, 1)(bytesV(out, bound)) // lower_bound
       union(out, 1)(bytesV(out, bound)) // upper_bound
-      varint(out, 0L)
+      putZigzag(out, 0L)
     }
     union(out, 0)(()) // key_metadata = null
     out.toByteArray
@@ -244,19 +237,19 @@ object IcebergWrite {
                          specId: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     str(out, path)
-    varint(out, length)
-    varint(out, specId.toLong)
+    putZigzag(out, length)
+    putZigzag(out, specId.toLong)
     out.toByteArray
   }
 
   def entryEvo(path: String, rc: Long, fsz: Long,
                p2: Option[Int]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    varint(out, 1L) // status = ADDED
+    putZigzag(out, 1L) // status = ADDED
     str(out, path)
-    p2.foreach(v => varint(out, v.toLong)) // empty record if None
-    varint(out, rc)
-    varint(out, fsz)
+    p2.foreach(v => putZigzag(out, v.toLong)) // empty record if None
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     out.toByteArray
   }
 
@@ -328,13 +321,13 @@ object IcebergWrite {
   def partStatRecord(ps: PartStat): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     ps.p2 match {
-      case Some(v) => union(out, 1)(varint(out, v.toLong))
+      case Some(v) => union(out, 1)(putZigzag(out, v.toLong))
       case None => union(out, 0)(())
     }
-    varint(out, ps.specId.toLong)
-    varint(out, ps.records)
-    varint(out, ps.files)
-    varint(out, ps.bytes)
+    putZigzag(out, ps.specId.toLong)
+    putZigzag(out, ps.records)
+    putZigzag(out, ps.files)
+    putZigzag(out, ps.bytes)
     out.toByteArray
   }
 
@@ -548,22 +541,22 @@ object IcebergWrite {
                eqIds: Seq[Int] = Nil,
                format: String = "PARQUET"): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    varint(out, status.toLong)
-    union(out, 1)(varint(out, 99L))
-    union(out, 1)(varint(out, seq))
-    union(out, 1)(varint(out, seq))
-    varint(out, content.toLong)
+    putZigzag(out, status.toLong)
+    union(out, 1)(putZigzag(out, 99L))
+    union(out, 1)(putZigzag(out, seq))
+    union(out, 1)(putZigzag(out, seq))
+    putZigzag(out, content.toLong)
     str(out, path)
     str(out, format)
     // partition: empty record, zero bytes
-    varint(out, rc)
-    varint(out, fsz)
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     if (eqIds.nonEmpty) union(out, 1) {
-      varint(out, eqIds.length.toLong)
-      eqIds.foreach(i => varint(out, i.toLong))
-      varint(out, 0L)
+      putZigzag(out, eqIds.length.toLong)
+      eqIds.foreach(i => putZigzag(out, i.toLong))
+      putZigzag(out, 0L)
     } else union(out, 0)(())
-    union(out, 1)(varint(out, 0L))
+    union(out, 1)(putZigzag(out, 0L))
     out.toByteArray
   }
 
@@ -573,13 +566,13 @@ object IcebergWrite {
                          dr: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     str(out, path)
-    varint(out, length)
-    varint(out, 0L)
-    varint(out, content.toLong)
-    varint(out, seq); varint(out, 1L)
-    varint(out, 99L)
-    varint(out, af); varint(out, 0L); varint(out, df)
-    varint(out, ar); varint(out, 0L); varint(out, dr)
+    putZigzag(out, length)
+    putZigzag(out, 0L)
+    putZigzag(out, content.toLong)
+    putZigzag(out, seq); putZigzag(out, 1L)
+    putZigzag(out, 99L)
+    putZigzag(out, af); putZigzag(out, 0L); putZigzag(out, df)
+    putZigzag(out, ar); putZigzag(out, 0L); putZigzag(out, dr)
     union(out, 0)(())
     out.toByteArray
   }
@@ -686,10 +679,10 @@ object IcebergWrite {
   def entrySt(status: Int, path: String, rc: Long,
               fsz: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    varint(out, status.toLong)
+    putZigzag(out, status.toLong)
     str(out, path)
-    varint(out, rc)
-    varint(out, fsz)
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     out.toByteArray
   }
 
@@ -1195,15 +1188,15 @@ object IcebergWrite {
                rc: Long, fsz: Long, firstRowId: Option[Long],
                format: String = "PARQUET"): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    varint(out, status.toLong)
-    varint(out, seq)
-    varint(out, content.toLong)
+    putZigzag(out, status.toLong)
+    putZigzag(out, seq)
+    putZigzag(out, content.toLong)
     str(out, path)
     str(out, format)
-    varint(out, rc)
-    varint(out, fsz)
+    putZigzag(out, rc)
+    putZigzag(out, fsz)
     firstRowId match {
-      case Some(f) => union(out, 1)(varint(out, f))
+      case Some(f) => union(out, 1)(putZigzag(out, f))
       case None => union(out, 0)(())
     }
     out.toByteArray
@@ -1214,12 +1207,12 @@ object IcebergWrite {
                          firstRowId: Option[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     str(out, path)
-    varint(out, length)
-    varint(out, content.toLong)
-    varint(out, seq)
-    varint(out, rows)
+    putZigzag(out, length)
+    putZigzag(out, content.toLong)
+    putZigzag(out, seq)
+    putZigzag(out, rows)
     firstRowId match {
-      case Some(f) => union(out, 1)(varint(out, f))
+      case Some(f) => union(out, 1)(putZigzag(out, f))
       case None => union(out, 0)(())
     }
     out.toByteArray
@@ -1534,8 +1527,7 @@ object IcebergWrite {
     var i = 0
     val n4 = (b.length / 4) * 4
     while (i < n4) {
-      var k = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8 |
-        (b(i + 2) & 0xff) << 16 | (b(i + 3) & 0xff) << 24
+      var k = Bytes.le32(b, i)
       k *= c1
       k = Integer.rotateLeft(k, 15)
       k *= c2

@@ -34,15 +34,14 @@ object Inflate {
   private val ClOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4,
     12, 3, 13, 2, 14, 1, 15)
 
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Bytes.{Damage, damage}
 
   private final class BitSrc(b: Array[Byte], var pos: Int) {
     private var buf = 0L
     private var nb = 0
     def bits(n: Int): Int = {
       while (nb < n) {
-        if (pos >= b.length) bad()
+        if (pos >= b.length) damage()
         buf |= (b(pos) & 0xffL) << nb
         pos += 1
         nb += 8
@@ -66,7 +65,7 @@ object Inflate {
   private final class Huff(lens: Array[Int]) {
     private val MaxLen = 15
     private val count = new Array[Int](MaxLen + 1)
-    lens.foreach { l => if (l < 0 || l > MaxLen) bad(); count(l) += 1 }
+    lens.foreach { l => if (l < 0 || l > MaxLen) damage(); count(l) += 1 }
     private val total = lens.count(_ > 0)
     // Kraft check: left > 0 means incomplete (allowed only degenerate)
     locally {
@@ -75,10 +74,10 @@ object Inflate {
       while (l <= MaxLen) {
         left <<= 1
         left -= count(l)
-        if (left < 0) bad() // over-subscribed
+        if (left < 0) damage() // over-subscribed
         l += 1
       }
-      if (left > 0 && total > 1) bad()
+      if (left > 0 && total > 1) damage()
     }
     private val offs = new Array[Int](MaxLen + 2)
     locally {
@@ -108,7 +107,7 @@ object Inflate {
         code <<= 1
         l += 1
       }
-      bad()
+      damage()
     }
   }
 
@@ -135,7 +134,7 @@ object Inflate {
         out.write(v & 0xff)
         window(wpos) = v
         wpos = (wpos + 1) & 0x7fff
-        if (out.size() > cap) bad()
+        if (out.size() > cap) damage()
       }
       var fin = false
       while (!fin) {
@@ -146,7 +145,7 @@ object Inflate {
             // LEN/NLEN ride the byte stream (possibly via the buffer)
             val len = in.bits(16)
             val nlen = in.bits(16)
-            if ((len ^ 0xffff) != nlen) bad()
+            if ((len ^ 0xffff) != nlen) damage()
             var i = 0
             while (i < len) { push(in.bits(8).toByte); i += 1 }
           case btype if btype == 1 || btype == 2 =>
@@ -156,7 +155,7 @@ object Inflate {
                 val hlit = in.bits(5) + 257
                 val hdist = in.bits(5) + 1
                 val hclen = in.bits(4) + 4
-                if (hlit > 286 || hdist > 30) bad()
+                if (hlit > 286 || hdist > 30) damage()
                 val clLens = new Array[Int](19)
                 var i = 0
                 while (i < hclen) {
@@ -168,25 +167,25 @@ object Inflate {
                 while (at < lens.length) {
                   cl.decode(in) match {
                     case 16 =>
-                      if (at == 0) bad()
+                      if (at == 0) damage()
                       val rep = 3 + in.bits(2)
-                      if (at + rep > lens.length) bad()
+                      if (at + rep > lens.length) damage()
                       val v = lens(at - 1)
                       var r = 0
                       while (r < rep) { lens(at) = v; at += 1; r += 1 }
                     case 17 =>
                       val rep = 3 + in.bits(3)
-                      if (at + rep > lens.length) bad()
+                      if (at + rep > lens.length) damage()
                       at += rep
                     case 18 =>
                       val rep = 11 + in.bits(7)
-                      if (at + rep > lens.length) bad()
+                      if (at + rep > lens.length) damage()
                       at += rep
                     case v =>
                       lens(at) = v; at += 1
                   }
                 }
-                if (lens(256) == 0) bad() // end-of-block must exist
+                if (lens(256) == 0) damage() // end-of-block must exist
                 (new Huff(lens.take(hlit)),
                   new Huff(lens.drop(hlit)))
               }
@@ -196,13 +195,13 @@ object Inflate {
               if (sym < 256) push(sym.toByte)
               else if (sym == 256) eob = true
               else {
-                if (sym > 285) bad()
+                if (sym > 285) damage()
                 val li = sym - 257
                 val len = LenBase(li) + in.bits(LenExtra(li))
                 val ds = dist.decode(in)
-                if (ds > 29) bad()
+                if (ds > 29) damage()
                 val d = DistBase(ds) + in.bits(DistExtra(ds))
-                if (d > out.size()) bad() // before stream start
+                if (d > out.size()) damage() // before stream start
                 var i = 0
                 var rp = (wpos - d) & 0x7fff
                 while (i < len) {
@@ -213,11 +212,11 @@ object Inflate {
                 }
               }
             }
-          case _ => bad() // BTYPE 11 reserved
+          case _ => damage() // BTYPE 11 reserved
         }
       }
       val consumed = in.pos - off - in.bufferedBytes
       Some((out.toByteArray, consumed))
-    } catch { case _: Bad => None }
+    } catch { case _: Damage => None }
   }
 }

@@ -33,8 +33,7 @@ object Json {
 
   private val MaxDepth = 64
 
-  private final class Bad extends RuntimeException(null, null, false, false)
-  private def bad(): Nothing = throw new Bad
+  import Bytes.{Damage, damage}
 
   /** Parse one complete JSON document; trailing whitespace allowed,
     * trailing content is malformation.
@@ -45,9 +44,9 @@ object Json {
       p.ws()
       val v = p.value(0)
       p.ws()
-      if (p.pos != s.length) bad()
+      if (p.pos != s.length) damage()
       Some(v)
-    } catch { case _: Bad => None }
+    } catch { case _: Damage => None }
   }
 
   private final class P(s: String) {
@@ -58,23 +57,23 @@ object Json {
         s.charAt(pos) == '\n' || s.charAt(pos) == '\r')) pos += 1
 
     private def ch(): Char = {
-      if (pos >= s.length) bad()
+      if (pos >= s.length) damage()
       s.charAt(pos)
     }
 
     private def eat(c: Char): Unit = {
-      if (pos >= s.length || s.charAt(pos) != c) bad()
+      if (pos >= s.length || s.charAt(pos) != c) damage()
       pos += 1
     }
 
     private def lit(word: String, v: JValue): JValue = {
-      if (!s.startsWith(word, pos)) bad()
+      if (!s.startsWith(word, pos)) damage()
       pos += word.length
       v
     }
 
     def value(depth: Int): JValue = {
-      if (depth > MaxDepth) bad()
+      if (depth > MaxDepth) damage()
       ch() match {
         case '{' => obj(depth)
         case '[' => arr(depth)
@@ -83,7 +82,7 @@ object Json {
         case 'f' => lit("false", JBool(false))
         case 'n' => lit("null", JNull)
         case c if c == '-' || (c >= '0' && c <= '9') => number()
-        case _ => bad()
+        case _ => damage()
       }
     }
 
@@ -101,7 +100,7 @@ object Json {
         ch() match {
           case ',' => pos += 1
           case '}' => pos += 1; more = false
-          case _ => bad()
+          case _ => damage()
         }
       }
       JObject(fields.result())
@@ -119,7 +118,7 @@ object Json {
         ch() match {
           case ',' => pos += 1
           case ']' => pos += 1; more = false
-          case _ => bad()
+          case _ => damage()
         }
       }
       JArray(items.result())
@@ -145,14 +144,14 @@ object Json {
               case 'r' => sb.append('\r')
               case 't' => sb.append('\t')
               case 'u' =>
-                if (pos + 4 > s.length) bad()
+                if (pos + 4 > s.length) damage()
                 val h = s.substring(pos, pos + 4)
-                if (!h.forall(c => Character.digit(c, 16) >= 0)) bad()
+                if (!h.forall(c => Character.digit(c, 16) >= 0)) damage()
                 sb.append(Integer.parseInt(h, 16).toChar)
                 pos += 4
-              case _ => bad()
+              case _ => damage()
             }
-          case c if c < 0x20 => bad() // control chars must be escaped
+          case c if c < 0x20 => damage() // control chars must be escaped
           case c => sb.append(c)
         }
       }
@@ -168,13 +167,13 @@ object Json {
         case c if c >= '1' && c <= '9' =>
           while (pos < s.length && s.charAt(pos) >= '0' &&
             s.charAt(pos) <= '9') pos += 1
-        case _ => bad()
+        case _ => damage()
       }
       var isInt = true
       if (pos < s.length && s.charAt(pos) == '.') {
         isInt = false; pos += 1
         if (pos >= s.length || s.charAt(pos) < '0' ||
-          s.charAt(pos) > '9') bad()
+          s.charAt(pos) > '9') damage()
         while (pos < s.length && s.charAt(pos) >= '0' &&
           s.charAt(pos) <= '9') pos += 1
       }
@@ -184,7 +183,7 @@ object Json {
         if (pos < s.length &&
           (s.charAt(pos) == '+' || s.charAt(pos) == '-')) pos += 1
         if (pos >= s.length || s.charAt(pos) < '0' ||
-          s.charAt(pos) > '9') bad()
+          s.charAt(pos) > '9') damage()
         while (pos < s.length && s.charAt(pos) >= '0' &&
           s.charAt(pos) <= '9') pos += 1
       }
@@ -195,7 +194,7 @@ object Json {
       } else {
         val d = text.toDouble
         if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d))
-          bad()
+          damage()
         JDouble(d)
       }
     }

@@ -130,20 +130,17 @@ object Lz4 {
     if (off < 0 || len < 0 || want < 0 ||
       off.toLong + len > b.length) return None
     val end = off + len
-    def be32(p: Int): Int =
-      ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) |
-        ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
     val HadoopBuf = 256 * 1024
     val out = new java.io.ByteArrayOutputStream(want)
     var ip = off
     while (ip < end) {
       if (ip + 4 > end) return None
-      val chunkLen = be32(ip); ip += 4
+      val chunkLen = Bytes.be32(b, ip); ip += 4
       if (chunkLen < 0 || out.size().toLong + chunkLen > want) return None
       var remaining = chunkLen
       while (remaining > 0) {
         if (ip + 4 > end) return None
-        val compLen = be32(ip); ip += 4
+        val compLen = Bytes.be32(b, ip); ip += 4
         if (compLen < 0 || ip + compLen > end) return None
         val blockOut = math.min(remaining, HadoopBuf)
         val dec = decompressBlock(b, ip, compLen, blockOut)

@@ -74,7 +74,7 @@ object Lz4Encode {
         out.write(token)
         if (litLen >= 15) writeLen(litLen - 15)
         out.write(data, litStart, litLen)
-        out.write(bestDist & 0xff); out.write((bestDist >> 8) & 0xff)
+        Bytes.putLe16(out, bestDist)
         if (mlx >= 15) writeLen(mlx - 15)
         var k = i
         val stop = i + bestLen
@@ -103,21 +103,17 @@ object Lz4Encode {
                   bufSize: Int = 256 * 1024): Array[Byte] = {
     require(bufSize > 0)
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 32)
-    def be32(v: Int): Unit = {
-      out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-      out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-    }
     var p = 0
     do {
       val chunk = math.min(bufSize, data.length - p)
-      be32(chunk)
+      Bytes.putBe32(out, chunk)
       var q = p
       val chunkEnd = p + chunk
       while (q < chunkEnd) {
         val blockIn = math.min(bufSize, chunkEnd - q)
         val block = compressBlock(
           java.util.Arrays.copyOfRange(data, q, q + blockIn))
-        be32(block.length)
+        Bytes.putBe32(out, block.length)
         out.write(block, 0, block.length)
         q += blockIn
       }

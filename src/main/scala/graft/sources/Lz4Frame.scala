@@ -13,9 +13,6 @@ object XxHash32 {
   private val P5 = 0x165667b1
 
   def hash(b: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    def u32(i: Int): Int =
-      (b(i) & 0xff) | (b(i + 1) & 0xff) << 8 |
-        (b(i + 2) & 0xff) << 16 | (b(i + 3) & 0xff) << 24
     def rotl(x: Int, r: Int): Int = (x << r) | (x >>> (32 - r))
     val end = off + len
     var p = off
@@ -26,17 +23,17 @@ object XxHash32 {
         var a3 = seed
         var a4 = seed - P1
         while (p + 16 <= end) {
-          a1 = rotl(a1 + u32(p) * P2, 13) * P1
-          a2 = rotl(a2 + u32(p + 4) * P2, 13) * P1
-          a3 = rotl(a3 + u32(p + 8) * P2, 13) * P1
-          a4 = rotl(a4 + u32(p + 12) * P2, 13) * P1
+          a1 = rotl(a1 + Bytes.le32(b, p) * P2, 13) * P1
+          a2 = rotl(a2 + Bytes.le32(b, p + 4) * P2, 13) * P1
+          a3 = rotl(a3 + Bytes.le32(b, p + 8) * P2, 13) * P1
+          a4 = rotl(a4 + Bytes.le32(b, p + 12) * P2, 13) * P1
           p += 16
         }
         rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
       } else seed + P5
     h += len
     while (p + 4 <= end) {
-      h = rotl(h + u32(p) * P3, 17) * P4
+      h = rotl(h + Bytes.le32(b, p) * P3, 17) * P4
       p += 4
     }
     while (p < end) {
@@ -103,11 +100,7 @@ object Lz4Frame {
     require(blockMaxCode >= 4 && blockMaxCode <= 7)
     val bMax = blockMax(blockMaxCode)
     val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    le32(Magic)
+    Bytes.putLe32(out, Magic)
     val flg = 0x40 | 0x20 | (if (blockChecksum) 0x10 else 0) |
       (if (contentSize) 0x08 else 0) |
       (if (contentChecksum) 0x04 else 0)
@@ -130,13 +123,13 @@ object Lz4Frame {
       val (stored, sizeField) =
         if (c.length < n) (c, c.length)
         else (chunk, n | 0x80000000)
-      le32(sizeField)
+      Bytes.putLe32(out, sizeField)
       out.write(stored, 0, stored.length)
-      if (blockChecksum) le32(XxHash32.hash(stored, 0))
+      if (blockChecksum) Bytes.putLe32(out, XxHash32.hash(stored, 0))
       p += n
     }
-    le32(0) // EndMark
-    if (contentChecksum) le32(XxHash32.hash(data, 0))
+    Bytes.putLe32(out, 0) // EndMark
+    if (contentChecksum) Bytes.putLe32(out, XxHash32.hash(data, 0))
     out.toByteArray
   }
 
@@ -154,18 +147,15 @@ object Lz4Frame {
         if (want > Int.MaxValue - 8) throw new IllegalStateException
         out = java.util.Arrays.copyOf(out, want.toInt)
       }
-    def le32(p: Int): Int =
-      (b(p) & 0xff) | (b(p + 1) & 0xff) << 8 |
-        (b(p + 2) & 0xff) << 16 | (b(p + 3) & 0xff) << 24
     var ip = 0
     var sawFrame = false
     try {
       while (ip < b.length) {
         if (ip + 4 > b.length) return None
-        val magic = le32(ip); ip += 4
+        val magic = Bytes.le32(b, ip); ip += 4
         if (magic >= SkippableMin && magic <= SkippableMax) {
           if (ip + 4 > b.length) return None
-          val sz = le32(ip); ip += 4
+          val sz = Bytes.le32(b, ip); ip += 4
           if (sz < 0 || ip.toLong + sz > b.length) return None
           ip += sz
         } else if (magic == Magic) {
@@ -204,7 +194,7 @@ object Lz4Frame {
           var done = false
           while (!done) {
             if (ip + 4 > b.length) return None
-            val sf = le32(ip); ip += 4
+            val sf = Bytes.le32(b, ip); ip += 4
             if (sf == 0) done = true
             else {
               val uncomp = (sf & 0x80000000) != 0
@@ -227,7 +217,7 @@ object Lz4Frame {
               }
               if (bChk) {
                 if (ip.toLong + len + 4 > b.length) return None
-                if (le32(ip + len) != XxHash32.hash(b, ip, len, 0))
+                if (Bytes.le32(b, ip + len) != XxHash32.hash(b, ip, len, 0))
                   return None
                 ip += len + 4
               } else ip += len
@@ -237,7 +227,7 @@ object Lz4Frame {
             (outPos - frameStart).toLong != declared) return None
           if (cChk) {
             if (ip + 4 > b.length) return None
-            if (le32(ip) != XxHash32.hash(out, frameStart,
+            if (Bytes.le32(b, ip) != XxHash32.hash(out, frameStart,
               outPos - frameStart, 0)) return None
             ip += 4
           }

@@ -23,9 +23,7 @@ package graft.sources
   */
 object Lzma2 {
 
-  private final class Damage extends RuntimeException(null, null,
-    false, false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, damage}
 
   private val InitProb: Short = 1024
 

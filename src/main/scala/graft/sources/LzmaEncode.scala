@@ -171,9 +171,7 @@ object LzmaEncode {
   private val MaxLen = 273
 
   private def hash4(b: Array[Byte], i: Int): Int = {
-    val x = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    (x * 0x9E3779B1) >>> (32 - HashBits)
+    (Bytes.le32(b, i) * 0x9E3779B1) >>> (32 - HashBits)
   }
 
   private def matchLen(b: Array[Byte], i: Int, j: Int,
@@ -365,8 +363,7 @@ object LzmaEncode {
         val u = usz - 1
         val c = body.length - 1
         out.write(0x80 | (reset << 5) | (u >>> 16))
-        out.write((u >>> 8) & 0xff); out.write(u & 0xff)
-        out.write((c >>> 8) & 0xff); out.write(c & 0xff)
+        Bytes.putBe16(out, u); Bytes.putBe16(out, c)
         out.write(PropsByte)
         out.write(body, 0, body.length)
       } else {
@@ -376,7 +373,7 @@ object LzmaEncode {
         while (p < i) {
           val sz = math.min(0x10000, i - p)
           out.write(if (first && p == chunkStart) 0x01 else 0x02)
-          out.write(((sz - 1) >>> 8) & 0xff); out.write((sz - 1) & 0xff)
+          Bytes.putBe16(out, sz - 1)
           out.write(data, p, sz)
           p += sz
         }
@@ -395,12 +392,8 @@ object LzmaEncode {
   def alone(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(PropsByte)
-    val dict = 1 << 24
-    out.write(dict & 0xff); out.write((dict >>> 8) & 0xff)
-    out.write((dict >>> 16) & 0xff); out.write((dict >>> 24) & 0xff)
-    var k = 0
-    val n = data.length.toLong
-    while (k < 8) { out.write(((n >>> (8 * k)) & 0xff).toInt); k += 1 }
+    Bytes.putLe32(out, 1 << 24) // dictionary size
+    Bytes.putLe64(out, data.length.toLong)
     val s = new EState(Lc, Lp, Pb)
     val head = new Array[Int](1 << HashBits)
     java.util.Arrays.fill(head, -1)
@@ -415,24 +408,10 @@ object LzmaEncode {
 
   // ---- .xz container -------------------------------------------------------
 
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
+  private def crc32(b: Array[Byte], off: Int, len: Int): Int = {
     val c = new java.util.zip.CRC32()
     c.update(b, off, len)
-    c.getValue
-  }
-
-  private def le32(out: java.io.ByteArrayOutputStream,
-                   v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >>> 8) & 0xff).toInt)
-    out.write(((v >>> 16) & 0xff).toInt)
-    out.write(((v >>> 24) & 0xff).toInt)
-  }
-
-  private def xzVarint(out: java.io.ByteArrayOutputStream,
-                       v0: Long): Unit = {
-    var v = v0
-    while (v >= 0x80) { out.write(((v & 0x7f) | 0x80).toInt); v >>= 7 }
-    out.write(v.toInt)
+    c.getValue.toInt
   }
 
   /** LZMA2 filter props byte: dictionary size 2^24. */
@@ -450,7 +429,7 @@ object LzmaEncode {
     out.write('Z'); out.write(0x00)
     val flags = Array[Byte](0x00, 0x04) // check = CRC64
     out.write(flags(0)); out.write(flags(1))
-    le32(out, crc32(flags, 0, 2))
+    Bytes.putLe32(out, crc32(flags, 0, 2))
     // blocks
     val bs = if (blockSize <= 0) math.max(1, data.length) else blockSize
     val starts =
@@ -465,23 +444,19 @@ object LzmaEncode {
       val hdr = new java.io.ByteArrayOutputStream()
       hdr.write(0) // size byte, patched below
       hdr.write(0x00)
-      xzVarint(hdr, 0x21)
-      xzVarint(hdr, 1)
+      Bytes.putUvarint(hdr, 0x21)
+      Bytes.putUvarint(hdr, 1)
       hdr.write(DictProp)
       while ((hdr.size + 4) % 4 != 0) hdr.write(0x00)
       val hb = hdr.toByteArray
       hb(0) = ((hb.length + 4) / 4 - 1).toByte
       out.write(hb, 0, hb.length)
-      le32(out, crc32(hb, 0, hb.length))
+      Bytes.putLe32(out, crc32(hb, 0, hb.length))
       val payload = compressLzma2(seg)
       out.write(payload, 0, payload.length)
       var pad = (4 - payload.length % 4) % 4
       while (pad > 0) { out.write(0x00); pad -= 1 }
-      val ck = Crc64.of(seg, 0, seg.length)
-      var k = 0
-      while (k < 8) {
-        out.write(((ck >>> (8 * k)) & 0xff).toInt); k += 1
-      }
+      Bytes.putLe64(out, Crc64.of(seg, 0, seg.length))
       index += ((hb.length + 4L + payload.length + 8L,
         seg.length.toLong))
     }
@@ -489,21 +464,21 @@ object LzmaEncode {
     val idx = new java.io.ByteArrayOutputStream()
     idx.write(0x00)
     val recs = index.result()
-    xzVarint(idx, recs.length.toLong)
+    Bytes.putUvarint(idx, recs.length.toLong)
     recs.foreach { case (unp, unc) =>
-      xzVarint(idx, unp); xzVarint(idx, unc)
+      Bytes.putUvarint(idx, unp); Bytes.putUvarint(idx, unc)
     }
     while (idx.size % 4 != 0) idx.write(0x00)
     val ib = idx.toByteArray
     out.write(ib, 0, ib.length)
-    le32(out, crc32(ib, 0, ib.length))
+    Bytes.putLe32(out, crc32(ib, 0, ib.length))
     val idxRealSize = ib.length + 4
     // footer
     val tail = new java.io.ByteArrayOutputStream()
-    le32(tail, idxRealSize / 4 - 1)
+    Bytes.putLe32(tail, idxRealSize / 4 - 1)
     tail.write(flags(0)); tail.write(flags(1))
     val tb = tail.toByteArray
-    le32(out, crc32(tb, 0, tb.length))
+    Bytes.putLe32(out, crc32(tb, 0, tb.length))
     out.write(tb, 0, tb.length)
     out.write('Y'); out.write('Z')
     out.toByteArray

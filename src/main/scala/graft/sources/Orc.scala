@@ -13,10 +13,10 @@ package graft.sources
   *
   * Two from-scratch layers live here:
   *
-  *  - a minimal protobuf cursor (varint / zigzag sint / fixed64 /
-  *    length-delimited, the four wire types ORC uses) — ORC is
-  *    protobuf where parquet is thrift-compact, so the existing TC
-  *    walker does not apply;
+  *  - a minimal protobuf walk over the shared [[Bytes.Reader]]
+  *    (varint / zigzag sint / fixed64 / length-delimited, the four
+  *    wire types ORC uses) — ORC is protobuf where parquet is
+  *    thrift-compact, so parquet's struct walker does not apply;
   *  - the chunked-compression walk: each chunk is a 3-byte LE header,
   *    `isOriginal` in the LSB and the chunk byte length above it,
   *    decompressed to at most compressionBlockSize. All four codecs
@@ -35,56 +35,27 @@ package graft.sources
   */
 object Orc {
 
-  private final class Damage extends RuntimeException(null, null, false,
-    false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, Reader, damage}
 
-  // ---- minimal protobuf cursor ------------------------------------------
+  // ---- protobuf wire, over the shared cursor -----------------------------
 
-  private final class PB(val b: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def u8(): Int = {
-      if (pos >= end) damage()
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    def varint(): Long = {
-      var v = 0L; var shift = 0; var cont = true
-      while (cont) {
-        if (shift > 63) damage()
-        val x = u8()
-        v |= (x & 0x7fL) << shift; shift += 7
-        cont = (x & 0x80) != 0
-      }
-      v
-    }
-    def zigzag(): Long = { val z = varint(); (z >>> 1) ^ -(z & 1L) }
-    def fixed64(): Long = {
-      var v = 0L; var k = 0
-      while (k < 8) { v |= (u8().toLong << (8 * k)); k += 1 }
-      v
-    }
-    /** Field key: (field number, wire type). */
-    def key(): (Int, Int) = {
-      val k = varint()
-      val fn = k >>> 3
-      if (fn <= 0 || fn > Int.MaxValue) damage()
-      (fn.toInt, (k & 7).toInt)
-    }
-    /** Length-delimited payload as a sub-cursor. */
-    def sub(): PB = {
-      val n = varint()
-      if (n < 0 || pos + n > end) damage()
-      val p = new PB(b, pos, pos + n.toInt)
-      pos += n.toInt
-      p
-    }
-    def skip(wt: Int): Unit = wt match {
-      case 0 => varint()
-      case 1 => if (pos + 8 > end) damage() else pos += 8
-      case 2 => sub()
-      case 5 => if (pos + 4 > end) damage() else pos += 4
-      case _ => damage() // groups and unknowns: not in ORC's wire
-    }
+  /** Field key: (field number, wire type). */
+  private def key(p: Reader): (Int, Int) = {
+    val k = p.uvarint()
+    val fn = k >>> 3
+    if (fn <= 0 || fn > Int.MaxValue) damage()
+    (fn.toInt, (k & 7).toInt)
+  }
+
+  /** Length-delimited payload as a sub-cursor. */
+  private def field(p: Reader): Reader = p.sub(p.len(p.uvarint()))
+
+  private def skipField(p: Reader, wt: Int): Unit = wt match {
+    case 0 => p.uvarint()
+    case 1 => p.skip(8)
+    case 2 => field(p)
+    case 5 => p.skip(4)
+    case _ => damage() // groups and unknowns: not in ORC's wire
   }
 
   // ---- decoded tail -------------------------------------------------------
@@ -136,23 +107,23 @@ object Orc {
       val psLen = b(n - 1) & 0xff
       if (psLen <= 0 || n - 1 - psLen < 3) return None
       // postscript: NEVER compressed
-      val ps = new PB(b, n - 1 - psLen, n - 1)
+      val ps = new Reader(b, n - 1 - psLen, n - 1)
       var footerLen = -1L
       var comp = -1
       var blockSize = 256L * 1024 // spec default when absent
       var metadataLen = 0L
       var magic = ""
-      while (ps.hasMore) {
-        val (fn, wt) = ps.key()
+      while (ps.remaining > 0) {
+        val (fn, wt) = key(ps)
         fn match {
-          case 1 => footerLen = ps.varint()
-          case 2 => comp = ps.varint().toInt
-          case 3 => blockSize = ps.varint()
-          case 5 => metadataLen = ps.varint()
+          case 1 => footerLen = ps.uvarint()
+          case 2 => comp = ps.uvarint().toInt
+          case 3 => blockSize = ps.uvarint()
+          case 5 => metadataLen = ps.uvarint()
           case 8000 =>
-            val s = ps.sub()
+            val s = field(ps)
             magic = new String(s.b, s.pos, s.end - s.pos, "US-ASCII")
-          case _ => ps.skip(wt)
+          case _ => skipField(ps, wt)
         }
       }
       if (magic != "ORC" || footerLen <= 0 || comp < 0) return None
@@ -167,7 +138,7 @@ object Orc {
           .getOrElse(return None)
 
       // footer proto
-      val f = new PB(footerBytes, 0, footerBytes.length)
+      val f = new Reader(footerBytes, 0, footerBytes.length)
       var contentLength = -1L
       var numRows = -1L
       var rowIndexStride = 0L
@@ -178,42 +149,42 @@ object Orc {
       var nTypes = 0
       val stats = Seq.newBuilder[ColStats]
       var nStats = 0
-      while (f.hasMore) {
-        val (fn, wt) = f.key()
+      while (f.remaining > 0) {
+        val (fn, wt) = key(f)
         fn match {
-          case 2 => contentLength = f.varint()
+          case 2 => contentLength = f.uvarint()
           case 3 =>
             if (wt != 2) damage()
             nStripes += 1
             if (nStripes > MaxList) damage()
-            stripes += parseStripe(f.sub())
+            stripes += parseStripe(field(f))
           case 4 =>
             if (wt != 2) damage()
             nTypes += 1
             if (nTypes > MaxList) damage()
-            val t = f.sub()
+            val t = field(f)
             var kind = -1
-            while (t.hasMore) {
-              val (tf, tw) = t.key()
+            while (t.remaining > 0) {
+              val (tf, tw) = key(t)
               tf match {
-                case 1 => kind = t.varint().toInt
+                case 1 => kind = t.uvarint().toInt
                 case 3 =>
-                  val s = t.sub()
+                  val s = field(t)
                   names += new String(s.b, s.pos, s.end - s.pos,
                     java.nio.charset.StandardCharsets.UTF_8)
-                case _ => t.skip(tw)
+                case _ => skipField(t, tw)
               }
             }
             if (kind < 0) damage()
             kinds += kind
-          case 6 => numRows = f.varint()
-          case 8 => rowIndexStride = f.varint()
+          case 6 => numRows = f.uvarint()
+          case 8 => rowIndexStride = f.uvarint()
           case 7 =>
             if (wt != 2) damage()
             nStats += 1
             if (nStats > MaxList) damage()
-            stats += parseColStats(f.sub())
-          case _ => f.skip(wt)
+            stats += parseColStats(field(f))
+          case _ => skipField(f, wt)
         }
       }
       val st = stripes.result()
@@ -231,29 +202,29 @@ object Orc {
             fStart - metadataLen < 3) return None
           val mBytes = decompressStream(b, (fStart - metadataLen).toInt,
             fStart.toInt, comp, blockSize.toInt).getOrElse(return None)
-          val m = new PB(mBytes, 0, mBytes.length)
+          val m = new Reader(mBytes, 0, mBytes.length)
           val out = Seq.newBuilder[Seq[ColStats]]
           var cnt = 0
-          while (m.hasMore) {
-            val (fn, wt) = m.key()
+          while (m.remaining > 0) {
+            val (fn, wt) = key(m)
             if (fn == 1) {
               if (wt != 2) damage()
               cnt += 1
               if (cnt > MaxList) damage()
-              val ss = m.sub()
+              val ss = field(m)
               val cols = Seq.newBuilder[ColStats]
               var cc = 0
-              while (ss.hasMore) {
-                val (sf, sw) = ss.key()
+              while (ss.remaining > 0) {
+                val (sf, sw) = key(ss)
                 if (sf == 1) {
                   if (sw != 2) damage()
                   cc += 1
                   if (cc > MaxList) damage()
-                  cols += parseColStats(ss.sub())
-                } else ss.skip(sw)
+                  cols += parseColStats(field(ss))
+                } else skipField(ss, sw)
               }
               out += cols.result()
-            } else m.skip(wt)
+            } else skipField(m, wt)
           }
           val r = out.result()
           // one StripeStatistics entry per stripe, or none at all
@@ -266,64 +237,64 @@ object Orc {
     } catch { case _: Damage => None }
   }
 
-  private def parseStripe(p: PB): StripeInfo = {
+  private def parseStripe(p: Reader): StripeInfo = {
     var off = -1L; var il = -1L; var dl = -1L; var fl = -1L
     var rows = -1L
-    while (p.hasMore) {
-      val (fn, wt) = p.key()
+    while (p.remaining > 0) {
+      val (fn, wt) = key(p)
       fn match {
-        case 1 => off = p.varint()
-        case 2 => il = p.varint()
-        case 3 => dl = p.varint()
-        case 4 => fl = p.varint()
-        case 5 => rows = p.varint()
-        case _ => p.skip(wt)
+        case 1 => off = p.uvarint()
+        case 2 => il = p.uvarint()
+        case 3 => dl = p.uvarint()
+        case 4 => fl = p.uvarint()
+        case 5 => rows = p.uvarint()
+        case _ => skipField(p, wt)
       }
     }
     if (off < 0 || il < 0 || dl < 0 || fl < 0 || rows < 0) damage()
     StripeInfo(off, il, dl, fl, rows)
   }
 
-  private def parseColStats(p: PB): ColStats = {
+  private def parseColStats(p: Reader): ColStats = {
     var nv = -1L
     var iMin: Option[Long] = None; var iMax: Option[Long] = None
     var iSum: Option[Long] = None
     var dMin: Option[Double] = None; var dMax: Option[Double] = None
     var dSum: Option[Double] = None
     var hasNull = false
-    while (p.hasMore) {
-      val (fn, wt) = p.key()
+    while (p.remaining > 0) {
+      val (fn, wt) = key(p)
       fn match {
-        case 1 => nv = p.varint()
+        case 1 => nv = p.uvarint()
         case 2 => // IntegerStatistics: sint64 min/max/sum (ZIGZAG)
           if (wt != 2) damage()
-          val s = p.sub()
-          while (s.hasMore) {
-            val (sf, sw) = s.key()
+          val s = field(p)
+          while (s.remaining > 0) {
+            val (sf, sw) = key(s)
             sf match {
               case 1 => iMin = Some(s.zigzag())
               case 2 => iMax = Some(s.zigzag())
               case 3 => iSum = Some(s.zigzag())
-              case _ => s.skip(sw)
+              case _ => skipField(s, sw)
             }
           }
         case 3 => // DoubleStatistics: fixed64 IEEE
           if (wt != 2) damage()
-          val s = p.sub()
-          while (s.hasMore) {
-            val (sf, sw) = s.key()
+          val s = field(p)
+          while (s.remaining > 0) {
+            val (sf, sw) = key(s)
             sf match {
               case 1 => dMin = Some(
-                java.lang.Double.longBitsToDouble(s.fixed64()))
+                java.lang.Double.longBitsToDouble(s.le64()))
               case 2 => dMax = Some(
-                java.lang.Double.longBitsToDouble(s.fixed64()))
+                java.lang.Double.longBitsToDouble(s.le64()))
               case 3 => dSum = Some(
-                java.lang.Double.longBitsToDouble(s.fixed64()))
-              case _ => s.skip(sw)
+                java.lang.Double.longBitsToDouble(s.le64()))
+              case _ => skipField(s, sw)
             }
           }
-        case 10 => hasNull = p.varint() != 0
-        case _ => p.skip(wt)
+        case 10 => hasNull = p.uvarint() != 0
+        case _ => skipField(p, wt)
       }
     }
     if (nv < 0) damage()
@@ -353,43 +324,43 @@ object Orc {
         fEnd > Int.MaxValue) return None
       val fb = decompressStream(b, fOff.toInt, fEnd.toInt,
         tail.compression, tail.blockSize.toInt).getOrElse(return None)
-      val p = new PB(fb, 0, fb.length)
+      val p = new Reader(fb, 0, fb.length)
       val streams = Seq.newBuilder[StreamInfo]
       val encs = Seq.newBuilder[(Int, Int)]
       var ns = 0
-      while (p.hasMore) {
-        val (fn, wt) = p.key()
+      while (p.remaining > 0) {
+        val (fn, wt) = key(p)
         fn match {
           case 1 =>
             if (wt != 2) damage()
             ns += 1
             if (ns > MaxList) damage()
-            val sp = p.sub()
+            val sp = field(p)
             var kind = -1; var colId = -1; var len = -1L
-            while (sp.hasMore) {
-              val (sf, sw) = sp.key()
+            while (sp.remaining > 0) {
+              val (sf, sw) = key(sp)
               sf match {
-                case 1 => kind = sp.varint().toInt
-                case 2 => colId = sp.varint().toInt
-                case 3 => len = sp.varint()
-                case _ => sp.skip(sw)
+                case 1 => kind = sp.uvarint().toInt
+                case 2 => colId = sp.uvarint().toInt
+                case 3 => len = sp.uvarint()
+                case _ => skipField(sp, sw)
               }
             }
             if (kind < 0 || colId < 0 || len < 0) damage()
             streams += StreamInfo(kind, colId, len)
           case 2 =>
             if (wt != 2) damage()
-            val ep = p.sub()
+            val ep = field(p)
             var k = -1
             var dictSize = 0
-            while (ep.hasMore) {
-              val (ef, ew) = ep.key()
-              if (ef == 1) k = ep.varint().toInt
-              else if (ef == 2) dictSize = ep.varint().toInt
-              else ep.skip(ew)
+            while (ep.remaining > 0) {
+              val (ef, ew) = key(ep)
+              if (ef == 1) k = ep.uvarint().toInt
+              else if (ef == 2) dictSize = ep.uvarint().toInt
+              else skipField(ep, ew)
             }
             encs += ((math.max(k, 0), dictSize))
-          case _ => p.skip(wt)
+          case _ => skipField(p, wt)
         }
       }
       Some(StripeFooter(streams.result(), encs.result()))
@@ -538,10 +509,7 @@ object Orc {
         val out = new Array[Double](n)
         var i = 0
         while (i < n) {
-          var v = 0L
-          var k = 7
-          while (k >= 0) { v = (v << 8) | (d(i * 8 + k) & 0xffL); k -= 1 }
-          out(i) = java.lang.Double.longBitsToDouble(v)
+          out(i) = java.lang.Double.longBitsToDouble(Bytes.le64(d, i * 8))
           i += 1
         }
         Some(out)
@@ -715,26 +683,11 @@ object Orc {
         return None
       for {
         d <- colStreamAny(b, tail, s, sf, colId, kind = 1)
-        unscaled <- {
-          val out = new Array[Long](n)
-          var p = 0
-          var i = 0
-          var ok = true
-          while (i < n && ok) {
-            var v = 0L
-            var shift = 0
-            var cont = true
-            while (cont && ok) {
-              if (p >= d.length || shift > 63) ok = false
-              else {
-                val x = d(p) & 0xff; p += 1
-                v |= (x & 0x7fL) << shift; shift += 7
-                cont = (x & 0x80) != 0
-              }
-            }
-            if (ok) { out(i) = (v >>> 1) ^ -(v & 1L); i += 1 }
-          }
-          if (ok && p == d.length) Some(out) else None
+        unscaled <- Bytes.total {
+          val r = new Reader(d, 0, d.length)
+          val out = Array.fill(n)(r.zigzag())
+          if (r.remaining != 0) damage()
+          out
         }
         scS <- colStreamAny(b, tail, s, sf, colId, kind = 5)
         scales <- rleV2Signed(scS, n)
@@ -756,34 +709,34 @@ object Orc {
       parseStripeFooter(b, tail, s)
         .flatMap(sf => colStreamAny(b, tail, s, sf, colId, kind = 6))
         .flatMap { d =>
-          val p = new PB(d, 0, d.length)
+          val p = new Reader(d, 0, d.length)
           val out = Seq.newBuilder[ColStats]
           var n = 0
-          while (p.hasMore) {
-            val (fn, wt) = p.key()
+          while (p.remaining > 0) {
+            val (fn, wt) = key(p)
             if (fn == 1) {
               if (wt != 2) damage()
               n += 1
               if (n > MaxList) damage()
-              val e = p.sub()
+              val e = field(p)
               var st: Option[ColStats] = None
-              while (e.hasMore) {
-                val (ef, ew) = e.key()
+              while (e.remaining > 0) {
+                val (ef, ew) = key(e)
                 ef match {
                   case 1 => // positions: packed (or lone) varints
                     if (ew == 2) {
-                      val sub = e.sub()
-                      while (sub.hasMore) sub.varint()
-                    } else if (ew == 0) e.varint()
+                      val sub = field(e)
+                      while (sub.remaining > 0) sub.uvarint()
+                    } else if (ew == 0) e.uvarint()
                     else damage()
                   case 2 =>
                     if (ew != 2) damage()
-                    st = Some(parseColStats(e.sub()))
-                  case _ => e.skip(ew)
+                    st = Some(parseColStats(field(e)))
+                  case _ => skipField(e, ew)
                 }
               }
               out += st.getOrElse(damage())
-            } else p.skip(wt)
+            } else skipField(p, wt)
           }
           val r = out.result()
           if (r.isEmpty) None else Some(r)
@@ -969,9 +922,7 @@ object Orc {
     val nBlocks = d.length / 8
     var i = 0
     while (i < nBlocks) {
-      var k = 0L
-      var j = 7
-      while (j >= 0) { k = (k << 8) | (d(i * 8 + j) & 0xffL); j -= 1 }
+      var k = Bytes.le64(d, i * 8)
       k *= C1; k = rotl(k, 31); k *= C2
       h ^= k
       h = rotl(h, 27) * 5 + 0x52dce729L
@@ -1004,40 +955,40 @@ object Orc {
       parseStripeFooter(b, tail, s)
         .flatMap(sf => colStream(b, tail, s, sf, colId, kind = 8))
         .flatMap { d =>
-          val p = new PB(d, 0, d.length)
+          val p = new Reader(d, 0, d.length)
           val out = Seq.newBuilder[OrcBloom]
           var n = 0
-          while (p.hasMore) {
-            val (fn, wt) = p.key()
+          while (p.remaining > 0) {
+            val (fn, wt) = key(p)
             if (fn == 1) {
               if (wt != 2) damage()
               n += 1
               if (n > MaxList) damage()
-              val bf = p.sub()
+              val bf = field(p)
               var k = 0
               val longs = Seq.newBuilder[Long]
-              while (bf.hasMore) {
-                val (bfn, bwt) = bf.key()
+              while (bf.remaining > 0) {
+                val (bfn, bwt) = key(bf)
                 bfn match {
-                  case 1 => k = bf.varint().toInt
+                  case 1 => k = bf.uvarint().toInt
                   case 2 => // repeated fixed64 bitset (legacy)
-                    if (bwt == 1) longs += bf.fixed64()
+                    if (bwt == 1) longs += bf.le64()
                     else if (bwt == 2) {
-                      val sub = bf.sub()
-                      while (sub.hasMore) longs += sub.fixed64()
+                      val sub = field(bf)
+                      while (sub.remaining > 0) longs += sub.le64()
                     } else damage()
                   case 3 => // utf8bitset: bytes, little-endian longs
                     if (bwt != 2) damage()
-                    val sub = bf.sub()
+                    val sub = field(bf)
                     if ((sub.end - sub.pos) % 8 != 0) damage()
-                    while (sub.hasMore) longs += sub.fixed64()
-                  case _ => bf.skip(bwt)
+                    while (sub.remaining > 0) longs += sub.le64()
+                  case _ => skipField(bf, bwt)
                 }
               }
               val arr = longs.result().toArray
               if (k <= 0 || k > 64 || arr.length > (1 << 20)) damage()
               out += OrcBloom(k, arr)
-            } else p.skip(wt)
+            } else skipField(p, wt)
           }
           val r = out.result()
           if (r.isEmpty) None else Some(r)
@@ -1076,25 +1027,10 @@ object Orc {
                     signed: Boolean): Option[Array[Long]] = {
     try {
       val out = new Array[Long](n)
-      var p = 0
+      val r = new Reader(d, 0, d.length)
+      def u8(): Int = r.u8()
       var i = 0
-      def u8(): Int = {
-        if (p >= d.length) damage()
-        val v = d(p) & 0xff; p += 1; v
-      }
-      def varU(): Long = {
-        var v = 0L; var shift = 0; var cont = true
-        while (cont) {
-          if (shift > 63) damage()
-          val x = u8()
-          v |= (x & 0x7fL) << shift; shift += 7
-          cont = (x & 0x80) != 0
-        }
-        v
-      }
-      def zz(z: Long): Long =
-        if (signed) (z >>> 1) ^ -(z & 1L) else z
-      def zzAlways(z: Long): Long = (z >>> 1) ^ -(z & 1L)
+      def sign(z: Long): Long = if (signed) Bytes.unzigzag(z) else z
       def unpack(count: Int, width: Int): Array[Long] = {
         val vals = new Array[Long](count)
         if (width == 0) return vals
@@ -1127,7 +1063,7 @@ object Orc {
             var v = 0L
             var k = 0
             while (k < w) { v = (v << 8) | u8(); k += 1 }
-            val sv = zz(v)
+            val sv = sign(v)
             if (i + cnt > n) damage()
             k = 0
             while (k < cnt) { out(i) = sv; i += 1; k += 1 }
@@ -1137,16 +1073,16 @@ object Orc {
             if (i + len > n) damage()
             val vals = unpack(len, width)
             var k = 0
-            while (k < len) { out(i) = zz(vals(k)); i += 1; k += 1 }
+            while (k < len) { out(i) = sign(vals(k)); i += 1; k += 1 }
           case 3 => // DELTA
             val wc = (h >>> 1) & 0x1f
             val width = if (wc == 0) 0 else widthOf(wc)
             val len = (((h & 1) << 8) | u8()) + 1
             if (i + len > n) damage()
-            val base = zz(varU())
+            val base = sign(r.uvarint())
             out(i) = base; i += 1
             if (len >= 2) {
-              val dBase = zzAlways(varU())
+              val dBase = Bytes.unzigzag(r.uvarint())
               var prev = base + dBase
               out(i) = prev; i += 1
               if (len > 2) {
@@ -1198,7 +1134,7 @@ object Orc {
             while (k < len) { out(i) = base + vals(k); i += 1; k += 1 }
         }
       }
-      if (p != d.length) damage() // trailing bytes = malformation
+      if (r.remaining != 0) damage() // trailing bytes = malformation
       Some(out)
     } catch { case _: Damage => None }
   }

@@ -40,35 +40,9 @@ object OrcCrypto {
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
   private val rng = new java.security.SecureRandom()
 
-  private final class Bail
-    extends RuntimeException(null, null, false, false)
-  private def bail(): Nothing = throw new Bail
+  import Bytes.{Damage, Reader, damage, putUvarint}
 
   // ---- varint + protobuf field walking -------------------------------------
-
-  private def rdVarint(b: Array[Byte], pos0: Int, end: Int): (Long, Int) = {
-    var pos = pos0
-    var v = 0L
-    var shift = 0
-    while (true) {
-      if (pos >= end || shift > 63) bail()
-      val x = b(pos) & 0xff
-      v |= (x & 0x7fL) << shift
-      pos += 1
-      if ((x & 0x80) == 0) return (v, pos)
-      shift += 7
-    }
-    sys.error("unreachable")
-  }
-
-  private def wrVarint(out: java.io.ByteArrayOutputStream,
-                       v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) {
-      out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-    }
-    out.write(v.toInt)
-  }
 
   /** One top-level protobuf field occurrence inside [start, end):
     * (fieldNo, wireType, headerStart, payloadStart, payloadEnd) —
@@ -78,32 +52,27 @@ object OrcCrypto {
   private def fields(b: Array[Byte], start: Int,
                      end: Int): Vector[(Int, Int, Int, Int, Int)] = {
     val out = Vector.newBuilder[(Int, Int, Int, Int, Int)]
-    var pos = start
-    while (pos < end) {
-      val hdrStart = pos
-      val (key, p1) = rdVarint(b, pos, end)
+    val r = new Reader(b, start, end)
+    while (r.remaining > 0) {
+      val hdrStart = r.pos
+      val key = r.uvarint()
       val fn = (key >>> 3).toInt
       val wt = (key & 7).toInt
-      wt match {
-        case 0 =>
-          val (_, p2) = rdVarint(b, p1, end)
-          out += ((fn, 0, hdrStart, p1, p2)); pos = p2
-        case 1 =>
-          if (p1 + 8 > end) bail()
-          out += ((fn, 1, hdrStart, p1, p1 + 8)); pos = p1 + 8
-        case 2 =>
-          val (len, p2) = rdVarint(b, p1, end)
-          if (len < 0 || p2 + len > end) bail()
-          out += ((fn, 2, hdrStart, p2, p2 + len.toInt))
-          pos = p2 + len.toInt
-        case 5 =>
-          if (p1 + 4 > end) bail()
-          out += ((fn, 5, hdrStart, p1, p1 + 4)); pos = p1 + 4
-        case _ => bail()
+      val payload = wt match {
+        case 0 => val p = r.pos; r.uvarint(); p
+        case 1 => val p = r.pos; r.skip(8); p
+        case 2 => val n = r.len(r.uvarint()); val p = r.pos; r.skip(n); p
+        case 5 => val p = r.pos; r.skip(4); p
+        case _ => damage()
       }
+      out += ((fn, wt, hdrStart, payload, r.pos))
     }
     out.result()
   }
+
+  /** The varint payload of a field from [[fields]]. */
+  private def varintAt(b: Array[Byte], f: (Int, Int, Int, Int, Int)): Long =
+    new Reader(b, f._4, f._5).uvarint()
 
   // ---- AES/CTR with the spec's IV layout ------------------------------------
 
@@ -175,7 +144,7 @@ object OrcCrypto {
 
   private def unwrapKey(master: Array[Byte],
                         wrapped: Array[Byte]): Array[Byte] = {
-    if (wrapped.length != 32) bail()
+    if (wrapped.length != 32) damage()
     val wiv = java.util.Arrays.copyOf(wrapped, 16)
     ctr(master, wiv, wrapped, 16, 16)
   }
@@ -187,21 +156,21 @@ object OrcCrypto {
     */
   private def locate(b: Array[Byte]): (Int, Int, Int) = {
     val n = b.length
-    if (n < 16 || b(0) != 'O' || b(1) != 'R' || b(2) != 'C') bail()
+    if (n < 16 || b(0) != 'O' || b(1) != 'R' || b(2) != 'C') damage()
     val psLen = b(n - 1) & 0xff
-    if (psLen <= 0 || n - 1 - psLen < 3) bail()
+    if (psLen <= 0 || n - 1 - psLen < 3) damage()
     val psStart = n - 1 - psLen
     val ps = fields(b, psStart, n - 1)
     val footerLen = ps.find(_._1 == 1).map(f =>
-      rdVarint(b, f._4, f._5)._1).getOrElse(bail())
+      varintAt(b, f)).getOrElse(damage())
     val comp = ps.find(_._1 == 2).map(f =>
-      rdVarint(b, f._4, f._5)._1).getOrElse(bail())
+      varintAt(b, f)).getOrElse(damage())
     val metaLen = ps.find(_._1 == 5).map(f =>
-      rdVarint(b, f._4, f._5)._1).getOrElse(0L)
-    if (comp != 0L) bail()
+      varintAt(b, f)).getOrElse(0L)
+    if (comp != 0L) damage()
     val footerStart = psStart - footerLen.toInt
     val metaStart = footerStart - metaLen.toInt
-    if (metaStart < 3) bail()
+    if (metaStart < 3) damage()
     (metaStart, footerStart, psStart)
   }
 
@@ -217,9 +186,9 @@ object OrcCrypto {
     ps.foreach { f =>
       f._1 match {
         case 1 if f._2 == 0 =>
-          wrVarint(out, (1L << 3) | 0); wrVarint(out, newFooterLen)
+          putUvarint(out, (1L << 3) | 0); putUvarint(out, newFooterLen)
         case 5 if f._2 == 0 =>
-          wrVarint(out, (5L << 3) | 0); wrVarint(out, newMetaLen)
+          putUvarint(out, (5L << 3) | 0); putUvarint(out, newMetaLen)
         case _ => out.write(b, f._3, f._5 - f._3)
       }
     }
@@ -258,10 +227,10 @@ object OrcCrypto {
         .toMap
       tail.stripes.zipWithIndex.foreach { case (s, si) =>
         val sf = Orc.parseStripeFooter(plain, tail, s)
-          .getOrElse(bail())
+          .getOrElse(damage())
         var pos = s.offset
         sf.streams.foreach { st =>
-          if (pos + st.length > plain.length) bail()
+          if (pos + st.length > plain.length) damage()
           if (encCols.contains(st.column)) {
             // stripe number is 1-BASED in stream IVs (orc-core's
             // convention); stats variants live above nStripes so the
@@ -295,16 +264,16 @@ object OrcCrypto {
               if (cf._1 == 1 && k >= 1 && encCols.contains(k)) {
                 realStripe(k) = realStripe(k) :+
                   java.util.Arrays.copyOfRange(plain, cf._4, cf._5)
-                wrVarint(body, (1L << 3) | 2)
-                wrVarint(body, 2L) // masked: {numberOfValues: 0}
+                putUvarint(body, (1L << 3) | 2)
+                putUvarint(body, 2L) // masked: {numberOfValues: 0}
                 body.write(0x08); body.write(0x00)
               } else body.write(plain, cf._3, cf._5 - cf._3)
               if (cf._1 == 1) k += 1
               c2 = cf._5
             }
             body.write(plain, c2, sm._5 - c2)
-            wrVarint(nm0, (1L << 3) | 2)
-            wrVarint(nm0, body.size().toLong)
+            putUvarint(nm0, (1L << 3) | 2)
+            putUvarint(nm0, body.size().toLong)
             body.writeTo(nm0)
           } else nm0.write(plain, sm._3, sm._5 - sm._3)
           cur = sm._5
@@ -321,8 +290,8 @@ object OrcCrypto {
         if (k >= 1 && encCols.contains(k)) {
           realStats(k) =
             java.util.Arrays.copyOfRange(plain, f._4, f._5)
-          wrVarint(nf, (7L << 3) | 2)
-          wrVarint(nf, 2L) // masked: {numberOfValues: 0}, no bounds
+          putUvarint(nf, (7L << 3) | 2)
+          putUvarint(nf, 2L) // masked: {numberOfValues: 0}, no bounds
           nf.write(0x08); nf.write(0x00)
         } else nf.write(plain, f._3, f._5 - f._3)
         cursor = f._5
@@ -332,48 +301,48 @@ object OrcCrypto {
       val encMsg = new java.io.ByteArrayOutputStream()
       locally { // keys[0]
         val k = new java.io.ByteArrayOutputStream()
-        wrVarint(k, (1L << 3) | 2)
+        putUvarint(k, (1L << 3) | 2)
         val nm = keyName.getBytes(Utf8)
-        wrVarint(k, nm.length.toLong); k.write(nm, 0, nm.length)
-        wrVarint(k, (2L << 3) | 0); wrVarint(k, 1L) // keyVersion
-        wrVarint(k, (3L << 3) | 0); wrVarint(k, 1L) // AES_CTR_128
-        wrVarint(encMsg, (1L << 3) | 2)
-        wrVarint(encMsg, k.size().toLong)
+        putUvarint(k, nm.length.toLong); k.write(nm, 0, nm.length)
+        putUvarint(k, (2L << 3) | 0); putUvarint(k, 1L) // keyVersion
+        putUvarint(k, (3L << 3) | 0); putUvarint(k, 1L) // AES_CTR_128
+        putUvarint(encMsg, (1L << 3) | 2)
+        putUvarint(encMsg, k.size().toLong)
         k.writeTo(encMsg)
       }
       encCols.toSeq.sorted.foreach { c =>
         val v = new java.io.ByteArrayOutputStream()
-        wrVarint(v, (1L << 3) | 0); wrVarint(v, c.toLong) // root
-        wrVarint(v, (2L << 3) | 0); wrVarint(v, 0L) // key index
+        putUvarint(v, (1L << 3) | 0); putUvarint(v, c.toLong) // root
+        putUvarint(v, (2L << 3) | 0); putUvarint(v, 0L) // key index
         val wk = wrapKey(master, localKeys(c), deterministic,
           keyName, c)
-        wrVarint(v, (3L << 3) | 2)
-        wrVarint(v, wk.length.toLong); v.write(wk, 0, wk.length)
+        putUvarint(v, (3L << 3) | 2)
+        putUvarint(v, wk.length.toLong); v.write(wk, 0, wk.length)
         // fileStatistics: FileStatistics{ statistics[0] = real leaf
         // stats }, CTR-encrypted at stripe = one past the last
         val fsPlain = new java.io.ByteArrayOutputStream()
-        wrVarint(fsPlain, (1L << 3) | 2)
-        wrVarint(fsPlain, realStats(c).length.toLong)
+        putUvarint(fsPlain, (1L << 3) | 2)
+        putUvarint(fsPlain, realStats(c).length.toLong)
         fsPlain.write(realStats(c), 0, realStats(c).length)
         val fsBytes = fsPlain.toByteArray
         val fsEnc = ctr(localKeys(c), iv(c, 0, nStripes + 1),
           fsBytes, 0, fsBytes.length)
-        wrVarint(v, (5L << 3) | 2)
-        wrVarint(v, fsEnc.length.toLong); v.write(fsEnc, 0, fsEnc.length)
+        putUvarint(v, (5L << 3) | 2)
+        putUvarint(v, fsEnc.length.toLong); v.write(fsEnc, 0, fsEnc.length)
         // per-stripe real statistics (field 6, one per stripe in
         // stripe order), each encrypted at stripe offset nStripes+2+si
         realStripe(c).zipWithIndex.foreach { case (sb, si) =>
           val se = ctr(localKeys(c), iv(c, 0, nStripes + 2 + si),
             sb, 0, sb.length)
-          wrVarint(v, (6L << 3) | 2)
-          wrVarint(v, se.length.toLong); v.write(se, 0, se.length)
+          putUvarint(v, (6L << 3) | 2)
+          putUvarint(v, se.length.toLong); v.write(se, 0, se.length)
         }
-        wrVarint(encMsg, (2L << 3) | 2)
-        wrVarint(encMsg, v.size().toLong)
+        putUvarint(encMsg, (2L << 3) | 2)
+        putUvarint(encMsg, v.size().toLong)
         v.writeTo(encMsg)
       }
-      wrVarint(nf, (10L << 3) | 2)
-      wrVarint(nf, encMsg.size().toLong)
+      putUvarint(nf, (10L << 3) | 2)
+      putUvarint(nf, encMsg.size().toLong)
       encMsg.writeTo(nf)
       val newFooter = nf.toByteArray
       val newPs = patchPs(plain, fEnd, plain.length - 1,
@@ -387,7 +356,7 @@ object OrcCrypto {
       res.write(newPs.length)
       Some(res.toByteArray)
     } catch {
-      case _: Bail => None
+      case _: Damage => None
       case _: java.security.GeneralSecurityException => None
     }
 
@@ -412,22 +381,22 @@ object OrcCrypto {
       val names = efs.filter(_._1 == 1).map { kf =>
         fields(enc, kf._4, kf._5).find(_._1 == 1).map(nf =>
           new String(enc, nf._4, nf._5 - nf._4, Utf8))
-          .getOrElse(bail())
+          .getOrElse(damage())
       }
       val variants = efs.filter(_._1 == 2).map { vf =>
         val vfs = fields(enc, vf._4, vf._5)
         def u(fn: Int): Int = vfs.find(_._1 == fn).map(f =>
-          rdVarint(enc, f._4, f._5)._1.toInt).getOrElse(bail())
+          varintAt(enc, f).toInt).getOrElse(damage())
         def bts(fn: Int): Array[Byte] = vfs.find(_._1 == fn).map(f =>
           java.util.Arrays.copyOfRange(enc, f._4, f._5))
-          .getOrElse(bail())
+          .getOrElse(damage())
         Variant(u(1), u(2), bts(3), bts(5),
           vfs.filter(_._1 == 6).map(f =>
             java.util.Arrays.copyOfRange(enc, f._4, f._5)))
       }
       if (names.isEmpty || variants.isEmpty) None
       else Some((names, variants))
-    } catch { case _: Bail => None }
+    } catch { case _: Damage => None }
 
   /** MASTER-KEY ROTATION (q389) — the only rotation a 100 TB lake
     * can afford: the per-variant LOCAL keys never change (stream
@@ -457,29 +426,29 @@ object OrcCrypto {
       variants.foreach { vf =>
         val vfs = fields(enc, vf._4, vf._5)
         val root = vfs.find(_._1 == 1).map(f =>
-          rdVarint(enc, f._4, f._5)._1.toInt).getOrElse(bail())
-        val keyField = vfs.find(_._1 == 3).getOrElse(bail())
-        if (keyField._5 - keyField._4 != 32) bail()
+          varintAt(enc, f).toInt).getOrElse(damage())
+        val keyField = vfs.find(_._1 == 3).getOrElse(damage())
+        if (keyField._5 - keyField._4 != 32) damage()
         val wrapped =
           java.util.Arrays.copyOfRange(enc, keyField._4, keyField._5)
         val local = unwrapKey(oldMaster, wrapped)
         // key check: the local key must decrypt the variant's
         // statistics to a well-formed message (wrong old master
         // fails here, CLOSED)
-        val fsField = vfs.find(_._1 == 5).getOrElse(bail())
+        val fsField = vfs.find(_._1 == 5).getOrElse(damage())
         val fsPlain = ctr(local, iv(root, 0, nStripes + 1), enc,
           fsField._4, fsField._5 - fsField._4)
         val fs = fields(fsPlain, 0, fsPlain.length)
         if (fs.length != 1 || fs.head._1 != 1 ||
-          fs.head._5 != fsPlain.length) bail()
+          fs.head._5 != fsPlain.length) damage()
         val rewrapped = wrapKey(newMaster, local, deterministic,
           s"rot:$root", root)
-        if (rewrapped.length != 32) bail()
+        if (rewrapped.length != 32) damage()
         System.arraycopy(rewrapped, 0, out, keyField._4, 32)
       }
       Some(out)
     } catch {
-      case _: Bail => None
+      case _: Damage => None
       case _: java.security.GeneralSecurityException => None
     }
 
@@ -510,7 +479,7 @@ object OrcCrypto {
           v.fileStatsEnc, 0, v.fileStatsEnc.length)
         val fs = fields(plain, 0, plain.length)
         if (fs.length != 1 || fs.head._1 != 1 || fs.head._2 != 2 ||
-          fs.head._5 != plain.length) bail()
+          fs.head._5 != plain.length) damage()
         // the payload must itself walk as a protobuf message
         fields(plain, fs.head._4, fs.head._5)
         v.root -> java.util.Arrays.copyOfRange(plain, fs.head._4,
@@ -519,7 +488,7 @@ object OrcCrypto {
       // per-stripe real stats (variant field 6, stripe order)
       val realStripe = variants.map { v =>
         if (v.stripeStatsEnc.nonEmpty &&
-          v.stripeStatsEnc.length != nStripes) bail()
+          v.stripeStatsEnc.length != nStripes) damage()
         v.root -> v.stripeStatsEnc.zipWithIndex.map { case (sb, si) =>
           ctr(keys(v.root), iv(v.root, 0, nStripes + 2 + si), sb, 0,
             sb.length)
@@ -527,10 +496,10 @@ object OrcCrypto {
       }.toMap
       val out = java.util.Arrays.copyOf(enc, enc.length)
       tail.stripes.zipWithIndex.foreach { case (s, si) =>
-        val sf = Orc.parseStripeFooter(enc, tail, s).getOrElse(bail())
+        val sf = Orc.parseStripeFooter(enc, tail, s).getOrElse(damage())
         var pos = s.offset
         sf.streams.foreach { st =>
-          if (pos + st.length > enc.length) bail()
+          if (pos + st.length > enc.length) damage()
           keys.get(st.column).foreach { k =>
             val dec = ctr(k, iv(st.column, st.kind, si + 1), enc,
               pos.toInt, st.length.toInt)
@@ -556,18 +525,18 @@ object OrcCrypto {
               body.write(enc, c2, cf._3 - c2)
               if (cf._1 == 1 && k >= 1 && byRoot.contains(k)) {
                 if (cf._5 - cf._4 != 2 || enc(cf._4) != 0x08 ||
-                  enc(cf._4 + 1) != 0x00) bail() // must be masked
-                val real = realStripe(k).lift(si).getOrElse(bail())
-                wrVarint(body, (1L << 3) | 2)
-                wrVarint(body, real.length.toLong)
+                  enc(cf._4 + 1) != 0x00) damage() // must be masked
+                val real = realStripe(k).lift(si).getOrElse(damage())
+                putUvarint(body, (1L << 3) | 2)
+                putUvarint(body, real.length.toLong)
                 body.write(real, 0, real.length)
               } else body.write(enc, cf._3, cf._5 - cf._3)
               if (cf._1 == 1) k += 1
               c2 = cf._5
             }
             body.write(enc, c2, sm._5 - c2)
-            wrVarint(nm0, (1L << 3) | 2)
-            wrVarint(nm0, body.size().toLong)
+            putUvarint(nm0, (1L << 3) | 2)
+            putUvarint(nm0, body.size().toLong)
             body.writeTo(nm0)
             si += 1
           } else nm0.write(enc, sm._3, sm._5 - sm._3)
@@ -589,10 +558,10 @@ object OrcCrypto {
             val k = statFields.indexOf(f)
             if (k >= 1 && byRoot.contains(k)) {
               if (f._5 - f._4 != 2 || enc(f._4) != 0x08 ||
-                enc(f._4 + 1) != 0x00) bail() // must be masked
+                enc(f._4 + 1) != 0x00) damage() // must be masked
               val real = realStats(k)
-              wrVarint(nf, (7L << 3) | 2)
-              wrVarint(nf, real.length.toLong)
+              putUvarint(nf, (7L << 3) | 2)
+              putUvarint(nf, real.length.toLong)
               nf.write(real, 0, real.length)
             } else nf.write(enc, f._3, f._5 - f._3)
           case _ => nf.write(enc, f._3, f._5 - f._3)
@@ -611,7 +580,7 @@ object OrcCrypto {
       res.write(newPs.length)
       Some(res.toByteArray)
     } catch {
-      case _: Bail => None
+      case _: Damage => None
       case _: java.security.GeneralSecurityException => None
     }
 }

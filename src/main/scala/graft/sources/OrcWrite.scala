@@ -3,7 +3,7 @@ package graft.sources
 /** A from-scratch MINIMAL ORC writer — the inverse of the engine's
   * tail walk: "ORC" header magic, one stripe of RLEv2-DIRECT LONG
   * columns, a protobuf stripe footer + file footer emitted by the
-  * encoder below (the write twin of the reader's PB cursor), an
+  * encoder below (the write twin of the reader's protobuf walk), an
   * uncompressed postscript, and the trailing postscript-length byte.
   * Compression NONE (no chunk framing), no indexes, minimal
   * statistics (numberOfValues — the one field the spec treats as the
@@ -24,32 +24,24 @@ object OrcWrite {
 
   private final class PBW {
     val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
+    private def tag(field: Int, wireType: Int): Unit =
+      Bytes.putUvarint(out, (field.toLong << 3) | wireType)
     def uint(field: Int, v: Long): Unit = {
-      varint((field.toLong << 3) | 0); varint(v)
+      tag(field, 0); Bytes.putUvarint(out, v)
     }
     def bytesField(field: Int, b: Array[Byte]): Unit = {
-      varint((field.toLong << 3) | 2); varint(b.length.toLong)
+      tag(field, 2); Bytes.putUvarint(out, b.length.toLong)
       out.write(b, 0, b.length)
     }
     def strField(field: Int, s: String): Unit =
       bytesField(field, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     /** sint64 field (zigzag varint) — IntegerStatistics min/max/sum. */
     def sintField(field: Int, v: Long): Unit = {
-      varint((field.toLong << 3) | 0); varint((v << 1) ^ (v >> 63))
+      tag(field, 0); Bytes.putZigzag(out, v)
     }
     /** fixed64 field (LE) — DoubleStatistics values. */
     def fixed64Field(field: Int, v: Long): Unit = {
-      varint((field.toLong << 3) | 1)
-      var k = 0
-      var x = v
-      while (k < 8) { out.write((x & 0xff).toInt); x >>>= 8; k += 1 }
+      tag(field, 1); Bytes.putLe64(out, v)
     }
     def toBytes: Array[Byte] = out.toByteArray
   }
@@ -471,13 +463,7 @@ object OrcWrite {
         case ODecimalCol(_, vs, scale, _) =>
           presentCount(ci) = vs.length.toLong
           val data = new java.io.ByteArrayOutputStream()
-          vs.foreach { u =>
-            var z = (u << 1) ^ (u >> 63)
-            while ((z & ~0x7fL) != 0) {
-              data.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-            }
-            data.write(z.toInt)
-          }
+          vs.foreach(Bytes.putZigzag(data, _))
           streams += ((1, colId, framed(data.toByteArray)))
           streams += ((5, colId, framed(rleV2DirectSigned(
             Seq.fill(vs.length)(scale.toLong)))))
@@ -595,7 +581,7 @@ object OrcWrite {
             }
             locally { // packed uint64 positions (field 1)
               val pp = new PBW
-              pos.foreach(pp.varint)
+              pos.foreach(Bytes.putUvarint(pp.out, _))
               e.bytesField(1, pp.toBytes)
             }
             e.bytesField(2, statPb(statsOf(c, from, until)))
@@ -675,7 +661,7 @@ object OrcWrite {
     val root = new PBW
     root.uint(1, 12L) // STRUCT
     for (c <- cols.indices) {
-      root.varint((2L << 3) | 0); root.varint((c + 1).toLong)
+      root.uint(2, (c + 1).toLong)
     }
     for (c <- cols) root.strField(3, c.name)
     f.bytesField(4, root.toBytes)
@@ -738,8 +724,8 @@ object OrcWrite {
     ps.uint(1, fb.length.toLong)
     ps.uint(2, compression.toLong)
     ps.uint(3, blockSize.toLong)
-    ps.varint((4L << 3) | 0); ps.varint(0L)
-    ps.varint((4L << 3) | 0); ps.varint(12L)
+    ps.uint(4, 0L)
+    ps.uint(4, 12L)
     ps.uint(5, mb.length.toLong)
     ps.strField(8000, "ORC")
     val psb = ps.toBytes
@@ -806,7 +792,7 @@ object OrcWrite {
     val root = new PBW
     root.uint(1, 12L)
     for (c <- names.indices) {
-      root.varint((2L << 3) | 0); root.varint((c + 1).toLong)
+      root.uint(2, (c + 1).toLong)
     }
     for (nm <- names) root.strField(3, nm)
     f.bytesField(4, root.toBytes)
@@ -828,8 +814,8 @@ object OrcWrite {
     ps.uint(1, fb.length.toLong)
     ps.uint(2, 0L)
     ps.uint(3, (256 * 1024).toLong)
-    ps.varint((4L << 3) | 0); ps.varint(0L)
-    ps.varint((4L << 3) | 0); ps.varint(12L)
+    ps.uint(4, 0L)
+    ps.uint(4, 12L)
     ps.uint(5, 0L)
     ps.strField(8000, "ORC")
     val psb = ps.toBytes
@@ -902,7 +888,7 @@ object OrcWrite {
     val root = new PBW
     root.uint(1, 12L)               // STRUCT
     for (c <- names.indices) {
-      root.varint((2L << 3) | 0); root.varint((c + 1).toLong) // subtypes
+      root.uint(2, (c + 1).toLong) // subtypes
     }
     for (nm <- names) root.strField(3, nm)
     f.bytesField(4, root.toBytes)
@@ -927,8 +913,8 @@ object OrcWrite {
     ps.uint(2, compression.toLong) // compression kind
     ps.uint(3, blockSize.toLong)    // compressionBlockSize
     // version [0, 12] (packed not required; repeated varints)
-    ps.varint((4L << 3) | 0); ps.varint(0L)
-    ps.varint((4L << 3) | 0); ps.varint(12L)
+    ps.uint(4, 0L)
+    ps.uint(4, 12L)
     ps.uint(5, 0L)                  // metadataLength
     ps.strField(8000, "ORC")        // magic
     val psb = ps.toBytes

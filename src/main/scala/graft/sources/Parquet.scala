@@ -26,6 +26,7 @@ package graft.sources
   * throw and never partial garbage.
   */
 object Parquet {
+  import Bytes.{Damage, Reader, damage}
 
   /** Physical types (parquet.thrift `Type`). INT96 is the legacy
     * Spark/Impala timestamp (LE nanos-of-day + LE Julian day); FLBA
@@ -67,55 +68,24 @@ object Parquet {
   val EncDeltaBA = 7; val EncByteStreamSplit = 9
 
   // ---- thrift compact protocol ----------------------------------------
-  // Damage is signalled by one private, stackless exception: the walk
-  // below is deeply recursive (struct skipping), and threading Options
-  // through every varint read would bury the format logic. The throw
-  // never escapes this object — both entry points catch it into None.
-  private final class Damage extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
+  // Damage is signalled by the shared stackless [[Bytes.Damage]]: the
+  // walk below is deeply recursive (struct skipping), and threading
+  // Options through every varint read would bury the format logic. The
+  // throw never escapes this object — every entry point catches it
+  // into None.
 
-  /** Totality bridge for sibling modules ([[ParquetCrypto]]) built on
-    * this object's thrift walk: run `f`, collapsing any Damage throw
-    * to None — so the never-escapes contract holds across the package.
-    */
-  private[sources] def totality[A](f: => A): Option[A] =
-    try Some(f) catch { case _: Damage => None }
-
-  /** Damage signal for sibling modules running inside [[totality]]. */
-  private[sources] def damageNow(): Nothing = damage()
-
-  /** Cursor over a byte slice; every read is bounds-checked. */
-  private[sources] final class TC(b: Array[Byte], var pos: Int, val end: Int) {
-    def u8(): Int = {
-      if (pos < 0 || pos >= end || pos >= b.length) damage()
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    def uvarint(): Long = {
-      var shift = 0; var v = 0L
-      while (shift <= 63) {
-        val x = u8()
-        v |= (x & 0x7fL) << shift
-        if ((x & 0x80) == 0) return v
-        shift += 7
-      }
-      damage()
-    }
-    def zigzag(): Long = { val z = uvarint(); (z >>> 1) ^ -(z & 1L) }
-    def bytes(n: Int): Array[Byte] = {
-      if (n < 0 || pos + n > end || pos + n > b.length) damage()
-      val r = java.util.Arrays.copyOfRange(b, pos, pos + n); pos += n; r
-    }
-    def str(): String = {
-      val n = uvarint()
-      if (n > (1 << 20)) damage() // no megabyte "strings" in a footer
-      new String(bytes(n.toInt), java.nio.charset.StandardCharsets.UTF_8)
-    }
+  /** A thrift string; no megabyte "strings" in a footer. */
+  private def str(tc: Reader): String = {
+    val n = tc.uvarint()
+    if (n > (1 << 20)) damage()
+    tc.utf8(tc.len(n))
   }
 
   /** Walk one struct: `f(fieldId, tpe)` returns true if it consumed the
     * value; otherwise the value is skipped by type. Bounded depth.
     */
-  private[sources] def struct(tc: TC, depth: Int)(f: (Int, Int) => Boolean): Unit = {
+  private[sources] def struct(tc: Reader, depth: Int)
+                             (f: (Int, Int) => Boolean): Unit = {
     if (depth > 16) damage()
     var lastId = 0
     var done = false
@@ -134,13 +104,13 @@ object Parquet {
   }
 
   /** Skip a FIELD value (bools live in the field-header nibble). */
-  private def skipField(tc: TC, tpe: Int, depth: Int): Unit = tpe match {
+  private def skipField(tc: Reader, tpe: Int, depth: Int): Unit = tpe match {
     case 1 | 2 => () // bool: encoded in the header, no payload
     case t => skipElem(tc, t, depth)
   }
 
   /** Skip a LIST/MAP element value (bools are a full byte there). */
-  private def skipElem(tc: TC, tpe: Int, depth: Int): Unit = tpe match {
+  private def skipElem(tc: Reader, tpe: Int, depth: Int): Unit = tpe match {
     case 1 | 2 | 3 => tc.u8()
     case 4 | 5 | 6 => tc.uvarint()
     case 7 => tc.bytes(8)
@@ -164,7 +134,7 @@ object Parquet {
     case _ => damage()
   }
 
-  private[sources] def listHeader(tc: TC): (Int, Int) = {
+  private[sources] def listHeader(tc: Reader): (Int, Int) = {
     val h = tc.u8()
     val et = h & 0x0f
     val sz = (h >> 4) & 0x0f
@@ -173,12 +143,14 @@ object Parquet {
     (n, et)
   }
 
-  private[sources] def i32(tc: TC, tpe: Int): Int = {
+  private[sources] def i32(tc: Reader, tpe: Int): Int = {
     if (tpe != 5) damage(); val v = tc.zigzag()
     if (v < Int.MinValue || v > Int.MaxValue) damage(); v.toInt
   }
-  private[sources] def i64(tc: TC, tpe: Int): Long = { if (tpe != 6) damage(); tc.zigzag() }
-  private def i32List(tc: TC, tpe: Int): Seq[Int] = {
+  private[sources] def i64(tc: Reader, tpe: Int): Long = {
+    if (tpe != 6) damage(); tc.zigzag()
+  }
+  private def i32List(tc: Reader, tpe: Int): Seq[Int] = {
     if (tpe != 9) damage()
     val (n, et) = listHeader(tc)
     if (et != 5) damage()
@@ -221,24 +193,18 @@ object Parquet {
     private def asLong(v: Array[Byte]): Option[Long] = physType match {
       case PhysBool if v != null && v.length == 1 => Some(v(0) & 1L)
       case PhysInt32 if v != null && v.length == 4 =>
-        Some(((v(0) & 0xff) | (v(1) & 0xff) << 8 | (v(2) & 0xff) << 16 |
-          (v(3) & 0xff) << 24).toLong)
+        Some(Bytes.le32(v, 0).toLong)
       case PhysInt64 if v != null && v.length == 8 =>
-        var x = 0L; var k = 7
-        while (k >= 0) { x = (x << 8) | (v(k) & 0xffL); k -= 1 }
-        Some(x)
+        Some(Bytes.le64(v, 0))
       case _ => None
     }
     /** Statistics value decoded as a Double (FLOAT/DOUBLE). */
     private def asDouble(v: Array[Byte]): Option[Double] = physType match {
       case PhysFloat if v != null && v.length == 4 =>
         Some(java.lang.Float.intBitsToFloat(
-          (v(0) & 0xff) | (v(1) & 0xff) << 8 | (v(2) & 0xff) << 16 |
-            (v(3) & 0xff) << 24).toDouble)
+          Bytes.le32(v, 0)).toDouble)
       case PhysDouble if v != null && v.length == 8 =>
-        var x = 0L; var k = 7
-        while (k >= 0) { x = (x << 8) | (v(k) & 0xffL); k -= 1 }
-        Some(java.lang.Double.longBitsToDouble(x))
+        Some(java.lang.Double.longBitsToDouble(Bytes.le64(v, 0)))
       case _ => None
     }
     def minLong: Option[Long] = asLong(minValue)
@@ -303,10 +269,9 @@ object Parquet {
       def magicAt(i: Int) = b(i) == 'P' && b(i + 1) == 'A' &&
         b(i + 2) == 'R' && b(i + 3) == '1'
       if (!magicAt(0) || !magicAt(n - 4)) return None
-      val fl = (b(n - 8) & 0xff) | (b(n - 7) & 0xff) << 8 |
-        (b(n - 6) & 0xff) << 16 | (b(n - 5) & 0xff) << 24
+      val fl = Bytes.le32(b, n - 8)
       if (fl <= 0 || fl > n - 12) return None
-      val tc = new TC(b, n - 8 - fl, n - 8)
+      val tc = new Reader(b, n - 8 - fl, n - 8)
       var version = -1
       var numRows = -1L
       var createdBy = ""
@@ -326,7 +291,7 @@ object Parquet {
             val (cnt, et) = listHeader(tc)
             if (et != 12) damage()
             rowGroups = Seq.fill(cnt)(parseRowGroup(tc)); true
-          case 6 => if (tpe != 8) damage(); createdBy = tc.str(); true
+          case 6 => if (tpe != 8) damage(); createdBy = str(tc); true
           case _ => false
         }
       }
@@ -340,7 +305,7 @@ object Parquet {
     } catch { case _: Damage => None }
   }
 
-  private def parseSchemaElem(tc: TC): SchemaElem = {
+  private def parseSchemaElem(tc: Reader): SchemaElem = {
     var typ = -1; var rep = -1; var name = ""; var children = 0
     var typeLen = 0; var converted = -1
     struct(tc, 1) { (id, tpe) =>
@@ -348,7 +313,7 @@ object Parquet {
         case 1 => typ = i32(tc, tpe); true
         case 2 => typeLen = i32(tc, tpe); true // FIXED_LEN_BYTE_ARRAY
         case 3 => rep = i32(tc, tpe); true
-        case 4 => if (tpe != 8) damage(); name = tc.str(); true
+        case 4 => if (tpe != 8) damage(); name = str(tc); true
         case 5 => children = i32(tc, tpe); true
         case 6 => converted = i32(tc, tpe); true
         case _ => false
@@ -360,7 +325,7 @@ object Parquet {
     SchemaElem(typ, rep, name, children, typeLen, converted)
   }
 
-  private def parseRowGroup(tc: TC): RowGroupMeta = {
+  private def parseRowGroup(tc: Reader): RowGroupMeta = {
     var cols = Seq.empty[ColMeta]
     var totalBytes = -1L; var numRows = -1L
     struct(tc, 1) { (id, tpe) =>
@@ -379,7 +344,7 @@ object Parquet {
     RowGroupMeta(cols, totalBytes, numRows)
   }
 
-  private def parseColumnChunk(tc: TC): ColMeta = {
+  private def parseColumnChunk(tc: Reader): ColMeta = {
     var meta: ColMeta = null
     var oiOff = -1L; var oiLen = -1
     var ciOff = -1L; var ciLen = -1
@@ -442,14 +407,14 @@ object Parquet {
     */
   private[sources] def parseColumnMetaBytes(b: Array[Byte])
       : Option[ColMeta] =
-    totality {
-      val tc = new TC(b, 0, b.length)
+    Bytes.total {
+      val tc = new Reader(b, 0, b.length)
       val m = parseColumnMeta(tc)
       if (tc.pos != b.length) damage()
       m
     }
 
-  private def parseColumnMeta(tc: TC): ColMeta = {
+  private def parseColumnMeta(tc: Reader): ColMeta = {
     var typ = -1; var encodings = Seq.empty[Int]; var path = ""
     var codec = -1; var numValues = -1L
     var totUnc = -1L; var totComp = -1L
@@ -472,7 +437,7 @@ object Parquet {
           if (tpe != 9) damage()
           val (n, et) = listHeader(tc)
           if (et != 8) damage()
-          path = Seq.fill(n)(tc.str()).mkString("."); true
+          path = Seq.fill(n)(str(tc)).mkString("."); true
         case 4 => codec = i32(tc, tpe); true
         case 5 => numValues = i64(tc, tpe); true
         case 6 => totUnc = i64(tc, tpe); true
@@ -535,7 +500,7 @@ object Parquet {
 
   private[sources] def parsePageHeader(b: Array[Byte], off: Int): PageHead = {
     if (off < 0 || off >= b.length) damage()
-    val tc = new TC(b, off, b.length)
+    val tc = new Reader(b, off, b.length)
     var pt = -1; var unc = -1; var comp = -1
     var nv = -1; var enc = -1
     var nn = -1; var dl = -1; var rl = -1
@@ -702,8 +667,7 @@ object Parquet {
           // RLE-encoded booleans (v2 writers): LE32 length prefix +
           // bit-width-1 hybrid runs — the same machinery as def levels
           if (off + 4 > raw.length) return false
-          val len = (raw(off) & 0xff) | (raw(off + 1) & 0xff) << 8 |
-            (raw(off + 2) & 0xff) << 16 | (raw(off + 3) & 0xff) << 24
+          val len = Bytes.le32(raw, off)
           if (len < 0 || off + 4 + len != raw.length) return false
           if (present == 0) return len == 0
           val vals = readHybrid(raw, off + 4, raw.length, 1, present,
@@ -1293,12 +1257,9 @@ object Parquet {
     private def statLong(v: Array[Byte]): Option[Long] =
       if (v == null) None
       else if (v.length == 4)
-        Some(((v(0) & 0xff) | (v(1) & 0xff) << 8 | (v(2) & 0xff) << 16 |
-          (v(3) & 0xff) << 24).toLong)
+        Some(Bytes.le32(v, 0).toLong)
       else if (v.length == 8) {
-        var x = 0L; var k = 7
-        while (k >= 0) { x = (x << 8) | (v(k) & 0xffL); k -= 1 }
-        Some(x)
+        Some(Bytes.le64(v, 0))
       } else None
   }
 
@@ -1314,7 +1275,7 @@ object Parquet {
       val len = col.offsetIndexLength
       if (off < 0 || len <= 0 || off > Int.MaxValue ||
         off + len > b.length) return None
-      val tc = new TC(b, off.toInt, off.toInt + len)
+      val tc = new Reader(b, off.toInt, off.toInt + len)
       var locs = Seq.empty[PageLoc]
       struct(tc, 0) { (id, tpe) =>
         id match {
@@ -1363,7 +1324,7 @@ object Parquet {
       val len = col.columnIndexLength
       if (off < 0 || len <= 0 || off > Int.MaxValue ||
         off + len > b.length) return None
-      val tc = new TC(b, off.toInt, off.toInt + len)
+      val tc = new Reader(b, off.toInt, off.toInt + len)
       var nulls = Seq.empty[Boolean]
       var mins = Seq.empty[Array[Byte]]
       var maxs = Seq.empty[Array[Byte]]
@@ -1456,8 +1417,7 @@ object Parquet {
         // u32 multiply-then-shift: Int wrap IS the spec arithmetic
         val bit = (x * BloomSalt(i)) >>> 27
         val w = block * 32 + i * 4
-        val word = (bits(w) & 0xff) | (bits(w + 1) & 0xff) << 8 |
-          (bits(w + 2) & 0xff) << 16 | (bits(w + 3) & 0xff) << 24
+        val word = Bytes.le32(bits, w)
         if (((word >>> bit) & 1) == 0) return false
         i += 1
       }
@@ -1490,7 +1450,7 @@ object Parquet {
     try {
       val off = col.bloomFilterOffset
       if (off < 0 || off >= b.length || off > Int.MaxValue) return None
-      val tc = new TC(b, off.toInt, b.length)
+      val tc = new Reader(b, off.toInt, b.length)
       var numBytes = -1
       var algOk = false
       var hashOk = false
@@ -1542,8 +1502,7 @@ object Parquet {
     var i = 0
     while (i < n) {
       if (p + 4 > raw.length) damage()
-      val len = (raw(p) & 0xff) | (raw(p + 1) & 0xff) << 8 |
-        (raw(p + 2) & 0xff) << 16 | (raw(p + 3) & 0xff) << 24
+      val len = Bytes.le32(raw, p)
       // Long math: p + 4 + len can wrap Int for a forged len near 2^31
       if (len < 0 || (p + 4).toLong + len > raw.length) damage()
       arr(i) = java.util.Arrays.copyOfRange(raw, p + 4, p + 4 + len)
@@ -1631,26 +1590,21 @@ object Parquet {
       physType match {
         case PhysByteArray =>
           if (p + 4 > raw.length) damage()
-          val len = (raw(p) & 0xff) | (raw(p + 1) & 0xff) << 8 |
-            (raw(p + 2) & 0xff) << 16 | (raw(p + 3) & 0xff) << 24
+          val len = Bytes.le32(raw, p)
           if (len < 0 || (p + 4).toLong + len > raw.length) damage()
           arr(i) = len.toLong
           p += 4 + len
         case PhysInt32 | PhysFloat =>
           if (p + 4 > raw.length) damage()
-          val v = (raw(p) & 0xff) | (raw(p + 1) & 0xff) << 8 |
-            (raw(p + 2) & 0xff) << 16 | (raw(p + 3) & 0xff) << 24
+          val v = Bytes.le32(raw, p)
           // INT32 carries sign; FLOAT carries raw bits (addVal decides)
           arr(i) = if (physType == PhysInt32) v.toLong else v.toLong & 0xffffffffL
           p += 4
         case PhysInt96 =>
           // legacy timestamp: LE64 nanos-of-day, then LE32 Julian day
           if (p + 12 > raw.length) damage()
-          var nanos = 0L
-          var k = 7
-          while (k >= 0) { nanos = (nanos << 8) | (raw(p + k) & 0xffL); k -= 1 }
-          val jd = (raw(p + 8) & 0xff) | (raw(p + 9) & 0xff) << 8 |
-            (raw(p + 10) & 0xff) << 16 | (raw(p + 11) & 0xff) << 24
+          val nanos = Bytes.le64(raw, p)
+          val jd = Bytes.le32(raw, p + 8)
           if (nanos < 0 || nanos >= 86400000000000L) damage()
           // 2440588 = Julian day of 1970-01-01; contribution = epoch s
           arr(i) = (jd.toLong - 2440588L) * 86400L + nanos / 1000000000L
@@ -1678,10 +1632,7 @@ object Parquet {
           p += typeLen
         case _ =>
           if (p + 8 > raw.length) damage()
-          var v = 0L
-          var k = 7
-          while (k >= 0) { v = (v << 8) | (raw(p + k) & 0xffL); k -= 1 }
-          arr(i) = v
+          arr(i) = Bytes.le64(raw, p)
           p += 8
       }
       i += 1
@@ -1707,22 +1658,11 @@ object Parquet {
   private def deltaBinPacked(raw: Array[Byte], off: Int,
                              n: Int): (Array[Long], Int) = {
     if (n < 0 || n > MaxPageValues) damage()
-    var p = off
-    def uleb(): Long = {
-      var v = 0L; var shift = 0; var cont = true
-      while (cont) {
-        if (p >= raw.length || shift > 63) damage()
-        val x = raw(p) & 0xff; p += 1
-        v |= (x & 0x7fL) << shift; shift += 7
-        cont = (x & 0x80) != 0
-      }
-      v
-    }
-    def zigzag(): Long = { val u = uleb(); (u >>> 1) ^ -(u & 1L) }
-    val blockSize = uleb()
-    val numMini = uleb()
-    val total = uleb()
-    val first = zigzag()
+    val r = new Reader(raw, off, raw.length)
+    val blockSize = r.uvarint()
+    val numMini = r.uvarint()
+    val total = r.uvarint()
+    val first = r.zigzag()
     if (blockSize <= 0 || blockSize % 128 != 0 ||
       blockSize > MaxPageValues) damage()
     if (numMini <= 0 || blockSize % numMini != 0) damage()
@@ -1733,15 +1673,11 @@ object Parquet {
     if (n > 0) out(0) = first
     var got = math.min(1, n)
     while (got < n) {
-      val minDelta = zigzag()
+      val minDelta = r.zigzag()
       val nm = numMini.toInt
       val widths = new Array[Int](nm)
       var i = 0
-      while (i < nm) {
-        if (p >= raw.length) damage()
-        widths(i) = raw(p) & 0xff; p += 1
-        i += 1
-      }
+      while (i < nm) { widths(i) = r.u8(); i += 1 }
       i = 0
       while (i < nm) {
         // Encodings.md: in the last block, UNNEEDED miniblocks keep
@@ -1752,7 +1688,8 @@ object Parquet {
           if (w > 64) damage()
           // miniSize is a multiple of 32, so the payload is exact bytes
           val bytes = miniSize / 8 * w
-          if (p + bytes > raw.length || p + bytes < 0) damage()
+          val p = r.pos
+          r.skip(bytes)
           var j = 0
           var bitPos = 0
           while (j < miniSize) {
@@ -1771,12 +1708,11 @@ object Parquet {
             bitPos += w
             j += 1
           }
-          p += bytes
         }
         i += 1
       }
     }
-    (out, p)
+    (out, r.pos)
   }
 
   /** Bits needed for levels 0..m (m >= 1). */
@@ -1791,8 +1727,7 @@ object Parquet {
   private def readLevelsV1(raw: Array[Byte], off: Int, numValues: Int,
                            width: Int): (Array[Int], Int) = {
     if (off < 0 || off + 4 > raw.length) damage()
-    val len = (raw(off) & 0xff) | (raw(off + 1) & 0xff) << 8 |
-      (raw(off + 2) & 0xff) << 16 | (raw(off + 3) & 0xff) << 24
+    val len = Bytes.le32(raw, off)
     if (len < 0 || (off + 4).toLong + len > raw.length) damage()
     val end = off + 4 + len
     (readHybrid(raw, off + 4, end, width, numValues, strict = false), end)

@@ -45,11 +45,9 @@ object ParquetCrypto {
 
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
-  // early-exit signal for the deep walks below (mirrors [[Parquet]]'s
-  // Damage discipline): stackless, never escapes this object
-  private final class Bail
-    extends RuntimeException(null, null, false, false)
-  private def bail(): Nothing = throw new Bail
+  // the deep walks below exit early through [[Bytes.Damage]]; it never
+  // escapes this object
+  import Bytes.{Damage, damage}
 
   // module types (Encryption.md "AAD suffix" ordering)
   val ModFooter = 0; val ModColumnMeta = 1; val ModDataPage = 2
@@ -65,11 +63,8 @@ object ParquetCrypto {
     val b = new java.io.ByteArrayOutputStream()
     b.write(fileAad, 0, fileAad.length)
     b.write(modType)
-    def le16(v: Int): Unit = {
-      b.write(v & 0xff); b.write((v >> 8) & 0xff)
-    }
-    if (rg >= 0) { le16(rg); le16(col) }
-    if (page >= 0) le16(page)
+    if (rg >= 0) { Bytes.putLe16(b, rg); Bytes.putLe16(b, col) }
+    if (page >= 0) Bytes.putLe16(b, page)
     b.toByteArray
   }
 
@@ -122,8 +117,7 @@ object ParquetCrypto {
                     off: Int): Option[(Array[Byte], Int)] =
     try {
       if (off < 0 || off + 4 > b.length) return None
-      val n = (b(off) & 0xff) | (b(off + 1) & 0xff) << 8 |
-        (b(off + 2) & 0xff) << 16 | (b(off + 3) & 0xff) << 24
+      val n = Bytes.le32(b, off)
       if (n < 12 + 16 || off + 4 + n > b.length) return None
       val nonce = java.util.Arrays.copyOfRange(b, off + 4, off + 16)
       val c = javax.crypto.Cipher.getInstance("AES/GCM/NoPadding")
@@ -172,8 +166,7 @@ object ParquetCrypto {
       : Option[(Array[Byte], Int)] =
     try {
       if (off < 0 || off + 4 > b.length) return None
-      val n = (b(off) & 0xff) | (b(off + 1) & 0xff) << 8 |
-        (b(off + 2) & 0xff) << 16 | (b(off + 3) & 0xff) << 24
+      val n = Bytes.le32(b, off)
       if (n < 12 || off + 4 + n > b.length) return None
       val iv = new Array[Byte](16)
       System.arraycopy(b, off + 4, iv, 0, 12)
@@ -214,26 +207,26 @@ object ParquetCrypto {
     */
   def parseFileCryptoMetaData(b: Array[Byte], off: Int, end: Int)
       : Option[(Array[Byte], Array[Byte], Int, Boolean)] =
-    Parquet.totality {
-      val tc = new Parquet.TC(b, off, end)
+    Bytes.total {
+      val tc = new Bytes.Reader(b, off, end)
       var aadUnique: Array[Byte] = null
       var keyMeta: Array[Byte] = null
       var gcmV1 = false
       var ctr = false
       def bin(tpe: Int, cap: Int): Array[Byte] = {
-        if (tpe != 8) Parquet.damageNow()
+        if (tpe != 8) damage()
         val n = tc.uvarint()
-        if (n > cap) Parquet.damageNow()
+        if (n > cap) damage()
         tc.bytes(n.toInt)
       }
       Parquet.struct(tc, 0) { (id, tpe) =>
         id match {
           case 1 =>
-            if (tpe != 12) Parquet.damageNow()
+            if (tpe != 12) damage()
             Parquet.struct(tc, 1) { (uid, utpe) =>
               uid match {
                 case 1 =>
-                  if (utpe != 12) Parquet.damageNow()
+                  if (utpe != 12) damage()
                   gcmV1 = true
                   Parquet.struct(tc, 2) { (aid, atpe) =>
                     aid match {
@@ -244,7 +237,7 @@ object ParquetCrypto {
                   }
                   true
                 case 2 =>
-                  if (utpe != 12) Parquet.damageNow()
+                  if (utpe != 12) damage()
                   gcmV1 = true; ctr = true
                   Parquet.struct(tc, 2) { (aid, atpe) =>
                     aid match {
@@ -262,7 +255,7 @@ object ParquetCrypto {
           case _ => false
         }
       }
-      if (!gcmV1 || aadUnique == null) Parquet.damageNow()
+      if (!gcmV1 || aadUnique == null) damage()
       (aadUnique, keyMeta, tc.pos, ctr)
     }
 
@@ -404,34 +397,30 @@ object ParquetCrypto {
     */
   private def patchCompField(header: Array[Byte],
                              newComp: Long): Option[Array[Byte]] =
-    Parquet.totality {
-      val tc = new Parquet.TC(header, 0, header.length)
+    Bytes.total {
+      val tc = new Bytes.Reader(header, 0, header.length)
       var lastId = 0
       var res: Array[Byte] = null
       while (res == null) {
         val h = tc.u8()
-        if (h == 0) Parquet.damageNow() // stop byte before field 3
+        if (h == 0) damage() // stop byte before field 3
         val tpe = h & 0x0f
         val delta = (h >> 4) & 0x0f
         val id = if (delta == 0) tc.zigzag().toInt else lastId + delta
         lastId = id
         if (id == 3) {
-          if (tpe != 5) Parquet.damageNow()
+          if (tpe != 5) damage()
           val start = tc.pos
           tc.zigzag()
           val end = tc.pos
           val out = new java.io.ByteArrayOutputStream()
           out.write(header, 0, start)
-          var v = (newComp << 1) ^ (newComp >> 63)
-          while ((v & ~0x7fL) != 0) {
-            out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-          }
-          out.write(v.toInt)
+          Bytes.putZigzag(out, newComp)
           out.write(header, end, header.length - end)
           res = out.toByteArray
         } else {
           // only the i32 type/uncompressed fields precede field 3
-          if (tpe != 5) Parquet.damageNow()
+          if (tpe != 5) damage()
           tc.zigzag()
         }
       }
@@ -471,7 +460,7 @@ object ParquetCrypto {
                   ctr: Boolean = false,
                   deterministic: Boolean = false): Option[Encrypted] =
     try encryptFileWalk(plain, keys, aadFileUnique, ctr, deterministic)
-    catch { case _: Bail => None }
+    catch { case _: Damage => None }
 
   /** Explicitly-deterministic variant: nonces derived from
     * (key, aad, plaintext) so the output is byte-reproducible — the
@@ -525,7 +514,7 @@ object ParquetCrypto {
           if (m.dictPageOffset >= 0) m.dictPageOffset
           else m.dataPageOffset
         if (start < 0 || start > Int.MaxValue ||
-          start + m.totalCompressed > plain.length) bail()
+          start + m.totalCompressed > plain.length) damage()
         var pos = start.toInt
         val chunkEnd = (start + m.totalCompressed).toInt
         var pageOrd = 0
@@ -534,11 +523,11 @@ object ParquetCrypto {
         val newStart = out.size().toLong
         while (pos < chunkEnd) {
           val phOpt =
-            Parquet.totality(Parquet.parsePageHeader(plain, pos))
-          if (phOpt.isEmpty) bail()
+            Bytes.total(Parquet.parsePageHeader(plain, pos))
+          if (phOpt.isEmpty) damage()
           val ph = phOpt.get
           if (ph.compressed < 0 ||
-            ph.headerEnd + ph.compressed > chunkEnd) bail()
+            ph.headerEnd + ph.compressed > chunkEnd) damage()
           val header0 =
             java.util.Arrays.copyOfRange(plain, pos, ph.headerEnd)
           val body = java.util.Arrays.copyOfRange(plain, ph.headerEnd,
@@ -549,14 +538,14 @@ object ParquetCrypto {
           val header = patchCompField(header0,
             ph.compressed.toLong + bodyOverhead) match {
             case Some(x) => x
-            case None => bail()
+            case None => damage()
           }
           if (ph.pageType == 2) { // dictionary page
             // one dict page per chunk, and it must be FIRST — a dict
             // module after a data page is a layout decryptFileWalk
             // (which reads the dict module at the chunk start) could
             // never frame back, so it is refused, not emitted
-            if (newDict >= 0 || pageOrd > 0) bail()
+            if (newDict >= 0 || pageOrd > 0) damage()
             newDict = out.size().toLong
             emit(ModDictPageHeader, g, c, -1, key, header)
             emit(ModDictPage, g, c, -1, key, body)
@@ -568,7 +557,7 @@ object ParquetCrypto {
           }
           pos = ph.headerEnd + ph.compressed
         }
-        if (newData < 0) bail()
+        if (newData < 0) damage()
         val patched = m.copy(dataPageOffset = newData,
           dictPageOffset = newDict,
           totalCompressed = out.size().toLong - newStart)
@@ -593,9 +582,7 @@ object ParquetCrypto {
       tailStart + cryptoMd.length, encFooter.length)
     out.write(encFooter, 0, encFooter.length)
     val combined = out.size() - tailStart
-    out.write(combined & 0xff); out.write((combined >> 8) & 0xff)
-    out.write((combined >> 16) & 0xff)
-    out.write((combined >> 24) & 0xff)
+    Bytes.putLe32(out, combined)
     out.write('P'); out.write('A'); out.write('R'); out.write('E')
     Some(Encrypted(out.toByteArray, mods.result()))
   }
@@ -614,7 +601,7 @@ object ParquetCrypto {
                   columnKeys: Map[String, Array[Byte]] = Map.empty)
       : Option[Array[Byte]] =
     try decryptFileWalk(enc, footerKey, columnKeys)
-    catch { case _: Bail => None }
+    catch { case _: Damage => None }
 
   private def decryptFileWalk(enc: Array[Byte],
                               footerKey: Array[Byte],
@@ -625,8 +612,7 @@ object ParquetCrypto {
     def magicAt(i: Int) = enc(i) == 'P' && enc(i + 1) == 'A' &&
       enc(i + 2) == 'R' && enc(i + 3) == 'E'
     if (!magicAt(0) || !magicAt(n - 4)) return None
-    val fl = (enc(n - 8) & 0xff) | (enc(n - 7) & 0xff) << 8 |
-      (enc(n - 6) & 0xff) << 16 | (enc(n - 5) & 0xff) << 24
+    val fl = Bytes.le32(enc, n - 8)
     if (fl <= 0 || fl > n - 12) return None
     val tailStart = n - 8 - fl
     val cm = parseFileCryptoMetaData(enc, tailStart, n - 8)
@@ -647,10 +633,10 @@ object ParquetCrypto {
         val key =
           if (m0.encryptedMeta == null) footerKey
           else {
-            if (m0.columnKeyMeta == null) bail()
+            if (m0.columnKeyMeta == null) damage()
             columnKeys.get(new String(m0.columnKeyMeta, Utf8)) match {
               case Some(k) => k
-              case None => bail()
+              case None => damage()
             }
           }
         val m =
@@ -664,16 +650,16 @@ object ParquetCrypto {
                 if end == m0.encryptedMeta.length =>
                 Parquet.parseColumnMetaBytes(plainMeta) match {
                   case Some(pm) => pm
-                  case None => bail()
+                  case None => damage()
                 }
-              case _ => bail()
+              case _ => damage()
             }
           }
         val start =
           if (m.dictPageOffset >= 0) m.dictPageOffset
           else m.dataPageOffset
         if (start < 0 || start > Int.MaxValue ||
-          start + m.totalCompressed > n) bail()
+          start + m.totalCompressed > n) damage()
         var pos = start.toInt
         val chunkEnd = (start + m.totalCompressed).toInt
         var pageOrd = 0
@@ -688,31 +674,31 @@ object ParquetCrypto {
             if (isDict) moduleAad(aadUnique, ModDictPageHeader, g, c)
             else moduleAad(aadUnique, ModDataPageHeader, g, c, pageOrd)
           val hm = decryptModule(key, hAad, enc, pos)
-          if (hm.isEmpty) bail()
+          if (hm.isEmpty) damage()
           val (header, hEnd) = hm.get
           val phOpt =
-            Parquet.totality(Parquet.parsePageHeader(header, 0))
-          if (phOpt.isEmpty) bail()
+            Bytes.total(Parquet.parsePageHeader(header, 0))
+          if (phOpt.isEmpty) damage()
           val ph = phOpt.get
-          if (ph.headerEnd != header.length) bail()
+          if (ph.headerEnd != header.length) damage()
           // the header must agree with the module type the AAD named
-          if (isDict != (ph.pageType == 2)) bail()
+          if (isDict != (ph.pageType == 2)) damage()
           val bm =
             if (ctr) decryptModuleCtr(key, enc, hEnd)
             else decryptModule(key,
               if (isDict) moduleAad(aadUnique, ModDictPage, g, c)
               else moduleAad(aadUnique, ModDataPage, g, c, pageOrd),
               enc, hEnd)
-          if (bm.isEmpty) bail()
+          if (bm.isEmpty) damage()
           val (body, bEnd) = bm.get
           // header declared the MODULE size, plaintext + overhead
           val bodyOverhead =
             if (ctr) CtrModuleOverhead else ModuleOverhead
-          if (body.length + bodyOverhead != ph.compressed) bail()
+          if (body.length + bodyOverhead != ph.compressed) damage()
           val headerPlain =
             patchCompField(header, body.length.toLong) match {
               case Some(x) => x
-              case None => bail()
+              case None => damage()
             }
           if (isDict) newDict = out.size().toLong
           else if (newData < 0) newData = out.size().toLong
@@ -721,7 +707,7 @@ object ParquetCrypto {
           if (!isDict) pageOrd += 1
           pos = bEnd
         }
-        if (newData < 0) bail()
+        if (newData < 0) damage()
         ChunkEnc(m.copy(dataPageOffset = newData,
           dictPageOffset = newDict,
           totalCompressed = out.size().toLong - newStart,
@@ -731,8 +717,7 @@ object ParquetCrypto {
     val footerOut = serializeFooter(fm, rgsOut)
     out.write(footerOut, 0, footerOut.length)
     val len = footerOut.length
-    out.write(len & 0xff); out.write((len >> 8) & 0xff)
-    out.write((len >> 16) & 0xff); out.write((len >> 24) & 0xff)
+    Bytes.putLe32(out, len)
     out.write('P'); out.write('A'); out.write('R'); out.write('1')
     Some(out.toByteArray)
   }

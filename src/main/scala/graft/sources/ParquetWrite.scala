@@ -5,7 +5,7 @@ package graft.sources
   * INT64 columns as single PLAIN v1 data pages (no level bytes — a
   * required flat leaf has none), and a thrift-COMPACT FileMetaData
   * footer emitted by the encoder below (the write twin of the
-  * reader's TC cursor). No compression, no statistics: the smallest
+  * reader's thrift walk). No compression, no statistics: the smallest
   * layout every parquet reader must accept.
   *
   * The layout is fully DETERMINISTIC — same rows, same bytes — so an
@@ -20,6 +20,7 @@ package graft.sources
   * lists).
   */
 object ParquetWrite {
+  import Bytes.{putUvarint, putZigzag}
 
   // ---- thrift compact encoder -------------------------------------------
 
@@ -27,50 +28,34 @@ object ParquetWrite {
     val out = new java.io.ByteArrayOutputStream()
     private var lastId = List(0) // per-struct field-id stack
 
-    private def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
-    private def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
-
     private def fieldHeader(id: Int, tpe: Int): Unit = {
       val delta = id - lastId.head
       if (delta >= 1 && delta <= 15) out.write((delta << 4) | tpe)
-      else { out.write(tpe); zigzag(id.toLong) }
+      else { out.write(tpe); putZigzag(out, id.toLong) }
       lastId = id :: lastId.tail
     }
-    def i32(id: Int, v: Long): Unit = { fieldHeader(id, 5); zigzag(v) }
-    def i64(id: Int, v: Long): Unit = { fieldHeader(id, 6); zigzag(v) }
-    def str(id: Int, s: String): Unit = {
-      fieldHeader(id, 8)
-      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      varint(b.length.toLong); out.write(b, 0, b.length)
-    }
+    def i32(id: Int, v: Long): Unit = { fieldHeader(id, 5); putZigzag(out, v) }
+    def i64(id: Int, v: Long): Unit = { fieldHeader(id, 6); putZigzag(out, v) }
+    def str(id: Int, s: String): Unit = { fieldHeader(id, 8); elemStr(s) }
     /** Open a LIST field; caller emits `size` elements of `elemTpe`. */
     def list(id: Int, size: Int, elemTpe: Int): Unit = {
       fieldHeader(id, 9)
       if (size < 15) out.write((size << 4) | elemTpe)
-      else { out.write(0xf0 | elemTpe); varint(size.toLong) }
+      else { out.write(0xf0 | elemTpe); putUvarint(out, size.toLong) }
     }
     /** A bare i32 list element (zigzag varint, no header). */
-    def elemI32(v: Long): Unit = zigzag(v)
+    def elemI32(v: Long): Unit = putZigzag(out, v)
     /** A bare string list element. */
-    def elemStr(s: String): Unit = {
-      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      varint(b.length.toLong); out.write(b, 0, b.length)
-    }
+    def elemStr(s: String): Unit =
+      elemBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     /** A bare binary list element. */
     def elemBytes(b: Array[Byte]): Unit = {
-      varint(b.length.toLong); out.write(b, 0, b.length)
+      putUvarint(out, b.length.toLong); out.write(b, 0, b.length)
     }
     /** A bare i64 list element (zigzag varint). */
-    def elemI64(v: Long): Unit = zigzag(v)
+    def elemI64(v: Long): Unit = putZigzag(out, v)
     def bytesField(id: Int, b: Array[Byte]): Unit = {
-      fieldHeader(id, 8)
-      varint(b.length.toLong); out.write(b, 0, b.length)
+      fieldHeader(id, 8); elemBytes(b)
     }
     def structField(id: Int): Unit = { fieldHeader(id, 12); push() }
     /** A bare struct list element. */
@@ -117,16 +102,9 @@ object ParquetWrite {
     */
   def encodeDeltaBinPacked(vals: Array[Long]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def uleb(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
-    def zig(v: Long): Unit = uleb((v << 1) ^ (v >> 63))
-    uleb(128L); uleb(4L); uleb(vals.length.toLong)
-    zig(if (vals.isEmpty) 0L else vals(0))
+    putUvarint(out, 128L); putUvarint(out, 4L)
+    putUvarint(out, vals.length.toLong)
+    putZigzag(out, if (vals.isEmpty) 0L else vals(0))
     var at = 1
     while (at < vals.length) {
       val nDeltas = math.min(128, vals.length - at)
@@ -140,7 +118,7 @@ object ParquetWrite {
       while (i < nDeltas) {
         if (deltas(i) < minD) minD = deltas(i); i += 1
       }
-      zig(minD)
+      putZigzag(out, minD)
       val widths = new Array[Int](4)
       var mb = 0
       while (mb < 4) {
@@ -276,19 +254,12 @@ object ParquetWrite {
   private def hybridRle(vals: Array[Int], from: Int, until: Int,
                         width: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
     val byteWidth = (width + 7) / 8
     var i = from
     while (i < until) {
       var j = i
       while (j < until && vals(j) == vals(i)) j += 1
-      varint(((j - i).toLong << 1))
+      putUvarint(out, (j - i).toLong << 1)
       var k = 0
       var v = vals(i)
       while (k < byteWidth) { out.write(v & 0xff); v >>>= 8; k += 1 }
@@ -913,9 +884,7 @@ object ParquetWrite {
     f.end()
     val fb = f.out.toByteArray
     out.write(fb, 0, fb.length)
-    val len = fb.length
-    out.write(len & 0xff); out.write((len >> 8) & 0xff)
-    out.write((len >> 16) & 0xff); out.write((len >> 24) & 0xff)
+    Bytes.putLe32(out, fb.length)
     out.write('P'); out.write('A'); out.write('R'); out.write('1')
     out.toByteArray
   }
@@ -1045,9 +1014,7 @@ object ParquetWrite {
     f.end()
     val fb = f.out.toByteArray
     out.write(fb, 0, fb.length)
-    val len = fb.length
-    out.write(len & 0xff); out.write((len >> 8) & 0xff)
-    out.write((len >> 16) & 0xff); out.write((len >> 24) & 0xff)
+    Bytes.putLe32(out, fb.length)
     out.write('P'); out.write('A'); out.write('R'); out.write('1')
     out.toByteArray
   }
@@ -1165,9 +1132,7 @@ object ParquetWrite {
     f.end()                             // FileMetaData stop
     val fb = f.out.toByteArray
     out.write(fb, 0, fb.length)
-    val len = fb.length
-    out.write(len & 0xff); out.write((len >> 8) & 0xff)
-    out.write((len >> 16) & 0xff); out.write((len >> 24) & 0xff)
+    Bytes.putLe32(out, fb.length)
     out.write('P'); out.write('A'); out.write('R'); out.write('1')
     out.toByteArray
   }

@@ -64,8 +64,7 @@ object Puffin {
     out.write(Magic, 0, 4)
     out.write(payload, 0, payload.length)
     val n = payload.length
-    out.write(n & 0xff); out.write((n >> 8) & 0xff)
-    out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+    Bytes.putLe32(out, n)
     out.write(0); out.write(0); out.write(0); out.write(0) // flags
     out.write(Magic, 0, 4)
     out.toByteArray

@@ -23,25 +23,21 @@ package graft.sources
   */
 object Snappy {
 
+  /** The preamble: the uncompressed length as a uvarint32, at most
+    * 5 bytes.
+    */
+  private def preamble(r: Bytes.Reader): Option[Long] =
+    Bytes.total(r.uvarint(5))
+
   /** Decompress `b[off, off+len)` to EXACTLY `want` bytes. */
   def uncompress(b: Array[Byte], off: Int, len: Int,
                  want: Int): Option[Array[Byte]] = {
     if (off < 0 || len < 0 || want < 0 || off + len > b.length ||
       off + len < 0) return None
     val end = off + len
-    var p = off
-
-    // preamble: uvarint32 uncompressed length, max 5 bytes
-    var declared = 0L
-    var shift = 0
-    var cont = true
-    while (cont) {
-      if (p >= end || shift > 28) return None
-      val x = b(p) & 0xff; p += 1
-      declared |= (x & 0x7fL) << shift; shift += 7
-      cont = (x & 0x80) != 0
-    }
-    if (declared != want) return None
+    val r = new Bytes.Reader(b, off, end)
+    if (preamble(r) != Some(want.toLong)) return None
+    var p = r.pos
 
     val out = new Array[Byte](want)
     var o = 0
@@ -118,9 +114,7 @@ object Snappy {
   def compress(in: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(in.length / 2 + 32)
     // preamble: uncompressed length, unsigned varint
-    var z = in.length
-    while ((z & ~0x7f) != 0) { out.write((z & 0x7f) | 0x80); z >>>= 7 }
-    out.write(z)
+    Bytes.putUvarint(out, in.length)
     def emitLiteral(from: Int, until: Int): Unit = {
       var p = from
       while (p < until) {
@@ -130,7 +124,7 @@ object Snappy {
         else if (n < 0x100) { out.write(60 << 2); out.write(n) }
         else {
           out.write(61 << 2)
-          out.write(n & 0xff); out.write((n >> 8) & 0xff)
+          Bytes.putLe16(out, n)
         }
         out.write(in, p, len)
         p += len
@@ -138,7 +132,7 @@ object Snappy {
     }
     def emitCopy2(off: Int, len: Int): Unit = {
       out.write(((len - 1) << 2) | 2)
-      out.write(off & 0xff); out.write((off >> 8) & 0xff)
+      Bytes.putLe16(out, off)
     }
     def read32(i: Int): Int =
       ((in(i) & 0xff)) | ((in(i + 1) & 0xff) << 8) |
@@ -175,18 +169,13 @@ object Snappy {
 
   def compressStored(b: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(b.length + 8)
-    var z = b.length.toLong
-    while ((z & ~0x7fL) != 0) {
-      out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-    }
-    out.write(z.toInt)
+    Bytes.putUvarint(out, b.length)
     if (b.length > 0) {
       if (b.length <= 60) out.write((b.length - 1) << 2)
       else {
         out.write(0xfc) // literal, 4 trailing LE length bytes
         val n = b.length - 1
-        out.write(n & 0xff); out.write((n >> 8) & 0xff)
-        out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+        Bytes.putLe32(out, n)
       }
       out.write(b, 0, b.length)
     }
@@ -202,16 +191,8 @@ object Snappy {
                      cap: Int): Option[Array[Byte]] = {
     if (off < 0 || len < 0 || cap < 0 || off.toLong + len > b.length)
       return None
-    var declared = 0L
-    var shift = 0
-    var p = off
-    var cont = true
-    while (cont) {
-      if (p >= off + len || shift > 28) return None
-      val x = b(p) & 0xff; p += 1
-      declared |= (x & 0x7fL) << shift; shift += 7
-      cont = (x & 0x80) != 0
-    }
+    val declared = preamble(new Bytes.Reader(b, off, off + len))
+      .getOrElse(return None)
     if (declared > cap) return None
     uncompress(b, off, len, declared.toInt)
   }

@@ -100,9 +100,6 @@ object ThetaSketch {
   private def serialize(set: java.util.TreeSet[java.lang.Long],
                         theta: Long, seed: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Int): Unit = { le16(v & 0xffff); le16((v >>> 16) & 0xffff) }
-    def le64(v: Long): Unit = { le32((v & 0xffffffffL).toInt); le32((v >>> 32).toInt) }
     val empty = set.isEmpty && theta == Long.MaxValue
     val preLongs =
       if (empty) 1 else if (theta == Long.MaxValue) 2 else 3
@@ -113,13 +110,13 @@ object ThetaSketch {
     out.write(0) // lgArrLongs (unused in compact)
     out.write(FlagReadOnly | FlagCompact | FlagOrdered |
       (if (empty) FlagEmpty else 0))
-    le16(seedHash(seed))
+    Bytes.putLe16(out, seedHash(seed))
     if (!empty) {
-      le32(set.size)
-      le32(0) // unused
-      if (preLongs == 3) le64(theta)
+      Bytes.putLe32(out, set.size)
+      Bytes.putLe32(out, 0) // unused
+      if (preLongs == 3) Bytes.putLe64(out, theta)
       val it = set.iterator()
-      while (it.hasNext) le64(it.next())
+      while (it.hasNext) Bytes.putLe64(out, it.next())
     }
     out.toByteArray
   }
@@ -131,15 +128,11 @@ object ThetaSketch {
       : Option[(Array[Long], Long)] =
     parse(b, seed).map { r =>
       val preLongs = b(0) & 0x3f
-      def le32(i: Int) = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8 |
-        (b(i + 2) & 0xff) << 16 | (b(i + 3) & 0xff) << 24
-      def le64(i: Int) =
-        (le32(i) & 0xffffffffL) | (le32(i + 4) & 0xffffffffL) << 32
       if (r.empty) (Array.emptyLongArray, Long.MaxValue)
       else {
-        val theta = if (preLongs == 3) le64(16) else Long.MaxValue
+        val theta = if (preLongs == 3) Bytes.le64(b, 16) else Long.MaxValue
         ((0 until r.retained)
-          .map(i => le64(preLongs * 8 + i * 8)).toArray, theta)
+          .map(i => Bytes.le64(b, preLongs * 8 + i * 8)).toArray, theta)
       }
     }
 
@@ -221,14 +214,10 @@ object ThetaSketch {
     */
   def parse(b: Array[Byte], seed: Long = DefaultSeed)
       : Option[Result] = {
-    def le16(i: Int) = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8
-    def le32(i: Int) = le16(i) | le16(i + 2) << 16
-    def le64(i: Int) =
-      (le32(i) & 0xffffffffL) | (le32(i + 4) & 0xffffffffL) << 32
     if (b.length < 8) return None
     val preLongs = b(0) & 0x3f
     if ((b(1) & 0xff) != 3 || (b(2) & 0xff) != 3) return None
-    if (le16(6) != seedHash(seed)) return None
+    if (Bytes.le16(b, 6) != seedHash(seed)) return None
     val flags = b(5) & 0xff
     if ((flags & FlagCompact) == 0) return None
     if ((flags & FlagEmpty) != 0)
@@ -237,15 +226,15 @@ object ThetaSketch {
       else None
     if (preLongs != 2 && preLongs != 3) return None
     if (b.length < preLongs * 8) return None
-    val retained = le32(8)
+    val retained = Bytes.le32(b, 8)
     if (retained < 0) return None
     val theta =
-      if (preLongs == 3) le64(16) else Long.MaxValue
+      if (preLongs == 3) Bytes.le64(b, 16) else Long.MaxValue
     if (b.length != preLongs * 8 + retained * 8) return None
     var prev = 0L
     var i = 0
     while (i < retained) {
-      val h = le64(preLongs * 8 + i * 8)
+      val h = Bytes.le64(b, preLongs * 8 + i * 8)
       if (h <= prev || h >= theta) return None // ordered, < theta
       prev = h
       i += 1

@@ -21,6 +21,7 @@ package graft.sources
   * disagreeing with the walk, a footer pointing elsewhere — is None.
   */
 object Xz {
+  import Bytes.{Damage, Reader}
 
   final case class BlockInfo(headerSize: Int, filterId: Long,
                              dataStart: Int, packedLen: Long,
@@ -55,10 +56,6 @@ object Xz {
     c.update(b, off, len)
     c.getValue
   }
-
-  private def le32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | (b(p + 1) & 0xffL) << 8 |
-      (b(p + 2) & 0xffL) << 16 | (b(p + 3) & 0xffL) << 24
 
   /** Single-stream parse: the whole byte object must be exactly one
     * stream.
@@ -97,119 +94,85 @@ object Xz {
     if (r.isEmpty) None else Some(r)
   }
 
+  /** xz multibyte integers are LEB128 capped at 9 bytes (63 bits). */
+  private val NumBytes = 9
+
   private def parseStream(b: Array[Byte],
                           start: Int): Option[(XzInfo, Int)] = {
-    var p = start
-    def u8(): Int = { val v = b(p) & 0xff; p += 1; v }
-    // xz multibyte integers: 7-bit little-endian, high bit continues
-    def varint(): Long = {
-      var v = 0L; var shift = 0
-      while (true) {
-        if (p >= b.length || shift > 62) return -1L
-        val x = u8()
-        v |= (x & 0x7fL) << shift
-        if ((x & 0x80) == 0) return v
-        shift += 7
-      }
-      -1L
-    }
+    if (b.length - start < 32) return None
+    val r = new Reader(b, start, b.length)
+    def crcOk(from: Int): Boolean =
+      (r.le32() & 0xffffffffL) == crc32(b, from, r.pos - 4 - from)
     try {
-      if (b.length - start < 32) return None
       // ---- stream header -------------------------------------------
-      if (u8() != 0xfd || u8() != '7' || u8() != 'z' || u8() != 'X' ||
-        u8() != 'Z' || u8() != 0x00) return None
-      val flagsOff = p
-      val f0 = u8(); val f1 = u8()
+      if (r.u8() != 0xfd || r.u8() != '7' || r.u8() != 'z' ||
+        r.u8() != 'X' || r.u8() != 'Z' || r.u8() != 0x00) return None
+      val flagsOff = r.pos
+      val f0 = r.u8(); val f1 = r.u8()
       if (f0 != 0 || (f1 & 0xf0) != 0) return None // reserved bits
       val check = f1 & 0x0f
       val cl = checkLen(check)
       if (cl < 0) return None
-      if (le32(b, p) != crc32(b, flagsOff, 2)) return None
-      p += 4
+      if ((r.le32() & 0xffffffffL) != crc32(b, flagsOff, 2)) return None
       // ---- blocks ---------------------------------------------------
       val blocks = Seq.newBuilder[BlockInfo]
       var nBlocks = 0
-      while (p < b.length && b(p) != 0x00) {
-        val hdrStart = p
-        val hdrSizeByte = u8()
-        val realHeader = (hdrSizeByte + 1) * 4
-        if (hdrStart + realHeader + 4 > b.length) return None
-        val bf = u8()
+      while (r.remaining > 0 && b(r.pos) != 0x00) {
+        val hdrStart = r.pos
+        val realHeader = (r.u8() + 1) * 4
+        if (realHeader + 4 > b.length - hdrStart) return None
+        val hdr = new Reader(b, r.pos, hdrStart + realHeader - 4)
+        val bf = hdr.u8()
         val nFilters = (bf & 3) + 1
         if ((bf & 0x3c) != 0) return None // reserved
         val hasComp = (bf & 0x40) != 0
         val hasUncomp = (bf & 0x80) != 0
-        val declComp = if (hasComp) varint() else -1L
-        val declUncomp = if (hasUncomp) varint() else -1L
-        if (hasComp && declComp < 0) return None
-        if (hasUncomp && declUncomp < 0) return None
+        val declComp = if (hasComp) hdr.uvarint(NumBytes) else -1L
+        val declUncomp = if (hasUncomp) hdr.uvarint(NumBytes) else -1L
         var filterId = -1L
         var i = 0
         while (i < nFilters) {
-          val id = varint()
-          val propsLen = varint()
-          if (id < 0 || propsLen < 0 ||
-            p + propsLen > hdrStart + realHeader - 4) return None
-          p += propsLen.toInt
+          val id = hdr.uvarint(NumBytes)
+          hdr.skip(hdr.len(hdr.uvarint(NumBytes)))
           if (i == nFilters - 1) filterId = id // last = innermost
           i += 1
         }
         // padding to the declared size must be zeros
-        while (p < hdrStart + realHeader - 4) {
-          if (b(p) != 0) return None
-          p += 1
-        }
-        if (le32(b, p) != crc32(b, hdrStart, realHeader - 4))
-          return None
-        p += 4
+        while (hdr.remaining > 0) if (hdr.u8() != 0) return None
+        r.pos = hdr.end
+        if (!crcOk(hdrStart)) return None
         if (filterId != 0x21) return None // LZMA2 only (this corpus)
         // ---- LZMA2 chunk walk (self-delimiting framing) ------------
-        val dataStart = p
+        val dataStart = r.pos
         val chunks = Seq.newBuilder[(Int, Int)]
         var unpacked = 0L
         var done = false
         while (!done) {
-          if (p >= b.length) return None
-          val c = u8()
+          val at = r.pos
+          val c = r.u8()
           if (c == 0x00) done = true
           else if (c == 0x01 || c == 0x02) {
             // uncompressed chunk: BE16 size-1, raw bytes
-            if (p + 2 > b.length) return None
-            val sz = (((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)) + 1
-            p += 2
-            chunks += ((p - 3, c))
-            if (p + sz > b.length) return None
-            p += sz
+            val sz = r.be16() + 1
+            chunks += ((at, c))
+            r.skip(sz)
             unpacked += sz
           } else if ((c & 0x80) != 0) {
-            if (p + 4 > b.length) return None
-            val usz = ((c & 0x1f).toLong << 16 |
-              (b(p) & 0xffL) << 8 | (b(p + 1) & 0xffL)) + 1
-            val csz = (((b(p + 2) & 0xff) << 8) |
-              (b(p + 3) & 0xff)) + 1
-            p += 4
-            val reset = (c >> 5) & 3
-            if (reset >= 2) { // new props byte
-              if (p >= b.length) return None
-              p += 1
-            }
-            chunks += ((p - (if (reset >= 2) 6 else 5), c))
-            if (p + csz > b.length) return None
-            p += csz
+            val usz = ((c & 0x1f).toLong << 16 | r.be16()) + 1
+            val csz = r.be16() + 1
+            if (((c >> 5) & 3) >= 2) r.skip(1) // new props byte
+            chunks += ((at, c))
+            r.skip(csz)
             unpacked += usz
           } else return None
         }
-        val compLen = (p - dataStart).toLong
+        val compLen = (r.pos - dataStart).toLong
         if (hasComp && declComp != compLen) return None
         if (hasUncomp && declUncomp != unpacked) return None
         // block padding to a 4-byte boundary, zeros
-        while ((p - 0) % 4 != 0) {
-          if (p >= b.length || b(p) != 0) return None
-          p += 1
-        }
+        while (r.pos % 4 != 0) if (r.u8() != 0) return None
         // the check (over UNCOMPRESSED data — verified by the decoder)
-        if (p + cl > b.length) return None
-        p += cl
+        r.skip(cl)
         val unpadded = realHeader.toLong + compLen + cl
         blocks += BlockInfo(realHeader, filterId, dataStart, compLen,
           unpacked, unpadded, chunks.result())
@@ -217,39 +180,31 @@ object Xz {
         if (nBlocks > (1 << 20)) return None
       }
       // ---- index ----------------------------------------------------
-      val idxStart = p
-      if (p >= b.length || u8() != 0x00) return None
-      val cnt = varint()
+      val idxStart = r.pos
+      if (r.u8() != 0x00) return None
+      val cnt = r.uvarint(NumBytes)
       val walked = blocks.result()
       if (cnt != walked.length.toLong) return None
       var idxUncomp = 0L
       walked.foreach { blk =>
-        val unp = varint()
-        val unc = varint()
+        val unp = r.uvarint(NumBytes)
+        val unc = r.uvarint(NumBytes)
         if (unp != blk.unpaddedSize || unc != blk.unpackedLen)
           return None
         idxUncomp += unc
       }
-      while ((p - idxStart) % 4 != 0) {
-        if (p >= b.length || b(p) != 0) return None
-        p += 1
-      }
-      if (p + 4 > b.length ||
-        le32(b, p) != crc32(b, idxStart, p - idxStart)) return None
-      p += 4
-      val idxRealSize = p - idxStart
+      while ((r.pos - idxStart) % 4 != 0) if (r.u8() != 0) return None
+      if (!crcOk(idxStart)) return None
+      val idxRealSize = r.pos - idxStart
       // ---- footer ---------------------------------------------------
-      if (p + 12 > b.length) return None
-      val footCrc = le32(b, p)
-      if (footCrc != crc32(b, p + 4, 6)) return None
-      val backward = (le32(b, p + 4) + 1) * 4
+      val footStart = r.pos
+      val footCrc = r.le32() & 0xffffffffL
+      if (r.remaining < 8 || footCrc != crc32(b, r.pos, 6)) return None
+      val backward = ((r.le32() & 0xffffffffL) + 1) * 4
       if (backward != idxRealSize.toLong) return None
-      if (b(p + 8) != 0x00 || (b(p + 9) & 0xff) != (check | 0x00))
-        return None
-      if (b(p + 10) != 'Y' || b(p + 11) != 'Z') return None
-      Some((XzInfo(check, walked, idxUncomp), p + 12))
-    } catch {
-      case _: ArrayIndexOutOfBoundsException => None
-    }
+      if (r.u8() != 0x00 || r.u8() != check) return None
+      if (r.u8() != 'Y' || r.u8() != 'Z') return None
+      Some((XzInfo(check, walked, idxUncomp), footStart + 12))
+    } catch { case _: Damage => None }
   }
 }

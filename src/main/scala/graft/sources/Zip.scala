@@ -40,6 +40,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * inventory presented as complete).
   */
 object Zip {
+  import Bytes.{Damage, Reader}
 
   /** One input blob: a ZIP file's raw bytes. */
   case class ZipBlob(blob_id: Long, content: Array[Byte])
@@ -60,17 +61,13 @@ object Zip {
   /** Walk one blob's central directory. Returns all entries, or Nil on
     * any malformation (totality law — see class doc).
     */
-  def parseCentralDirectory(blobId: Long, b: Array[Byte]): Seq[ZipEntry] = {
-    def u8(i: Int): Int = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def le16(i: Int): Int = {
-      val lo = u8(i); val hi = u8(i + 1)
-      if (lo < 0 || hi < 0) -1 else lo | (hi << 8)
-    }
-    def le32(i: Int): Long = {
-      val a = u8(i); val c = u8(i + 1); val d = u8(i + 2); val e = u8(i + 3)
-      if (a < 0 || c < 0 || d < 0 || e < 0) -1L
-      else (a.toLong) | (c.toLong << 8) | (d.toLong << 16) | (e.toLong << 24)
-    }
+  def parseCentralDirectory(blobId: Long, b: Array[Byte]): Seq[ZipEntry] =
+    // a read past the blob is Damage: the walk is Nil
+    try walk(blobId, new Reader(b, 0, b.length))
+    catch { case _: Damage => Nil }
+
+  private def walk(blobId: Long, r: Reader): Seq[ZipEntry] = {
+    val b = r.b
     // ---- EOCD: scan BACKWARD from the end through the comment window
     // (spec: comment ≤ 65535 bytes, EOCD is the last record) ----------
     if (b.length < 22) return Nil
@@ -78,23 +75,17 @@ object Zip {
     var i = b.length - 22
     val floor = math.max(0, b.length - 22 - 65535)
     while (eocd < 0 && i >= floor) {
-      if (le32(i) == EocdMagic &&
+      if (r.at(i).le32u() == EocdMagic &&
         // the candidate is real only if its comment length reaches the
         // true end of file — guards against the magic appearing inside
         // a comment or payload
-        i + 22 + le16(i + 20) == b.length) eocd = i
+        i + 22 + r.at(i + 20).le16() == b.length) eocd = i
       i -= 1
     }
     if (eocd < 0) return Nil
-    def le64(i: Int): Long = {
-      // 8-byte LE; -1 on truncation. Values ≥ 2^63 cannot occur in a
-      // blob this walk can index anyway (arrays are Int-addressed).
-      val lo = le32(i); val hi = le32(i + 4)
-      if (lo < 0 || hi < 0 || hi > Int.MaxValue) -1L else lo | (hi << 32)
-    }
-    var nEntries = le16(eocd + 10).toLong
-    var cdSize = le32(eocd + 12)
-    var cdOffset = le32(eocd + 16)
+    var nEntries = r.at(eocd + 10).le16().toLong
+    var cdSize = r.at(eocd + 12).le32u()
+    var cdOffset = r.at(eocd + 16).le32u()
     // ---- ZIP64: escaped EOCD fields resolve through locator + EOCD64.
     // The escape values are SENTINELS, not data — an archive whose true
     // count/size/offset hits them must write the ZIP64 records, so a
@@ -102,18 +93,20 @@ object Zip {
     if (nEntries == 0xffffL || cdSize == 0xffffffffL ||
       cdOffset == 0xffffffffL) {
       val loc = eocd - 20
-      if (loc < 0 || le32(loc) != Eocd64LocMagic) return Nil
-      if (le32(loc + 4) != 0L || le32(loc + 16) != 1L) return Nil // single disk
-      val e64 = le64(loc + 8)
-      if (e64 < 0 || e64 + 56 > loc || le32(e64.toInt) != Eocd64Magic)
-        return Nil
+      if (loc < 0 || r.at(loc).le32u() != Eocd64LocMagic) return Nil
+      // single disk
+      if (r.at(loc + 4).le32() != 0 || r.at(loc + 16).le32() != 1) return Nil
+      val e64 = r.at(loc + 8).le64()
+      if (e64 < 0 || e64 + 56 > loc ||
+        r.at(e64.toInt).le32u() != Eocd64Magic) return Nil
       val p = e64.toInt
-      if (le32(p + 16) != 0L || le32(p + 20) != 0L) return Nil // single disk
-      val total = le64(p + 32)
-      if (le64(p + 24) != total) return Nil // entries-on-disk ≡ total
+      // single disk
+      if (r.at(p + 16).le32u() != 0L || r.at(p + 20).le32u() != 0L) return Nil
+      val total = r.at(p + 32).le64()
+      if (r.at(p + 24).le64() != total) return Nil // entries-on-disk ≡ total
       nEntries = total
-      cdSize = le64(p + 40)
-      cdOffset = le64(p + 48)
+      cdSize = r.at(p + 40).le64()
+      cdOffset = r.at(p + 48).le64()
       if (nEntries < 0 || cdSize < 0 || cdOffset < 0 ||
         cdOffset + cdSize > e64) return Nil
     } else if (nEntries < 0 || cdSize < 0 || cdOffset < 0 ||
@@ -123,18 +116,17 @@ object Zip {
     var pos = cdOffset.toInt
     var k = 0L
     while (k < nEntries) {
-      if (le32(pos) != CdhMagic || pos + 46 > b.length) return Nil
-      val method = le16(pos + 10)
-      val crc = le32(pos + 16)
-      var compSize = le32(pos + 20)
-      var uncompSize = le32(pos + 24)
-      val nameLen = le16(pos + 28)
-      val extraLen = le16(pos + 30)
-      val commentLen = le16(pos + 32)
-      val diskStart = le16(pos + 34)
-      var lfhOff = le32(pos + 42)
-      if (nameLen < 0 || extraLen < 0 || commentLen < 0 ||
-        pos + 46 + nameLen + extraLen > b.length) return Nil
+      if (r.at(pos).le32u() != CdhMagic || pos + 46 > b.length) return Nil
+      val method = r.at(pos + 10).le16()
+      val crc = r.at(pos + 16).le32u()
+      var compSize = r.at(pos + 20).le32u()
+      var uncompSize = r.at(pos + 24).le32u()
+      val nameLen = r.at(pos + 28).le16()
+      val extraLen = r.at(pos + 30).le16()
+      val commentLen = r.at(pos + 32).le16()
+      val diskStart = r.at(pos + 34).le16()
+      var lfhOff = r.at(pos + 42).le32u()
+      if (pos + 46 + nameLen + extraLen > b.length) return Nil
       // ZIP64 per-entry escapes → the 0x0001 extra field. Its 8-byte
       // values appear in escape order and ONLY for escaped fields.
       if (uncompSize == 0xffffffffL || compSize == 0xffffffffL ||
@@ -143,27 +135,16 @@ object Zip {
         val end = p + extraLen
         var found = false
         while (!found && p + 4 <= end) {
-          val id = le16(p)
-          val sz = le16(p + 2)
-          if (id < 0 || sz < 0 || p + 4 + sz > end) return Nil
+          val id = r.at(p).le16()
+          val sz = r.at(p + 2).le16()
+          if (p + 4 + sz > end) return Nil
           if (id == 0x0001) {
-            var q = p + 4
-            val qEnd = p + 4 + sz
-            def take64(): Long = {
-              if (q + 8 > qEnd) -1L else { val v = le64(q); q += 8; v }
-            }
-            if (uncompSize == 0xffffffffL) {
-              uncompSize = take64(); if (uncompSize < 0) return Nil
-            }
-            if (compSize == 0xffffffffL) {
-              compSize = take64(); if (compSize < 0) return Nil
-            }
-            if (lfhOff == 0xffffffffL) {
-              lfhOff = take64(); if (lfhOff < 0) return Nil
-            }
-            if (diskStart == 0xffff) {
-              if (q + 4 > qEnd || le32(q) != 0L) return Nil // single disk
-            }
+            val x = new Reader(b, p + 4, p + 4 + sz)
+            if (uncompSize == 0xffffffffL) uncompSize = x.le64()
+            if (compSize == 0xffffffffL) compSize = x.le64()
+            if (lfhOff == 0xffffffffL) lfhOff = x.le64()
+            if (diskStart == 0xffff && x.le32() != 0) return Nil // single disk
+            if (uncompSize < 0 || compSize < 0) return Nil
             found = true
           }
           p += 4 + sz
@@ -174,7 +155,7 @@ object Zip {
       // local-header magic (a directory pointing into garbage is not an
       // inventory)
       if (lfhOff < 0 || lfhOff > b.length - 4L ||
-        le32(lfhOff.toInt) != LfhMagic) return Nil
+        r.at(lfhOff.toInt).le32u() != LfhMagic) return Nil
       val name = new String(b, pos + 46, nameLen,
         java.nio.charset.StandardCharsets.UTF_8)
       out += ZipEntry(blobId, name, method, crc, compSize, uncompSize, lfhOff)

@@ -25,8 +25,7 @@ package graft.sources
   */
 object Zstd {
 
-  private type Damage = ZstdEntropy.Damage
-  private def damage(): Nothing = throw new ZstdEntropy.Damage
+  import Bytes.{Damage, Reader, damage}
 
   /** One walked frame. `kind` is "zstd" or "skip". `declaredSize` is
     * the frame-header content size (-1 when the header omits it) or
@@ -53,8 +52,7 @@ object Zstd {
     // descriptor: FCS code 2 (4-byte size) | Single_Segment_Flag
     out.write(0xa0)
     val n = raw.length
-    out.write(n & 0xff); out.write((n >> 8) & 0xff)
-    out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+    Bytes.putLe32(out, n)
     val BlockMax = 128 * 1024
     var p = 0
     do {
@@ -139,42 +137,27 @@ object Zstd {
   private def walkImpl(b: Array[Byte], cap: Int, dict: Array[Byte],
                        dicts: Map[Long, Dict]): Option[Seq[Frame]] = {
     try {
-      var p = 0
-      def u8(): Int = {
-        if (p < 0 || p >= b.length) damage()
-        val v = b(p) & 0xff; p += 1; v
-      }
-      def le32(): Long = {
-        val a = u8().toLong; val c = u8().toLong
-        val d = u8().toLong; val e = u8().toLong
-        a | c << 8 | d << 16 | e << 24
-      }
-      def leN(n: Int): Long = {
-        var v = 0L; var i = 0
-        while (i < n) { v |= u8().toLong << (8 * i); i += 1 }
-        v
-      }
+      val r = new Reader(b, 0, b.length)
       val out = Seq.newBuilder[Frame]
       if (b.length == 0) damage() // an empty object is not a .zst
-      while (p < b.length) {
-        val magic = le32()
+      while (r.remaining > 0) {
+        val magic = r.le32u()
         if ((magic & 0xfffffff0L) == 0x184d2a50L) {
           // skippable frame: LE32 size + payload, content surfaced raw
-          val sz = le32()
-          if (sz > cap || p + sz > b.length) damage()
-          val payload = java.util.Arrays.copyOfRange(b, p, p + sz.toInt)
-          p += sz.toInt
+          val sz = r.le32u()
+          if (sz > cap) damage()
+          val payload = r.bytes(sz.toInt)
           out += Frame("skip", sz, 0, 0, 0, 0, "none", payload)
         } else if (magic == 0xfd2fb528L) {
           // frame header descriptor
-          val fhd = u8()
+          val fhd = r.u8()
           val fcsFlag = (fhd >> 6) & 3
           val singleSegment = ((fhd >> 5) & 1) == 1
           if (((fhd >> 3) & 1) != 0) damage() // reserved bit
           val hasChecksum = ((fhd >> 2) & 1) == 1
           val dictIdFlag = fhd & 3
           if (!singleSegment) {
-            val wd = u8() // window descriptor: exponent+mantissa
+            val wd = r.u8() // window descriptor: exponent+mantissa
             val windowLog = 10 + ((wd >> 3) & 0x1f)
             if (windowLog > 31) damage() // beyond any bounded reader
           }
@@ -185,25 +168,19 @@ object Zstd {
           // and the frame decodes.
           val dictId: Long = dictIdFlag match {
             case 0 => 0L
-            case 1 => u8().toLong
-            case 2 => leN(2)
-            case _ => leN(4)
+            case 1 => r.u8().toLong
+            case 2 => r.le16().toLong
+            case _ => r.le32u()
           }
           val frameDict: Option[Dict] =
             if (dictId == 0L) None
             else Some(dicts.getOrElse(dictId, damage()))
-          val fcsBytes = fcsFlag match {
-            case 0 => if (singleSegment) 1 else 0
-            case 1 => 2
-            case 2 => 4
-            case _ => 8
+          val declared = fcsFlag match {
+            case 0 => if (singleSegment) r.u8().toLong else -1L
+            case 1 => r.le16() + 256L
+            case 2 => r.le32u()
+            case _ => r.le64()
           }
-          val declared =
-            if (fcsBytes == 0) -1L
-            else {
-              val v = leN(fcsBytes)
-              if (fcsBytes == 2) v + 256 else v
-            }
           if (declared > cap) damage()
           // blocks: LE24 header = last(bit0) | type(bits1-2) | size<<3
           val prefixLen = frameDict
@@ -224,7 +201,7 @@ object Zstd {
           var nBlocks = 0; var raw = 0; var rle = 0; var comp = 0
           var last = false
           while (!last) {
-            val h = leN(3)
+            val h = r.le16() | r.u8() << 16
             last = (h & 1L) == 1
             val typ = ((h >> 1) & 3).toInt
             val size = (h >> 3).toInt // 21 bits
@@ -232,18 +209,18 @@ object Zstd {
             nBlocks += 1
             typ match {
               case 0 => // RAW: size bytes of content, stored
-                if (p + size > b.length) damage()
-                ctx.window.putRaw(b, p, size)
-                p += size
+                val at = r.pos
+                r.skip(size)
+                ctx.window.putRaw(b, at, size)
                 raw += 1
               case 1 => // RLE: ONE stored byte, size copies
-                val v = u8()
+                val v = r.u8()
                 ctx.window.putRle(v.toByte, size)
                 rle += 1
               case 2 => // compressed: the full entropy decode (stage 2)
-                if (p + size > b.length) damage()
-                ZstdEntropy.decompressBlock(b, p, size, ctx)
-                p += size
+                val at = r.pos
+                r.skip(size)
+                ZstdEntropy.decompressBlock(b, at, size, ctx)
                 comp += 1
               case _ => damage() // reserved
             }
@@ -260,7 +237,7 @@ object Zstd {
           val checksumState =
             if (!hasChecksum) "none"
             else {
-              val want = le32()
+              val want = r.le32u()
               if ((XxHash64.hash(decoded, 0L) & 0xffffffffL) == want) "ok"
               else damage()
             }
@@ -287,14 +264,6 @@ object XxHash64 {
 
   def hash(b: Array[Byte], seed: Long): Long = {
     val len = b.length
-    def u64(i: Int): Long = {
-      var v = 0L; var k = 7
-      while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-      v
-    }
-    def u32(i: Int): Long =
-      (b(i) & 0xffL) | (b(i + 1) & 0xffL) << 8 |
-        (b(i + 2) & 0xffL) << 16 | (b(i + 3) & 0xffL) << 24
     def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
     def round(acc: Long, lane: Long): Long = rotl(acc + lane * P2, 31) * P1
 
@@ -306,10 +275,10 @@ object XxHash64 {
         var a3 = seed
         var a4 = seed - P1
         while (p + 32 <= len) {
-          a1 = round(a1, u64(p))
-          a2 = round(a2, u64(p + 8))
-          a3 = round(a3, u64(p + 16))
-          a4 = round(a4, u64(p + 24))
+          a1 = round(a1, Bytes.le64(b, p))
+          a2 = round(a2, Bytes.le64(b, p + 8))
+          a3 = round(a3, Bytes.le64(b, p + 16))
+          a4 = round(a4, Bytes.le64(b, p + 24))
           p += 32
         }
         var acc = rotl(a1, 1) + rotl(a2, 7) + rotl(a3, 12) + rotl(a4, 18)
@@ -319,11 +288,11 @@ object XxHash64 {
       } else seed + P5
     h += len
     while (p + 8 <= len) {
-      h = rotl(h ^ round(0L, u64(p)), 27) * P1 + P4
+      h = rotl(h ^ round(0L, Bytes.le64(b, p)), 27) * P1 + P4
       p += 8
     }
     if (p + 4 <= len) {
-      h = rotl(h ^ (u32(p) * P1), 23) * P2 + P3
+      h = rotl(h ^ (Bytes.le32u(b, p) * P1), 23) * P2 + P3
       p += 4
     }
     while (p < len) {

@@ -26,7 +26,7 @@ package graft.sources
   */
 object ZstdEncode {
 
-  private def damage(): Nothing = throw new ZstdEntropy.Damage
+  import Bytes.{Damage, damage}
 
   // ---- FSE encode transform ----------------------------------------------
 
@@ -182,7 +182,7 @@ object ZstdEncode {
   private def planChannel(codes: Vector[Int], maxSym: Int,
                           maxLog: Int): Option[ChannelPlan] =
     try planChannel0(codes, maxSym, maxLog)
-    catch { case _: ZstdEntropy.Damage => None } // fall back, never fail
+    catch { case _: Damage => None } // fall back, never fail
 
   private def planChannel0(codes: Vector[Int], maxSym: Int,
                            maxLog: Int): Option[ChannelPlan] = {
@@ -449,7 +449,7 @@ object ZstdEncode {
       if (used == out.length && lg == expectedLog &&
         java.util.Arrays.equals(tb, expected)) Some(out)
       else None
-    } catch { case _: ZstdEntropy.Damage => None }
+    } catch { case _: Damage => None }
 
   /** Build the Huffman-compressed literals section (header + tree
     * description — direct 4-bit weights or the FSE-compressed form,
@@ -549,10 +549,8 @@ object ZstdEncode {
       val s4 = stream(3 * seg, regen)
       if (s1.length > 65535 || s2.length > 65535 || s3.length > 65535)
         return None
-      def le16(v: Int): Unit = {
-        body.write(v & 0xff); body.write((v >> 8) & 0xff)
-      }
-      le16(s1.length); le16(s2.length); le16(s3.length)
+      Bytes.putLe16(body, s1.length); Bytes.putLe16(body, s2.length)
+      Bytes.putLe16(body, s3.length)
       body.write(s1, 0, s1.length); body.write(s2, 0, s2.length)
       body.write(s3, 0, s3.length); body.write(s4, 0, s4.length)
     }
@@ -708,7 +706,7 @@ object ZstdEncode {
       } else {
         out.write(255)
         val v = nSeq - 0x7f00
-        out.write(v & 0xff); out.write((v >> 8) & 0xff)
+        Bytes.putLe16(out, v)
       }
       out.write((llP.mode << 6) | (ofP.mode << 4) | (mlP.mode << 2))
       out.write(llP.desc, 0, llP.desc.length)
@@ -754,8 +752,7 @@ object ZstdEncode {
     // descriptor: FCS code 2 (4 bytes) | single-segment | checksum
     out.write(0xa4)
     val n = raw.length
-    out.write(n & 0xff); out.write((n >> 8) & 0xff)
-    out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+    Bytes.putLe32(out, n)
     val BlockIn = 1 << 16
     // hash state is FRAME-global: matches may reach earlier blocks
     // (the decoder window is the whole single-segment frame)
@@ -771,7 +768,7 @@ object ZstdEncode {
       // block instead of escaping as a throw
       (try compressedBlockBody(raw, p, p + len, head, prev,
         adaptiveTables)
-      catch { case _: ZstdEntropy.Damage => None }) match {
+      catch { case _: Damage => None }) match {
         case Some(body) =>
           val hdr = (body.length << 3) | (2 << 1) | last
           out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
@@ -786,9 +783,7 @@ object ZstdEncode {
       p += len
     } while (p < n)
     val ck = XxHash64.hash(raw, 0L)
-    out.write((ck & 0xff).toInt); out.write(((ck >> 8) & 0xff).toInt)
-    out.write(((ck >> 16) & 0xff).toInt)
-    out.write(((ck >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, ck.toInt)
     out.toByteArray
   }
 
@@ -870,9 +865,7 @@ object ZstdEncode {
     require(content.length >= 8, "content must cover the offsets")
     val out = new java.io.ByteArrayOutputStream(content.length + 64)
     out.write(0x37); out.write(0xa4); out.write(0x30); out.write(0xec)
-    out.write((id & 0xff).toInt); out.write(((id >> 8) & 0xff).toInt)
-    out.write(((id >> 16) & 0xff).toInt)
-    out.write(((id >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, id.toInt)
     // Huffman: direct representation, 2 weights stated... the RFC's
     // header >= 128 form: Number_of_Weights = header - 127, the LAST
     // symbol's weight implied. Two 1-weights + implied 1 = symbols
@@ -888,8 +881,7 @@ object ZstdEncode {
     out.write(ll, 0, ll.length)
     // repeat offsets 1, 4, 8 — the frame-initial defaults
     Seq(1, 4, 8).foreach { r =>
-      out.write(r & 0xff); out.write((r >> 8) & 0xff)
-      out.write((r >> 16) & 0xff); out.write((r >> 24) & 0xff)
+      Bytes.putLe32(out, r)
     }
     out.write(content, 0, content.length)
     out.toByteArray
@@ -918,12 +910,9 @@ object ZstdEncode {
     // FCS code 2 | single-segment | checksum | dictIdFlag 3 (4 bytes)
     out.write(0xa7)
     val id = dict.id
-    out.write((id & 0xff).toInt); out.write(((id >> 8) & 0xff).toInt)
-    out.write(((id >> 16) & 0xff).toInt)
-    out.write(((id >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, id.toInt)
     val n = raw.length
-    out.write(n & 0xff); out.write((n >> 8) & 0xff)
-    out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+    Bytes.putLe32(out, n)
     val head = new Array[Int](1 << 15)
     java.util.Arrays.fill(head, -1)
     val prev = new Array[Int](1 << 15)
@@ -936,7 +925,7 @@ object ZstdEncode {
       val last = if (p + len >= data.length) 1 else 0
       (try compressedBlockBody(data, p, p + len, head, prev,
         adaptiveTables)
-      catch { case _: ZstdEntropy.Damage => None }) match {
+      catch { case _: Damage => None }) match {
         case Some(body) =>
           val hdr = (body.length << 3) | (2 << 1) | last
           out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
@@ -951,9 +940,7 @@ object ZstdEncode {
       p += len
     } while (p < data.length)
     val ck = XxHash64.hash(raw, 0L)
-    out.write((ck & 0xff).toInt); out.write(((ck >> 8) & 0xff).toInt)
-    out.write(((ck >> 16) & 0xff).toInt)
-    out.write(((ck >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, ck.toInt)
     out.toByteArray
   }
 
@@ -982,8 +969,7 @@ object ZstdEncode {
     out.write(0x28); out.write(0xb5); out.write(0x2f); out.write(0xfd)
     out.write(0xa4) // FCS code 2 | single-segment | checksum
     val n = raw.length
-    out.write(n & 0xff); out.write((n >> 8) & 0xff)
-    out.write((n >> 16) & 0xff); out.write((n >> 24) & 0xff)
+    Bytes.putLe32(out, n)
     val head = new Array[Int](1 << 15)
     java.util.Arrays.fill(head, -1)
     val prev = new Array[Int](1 << 15)
@@ -998,7 +984,7 @@ object ZstdEncode {
       val last = if (p + len >= data.length) 1 else 0
       (try compressedBlockBody(data, p, p + len, head, prev,
         adaptiveTables)
-      catch { case _: ZstdEntropy.Damage => None }) match {
+      catch { case _: Damage => None }) match {
         case Some(body) =>
           val hdr = (body.length << 3) | (2 << 1) | last
           out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
@@ -1013,9 +999,7 @@ object ZstdEncode {
       p += len
     } while (p < data.length)
     val ck = XxHash64.hash(raw, 0L)
-    out.write((ck & 0xff).toInt); out.write(((ck >> 8) & 0xff).toInt)
-    out.write(((ck >> 16) & 0xff).toInt)
-    out.write(((ck >> 24) & 0xff).toInt)
+    Bytes.putLe32(out, ck.toInt)
     out.toByteArray
   }
 }

@@ -22,9 +22,7 @@ package graft.sources
   */
 private[sources] object ZstdEntropy {
 
-  private[sources] final class Damage
-    extends RuntimeException(null, null, false, false)
-  private def damage(): Nothing = throw new Damage
+  import Bytes.{Damage, damage}
 
   // ---- frame window -----------------------------------------------------
 
@@ -514,8 +512,8 @@ private[sources] object ZstdEntropy {
             lit, 0, regen)
         } else {
           if (p + 6 > compEnd) damage()
-          def le16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val s1 = le16(p); val s2 = le16(p + 2); val s3 = le16(p + 4)
+          val s1 = Bytes.le16(b, p); val s2 = Bytes.le16(b, p + 2)
+          val s3 = Bytes.le16(b, p + 4)
           val dStart = p + 6
           val total = compEnd - dStart
           if (s1 + s2 + s3 > total) damage()
@@ -667,9 +665,8 @@ private[sources] object ZstdEntropy {
     p += u3
     ctx.ofTable = ofT; ctx.mlTable = mlT; ctx.llTable = llT
     if (p + 12 > end) damage()
-    def le32(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    val r1 = le32(p); val r2 = le32(p + 4); val r3 = le32(p + 8)
+    val r1 = Bytes.le32(b, p); val r2 = Bytes.le32(b, p + 4)
+    val r3 = Bytes.le32(b, p + 8)
     val contentLen = end - (p + 12)
     // each recent offset must be valid against the content alone
     if (r1 <= 0 || r2 <= 0 || r3 <= 0 || r1 > contentLen ||

@@ -23,6 +23,21 @@ object ZstdSeekable {
   final case class SeekEntry(offset: Long, compressedSize: Long,
                              decompressedSize: Long)
 
+  /** The seek-table skippable frame that closes a seekable `.zst`:
+    * (compressed, decompressed) size per frame, no per-frame checksums.
+    */
+  private def putSeekTable(out: java.io.ByteArrayOutputStream,
+                           entries: Seq[(Long, Long)]): Unit = {
+    Bytes.putLe32(out, SkippableMagic)
+    Bytes.putLe32(out, entries.length * 8 + 9)
+    entries.foreach { case (cs, ds) =>
+      Bytes.putLe32(out, cs.toInt); Bytes.putLe32(out, ds.toInt)
+    }
+    Bytes.putLe32(out, entries.length)
+    out.write(0x00) // descriptor: no per-frame checksums
+    Bytes.putLe32(out, SeekableMagic)
+  }
+
   /** Write chunks as one seekable `.zst`: one own-encoder frame per
     * chunk plus the seek-table skippable frame.
     */
@@ -33,17 +48,7 @@ object ZstdSeekable {
       out.write(f, 0, f.length)
       (f.length.toLong, c.length.toLong)
     }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(SkippableMagic & 0xffffffffL)
-    le32(entries.length.toLong * 8 + 9)
-    entries.foreach { case (cs, ds) => le32(cs); le32(ds) }
-    le32(entries.length.toLong)
-    out.write(0x00) // descriptor: no per-frame checksums
-    le32(SeekableMagic & 0xffffffffL)
+    putSeekTable(out, entries)
     out.toByteArray
   }
 
@@ -53,34 +58,31 @@ object ZstdSeekable {
     * zstd frame magic.
     */
   def parse(b: Array[Byte]): Option[Seq[SeekEntry]] = {
-    def le32(p: Int): Long =
-      (b(p) & 0xffL) | (b(p + 1) & 0xffL) << 8 |
-        (b(p + 2) & 0xffL) << 16 | (b(p + 3) & 0xffL) << 24
     if (b.length < 17) return None
-    if (le32(b.length - 4) != (SeekableMagic & 0xffffffffL))
+    if (Bytes.le32u(b, b.length - 4) != (SeekableMagic & 0xffffffffL))
       return None
     val descriptor = b(b.length - 5) & 0xff
     if ((descriptor & 0x7c) != 0) return None // reserved bits
     val withCk = (descriptor & 0x80) != 0
     val entryLen = if (withCk) 12 else 8
-    val n = le32(b.length - 9)
+    val n = Bytes.le32u(b, b.length - 9)
     if (n < 0 || n > (1 << 20)) return None
     val tableContent = n * entryLen + 9
     val frameStart = b.length - 8 - tableContent
     if (frameStart < 0) return None
-    if (le32(frameStart.toInt) != (SkippableMagic & 0xffffffffL))
+    if (Bytes.le32u(b, frameStart.toInt) != (SkippableMagic & 0xffffffffL))
       return None
-    if (le32(frameStart.toInt + 4) != tableContent) return None
+    if (Bytes.le32u(b, frameStart.toInt + 4) != tableContent) return None
     val out = Seq.newBuilder[SeekEntry]
     var off = 0L
     var p = frameStart.toInt + 8
     var i = 0L
     while (i < n) {
-      val cs = le32(p)
-      val ds = le32(p + 4)
+      val cs = Bytes.le32u(b, p)
+      val ds = Bytes.le32u(b, p + 4)
       if (cs < 0 || ds < 0 || off + cs > frameStart) return None
       // each entry must start at a zstd frame magic
-      if (le32(off.toInt) != 0xfd2fb528L) return None
+      if (Bytes.le32u(b, off.toInt) != 0xfd2fb528L) return None
       out += SeekEntry(off, cs, ds)
       off += cs
       p += entryLen
@@ -122,17 +124,7 @@ object ZstdSeekable {
       out.write(f, 0, f.length)
       (f.length.toLong, c.length.toLong)
     }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(SkippableMagic & 0xffffffffL)
-    le32(entries.length.toLong * 8 + 9)
-    entries.foreach { case (cs, ds) => le32(cs); le32(ds) }
-    le32(entries.length.toLong)
-    out.write(0x00)
-    le32(SeekableMagic & 0xffffffffL)
+    putSeekTable(out, entries)
     out.toByteArray
   }
 

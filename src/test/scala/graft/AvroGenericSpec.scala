@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Avro, AvroGeneric}
+import graft.sources.{Avro, AvroGeneric, Bytes}
 import graft.sources.AvroGeneric._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ class AvroGenericSpec extends AnyFunSuite {
 
   private def vi(n: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    Avro.putVarint(out, n)
+    Bytes.putZigzag(out, n)
     out.toByteArray
   }
   private def str(s: String): Array[Byte] = {
@@ -65,10 +65,10 @@ class AvroGenericSpec extends AnyFunSuite {
                         codec: String): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write("Obj".getBytes("US-ASCII")); out.write(1)
-    Avro.putVarint(out, 2L)
+    Bytes.putZigzag(out, 2L)
     out.write(str("avro.schema")); out.write(str(schema))
     out.write(str("avro.codec")); out.write(str(codec))
-    Avro.putVarint(out, 0L)
+    Bytes.putZigzag(out, 0L)
     val sync = Array.tabulate[Byte](16)(i => (i * 17).toByte)
     out.write(sync)
     var body = datums.toArray.flatten
@@ -81,8 +81,8 @@ class AvroGenericSpec extends AnyFunSuite {
       d.end()
       body = bos.toByteArray
     }
-    Avro.putVarint(out, datums.length.toLong)
-    Avro.putVarint(out, body.length.toLong)
+    Bytes.putZigzag(out, datums.length.toLong)
+    Bytes.putZigzag(out, body.length.toLong)
     out.write(body); out.write(sync)
     out.toByteArray
   }
@@ -198,14 +198,14 @@ class AvroGenericSpec extends AnyFunSuite {
     def handContainer(cnt: Long, nBody: Int): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       out.write("Obj".getBytes("US-ASCII")); out.write(1)
-      Avro.putVarint(out, 2L)
+      Bytes.putZigzag(out, 2L)
       out.write(str("avro.schema")); out.write(str(schema))
       out.write(str("avro.codec")); out.write(str("null"))
-      Avro.putVarint(out, 0L)
+      Bytes.putZigzag(out, 0L)
       val sync = Array.tabulate[Byte](16)(i => (i * 31).toByte)
       out.write(sync)
-      Avro.putVarint(out, cnt)
-      Avro.putVarint(out, nBody.toLong)
+      Bytes.putZigzag(out, cnt)
+      Bytes.putZigzag(out, nBody.toLong)
       out.write(sync)
       out.toByteArray
     }

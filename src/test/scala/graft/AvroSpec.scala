@@ -1,37 +1,17 @@
 package graft
 
-import graft.sources.Avro
+import graft.sources.{Avro, Bytes}
 
 /** Avro object-container walk. No Avro library ships in the sandbox
   * (JDK or CPython), so the independence pins are (a) the spec's own
-  * PUBLISHED zigzag-varint examples, asserted byte-for-byte, (b) the
+  * PUBLISHED zigzag-varint examples, asserted byte-for-byte (in
+  * BytesSpec, which owns the shared cursor), (b) the
   * q230 oracle, which re-derives the whole container — varints, block
   * framing, metadata map — in DuckDB SQL from the other end, and (c)
   * damage-shape totality (the gzip-member posture: keep what precedes
   * the damage, flag it, never resync silently).
   */
 class AvroSpec extends SparkSpec {
-
-  test("zigzag varints match the Avro spec's published examples, both " +
-    "directions") {
-    // spec table: 0->00, -1->01, 1->02, -2->03, 2->04, -64->7f, 63->7e,
-    // 64->80 01, -65->81 01
-    val cases = Seq(
-      0L -> Seq(0x00), -1L -> Seq(0x01), 1L -> Seq(0x02),
-      -2L -> Seq(0x03), 2L -> Seq(0x04), -64L -> Seq(0x7f),
-      63L -> Seq(0x7e), 64L -> Seq(0x80, 0x01), -65L -> Seq(0x81, 0x01),
-      8192L -> Seq(0x80, 0x80, 0x01))
-    cases.foreach { case (n, bytes) =>
-      val out = new java.io.ByteArrayOutputStream()
-      Avro.putVarint(out, n)
-      assert(out.toByteArray.map(_ & 0xff).toSeq == bytes, s"encode $n")
-      val dec = Avro.varint(out.toByteArray, 0)
-      assert(dec != null && dec._1 == n && dec._2 == bytes.length,
-        s"decode $n")
-    }
-    // truncated varint (continuation bit set at EOF) -> null, not a spin
-    assert(Avro.varint(Array(0x80.toByte), 0) == null)
-  }
 
   test("round-trip through both codecs: block coordinates, record " +
     "order, sync verification") {
@@ -91,14 +71,14 @@ class AvroSpec extends SparkSpec {
     val pretty = Avro.SchemaJson.replace(":", ": ")
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array[Byte]('O', 'b', 'j', 1))
-    Avro.putVarint(out, 2L)
+    Bytes.putZigzag(out, 2L)
     def str(x: String): Unit = {
-      Avro.putVarint(out, x.getBytes("UTF-8").length.toLong)
+      Bytes.putZigzag(out, x.getBytes("UTF-8").length.toLong)
       out.write(x.getBytes("UTF-8"))
     }
     str("avro.schema"); str(pretty)
     str("avro.codec"); str("null")
-    Avro.putVarint(out, 0L)
+    Bytes.putZigzag(out, 0L)
     out.write(sync)
     // one single-record block, taken from the real writer's bytes
     val one = Avro.write(Seq((5L, "x")), sync, "null", 1)
@@ -129,8 +109,8 @@ class AvroSpec extends SparkSpec {
     assert(bomb.length < (1 << 20), "tiny input is the point of the attack")
     val out = new java.io.ByteArrayOutputStream()
     out.write(header)
-    Avro.putVarint(out, 1L) // declares one record
-    Avro.putVarint(out, bomb.length.toLong)
+    Bytes.putZigzag(out, 1L) // declares one record
+    Bytes.putZigzag(out, bomb.length.toLong)
     out.write(bomb)
     out.write(sync)
     // the cap fires inside the inflate loop -> damage path -> walk stops
@@ -152,26 +132,26 @@ class AvroSpec extends SparkSpec {
     // layout actual writers emit) must decode identically
     val body = new java.io.ByteArrayOutputStream()
     recs.foreach { case (id, p) =>
-      Avro.putVarint(body, id)
+      Bytes.putZigzag(body, id)
       val pb = p.getBytes("UTF-8")
-      Avro.putVarint(body, pb.length.toLong); body.write(pb)
+      Bytes.putZigzag(body, pb.length.toLong); body.write(pb)
     }
     val raw = body.toByteArray
     val comp = org.xerial.snappy.Snappy.compress(raw)
     val crc = new java.util.zip.CRC32(); crc.update(raw)
     val out = new java.io.ByteArrayOutputStream()
     out.write("Obj".getBytes("US-ASCII")); out.write(1)
-    Avro.putVarint(out, 2L)
+    Bytes.putZigzag(out, 2L)
     def putStr(s: String): Unit = {
       val x = s.getBytes("UTF-8")
-      Avro.putVarint(out, x.length.toLong); out.write(x)
+      Bytes.putZigzag(out, x.length.toLong); out.write(x)
     }
     putStr("avro.schema"); putStr(Avro.SchemaJson)
     putStr("avro.codec"); putStr("snappy")
-    Avro.putVarint(out, 0L)
+    Bytes.putZigzag(out, 0L)
     out.write(sync)
-    Avro.putVarint(out, recs.length.toLong)
-    Avro.putVarint(out, comp.length.toLong + 4)
+    Bytes.putZigzag(out, recs.length.toLong)
+    Bytes.putZigzag(out, comp.length.toLong + 4)
     out.write(comp)
     val v = crc.getValue
     out.write((v >> 24).toInt & 0xff); out.write((v >> 16).toInt & 0xff)
@@ -215,25 +195,25 @@ class AvroSpec extends SparkSpec {
     // identically through the engine's own full decoder
     val body = new java.io.ByteArrayOutputStream()
     recs.foreach { case (id, p) =>
-      Avro.putVarint(body, id)
+      Bytes.putZigzag(body, id)
       val pb = p.getBytes("UTF-8")
-      Avro.putVarint(body, pb.length.toLong); body.write(pb)
+      Bytes.putZigzag(body, pb.length.toLong); body.write(pb)
     }
     val raw = body.toByteArray
     val comp = com.github.luben.zstd.Zstd.compress(raw, 9)
     val out = new java.io.ByteArrayOutputStream()
     out.write("Obj".getBytes("US-ASCII")); out.write(1)
-    Avro.putVarint(out, 2L)
+    Bytes.putZigzag(out, 2L)
     def putStr(s: String): Unit = {
       val x = s.getBytes("UTF-8")
-      Avro.putVarint(out, x.length.toLong); out.write(x)
+      Bytes.putZigzag(out, x.length.toLong); out.write(x)
     }
     putStr("avro.schema"); putStr(Avro.SchemaJson)
     putStr("avro.codec"); putStr("zstandard")
-    Avro.putVarint(out, 0L)
+    Bytes.putZigzag(out, 0L)
     out.write(sync)
-    Avro.putVarint(out, recs.length.toLong)
-    Avro.putVarint(out, comp.length.toLong)
+    Bytes.putZigzag(out, recs.length.toLong)
+    Bytes.putZigzag(out, comp.length.toLong)
     out.write(comp)
     out.write(sync)
     val real = out.toByteArray

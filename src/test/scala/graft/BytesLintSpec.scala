@@ -1,0 +1,59 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Source-level gate for the format plane's byte primitives: every
+  * reader and writer in `sources/` reads and writes through
+  * [[graft.sources.Bytes]], so a file that grows its own varint,
+  * zigzag or fixed-width helper, or its own stackless damage
+  * exception, fails here at the file that regressed.
+  */
+class BytesLintSpec extends AnyFunSuite {
+
+  private val dir = java.nio.file.Paths.get("src/main/scala/graft/sources")
+
+  private val helperDef = java.util.regex.Pattern.compile(
+    "\\bdef\\s+(uvarint|varint|uleb|zigzag|zig|zz|le16|le32|le64|be16|" +
+      "be32|be64|u16|u32|u64|fixed64)\\b")
+  private val damageClass = java.util.regex.Pattern.compile(
+    "extends\\s+RuntimeException\\s*\\(\\s*null\\s*,\\s*null\\s*,\\s*" +
+      "false\\s*,\\s*false\\s*\\)")
+
+  /** Each source file except Bytes.scala, comments stripped the way
+    * RoundLintSpec strips them.
+    */
+  private def sources: Seq[(String, String)] = {
+    val s = java.nio.file.Files.list(dir)
+    val files =
+      try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala"))
+      finally s.close()
+    assert(files.nonEmpty, s"no sources under $dir")
+    files.filterNot(_.getFileName.toString == "Bytes.scala").map { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val code = src.replaceAll("(?s)/\\*.*?\\*/", "")
+        .linesIterator.map(l =>
+          l.indexOf("//") match { case -1 => l; case i => l.take(i) })
+        .mkString("\n")
+      (f.getFileName.toString, code)
+    }
+  }
+
+  test("no varint, zigzag or fixed-width helper outside Bytes.scala") {
+    val offenders = sources.flatMap { case (name, code) =>
+      val m = helperDef.matcher(code)
+      Iterator.continually(if (m.find()) Some(m.group(1)) else None)
+        .takeWhile(_.isDefined).flatten.map(h => s"$name: def $h")
+    }
+    assert(offenders.isEmpty,
+      s"local byte helpers (use graft.sources.Bytes): ${offenders.mkString(", ")}")
+  }
+
+  test("no stackless damage exception outside Bytes.scala") {
+    val offenders = sources.collect {
+      case (name, code) if damageClass.matcher(code).find() => name
+    }
+    assert(offenders.isEmpty,
+      s"local damage classes (use Bytes.Damage): ${offenders.mkString(", ")}")
+  }
+}

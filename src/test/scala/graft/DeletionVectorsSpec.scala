@@ -79,6 +79,20 @@ class DeletionVectorsSpec extends AnyFunSuite {
       assert(DeletionVectors.bitmap(
         java.util.Arrays.copyOf(good, cut)).isEmpty, s"cut $cut")
     assert(DeletionVectors.bitmap(good :+ 0.toByte).isEmpty)
+    // every prefix of a committed DV file: its first vector (version
+    // byte, BE32 size, bitmap, BE32 CRC) decodes only once whole
+    val (dvPath, dv) = CutSweep.fixtureFiles(
+      "fixtures/delta_dv_files.parquet")
+      .filter(_._1.endsWith(".bin")).maxBy(_._2.length)
+    val size = java.nio.ByteBuffer.wrap(dv, 1, 4).getInt
+    def first(f: Array[Byte]) =
+      DeletionVectors.fileSlice(f, 1, size).flatMap(DeletionVectors.bitmap)
+    val whole = first(dv).getOrElse(fail(s"$dvPath must decode"))
+    for (cut <- CutSweep.cuts(dv.length)) {
+      val got = first(java.util.Arrays.copyOf(dv, cut))
+      if (cut < 1 + 4 + size + 4) assert(got.isEmpty, s"cut $cut")
+      else assert(got.exists(_.toSeq == whole.toSeq), s"cut $cut")
+    }
     for (i <- good.indices by 5) {
       val bad = good.clone(); bad(i) = (bad(i) ^ 0x5a).toByte
       DeletionVectors.bitmap(bad) // must not throw

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{AvroGeneric, HudiLog}
+import graft.sources.{AvroGeneric, Bytes, HudiLog}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the Hudi log-file block framing (hudi.apache.org/tech-specs
@@ -13,17 +13,11 @@ class HudiLogSpec extends AnyFunSuite {
   private val SchemaJson =
     """{"type":"record","name":"rec","fields":[{"name":"rec_id","type":"long"},{"name":"val","type":"long"}]}"""
 
-  private def zz(v: Long): Array[Byte] = {
-    var z = (v << 1) ^ (v >> 63)
+  private def rec(id: Long, v: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    while ((z & ~0x7fL) != 0) {
-      out.write(((z & 0x7f) | 0x80).toInt); z >>>= 7
-    }
-    out.write(z.toInt)
+    Bytes.putZigzag(out, id); Bytes.putZigzag(out, v)
     out.toByteArray
   }
-
-  private def rec(id: Long, v: Long): Array[Byte] = zz(id) ++ zz(v)
 
   test("write -> parse round trip: data + delete blocks, exact " +
     "records, instants, and counts") {
@@ -71,6 +65,17 @@ class HudiLogSpec extends AnyFunSuite {
     for (cut <- 0 until file.length)
       assert(!HudiLog.parse(java.util.Arrays.copyOf(file, cut))
         .exists(_.length == 2), s"cut $cut")
+    // every prefix of a committed log (hudi_files holds no log file;
+    // the MOR fixture does): a cut yields None or whole leading blocks
+    val (logPath, log) = CutSweep.fixtureFiles(
+      "fixtures/hudi_mor_files.parquet")
+      .filter(_._1.contains(".log.")).maxBy(_._2.length)
+    val full = HudiLog.parse(log).getOrElse(fail(s"$logPath must parse"))
+    for (cut <- CutSweep.cuts(log.length))
+      HudiLog.parse(java.util.Arrays.copyOf(log, cut)).foreach { bs =>
+        assert(bs.length < full.length && bs == full.take(bs.length),
+          s"cut $cut")
+      }
     // trailing garbage after a valid block fails the whole file
     assert(HudiLog.parse(file ++ Array[Byte](1, 2, 3)).isEmpty)
     // bad magic

@@ -318,6 +318,11 @@ class OrcSpec extends SparkSpec {
     // footer region) and a few gross ones
     for (cut <- (b.length - 300) until b.length)
       Orc.parseTail(java.util.Arrays.copyOf(b, cut)) // must not throw
+    // every prefix of the whole file, strided: no strict prefix holds
+    // a tail
+    for (cut <- CutSweep.cuts(b.length))
+      assert(Orc.parseTail(java.util.Arrays.copyOf(b, cut)).isEmpty,
+        s"cut $cut")
     assert(Orc.parseTail(java.util.Arrays.copyOf(b, 2)).isEmpty)
     assert(Orc.parseTail(Array.emptyByteArray).isEmpty)
     // every single-byte flip in the tail region: None or well-formed

@@ -355,6 +355,9 @@ class ParquetSpec extends SparkSpec {
     assert(Parquet.parseFooter(withLen(realLen + 1)).isEmpty)
     // truncated mid-footer
     assert(Parquet.parseFooter(bytes.take(bytes.length - 20)).isEmpty)
+    // every prefix of the whole file, strided
+    for (cut <- CutSweep.cuts(bytes.length))
+      assert(Parquet.parseFooter(bytes.take(cut)).isEmpty, s"cut $cut")
     // forged chunk offsets: decode must fail closed, not misread
     val fm = Parquet.parseFooter(bytes).get
     val c = fm.rowGroups.head.cols.head

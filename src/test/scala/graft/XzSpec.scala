@@ -134,6 +134,13 @@ class XzSpec extends SparkSpec {
       Xz.parse(t).foreach(_.blocks.foreach(bl =>
         Lzma2.decode(t, bl.dataStart, bl.unpackedLen)))
     }
+    // every prefix of a second committed stream: a strict prefix of
+    // one .xz stream never parses
+    val other = fixture.find(_._1 == "crc64").get._2
+    assert(Xz.parse(other).isDefined)
+    for (cut <- CutSweep.cuts(other.length))
+      assert(Xz.parse(java.util.Arrays.copyOf(other, cut)).isEmpty,
+        s"cut $cut")
   }
 
   // ---- the ENCODER (LzmaEncode, q337) ------------------------------------
