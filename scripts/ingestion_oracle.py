@@ -29,8 +29,13 @@ def load_sheet(z, sheet_name):
     rels = dict(re.findall(r'<Relationship Id="([^"]*)"[^>]*Target="([^"]*)"',
                            z.read("xl/_rels/workbook.xml.rels").decode()))
     part = "xl/" + rels[rid]
+    # a workbook that writes only inline strings has no shared-string part
+    try:
+        sst_xml = z.read("xl/sharedStrings.xml").decode()
+    except KeyError:
+        sst_xml = ""
     sst = [''.join(re.findall(r'<t[^>]*>(.*?)</t>', si, re.S))
-           for si in re.findall(r'<si>(.*?)</si>', z.read("xl/sharedStrings.xml").decode(), re.S)]
+           for si in re.findall(r'<si>(.*?)</si>', sst_xml, re.S)]
     sst = [unescape(s) for s in sst]
     styles = z.read("xl/styles.xml").decode()
     cellxfs = re.search(r'<cellXfs.*?</cellXfs>', styles, re.S).group(0)

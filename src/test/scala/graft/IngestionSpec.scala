@@ -27,24 +27,7 @@ class IngestionSpec extends SparkSpec {
   private def expectTable(name: String): DataFrame =
     spark.read.json(s"$oracleDir/$name.jsonl")
 
-  /** Symmetric diff on the shared columns; doubles rounded to 6 dp. */
-  private def assertMatches(actual: DataFrame, expected: DataFrame, name: String): Unit = {
-    val cols = expected.columns.toSeq.sorted
-    def norm(df: DataFrame) = df.select(cols.map { c =>
-      val f = df.schema(c).dataType
-      f match {
-        case org.apache.spark.sql.types.DoubleType => round(col(c), 6).as(c)
-        case _ => col(c).cast("string").as(c)
-      }
-    }: _*)
-    val a = norm(actual.select(cols.map(col): _*))
-    val e = norm(expected.select(cols.map(col): _*))
-    val missing = e.exceptAll(a).collect()
-    val extra = a.exceptAll(e).collect()
-    assert(missing.isEmpty && extra.isEmpty,
-      s"$name: ${missing.length} missing, ${extra.length} extra\n" +
-        s"missing: ${missing.take(5).mkString("\n")}\nextra: ${extra.take(5).mkString("\n")}")
-  }
+  import IngestionSpec.assertMatches
 
   test("store dim matches the oracle") {
     assertMatches(wh.store, expectTable("store"), "store")
@@ -85,16 +68,7 @@ class IngestionSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ingestion_corpus").toString
     val rc = s"python3 scripts/ingestion_oracle.py $corpus $dir".!
     assert(rc == 0, "oracle script failed on the corpus")
-    def expect(name: String) = spark.read.json(s"$dir/$name.jsonl")
-    assertMatches(whC.store, expect("store"), "store")
-    assertMatches(whC.provider, expect("provider"), "provider")
-    assertMatches(whC.product.drop("description"), expect("product"), "product")
-    assertMatches(whC.purchase.drop("tax", "ieps", "id_payment_type"),
-      expect("purchase").drop("id_payment_type"), "purchase")
-    assertMatches(whC.operation, expect("operation").drop("purchase_date"),
-      "operation")
-    assertMatches(whC.price.drop("start_date", "end_date"),
-      expect("price").drop("start_date"), "price")
+    IngestionSpec.assertOracle(whC, dir)
   }
 
   test("re-ingesting the same files is a no-op for facts (J5 idempotency)") {
@@ -124,5 +98,44 @@ class IngestionSpec extends SparkSpec {
     assert(r2.getDouble(1) == 20.0 && r2.getDate(3).toString == "2026-01-01")
     val r3 = merged(2) // inserted, open-ended
     assert(r3.getDouble(1) == 30.0 && r3.isNullAt(4))
+  }
+}
+
+object IngestionSpec {
+
+  /** Symmetric diff on the shared columns; doubles rounded to 6 dp. */
+  def assertMatches(actual: DataFrame, expected: DataFrame, name: String): Unit = {
+    val cols = expected.columns.toSeq.sorted
+    def norm(df: DataFrame) = df.select(cols.map { c =>
+      val f = df.schema(c).dataType
+      f match {
+        case org.apache.spark.sql.types.DoubleType => round(col(c), 6).as(c)
+        case _ => col(c).cast("string").as(c)
+      }
+    }: _*)
+    val a = norm(actual.select(cols.map(col): _*))
+    val e = norm(expected.select(cols.map(col): _*))
+    val missing = e.exceptAll(a).collect()
+    val extra = a.exceptAll(e).collect()
+    org.scalatest.Assertions.assert(missing.isEmpty && extra.isEmpty,
+      s"$name: ${missing.length} missing, ${extra.length} extra\n" +
+        s"missing: ${missing.take(5).mkString("\n")}\nextra: ${extra.take(5).mkString("\n")}")
+  }
+
+  /** Every oracle table against `wh`: the columns the oracle does not
+    * model (description, tax, ieps, payment type, price dates) dropped.
+    */
+  def assertOracle(wh: Warehouse, oracleDir: String): Unit = {
+    val spark = wh.store.sparkSession
+    def expect(name: String) = spark.read.json(s"$oracleDir/$name.jsonl")
+    assertMatches(wh.store, expect("store"), "store")
+    assertMatches(wh.provider, expect("provider"), "provider")
+    assertMatches(wh.product.drop("description"), expect("product"), "product")
+    assertMatches(wh.purchase.drop("tax", "ieps", "id_payment_type"),
+      expect("purchase").drop("id_payment_type"), "purchase")
+    assertMatches(wh.operation, expect("operation").drop("purchase_date"),
+      "operation")
+    assertMatches(wh.price.drop("start_date", "end_date"),
+      expect("price").drop("start_date"), "price")
   }
 }
