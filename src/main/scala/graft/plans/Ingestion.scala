@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.{functions => gf}
+import graft.Checkpoints.TrackedCheckpointOps
 import graft.operators.Relational
 import graft.sources.XlsxSource
 import org.apache.spark.sql.expressions.Window
@@ -51,12 +52,22 @@ case class Warehouse(
   *    deterministic surrogate ids
   *  - insert_price SCD upsert (`:260-280`) → [[scdMerge]]
   *
-  * Surrogate ids are `max(existing) + row_number` over (file, rownum) —
-  * deterministic, matching the reference's sequence order. The global
-  * window is a single-partition sort of the BATCH (not the warehouse);
-  * batches are file-bounded so this stays small. At 100 TB-scale backfills
-  * switch the id window to per-file partitions + per-file offsets
-  * (count-prefix-sum) — same determinism, no global sort.
+  * The batch's plan runs once. The scan-to-store-resolution frame
+  * (price row joined on) is pinned behind one tracked checkpoint; the
+  * new stores, providers, products and surviving facts are derived from
+  * it and the existing tables alone. Providers are keyed by (store_name,
+  * provider_url) — store_name is 1:1 with id_store — so they do not wait
+  * for new store ids.
+  *
+  * Surrogate ids are `max(existing) + rank` over (file, rownum) —
+  * deterministic, matching the reference's sequence order. The four
+  * new-key sets are unioned under a `__kind` stratum and ranked in ONE
+  * [[Relational.withStratumRankN]] pass (range-partitioned: no
+  * single-partition window, however large the batch); each kind's
+  * offset is its max(existing id), collected from one grouped aggregate
+  * over the four tables. Ids are then resolved against existing ∪ new
+  * dims and the result is pinned once: every table the batch writes
+  * reads that frame plus its own existing table, never the scan.
   */
 object Ingestion {
 
@@ -133,50 +144,49 @@ object Ingestion {
     val rows = enriched.withColumn("str_link",
       when(truthy(liga), liga).otherwise(lag(liga, 1).over(wFile)))
 
-    // ---- store resolution (C7/C9, `database_utils.py:57-83`) ----
-    val withStore = rows
+    // ---- J6 price row (`database_utils.py:260-280`): the file's first
+    // Precios row per product; a left join with a presence flag, so the
+    // batch frame carries it and the price merge needs no second scan
+    val priceRow = Relational.firstPerKey(
+      precios.select(col("_file"), col("_rownum"), qcol("Descripción"),
+        qcol("P. Venta"), qcol("P. Oferta")),
+      keys = Seq(col("_file"), qcol("Descripción")), orderBy = Seq(col("_rownum")))
+      .select(col("_file"), qcol("Descripción"), qcol("P. Venta"), qcol("P. Oferta"),
+        lit(true).as("__priced"))
+
+    // ---- store resolution (C7/C9, `database_utils.py:57-83`); F4:
+    // unresolvable store → row contributes nothing (`:60-65`). The batch
+    // barrier: everything below reads this frame, never the scan again.
+    val batch = rows
       .withColumn("store_name", gf.store_name(col("str_link")))
       .withColumn("store_url", gf.domain_store(col("str_link")))
       .withColumn("provider_url", gf.provider_url(col("str_link")))
-    // F4: unresolvable store → row contributes nothing (`:60-65`)
-    val resolvable = withStore
       .filter(col("store_name").isNotNull && col("store_name") =!= "none")
+      .join(priceRow, Seq("_file", "Descripción"), "left")
+      .select(batchCols.map(qcol): _*)
+      .trackedCheckpoint()
+    val first = Seq(col("_file"), col("_rownum"))
 
     // ---- store dim upsert (J4/M1): first occurrence wins store_url ----
-    val newStores = Relational.firstPerKey(
-      resolvable.select(col("store_name"), col("store_url"), col("_file"), col("_rownum")),
-      keys = Seq(col("store_name")), orderBy = Seq(col("_file"), col("_rownum")))
+    val newStores = Relational.firstPerKey(batch, Seq(col("store_name")), first)
       .join(existing.store.select("store_name"), Seq("store_name"), "left_anti")
-      .withColumn("status", lit(true))
-    val store = existing.store.unionByName(
-      assignIds(newStores, "id_store", maxId(existing.store, "id_store"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_store", "store_name", "store_url", "status"))
 
-    // ---- provider dim upsert (J4/M2): key (id_store, provider_url);
+    // ---- provider dim upsert (J4/M2): key (store, provider_url), spelled
+    // with store_name (1:1 with id_store) so it needs no new store ids;
     // is_active would come from the quarantined URL-liveness stage (C10)
-    val withIds = resolvable.join(broadcast(store.select("id_store", "store_name")),
-      Seq("store_name"))
-    val newProviders = Relational.firstPerKey(
-      withIds.select(col("id_store"), col("provider_url"), col("_file"), col("_rownum")),
-      keys = Seq(col("id_store"), col("provider_url")),
-      orderBy = Seq(col("_file"), col("_rownum")))
-      .join(existing.provider.select("id_store", "provider_url"),
-        Seq("id_store", "provider_url"), "left_anti")
-      .withColumn("is_active", lit(true))
-    val provider = existing.provider.unionByName(
-      assignIds(newProviders, "id_provider", maxId(existing.provider, "id_provider"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_provider", "id_store", "provider_url", "is_active"))
-
-    val withProvider = withIds.join(
-      broadcast(provider.select("id_provider", "id_store", "provider_url")),
-      Seq("id_store", "provider_url"))
+    val existingProviders = existing.provider
+      .join(existing.store.select("id_store", "store_name"), Seq("id_store"))
+    val newProviders = Relational.firstPerKey(batch,
+        Seq(col("store_name"), col("provider_url")), first)
+      .join(existingProviders.select("store_name", "provider_url"),
+        Seq("store_name", "provider_url"), "left_anti")
 
     // ---- F2/F3 fact filters (`import_files_to_postgre.py:162-172`);
     // NB dims above intentionally saw canceled rows too — the reference
-    // creates store/provider BEFORE these skips
-    val facts0 = withProvider
+    // creates store/provider BEFORE these skips. A null provider_url
+    // never resolves to a provider id, so such rows carry no fact.
+    val facts0 = batch
+      .filter(col("provider_url").isNotNull)
       .filter(!(qcol("Fch Entrga").isNotNull && qcol("Fch Entrga").contains("CANCELED")))
       .filter(qcol("Descripción").isNotNull && trim(qcol("Descripción")) =!= "")
 
@@ -195,36 +205,69 @@ object Ingestion {
         col("quantity").as("quantity_k"),
         col("unit_price").as("unit_price_k"),
         col("purchase_date").as("purchase_date_k"))
-    val facts = Relational.firstPerKey(keyed, dedupKey.map(col),
-        Seq(col("_file"), col("_rownum")))
+    val facts = Relational.firstPerKey(keyed, dedupKey.map(col), first)
       .join(existingCombos, dedupKey, "left_anti")
 
-    // ---- product dim upsert (M2): conditional brand/category columns →
-    // one nullable schema (`database_utils.py:149-171`)
-    val newProducts = Relational.firstPerKey(
-      facts.select(qcol("Descripción").as("product_name"),
-        col("Picture_URL").as("image_url"),
-        when(truthy(col("Marca")) && truthy(col("Categoria")), col("Marca")).as("brand"),
-        when(truthy(col("Marca")) && truthy(col("Categoria")), col("Categoria")).as("category"),
-        col("_file"), col("_rownum")),
-      keys = Seq(col("product_name")), orderBy = Seq(col("_file"), col("_rownum")))
-      .join(existing.product.select("product_name"), Seq("product_name"), "left_anti")
-      .withColumn("description", lit("")) // create_product is called with descr=""
-    val product = existing.product.unionByName(
-      assignIds(newProducts, "id_product", maxId(existing.product, "id_product"),
-        Seq(col("_file"), col("_rownum")))
-        .select("id_product", "product_name", "description", "image_url", "brand", "category"))
+    // ---- product dim upsert (M2): first surviving fact per name
+    val newProducts = Relational.firstPerKey(facts, Seq(qcol("Descripción")), first)
+      .join(existing.product.select(col("product_name").as("Descripción")),
+        Seq("Descripción"), "left_anti")
 
-    val withProduct = facts.join(
-      broadcast(product.select(col("id_product"), col("product_name").as("Descripción"))),
-      Seq("Descripción"))
+    // ---- surrogate ids: the four new-key sets ranked in ONE pass, each
+    // kind offset by its max(existing id) from one grouped aggregate
+    val newKeys = Seq("store" -> newStores, "provider" -> newProviders,
+        "product" -> newProducts, "purchase" -> facts)
+      .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
+      .reduce(_ unionByName _)
+    val ranked = Relational.withStratumRankN(newKeys, Seq("__kind"), first, "__rank", "__n")
+    val maxIds = Seq(("store", existing.store, "id_store"),
+        ("provider", existing.provider, "id_provider"),
+        ("product", existing.product, "id_product"),
+        ("purchase", existing.purchase, "id_purchase"))
+      .map { case (k, t, id) => t.select(lit(k).as("__kind"), col(id).cast(LongType).as("__id")) }
+      .reduce(_ unionByName _)
+      .groupBy("__kind").agg(coalesce(max(col("__id")), lit(0L)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ided = ranked.withColumn("__id", col("__rank") +
+      maxIds.foldLeft(lit(0L)) { case (o, (k, m)) => when(col("__kind") === k, m).otherwise(o) })
+    def fresh(kind: String): DataFrame = ofKind(ided, kind)
+
+    // ---- id resolution against existing ∪ new dims, then the second and
+    // last barrier: every table below reads `resolved` + its own table
+    val storeIds = existing.store.select("id_store", "store_name")
+      .unionByName(fresh("store").select(col("__id").as("id_store"), col("store_name")))
+    val providerIds = existingProviders.select("id_provider", "store_name", "provider_url")
+      .unionByName(fresh("provider").select(col("__id").as("id_provider"),
+        col("store_name"), col("provider_url")))
+    val productIds = existing.product.select(col("id_product"), col("product_name").as("Descripción"))
+      .unionByName(fresh("product").select(col("__id").as("id_product"), qcol("Descripción")))
+    val resolved = ided.drop("__rank", "__n")
+      .join(broadcast(storeIds), Seq("store_name"), "left")
+      .join(broadcast(providerIds), Seq("store_name", "provider_url"), "left")
+      .join(broadcast(productIds), Seq("Descripción"), "left")
+      .trackedCheckpoint()
+    def delta(kind: String): DataFrame = ofKind(resolved, kind)
+
+    val store = existing.store.unionByName(delta("store")
+      .select(col("__id").as("id_store"), col("store_name"), col("store_url"),
+        lit(true).as("status")))
+    val provider = existing.provider.unionByName(delta("provider")
+      .select(col("__id").as("id_provider"), col("id_store"), col("provider_url"),
+        lit(true).as("is_active")))
+    // conditional brand/category columns → one nullable schema
+    // (`database_utils.py:149-171`); create_product is called with descr=""
+    val branded = truthy(col("Marca")) && truthy(col("Categoria"))
+    val product = existing.product.unionByName(delta("product")
+      .select(col("__id").as("id_product"), qcol("Descripción").as("product_name"),
+        lit("").as("description"), col("Picture_URL").as("image_url"),
+        when(branded, col("Marca")).as("brand"),
+        when(branded, col("Categoria")).as("category")))
 
     // ---- purchase fact (M3, `database_utils.py:175-204`) ----
     val idPayment = existing.paymentType
       .filter(col("payment_type") === "Tarjeta de Crédito")
       .select(col("id_payment_type"))
-    val purchaseRows = assignIds(withProduct, "id_purchase",
-      maxId(existing.purchase, "id_purchase"), Seq(col("_file"), col("_rownum")))
+    val purchaseRows = delta("purchase").withColumnRenamed("__id", "id_purchase")
     val purchase = existing.purchase.unionByName(
       purchaseRows
         .crossJoin(broadcast(idPayment)) // constant dim key J3 (`:183`)
@@ -252,13 +295,7 @@ object Ingestion {
 
     // ---- price SCD merge (M4, `database_utils.py:260-280`): J6 semi
     // (price only when the product appears in Precios) + C12 pricing
-    val priceRow = Relational.firstPerKey(
-      precios.select(col("_file"), col("_rownum"), qcol("Descripción"),
-        qcol("P. Venta"), qcol("P. Oferta")),
-      keys = Seq(col("_file"), qcol("Descripción")), orderBy = Seq(col("_rownum")))
-    val priced = purchaseRows
-      .join(priceRow.select(col("_file"), qcol("Descripción"),
-        qcol("P. Venta"), qcol("P. Oferta")), Seq("_file", "Descripción"))
+    val priced = purchaseRows.filter(col("__priced"))
       .withColumn("price", gf.derived_price(qcol("P. Venta"), qcol("Costo Final")))
       .withColumn("offer_price", gf.derived_offer(qcol("P. Oferta"), col("price")))
     // last write wins: the reference updates price per surviving row in
@@ -310,14 +347,15 @@ object Ingestion {
       graft.operators.Conform.Contract(
         required = Seq("Descripción"), numeric = numeric, dates = dates))
 
-  private def maxId(df: DataFrame, idCol: String): Long =
-    df.agg(coalesce(max(col(idCol)).cast(LongType), lit(0L))).head().getLong(0)
+  private def ofKind(df: DataFrame, kind: String): DataFrame =
+    df.filter(col("__kind") === kind)
 
-  // Surrogate-id assignment via the range-partitioned global rank — the
-  // one-task Window.orderBy spelling would single-thread an initial bulk
-  // load of a large dim (see Relational.dimUpsert's note).
-  private def assignIds(df: DataFrame, idCol: String, offset: Long,
-                        orderBy: Seq[Column]): DataFrame =
-    graft.operators.Relational.withGlobalRank(df, orderBy, "__rank")
-      .withColumn(idCol, col("__rank") + offset).drop("__rank")
+  /** The batch frame's columns: every one a dimension payload, an id
+    * key or a fact column reads, and nothing else.
+    */
+  private val batchCols = Seq("_file", "_rownum", "store_name", "store_url",
+    "provider_url", "Descripción", "Picture_URL", "Marca", "Categoria",
+    "Cant", "% Desc", "C. Unit US", "C. Unit", "Total Cmpr", "Envio",
+    "Fch Cmpr", "Fch Entrga", "Dólar", "Desct", "Pzs", "Costo Final", "Liga",
+    "P. Venta", "P. Oferta", "__priced")
 }

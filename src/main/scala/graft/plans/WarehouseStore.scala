@@ -16,12 +16,16 @@ object WarehouseStore {
   private val tables = Seq("payment_type", "store", "provider", "product",
     "purchase", "operation", "price")
 
+  /** The warehouse at `dir`; a table not saved yet is its empty seed.
+    * Each table is read with its seed's schema (the schema every save
+    * writes), so a load runs no schema-inference job.
+    */
   def load(spark: SparkSession, dir: String): Warehouse = {
     val empty = Ingestion.empty(spark)
     def tbl(name: String, fallback: DataFrame): DataFrame = {
       val p = new Path(s"$dir/$name")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(p.toString) else fallback
+      if (fs.exists(p)) spark.read.schema(fallback.schema).parquet(p.toString) else fallback
     }
     Warehouse(
       paymentType = tbl("payment_type", empty.paymentType),

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.plans.{Ingestion, Warehouse, WarehouseStore}
 import graft.streaming.IngestStream
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import scala.sys.process._
 
 /** Golden ingestion over the committed workbooks in `fixtures/ingestion/`
@@ -63,6 +64,17 @@ class IngestionGoldenSpec extends SparkSpec {
     IngestionSpec.assertOracle(WarehouseStore.load(spark, s"$streamed/wh"), oracleDir)
   }
 
+  test("a saved warehouse loads with exactly the seed schemas, which are the saved ones") {
+    def fields(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    def tables(wh: Warehouse) = Seq(wh.paymentType, wh.store, wh.provider,
+      wh.product, wh.purchase, wh.operation, wh.price)
+    val names = Seq("payment_type", "store", "provider", "product", "purchase",
+      "operation", "price")
+    val seeds = tables(Ingestion.empty(spark)).map(fields)
+    assert(tables(WarehouseStore.load(spark, s"$streamed/wh")).map(fields) == seeds)
+    assert(names.map(n => fields(spark.read.parquet(s"$streamed/wh/$n"))) == seeds)
+  }
+
   test("re-dropping a committed workbook leaves every table's rows unchanged") {
     val before = snapshot(WarehouseStore.load(spark, s"$streamed/wh"))
     copyInto(s"$streamed/in", files(1), "replay_" + files(1))
@@ -94,7 +106,10 @@ class IngestionGoldenSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     Checkpoints.release()
     info(s"load + ingestWorkbooks + save: ${jobs.get} Spark jobs")
-    // 94 jobs at local[4] with 4 shuffle partitions
-    assert(jobs.get <= 100, s"${jobs.get} Spark jobs")
+    // At local[4] with 4 shuffle partitions this runs 46 jobs (load 0,
+    // ingest 34, save 12). The plan that ranked each id kind behind its
+    // own checkpoint, re-running the batch from the xlsx scan each time,
+    // ran 94, 7 of them schema inference in the load.
+    assert(jobs.get <= 50, s"${jobs.get} Spark jobs")
   }
 }
