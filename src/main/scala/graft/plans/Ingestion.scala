@@ -230,7 +230,7 @@ object Ingestion {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ided = ranked.withColumn("__id", col("__rank") +
       maxIds.foldLeft(lit(0L)) { case (o, (k, m)) => when(col("__kind") === k, m).otherwise(o) })
-    def fresh(kind: String): DataFrame = ofKind(ided, kind)
+    def fresh(kind: String): DataFrame = ided.filter(col("__kind") === kind)
 
     // ---- id resolution against existing ∪ new dims, then the second and
     // last barrier: every table below reads `resolved` + its own table
@@ -246,7 +246,7 @@ object Ingestion {
       .join(broadcast(providerIds), Seq("store_name", "provider_url"), "left")
       .join(broadcast(productIds), Seq("Descripción"), "left")
       .trackedCheckpoint()
-    def delta(kind: String): DataFrame = ofKind(resolved, kind)
+    def delta(kind: String): DataFrame = resolved.filter(col("__kind") === kind)
 
     val store = existing.store.unionByName(delta("store")
       .select(col("__id").as("id_store"), col("store_name"), col("store_url"),
@@ -346,9 +346,6 @@ object Ingestion {
     graft.operators.Conform.conform(df,
       graft.operators.Conform.Contract(
         required = Seq("Descripción"), numeric = numeric, dates = dates))
-
-  private def ofKind(df: DataFrame, kind: String): DataFrame =
-    df.filter(col("__kind") === kind)
 
   /** The batch frame's columns: every one a dimension payload, an id
     * key or a fact column reads, and nothing else.
