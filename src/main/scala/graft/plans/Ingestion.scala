@@ -165,10 +165,10 @@ object Ingestion {
       .join(priceRow, Seq("_file", "Descripción"), "left")
       .select(batchCols.map(qcol): _*)
       .trackedCheckpoint()
-    val first = Seq(col("_file"), col("_rownum"))
+    val seqOrder = Seq(col("_file"), col("_rownum")) // the reference's row sequence
 
     // ---- store dim upsert (J4/M1): first occurrence wins store_url ----
-    val newStores = Relational.firstPerKey(batch, Seq(col("store_name")), first)
+    val newStores = Relational.firstPerKey(batch, Seq(col("store_name")), seqOrder)
       .join(existing.store.select("store_name"), Seq("store_name"), "left_anti")
 
     // ---- provider dim upsert (J4/M2): key (store, provider_url), spelled
@@ -177,7 +177,7 @@ object Ingestion {
     val existingProviders = existing.provider
       .join(existing.store.select("id_store", "store_name"), Seq("id_store"))
     val newProviders = Relational.firstPerKey(batch,
-        Seq(col("store_name"), col("provider_url")), first)
+        Seq(col("store_name"), col("provider_url")), seqOrder)
       .join(existingProviders.select("store_name", "provider_url"),
         Seq("store_name", "provider_url"), "left_anti")
 
@@ -205,11 +205,11 @@ object Ingestion {
         col("quantity").as("quantity_k"),
         col("unit_price").as("unit_price_k"),
         col("purchase_date").as("purchase_date_k"))
-    val facts = Relational.firstPerKey(keyed, dedupKey.map(col), first)
+    val facts = Relational.firstPerKey(keyed, dedupKey.map(col), seqOrder)
       .join(existingCombos, dedupKey, "left_anti")
 
     // ---- product dim upsert (M2): first surviving fact per name
-    val newProducts = Relational.firstPerKey(facts, Seq(qcol("Descripción")), first)
+    val newProducts = Relational.firstPerKey(facts, Seq(qcol("Descripción")), seqOrder)
       .join(existing.product.select(col("product_name").as("Descripción")),
         Seq("Descripción"), "left_anti")
 
@@ -219,7 +219,7 @@ object Ingestion {
         "product" -> newProducts, "purchase" -> facts)
       .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
       .reduce(_ unionByName _)
-    val ranked = Relational.withStratumRankN(newKeys, Seq("__kind"), first, "__rank", "__n")
+    val ranked = Relational.withStratumRankN(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
     val maxIds = Seq(("store", existing.store, "id_store"),
         ("provider", existing.provider, "id_provider"),
         ("product", existing.product, "id_product"),
