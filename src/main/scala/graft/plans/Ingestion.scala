@@ -220,7 +220,7 @@ object Ingestion {
       .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
       .reduce(_ unionByName _)
     val ranked = Relational.withStratumRankN(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
-    val maxIds = Seq(("store", existing.store, "id_store"),
+    val idOffsets = Seq(("store", existing.store, "id_store"),
         ("provider", existing.provider, "id_provider"),
         ("product", existing.product, "id_product"),
         ("purchase", existing.purchase, "id_purchase"))
@@ -229,7 +229,7 @@ object Ingestion {
       .groupBy("__kind").agg(coalesce(max(col("__id")), lit(0L)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ided = ranked.withColumn("__id", col("__rank") +
-      maxIds.foldLeft(lit(0L)) { case (o, (k, m)) => when(col("__kind") === k, m).otherwise(o) })
+      idOffsets.foldLeft(lit(0L)) { case (o, (k, m)) => when(col("__kind") === k, m).otherwise(o) })
     def fresh(kind: String): DataFrame = ided.filter(col("__kind") === kind)
 
     // ---- id resolution against existing ∪ new dims, then the second and
