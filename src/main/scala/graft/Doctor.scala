@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.WarehouseStore
-import org.apache.spark.sql.SparkSession
 
 /** Entry point 3 of the reference (`database_utils.py:283-296`, SURVEY.md
   * §3.3): the catalog smoke check — connect, load the dimension
@@ -12,22 +11,10 @@ import org.apache.spark.sql.SparkSession
 object Doctor {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[${Engine.localCpus}]")
-      .appName("graft-doctor")
-      .config("spark.sql.shuffle.partitions", Engine.localCpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-doctor")
     val wh = WarehouseStore.load(spark, dir)
-    val tables = Seq(
-      "payment_type" -> wh.paymentType, "store" -> wh.store,
-      "provider" -> wh.provider, "product" -> wh.product,
-      "purchase" -> wh.purchase, "operation" -> wh.operation,
-      "price" -> wh.price)
     println(s"* Warehouse at $dir:")
-    tables.foreach { case (n, df) => println(f"$n%-14s ${df.count()}%8d rows") }
+    wh.tables.foreach { case (n, df) => println(f"$n%-14s ${df.count()}%8d rows") }
     val ok = wh.paymentType.count() > 0
     println(if (ok) "payment_type catalog present — ingestion ready"
             else "payment_type catalog MISSING")

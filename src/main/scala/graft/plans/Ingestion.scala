@@ -23,7 +23,16 @@ case class Warehouse(
                             //   purchase_date, delivery_date, exchange_rate, shipping_cost, discount
     operation: DataFrame,   // id_purchase, id_product, quantity, unit_price, unit_price_usd,
                             //   discount_percentage, pieces_per_unit, final_cost, product_url
-    price: DataFrame)       // id_product, price, offer_price, start_date, end_date
+    price: DataFrame) {     // id_product, price, offer_price, start_date, end_date
+
+  /** Every table under its warehouse name, in constructor order (the
+    * order [[WarehouseStore]] writes them in).
+    */
+  def tables: Seq[(String, DataFrame)] = Seq(
+    "payment_type" -> paymentType, "store" -> store, "provider" -> provider,
+    "product" -> product, "purchase" -> purchase, "operation" -> operation,
+    "price" -> price)
+}
 
 /** Pipeline 2 of the reference (`import_files_to_postgre.py`, SURVEY.md
   * §3.2) re-expressed as ONE lazy set-oriented plan per batch of workbook

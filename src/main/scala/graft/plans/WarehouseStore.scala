@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Parquet persistence for the [[Warehouse]] star schema: one directory
   * per table, updated by stage-then-swap (write the new state to a
@@ -13,41 +13,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object WarehouseStore {
 
-  private val tables = Seq("payment_type", "store", "provider", "product",
-    "purchase", "operation", "price")
-
   /** The warehouse at `dir`; a table not saved yet is its empty seed.
     * Each table is read with its seed's schema (the schema every save
     * writes), so a load runs no schema-inference job.
     */
   def load(spark: SparkSession, dir: String): Warehouse = {
-    val empty = Ingestion.empty(spark)
-    def tbl(name: String, fallback: DataFrame): DataFrame = {
-      val p = new Path(s"$dir/$name")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.schema(fallback.schema).parquet(p.toString) else fallback
-    }
-    Warehouse(
-      paymentType = tbl("payment_type", empty.paymentType),
-      store = tbl("store", empty.store),
-      provider = tbl("provider", empty.provider),
-      product = tbl("product", empty.product),
-      purchase = tbl("purchase", empty.purchase),
-      operation = tbl("operation", empty.operation),
-      price = tbl("price", empty.price))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val Seq(paymentType, store, provider, product, purchase, operation, price) =
+      Ingestion.empty(spark).tables.map { case (name, seed) =>
+        val p = new Path(s"$dir/$name")
+        if (fs.exists(p)) spark.read.schema(seed.schema).parquet(p.toString) else seed
+      }
+    Warehouse(paymentType, store, provider, product, purchase, operation, price)
   }
 
   def save(spark: SparkSession, wh: Warehouse, dir: String): Unit = {
-    val dfs = Map(
-      "payment_type" -> wh.paymentType, "store" -> wh.store,
-      "provider" -> wh.provider, "product" -> wh.product,
-      "purchase" -> wh.purchase, "operation" -> wh.operation,
-      "price" -> wh.price)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stage everything first (plans still read the old table paths) …
-    tables.foreach { t => dfs(t).write.mode("overwrite").parquet(s"$dir/.staging_$t") }
+    wh.tables.foreach { case (t, df) =>
+      df.write.mode("overwrite").parquet(s"$dir/.staging_$t") }
     // … then swap
-    tables.foreach { t =>
+    wh.tables.foreach { case (t, _) =>
       val live = new Path(s"$dir/$t")
       if (fs.exists(live)) fs.delete(live, true)
       fs.rename(new Path(s"$dir/.staging_$t"), live)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Build the q243 zstd census fixture. The INDEPENDENT writer is
   * libzstd itself (zstd-jni, shipped on Spark's classpath — the
   * reference implementation); the engine's stage-1 walk
@@ -84,11 +82,7 @@ object MakeZstdFixture {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("make-zstd-fixture").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session("make-zstd-fixture")
     import spark.implicits._
     val census = scala.collection.mutable.LinkedHashMap.empty[String, Array[Byte]]
     val full = scala.collection.mutable.LinkedHashMap.empty[String, Array[Byte]]

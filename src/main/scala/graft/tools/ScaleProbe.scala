@@ -1,48 +1,42 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch scale-probe main (not part of the driver contract): the
   * local bench at sf0.1 cannot resolve shuffle-volume questions — its
-  * exchanges move KBs, so codec choice and skew posture measure as
-  * noise (r18 "Not yet optimized" items 4/5). This tool manufactures a
-  * `mult`-times lineitem (baskets kept intact by offsetting
-  * `l_orderkey` per copy; part/supplier keys untouched so per-key group
-  * sizes really grow) and times the shuffle-heavy relational queries on
-  * it under a chosen shuffle codec, plus an optional hot-supplier skew
-  * variant for the top-k-vs-window adjudication.
+  * exchanges move KBs. This tool manufactures a `mult`-times lineitem
+  * (baskets kept intact by offsetting `l_orderkey` per copy;
+  * part/supplier keys untouched so per-key group sizes really grow),
+  * optionally with a hot supplier, and times registered queries on it.
   *
   * Env: SPARK_GRAFT_SF_DIR (source), SPARK_GRAFT_PROBE_DIR (scratch
-  * output), SPARK_GRAFT_PROBE_MULT (default 10), SPARK_GRAFT_PROBE_CODEC
-  * (lz4|zstd|snappy — spark.io.compression.codec), SPARK_GRAFT_PROBE_SKEW
+  * output), SPARK_GRAFT_PROBE_MULT (default 10), SPARK_GRAFT_PROBE_SKEW
   * (=1: the last copy funnels every row to l_suppkey=1, a 600k-row hot
   * supplier at mult=10), SPARK_GRAFT_CPUS, SPARK_GRAFT_REPS.
-  * Args: query names (default q89_copurchase_pairs
-  * q105_topk_per_supplier); the pseudo-name `q105_window` times the
-  * row_number-window spelling of q105 for the skew comparison.
+  * Args: registered query names (default q89_copurchase_pairs
+  * q105_topk_per_supplier); they read only `lineitem`.
   */
 object ScaleProbe {
+
+  /** The directory holding the manufactured lineitem for one
+    * (mult, skew) pair, so a run never reuses another pair's data.
+    */
+  def dataDir(dest: String, mult: Int, skew: Boolean): String =
+    s"$dest/lineitem_x$mult${if (skew) "_skew" else ""}"
+
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dest = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR", "/tmp/graft_sfprobe")
     val mult = sys.env.getOrElse("SPARK_GRAFT_PROBE_MULT", "10").toInt
-    val codec = sys.env.getOrElse("SPARK_GRAFT_PROBE_CODEC", "lz4")
     val skew = sys.env.getOrElse("SPARK_GRAFT_PROBE_SKEW", "0") == "1"
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val cpus = graft.Engine.localCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.io.compression.codec", codec)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-scale-probe", cpus)
 
-    val liPath = s"$dest/lineitem.parquet"
-    if (!new java.io.File(liPath).exists()) {
+    val dir = dataDir(dest, mult, skew)
+    val liPath = s"$dir/lineitem.parquet"
+    // _SUCCESS, not the directory: an interrupted build is rebuilt
+    if (!new java.io.File(s"$liPath/_SUCCESS").exists()) {
       val li = spark.read.parquet(s"$src/lineitem.parquet")
       val maxOk = li.agg(max(col("l_orderkey"))).head.getLong(0) + 1L
       val copies = (0 until mult).map { k =>
@@ -58,39 +52,7 @@ object ScaleProbe {
 
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q89_copurchase_pairs", "q105_topk_per_supplier")
-    def build(name: String) = name match {
-      case "q89_norepart" =>
-        // q89 minus its explicit pre-partition exchange (the r6
-        // adjudication under re-test at 10x volume): groupBy satisfies
-        // its own distribution, list-building runs on the scan tasks
-        val li = graft.Engine.table(spark, dest, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.groupBy(col("l_orderkey"))
-          .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
-            .as("parts"))
-          .filter(size(col("parts")) >= 2)
-          .select(graft.queries.AnalyticsQueries.pairPack(col("parts"))
-            .as("pack"))
-          .groupBy(col("pack")).agg(count(lit(1)).as("n_orders"))
-          .orderBy(col("n_orders").desc, col("pack"))
-          .limit(20)
-          .select(shiftright(col("pack"), 32).as("part_a"),
-            col("pack").bitwiseAND(lit(0xFFFFFFFFL)).as("part_b"),
-            col("n_orders"))
-      case "q105_window" =>
-        // the spelling topKPerKey exists to avoid: full sort of every
-        // supplier group under one window
-        import org.apache.spark.sql.expressions.Window
-        val li = graft.Engine.table(spark, dest, "lineitem")
-        val w = Window.partitionBy(col("l_suppkey"))
-          .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
-            col("l_linenumber"), col("l_partkey"))
-        li.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= 5)
-          .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_extendedprice"))
-      case n => graft.SparkEntry.queries(n)(spark, dest)
-    }
+    def build(name: String) = graft.SparkEntry.queries(name)(spark, dir)
     // warm-up (codegen + listing caches), then timed medians
     names.foreach { n =>
       try build(n).write.format("noop").mode("overwrite").save()
@@ -106,7 +68,7 @@ object ScaleProbe {
         System.gc()
         el
       }
-      println(f"[probe] $n codec=$codec skew=$skew mult=$mult cpus=$cpus " +
+      println(f"[probe] $n skew=$skew mult=$mult cpus=$cpus " +
         f"median=${times.sorted.apply(times.size / 2)}%.3f " +
         times.map(t => f"$t%.3f").mkString("reps=[", ",", "]"))
     }
