@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Source-level gate for the format plane's byte primitives: every
   * reader and writer in `sources/` reads and writes through
@@ -20,23 +19,12 @@ class BytesLintSpec extends AnyFunSuite {
     "extends\\s+RuntimeException\\s*\\(\\s*null\\s*,\\s*null\\s*,\\s*" +
       "false\\s*,\\s*false\\s*\\)")
 
-  /** Each source file except Bytes.scala, comments stripped the way
-    * RoundLintSpec strips them.
-    */
+  /** Each source file except Bytes.scala, without comments. */
   private def sources: Seq[(String, String)] = {
-    val s = java.nio.file.Files.list(dir)
-    val files =
-      try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala"))
-      finally s.close()
+    val files = LintSources.files(dir)
     assert(files.nonEmpty, s"no sources under $dir")
-    files.filterNot(_.getFileName.toString == "Bytes.scala").map { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val code = src.replaceAll("(?s)/\\*.*?\\*/", "")
-        .linesIterator.map(l =>
-          l.indexOf("//") match { case -1 => l; case i => l.take(i) })
-        .mkString("\n")
-      (f.getFileName.toString, code)
-    }
+    files.filterNot(_.getFileName.toString == "Bytes.scala")
+      .map(f => (f.getFileName.toString, LintSources.code(f)))
   }
 
   test("no varint, zigzag or fixed-width helper outside Bytes.scala") {

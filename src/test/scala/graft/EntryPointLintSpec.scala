@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Source-level gate for session setup: every main builds its session
   * through [[Engine.session]] and takes its core count from
@@ -18,25 +17,15 @@ class EntryPointLintSpec extends AnyFunSuite {
     java.util.regex.Pattern.compile("\\bSparkSession\\s*\\.\\s*builder\\b")
   private val cpusVar = java.util.regex.Pattern.compile("\"SPARK_GRAFT_CPUS\"")
 
-  /** Each main-tree file except the allowed two (relative path, code),
-    * comments stripped the way BytesLintSpec strips them.
+  /** Each main-tree file but the allowed two, as (relative path, code
+    * without comments).
     */
   private def sources: Seq[(String, String)] = {
-    val s = java.nio.file.Files.walk(root)
-    val files =
-      try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala"))
-      finally s.close()
+    val files = LintSources.files(root, recursive = true)
     assert(files.nonEmpty, s"no sources under $root")
     files.map(f => (root.relativize(f).toString.replace('\\', '/'), f))
       .filterNot { case (rel, _) => allowed(rel) }
-      .map { case (rel, f) =>
-        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-        val code = src.replaceAll("(?s)/\\*.*?\\*/", "")
-          .linesIterator.map(l =>
-            l.indexOf("//") match { case -1 => l; case i => l.take(i) })
-          .mkString("\n")
-        (rel, code)
-      }
+      .map { case (rel, f) => (rel, LintSources.code(f)) }
   }
 
   test("no SparkSession.builder outside Engine.scala and Bench.scala") {

@@ -33,18 +33,8 @@ class RoundLintSpec extends AnyFunSuite {
       dir <- dirs
       p = java.nio.file.Paths.get(dir)
       if java.nio.file.Files.isDirectory(p)
-      f <- {
-        val s = java.nio.file.Files.list(p)
-        try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala"))
-        finally s.close()
-      }
-      src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      // strip block + line comments so prose mentioning round() doesn't
-      // count (Scaladoc was the first false positive this gate caught)
-      code = src.replaceAll("(?s)/\\*.*?\\*/", "")
-        .linesIterator.map(l =>
-          l.indexOf("//") match { case -1 => l; case i => l.take(i) })
-        .mkString("\n")
+      f <- LintSources.files(p)
+      code = LintSources.code(f)
       if callSite.matcher(code).find() && !code.contains(shadowImport)
     } yield f.toString
     assert(offenders.isEmpty,
