@@ -2,6 +2,8 @@ package graft.operators
 
 import graft.{functions => gf}
 import graft.functions.{c_round => round}
+import graft.sources.Bytes
+import graft.sources.Bytes.{Reader, damage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
@@ -99,6 +101,14 @@ object Multimodal {
     */
   type Codec = Payload => Decoded
 
+  /** `sig`'s characters (as bytes) at `b[at, at + sig.length)`. */
+  private def hasAt(b: Array[Byte], at: Int, sig: String): Boolean = {
+    if (at < 0 || at > b.length - sig.length) return false
+    var i = 0
+    while (i < sig.length && b(at + i) == sig.charAt(i).toByte) i += 1
+    i == sig.length
+  }
+
   private def md5Feature(content: Array[Byte]): Array[Float] = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(content)
     (0 until 8).map(i => ((d(i) & 0xff) / 255.0f)).toArray
@@ -109,11 +119,10 @@ object Multimodal {
     */
   val StubCodec: Codec = { p =>
     val d = java.security.MessageDigest.getInstance("MD5").digest(p.content)
-    def u(i: Int) = d(i) & 0xff
     Decoded(p.id, p.modality,
-      width = 16 + ((u(0) << 8 | u(1)) % 1008),
-      height = 16 + ((u(2) << 8 | u(3)) % 1008),
-      channels = Array(1, 3, 4)(u(4) % 3),
+      width = 16 + Bytes.be16(d, 0) % 1008,
+      height = 16 + Bytes.be16(d, 2) % 1008,
+      channels = Array(1, 3, 4)((d(4) & 0xff) % 3),
       feature = md5Feature(p.content))
   }
 
@@ -134,20 +143,17 @@ object Multimodal {
     */
   val PngCodec: Codec = { p =>
     val b = p.content
-    def u(i: Int) = b(i) & 0xff
-    val isPng = b.length >= 26 &&
-      u(0) == 0x89 && u(1) == 0x50 && u(2) == 0x4E && u(3) == 0x47 &&
-      u(4) == 0x0D && u(5) == 0x0A && u(6) == 0x1A && u(7) == 0x0A &&
-      u(12) == 'I' && u(13) == 'H' && u(14) == 'D' && u(15) == 'R'
+    val isPng = b.length >= 26 && hasAt(b, 0, PngSignature) &&
+      hasAt(b, 12, "IHDR")
     if (!isPng) StubCodec(p)
     else {
-      def be32(i: Int) = (u(i) << 24) | (u(i + 1) << 16) | (u(i + 2) << 8) | u(i + 3)
-      val channels = u(25) match {
+      val channels = b(25) match {
         case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
         case _ => 0 // corrupt color type: surface as 0, don't guess
       }
-      Decoded(p.id, p.modality, width = be32(16), height = be32(20),
-        channels = channels, feature = md5Feature(b))
+      Decoded(p.id, p.modality, width = Bytes.be32(b, 16),
+        height = Bytes.be32(b, 20), channels = channels,
+        feature = md5Feature(b))
     }
   }
 
@@ -158,13 +164,11 @@ object Multimodal {
     */
   val GifCodec: Codec = { p =>
     val b = p.content
-    def u(i: Int) = b(i) & 0xff
-    val isGif = b.length >= 10 &&
-      u(0) == 'G' && u(1) == 'I' && u(2) == 'F' && u(3) == '8' &&
-      (u(4) == '7' || u(4) == '9') && u(5) == 'a'
+    val isGif = b.length >= 10 && hasAt(b, 0, "GIF8") &&
+      (b(4) == '7' || b(4) == '9') && b(5) == 'a'
     if (!isGif) StubCodec(p)
     else Decoded(p.id, p.modality,
-      width = u(6) | (u(7) << 8), height = u(8) | (u(9) << 8),
+      width = Bytes.le16(b, 6), height = Bytes.le16(b, 8),
       channels = 1, feature = md5Feature(b))
   }
 
@@ -176,16 +180,11 @@ object Multimodal {
     */
   val BmpCodec: Codec = { p =>
     val b = p.content
-    def u(i: Int) = b(i) & 0xff
-    val isBmp = b.length >= 30 && u(0) == 'B' && u(1) == 'M'
+    val isBmp = b.length >= 30 && hasAt(b, 0, "BM")
     if (!isBmp) StubCodec(p)
-    else {
-      def le32(i: Int) = u(i) | (u(i + 1) << 8) | (u(i + 2) << 16) | (u(i + 3) << 24)
-      val bpp = u(28) | (u(29) << 8)
-      Decoded(p.id, p.modality,
-        width = le32(18), height = math.abs(le32(22)),
-        channels = math.max(1, bpp / 8), feature = md5Feature(b))
-    }
+    else Decoded(p.id, p.modality,
+      width = Bytes.le32(b, 18), height = math.abs(Bytes.le32(b, 22)),
+      channels = math.max(1, Bytes.le16(b, 28) / 8), feature = md5Feature(b))
   }
 
   /** REAL codec for JPEG payloads — the first parser here that must WALK,
@@ -197,36 +196,26 @@ object Multimodal {
     * height BE16, width BE16, component count — channels = components
     * (1 grayscale, 3 YCbCr, 4 CMYK). Standalone markers (SOI, RSTn,
     * TEM) carry no length and are stepped over; SOS/EOI mean entropy
-    * data began without a SOF — corrupt, fall back to the stub. The
-    * walk is bounded by the header bytes (a few KB), never the scan
-    * data, so at 100 TB the per-object cost stays header-sized.
+    * data began without a SOF — corrupt, fall back to the stub, as
+    * does any segment running past the end (the walk is [[jpegWalk]],
+    * shared with the pixel decoder). The walk is bounded by the header
+    * bytes (a few KB), never the scan data, so at 100 TB the
+    * per-object cost stays header-sized.
     */
   val JpegCodec: Codec = { p =>
     val b = p.content
-    def u(i: Int) = if (i < b.length) b(i) & 0xff else -1
-    def be16(i: Int) = (u(i) << 8) | u(i + 1)
-    val isJpeg = b.length >= 4 && u(0) == 0xFF && u(1) == 0xD8 && u(2) == 0xFF
     var out: Option[Decoded] = None
-    if (isJpeg) {
-      var i = 2
-      var done = false
-      while (!done && i + 3 < b.length && u(i) == 0xFF) {
-        val marker = u(i + 1)
-        if (marker == 0xC0 || marker == 0xC1 || marker == 0xC2) {
-          if (i + 9 < b.length) {
-            out = Some(Decoded(p.id, p.modality,
-              width = be16(i + 7), height = be16(i + 5),
-              channels = u(i + 9), feature = md5Feature(b)))
-          }
-          done = true
-        } else if (marker == 0xD8 || marker == 0x01 ||
-                   (marker >= 0xD0 && marker <= 0xD7)) {
-          i += 2 // standalone marker: no length field
-        } else if (marker == 0xD9 || marker == 0xDA) {
-          done = true // EOI / SOS before any SOF: no frame header
-        } else {
-          i += 2 + be16(i + 2) // skip segment: length covers itself
+    Bytes.total {
+      jpegWalk(new Reader(b, 0, b.length)) { (m, s) =>
+        if (m == 0xc0 || m == 0xc1 || m == 0xc2) {
+          s.skip(1) // precision
+          val height = s.be16()
+          val width = s.be16()
+          out = Some(Decoded(p.id, p.modality, width = width,
+            height = height, channels = s.u8(), feature = md5Feature(b)))
         }
+        // EOI / SOS before any SOF: no frame header
+        out.isEmpty && m != 0xd9 && m != 0xda
       }
     }
     out.getOrElse(StubCodec(p))
@@ -244,30 +233,22 @@ object Multimodal {
     */
   val TiffCodec: Codec = { p =>
     val b = p.content
-    def u(i: Long): Int = if (i >= 0 && i < b.length) b(i.toInt) & 0xff else -1
-    val le = b.length >= 8 && u(0) == 'I' && u(1) == 'I'
-    val be = b.length >= 8 && u(0) == 'M' && u(1) == 'M'
-    def u16(i: Long): Int =
-      if (le) u(i) | (u(i + 1) << 8) else (u(i) << 8) | u(i + 1)
-    def u32(i: Long): Long =
-      if (le) u(i).toLong | (u(i + 1).toLong << 8) | (u(i + 2).toLong << 16) | (u(i + 3).toLong << 24)
-      else (u(i).toLong << 24) | (u(i + 1).toLong << 16) | (u(i + 2).toLong << 8) | u(i + 3).toLong
-    if (!(le || be) || u16(2) != 42) StubCodec(p)
-    else {
-      val ifd = u32(4)
+    Bytes.total {
+      val t = new TiffBytes(b)
+      val ifd = t.long(4)
       var width = -1L; var height = -1L; var samples = 1L // TIFF default
-      if (ifd >= 0 && ifd + 2 <= b.length) {
-        val n = u16(ifd)
+      if (ifd + 2 <= b.length) {
+        val n = t.short(ifd)
         var i = 0
         while (i < n && ifd + 2 + 12L * i + 12 <= b.length) {
           val e = ifd + 2 + 12L * i
-          val tag = u16(e)
-          val typ = u16(e + 2)
           // SHORT (3) and LONG (4) inline values cover the dimension tags
-          val v = if (typ == 3) u16(e + 8).toLong
-                  else if (typ == 4) u32(e + 8)
-                  else -1L
-          if (v >= 0) tag match {
+          val v = t.short(e + 2) match {
+            case 3 => t.short(e + 8).toLong
+            case 4 => t.long(e + 8)
+            case _ => -1L
+          }
+          if (v >= 0) t.short(e) match {
             case 256 => width = v
             case 257 => height = v
             case 277 => samples = v
@@ -276,10 +257,33 @@ object Multimodal {
           i += 1
         }
       }
-      if (width < 0 || height < 0) StubCodec(p)
-      else Decoded(p.id, p.modality, width = width.toInt, height = height.toInt,
+      if (width < 0 || height < 0) damage()
+      Decoded(p.id, p.modality, width = width.toInt, height = height.toInt,
         channels = samples.toInt, feature = md5Feature(b))
+    }.getOrElse(StubCodec(p))
+  }
+
+  /** TIFF's byte order, the one format here with both: "II" reads
+    * little-endian, "MM" big-endian (TIFF 6.0 §2). Offsets are absolute
+    * and read from the file, so every read is bounds-checked and a miss
+    * raises [[Bytes.Damage]], as does a header without "II"/"MM" and
+    * the magic 42. The header codec and the pixel decoder both read
+    * through this one dispatch.
+    */
+  private final class TiffBytes(b: Array[Byte]) {
+    private val r = new Reader(b, 0, b.length)
+    private val le = hasAt(b, 0, "II")
+    if (!le && !hasAt(b, 0, "MM") || short(2) != 42) damage()
+
+    private def at(i: Long): Reader = {
+      if (i < 0 || i > b.length) damage()
+      r.at(i.toInt)
     }
+    /** SHORT (type 3) at `i`. */
+    def short(i: Long): Int = if (le) at(i).le16() else at(i).be16()
+    /** LONG (type 4) at `i`, unsigned. */
+    def long(i: Long): Long =
+      if (le) at(i).le32u() else at(i).be32u()
   }
 
   /** REAL codec for WebP payloads — one container, THREE header layouts
@@ -293,33 +297,26 @@ object Multimodal {
     */
   val WebPCodec: Codec = { p =>
     val b = p.content
-    def u(i: Int) = if (i < b.length) b(i) & 0xff else -1
-    def fourCC(i: Int) = if (i + 4 <= b.length)
-      new String(b.slice(i, i + 4), java.nio.charset.StandardCharsets.US_ASCII)
-    else ""
-    val isWebP = b.length >= 20 && fourCC(0) == "RIFF" && fourCC(8) == "WEBP"
+    val isWebP = b.length >= 20 && hasAt(b, 0, "RIFF") && hasAt(b, 8, "WEBP")
     if (!isWebP) StubCodec(p)
-    else fourCC(12) match {
-      case "VP8 " if b.length >= 30 &&
-          u(23) == 0x9D && u(24) == 0x01 && u(25) == 0x2A =>
-        Decoded(p.id, p.modality,
-          width = (u(26) | (u(27) << 8)) & 0x3FFF,
-          height = (u(28) | (u(29) << 8)) & 0x3FFF,
-          channels = 3, feature = md5Feature(b))
-      case "VP8L" if b.length >= 25 && u(20) == 0x2F =>
-        val w = (u(21) | ((u(22) & 0x3F) << 8)) + 1
-        val h = ((u(22) >> 6) | (u(23) << 2) | ((u(24) & 0xF) << 10)) + 1
-        val alpha = (u(24) >> 4) & 1
-        Decoded(p.id, p.modality, width = w, height = h,
-          channels = 3 + alpha, feature = md5Feature(b))
-      case "VP8X" if b.length >= 30 =>
-        val alpha = (u(20) >> 4) & 1
-        val w = (u(24) | (u(25) << 8) | (u(26) << 16)) + 1
-        val h = (u(27) | (u(28) << 8) | (u(29) << 16)) + 1
-        Decoded(p.id, p.modality, width = w, height = h,
-          channels = 3 + alpha, feature = md5Feature(b))
-      case _ => StubCodec(p)
-    }
+    else if (hasAt(b, 12, "VP8 ") && b.length >= 30 &&
+        (b(23) & 0xff) == 0x9D && b(24) == 0x01 && b(25) == 0x2A)
+      Decoded(p.id, p.modality,
+        width = Bytes.le16(b, 26) & 0x3FFF,
+        height = Bytes.le16(b, 28) & 0x3FFF,
+        channels = 3, feature = md5Feature(b))
+    else if (hasAt(b, 12, "VP8L") && b.length >= 25 && b(20) == 0x2F) {
+      val bits = Bytes.le32(b, 21) // 14-bit width-1, 14-bit height-1, alpha
+      Decoded(p.id, p.modality, width = (bits & 0x3FFF) + 1,
+        height = ((bits >>> 14) & 0x3FFF) + 1,
+        channels = 3 + ((bits >>> 28) & 1), feature = md5Feature(b))
+    } else if (hasAt(b, 12, "VP8X") && b.length >= 30)
+      Decoded(p.id, p.modality,
+        // 24-bit LE width-1 at 24 and height-1 at 27
+        width = (Bytes.le32(b, 24) & 0xFFFFFF) + 1,
+        height = (Bytes.le32(b, 26) >>> 8) + 1,
+        channels = 3 + ((b(20) >> 4) & 1), feature = md5Feature(b))
+    else StubCodec(p)
   }
 
   /** Magic-byte dispatch over the real parsers — the entry point a mixed
@@ -362,21 +359,14 @@ object Multimodal {
     * on both engines, no float rounding to diverge).
     */
   def parseWav(id: Long, b: Array[Byte]): Option[AudioMeta] = {
-    def u(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u(i) | (u(i + 1) << 8)
-    def le32(i: Int) = (u(i) | (u(i + 1) << 8) | (u(i + 2) << 16) |
-      (u(i + 3).toLong << 24))
-    val isWav = b.length >= 44 &&
-      u(0) == 'R' && u(1) == 'I' && u(2) == 'F' && u(3) == 'F' &&
-      u(8) == 'W' && u(9) == 'A' && u(10) == 'V' && u(11) == 'E' &&
-      u(12) == 'f' && u(13) == 'm' && u(14) == 't' && u(15) == ' ' &&
-      u(36) == 'd' && u(37) == 'a' && u(38) == 't' && u(39) == 'a'
+    val isWav = b.length >= 44 && hasAt(b, 0, "RIFF") &&
+      hasAt(b, 8, "WAVEfmt ") && hasAt(b, 36, "data")
     if (!isWav) None
     else {
-      val channels = le16(22)
-      val rate = le32(24).toInt
-      val bits = le16(34)
-      val dataBytes = le32(40)
+      val channels = Bytes.le16(b, 22)
+      val rate = Bytes.le32(b, 24)
+      val bits = Bytes.le16(b, 34)
+      val dataBytes = Bytes.le32u(b, 40)
       val bytesPerFrame = channels.toLong * (bits / 8)
       val n = if (bytesPerFrame == 0) 0L else dataBytes / bytesPerFrame
       Some(AudioMeta(id, channels, rate, bits, n,
@@ -408,17 +398,17 @@ object Multimodal {
     * length is not computable from the header alone.
     */
   def parseMp3(id: Long, b: Array[Byte]): Option[Mp3Meta] = {
-    def u(i: Int) = if (i < b.length) b(i) & 0xff else -1
-    def isFrame(i: Int): Boolean =
-      u(i) == 0xFF && (u(i + 1) & 0xFE) == 0xFA // sync + MPEG1 + Layer III
+    // a whole 4-byte header at `i`, opening with sync + MPEG1 + Layer III
+    def isFrame(i: Int): Boolean = i + 4 <= b.length &&
+      (b(i) & 0xff) == 0xFF && (b(i + 1) & 0xFE) == 0xFA
     var pos = 0
     while (pos + 4 <= b.length && !isFrame(pos)) pos += 1
     var frames = 0L
     var rate = -1
     var kbps = -1
     var ok = true
-    while (ok && pos + 4 <= b.length && isFrame(pos)) {
-      val b2 = u(pos + 2)
+    while (ok && isFrame(pos)) {
+      val b2 = b(pos + 2) & 0xff
       val br = Mp3Bitrates(b2 >> 4)
       val sr = Mp3Rates((b2 >> 2) & 3)
       val pad = (b2 >> 1) & 1
@@ -476,47 +466,40 @@ object Multimodal {
     * caller should route to a full demuxer.
     */
   def parseMp4(id: Long, b: Array[Byte]): Option[VideoMeta] = {
-    val len = b.length.toLong
-    def u(i: Long) = if (i < len) (b(i.toInt) & 0xff).toLong else -1L
-    def be32(i: Long) = (u(i) << 24) | (u(i + 1) << 16) | (u(i + 2) << 8) | u(i + 3)
-    def be64(i: Long) = (be32(i) << 32) | be32(i + 4)
-    def typ(i: Long) = if (i + 8 <= len)
-      new String(b.slice(i.toInt + 4, i.toInt + 8),
-        java.nio.charset.StandardCharsets.US_ASCII)
-    else ""
-    val isMp4 = len >= 12 && typ(0) == "ftyp"
-    if (!isMp4) None
-    else {
-      var i = 0L
-      var meta: Option[VideoMeta] = None
-      while (meta.isEmpty && i + 8 <= len) {
-        val size32 = be32(i)
-        // §4.2 escapes: 1 = 64-bit largesize follows the type; 0 = box
-        // extends to EOF. hdr = bytes before the first child/payload.
-        val hdr = if (size32 == 1) 16L else 8L
-        val size =
-          if (size32 == 1 && i + 16 <= len) be64(i + 8)
-          else if (size32 == 0) len - i
-          else size32
-        if (size < hdr || i + size > len) i = len // corrupt/truncated: stop
-        else if (typ(i) == "moov") {
-          var j = i + hdr
-          val end = i + size
+    val len = b.length
+    val r = new Reader(b, 0, len)
+    if (len < 12 || !hasAt(b, 4, "ftyp")) return None
+    var i = 0 // every box starts inside b, so offsets fit an Int
+    var meta: Option[VideoMeta] = None
+    while (meta.isEmpty && i + 8 <= len) {
+      val size32 = r.at(i).be32u()
+      // §4.2 escapes: 1 = 64-bit largesize follows the type; 0 = box
+      // extends to EOF. hdr = bytes before the first child/payload.
+      val hdr = if (size32 == 1) 16L else 8L
+      val size =
+        if (size32 == 1 && i + 16 <= len) r.at(i + 8).be64()
+        else if (size32 == 0) (len - i).toLong
+        else size32
+      if (size < hdr || i + size > len) i = len // corrupt/truncated: stop
+      else {
+        if (hasAt(b, i + 4, "moov")) {
+          var j = i + hdr.toInt
+          val end = i + size.toInt
           while (meta.isEmpty && j + 8 <= end) {
-            val csize = be32(j)
+            val csize = r.at(j).be32u()
             if (csize < 8 || j + csize > end) j = end
-            else if (typ(j) == "mvhd" && u(j + 8) == 0L && j + 28 <= end) {
-              val ts = be32(j + 20)
-              val dur = be32(j + 24)
+            else if (hasAt(b, j + 4, "mvhd") && j + 28 <= end && b(j + 8) == 0) {
+              val ts = r.at(j + 20).be32u()
+              val dur = r.at(j + 24).be32u()
               meta = Some(VideoMeta(id, ts, dur,
                 if (ts == 0) 0L else dur * 1000L / ts))
-            } else j += csize
+            } else j += csize.toInt
           }
-          i += size
-        } else i += size
+        }
+        i += size.toInt
       }
-      meta
     }
+    meta
   }
 
   /** Video twin of [[decodeAudioBatches]]: per-partition box walk to
@@ -556,38 +539,33 @@ object Multimodal {
                        tl_b: Int, tl_g: Int, tl_r: Int)
 
   def parseBmpPixels(id: Long, b: Array[Byte]): Option[BmpPixels] = {
-    def u(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u(i) | (u(i + 1) << 8)
-    def le32(i: Int) = u(i) | (u(i + 1) << 8) | (u(i + 2) << 16) | (u(i + 3) << 24)
-    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') None
-    else {
-      val off = le32(10)
-      val w = le32(18)
-      val h = le32(22)
-      if (le16(28) != 24 || le32(30) != 0 || w <= 0 || h <= 0 || off < 54) None
-      else {
-        val stride = ((w * 3 + 3) / 4) * 4
-        if (off.toLong + stride.toLong * h > b.length) None
-        else {
-          var sb = 0L; var sg = 0L; var sr = 0L
-          var y = 0
-          while (y < h) {
-            val row = off + y * stride
-            var x = 0
-            while (x < w) {
-              val p = row + x * 3
-              sb += u(p); sg += u(p + 1); sr += u(p + 2)
-              x += 1
-            }
-            y += 1
-          }
-          // bottom-up storage: the IMAGE's top-left pixel is the FIRST
-          // pixel of the LAST row in file order
-          val tl = off + (h - 1) * stride
-          Some(BmpPixels(id, w, h, sb, sg, sr, u(tl), u(tl + 1), u(tl + 2)))
-        }
+    if (b.length < 54 || !hasAt(b, 0, "BM")) return None
+    val off = Bytes.le32(b, 10)
+    val w = Bytes.le32(b, 18)
+    val h = Bytes.le32(b, 22)
+    if (Bytes.le16(b, 28) != 24 || Bytes.le32(b, 30) != 0 || w <= 0 ||
+      h <= 0 || off < 54) return None
+    // Long: 3w overflows an Int for w >= 2^29, and the header is untrusted
+    val strideL = (w * 3L + 3) / 4 * 4
+    if (off + strideL * h > b.length) return None
+    // the whole pixel array is inside b, so the fold reads unchecked
+    val stride = strideL.toInt
+    var sb = 0L; var sg = 0L; var sr = 0L
+    var y = 0
+    while (y < h) {
+      val row = off + y * stride
+      var p = row
+      while (p < row + 3 * w) {
+        sb += b(p) & 0xff; sg += b(p + 1) & 0xff; sr += b(p + 2) & 0xff
+        p += 3
       }
+      y += 1
     }
+    // bottom-up storage: the IMAGE's top-left pixel is the FIRST
+    // pixel of the LAST row in file order
+    val tl = off + (h - 1) * stride
+    Some(BmpPixels(id, w, h, sb, sg, sr,
+      b(tl) & 0xff, b(tl + 1) & 0xff, b(tl + 2) & 0xff))
   }
 
   /** BMP-pixel twin of [[decodeBatches]]. */
@@ -608,9 +586,7 @@ object Multimodal {
 
   def parseWavSamples(id: Long, b: Array[Byte]): Option[WavSamples] =
     parseWav(id, b).flatMap { m =>
-      def u(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u(i) | (u(i + 1) << 8)
-      if (le16(20) != 1 || m.channels != 1 || m.bitsPerSample != 16) None
+      if (Bytes.le16(b, 20) != 1 || m.channels != 1 || m.bitsPerSample != 16) None
       else if (44L + 2L * m.nSamples > b.length) None
       else if (m.nSamples == 0) Some(WavSamples(id, 0L, 0, 0, 0L))
       else {
@@ -618,8 +594,7 @@ object Multimodal {
         var mn = Int.MaxValue; var mx = Int.MinValue; var sum = 0L
         var i = 0
         while (i < n) {
-          val raw = le16(44 + 2 * i)
-          val v = if (raw >= 0x8000) raw - 0x10000 else raw
+          val v = Bytes.le16(b, 44 + 2 * i).toShort.toInt // signed
           if (v < mn) mn = v
           if (v > mx) mx = v
           sum += v
@@ -682,38 +657,34 @@ object Multimodal {
     * format 6 or 7; anything else (or a chunk running past EOF) → None.
     */
   def parseWavG711(id: Long, b: Array[Byte]): Option[G711Samples] = {
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def le16(i: Int) = { val lo = u(i); val hi = u(i + 1); if (lo < 0 || hi < 0) -1 else lo | (hi << 8) }
-    def le32(i: Int): Long = {
-      val a = u(i); val c = u(i + 1); val d = u(i + 2); val e = u(i + 3)
-      if (a < 0 || c < 0 || d < 0 || e < 0) -1L
-      else a | (c.toLong << 8) | (d.toLong << 16) | (e.toLong << 24)
-    }
-    if (b.length < 12 || u(0) != 'R' || u(1) != 'I' || u(2) != 'F' ||
-      u(3) != 'F' || u(8) != 'W' || u(9) != 'A' || u(10) != 'V' ||
-      u(11) != 'E') return None
-    var pos = 12
+    if (!hasAt(b, 0, "RIFF") || !hasAt(b, 8, "WAVE")) return None
     var fmtCode = -1
     var channels = -1
     var bits = -1
     var dataOff = -1
     var dataLen = -1
-    while ((dataOff < 0 || fmtCode < 0) && pos + 8 <= b.length) {
-      val len = le32(pos + 4)
-      if (len < 0 || pos + 8 + len > b.length) return None
-      if (u(pos) == 'f' && u(pos + 1) == 'm' && u(pos + 2) == 't' &&
-        u(pos + 3) == ' ') {
-        if (len < 16) return None
-        fmtCode = le16(pos + 8)
-        channels = le16(pos + 10)
-        bits = le16(pos + 22)
-      } else if (u(pos) == 'd' && u(pos + 1) == 'a' && u(pos + 2) == 't' &&
-        u(pos + 3) == 'a') {
-        dataOff = pos + 8
-        dataLen = len.toInt
+    val walked = Bytes.total {
+      val r = new Reader(b, 12, b.length)
+      while ((dataOff < 0 || fmtCode < 0) && r.remaining >= 8) {
+        val tag = r.pos
+        r.skip(4)
+        val len = r.len(r.le32u())
+        val body = r.sub(len)
+        if (hasAt(b, tag, "fmt ")) {
+          if (body.remaining < 16) damage()
+          fmtCode = body.le16()
+          channels = body.le16()
+          body.skip(10)
+          bits = body.le16()
+        } else if (hasAt(b, tag, "data")) {
+          dataOff = body.pos
+          dataLen = body.remaining
+        }
+        // RIFF chunks are word-aligned; a missing final pad byte is EOF
+        if ((len & 1) == 1 && r.remaining > 0) r.skip(1)
       }
-      pos += 8 + len.toInt + (len.toInt & 1) // RIFF chunks are word-aligned
     }
+    if (walked.isEmpty) return None
     if (fmtCode != 6 && fmtCode != 7) return None
     if (channels != 1 || bits != 8 || dataOff < 0) return None
     val law = if (fmtCode == 7) "ulaw" else "alaw"
@@ -721,10 +692,10 @@ object Multimodal {
     var mn = Int.MaxValue
     var mx = Int.MinValue
     var sum = 0L
-    var i = 0
-    while (i < dataLen) {
-      val v = if (fmtCode == 7) ulawExpand(u(dataOff + i))
-      else alawExpand(u(dataOff + i))
+    var i = dataOff
+    while (i < dataOff + dataLen) {
+      val v = if (fmtCode == 7) ulawExpand(b(i) & 0xff)
+      else alawExpand(b(i) & 0xff)
       if (v < mn) mn = v
       if (v > mx) mx = v
       sum += v
@@ -761,43 +732,43 @@ object Multimodal {
     * bad frame id, frame running past the tag, unsupported version
     * or an extended header — yields Nil (totality law).
     */
-  def parseId3v2(id: Long, b: Array[Byte]): Seq[Id3Frame] = {
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    if (u(0) != 'I' || u(1) != 'D' || u(2) != '3') return Nil
-    val ver = u(3)
-    if (ver != 3 && ver != 4) return Nil
-    val flags = u(5)
-    if ((flags & 0x40) != 0) return Nil // extended header: route away
+  def parseId3v2(id: Long, b: Array[Byte]): Seq[Id3Frame] = Bytes.total {
+    val r = new Reader(b, 0, b.length)
+    if (!hasAt(b, 0, "ID3")) damage()
+    r.skip(3)
+    val ver = r.u8()
+    if (ver != 3 && ver != 4) damage()
+    r.skip(1) // revision
+    val flags = r.u8()
+    if ((flags & 0x40) != 0) damage() // extended header: route away
     // tag-level unsynchronisation (0x80): every 0xFF,0x00 pair in the
     // tag is an escape — the frame strides below would be wrong by one
     // byte per escape. Route away rather than walk with wrong strides.
-    if ((flags & 0x80) != 0) return Nil
-    def ss32(i: Int): Int = {
-      val a = u(i); val c = u(i + 1); val d = u(i + 2); val e = u(i + 3)
-      if (a < 0 || c < 0 || d < 0 || e < 0 ||
-        ((a | c | d | e) & 0x80) != 0) -1 // syncsafe bytes keep bit 7 clear
-      else a << 21 | c << 14 | d << 7 | e
+    if ((flags & 0x80) != 0) damage()
+    /** 28-bit syncsafe integer: 7 bits per byte, bit 7 always clear. */
+    def syncsafe(s: Reader): Int = {
+      val v = s.be32()
+      if ((v & 0x80808080) != 0) damage()
+      (v >>> 24) << 21 | (v >> 16 & 0x7f) << 14 | (v >> 8 & 0x7f) << 7 |
+        v & 0x7f
     }
-    def be32(i: Int): Int = {
-      val a = u(i); val c = u(i + 1); val d = u(i + 2); val e = u(i + 3)
-      if (a < 0 || c < 0 || d < 0 || e < 0) -1
-      else a << 24 | c << 16 | d << 8 | e
-    }
-    val size = ss32(6)
-    if (size < 0 || 10 + size > b.length) return Nil
+    val size = syncsafe(r)
+    val tag = r.sub(r.len(size))
     val audioOff = 10L + size + (if ((flags & 0x10) != 0) 10 else 0)
     val out = scala.collection.mutable.ArrayBuffer.empty[Id3Frame]
-    var p = 10
-    val end = 10 + size
     var done = false
-    while (!done && p + 10 <= end) {
-      if (u(p) == 0) done = true // padding: the tag's tail is zeros
+    while (!done && tag.remaining >= 10) {
+      val p = tag.pos
+      if (b(p) == 0) done = true // padding: the tag's tail is zeros
       else {
         val fid = new String(b, p, 4, java.nio.charset.StandardCharsets.US_ASCII)
         if (!fid.forall(ch => (ch >= 'A' && ch <= 'Z') ||
-          (ch >= '0' && ch <= '9'))) return Nil
-        val fsize = if (ver == 4) ss32(p + 4) else be32(p + 4)
-        if (fsize < 0 || p + 10 + fsize > end) return Nil
+          (ch >= '0' && ch <= '9'))) damage()
+        tag.skip(4)
+        val fsize = if (ver == 4) syncsafe(tag) else tag.be32()
+        tag.skip(1) // status flags
+        val fmtFlags = tag.u8()
+        val body = tag.sub(tag.len(fsize))
         // Format-flag byte (p+9): a compressed / encrypted / per-frame-
         // unsynced / length-indicated frame stores TRANSFORMED bytes —
         // surfacing them as text would be silent garbage. The declared
@@ -808,29 +779,26 @@ object Multimodal {
         // indicator.) Grouping counts too: a grouped frame prepends one
         // group-id byte, so reading body[0] as the text encoding would
         // surface text shifted by one byte — silent garbage.
-        val fmtFlags = u(p + 9)
         val transformed =
           if (ver == 4) (fmtFlags & 0x4f) != 0 else (fmtFlags & 0xe0) != 0
         if (!transformed && fid.startsWith("T") && fsize >= 1) {
-          val enc = u(p + 10)
-          val cs = enc match {
+          val cs = body.u8() match {
             case 0 => "ISO-8859-1"
             case 3 => "UTF-8"
             case _ => null // UTF-16 variants: stride, don't misdecode
           }
           if (cs != null) {
-            var len = fsize - 1
+            var len = body.remaining
             // text frames may be NUL-terminated; the terminator is not text
-            while (len > 0 && u(p + 10 + len) == 0) len -= 1
+            while (len > 0 && b(body.pos + len - 1) == 0) len -= 1
             out += Id3Frame(id, ver, size, fid,
-              new String(b, p + 11, len, cs), audioOff)
+              new String(b, body.pos, len, cs), audioOff)
           }
         }
-        p += 10 + fsize
       }
     }
     out.toSeq
-  }
+  }.getOrElse(Nil)
 
   /** ID3 twin of [[decodeBatches]]: zero shuffles. */
   def decodeId3Batches(payloads: Dataset[Payload]): Dataset[Id3Frame] = {
@@ -867,67 +835,54 @@ object Multimodal {
     * clips to the image bounds). None on non-8-bit samples, mixed
     * strip+tile tags, or any malformation (totality law).
     */
-  def parseTiffPixels(id: Long, b: Array[Byte]): Option[TiffPixels] = {
-    def u8(i: Long): Int =
-      if (i >= 0 && i < b.length) b(i.toInt) & 0xff else -1
-    if (b.length < 8) return None
-    val le = u8(0) == 'I' && u8(1) == 'I'
-    val be = u8(0) == 'M' && u8(1) == 'M'
-    def u16(i: Long): Int = {
-      val a = u8(i); val c = u8(i + 1)
-      if (a < 0 || c < 0) -1 else if (le) a | (c << 8) else (a << 8) | c
-    }
-    def u32(i: Long): Long = {
-      val a = u16(i); val c = u16(i + 2)
-      if (a < 0 || c < 0) -1L
-      else if (le) a | (c.toLong << 16) else (a.toLong << 16) | c
-    }
-    if (!(le || be) || u16(2) != 42) return None
-    val ifd = u32(4)
-    if (ifd < 0 || ifd + 2 > b.length) return None
-    val n = u16(ifd)
+  def parseTiffPixels(id: Long, b: Array[Byte]): Option[TiffPixels] =
+    Bytes.total(tiffPixels(id, b)).flatten
+
+  private def tiffPixels(id: Long, b: Array[Byte]): Option[TiffPixels] = {
+    val t = new TiffBytes(b)
+    val ifd = t.long(4)
+    val n = t.short(ifd)
     if (n <= 0 || ifd + 2 + 12L * n + 4 > b.length) return None
     // tag lookup over the sorted entry table
     def entry(tag: Int): Long = { // byte pos of the 12-byte entry, or -1
       var i = 0
       while (i < n) {
         val p = ifd + 2 + 12L * i
-        if (u16(p) == tag) return p
+        if (t.short(p) == tag) return p
         i += 1
       }
       -1L
     }
-    // scalar value: SHORT(3) or LONG(4), count 1, left-justified field
+    // scalar value: SHORT(3) or LONG(4), count 1, left-justified field;
+    // any other shape is malformed
     def scalar(tag: Int, default: Long): Long = {
       val p = entry(tag)
       if (p < 0) return default
-      val typ = u16(p + 2)
-      if (u32(p + 4) != 1L) return -1L
-      typ match {
-        case 3 => u16(p + 8).toLong
-        case 4 => u32(p + 8)
-        case _ => -1L
+      if (t.long(p + 4) != 1L) damage()
+      t.short(p + 2) match {
+        case 3 => t.short(p + 8).toLong
+        case 4 => t.long(p + 8)
+        case _ => damage()
       }
     }
     // typed array: inline when it fits the 4-byte field, else pointed-to
     def array(tag: Int): Array[Long] = {
       val p = entry(tag)
       if (p < 0) return null
-      val typ = u16(p + 2)
-      val cnt = u32(p + 4)
+      val typ = t.short(p + 2)
+      val cnt = t.long(p + 4)
       val size = typ match { case 3 => 2L; case 4 => 4L; case _ => return null }
       if (cnt <= 0 || cnt > (1 << 20)) return null
-      val at = if (cnt * size <= 4) p + 8 else u32(p + 8)
-      if (at < 0 || at + cnt * size > b.length) return null
+      val at = if (cnt * size <= 4) p + 8 else t.long(p + 8)
+      if (at + cnt * size > b.length) return null
       Array.tabulate(cnt.toInt)(i =>
-        if (typ == 3) u16(at + 2L * i).toLong else u32(at + 4L * i))
+        if (typ == 3) t.short(at + 2L * i).toLong else t.long(at + 4L * i))
     }
     val width = scalar(256, -1L)
     val height = scalar(257, -1L)
     val compression = scalar(259, 1L)
     val photometric = scalar(262, -1L)
     val spp = scalar(277, 1L)
-    val rowsPerStrip = scalar(278, 0xffffffffL) // default: one strip
     val planar = scalar(284, 1L)
     val predictor = scalar(317, 1L)
     if (width <= 0 || height <= 0 || width * height > (1L << 26)) return None
@@ -992,6 +947,7 @@ object Multimodal {
       }
 
     if (!tiled) {
+      val rowsPerStrip = scalar(278, 0xffffffffL) // default: one strip
       val offsets = array(273)
       val counts = array(279)
       if (offsets == null || counts == null ||
@@ -1288,94 +1244,12 @@ object Multimodal {
                            pix: (Int, Int, Int) => Int,
                            compression: Int,
                            planar: Int = 1): Array[Byte] = {
-    require(w > 0 && h > 0, "positive dims")
-    require(channels == 1 || channels == 3, "gray or RGB")
     require(compression == 5 || compression == 32773, "LZW or PackBits")
-    require(planar == 1 || (planar == 2 && channels == 3),
-      "planar=2 is an RGB layout")
-    val segChans = if (planar == 2) 1 else channels
-    val rowBytes = w * segChans
-    val predictor = if (compression == 5) 2 else 1
-    /** One plane's rows (chunky: the interleaved image, plane = -1). */
-    def rawOf(plane: Int): Array[Byte] = {
-      val raw = new Array[Byte](rowBytes * h)
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until segChans)
-        raw(y * rowBytes + x * segChans + c) =
-          (pix(if (plane < 0) c else plane, x, y) & 0xff).toByte
-      if (predictor == 2) { // difference right-to-left, lag segChans
-        for (y <- 0 until h; i <- (rowBytes - 1) until (segChans - 1) by -1) {
-          val base = y * rowBytes
-          raw(base + i) =
-            ((raw(base + i) - raw(base + i - segChans)) & 0xff).toByte
-        }
-      }
-      raw
-    }
+    val img = TiffImage(w, h, channels, pix, compression, planar)
     val r1 = (h + 1) / 2 // strip 0 rows
-    val rowPairs = Seq((0, r1), (r1, h - r1)).filter(_._2 > 0)
-    val planes = if (planar == 2) Seq(0, 1, 2) else Seq(-1)
-    val strips = for (p <- planes; raw = rawOf(p);
-                      (fromRow, rows) <- rowPairs) yield {
-      val part = java.util.Arrays.copyOfRange(raw, fromRow * rowBytes,
-        (fromRow + rows) * rowBytes)
-      if (compression == 5) tiffLzwEncode(part)
-      else {
-        val bos = new java.io.ByteArrayOutputStream()
-        for (r <- 0 until rows)
-          bos.write(packBitsEncodeRow(java.util.Arrays.copyOfRange(
-            part, r * rowBytes, (r + 1) * rowBytes)))
-        bos.toByteArray
-      }
-    }
-    // layout: header(8) | strip bytes (padded even) | IFD | value arrays
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    val stripOff = new Array[Long](strips.length)
-    var at = 8L
-    for (i <- strips.indices) { stripOff(i) = at; at += strips(i).length }
-    if (at % 2 == 1) at += 1 // IFD must start on a word boundary
-    val ifdAt = at
-    val photometric = if (channels == 3) 2 else 1
-    // tags, ascending: 256,257,258,259,262,273,277,278,279,284,[317]
-    val nEntries = 10 + (if (predictor == 2) 1 else 0)
-    val arrAt = ifdAt + 2 + 12L * nEntries + 4
-    val nStrips = strips.length
-    // external arrays: strip offsets (LONG[n]), counts (LONG[n]),
-    // bits-per-sample (SHORT[3], RGB only)
-    out.write('I'); out.write('I'); le16(42); le32(ifdAt)
-    for (s <- strips) out.write(s)
-    if ((8L + strips.map(_.length.toLong).sum) % 2 == 1) out.write(0)
-    le16(nEntries)
-    def entry(tag: Int, typ: Int, cnt: Int, value: Long): Unit = {
-      le16(tag); le16(typ); le32(cnt)
-      if (typ == 3 && cnt == 1) { le16(value.toInt); le16(0) }
-      else le32(value)
-    }
-    val bitsAt = arrAt + (if (nStrips > 1) 8L * nStrips else 0L)
-    entry(256, 3, 1, w)
-    entry(257, 3, 1, h)
-    if (channels == 3) entry(258, 3, 3, bitsAt)
-    else entry(258, 3, 1, 8)
-    entry(259, 3, 1, compression)
-    entry(262, 3, 1, photometric)
-    entry(273, 4, nStrips, if (nStrips == 1) stripOff(0) else arrAt)
-    entry(277, 3, 1, channels)
-    entry(278, 3, 1, r1)
-    entry(279, 4, nStrips,
-      if (nStrips == 1) strips(0).length else arrAt + 4L * nStrips)
-    entry(284, 3, 1, planar)
-    if (predictor == 2) entry(317, 3, 1, 2)
-    le32(0) // next IFD
-    if (nStrips > 1) {
-      for (o <- stripOff) le32(o)
-      for (s <- strips) le32(s.length)
-    }
-    if (channels == 3) { le16(8); le16(8); le16(8) }
-    out.toByteArray
+    val strips = for (p <- img.planes; (y0, rows) <- Seq((0, r1), (r1, h - r1))
+                      if rows > 0) yield img.segment(p, 0, y0, w, rows, 0)
+    img.file(strips, Seq(278 -> r1), 273, 279)
   }
 
   /** Write a little-endian TILED TIFF (§15): fixed `tileW x tileL`
@@ -1389,100 +1263,114 @@ object Multimodal {
                       pix: (Int, Int, Int) => Int, compression: Int,
                       tileW: Int = 16, tileL: Int = 16,
                       pad: Int = 0, planar: Int = 1): Array[Byte] = {
-    require(w > 0 && h > 0, "positive dims")
-    require(channels == 1 || channels == 3, "gray or RGB")
     require(compression == 1 || compression == 5 || compression == 32773,
       "none, LZW or PackBits")
     require(tileW > 0 && tileL > 0 && tileW % 16 == 0 && tileL % 16 == 0,
       "tile dims are positive multiples of 16")
+    val img = TiffImage(w, h, channels, pix, compression, planar)
+    // §15 leaves edge-tile padding content UNDEFINED — writing a
+    // caller-visible nonzero pad makes a decoder that forgets to
+    // clip produce wrong sums instead of silently passing
+    val tiles = for (p <- img.planes; ty <- 0 until (h + tileL - 1) / tileL;
+                     tx <- 0 until (w + tileW - 1) / tileW)
+      yield img.segment(p, tx * tileW, ty * tileL, tileW, tileL, pad)
+    img.file(tiles, Seq(322 -> tileW, 323 -> tileL), 324, 325)
+  }
+
+  /** What the two TIFF writers share: segment encoding and the file
+    * layout around the segments.
+    */
+  private final case class TiffImage(w: Int, h: Int, channels: Int,
+                                     pix: (Int, Int, Int) => Int,
+                                     compression: Int, planar: Int) {
+    require(w > 0 && h > 0, "positive dims")
+    require(channels == 1 || channels == 3, "gray or RGB")
     require(planar == 1 || (planar == 2 && channels == 3),
       "planar=2 is an RGB layout")
-    val across = (w + tileW - 1) / tileW
-    val down = (h + tileL - 1) / tileL
-    val predictor = if (compression == 5) 2 else 1
-    val segChans = if (planar == 2) 1 else channels
-    val tileRowBytes = tileW * segChans
-    val planes = if (planar == 2) Seq(0, 1, 2) else Seq(-1)
-    val tiles = for (p <- planes; ty <- 0 until down; tx <- 0 until across)
-      yield {
-        // §15 leaves edge-tile padding content UNDEFINED — writing a
-        // caller-visible nonzero pad makes a decoder that forgets to
-        // clip produce wrong sums instead of silently passing
-        val raw = Array.fill[Byte](tileRowBytes * tileL)((pad & 0xff).toByte)
-        for (r <- 0 until tileL; x0 <- 0 until tileW; c <- 0 until segChans) {
-          val x = tx * tileW + x0
-          val y = ty * tileL + r
-          if (x < w && y < h)
-            raw(r * tileRowBytes + x0 * segChans + c) =
-              (pix(if (p < 0) c else p, x, y) & 0xff).toByte
-        }
-        if (predictor == 2) {
-          for (r <- 0 until tileL;
-               i <- (tileRowBytes - 1) until (segChans - 1) by -1) {
-            val base = r * tileRowBytes
+    private val segChans = if (planar == 2) 1 else channels
+    /** Plane-major segment order; -1 is the one chunky plane. */
+    val planes: Seq[Int] = if (planar == 2) Seq(0, 1, 2) else Seq(-1)
+
+    /** One encoded segment: the `segW x segH` block at (`sx`, `sy`) of
+      * `plane`, `pad` past the image edge. LZW applies the
+      * horizontal-differencing predictor first; PackBits packs each
+      * row on its own.
+      */
+    def segment(plane: Int, sx: Int, sy: Int, segW: Int, segH: Int,
+                pad: Int): Array[Byte] = {
+      val rowBytes = segW * segChans
+      val raw = Array.fill[Byte](rowBytes * segH)((pad & 0xff).toByte)
+      for (r <- 0 until segH; x0 <- 0 until segW; c <- 0 until segChans) {
+        val x = sx + x0
+        val y = sy + r
+        if (x < w && y < h)
+          raw(r * rowBytes + x0 * segChans + c) =
+            (pix(if (plane < 0) c else plane, x, y) & 0xff).toByte
+      }
+      compression match {
+        case 1 => raw
+        case 5 =>
+          // difference right-to-left, lag segChans
+          for (r <- 0 until segH; i <- (rowBytes - 1) until (segChans - 1) by -1) {
+            val base = r * rowBytes
             raw(base + i) =
               ((raw(base + i) - raw(base + i - segChans)) & 0xff).toByte
           }
-        }
-        compression match {
-          case 1 => raw
-          case 5 => tiffLzwEncode(raw)
-          case _ =>
-            val bos = new java.io.ByteArrayOutputStream()
-            for (r <- 0 until tileL)
-              bos.write(packBitsEncodeRow(java.util.Arrays.copyOfRange(
-                raw, r * tileRowBytes, (r + 1) * tileRowBytes)))
-            bos.toByteArray
-        }
+          tiffLzwEncode(raw)
+        case _ =>
+          val bos = new java.io.ByteArrayOutputStream()
+          for (r <- 0 until segH)
+            bos.write(packBitsEncodeRow(java.util.Arrays.copyOfRange(
+              raw, r * rowBytes, (r + 1) * rowBytes)))
+          bos.toByteArray
       }
-    // layout: header(8) | tile bytes (padded even) | IFD | value arrays
-    val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
     }
-    val tileOff = new Array[Long](tiles.length)
-    var at = 8L
-    for (i <- tiles.indices) { tileOff(i) = at; at += tiles(i).length }
-    if (at % 2 == 1) at += 1 // IFD must start on a word boundary
-    val ifdAt = at
-    val photometric = if (channels == 3) 2 else 1
-    // tags, ascending: 256,257,258,259,262,277,284,[317],322,323,324,325
-    val nEntries = 11 + (if (predictor == 2) 1 else 0)
-    val arrAt = ifdAt + 2 + 12L * nEntries + 4
-    val nTiles = tiles.length
-    out.write('I'); out.write('I'); le16(42); le32(ifdAt)
-    for (t <- tiles) out.write(t)
-    if ((8L + tiles.map(_.length.toLong).sum) % 2 == 1) out.write(0)
-    le16(nEntries)
-    def ent(tag: Int, typ: Int, cnt: Int, value: Long): Unit = {
-      le16(tag); le16(typ); le32(cnt)
-      if (typ == 3 && cnt == 1) { le16(value.toInt); le16(0) }
-      else le32(value)
+
+    /** The file: header(8) | segments (padded even) | IFD | value
+      * arrays (segment offsets and counts when there are several, then
+      * RGB's bits-per-sample). `layout` holds the layout's own SHORT
+      * tags; `offTag`/`countTag` name its offsets/byte-counts pair.
+      */
+    def file(segs: Seq[Array[Byte]], layout: Seq[(Int, Int)],
+             offTag: Int, countTag: Int): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      val segOff = segs.scanLeft(8L)(_ + _.length)
+      val ifdAt = segOff.last + segOff.last % 2 // IFD on a word boundary
+      val n = segs.length
+      val predictor = compression == 5
+      val nEntries = 9 + layout.length + (if (predictor) 1 else 0)
+      val arrAt = ifdAt + 2 + 12L * nEntries + 4
+      val bitsAt = arrAt + (if (n > 1) 8L * n else 0L)
+      val entries = (Seq( // (tag, type, count, value)
+        (256, 3, 1, w.toLong), (257, 3, 1, h.toLong),
+        if (channels == 3) (258, 3, 3, bitsAt) else (258, 3, 1, 8L),
+        (259, 3, 1, compression.toLong),
+        (262, 3, 1, if (channels == 3) 2L else 1L), // photometric
+        (offTag, 4, n, if (n == 1) segOff(0) else arrAt),
+        (277, 3, 1, channels.toLong),
+        (countTag, 4, n, if (n == 1) segs(0).length.toLong else arrAt + 4L * n),
+        (284, 3, 1, planar.toLong)) ++
+        (if (predictor) Seq((317, 3, 1, 2L)) else Nil) ++
+        layout.map { case (tag, v) => (tag, 3, 1, v.toLong) }).sortBy(_._1)
+      out.write('I'); out.write('I'); Bytes.putLe16(out, 42)
+      Bytes.putLe32(out, ifdAt.toInt)
+      segs.foreach(out.write)
+      if (ifdAt > segOff.last) out.write(0)
+      Bytes.putLe16(out, nEntries)
+      for ((tag, typ, cnt, v) <- entries) {
+        Bytes.putLe16(out, tag); Bytes.putLe16(out, typ)
+        Bytes.putLe32(out, cnt)
+        if (typ == 3 && cnt == 1) { Bytes.putLe16(out, v.toInt); Bytes.putLe16(out, 0) }
+        else Bytes.putLe32(out, v.toInt)
+      }
+      Bytes.putLe32(out, 0) // next IFD
+      if (n > 1) {
+        segOff.init.foreach(o => Bytes.putLe32(out, o.toInt))
+        segs.foreach(s => Bytes.putLe32(out, s.length))
+      }
+      if (channels == 3) Seq(8, 8, 8).foreach(Bytes.putLe16(out, _))
+      out.toByteArray
     }
-    val bitsAt = arrAt + (if (nTiles > 1) 8L * nTiles else 0L)
-    ent(256, 3, 1, w)
-    ent(257, 3, 1, h)
-    if (channels == 3) ent(258, 3, 3, bitsAt)
-    else ent(258, 3, 1, 8)
-    ent(259, 3, 1, compression)
-    ent(262, 3, 1, photometric)
-    ent(277, 3, 1, channels)
-    ent(284, 3, 1, planar)
-    if (predictor == 2) ent(317, 3, 1, 2)
-    ent(322, 3, 1, tileW)
-    ent(323, 3, 1, tileL)
-    ent(324, 4, nTiles, if (nTiles == 1) tileOff(0) else arrAt)
-    ent(325, 4, nTiles,
-      if (nTiles == 1) tiles(0).length else arrAt + 4L * nTiles)
-    le32(0) // next IFD
-    if (nTiles > 1) {
-      for (o <- tileOff) le32(o)
-      for (t <- tiles) le32(t.length)
-    }
-    if (channels == 3) { le16(8); le16(8); le16(8) }
-    out.toByteArray
   }
 
   // ---------------------------------------------------------------------
@@ -1563,9 +1451,8 @@ object Multimodal {
     */
   def parseY4mFrames(id: Long, b: Array[Byte], step: Int): Option[Seq[Y4mFrame]] = {
     require(step >= 1, s"frame-sampling step must be >= 1, got $step")
-    val magic = "YUV4MPEG2 ".getBytes("US-ASCII")
-    if (b.length < magic.length + 5 ||
-      !magic.indices.forall(i => b(i) == magic(i))) None
+    val magic = "YUV4MPEG2 "
+    if (b.length < magic.length + 5 || !hasAt(b, 0, magic)) None
     else {
       var nl = magic.length
       while (nl < b.length && b(nl) != '\n') nl += 1
@@ -1593,7 +1480,6 @@ object Multimodal {
             else if (frameBytesL > b.length) None
             else {
               val frameBytes = frameBytesL.toInt
-              val marker = "FRAME".getBytes("US-ASCII")
               val acc = scala.collection.mutable.ArrayBuffer
                 .empty[(Int, Long, Int)] // (frame_idx, sum, tl)
               var pos = nl + 1
@@ -1601,10 +1487,9 @@ object Multimodal {
               var bad = false
               while (!bad && pos < b.length) {
                 // FRAME marker line (may carry params up to \n)
-                if (pos + marker.length > b.length ||
-                  !marker.indices.forall(i => b(pos + i) == marker(i))) bad = true
+                if (!hasAt(b, pos, "FRAME")) bad = true
                 else {
-                  var e = pos + marker.length
+                  var e = pos + 5
                   while (e < b.length && b(e) != '\n') e += 1
                   val data = e + 1
                   if (e >= b.length || data + frameBytes > b.length) bad = true
@@ -1699,21 +1584,27 @@ object Multimodal {
     * dimensions for a w×h image follow as ceil((w−x0)/dx) etc.; empty
     * passes contribute no scanlines at all.
     */
-  private val adam7: Array[(Int, Int, Int, Int)] = Array(
+  private val adam7: Seq[(Int, Int, Int, Int)] = Seq(
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
-  /** The (passWidth, passHeight) sequence a w×h image deflates as:
-    * one full-frame entry when not interlaced, the non-empty Adam7
-    * passes otherwise. Shared by encoder and decoder — the geometry
-    * cannot drift between them.
+  /** One independently filtered sub-image: pixel (i, j) of the pass is
+    * image pixel (x0 + i·dx, y0 + j·dy), and the pass is `w × h`.
     */
-  private def pngPasses(w: Int, h: Int,
-                        interlaced: Boolean): Seq[(Int, Int)] =
-    if (!interlaced) Seq((w, h))
-    else adam7.toSeq.map { case (x0, y0, dx, dy) =>
-      (math.max(0, (w - x0 + dx - 1) / dx), math.max(0, (h - y0 + dy - 1) / dy))
-    }.filter(p => p._1 > 0 && p._2 > 0)
+  private final case class PngPass(x0: Int, y0: Int, dx: Int, dy: Int,
+                                   w: Int, h: Int)
+
+  /** The passes a w×h image deflates as: the whole frame when not
+    * interlaced, the non-empty Adam7 passes otherwise. Shared by
+    * encoder and decoder — the geometry cannot drift between them.
+    */
+  private def pngPasses(w: Int, h: Int, interlaced: Boolean): Seq[PngPass] =
+    (if (interlaced) adam7 else Seq((0, 0, 1, 1))).map { case (x0, y0, dx, dy) =>
+      PngPass(x0, y0, dx, dy, math.max(0, (w - x0 + dx - 1) / dx),
+        math.max(0, (h - y0 + dy - 1) / dy))
+    }.filter(p => p.w > 0 && p.h > 0)
+
+  private val PngSignature = "\u0089PNG\r\n\u001a\n"
 
   /** Minimal spec-valid PNG writer for 8-bit RGB: `pixel(x, y)` supplies
     * (r, g, b), `filterOfRow(y)` picks the §9 filter type (0–4) applied
@@ -1728,84 +1619,12 @@ object Multimodal {
                    filterOfRow: Int => Int,
                    interlaced: Boolean = false): Array[Byte] = {
     require(width > 0 && height > 0, "encodePngRgb: dims must be positive")
-    val bpp = 3
-    // filter one pass image into `out` (prev resets per pass: §8.2 says
-    // each pass filters as an independent image)
-    def filterPass(pw: Int, ph: Int, px: (Int, Int) => (Int, Int, Int),
-                   out: java.io.ByteArrayOutputStream): Unit = {
-      val rowLen = pw * bpp
-      val prev = new Array[Int](rowLen)
-      val cur = new Array[Int](rowLen)
-      var y = 0
-      while (y < ph) {
-        var x = 0
-        while (x < pw) {
-          val (r, g, b) = px(x, y)
-          cur(x * 3) = r & 0xff; cur(x * 3 + 1) = g & 0xff
-          cur(x * 3 + 2) = b & 0xff
-          x += 1
-        }
-        // floorMod: a negative callback value must still land in 0..4
-        // (JVM `%` keeps the sign and would blow up the match below)
-        val ft = Math.floorMod(filterOfRow(y), 5)
-        out.write(ft)
-        var i = 0
-        while (i < rowLen) {
-          val left = if (i >= bpp) cur(i - bpp) else 0
-          val up = prev(i)
-          val upLeft = if (i >= bpp) prev(i - bpp) else 0
-          val f = ft match {
-            case 0 => cur(i)
-            case 1 => cur(i) - left
-            case 2 => cur(i) - up
-            case 3 => cur(i) - (left + up) / 2
-            case 4 => cur(i) - paeth(left, up, upLeft)
-          }
-          out.write(f & 0xff)
-          i += 1
-        }
-        System.arraycopy(cur, 0, prev, 0, rowLen)
-        y += 1
-      }
+    writePng(width, height, 8, 2, null, interlaced, filterOfRow) {
+      (cur, i, x, y) =>
+        val (r, g, b) = pixel(x, y)
+        cur(i * 3) = r & 0xff; cur(i * 3 + 1) = g & 0xff
+        cur(i * 3 + 2) = b & 0xff
     }
-    val rawOut = new java.io.ByteArrayOutputStream(
-      height * (1 + width * bpp) + 64)
-    if (!interlaced) filterPass(width, height, pixel, rawOut)
-    else adam7.foreach { case (x0, y0, dx, dy) =>
-      val pw = math.max(0, (width - x0 + dx - 1) / dx)
-      val ph = math.max(0, (height - y0 + dy - 1) / dy)
-      if (pw > 0 && ph > 0)
-        filterPass(pw, ph, (i, j) => pixel(x0 + i * dx, y0 + j * dy), rawOut)
-    }
-    val raw = rawOut.toByteArray
-    // zlib-deflate the filtered stream (Deflater's default wrapper IS
-    // RFC 1950 zlib, Adler-32 trailer included)
-    val deflater = new java.util.zip.Deflater(6)
-    deflater.setInput(raw); deflater.finish()
-    val zBuf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!deflater.finished()) zBuf.write(tmp, 0, deflater.deflate(tmp))
-    deflater.end()
-    val out = new java.io.ByteArrayOutputStream(zBuf.size() + 64)
-    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n'))
-    def chunk(ctype: String, data: Array[Byte]): Unit = {
-      def be32(v: Long): Array[Byte] = Array(
-        (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      out.write(be32(data.length.toLong))
-      val t = ctype.getBytes("US-ASCII")
-      out.write(t); out.write(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(t); crc.update(data)
-      out.write(be32(crc.getValue))
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte).put(2.toByte).put(0.toByte).put(0.toByte)
-      .put(if (interlaced) 1.toByte else 0.toByte)
-    chunk("IHDR", ihdr.array())
-    chunk("IDAT", zBuf.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
   }
 
   /** Minimal spec-valid PALETTED PNG writer (color type 3): `palette`
@@ -1826,29 +1645,48 @@ object Multimodal {
       "paletted depths are 1/2/4/8")
     val nPal = palette.length / 3
     require(nPal <= (1 << depth), "palette must fit the depth")
-    def filterPass(pw: Int, ph: Int, idx: (Int, Int) => Int,
-                   out: java.io.ByteArrayOutputStream): Unit = {
-      val rowLen = (pw * depth + 7) / 8
+    writePng(width, height, depth, 3, palette, interlaced, filterOfRow) {
+      (cur, i, x, y) =>
+        val v = indexOf(x, y)
+        require(v >= 0 && v < nPal, "index beyond palette")
+        val bit = i * depth
+        cur(bit >> 3) |= v << (8 - depth - (bit & 7))
+    }
+  }
+
+  /** The writer both PNG encoders share. Each pass row starts zeroed
+    * and `put(cur, i, x, y)` packs pass pixel `i`, image pixel (x, y),
+    * into it; the row is then filtered with `filterOfRow(pass row)` at
+    * the §9 lag of ceil(bits per pixel / 8) bytes. The filtered stream
+    * is deflated once and framed as signature, IHDR, [PLTE,] IDAT and
+    * IEND, each chunk with its CRC-32.
+    */
+  private def writePng(width: Int, height: Int, depth: Int, color: Int,
+                       plte: Array[Byte], interlaced: Boolean,
+                       filterOfRow: Int => Int)
+                      (put: (Array[Int], Int, Int, Int) => Unit): Array[Byte] = {
+    val bitsPerPixel = if (color == 2) 3 * depth else depth
+    val lag = math.max(1, bitsPerPixel / 8)
+    val rawOut = new java.io.ByteArrayOutputStream()
+    for (p <- pngPasses(width, height, interlaced)) {
+      // prev resets per pass: §8.2 filters each pass as its own image
+      val rowLen = (p.w * bitsPerPixel + 7) / 8
       val prev = new Array[Int](rowLen)
       val cur = new Array[Int](rowLen)
       var y = 0
-      while (y < ph) {
+      while (y < p.h) {
         java.util.Arrays.fill(cur, 0)
         var x = 0
-        while (x < pw) {
-          val v = idx(x, y)
-          require(v >= 0 && v < nPal, "index beyond palette")
-          val bit = x * depth
-          cur(bit >> 3) |= v << (8 - depth - (bit & 7))
-          x += 1
-        }
+        while (x < p.w) { put(cur, x, p.x0 + x * p.dx, p.y0 + y * p.dy); x += 1 }
+        // floorMod: a negative callback value must still land in 0..4
+        // (JVM `%` keeps the sign and would blow up the match below)
         val ft = Math.floorMod(filterOfRow(y), 5)
-        out.write(ft)
+        rawOut.write(ft)
         var i = 0
         while (i < rowLen) {
-          val left = if (i >= 1) cur(i - 1) else 0
+          val left = if (i >= lag) cur(i - lag) else 0
           val up = prev(i)
-          val upLeft = if (i >= 1) prev(i - 1) else 0
+          val upLeft = if (i >= lag) prev(i - lag) else 0
           val f = ft match {
             case 0 => cur(i)
             case 1 => cur(i) - left
@@ -1856,23 +1694,16 @@ object Multimodal {
             case 3 => cur(i) - (left + up) / 2
             case 4 => cur(i) - paeth(left, up, upLeft)
           }
-          out.write(f & 0xff)
+          rawOut.write(f & 0xff)
           i += 1
         }
         System.arraycopy(cur, 0, prev, 0, rowLen)
         y += 1
       }
     }
-    val rawOut = new java.io.ByteArrayOutputStream()
-    if (!interlaced) filterPass(width, height, indexOf, rawOut)
-    else adam7.foreach { case (x0, y0, dx, dy) =>
-      val pw = math.max(0, (width - x0 + dx - 1) / dx)
-      val ph = math.max(0, (height - y0 + dy - 1) / dy)
-      if (pw > 0 && ph > 0)
-        filterPass(pw, ph, (i, j) => indexOf(x0 + i * dx, y0 + j * dy),
-          rawOut)
-    }
     val raw = rawOut.toByteArray
+    // zlib-deflate the filtered stream (Deflater's default wrapper IS
+    // RFC 1950 zlib, Adler-32 trailer included)
     val deflater = new java.util.zip.Deflater(6)
     deflater.setInput(raw); deflater.finish()
     val zBuf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
@@ -1880,23 +1711,22 @@ object Multimodal {
     while (!deflater.finished()) zBuf.write(tmp, 0, deflater.deflate(tmp))
     deflater.end()
     val out = new java.io.ByteArrayOutputStream(zBuf.size() + 64)
-    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n'))
+    out.write(PngSignature.getBytes("ISO-8859-1"))
     def chunk(ctype: String, data: Array[Byte]): Unit = {
-      def be32(v: Long): Array[Byte] = Array(
-        (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      out.write(be32(data.length.toLong))
+      Bytes.putBe32(out, data.length)
       val t = ctype.getBytes("US-ASCII")
       out.write(t); out.write(data)
       val crc = new java.util.zip.CRC32()
       crc.update(t); crc.update(data)
-      out.write(be32(crc.getValue))
+      Bytes.putBe32(out, crc.getValue.toInt)
     }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(depth.toByte).put(3.toByte).put(0.toByte).put(0.toByte)
-      .put(if (interlaced) 1.toByte else 0.toByte)
-    chunk("IHDR", ihdr.array())
-    chunk("PLTE", palette)
+    val ihdr = new java.io.ByteArrayOutputStream(13)
+    Bytes.putBe32(ihdr, width); Bytes.putBe32(ihdr, height)
+    ihdr.write(depth); ihdr.write(color)
+    ihdr.write(0); ihdr.write(0) // deflate, adaptive filtering
+    ihdr.write(if (interlaced) 1 else 0)
+    chunk("IHDR", ihdr.toByteArray)
+    if (plte != null) chunk("PLTE", plte)
     chunk("IDAT", zBuf.toByteArray)
     chunk("IEND", Array.emptyByteArray)
     out.toByteArray
@@ -1909,13 +1739,13 @@ object Multimodal {
     * oversized inflate, unknown filter type, missing IDAT/IEND —
     * returns None, keeping the byte-walk totality law.
     */
-  def parsePngPixels(id: Long, b: Array[Byte]): Option[PngPixels] = {
-    val sig = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
-    def u(i: Int) = b(i) & 0xff
-    def be32(i: Int) = (u(i).toLong << 24) | (u(i + 1) << 16) | (u(i + 2) << 8) | u(i + 3)
-    if (b.length < 8 || (0 until 8).exists(i => u(i) != sig(i))) return None
+  def parsePngPixels(id: Long, b: Array[Byte]): Option[PngPixels] =
+    Bytes.total(pngPixels(id, b)).flatten
+
+  private def pngPixels(id: Long, b: Array[Byte]): Option[PngPixels] = {
+    if (!hasAt(b, 0, PngSignature)) return None
     // ---- chunk walk (CRC-verified) -----------------------------------
-    var pos = 8
+    val r = new Reader(b, 8, b.length)
     var w = 0; var h = 0
     var depth = 0; var color = -1
     var interlaced = false
@@ -1923,20 +1753,19 @@ object Multimodal {
     var plte: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
     while (!sawIend) {
-      if (pos + 12 > b.length) return None // len+type+crc minimum
-      val clen = be32(pos)
-      if (clen < 0 || clen > Int.MaxValue - 16 || pos + 12 + clen > b.length) return None
-      val dataOff = pos + 8
+      val clen = r.be32u()
+      val typeAt = r.pos
+      r.skip(4)
+      val data = r.sub(r.len(clen))
       val crc = new java.util.zip.CRC32()
-      crc.update(b, pos + 4, 4 + clen.toInt)
-      if (crc.getValue != be32(dataOff + clen.toInt)) return None
-      val ctype = new String(b, pos + 4, 4, "US-ASCII")
+      crc.update(b, typeAt, 4 + data.remaining)
+      if (crc.getValue != r.be32u()) return None
+      val ctype = new String(b, typeAt, 4, "US-ASCII")
       if (!sawIhdr) {
         if (ctype != "IHDR" || clen != 13) return None
-        w = be32(dataOff).toInt; h = be32(dataOff + 4).toInt
-        val (comp, filt, interlace) =
-          (u(dataOff + 10), u(dataOff + 11), u(dataOff + 12))
-        depth = u(dataOff + 8); color = u(dataOff + 9)
+        w = data.be32(); h = data.be32()
+        depth = data.u8(); color = data.u8()
+        val comp = data.u8(); val filt = data.u8(); val interlace = data.u8()
         val okLayout = (color == 2 && depth == 8) ||
           (color == 0 && depth == 8) ||
           (color == 3 && (depth == 1 || depth == 2 || depth == 4 ||
@@ -1950,15 +1779,13 @@ object Multimodal {
           // §11.2.3: before IDAT, 1..256 entries of 3 bytes, at most one
           if (plte != null || idat.size() > 0) return None
           if (clen == 0 || clen % 3 != 0 || clen > 768) return None
-          plte = java.util.Arrays.copyOfRange(b, dataOff,
-            dataOff + clen.toInt)
+          plte = data.bytes(data.remaining)
         case "IDAT" =>
           if (color == 3 && plte == null) return None // indices need it
-          idat.write(b, dataOff, clen.toInt)
+          idat.write(b, data.pos, data.remaining)
         case "IEND" => if (clen != 0) return None else sawIend = true
         case _ => () // ancillary chunks (tEXt, pHYs, …) are skippable
       }
-      pos = dataOff + clen.toInt + 4
     }
     if (idat.size() == 0) return None
     // ---- inflate (JDK zlib; Adler-32 verified by Inflater) -----------
@@ -1971,7 +1798,7 @@ object Multimodal {
       else if (color == 0) pw
       else (pw * depth + 7) / 8
     val passes = pngPasses(w, h, interlaced)
-    val expect = passes.map { case (pw, ph) => ph * (1 + rowBytesOf(pw)) }.sum
+    val expect = passes.map(p => p.h * (1 + rowBytesOf(p.w))).sum
     val raw = new Array[Byte](expect)
     val inflater = new java.util.zip.Inflater()
     inflater.setInput(idat.toByteArray)
@@ -2004,7 +1831,8 @@ object Multimodal {
     var base = 0
     var pi = 0
     while (pi < passes.length) {
-      val (pw, ph) = passes(pi)
+      val pw = passes(pi).w
+      val ph = passes(pi).h
       val rowLen = rowBytesOf(pw)
       val prev = new Array[Int](rowLen)
       val cur = new Array[Int](rowLen)
@@ -2146,7 +1974,7 @@ object Multimodal {
     val minCode = gctBits
     val out = new java.io.ByteArrayOutputStream()
     def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v); w8(v >> 8) } // little-endian
+    def w16(v: Int): Unit = Bytes.putLe16(out, v)
     out.write("GIF89a".getBytes("US-ASCII"))
     w16(width); w16(height)
     w8(0x80 | 0x70 | (gctBits - 1)) // GCT present, 8-bit color res, size
@@ -2243,39 +2071,37 @@ object Multimodal {
     * sub-blocks, out-of-range or premature LZW code, pixel overflow or
     * shortfall — returns None (byte-walk totality law).
     */
-  def parseGifPixels(id: Long, b: Array[Byte]): Option[GifPixels] = {
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def le16(i: Int) = { val lo = u(i); val hi = u(i + 1); if (lo < 0 || hi < 0) -1 else lo | (hi << 8) }
-    if (b.length < 13) return None
-    val sig = new String(b, 0, 6, "US-ASCII")
-    if (sig != "GIF87a" && sig != "GIF89a") return None
-    val packed = u(10)
-    var pos = 13
+  def parseGifPixels(id: Long, b: Array[Byte]): Option[GifPixels] =
+    Bytes.total(gifPixels(id, b)).flatten
+
+  private def gifPixels(id: Long, b: Array[Byte]): Option[GifPixels] = {
+    if (!hasAt(b, 0, "GIF87a") && !hasAt(b, 0, "GIF89a")) return None
+    val r = new Reader(b, 10, b.length)
+    val packed = r.u8()
+    r.skip(2) // background index, aspect
     var gctOff = -1; var gctBits0 = 0
     if ((packed & 0x80) != 0) {
       gctBits0 = (packed & 0x07) + 1
-      gctOff = pos
-      pos += 3 * (1 << gctBits0)
+      gctOff = r.pos
+      r.skip(3 * (1 << gctBits0))
     }
     // ---- block walk to the first image descriptor --------------------
     var w = -1; var h = -1; var lctOff = -1; var lctBits = 0
     while (w < 0) {
-      u(pos) match {
+      r.u8() match {
         case 0x21 => // extension: label, then sub-blocks to a 0 terminator
-          pos += 2
-          var n = u(pos)
-          while (n > 0) { pos += 1 + n; n = u(pos) }
-          if (n < 0) return None
-          pos += 1
+          r.skip(1)
+          var n = r.u8()
+          while (n > 0) { r.skip(n); n = r.u8() }
         case 0x2c =>
-          w = le16(pos + 5); h = le16(pos + 7)
-          val ip = u(pos + 9)
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26) || ip < 0) return None
-          pos += 10
+          r.skip(4) // left, top
+          w = r.le16(); h = r.le16()
+          val ip = r.u8()
+          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
           if ((ip & 0x80) != 0) {
             lctBits = (ip & 0x07) + 1
-            lctOff = pos
-            pos += 3 * (1 << lctBits)
+            lctOff = r.pos
+            r.skip(3 * (1 << lctBits))
           }
         case _ => return None // trailer before any image, or garbage
       }
@@ -2288,21 +2114,21 @@ object Multimodal {
     // stats would have to de-permute.
     val (palOff, palBits) = if (lctOff >= 0) (lctOff, lctBits) else (gctOff, gctBits0)
     if (palOff < 0) return None // no color table at all
-    val palN = 1 << palBits
-    if (palOff + 3 * palN > b.length) return None
+    val palN = 1 << palBits // the walk above skipped it: it is inside b
     // ---- LZW expand ---------------------------------------------------
-    val minCode = u(pos); pos += 1
+    val minCode = r.u8()
     if (minCode < 2 || minCode > 8) return None
     val clearCode = 1 << minCode
     val endCode = clearCode + 1
     // concatenate the data sub-blocks
     val z = new java.io.ByteArrayOutputStream()
-    var n = u(pos)
+    var n = r.u8()
     while (n > 0) {
-      if (pos + 1 + n > b.length) return None
-      z.write(b, pos + 1, n); pos += 1 + n; n = u(pos)
+      val at = r.pos
+      r.skip(n)
+      z.write(b, at, n)
+      n = r.u8()
     }
-    if (n < 0) return None
     val zb = z.toByteArray
     // dictionary as prefix-chain arrays: entry = (prefix code, tail index)
     val prefixOf = new Array[Int](4096)
@@ -2314,7 +2140,8 @@ object Multimodal {
     var emitted = 0L
     def pal(ix: Int): Int = // packed rgb, -1 if out of palette
       if (ix < 0 || ix >= palN) -1
-      else (u(palOff + 3 * ix) << 16) | (u(palOff + 3 * ix + 1) << 8) | u(palOff + 3 * ix + 2)
+      else (b(palOff + 3 * ix) & 0xff) << 16 |
+        (b(palOff + 3 * ix + 1) & 0xff) << 8 | b(palOff + 3 * ix + 2) & 0xff
     // emit one root index through the palette into the sums
     def fold(ix: Int): Boolean = {
       val rgb = pal(ix)
@@ -2610,14 +2437,15 @@ object Multimodal {
       0xea, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
       0xf9, 0xfa))
 
-  /** Orthonormal 1-D DCT basis, `dctC(u)(x) = c(u)/2 · cos((2x+1)uπ/16)`
+  /** Orthonormal 1-D DCT basis, `dctC(u·8 + x) = c(u)/2 · cos((2x+1)uπ/16)`
     * (c(0)=1/√2, else 1). Forward 2-D DCT = C·s·Cᵀ; inverse = Cᵀ·S·C —
     * exactly T.81 A.3.3's definition. Shared by encoder and decoder;
     * the Python fixture builds the same matrix from the same formula.
     */
-  private lazy val dctC: Array[Array[Double]] = Array.tabulate(8, 8) { (u, x) =>
+  private lazy val dctC: Array[Double] = Array.tabulate(64) { i =>
+    val u = i / 8
     val cu = if (u == 0) math.sqrt(0.125) else 0.5
-    cu * math.cos((2 * x + 1) * u * math.Pi / 16)
+    cu * math.cos((2 * (i % 8) + 1) * u * math.Pi / 16)
   }
 
   /** Canonical code assignment (T.81 Annex C): symbols get consecutive
@@ -2645,6 +2473,162 @@ object Multimodal {
   /** Magnitude category (T.81 F.1.2.1): bit length of |v|, 0 for v=0. */
   private def jpegSsss(v: Int): Int =
     32 - Integer.numberOfLeadingZeros(math.abs(v))
+
+  /** What the two JPEG encoders share: the headers, the forward DCT
+    * and the entropy-coded segment writer — MSB-first bits with 0xFF
+    * byte stuffing (F.1.2.3), 1-bit padding to the byte, and the DC
+    * difference and AC run-length codings (F.1.2.1–F.1.2.2) over the
+    * Annex K tables, table set 0 for luma and 1 for chroma.
+    */
+  private final class JpegOut(pixel: (Int, Int, Int) => Int) {
+    val out = new java.io.ByteArrayOutputStream(1024)
+    private var bitBuf = 0L
+    private var bitCnt = 0
+    private val dcCodes = Array(jpegHuffCodes(jpegDcLuma), jpegHuffCodes(jpegDcChroma))
+    private val acCodes = Array(jpegHuffCodes(jpegAcLuma), jpegHuffCodes(jpegAcChroma))
+    private val block = new Array[Double](64)
+    private val tmp = new Array[Double](64)
+
+    def w8(v: Int): Unit = out.write(v & 0xff)
+    def w16(v: Int): Unit = Bytes.putBe16(out, v)
+    def marker(m: Int): Unit = { w8(0xff); w8(m) }
+
+    /** SOI, JFIF APP0, DQT, the frame header `sof` (0xC0 baseline,
+      * 0xC2 progressive; luma sampled `hs × vs`, chroma 1×1) and DHT.
+      */
+    def headers(sof: Int, w: Int, h: Int, nComp: Int, hs: Int, vs: Int): Unit = {
+      marker(0xd8) // SOI
+      marker(0xe0) // APP0 / JFIF
+      w16(16); out.write("JFIF".getBytes("US-ASCII")); w8(0)
+      w8(1); w8(1) // version 1.1
+      w8(0); w16(1); w16(1) // aspect-ratio units, 1:1
+      w8(0); w8(0) // no thumbnail
+      val qtabs = if (nComp == 1) Seq(jpegQLuma) else Seq(jpegQLuma, jpegQChroma)
+      marker(0xdb) // DQT: all tables in one segment, zigzag order
+      w16(2 + 65 * qtabs.length)
+      qtabs.zipWithIndex.foreach { case (q, id) =>
+        w8(id) // 8-bit precision (high nibble 0) + table id
+        jpegZigzag.foreach(n => w8(q(n)))
+      }
+      marker(sof)
+      w16(8 + 3 * nComp)
+      w8(8); w16(h); w16(w); w8(nComp) // precision, LINES first, then width
+      for (c <- 0 until nComp) {
+        w8(c + 1) // component id
+        w8(if (c == 0) hs << 4 | vs else 0x11) // sampling factors
+        w8(if (c == 0) 0 else 1) // quant table
+      }
+      val huffs = // (class, id, table)
+        if (nComp == 1) Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma))
+        else Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma),
+          (0, 1, jpegDcChroma), (1, 1, jpegAcChroma))
+      marker(0xc4) // DHT: all tables in one segment
+      w16(2 + huffs.map(17 + _._3.vals.length).sum)
+      huffs.foreach { case (cls, id, t) =>
+        w8(cls << 4 | id)
+        t.bits.foreach(w8)
+        t.vals.foreach(w8)
+      }
+    }
+
+    /** One 8×8 data unit of component `c` at block coords (bx, by) on
+      * that component's OWN grid, clamped to (cw, ch) — edge-replicated
+      * — level-shifted, transformed and quantized into `coef(base ..
+      * base + 63)` in natural order.
+      */
+    def fdct(c: Int, bx: Int, by: Int, cw: Int, ch: Int,
+             coef: Array[Int], base: Int): Unit = {
+      val q = if (c == 0) jpegQLuma else jpegQChroma
+      // row-major [v/y][u/x] — the orientation the zigzag sequence and
+      // DQT tables are defined in (natural index n = v*8 + u)
+      var y = 0
+      while (y < 8) {
+        var x = 0
+        while (x < 8) {
+          val px = math.min(bx * 8 + x, cw - 1)
+          val py = math.min(by * 8 + y, ch - 1)
+          block(y * 8 + x) = (pixel(c, px, py) & 0xff) - 128.0
+          x += 1
+        }
+        y += 1
+      }
+      // tmp = C·s (over y), S = tmp·Cᵀ (over x)
+      var v = 0
+      while (v < 8) {
+        var x = 0
+        while (x < 8) {
+          var s = 0.0
+          var yy = 0
+          while (yy < 8) { s += dctC(v * 8 + yy) * block(yy * 8 + x); yy += 1 }
+          tmp(v * 8 + x) = s
+          x += 1
+        }
+        v += 1
+      }
+      v = 0
+      while (v < 8) {
+        var uu = 0
+        while (uu < 8) {
+          var s = 0.0
+          var x = 0
+          while (x < 8) { s += tmp(v * 8 + x) * dctC(uu * 8 + x); x += 1 }
+          // quantize: floor(S/Q + 0.5) — the fixture mirrors this
+          coef(base + v * 8 + uu) = math.floor(s / q(v * 8 + uu) + 0.5).toInt
+          uu += 1
+        }
+        v += 1
+      }
+    }
+
+    def putBits(code: Int, len: Int): Unit = {
+      bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
+      bitCnt += len
+      while (bitCnt >= 8) {
+        val byte = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
+        w8(byte)
+        if (byte == 0xff) w8(0) // byte stuffing
+        bitCnt -= 8
+      }
+    }
+
+    /** Pad to the byte with 1-bits (before a marker). */
+    def flush(): Unit = if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
+
+    /** A DC difference: category code, then the magnitude bits. */
+    def dc(diff: Int, c: Int): Unit = {
+      val s0 = jpegSsss(diff)
+      val (code, len) = dcCodes(if (c == 0) 0 else 1)(s0)
+      putBits(code, len)
+      if (s0 > 0) putBits(if (diff >= 0) diff else diff + (1 << s0) - 1, s0)
+    }
+
+    /** The AC band 1–63 of the block at `coef(base)`: (run, size)
+      * symbols, ZRL for 16-zero runs, EOB when zeros end the block.
+      */
+    def acBand(coef: Array[Int], base: Int, c: Int): Unit = {
+      val codes = acCodes(if (c == 0) 0 else 1)
+      var run = 0
+      var k = 1
+      while (k < 64) {
+        val v = coef(base + jpegZigzag(k))
+        if (v == 0) run += 1
+        else {
+          while (run > 15) {
+            val (zc, zl) = codes(0xf0); putBits(zc, zl); run -= 16
+          }
+          val s = jpegSsss(v)
+          val (ac, al) = codes(run << 4 | s)
+          putBits(ac, al)
+          putBits(if (v >= 0) v else v + (1 << s) - 1, s)
+          run = 0
+        }
+        k += 1
+      }
+      if (run > 0) {
+        val (ec, el) = codes(0x00); putBits(ec, el)
+      }
+    }
+  }
 
   /** Baseline JFIF encoder. `pixel(c, x, y)` supplies component `c`'s
     * sample (0–255) — for `nComp=1` a luma plane, for `nComp=3` the
@@ -2674,181 +2658,38 @@ object Multimodal {
     // Y sampling factors: 2×2 for 4:2:0, 2×1 for 4:2:2, 1×1 otherwise
     val hs = if (chroma420 || chroma422) 2 else 1
     val vs = if (chroma420) 2 else 1
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) } // big-endian
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-
-    marker(0xd8) // SOI
-    marker(0xe0) // APP0 / JFIF
-    w16(16); out.write("JFIF".getBytes("US-ASCII")); w8(0)
-    w8(1); w8(1) // version 1.1
-    w8(0); w16(1); w16(1) // aspect-ratio units, 1:1
-    w8(0); w8(0) // no thumbnail
-
-    val qtabs = if (nComp == 1) Seq(jpegQLuma) else Seq(jpegQLuma, jpegQChroma)
-    marker(0xdb) // DQT: both tables in one segment, zigzag order
-    w16(2 + 65 * qtabs.length)
-    qtabs.zipWithIndex.foreach { case (q, id) =>
-      w8(id) // 8-bit precision (high nibble 0) + table id
-      jpegZigzag.foreach(n => w8(q(n)))
-    }
-
-    marker(0xc0) // SOF0: baseline DCT
-    w16(8 + 3 * nComp)
-    w8(8); w16(h); w16(w); w8(nComp) // precision, LINES first, then width
-    for (c <- 0 until nComp) {
-      w8(c + 1) // component id
-      w8(if (c == 0) hs << 4 | vs else 0x11) // sampling factors
-      w8(if (c == 0) 0 else 1) // quant table
-    }
-
-    val huffs = // (class, id, table)
-      if (nComp == 1) Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma))
-      else Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma),
-        (0, 1, jpegDcChroma), (1, 1, jpegAcChroma))
-    marker(0xc4) // DHT: all tables in one segment
-    w16(2 + huffs.map(17 + _._3.vals.length).sum)
-    huffs.foreach { case (cls, id, t) =>
-      w8(cls << 4 | id)
-      t.bits.foreach(w8)
-      t.vals.foreach(w8)
-    }
-
+    val o = new JpegOut(pixel)
+    o.headers(0xc0, w, h, nComp, hs, vs)
     if (restartInterval > 0) {
-      marker(0xdd) // DRI: restart every N MCUs
-      w16(4); w16(restartInterval)
+      o.marker(0xdd) // DRI: restart every N MCUs
+      o.w16(4); o.w16(restartInterval)
     }
-
-    marker(0xda) // SOS
-    w16(6 + 2 * nComp)
-    w8(nComp)
+    o.marker(0xda) // SOS
+    o.w16(6 + 2 * nComp)
+    o.w8(nComp)
     for (c <- 0 until nComp) {
-      w8(c + 1)
-      w8(if (c == 0) 0x00 else 0x11) // DC/AC table ids
+      o.w8(c + 1)
+      o.w8(if (c == 0) 0x00 else 0x11) // DC/AC table ids
     }
-    w8(0); w8(63); w8(0) // full spectral selection, no approximation
+    o.w8(0); o.w8(63); o.w8(0) // full spectral selection, no approximation
 
     // ---- entropy-coded data --------------------------------------------
-    val dcCodes = Array(jpegHuffCodes(jpegDcLuma), jpegHuffCodes(jpegDcChroma))
-    val acCodes = Array(jpegHuffCodes(jpegAcLuma), jpegHuffCodes(jpegAcChroma))
-    var bitBuf = 0L
-    var bitCnt = 0
-    def putBits(code: Int, len: Int): Unit = {
-      bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
-      bitCnt += len
-      while (bitCnt >= 8) {
-        val byte = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
-        w8(byte)
-        if (byte == 0xff) w8(0) // byte stuffing
-        bitCnt -= 8
-      }
-    }
-    val block = Array.ofDim[Double](8, 8)
-    val tmp = Array.ofDim[Double](8, 8)
+    val blk = new Array[Int](64)
     val pred = new Array[Int](nComp)
-    val zz = new Array[Int](64)
-    // One 8×8 data unit of component `c` at block coords (bx, by) on
-    // that component's OWN grid, clamped to (cw, ch) — edge-replicated.
     def emitBlock(c: Int, bx: Int, by: Int, cw: Int, ch: Int): Unit = {
-      val tsel = if (c == 0) 0 else 1
-      val q = if (c == 0) jpegQLuma else jpegQChroma
-      // load + level shift, edge-replicated. Matrices are row-major
-      // [v/y][u/x] — the orientation the zigzag sequence and DQT
-      // tables are defined in (natural index n = v*8 + u).
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          val px = math.min(bx * 8 + x, cw - 1)
-          val py = math.min(by * 8 + y, ch - 1)
-          block(y)(x) = (pixel(c, px, py) & 0xff) - 128.0
-          x += 1
-        }
-        y += 1
-      }
-      // forward DCT: tmp = C·s (over y), S = tmp·Cᵀ (over x)
-      var v = 0
-      while (v < 8) {
-        var x = 0
-        while (x < 8) {
-          var s = 0.0
-          var yy = 0
-          while (yy < 8) { s += dctC(v)(yy) * block(yy)(x); yy += 1 }
-          tmp(v)(x) = s
-          x += 1
-        }
-        v += 1
-      }
-      v = 0
-      while (v < 8) {
-        var uu = 0
-        while (uu < 8) {
-          var s = 0.0
-          var x = 0
-          while (x < 8) { s += tmp(v)(x) * dctC(uu)(x); x += 1 }
-          // quantize: floor(S/Q + 0.5) — the fixture mirrors this
-          block(v)(uu) = math.floor(s / q(v * 8 + uu) + 0.5)
-          uu += 1
-        }
-        v += 1
-      }
-      var k = 0
-      while (k < 64) { zz(k) = block(jpegZigzag(k) / 8)(jpegZigzag(k) % 8).toInt; k += 1 }
-      // DC: category + magnitude bits of the prediction diff
-      val diff = zz(0) - pred(c)
-      pred(c) = zz(0)
-      val s0 = jpegSsss(diff)
-      val (dcode, dlen) = dcCodes(tsel)(s0)
-      putBits(dcode, dlen)
-      if (s0 > 0)
-        putBits(if (diff >= 0) diff else diff + (1 << s0) - 1, s0)
-      // AC: (run, size) symbols with ZRL for 16-zero runs, EOB at end
-      var run = 0
-      k = 1
-      while (k < 64) {
-        val v = zz(k)
-        if (v == 0) run += 1
-        else {
-          while (run > 15) {
-            val (zc, zl) = acCodes(tsel)(0xf0); putBits(zc, zl); run -= 16
-          }
-          val s = jpegSsss(v)
-          val (ac, al) = acCodes(tsel)(run << 4 | s)
-          putBits(ac, al)
-          putBits(if (v >= 0) v else v + (1 << s) - 1, s)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) {
-        val (ec, el) = acCodes(tsel)(0x00); putBits(ec, el)
-      }
-    }
-    val totalMcus =
-      ((w + 8 * hs - 1) / (8 * hs)) * ((h + 8 * vs - 1) / (8 * vs))
-    var mcusDone = 0
-    var rstN = 0
-    // After every `restartInterval` MCUs (never after the last): byte-
-    // align with 1-bits, emit the cycling RSTm marker, reset every DC
-    // predictor (T.81 F.1.2.2.1 / E.1.4).
-    def afterMcu(): Unit = {
-      mcusDone += 1
-      if (restartInterval > 0 && mcusDone % restartInterval == 0 &&
-        mcusDone < totalMcus) {
-        if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-        marker(0xd0 + (rstN % 8))
-        rstN += 1
-        java.util.Arrays.fill(pred, 0)
-      }
+      o.fdct(c, bx, by, cw, ch, blk, 0)
+      o.dc(blk(0) - pred(c), c)
+      pred(c) = blk(0)
+      o.acBand(blk, 0, c)
     }
     // interleaved MCU: hs×vs Y blocks, then Cb, then Cr on their
-    // subsampled grids. (1,1) degenerates to one block per component —
-    // byte-identical to the original 4:4:4/grayscale emission order.
+    // subsampled grids. (1,1) degenerates to one block per component.
     val cw = (w + hs - 1) / hs
     val ch = (h + vs - 1) / vs
     val mcuCols = (w + 8 * hs - 1) / (8 * hs)
     val mcuRows = (h + 8 * vs - 1) / (8 * vs)
+    var mcusDone = 0
+    var rstN = 0
     var my = 0
     while (my < mcuRows) {
       var mx = 0
@@ -2867,14 +2708,24 @@ object Multimodal {
           emitBlock(c, mx, my, cw, ch)
           c += 1
         }
-        afterMcu()
+        // After every `restartInterval` MCUs (never after the last):
+        // byte-align with 1-bits, emit the cycling RSTm marker, reset
+        // every DC predictor (T.81 F.1.2.2.1 / E.1.4).
+        mcusDone += 1
+        if (restartInterval > 0 && mcusDone % restartInterval == 0 &&
+          mcusDone < mcuCols * mcuRows) {
+          o.flush()
+          o.marker(0xd0 + (rstN % 8))
+          rstN += 1
+          java.util.Arrays.fill(pred, 0)
+        }
         mx += 1
       }
       my += 1
     }
-    if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt) // 1-pad
-    marker(0xd9) // EOI
-    out.toByteArray
+    o.flush()
+    o.marker(0xd9) // EOI
+    o.out.toByteArray
   }
 
   /** PROGRESSIVE encoder (SOF2), spectral-selection script: one
@@ -2894,10 +2745,7 @@ object Multimodal {
     require(w > 0 && h > 0, s"bad jpeg geometry ${w}x$h")
     require(nComp == 1 || nComp == 3, s"1 or 3 components, got $nComp")
     require(!chroma420 || nComp == 3, "4:2:0 needs the 3-component layout")
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
+    val o = new JpegOut(pixel)
 
     // ---- geometry + quantized coefficients (one pass, reused by all
     // scans — the multi-scan structure repackages, never recomputes) ----
@@ -2913,186 +2761,41 @@ object Multimodal {
     val cHpx = Array.tabulate(nComp)(c => (h * cV(c) + vMax - 1) / vMax)
     val npW = Array.tabulate(nComp)(c => (cWpx(c) + 7) / 8)
     val npH = Array.tabulate(nComp)(c => (cHpx(c) + 7) / 8)
-    val block = Array.ofDim[Double](8, 8)
-    val tmp = Array.ofDim[Double](8, 8)
     val coefs = Array.tabulate(nComp) { c =>
-      val q = if (c == 0) jpegQLuma else jpegQChroma
       val arr = new Array[Int](blocksW(c) * blocksH(c) * 64)
-      var br = 0
-      while (br < blocksH(c)) {
-        var bc = 0
-        while (bc < blocksW(c)) {
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              val px = math.min(bc * 8 + x, cWpx(c) - 1)
-              val py = math.min(br * 8 + y, cHpx(c) - 1)
-              block(y)(x) = (pixel(c, px, py) & 0xff) - 128.0
-              x += 1
-            }
-            y += 1
-          }
-          var v = 0
-          while (v < 8) {
-            var x = 0
-            while (x < 8) {
-              var s = 0.0
-              var yy = 0
-              while (yy < 8) { s += dctC(v)(yy) * block(yy)(x); yy += 1 }
-              tmp(v)(x) = s
-              x += 1
-            }
-            v += 1
-          }
-          val base = (br * blocksW(c) + bc) * 64
-          v = 0
-          while (v < 8) {
-            var uu = 0
-            while (uu < 8) {
-              var s = 0.0
-              var x = 0
-              while (x < 8) { s += tmp(v)(x) * dctC(uu)(x); x += 1 }
-              arr(base + v * 8 + uu) =
-                math.floor(s / q(v * 8 + uu) + 0.5).toInt
-              uu += 1
-            }
-            v += 1
-          }
-          bc += 1
-        }
-        br += 1
-      }
+      for (br <- 0 until blocksH(c); bc <- 0 until blocksW(c))
+        o.fdct(c, bc, br, cWpx(c), cHpx(c), arr, (br * blocksW(c) + bc) * 64)
       arr
     }
-
-    // ---- headers -------------------------------------------------------
-    marker(0xd8)
-    marker(0xe0)
-    w16(16); out.write("JFIF".getBytes("US-ASCII")); w8(0)
-    w8(1); w8(1); w8(0); w16(1); w16(1); w8(0); w8(0)
-    val qtabs = if (nComp == 1) Seq(jpegQLuma) else Seq(jpegQLuma, jpegQChroma)
-    marker(0xdb)
-    w16(2 + 65 * qtabs.length)
-    qtabs.zipWithIndex.foreach { case (q, id) =>
-      w8(id); jpegZigzag.foreach(n => w8(q(n)))
-    }
-    marker(0xc2) // SOF2: progressive DCT
-    w16(8 + 3 * nComp)
-    w8(8); w16(h); w16(w); w8(nComp)
-    for (c <- 0 until nComp) {
-      w8(c + 1); w8(cH(c) << 4 | cV(c)); w8(if (c == 0) 0 else 1)
-    }
-    val huffs =
-      if (nComp == 1) Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma))
-      else Seq((0, 0, jpegDcLuma), (1, 0, jpegAcLuma),
-        (0, 1, jpegDcChroma), (1, 1, jpegAcChroma))
-    marker(0xc4)
-    w16(2 + huffs.map(17 + _._3.vals.length).sum)
-    huffs.foreach { case (cls, id, t) =>
-      w8(cls << 4 | id); t.bits.foreach(w8); t.vals.foreach(w8)
-    }
-
-    // ---- scans ---------------------------------------------------------
-    val dcCodes = Array(jpegHuffCodes(jpegDcLuma), jpegHuffCodes(jpegDcChroma))
-    val acCodes = Array(jpegHuffCodes(jpegAcLuma), jpegHuffCodes(jpegAcChroma))
-    var bitBuf = 0L
-    var bitCnt = 0
-    def putBits(code: Int, len: Int): Unit = {
-      bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
-      bitCnt += len
-      while (bitCnt >= 8) {
-        val byte = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
-        w8(byte)
-        if (byte == 0xff) w8(0)
-        bitCnt -= 8
-      }
-    }
-    def flushBits(): Unit =
-      if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
+    o.headers(0xc2, w, h, nComp, hMax, vMax)
 
     // DC scan: all components interleaved (non-interleaved when gray)
-    marker(0xda)
-    w16(6 + 2 * nComp)
-    w8(nComp)
-    for (c <- 0 until nComp) { w8(c + 1); w8(if (c == 0) 0x00 else 0x10) }
-    w8(0); w8(0); w8(0) // Ss=0 Se=0 Ah/Al=0
+    o.marker(0xda)
+    o.w16(6 + 2 * nComp)
+    o.w8(nComp)
+    for (c <- 0 until nComp) { o.w8(c + 1); o.w8(if (c == 0) 0x00 else 0x10) }
+    o.w8(0); o.w8(0); o.w8(0) // Ss=0 Se=0 Ah/Al=0
     val pred = new Array[Int](nComp)
-    def putDc(c: Int, br: Int, bc: Int): Unit = {
-      val dc = coefs(c)((br * blocksW(c) + bc) * 64)
-      val diff = dc - pred(c)
+    for (my <- 0 until mcuRows; mx <- 0 until mcuCols; c <- 0 until nComp;
+         dv <- 0 until cV(c); du <- 0 until cH(c)) {
+      val dc = coefs(c)(((my * cV(c) + dv) * blocksW(c) + mx * cH(c) + du) * 64)
+      o.dc(dc - pred(c), c)
       pred(c) = dc
-      val s0 = jpegSsss(diff)
-      val (code, len) = dcCodes(if (c == 0) 0 else 1)(s0)
-      putBits(code, len)
-      if (s0 > 0) putBits(if (diff >= 0) diff else diff + (1 << s0) - 1, s0)
     }
-    var my = 0
-    while (my < mcuRows) {
-      var mx = 0
-      while (mx < mcuCols) {
-        var c = 0
-        while (c < nComp) {
-          var dv = 0
-          while (dv < cV(c)) {
-            var du = 0
-            while (du < cH(c)) {
-              putDc(c, my * cV(c) + dv, mx * cH(c) + du)
-              du += 1
-            }
-            dv += 1
-          }
-          c += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    flushBits()
+    o.flush()
 
     // AC scans: the full 1–63 band per component, non-interleaved
-    var c = 0
-    while (c < nComp) {
-      marker(0xda)
-      w16(8)
-      w8(1); w8(c + 1); w8(if (c == 0) 0x00 else 0x01)
-      w8(1); w8(63); w8(0) // Ss=1 Se=63 Ah/Al=0
-      val codes = acCodes(if (c == 0) 0 else 1)
-      val arr = coefs(c)
-      var br = 0
-      while (br < npH(c)) {
-        var bc = 0
-        while (bc < npW(c)) {
-          val base = (br * blocksW(c) + bc) * 64
-          var run = 0
-          var k = 1
-          while (k < 64) {
-            val v = arr(base + jpegZigzag(k))
-            if (v == 0) run += 1
-            else {
-              while (run > 15) {
-                val (zc, zl) = codes(0xf0); putBits(zc, zl); run -= 16
-              }
-              val s = jpegSsss(v)
-              val (ac, al) = codes(run << 4 | s)
-              putBits(ac, al)
-              putBits(if (v >= 0) v else v + (1 << s) - 1, s)
-              run = 0
-            }
-            k += 1
-          }
-          if (run > 0) {
-            val (ec, el) = codes(0x00); putBits(ec, el) // EOB0: run of one
-          }
-          bc += 1
-        }
-        br += 1
-      }
-      flushBits()
-      c += 1
+    for (c <- 0 until nComp) {
+      o.marker(0xda)
+      o.w16(8)
+      o.w8(1); o.w8(c + 1); o.w8(if (c == 0) 0x00 else 0x01)
+      o.w8(1); o.w8(63); o.w8(0) // Ss=1 Se=63 Ah/Al=0
+      for (br <- 0 until npH(c); bc <- 0 until npW(c))
+        o.acBand(coefs(c), (br * blocksW(c) + bc) * 64, c) // EOB0: run of one
+      o.flush()
     }
-    marker(0xd9)
-    out.toByteArray
+    o.marker(0xd9)
+    o.out.toByteArray
   }
 
   /** Full baseline decode — see the section comment for scope. None on
@@ -3122,7 +2825,7 @@ object Multimodal {
     }
 
   /** Canonical Huffman decoder tables (T.81 Annex F mincode/maxcode/
-    * valptr), shared by the baseline and progressive entropy decoders.
+    * valptr).
     */
   private final case class JpegHuffDec(minCode: Array[Int],
       maxCode: Array[Int], valPtr: Array[Int], vals: Array[Int])
@@ -3150,21 +2853,19 @@ object Multimodal {
 
   /** Entropy bit reader with 0xFF-stuffing removal (F.1.2.3 inverse):
     * MSB-first bits; a stuffed FF 00 yields the FF data byte; any other
-    * marker mid-read flags `broken`. Shared by both entropy decoders.
+    * marker mid-read, or the end of `b`, flags `broken`.
     */
   private final class JpegBits(b: Array[Byte], var pos: Int) {
     var broken = false
     private var bitBuf = 0
     private var bitCnt = 0
-    private def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
     def nextBit(): Int = {
       if (bitCnt == 0) {
         if (pos >= b.length) { broken = true; return 0 }
-        val byte = u(pos)
+        val byte = b(pos) & 0xff
         pos += 1
         if (byte == 0xff) {
-          val nx = u(pos)
-          if (nx == 0) pos += 1 // stuffed 0xFF data byte
+          if (pos < b.length && b(pos) == 0) pos += 1 // stuffed 0xFF data byte
           else { broken = true; return 0 } // a marker mid-scan
         }
         bitBuf = byte
@@ -3200,12 +2901,11 @@ object Multimodal {
       */
     def expectRst(n: Int): Boolean = {
       bitCnt = 0
-      if (u(pos) == 0xff && u(pos + 1) == 0xd0 + (n % 8)) {
+      if (pos + 1 < b.length && (b(pos) & 0xff) == 0xff &&
+        (b(pos + 1) & 0xff) == 0xd0 + (n % 8)) {
         pos += 2; true
       } else false
     }
-    /** Byte-align (discarding pad bits) — called at scan end. */
-    def align(): Unit = bitCnt = 0
   }
 
   /** Decoded component planes. Each plane is block-padded to
@@ -3219,756 +2919,464 @@ object Multimodal {
       compW: Array[Int], compH: Array[Int], strides: Array[Int],
       planes: Array[Array[Byte]])
 
-  /** The raster-level decode behind [[parseJpegPixels]] — exposed to the
-    * spec for per-pixel cross-pinning against javax.imageio. Dispatches
-    * on the frame marker: SOF0 → the single-pass baseline decoder,
-    * SOF2 → the multi-scan progressive decoder. Any other SOFn → None.
+  /** The JPEG marker walk (T.81 B.1.1), shared by [[JpegCodec]] and the
+    * pixel decoder: SOI, then segments, each an FF (more FF fill bytes
+    * allowed) + a marker byte and, except for the standalone markers
+    * TEM, RSTn, SOI and EOI, a BE16 length that counts itself.
+    * `seg(marker, body)` sees each segment in order, with a Reader over
+    * its body (empty when standalone), and returns whether to go on; it
+    * may move `r`, as a scan does past its entropy-coded data. Running
+    * off the end, a length under 2 or a non-FF byte where a marker must
+    * start raises [[Bytes.Damage]].
     */
-  private[graft] def decodeJpegPlanes(b: Array[Byte]): Option[JpegRaster] = {
-    // light marker pre-walk to find the frame type (both decoders then
-    // re-parse from the top with their own scan structure)
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def be16(i: Int) = { val hi = u(i); val lo = u(i + 1); if (hi < 0 || lo < 0) -1 else hi << 8 | lo }
-    if (u(0) != 0xff || u(1) != 0xd8) return None
-    var pos = 2
-    var sof = -1
-    while (sof < 0) {
-      if (u(pos) != 0xff) return None
-      var m = u(pos + 1)
-      while (m == 0xff) { pos += 1; m = u(pos + 1) }
-      if (m < 0 || m == 0xd9 || m == 0xda) return None // no frame header
-      pos += 2
-      if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
-        sof = m
-      else {
-        val len = be16(pos)
-        if (len < 2 || pos + len > b.length) return None
-        pos += len
-      }
-    }
-    sof match {
-      case 0xc0 => decodeJpegBaselinePlanes(b)
-      case 0xc2 => decodeJpegProgressivePlanes(b)
-      case _ => None // other frame modes: route to a full stack
+  private def jpegWalk(r: Reader)(seg: (Int, Reader) => Boolean): Unit = {
+    if (r.u8() != 0xff || r.u8() != 0xd8) damage() // SOI
+    var go = true
+    while (go) {
+      if (r.u8() != 0xff) damage()
+      var m = r.u8()
+      while (m == 0xff) m = r.u8() // fill bytes
+      val standalone = m == 0x01 || (m >= 0xd0 && m <= 0xd9)
+      val len = if (standalone) 2 else r.be16()
+      if (len < 2) damage()
+      go = seg(m, r.sub(len - 2))
     }
   }
 
-  private def decodeJpegBaselinePlanes(b: Array[Byte])
-      : Option[JpegRaster] = {
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def be16(i: Int) = { val hi = u(i); val lo = u(i + 1); if (hi < 0 || lo < 0) -1 else hi << 8 | lo }
-    if (u(0) != 0xff || u(1) != 0xd8) return None // SOI
-    val qt = Array.ofDim[Array[Int]](4) // natural order after de-zigzag
-    val dcT = Array.ofDim[JpegHuffTable](4)
-    val acT = Array.ofDim[JpegHuffTable](4)
-    var width = 0
-    var height = 0
-    var nComp = 0
-    var compQ: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
+  /** Table state a scan reads: quantization tables (natural order) and
+    * Huffman decoders in slots 0–3, and the restart interval. DQT, DHT
+    * and DRI segments update it where the walk meets them, so a scan
+    * uses the tables defined before it.
+    */
+  private final class JpegTables {
+    val qt = new Array[Array[Int]](4)
+    val dc = new Array[JpegHuffDec](4)
+    val ac = new Array[JpegHuffDec](4)
     var restartInterval = 0
-    var sofSeen = false
-    var pos = 2
-    var scanAt = -1 // first entropy byte
-    var compDc: Array[Int] = null
-    var compAc: Array[Int] = null
-    while (scanAt < 0) {
-      if (u(pos) != 0xff) return None
-      var m = u(pos + 1)
-      while (m == 0xff) { pos += 1; m = u(pos + 1) } // fill bytes
-      if (m < 0) return None
-      pos += 2
-      m match {
-        case 0xd9 => return None // EOI before any scan
-        case 0xc0 => // SOF0 — baseline
-          val len = be16(pos)
-          if (len < 8 || pos + len > b.length) return None
-          if (u(pos + 2) != 8) return None // precision
-          height = be16(pos + 3); width = be16(pos + 5)
-          nComp = u(pos + 7)
-          if (width <= 0 || height <= 0) return None
-          if (width.toLong * height > (1L << 26)) return None // alloc cap
-          if (nComp != 1 && nComp != 3) return None
-          if (len != 8 + 3 * nComp) return None
-          compQ = new Array[Int](nComp)
-          compH = new Array[Int](nComp)
-          compV = new Array[Int](nComp)
-          for (c <- 0 until nComp) {
-            compH(c) = u(pos + 8 + 3 * c + 1) >> 4
-            compV(c) = u(pos + 8 + 3 * c + 1) & 0x0f
-            // sampling factors 1 or 2 per axis cover 4:4:4, 4:2:2 and
-            // 4:2:0 — everything the web's baseline encoders emit;
-            // exotic ratios route to a full stack
-            if (compH(c) < 1 || compH(c) > 2 ||
-              compV(c) < 1 || compV(c) > 2) return None
-            compQ(c) = u(pos + 8 + 3 * c + 2)
-            if (compQ(c) > 3) return None
-          }
-          if (nComp == 1 && (compH(0) != 1 || compV(0) != 1)) return None
-          sofSeen = true
-          pos += len
-        case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-             0xcb | 0xcd | 0xce | 0xcf =>
-          return None // non-baseline frame: route to a full stack
-        case 0xdb => // DQT: possibly several tables
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          var p = pos + 2
-          while (p < pos + len) {
-            val pq = u(p) >> 4
-            val tq = u(p) & 0x0f
-            if (pq != 0 || tq > 3 || p + 65 > pos + len) return None
-            val tab = new Array[Int](64)
-            var k = 0
-            while (k < 64) { tab(jpegZigzag(k)) = u(p + 1 + k); k += 1 }
-            qt(tq) = tab
-            p += 65
-          }
-          pos += len
-        case 0xc4 => // DHT: possibly several tables
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          var p = pos + 2
-          while (p < pos + len) {
-            val cls = u(p) >> 4
-            val th = u(p) & 0x0f
-            if (cls > 1 || th > 3 || p + 17 > pos + len) return None
-            val bits = Array.tabulate(16)(i => u(p + 1 + i))
-            val n = bits.sum
-            if (n > 256 || p + 17 + n > pos + len) return None
-            val vals = Array.tabulate(n)(i => u(p + 17 + i))
-            val t = JpegHuffTable(bits, vals)
-            if (cls == 0) dcT(th) = t else acT(th) = t
-            p += 17 + n
-          }
-          pos += len
-        case 0xdd => // DRI: restart interval in MCUs (0 disables)
-          val len = be16(pos)
-          if (len != 4 || pos + len > b.length) return None
-          restartInterval = be16(pos + 2)
-          pos += len
-        case 0xda => // SOS
-          val len = be16(pos)
-          if (!sofSeen || len < 6 || pos + len > b.length) return None
-          if (u(pos + 2) != nComp) return None // single interleaved scan
-          // Component bytes must sit inside the declared segment (B.2.3:
-          // Ls = 6 + 2·Ns), or the reads below stride into entropy data.
-          if (len != 6 + 2 * nComp) return None
-          compDc = new Array[Int](nComp)
-          compAc = new Array[Int](nComp)
-          for (c <- 0 until nComp) {
-            if (u(pos + 3 + 2 * c) != c + 1) return None
-            compDc(c) = u(pos + 4 + 2 * c) >> 4
-            compAc(c) = u(pos + 4 + 2 * c) & 0x0f
-            // Td/Ta are 4-bit fields but only 0–3 name a table slot; a
-            // forged selector must fail closed, not index out of bounds.
-            if (compDc(c) > 3 || compAc(c) > 3) return None
-          }
-          // full spectral selection, no successive approximation
-          if (u(pos + 3 + 2 * nComp) != 0 ||
-            u(pos + 4 + 2 * nComp) != 63 ||
-            u(pos + 5 + 2 * nComp) != 0) return None
-          scanAt = pos + len
-        case mm if mm >= 0xe0 && mm <= 0xef => // APPn
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          pos += len
-        case 0xfe => // COM
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          pos += len
-        case _ => return None
-      }
+
+    /** DQT: one or more 8-bit tables (Pq = 0), zigzag order. */
+    def dqt(s: Reader): Unit = while (s.remaining > 0) {
+      val pt = s.u8()
+      if ((pt >> 4) != 0 || (pt & 0x0f) > 3) damage()
+      val tab = new Array[Int](64)
+      var k = 0
+      while (k < 64) { tab(jpegZigzag(k)) = s.u8(); k += 1 }
+      qt(pt & 0x0f) = tab
     }
-    // referenced tables must exist
+
+    /** DHT: one or more tables, 16 code-length counts then symbols. */
+    def dht(s: Reader): Unit = while (s.remaining > 0) {
+      val x = s.u8()
+      if ((x >> 4) > 1 || (x & 0x0f) > 3) damage()
+      val bits = Array.fill(16)(s.u8())
+      val n = bits.sum
+      if (n > 256) damage()
+      val t = jpegDecTable(JpegHuffTable(bits, Array.fill(n)(s.u8())))
+      if ((x >> 4) == 0) dc(x & 0x0f) = t else ac(x & 0x0f) = t
+    }
+
+    /** DRI: restart interval in MCUs (0 disables). */
+    def dri(s: Reader): Unit = {
+      if (s.remaining != 2) damage()
+      restartInterval = s.be16()
+    }
+  }
+
+  /** One frame being decoded: the frame header (SOF0 baseline or SOF2
+    * progressive, B.2.2) read from `s`, the geometry derived from it,
+    * and the component planes. Scope rails: 8-bit precision, 1 or 3
+    * components, sampling factors 1 or 2 per axis, the 2^26 pixel cap;
+    * anything else raises [[Bytes.Damage]]. A progressive frame also
+    * holds every block's coefficients until EOI.
+    */
+  private final class JpegFrame(s: Reader, val progressive: Boolean) {
+    if (s.u8() != 8) damage() // precision
+    val height = s.be16()
+    val width = s.be16()
+    val nComp = s.u8()
+    if (width <= 0 || height <= 0) damage()
+    if (width.toLong * height > (1L << 26)) damage() // alloc cap
+    if ((nComp != 1 && nComp != 3) || s.remaining != 3 * nComp) damage()
+    private val compH = new Array[Int](nComp)
+    private val compV = new Array[Int](nComp)
+    private val compQ = new Array[Int](nComp)
     for (c <- 0 until nComp) {
-      if (qt(compQ(c)) == null) return None
-      if (dcT(compDc(c)) == null || acT(compAc(c)) == null) return None
+      s.skip(1) // component id: the scans name components in frame order
+      val hv = s.u8()
+      compH(c) = hv >> 4
+      compV(c) = hv & 0x0f
+      // sampling factors 1 or 2 per axis cover 4:4:4, 4:2:2 and 4:2:0
+      // — everything the web's encoders emit; exotic ratios route to a
+      // full stack
+      if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 || compV(c) > 2)
+        damage()
+      compQ(c) = s.u8()
+      if (compQ(c) > 3) damage()
     }
-    val dcDec = compDc.map(i => jpegDecTable(dcT(i)))
-    val acDec = compAc.map(i => jpegDecTable(acT(i)))
-    val bits = new JpegBits(b, scanAt)
-    def nextBit(): Int = bits.nextBit()
-    def decodeSym(t: JpegHuffDec): Int = bits.decodeSym(t)
-    def receiveExtend(ssss: Int): Int = bits.receiveExtend(ssss)
-    // ---- MCU loop: dequantize → IDCT → level shift into planes ----------
+    if (nComp == 1 && (compH(0) != 1 || compV(0) != 1)) damage()
+
     // Interleaved MCU structure (T.81 A.2.3): per MCU, component c
     // contributes compH(c)×compV(c) data units on ITS OWN grid; the MCU
-    // grid is sized by the maximum sampling factors. For 4:4:4 and
-    // grayscale this degenerates to one block per component per MCU.
-    val hMax = compH.max
-    val vMax = compV.max
-    val mcuCols = (width + 8 * hMax - 1) / (8 * hMax)
-    val mcuRows = (height + 8 * vMax - 1) / (8 * vMax)
-    val strides = Array.tabulate(nComp)(c => mcuCols * compH(c) * 8)
-    val compWpx = Array.tabulate(nComp)(c =>
+    // grid is sized by the maximum sampling factors.
+    private val hMax = compH.max
+    private val vMax = compV.max
+    private val mcuCols = (width + 8 * hMax - 1) / (8 * hMax)
+    private val mcuRows = (height + 8 * vMax - 1) / (8 * vMax)
+    private val blocksW = Array.tabulate(nComp)(c => mcuCols * compH(c))
+    private val blocksH = Array.tabulate(nComp)(c => mcuRows * compV(c))
+    private val compWpx = Array.tabulate(nComp)(c =>
       (width * compH(c) + hMax - 1) / hMax)
-    val compHpx = Array.tabulate(nComp)(c =>
+    private val compHpx = Array.tabulate(nComp)(c =>
       (height * compV(c) + vMax - 1) / vMax)
-    val planes = Array.tabulate(nComp)(c =>
-      new Array[Byte](strides(c) * mcuRows * compV(c) * 8))
-    val pred = new Array[Int](nComp)
-    val coef = Array.ofDim[Double](8, 8)
-    val tmp = Array.ofDim[Double](8, 8)
-    val totalMcus = mcuCols * mcuRows
-    var mcusDone = 0
-    var rstN = 0
-    var my = 0
-    while (my < mcuRows && !bits.broken) {
-      var mx = 0
-      while (mx < mcuCols && !bits.broken) {
-        var c = 0
-        while (c < nComp && !bits.broken) {
-          val q = qt(compQ(c))
-          var dv = 0
-          while (dv < compV(c) && !bits.broken) {
-          var du = 0
-          while (du < compH(c) && !bits.broken) {
-          val bx = mx * compH(c) + du
-          val by = my * compV(c) + dv
-          java.util.Arrays.fill(coef(0), 0.0)
-          var i = 1
-          while (i < 8) { java.util.Arrays.fill(coef(i), 0.0); i += 1 }
-          // DC
-          val s0 = decodeSym(dcDec(c))
-          if (s0 < 0 || s0 > 11) bits.broken = true
-          else {
-            pred(c) += receiveExtend(s0)
-            coef(0)(0) = pred(c).toDouble * q(0)
-            // AC
-            var k = 1
-            while (k < 64 && !bits.broken) {
-              val rs = decodeSym(acDec(c))
-              if (rs < 0) bits.broken = true
-              else if (rs == 0x00) k = 64 // EOB
-              else if (rs == 0xf0) k += 16 // ZRL
-              else {
-                k += rs >> 4
-                val s = rs & 0x0f
-                if (k > 63) bits.broken = true
-                else {
-                  val n = jpegZigzag(k)
-                  coef(n / 8)(n % 8) = receiveExtend(s).toDouble * q(n)
-                  k += 1
-                }
-              }
-            }
-            if (!bits.broken) {
-              // IDCT (row-major [v][u] coefs, same orientation as the
-              // encoder): tmp = Cᵀ·S (over v), out = tmp·C (over u)
-              var y = 0
-              while (y < 8) {
-                var uu = 0
-                while (uu < 8) {
-                  var s = 0.0
-                  var vv = 0
-                  while (vv < 8) { s += dctC(vv)(y) * coef(vv)(uu); vv += 1 }
-                  tmp(y)(uu) = s
-                  uu += 1
-                }
-                y += 1
-              }
-              val plane = planes(c)
-              val stride = strides(c)
-              y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) {
-                  var s = 0.0
-                  var uu = 0
-                  while (uu < 8) { s += tmp(y)(uu) * dctC(uu)(x); uu += 1 }
-                  val px = math.floor(s + 128.5).toInt // round(s+128)
-                  val clamped = if (px < 0) 0 else if (px > 255) 255 else px
-                  plane((by * 8 + y) * stride + bx * 8 + x) = clamped.toByte
-                  x += 1
-                }
-                y += 1
-              }
-            }
-          }
-          du += 1
-          }
-          dv += 1
-          }
-          c += 1
+    // a single-component scan covers only the blocks holding samples
+    private val npW = compWpx.map(p => (p + 7) / 8)
+    private val npH = compHpx.map(p => (p + 7) / 8)
+    private val strides = blocksW.map(_ * 8)
+    private lazy val planes = Array.tabulate(nComp)(c =>
+      new Array[Byte](strides(c) * blocksH(c) * 8))
+    private val coefs =
+      if (progressive) Array.tabulate(nComp)(c =>
+        new Array[Int](blocksW(c) * blocksH(c) * 64))
+      else null
+    private val dcDone = new Array[Boolean](nComp)
+    private val coef = new Array[Double](64)
+    private val tmp = new Array[Double](64)
+
+    /** Dequantize the block at `blk(base)` (natural order), inverse-DCT
+      * it, level-shift, round and clamp it into component `c`'s plane
+      * at block (bx, by).
+      */
+    private def idct(c: Int, blk: Array[Int], base: Int, q: Array[Int],
+                     bx: Int, by: Int): Unit = {
+      var n = 0
+      while (n < 64) { coef(n) = blk(base + n).toDouble * q(n); n += 1 }
+      // tmp = Cᵀ·S (over v), out = tmp·C (over u)
+      var y = 0
+      while (y < 8) {
+        var uu = 0
+        while (uu < 8) {
+          var s = 0.0
+          var vv = 0
+          while (vv < 8) { s += dctC(vv * 8 + y) * coef(vv * 8 + uu); vv += 1 }
+          tmp(y * 8 + uu) = s
+          uu += 1
         }
-        // Restart boundary (T.81 E.1.4): after every `restartInterval`
-        // MCUs — except the last — the stream byte-aligns, an RSTm
-        // marker with the CYCLING modulo-8 index follows, and every DC
-        // predictor resets. A missing or out-of-sequence marker is
-        // malformation (it would desync all later MCUs).
-        mcusDone += 1
-        if (!bits.broken && restartInterval > 0 &&
-          mcusDone % restartInterval == 0 && mcusDone < totalMcus) {
-          if (bits.expectRst(rstN)) {
-            rstN += 1
-            java.util.Arrays.fill(pred, 0)
-          } else bits.broken = true
-        }
-        mx += 1
+        y += 1
       }
-      my += 1
+      val plane = planes(c)
+      val stride = strides(c)
+      y = 0
+      while (y < 8) {
+        var x = 0
+        while (x < 8) {
+          var s = 0.0
+          var uu = 0
+          while (uu < 8) { s += tmp(y * 8 + uu) * dctC(uu * 8 + x); uu += 1 }
+          val px = math.floor(s + 128.5).toInt // round(s+128)
+          val clamped = if (px < 0) 0 else if (px > 255) 255 else px
+          plane((by * 8 + y) * stride + bx * 8 + x) = clamped.toByte
+          x += 1
+        }
+        y += 1
+      }
     }
-    if (bits.broken) return None
-    // after the last MCU: only pad bits, then EOI (trailing garbage is
-    // tolerated after a well-formed EOI, as real writers emit exactly it)
-    if (!(u(bits.pos) == 0xff && u(bits.pos + 1) == 0xd9)) return None
-    Some(JpegRaster(width, height, nComp, compWpx, compHpx, strides, planes))
-  }
 
-  /** PROGRESSIVE JPEG (SOF2) — the mode most web images actually ship
-    * in. Coefficients arrive across MULTIPLE scans instead of one:
-    * spectral selection splits the zigzag band (DC scan first, AC bands
-    * per component later), successive approximation splits the BITS
-    * (first scans deliver coefficients at reduced precision `<< Al`,
-    * refinement scans add one bit at a time), and AC scans replace EOB
-    * with EOBn RUN codes spanning up to 2^14 blocks (G.1.2.2). The
-    * decoder accumulates a full coefficient buffer per component, plays
-    * every scan into it — DC first/refine over the interleaved MCU grid
-    * or a single component's block grid, AC first/refine (the correction
-    * -bit walk of G.7) strictly per-component and non-interleaved as the
-    * spec requires — and reconstructs (dequantize → IDCT → clamp) only
-    * at EOI. DHT/DRI segments between scans take effect for the scans
-    * after them; restart markers reset DC predictors AND the EOB run.
-    * Same scope rails as baseline: 8-bit, 1 or 3 components, sampling
-    * factors ≤ 2, the 2^26 pixel cap, total-failure → None.
-    */
-  private def decodeJpegProgressivePlanes(b: Array[Byte])
-      : Option[JpegRaster] = {
-    def u(i: Int) = if (i >= 0 && i < b.length) b(i) & 0xff else -1
-    def be16(i: Int) = { val hi = u(i); val lo = u(i + 1); if (hi < 0 || lo < 0) -1 else hi << 8 | lo }
-    if (u(0) != 0xff || u(1) != 0xd8) return None
-    val qt = Array.ofDim[Array[Int]](4)
-    val dcT = Array.ofDim[JpegHuffTable](4)
-    val acT = Array.ofDim[JpegHuffTable](4)
-    var restartInterval = 0
-    var width = 0
-    var height = 0
-    var nComp = 0
-    var compQ: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    // geometry, computed at SOF2
-    var hMax = 0
-    var vMax = 0
-    var mcuCols = 0
-    var mcuRows = 0
-    var blocksW: Array[Int] = null // padded (interleaved) block grid
-    var blocksH: Array[Int] = null
-    var npW: Array[Int] = null // non-interleaved (unpadded) block grid
-    var npH: Array[Int] = null
-    var coefs: Array[Array[Int]] = null // per comp: block-major ×64
-    var dcDone: Array[Boolean] = null // a DC first scan reached each comp
-
-    // ---- one scan: entropy-decode into the coefficient buffers --------
-    // returns the position after the scan's entropy data, or -1
-    def decodeScan(pos: Int): Int = {
-      val len = be16(pos)
-      if (len < 6 || pos + len > b.length || coefs == null) return -1
-      val ns = u(pos + 2)
-      if (ns < 1 || ns > nComp || len != 6 + 2 * ns) return -1
-      val scanComp = new Array[Int](ns)
+    /** Decode one scan — header (B.2.3) in `s`, entropy-coded data
+      * from `s.end` in `b` — and return the position after it. A
+      * baseline frame's one scan is sequential: every component
+      * interleaved, the whole band, each block straight through the
+      * IDCT into its plane. A progressive scan (G.1.2) plays into the
+      * coefficient buffers: DC first/refine over the interleaved MCU
+      * grid or one component's block grid, AC first/refine (the
+      * correction-bit walk of G.7) for one component only, where EOBn
+      * runs span blocks. Restart markers (E.1.4) reset the DC
+      * predictors and the EOB run.
+      */
+    def scan(b: Array[Byte], s: Reader, t: JpegTables): Int = {
+      val ns = s.u8()
+      if (ns < 1 || ns > nComp || s.remaining != 2 * ns + 3) damage()
+      val comp = new Array[Int](ns)
       val dcSel = new Array[Int](ns)
       val acSel = new Array[Int](ns)
       for (i <- 0 until ns) {
-        val id = u(pos + 3 + 2 * i)
-        val c = id - 1
-        if (c < 0 || c >= nComp) return -1
-        scanComp(i) = c
-        dcSel(i) = u(pos + 4 + 2 * i) >> 4
-        acSel(i) = u(pos + 4 + 2 * i) & 0x0f
-        // only slots 0–3 exist; a forged Td/Ta must fail closed here,
-        // not throw out of the 4-element table arrays below
-        if (dcSel(i) > 3 || acSel(i) > 3) return -1
+        comp(i) = s.u8() - 1
+        if (comp(i) < 0 || comp(i) >= nComp) damage()
+        val sel = s.u8()
+        dcSel(i) = sel >> 4
+        acSel(i) = sel & 0x0f
+        // Td/Ta are 4-bit fields but only 0–3 name a table slot; a
+        // forged selector must fail closed, not index out of bounds
+        if (dcSel(i) > 3 || acSel(i) > 3) damage()
       }
-      val ss = u(pos + 3 + 2 * ns)
-      val se = u(pos + 4 + 2 * ns)
-      val ah = u(pos + 5 + 2 * ns) >> 4
-      val al = u(pos + 5 + 2 * ns) & 0x0f
-      val bits = new JpegBits(b, pos + len)
-      var rstN = 0
-      var unitsDone = 0
-      def restartBoundary(total: Int, resetPred: () => Unit,
-                          resetEob: () => Unit): Boolean = {
-        unitsDone += 1
-        if (restartInterval > 0 && unitsDone % restartInterval == 0 &&
-          unitsDone < total) {
-          if (!bits.expectRst(rstN)) return false
-          rstN += 1
-          resetPred(); resetEob()
+      val ss = s.u8()
+      val se = s.u8()
+      val ahal = s.u8() // successive approximation: high and low bit
+      val al = ahal & 0x0f
+      val refine = (ahal >> 4) != 0
+      if (!progressive) {
+        // one interleaved scan, full spectral selection, no successive
+        // approximation; referenced tables must exist
+        if (ns != nComp || (0 until ns).exists(i => comp(i) != i) ||
+          ss != 0 || se != 63 || ahal != 0) damage()
+        for (i <- 0 until ns)
+          if (t.qt(compQ(i)) == null || t.dc(dcSel(i)) == null ||
+            t.ac(acSel(i)) == null) damage()
+      } else if (ss == 0) {
+        if (se != 0) damage() // a DC scan covers the DC band only
+        if (!refine && dcSel.exists(t.dc(_) == null)) damage()
+      } else if (ns != 1 || ss > se || se > 63 || t.ac(acSel(0)) == null)
+        damage() // AC scans: one component (B.2.3)
+      val bits = new JpegBits(b, s.end)
+      val pred = new Array[Int](nComp)
+      var eobrun = 0
+      val p1 = 1 << al
+      val blk = new Array[Int](64)
+
+      def dcFirst(i: Int, arr: Array[Int], base: Int): Boolean = {
+        val s0 = bits.decodeSym(t.dc(dcSel(i)))
+        if (bits.broken || s0 < 0 || s0 > 11) return false
+        pred(comp(i)) += bits.receiveExtend(s0)
+        arr(base) = pred(comp(i)) << al
+        true
+      }
+
+      /** Sequential AC: (run, size) symbols until EOB, ZRL skips 16. */
+      def acSequential(dec: JpegHuffDec, arr: Array[Int], base: Int): Boolean = {
+        var k = 1
+        while (k < 64) {
+          val rs = bits.decodeSym(dec)
+          if (rs < 0) return false
+          else if (rs == 0x00) k = 64 // EOB
+          else if (rs == 0xf0) k += 16 // ZRL
+          else {
+            k += rs >> 4
+            if (k > 63) return false
+            arr(base + jpegZigzag(k)) = bits.receiveExtend(rs & 0x0f)
+            k += 1
+          }
         }
         true
       }
-      if (ss == 0) {
-        // ---- DC scan (must cover the whole DC band: Se == 0) ----------
-        if (se != 0) return -1
-        val pred = new Array[Int](nComp)
-        val dcDecs = Array.tabulate(ns) { i =>
-          if (ah == 0) {
-            if (dcT(dcSel(i)) == null) return -1
-            jpegDecTable(dcT(dcSel(i)))
-          } else null // refinement reads raw bits, no table
-        }
-        def dcUnit(i: Int, blockRow: Int, blockCol: Int): Boolean = {
-          val c = scanComp(i)
-          val base = (blockRow * blocksW(c) + blockCol) * 64
-          if (ah == 0) {
-            val s0 = bits.decodeSym(dcDecs(i))
-            if (bits.broken || s0 < 0 || s0 > 11) return false
-            pred(c) += bits.receiveExtend(s0)
-            coefs(c)(base) = pred(c) << al
-          } else {
-            if (bits.nextBit() == 1) coefs(c)(base) |= 1 << al
-          }
-          !bits.broken
-        }
-        if (ns > 1) {
-          // interleaved over the MCU grid, compH×compV units per comp
-          var my = 0
-          while (my < mcuRows) {
-            var mx = 0
-            while (mx < mcuCols) {
-              var i = 0
-              while (i < ns) {
-                val c = scanComp(i)
-                var dv = 0
-                while (dv < compV(c)) {
-                  var du = 0
-                  while (du < compH(c)) {
-                    if (!dcUnit(i, my * compV(c) + dv, mx * compH(c) + du))
-                      return -1
-                    du += 1
-                  }
-                  dv += 1
-                }
-                i += 1
-              }
-              if (!restartBoundary(mcuCols * mcuRows,
-                () => java.util.Arrays.fill(pred, 0), () => ())) return -1
-              mx += 1
-            }
-            my += 1
-          }
-        } else {
-          // single-component DC scan: the UNPADDED block grid
-          val c = scanComp(0)
-          var br = 0
-          while (br < npH(c)) {
-            var bc = 0
-            while (bc < npW(c)) {
-              if (!dcUnit(0, br, bc)) return -1
-              if (!restartBoundary(npW(c) * npH(c),
-                () => java.util.Arrays.fill(pred, 0), () => ())) return -1
-              bc += 1
-            }
-            br += 1
+
+      def acFirst(dec: JpegHuffDec, arr: Array[Int], base: Int): Boolean = {
+        if (eobrun > 0) { eobrun -= 1; return true }
+        var k = ss
+        var stop = false
+        while (k <= se && !stop && !bits.broken) {
+          val rs = bits.decodeSym(dec)
+          if (rs < 0) return false
+          val r = rs >> 4
+          val sz = rs & 0x0f
+          if (sz != 0) {
+            k += r
+            if (k > se) return false
+            arr(base + jpegZigzag(k)) = bits.receiveExtend(sz) << al
+            k += 1
+          } else if (r == 15) k += 16 // ZRL
+          else {
+            // EOBn: run of (1<<r)+bits blocks INCLUDING this one
+            eobrun = (1 << r) - 1 + (if (r > 0) bits.receive(r) else 0)
+            stop = true
           }
         }
-        if (ah == 0) scanComp.foreach(dcDone(_) = true)
-      } else {
-        // ---- AC scan: single component, non-interleaved (B.2.3) -------
-        if (ns != 1 || ss > se || se > 63) return -1
-        val c = scanComp(0)
-        if (acT(acSel(0)) == null) return -1
-        val acDec = jpegDecTable(acT(acSel(0)))
-        val arr = coefs(c)
-        var eobrun = 0
-        val p1 = 1 << al
-        def firstUnit(base: Int): Boolean = {
-          if (eobrun > 0) { eobrun -= 1; return true }
-          var k = ss
+        true
+      }
+
+      def acRefine(dec: JpegHuffDec, arr: Array[Int], base: Int): Boolean = {
+        var k = ss
+        if (eobrun == 0) {
           var stop = false
           while (k <= se && !stop && !bits.broken) {
-            val rs = bits.decodeSym(acDec)
+            val rs = bits.decodeSym(dec)
             if (rs < 0) return false
-            val r = rs >> 4
-            val s = rs & 0x0f
-            if (s != 0) {
-              k += r
-              if (k > se) return false
-              arr(base + jpegZigzag(k)) = bits.receiveExtend(s) << al
-              k += 1
-            } else if (r == 15) k += 16 // ZRL
-            else {
-              // EOBn: run of (1<<r)+bits blocks INCLUDING this one
-              eobrun = (1 << r) - 1 + (if (r > 0) bits.receive(r) else 0)
-              stop = true
+            var r = rs >> 4
+            val sz = rs & 0x0f
+            var newVal = 0
+            if (sz != 0) {
+              if (sz != 1) return false // refinement magnitude is ±1
+              newVal = if (bits.nextBit() == 1) p1 else -p1
+            } else if (r != 15) {
+              eobrun = (1 << r) + (if (r > 0) bits.receive(r) else 0)
+              stop = true // rest of this block joins the EOB sweep
             }
-          }
-          !bits.broken
-        }
-        def refineUnit(base: Int): Boolean = {
-          var k = ss
-          if (eobrun == 0) {
-            var stop = false
-            while (k <= se && !stop && !bits.broken) {
-              val rs = bits.decodeSym(acDec)
-              if (rs < 0) return false
-              var r = rs >> 4
-              val s = rs & 0x0f
-              var newVal = 0
-              if (s != 0) {
-                if (s != 1) return false // refinement magnitude is ±1
-                newVal = if (bits.nextBit() == 1) p1 else -p1
-              } else if (r != 15) {
-                eobrun = (1 << r) + (if (r > 0) bits.receive(r) else 0)
-                stop = true // rest of this block joins the EOB sweep
-              }
-              // advance over r zero-HISTORY coefficients, emitting a
-              // correction bit for every nonzero one passed (G.7)
-              if (!stop) {
-                var placed = false
-                while (k <= se && !placed && !bits.broken) {
-                  val z = base + jpegZigzag(k)
-                  if (arr(z) != 0) {
-                    if (bits.nextBit() == 1 && (math.abs(arr(z)) & p1) == 0)
-                      arr(z) += (if (arr(z) >= 0) p1 else -p1)
-                  } else {
-                    if (r == 0) {
-                      if (newVal != 0) arr(z) = newVal
-                      placed = true
-                    } else r -= 1
-                  }
-                  k += 1
+            // advance over r zero-HISTORY coefficients, emitting a
+            // correction bit for every nonzero one passed (G.7)
+            if (!stop) {
+              var placed = false
+              while (k <= se && !placed && !bits.broken) {
+                val z = base + jpegZigzag(k)
+                if (arr(z) != 0) {
+                  if (bits.nextBit() == 1 && (math.abs(arr(z)) & p1) == 0)
+                    arr(z) += (if (arr(z) >= 0) p1 else -p1)
+                } else {
+                  if (r == 0) {
+                    if (newVal != 0) arr(z) = newVal
+                    placed = true
+                  } else r -= 1
                 }
-                if (!placed && newVal != 0) return false // ran off the band
+                k += 1
               }
+              if (!placed && newVal != 0) return false // ran off the band
             }
           }
-          if (eobrun > 0 && !bits.broken) {
-            // EOB-run blocks still carry correction bits for their
-            // existing nonzero coefficients
-            while (k <= se && !bits.broken) {
-              val z = base + jpegZigzag(k)
-              if (arr(z) != 0) {
-                if (bits.nextBit() == 1 && (math.abs(arr(z)) & p1) == 0)
-                  arr(z) += (if (arr(z) >= 0) p1 else -p1)
+        }
+        if (eobrun > 0 && !bits.broken) {
+          // EOB-run blocks still carry correction bits for their
+          // existing nonzero coefficients
+          while (k <= se && !bits.broken) {
+            val z = base + jpegZigzag(k)
+            if (arr(z) != 0) {
+              if (bits.nextBit() == 1 && (math.abs(arr(z)) & p1) == 0)
+                arr(z) += (if (arr(z) >= 0) p1 else -p1)
+            }
+            k += 1
+          }
+          eobrun -= 1
+        }
+        true
+      }
+
+      /** One data unit of scan component `i` at block (bx, by). */
+      def unit(i: Int, bx: Int, by: Int): Boolean = {
+        val c = comp(i)
+        val ok =
+          if (!progressive) {
+            java.util.Arrays.fill(blk, 0)
+            val done = dcFirst(i, blk, 0) &&
+              acSequential(t.ac(acSel(i)), blk, 0) && !bits.broken
+            if (done) idct(c, blk, 0, t.qt(compQ(c)), bx, by)
+            done
+          } else {
+            val base = (by * blocksW(c) + bx) * 64
+            if (ss == 0) {
+              if (!refine) dcFirst(i, coefs(c), base)
+              else {
+                if (bits.nextBit() == 1) coefs(c)(base) |= 1 << al
+                true
               }
-              k += 1
-            }
-            eobrun -= 1
+            } else if (!refine) acFirst(t.ac(acSel(0)), coefs(c), base)
+            else acRefine(t.ac(acSel(0)), coefs(c), base)
           }
-          !bits.broken
+        ok && !bits.broken
+      }
+
+      var rstN = 0
+      var unitsDone = 0
+      /** After each MCU (each block in a one-component scan). */
+      def restart(total: Int): Boolean = {
+        unitsDone += 1
+        val ri = t.restartInterval
+        if (ri > 0 && unitsDone % ri == 0 && unitsDone < total) {
+          if (!bits.expectRst(rstN)) return false
+          rstN += 1
+          java.util.Arrays.fill(pred, 0)
+          eobrun = 0
         }
-        var br = 0
-        while (br < npH(c)) {
-          var bc = 0
-          while (bc < npW(c)) {
-            val base = (br * blocksW(c) + bc) * 64
-            val ok = if (ah == 0) firstUnit(base) else refineUnit(base)
-            if (!ok || bits.broken) return -1
-            if (!restartBoundary(npW(c) * npH(c), () => (),
-              () => eobrun = 0)) return -1
-            bc += 1
+        true
+      }
+
+      if (ns > 1) {
+        var my = 0
+        while (my < mcuRows) {
+          var mx = 0
+          while (mx < mcuCols) {
+            var i = 0
+            while (i < ns) {
+              val c = comp(i)
+              var dv = 0
+              while (dv < compV(c)) {
+                var du = 0
+                while (du < compH(c)) {
+                  if (!unit(i, mx * compH(c) + du, my * compV(c) + dv))
+                    damage()
+                  du += 1
+                }
+                dv += 1
+              }
+              i += 1
+            }
+            if (!restart(mcuCols * mcuRows)) damage()
+            mx += 1
           }
-          br += 1
+          my += 1
+        }
+      } else {
+        val c = comp(0)
+        var by = 0
+        while (by < npH(c)) {
+          var bx = 0
+          while (bx < npW(c)) {
+            if (!unit(0, bx, by) || !restart(npW(c) * npH(c))) damage()
+            bx += 1
+          }
+          by += 1
         }
       }
-      bits.align()
-      if (bits.broken) -1 else bits.pos
+      if (ss == 0 && !refine) comp.foreach(dcDone(_) = true)
+      bits.pos
     }
 
-    // ---- marker loop: segments and scans until EOI ---------------------
-    var pos = 2
-    var done = false
-    while (!done) {
-      if (u(pos) != 0xff) return None
-      var m = u(pos + 1)
-      while (m == 0xff) { pos += 1; m = u(pos + 1) }
-      if (m < 0) return None
-      pos += 2
-      m match {
-        case 0xd9 => // EOI
-          if (coefs == null) return None
-          done = true
-        case 0xc2 => // SOF2
-          val len = be16(pos)
-          if (len < 8 || pos + len > b.length || coefs != null) return None
-          if (u(pos + 2) != 8) return None
-          height = be16(pos + 3); width = be16(pos + 5)
-          nComp = u(pos + 7)
-          if (width <= 0 || height <= 0) return None
-          if (width.toLong * height > (1L << 26)) return None
-          if (nComp != 1 && nComp != 3) return None
-          if (len != 8 + 3 * nComp) return None
-          compQ = new Array[Int](nComp)
-          compH = new Array[Int](nComp)
-          compV = new Array[Int](nComp)
-          for (c <- 0 until nComp) {
-            compH(c) = u(pos + 8 + 3 * c + 1) >> 4
-            compV(c) = u(pos + 8 + 3 * c + 1) & 0x0f
-            if (compH(c) < 1 || compH(c) > 2 ||
-              compV(c) < 1 || compV(c) > 2) return None
-            compQ(c) = u(pos + 8 + 3 * c + 2)
-            if (compQ(c) > 3) return None
-          }
-          if (nComp == 1 && (compH(0) != 1 || compV(0) != 1)) return None
-          hMax = compH.max; vMax = compV.max
-          mcuCols = (width + 8 * hMax - 1) / (8 * hMax)
-          mcuRows = (height + 8 * vMax - 1) / (8 * vMax)
-          blocksW = Array.tabulate(nComp)(c => mcuCols * compH(c))
-          blocksH = Array.tabulate(nComp)(c => mcuRows * compV(c))
-          npW = Array.tabulate(nComp)(c =>
-            ((width * compH(c) + hMax - 1) / hMax + 7) / 8)
-          npH = Array.tabulate(nComp)(c =>
-            ((height * compV(c) + vMax - 1) / vMax + 7) / 8)
-          coefs = Array.tabulate(nComp)(c =>
-            new Array[Int](blocksW(c) * blocksH(c) * 64))
-          dcDone = new Array[Boolean](nComp)
-          pos += len
-        case mm if mm >= 0xc0 && mm <= 0xcf && mm != 0xc4 =>
-          return None // a second/different frame header
-        case 0xdb =>
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          var p = pos + 2
-          while (p < pos + len) {
-            val pq = u(p) >> 4
-            val tq = u(p) & 0x0f
-            if (pq != 0 || tq > 3 || p + 65 > pos + len) return None
-            val tab = new Array[Int](64)
-            var k = 0
-            while (k < 64) { tab(jpegZigzag(k)) = u(p + 1 + k); k += 1 }
-            qt(tq) = tab
-            p += 65
-          }
-          pos += len
-        case 0xc4 =>
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          var p = pos + 2
-          while (p < pos + len) {
-            val cls = u(p) >> 4
-            val th = u(p) & 0x0f
-            if (cls > 1 || th > 3 || p + 17 > pos + len) return None
-            val tbits = Array.tabulate(16)(i => u(p + 1 + i))
-            val n = tbits.sum
-            if (n > 256 || p + 17 + n > pos + len) return None
-            val vals = Array.tabulate(n)(i => u(p + 17 + i))
-            val t = JpegHuffTable(tbits, vals)
-            if (cls == 0) dcT(th) = t else acT(th) = t
-            p += 17 + n
-          }
-          pos += len
-        case 0xdd =>
-          val len = be16(pos)
-          if (len != 4 || pos + len > b.length) return None
-          restartInterval = be16(pos + 2)
-          pos += len
-        case 0xda =>
-          val next = decodeScan(pos)
-          if (next < 0) return None
-          pos = next
-        case mm if mm >= 0xe0 && mm <= 0xef =>
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          pos += len
-        case 0xfe =>
-          val len = be16(pos)
-          if (len < 2 || pos + len > b.length) return None
-          pos += len
-        case _ => return None
-      }
-    }
-    // every component needs its DC approximation before pixels mean
-    // anything (a progression that never delivered DC is damage)
-    if (!dcDone.forall(identity)) return None
-    // ---- reconstruct: dequantize → IDCT → clamp into planes ------------
-    for (c <- 0 until nComp) if (qt(compQ(c)) == null) return None
-    val strides = Array.tabulate(nComp)(c => blocksW(c) * 8)
-    val compWpx = Array.tabulate(nComp)(c =>
-      (width * compH(c) + hMax - 1) / hMax)
-    val compHpx = Array.tabulate(nComp)(c =>
-      (height * compV(c) + vMax - 1) / vMax)
-    val planes = Array.tabulate(nComp)(c =>
-      new Array[Byte](strides(c) * blocksH(c) * 8))
-    val coef = Array.ofDim[Double](8, 8)
-    val tmp = Array.ofDim[Double](8, 8)
-    var c = 0
-    while (c < nComp) {
-      val q = qt(compQ(c))
-      val arr = coefs(c)
-      val plane = planes(c)
-      val stride = strides(c)
-      var br = 0
-      while (br < blocksH(c)) {
-        var bc = 0
-        while (bc < blocksW(c)) {
-          val base = (br * blocksW(c) + bc) * 64
-          var n = 0
-          while (n < 64) {
-            coef(n / 8)(n % 8) = arr(base + n).toDouble * q(n)
-            n += 1
-          }
-          var y = 0
-          while (y < 8) {
-            var uu = 0
-            while (uu < 8) {
-              var s = 0.0
-              var vv = 0
-              while (vv < 8) { s += dctC(vv)(y) * coef(vv)(uu); vv += 1 }
-              tmp(y)(uu) = s
-              uu += 1
-            }
-            y += 1
-          }
-          y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              var s = 0.0
-              var uu = 0
-              while (uu < 8) { s += tmp(y)(uu) * dctC(uu)(x); uu += 1 }
-              val px = math.floor(s + 128.5).toInt
-              val clamped = if (px < 0) 0 else if (px > 255) 255 else px
-              plane((br * 8 + y) * stride + bc * 8 + x) = clamped.toByte
-              x += 1
-            }
-            y += 1
-          }
-          bc += 1
+    /** The decoded planes, once a baseline scan or every progressive
+      * scan is in: a progression that never delivered some component's
+      * DC is damage.
+      */
+    def raster(t: JpegTables): JpegRaster = {
+      if (!dcDone.forall(identity)) damage()
+      if (progressive) {
+        // dequantize → IDCT → clamp every block into its plane
+        for (c <- 0 until nComp) {
+          val q = t.qt(compQ(c))
+          if (q == null) damage()
+          for (by <- 0 until blocksH(c); bx <- 0 until blocksW(c))
+            idct(c, coefs(c), (by * blocksW(c) + bx) * 64, q, bx, by)
         }
-        br += 1
       }
-      c += 1
+      JpegRaster(width, height, nComp, compWpx, compHpx, strides, planes)
     }
-    Some(JpegRaster(width, height, nComp, compWpx, compHpx, strides, planes))
   }
 
-  /** Total decode outcome for JPEG (PNG/GIF posture): one row per
-    * payload, failures flagged, never dropped.
+  /** The raster-level decode behind [[parseJpegPixels]] — exposed to the
+    * spec for per-pixel cross-pinning against javax.imageio. One marker
+    * walk: the frame header picks the mode (SOF0 baseline: one
+    * sequential scan, then EOI right after it; SOF2 progressive: scans
+    * and table segments until EOI, then reconstruction). Any other
+    * frame type, a second frame header or any other malformation →
+    * None.
     */
-  case class JpegDecodeRow(id: Long, decode_ok: Boolean, px: Option[JpegPixels])
-
-  def decodeJpegPixelsTotal(payloads: Dataset[Payload]): Dataset[JpegDecodeRow] = {
-    implicit val enc = Encoders.product[JpegDecodeRow]
-    payloads.mapPartitions(_.map { p =>
-      val r = parseJpegPixels(p.id, p.content)
-      JpegDecodeRow(p.id, r.isDefined, r)
-    })
-  }
-
-  /** JPEG-pixel twin of [[decodeBatches]]: zero shuffles, undecodable
-    * payloads counted into the accumulator, never silently vanished.
-    */
-  def decodeJpegPixelBatches(payloads: Dataset[Payload],
-                             drops: org.apache.spark.util.LongAccumulator)
-      : Dataset[JpegPixels] = {
-    implicit val enc = Encoders.product[JpegPixels]
-    payloads.mapPartitions(_.flatMap { p =>
-      val r = parseJpegPixels(p.id, p.content)
-      if (r.isEmpty) drops.add(1L)
-      r
-    })
-  }
-
-  /** Convenience overload: registers its own named drop accumulator
-    * (`graft.jpeg_pixel_decode_drops` in the Spark UI).
-    */
-  def decodeJpegPixelBatches(payloads: Dataset[Payload]): Dataset[JpegPixels] =
-    decodeJpegPixelBatches(payloads,
-      payloads.sparkSession.sparkContext.longAccumulator("graft.jpeg_pixel_decode_drops"))
+  private[graft] def decodeJpegPlanes(b: Array[Byte]): Option[JpegRaster] =
+    Bytes.total {
+      val t = new JpegTables
+      var f: JpegFrame = null
+      var out: JpegRaster = null
+      val r = new Reader(b, 0, b.length)
+      jpegWalk(r) { (m, s) =>
+        m match {
+          case 0xc0 | 0xc2 =>
+            if (f != null) damage()
+            f = new JpegFrame(s, m == 0xc2)
+          case 0xdb => t.dqt(s)
+          case 0xc4 => t.dht(s)
+          case 0xdd => t.dri(s)
+          case 0xda =>
+            if (f == null) damage()
+            r.at(f.scan(b, s, t))
+            // after a baseline frame's one scan: only pad bits, then
+            // EOI (trailing garbage after it is tolerated, as real
+            // writers emit exactly it)
+            if (!f.progressive) {
+              if (r.u8() != 0xff || r.u8() != 0xd9) damage()
+              out = f.raster(t)
+            }
+          case 0xd9 =>
+            if (f == null || !f.progressive) damage()
+            out = f.raster(t)
+          case mm if (mm >= 0xe0 && mm <= 0xef) || mm == 0xfe => () // APPn, COM
+          case _ => damage() // other frame modes, stray markers
+        }
+        out == null
+      }
+      out
+    }
 
   /** Batch decode: per-partition iteration (one codec instance per
     * partition, amortized setup — the Scala analog of a `mapInPandas`

@@ -1150,8 +1150,14 @@ object MultimodalQueries {
     "q199_png_full_decode" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        // r19 A/B arm: fanOut removed (q199 was below the wave-2 >=0.4s bar)
-        val payloads = (Engine.table(s, dir, "documents")
+        // fanOut: PNG encode + inflate + unfilter per row on a one-task
+        // scan (q238 rationale). Kept after an A/B with the scan-task
+        // plan: at local[4] (sf0.1, Bench, 8 reps, 7 alternating
+        // sessions per arm) the arms tie, median of session medians
+        // 0.520 s fanned vs 0.509 s not (spread 0.487-0.574 s); at
+        // local[32] r19 measured 0.180 s fanned vs 0.383 s not
+        // (plans/r19/BENCH_keeper_c32.json, BENCH_q199unfanned_c32.json)
+        val payloads = Engine.fanOut(Engine.table(s, dir, "documents")
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("text")))
           .as[(Long, String)]
           .mapPartitions(_.map { case (id, text) =>

@@ -52,6 +52,7 @@ object Bytes {
     def le64(): Long = Bytes.le64(b, take(8))
     def be16(): Int = Bytes.be16(b, take(2))
     def be32(): Int = Bytes.be32(b, take(4))
+    def be32u(): Long = Bytes.be32u(b, take(4))
     def be64(): Long = Bytes.be64(b, take(8))
 
     /** Unsigned LEB128 of at most `maxBytes` bytes (10 covers a full
@@ -113,6 +114,7 @@ object Bytes {
   def be32(b: Array[Byte], i: Int): Int =
     (b(i) & 0xff) << 24 | (b(i + 1) & 0xff) << 16 |
       (b(i + 2) & 0xff) << 8 | (b(i + 3) & 0xff)
+  def be32u(b: Array[Byte], i: Int): Long = be32(b, i) & 0xffffffffL
   def be64(b: Array[Byte], i: Int): Long =
     be32(b, i).toLong << 32 | (be32(b, i + 4) & 0xffffffffL)
 

@@ -2,15 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level gate for the format plane's byte primitives: every
-  * reader and writer in `sources/` reads and writes through
-  * [[graft.sources.Bytes]], so a file that grows its own varint,
-  * zigzag or fixed-width helper, or its own stackless damage
-  * exception, fails here at the file that regressed.
+/** Source-level gate for the byte primitives: every reader and
+  * writer in `sources/` (the format plane) and `operators/` (the media
+  * codecs) reads and writes through [[graft.sources.Bytes]], so a file
+  * that grows its own varint, zigzag or fixed-width helper, or its own
+  * stackless damage exception, fails here at the file that regressed.
   */
 class BytesLintSpec extends AnyFunSuite {
 
-  private val dir = java.nio.file.Paths.get("src/main/scala/graft/sources")
+  private val dirs = Seq("sources", "operators")
+    .map(d => java.nio.file.Paths.get(s"src/main/scala/graft/$d"))
 
   private val helperDef = java.util.regex.Pattern.compile(
     "\\bdef\\s+(uvarint|varint|uleb|zigzag|zig|zz|le16|le32|le64|be16|" +
@@ -20,11 +21,11 @@ class BytesLintSpec extends AnyFunSuite {
       "false\\s*,\\s*false\\s*\\)")
 
   /** Each source file except Bytes.scala, without comments. */
-  private def sources: Seq[(String, String)] = {
+  private def sources: Seq[(String, String)] = dirs.flatMap { dir =>
     val files = LintSources.files(dir)
     assert(files.nonEmpty, s"no sources under $dir")
     files.filterNot(_.getFileName.toString == "Bytes.scala")
-      .map(f => (f.getFileName.toString, LintSources.code(f)))
+      .map(f => (s"${dir.getFileName}/${f.getFileName}", LintSources.code(f)))
   }
 
   test("no varint, zigzag or fixed-width helper outside Bytes.scala") {

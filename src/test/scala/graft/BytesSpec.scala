@@ -45,6 +45,8 @@ class BytesSpec extends AnyFunSuite {
       _ & 0xffffL),
     Codec("be32", (o, v) => Bytes.putBe32(o, v.toInt), _.be32().toLong,
       _.toInt.toLong),
+    Codec("be32u", (o, v) => Bytes.putBe32(o, v.toInt), _.be32u(),
+      _ & 0xffffffffL),
     Codec("be64", Bytes.putBe64, _.be64(), identity))
 
   private def encode(c: Codec, v: Long): Array[Byte] = {
@@ -114,6 +116,7 @@ class BytesSpec extends AnyFunSuite {
       Bytes.le64(le, 0) == v && Bytes.be64(be, 0) == v &&
         Bytes.le32(le, 0) == v.toInt && Bytes.be32(be, 4) == v.toInt &&
         Bytes.le32u(le, 0) == (v & 0xffffffffL) &&
+        Bytes.be32u(be, 4) == (v & 0xffffffffL) &&
         Bytes.le16(le, 0) == (v & 0xffff) && Bytes.be16(be, 6) == (v & 0xffff)
     })
   }

@@ -299,6 +299,15 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.parseBmpPixels(2L, "nope".getBytes).isEmpty)
     assert(Multimodal.parseBmpPixels(3L,
       bos.toByteArray.take(bos.size() - 4)).isEmpty)
+    // a width whose 3-byte rows overflow an Int stride (3 * 2^30): the
+    // size check must not pass on a negative stride
+    val wide = java.nio.ByteBuffer.allocate(80)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put("BM".getBytes).putInt(80).putInt(0).putInt(54) // file header
+      .putInt(40).putInt(0x40000000).putInt(1) // info header size, w, h
+      .putShort(1.toShort).putShort(24.toShort).putInt(0) // 24 bpp, BI_RGB
+      .array()
+    assert(Multimodal.parseBmpPixels(4L, wide).isEmpty)
   }
 
   test("PNG full pixel decode: own-encoder round-trip exercises all five " +
@@ -890,6 +899,11 @@ class MultimodalSpec extends SparkSpec {
     val junk = tag(3, "????".getBytes ++ be32(1) ++
       Array[Byte](0, 0, 0), 0)
     assert(Multimodal.parseId3v2(4L, junk).isEmpty)
+    // a v2.3 frame size near Int.MaxValue: the end-of-frame sum must
+    // not wrap negative and let the text read run off the array
+    val huge = tag(3, "TIT2".getBytes ++ be32(0x7ffffff8) ++
+      Array[Byte](0, 0, 0, 'a', 'b'), 5)
+    assert(Multimodal.parseId3v2(4L, huge).isEmpty)
     val ext = tag(3, frame(3, "TIT2", Array[Byte](0, 'x')), 0)
     ext(5) = 0x40.toByte // extended-header flag: route away
     assert(Multimodal.parseId3v2(5L, ext).isEmpty)
