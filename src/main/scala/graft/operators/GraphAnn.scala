@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Checkpoints.TrackedCheckpointOps
 import graft.functions.{c_round => round}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -182,7 +183,9 @@ object GraphAnn {
   /** One beam-search layer: `hops` rounds of expand → score → keep
     * top `beam`. Frontier columns: (query_id, node, bucket, sim).
     * Returns every intermediate frontier (for the visited-bucket
-    * audit) with the final one last.
+    * audit) with the final one last. Each hop's frontier is pinned
+    * behind a tracked checkpoint, so the next hop plans on a leaf, not
+    * on every hop before it, and the task binary stays one hop's size.
     */
   def walk(frontier0: DataFrame, adj: DataFrame, nodes: DataFrame,
            queries: DataFrame, hops: Int, beam: Int)
@@ -198,7 +201,7 @@ object GraphAnn {
         .select(col("query_id"), col("dst").as("node"))
       val cand = frontier.select(col("query_id"), col("node"))
         .union(expanded).distinct()
-      frontier = beamOf(cand, nodes, queries, beam)
+      frontier = beamOf(cand, nodes, queries, beam).trackedCheckpoint()
       out += frontier
       h += 1
     }

@@ -62,7 +62,8 @@ case class Warehouse(
   *  - insert_price SCD upsert (`:260-280`) → [[scdMerge]]
   *
   * The batch's plan runs once. The scan-to-store-resolution frame
-  * (price row joined on) is pinned behind one tracked checkpoint; the
+  * (brand, category and price row joined on from one first-row pass
+  * over Precios) is pinned behind one tracked checkpoint; the
   * new stores, providers, products and surviving facts are derived from
   * it and the existing tables alone. Providers are keyed by (store_name,
   * provider_url) — store_name is 1:1 with id_store — so they do not wait
@@ -73,10 +74,14 @@ case class Warehouse(
   * new-key sets are unioned under a `__kind` stratum and ranked in ONE
   * [[Relational.withStratumRankN]] pass (range-partitioned: no
   * single-partition window, however large the batch); each kind's
-  * offset is its max(existing id), collected from one grouped aggregate
-  * over the four tables. Ids are then resolved against existing ∪ new
-  * dims and the result is pinned once: every table the batch writes
-  * reads that frame plus its own existing table, never the scan.
+  * offset is its max(existing id), from one grouped aggregate over the
+  * four tables, broadcast-joined to the new keys on the kind before the
+  * rank (never collected, so the generated code carries no per-commit
+  * literal and a drop directory's commits reuse one set of compiled
+  * classes). Ids are then resolved
+  * against existing ∪ new dims and the result is pinned once: every
+  * table the batch writes reads that frame plus its own existing table,
+  * never the scan.
   */
 object Ingestion {
 
@@ -137,31 +142,24 @@ object Ingestion {
       coalesce(col("_hyperlink_Preview"), lit("")).as("Picture_URL"))
     val withPic = compras.join(pics, Seq("_file", "_rownum"), "left")
 
-    // ---- J1 enrich (`:93-97`): brand/category by Descripción; build side
-    // deduped to first match for the reference's iloc[0] semantics
-    val brandCat = Relational.firstPerKey(
+    // ---- J1 enrich (`:93-97`) + J6 price row (`database_utils.py:260-280`):
+    // the file's first Precios row per Descripción (the reference's
+    // iloc[0]) gives brand/category and the price; one left join with a
+    // presence flag, so the price merge needs no second scan
+    val firstPrecio = Relational.firstPerKey(
       precios.select(col("_file"), col("_rownum"), qcol("Descripción"),
-        col("Marca"), col("Categoria")),
+        col("Marca"), col("Categoria"), qcol("P. Venta"), qcol("P. Oferta")),
       keys = Seq(col("_file"), qcol("Descripción")),
       orderBy = Seq(col("_rownum")))
       .drop("_rownum")
-    val enriched = withPic.join(broadcast(brandCat), Seq("_file", "Descripción"), "left")
+      .withColumn("__priced", lit(true))
+    val enriched = withPic.join(broadcast(firstPrecio), Seq("_file", "Descripción"), "left")
 
     // ---- W1 forward-fill (`:143-153`), one-row lookback on the RAW value
     val wFile = Window.partitionBy(col("_file")).orderBy(col("_rownum"))
     val liga = col("Liga")
     val rows = enriched.withColumn("str_link",
       when(truthy(liga), liga).otherwise(lag(liga, 1).over(wFile)))
-
-    // ---- J6 price row (`database_utils.py:260-280`): the file's first
-    // Precios row per product; a left join with a presence flag, so the
-    // batch frame carries it and the price merge needs no second scan
-    val priceRow = Relational.firstPerKey(
-      precios.select(col("_file"), col("_rownum"), qcol("Descripción"),
-        qcol("P. Venta"), qcol("P. Oferta")),
-      keys = Seq(col("_file"), qcol("Descripción")), orderBy = Seq(col("_rownum")))
-      .select(col("_file"), qcol("Descripción"), qcol("P. Venta"), qcol("P. Oferta"),
-        lit(true).as("__priced"))
 
     // ---- store resolution (C7/C9, `database_utils.py:57-83`); F4:
     // unresolvable store → row contributes nothing (`:60-65`). The batch
@@ -171,7 +169,6 @@ object Ingestion {
       .withColumn("store_url", gf.domain_store(col("str_link")))
       .withColumn("provider_url", gf.provider_url(col("str_link")))
       .filter(col("store_name").isNotNull && col("store_name") =!= "none")
-      .join(priceRow, Seq("_file", "Descripción"), "left")
       .select(batchCols.map(qcol): _*)
       .trackedCheckpoint()
     val seqOrder = Seq(col("_file"), col("_rownum")) // the reference's row sequence
@@ -223,22 +220,26 @@ object Ingestion {
         Seq("Descripción"), "left_anti")
 
     // ---- surrogate ids: the four new-key sets ranked in ONE pass, each
-    // kind offset by its max(existing id) from one grouped aggregate
-    val newKeys = Seq("store" -> newStores, "provider" -> newProviders,
-        "product" -> newProducts, "purchase" -> facts)
-      .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
-      .reduce(_ unionByName _)
-    val ranked = Relational.withStratumRankN(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
+    // kind offset by its max(existing id) from one grouped aggregate. The
+    // aggregate is joined on, not collected, so no per-commit value
+    // reaches the generated code and a repeated commit reuses its compiled
+    // classes; joined before the rank, it is computed once, inside the
+    // rank's checkpoint, however many times the ids are read below
     val idOffsets = Seq(("store", existing.store, "id_store"),
         ("provider", existing.provider, "id_provider"),
         ("product", existing.product, "id_product"),
         ("purchase", existing.purchase, "id_purchase"))
       .map { case (k, t, id) => t.select(lit(k).as("__kind"), col(id).cast(LongType).as("__id")) }
       .reduce(_ unionByName _)
-      .groupBy("__kind").agg(coalesce(max(col("__id")), lit(0L)))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ided = ranked.withColumn("__id", col("__rank") +
-      idOffsets.foldLeft(lit(0L)) { case (o, (k, m)) => when(col("__kind") === k, m).otherwise(o) })
+      .groupBy("__kind").agg(max(col("__id")).as("__max"))
+    val newKeys = Seq("store" -> newStores, "provider" -> newProviders,
+        "product" -> newProducts, "purchase" -> facts)
+      .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
+      .reduce(_ unionByName _)
+      .join(broadcast(idOffsets), Seq("__kind"), "left")
+    val ided = Relational.withStratumRankN(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
+      .withColumn("__id", col("__rank") + coalesce(col("__max"), lit(0L)))
+      .drop("__max")
     def fresh(kind: String): DataFrame = ided.filter(col("__kind") === kind)
 
     // ---- id resolution against existing ∪ new dims, then the second and

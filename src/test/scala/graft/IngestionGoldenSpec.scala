@@ -106,10 +106,11 @@ class IngestionGoldenSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     Checkpoints.release()
     info(s"load + ingestWorkbooks + save: ${jobs.get} Spark jobs")
-    // At local[4] with 4 shuffle partitions this runs 46 jobs (load 0,
-    // ingest 34, save 12). The plan that ranked each id kind behind its
-    // own checkpoint, re-running the batch from the xlsx scan each time,
-    // ran 94, 7 of them schema inference in the load.
-    assert(jobs.get <= 50, s"${jobs.get} Spark jobs")
+    // At local[4] with 4 shuffle partitions this runs 44 jobs (load 0,
+    // ingest 32, save 12); with two first-row passes over Precios it ran
+    // 46. The plan that ranked each id kind behind its own checkpoint,
+    // re-running the batch from the xlsx scan each time, ran 94, 7 of them
+    // schema inference in the load.
+    assert(jobs.get <= 48, s"${jobs.get} Spark jobs")
   }
 }

@@ -96,17 +96,14 @@ class SqlFrontendSpec extends SparkSpec {
 }
 
 object SparkSpec {
+  /** The engine's own session (static confs included: they can only be
+    * set when the first session is built), plus the test-only runtime
+    * confs.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Engine.session("graft-test", 4)
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s
   }
 }
