@@ -45,7 +45,7 @@ object Engine {
     * corpus_curate 144, ingest_drop 204. 1 000 holds either with room for
     * the cache's four LRU segments, which fill unevenly.
     */
-  val CodegenCacheEntries = 1000
+  private val CodegenCacheEntries = 1000
 
   def localCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(
