@@ -210,7 +210,18 @@ object Relational {
     */
   def withStratumRankN(df: DataFrame, stratum: Seq[String],
                        order: Seq[Column], as: String,
-                       nAs: String): DataFrame = {
+                       nAs: String): DataFrame =
+    withStratumRankCounts(df, stratum, order, as, nAs)._1
+
+  /** [[withStratumRankN]] plus each stratum's row count, keyed by its
+    * stratum values, which the offset pass already holds on the driver —
+    * a caller that needs a stratum's size (to skip the work an empty one
+    * would cost, say) gets it without another job. A stratum with no
+    * rows is absent from the map.
+    */
+  def withStratumRankCounts(df: DataFrame, stratum: Seq[String],
+                            order: Seq[Column], as: String,
+                            nAs: String): (DataFrame, Map[Seq[Any], Long]) = {
     require(stratum.nonEmpty, "stratum columns must be non-empty")
     val spark = df.sparkSession
     val p = spark.sessionState.conf.numShufflePartitions
@@ -258,12 +269,13 @@ object Relational {
     val cond = stratum.zipWithIndex.map { case (s, i) =>
       withPid(s) <=> offDf(s"__srk_s$i")
     }.reduce(_ && _) && withPid("__srk_pid2") === offDf("__srk_pid")
-    withPid.join(broadcast(offDf), cond)
+    val ranked = withPid.join(broadcast(offDf), cond)
       .withColumn(as, col("__srk_off") +
         (col("__srk_mid").bitwiseAND(lit(mask)) - col("__srk_first")) + 1)
       .withColumn(nAs, col("__srk_n"))
       .drop((stratum.indices.map(i => s"__srk_s$i") ++
         Seq("__srk_pid", "__srk_pid2", "__srk_mid", "__srk_off", "__srk_first", "__srk_n")): _*)
+    (ranked, byStratum.map { case (sv, rs) => (sv: Seq[Any]) -> rs.map(_.getLong(sLen + 1)).sum })
   }
 
   /** Per-stratum exact INCLUSIVE prefix sum of an integer `value`

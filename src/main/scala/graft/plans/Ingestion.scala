@@ -13,6 +13,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Postgres schema (`database_utils.py:70-79,103-110,156-168,192-201,
   * 232-238,266-280`) held as DataFrames (parquet-backed managed tables in
   * production; fact/dim split drives broadcast planning).
+  *
+  * `origin` is the directory whose saved tables these are (set by
+  * [[WarehouseStore.load]]); `delta` is what this state changes in a
+  * warehouse loaded from `delta.base` (set by [[Ingestion.ingestWorkbooks]]),
+  * so that saving it back there writes only the change.
   */
 case class Warehouse(
     paymentType: DataFrame, // id_payment_type, payment_type
@@ -23,7 +28,9 @@ case class Warehouse(
                             //   purchase_date, delivery_date, exchange_rate, shipping_cost, discount
     operation: DataFrame,   // id_purchase, id_product, quantity, unit_price, unit_price_usd,
                             //   discount_percentage, pieces_per_unit, final_cost, product_url
-    price: DataFrame) {     // id_product, price, offer_price, start_date, end_date
+    price: DataFrame,       // id_product, price, offer_price, start_date, end_date
+    origin: Option[String] = None,
+    delta: Option[WarehouseDelta] = None) {
 
   /** Every table under its warehouse name, in constructor order (the
     * order [[WarehouseStore]] writes them in).
@@ -33,6 +40,14 @@ case class Warehouse(
     "product" -> product, "purchase" -> purchase, "operation" -> operation,
     "price" -> price)
 }
+
+/** What one batch changes in the warehouse saved at `base`: the rows each
+  * table in `appended` gains (a table that gains none is absent), the
+  * tables in `replaced` that change in place, and, by omission, the
+  * tables left as they were.
+  */
+case class WarehouseDelta(base: String, appended: Map[String, DataFrame],
+                          replaced: Set[String])
 
 /** Pipeline 2 of the reference (`import_files_to_postgre.py`, SURVEY.md
   * §3.2) re-expressed as ONE lazy set-oriented plan per batch of workbook
@@ -72,7 +87,7 @@ case class Warehouse(
   * Surrogate ids are `max(existing) + rank` over (file, rownum) —
   * deterministic, matching the reference's sequence order. The four
   * new-key sets are unioned under a `__kind` stratum and ranked in ONE
-  * [[Relational.withStratumRankN]] pass (range-partitioned: no
+  * [[Relational.withStratumRankCounts]] pass (range-partitioned: no
   * single-partition window, however large the batch); each kind's
   * offset is its max(existing id), from one grouped aggregate over the
   * four tables, broadcast-joined to the new keys on the kind before the
@@ -82,6 +97,15 @@ case class Warehouse(
   * against existing ∪ new dims and the result is pinned once: every
   * table the batch writes reads that frame plus its own existing table,
   * never the scan.
+  *
+  * The batch changes the warehouse by appending to `store`, `provider`,
+  * `product`, `purchase` and `operation` and by merging into `price`;
+  * `payment_type` it only reads. Besides the full next state, the result
+  * carries that change ([[WarehouseDelta]]): each appended table's new
+  * rows, and `price` as replaced when the batch adds a purchase. The rank
+  * pass counts each kind's new keys on the driver, so a table that gains
+  * nothing is left out of the change without a count job, and
+  * [[WarehouseStore.save]] writes nothing for it.
   */
 object Ingestion {
 
@@ -111,7 +135,9 @@ object Ingestion {
   }
 
   /** Ingest every .xlsx under `path` into `existing`, returning the new
-    * warehouse state. Batch-idempotent: re-running over already-ingested
+    * warehouse state; when `existing` was loaded from a directory, the
+    * state also carries its change against it, for [[WarehouseStore.save]]
+    * to write there. Batch-idempotent: re-running over already-ingested
     * files is a no-op for facts (the J5 gate), matching the reference's
     * transactional replay safety (SURVEY.md §4.2).
     */
@@ -237,9 +263,12 @@ object Ingestion {
       .map { case (k, df) => df.select(lit(k).as("__kind") +: batchCols.map(qcol): _*) }
       .reduce(_ unionByName _)
       .join(broadcast(idOffsets), Seq("__kind"), "left")
-    val ided = Relational.withStratumRankN(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
+    val (ranked, kindCounts) =
+      Relational.withStratumRankCounts(newKeys, Seq("__kind"), seqOrder, "__rank", "__n")
+    val ided = ranked
       .withColumn("__id", col("__rank") + coalesce(col("__max"), lit(0L)))
       .drop("__max")
+    def added(kind: String): Long = kindCounts.getOrElse(Seq(kind), 0L)
     def fresh(kind: String): DataFrame = ided.filter(col("__kind") === kind)
 
     // ---- id resolution against existing ∪ new dims, then the second and
@@ -258,50 +287,48 @@ object Ingestion {
       .trackedCheckpoint()
     def delta(kind: String): DataFrame = resolved.filter(col("__kind") === kind)
 
-    val store = existing.store.unionByName(delta("store")
+    val storesAdded = delta("store")
       .select(col("__id").as("id_store"), col("store_name"), col("store_url"),
-        lit(true).as("status")))
-    val provider = existing.provider.unionByName(delta("provider")
+        lit(true).as("status"))
+    val providersAdded = delta("provider")
       .select(col("__id").as("id_provider"), col("id_store"), col("provider_url"),
-        lit(true).as("is_active")))
+        lit(true).as("is_active"))
     // conditional brand/category columns → one nullable schema
     // (`database_utils.py:149-171`); create_product is called with descr=""
     val branded = truthy(col("Marca")) && truthy(col("Categoria"))
-    val product = existing.product.unionByName(delta("product")
+    val productsAdded = delta("product")
       .select(col("__id").as("id_product"), qcol("Descripción").as("product_name"),
         lit("").as("description"), col("Picture_URL").as("image_url"),
         when(branded, col("Marca")).as("brand"),
-        when(branded, col("Categoria")).as("category")))
+        when(branded, col("Categoria")).as("category"))
 
     // ---- purchase fact (M3, `database_utils.py:175-204`) ----
     val idPayment = existing.paymentType
       .filter(col("payment_type") === "Tarjeta de Crédito")
       .select(col("id_payment_type"))
     val purchaseRows = delta("purchase").withColumnRenamed("__id", "id_purchase")
-    val purchase = existing.purchase.unionByName(
-      purchaseRows
-        .crossJoin(broadcast(idPayment)) // constant dim key J3 (`:183`)
-        .select(col("id_purchase"),
-          col("id_provider"),
-          col("id_payment_type").cast(LongType),
-          qcol("Total Cmpr").as("total"),
-          lit(0.0).as("tax"), lit(0.0).as("ieps"),
-          qcol("Fch Cmpr").as("purchase_date"),
-          qcol("Fch Entrga").as("delivery_date"),
-          qcol("Dólar").as("exchange_rate"),
-          coalesce(col("Envio"), lit(0.0)).as("shipping_cost"),
-          coalesce(col("Desct"), lit(0.0)).as("discount")))
+    val purchasesAdded = purchaseRows
+      .crossJoin(broadcast(idPayment)) // constant dim key J3 (`:183`)
+      .select(col("id_purchase"),
+        col("id_provider"),
+        col("id_payment_type").cast(LongType),
+        qcol("Total Cmpr").as("total"),
+        lit(0.0).as("tax"), lit(0.0).as("ieps"),
+        qcol("Fch Cmpr").as("purchase_date"),
+        qcol("Fch Entrga").as("delivery_date"),
+        qcol("Dólar").as("exchange_rate"),
+        coalesce(col("Envio"), lit(0.0)).as("shipping_cost"),
+        coalesce(col("Desct"), lit(0.0)).as("discount"))
 
     // ---- operation fact (M3, `database_utils.py:206-245`) ----
-    val operation = existing.operation.unionByName(
-      purchaseRows.select(col("id_purchase"), col("id_product"),
-        coalesce(col("Cant").cast(IntegerType), lit(0)).as("quantity"),
-        coalesce(qcol("C. Unit"), lit(0.0)).as("unit_price"),
-        qcol("C. Unit US").as("unit_price_usd"),
-        coalesce(qcol("% Desc"), lit(0.0)).as("discount_percentage"),
-        coalesce(col("Pzs").cast(IntegerType), lit(1)).as("pieces_per_unit"),
-        qcol("Costo Final").as("final_cost"),
-        gf.truncate500(coalesce(col("Liga"), lit(""))).as("product_url")))
+    val operationsAdded = purchaseRows.select(col("id_purchase"), col("id_product"),
+      coalesce(col("Cant").cast(IntegerType), lit(0)).as("quantity"),
+      coalesce(qcol("C. Unit"), lit(0.0)).as("unit_price"),
+      qcol("C. Unit US").as("unit_price_usd"),
+      coalesce(qcol("% Desc"), lit(0.0)).as("discount_percentage"),
+      coalesce(col("Pzs").cast(IntegerType), lit(1)).as("pieces_per_unit"),
+      qcol("Costo Final").as("final_cost"),
+      gf.truncate500(coalesce(col("Liga"), lit(""))).as("product_url"))
 
     // ---- price SCD merge (M4, `database_utils.py:260-280`): J6 semi
     // (price only when the product appears in Precios) + C12 pricing
@@ -315,7 +342,23 @@ object Ingestion {
       .select("id_product", "price", "offer_price")
     val price = scdMerge(existing.price, incomingPrices, batchDate)
 
-    Warehouse(existing.paymentType, store, provider, product, purchase, operation, price)
+    // ---- the change: each table's new rows, counted by the rank above
+    // (one operation per purchase; prices change only with a purchase), so
+    // a table that gains nothing is left out and costs its save no job
+    val appends = Seq(
+      ("store", existing.store, storesAdded, added("store")),
+      ("provider", existing.provider, providersAdded, added("provider")),
+      ("product", existing.product, productsAdded, added("product")),
+      ("purchase", existing.purchase, purchasesAdded, added("purchase")),
+      ("operation", existing.operation, operationsAdded, added("purchase")))
+    val Seq(store, provider, product, purchase, operation) =
+      appends.map { case (_, table, rows, _) => table.unionByName(rows) }
+    val change = existing.origin.map(base => WarehouseDelta(base,
+      appended = appends.collect { case (t, _, rows, n) if n > 0 => t -> rows }.toMap,
+      replaced = if (added("purchase") > 0) Set("price") else Set.empty))
+
+    Warehouse(existing.paymentType, store, provider, product, purchase, operation, price,
+      delta = change)
   }
 
   /** M4 SCD-style price upsert (`database_utils.py:260-280`): matched

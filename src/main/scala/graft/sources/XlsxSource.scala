@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 
@@ -30,9 +32,10 @@ object XlsxSource {
 
   /** Read one named sheet from every .xlsx under `path`.
     *
-    * @param headers output columns; when None, the driver peeks the header
-    *                row of one file (one tiny job) — pass explicitly for
-    *                fixed-schema production reads.
+    * @param headers output columns; when None, the driver reads the
+    *                header row of the first workbook ([[firstHeader]], no
+    *                Spark job) — pass explicitly for fixed-schema
+    *                production reads.
     * @param hyperlinkCols headers for which a `_hyperlink_<col>` column is
     *                emitted.
     */
@@ -43,13 +46,8 @@ object XlsxSource {
       .option("pathGlobFilter", "*.xlsx").load(path)
       .select("path", "content")
 
-    val outHeaders: Seq[String] = headers.getOrElse {
-      val first = files.limit(1).collect().headOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"no .xlsx files under '$path' — pass headers= explicitly to read a possibly-empty dir"))
-      headerRow(XlsxParser.parseSheet(first.getAs[Array[Byte]]("content"), sheet))
-        .map(_._1)
-    }
+    val outHeaders: Seq[String] = headers.getOrElse(
+      firstHeader(spark.sparkContext.hadoopConfiguration, path, sheet))
 
     val schema = StructType(
       Seq(StructField("_file", StringType, nullable = false),
@@ -76,6 +74,42 @@ object XlsxSource {
         Row.fromSeq(Seq(file, sheetName, (i + 1).toLong) ++ vals ++ links)
       }
     }.toDF()
+  }
+
+  /** The .xlsx workbooks at `path` (the file itself, or a directory's
+    * files, Spark's hidden `_`/`.` names left out, like its scans) in
+    * path-name order.
+    */
+  private[graft] def listWorkbooks(conf: Configuration, path: String): Seq[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val all = if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq.map(_.getPath) else Seq(p)
+    all.filter { f =>
+      val n = f.getName
+      n.endsWith(".xlsx") && !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.toString).sorted
+  }
+
+  private[graft] def readBytes(conf: Configuration, file: String): Array[Byte] = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(conf)
+    val in = fs.open(p)
+    try {
+      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      in.readFully(0, buf)
+      buf
+    } finally in.close()
+  }
+
+  /** Header names of `sheet` in the first workbook at `path`
+    * ([[listWorkbooks]] order), read and parsed on the driver: the
+    * column set of a read that is given none.
+    */
+  private[graft] def firstHeader(conf: Configuration, path: String, sheet: String): Seq[String] = {
+    val first = listWorkbooks(conf, path).headOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"no .xlsx files under '$path' — pass the header names explicitly to read a possibly-empty dir"))
+    headerRow(XlsxParser.parseSheet(readBytes(conf, first), sheet)).map(_._1)
   }
 
   /** The header row of a parsed sheet as (deduped name, 0-based column

@@ -3,7 +3,6 @@ package graft.sources.v2
 import java.util
 
 import graft.sources.{XlsxParser, XlsxSource}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -61,44 +60,21 @@ object XlsxDataSource {
     Option(o.get("hyperlinkColumns")).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
 
-  private[v2] def listFiles(o: CaseInsensitiveStringMap): Seq[String] = {
-    val path = Option(o.get("path")).getOrElse(
+  private[v2] def path(o: CaseInsensitiveStringMap): String =
+    Option(o.get("path")).getOrElse(
       throw new IllegalArgumentException("xlsx source requires a load path"))
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val all =
-      if (st.isDirectory) fs.listStatus(p).toSeq.map(_.getPath)
-      else Seq(p)
-    all.filter(_.getName.endsWith(".xlsx")).map(_.toString).sorted
-  }
 
-  private[v2] def readBytes(file: String): Array[Byte] = {
-    val conf = SparkSession.getActiveSession
+  private[v2] def listFiles(o: CaseInsensitiveStringMap): Seq[String] =
+    XlsxSource.listWorkbooks(SparkSession.active.sparkContext.hadoopConfiguration, path(o))
+
+  private[v2] def readBytes(file: String): Array[Byte] =
+    XlsxSource.readBytes(SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      in.readFully(0, buf)
-      buf
-    } finally in.close()
-  }
-
-  /** Header names of `sheetName` in the first file (planning-time peek) —
-    * the SAME name derivation (dedup suffixes included) as XlsxSource.
-    */
-  private[v2] def headerNames(bytes: Array[Byte], sheetName: String): Seq[String] =
-    XlsxSource.headerRow(XlsxParser.parseSheet(bytes, sheetName)).map(_._1)
+      .getOrElse(new org.apache.hadoop.conf.Configuration()), file)
 
   private[v2] def fullSchema(o: CaseInsensitiveStringMap): StructType = {
-    val files = listFiles(o)
-    require(files.nonEmpty, "no .xlsx files under the load path")
-    val headers = headerNames(readBytes(files.head), sheet(o))
+    val headers = XlsxSource.firstHeader(
+      SparkSession.active.sparkContext.hadoopConfiguration, path(o), sheet(o))
     StructType(
       Seq(StructField("_file", StringType, nullable = false),
         StructField("_sheet", StringType, nullable = false),

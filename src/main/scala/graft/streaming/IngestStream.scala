@@ -9,13 +9,17 @@ import org.apache.spark.sql.types._
   * workbooks → one micro-batch per FILE ([[FileDrop]] semantics:
   * maxFilesPerTrigger=1 ≙ one transaction per file,
   * `import_files_to_postgre.py:136-237`) → the [[Ingestion]] plan against
-  * the parquet-backed warehouse → stage-and-swap commit
-  * ([[WarehouseStore]]) → archive or quarantine the file.
+  * the parquet-backed warehouse → stage-then-publish commit of the
+  * file's change ([[WarehouseStore]]) → archive or quarantine the file.
   *
-  * Restart safety: the checkpoint skips committed batches; a batch that
-  * half-ran before a crash re-runs and the J5 dedup gate makes the replay
-  * a no-op for already-committed facts — same end state as the
-  * reference's rollback, without needing one.
+  * Restart safety: the checkpoint skips committed batches. A batch whose
+  * save failed (any filesystem step reporting failure throws) is
+  * quarantined, and one cut short by a crash re-runs: either way every
+  * table was staged before any was published, the next load rolls back a
+  * half-done table replacement, and a re-run's anti-joins and J5 dedup
+  * gate add only the rows that did not land (the limits are in
+  * [[WarehouseStore]]'s doc) — the reference's rollback, approximated
+  * without a transaction.
   */
 object IngestStream {
 
@@ -36,8 +40,7 @@ object IngestStream {
       inputDir = inputDir, format = "binaryFile", schema = binaryFileSchema,
       processedDir = processedDir, errorsDir = errorsDir,
       checkpointDir = checkpointDir, pathGlob = "*.xlsx")
-    FileDrop.runAvailableNow(spark, cfg) { (batch, _) =>
-      val files = batch.select("path").distinct().collect().map(_.getString(0))
+    FileDrop.runAvailableNow(spark, cfg) { (_, _, files) =>
       files.foreach { file =>
         val wh = WarehouseStore.load(spark, warehouseDir)
         val next = Ingestion.ingestWorkbooks(spark, file, wh)

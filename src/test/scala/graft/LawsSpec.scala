@@ -111,8 +111,11 @@ class LawsSpec extends SparkSpec {
         .withColumn("r", row_number().over(w).cast("long"))
         .withColumn("n", count(lit(1))
           .over(Window.partitionBy($"lang")).cast("long"))
-      val two = Relational.withStratumRankN(df, Seq("lang"), order, "r", "n")
+      val (two, counts) = Relational.withStratumRankCounts(df, Seq("lang"), order, "r", "n")
       assert(spec.exceptAll(two).isEmpty && two.exceptAll(spec).isEmpty,
+        s"seed=$seed parts=$parts")
+      // the counts returned beside the ranks are the per-stratum n
+      assert(counts == rows.groupBy(_._2).map { case (st, rs) => Seq(st) -> rs.size.toLong },
         s"seed=$seed parts=$parts")
     }
     // empty input: no rows out, no throw

@@ -215,7 +215,7 @@ class StreamingSpec extends SparkSpec {
       schema = StructType(Seq(StructField("k", LongType))),
       processedDir = done, errorsDir = bad,
       checkpointDir = s"$base/ckpt", pathGlob = "*.json")
-    val (ok, err) = FileDrop.runAvailableNow(spark, cfg) { (batch, _) =>
+    val (ok, err) = FileDrop.runAvailableNow(spark, cfg) { (batch, _, _) =>
       // per-file transactional stand-in: reject batches containing k<0
       if (batch.filter(col("k") < 0).count() > 0)
         throw new RuntimeException("poison")
@@ -912,7 +912,7 @@ class StreamingSpec extends SparkSpec {
       processedDir = done, errorsDir = bad,
       checkpointDir = s"$base/ckpt", pathGlob = "*.json")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val live = FileDrop.runLive(spark, cfg) { (batch, _) =>
+    val live = FileDrop.runLive(spark, cfg) { (batch, _, _) =>
       batch.select(col("k")).as[Long].collect().foreach(seen.add)
     }
     def awaitProcessed(n: Long): Unit = {

@@ -103,6 +103,40 @@ class XlsxSpec extends SparkSpec {
     assert(compras.filter(col("Descripción").isNotNull).count() > 0)
   }
 
+  test("XlsxSource.read without headers reads them on the driver: no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    val compras = try {
+      val df = XlsxSource.read(spark, "fixtures/ingestion", "Compras")
+      org.apache.spark.graft.ListenerDrain(sc)
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs to find the header")
+    assert(compras.columns.contains("Descripción"))
+  }
+
+  test("both xlsx sources take the first workbook's header in name order, and fail alike on none") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("xlsxh").toString
+    XlsxWriter.write(s"$dir/b.xlsx", Seq("s" -> Seq(("x", "y")).toDF("b1", "b2")))
+    XlsxWriter.write(s"$dir/a.xlsx", Seq("s" -> Seq(("x", "y")).toDF("a1", "a2")))
+    def data(cols: Array[String]) = cols.filterNot(_.startsWith("_")).toSeq
+    assert(data(XlsxSource.read(spark, dir, "s").columns) == Seq("a1", "a2"))
+    assert(data(spark.read.format("xlsx").option("sheet", "s").load(dir).columns) ==
+      Seq("a1", "a2"))
+    val empty = java.nio.file.Files.createTempDirectory("xlsxe").toString
+    val e1 = intercept[IllegalArgumentException](XlsxSource.read(spark, empty, "s"))
+    val e2 = intercept[IllegalArgumentException](
+      spark.read.format("xlsx").option("sheet", "s").load(empty))
+    assert(e1.getMessage.startsWith("no .xlsx files under") && e2.getMessage == e1.getMessage)
+  }
+
   test("writer round-trips through the reader") {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("xlsxw").toString
