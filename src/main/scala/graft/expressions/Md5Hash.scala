@@ -25,29 +25,24 @@ object Md5Hashes {
   private val md = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
 
-  def digest(s: UTF8String): Array[Byte] = {
+  /** The thread-local digest, reset. */
+  private def fresh(): MessageDigest = {
     val m = md.get()
     m.reset()
-    m.digest(s.getBytes)
+    m
   }
 
-  def hash60(s: UTF8String): Long = {
-    val d = digest(s)
-    val be64 =
-      ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) | ((d(2) & 0xffL) << 40) |
-        ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-    be64 >>> 4
-  }
+  /** The 16-byte md5 digest of raw bytes via the thread-local digest. */
+  def digest(b: Array[Byte]): Array[Byte] = fresh().digest(b)
+
+  def hash60(s: UTF8String): Long = hash60Bytes(s.getBytes)
 
   /** hash60 over raw bytes — the executor-side twin for per-row JVM
     * code (ShardSink's tokenizer): same value as hash60(UTF8String of
     * the same bytes), no UTF8String wrapper allocation.
     */
   def hash60Bytes(b: Array[Byte]): Long = {
-    val m = md.get()
-    m.reset()
-    val d = m.digest(b)
+    val d = digest(b)
     val be64 =
       ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) | ((d(2) & 0xffL) << 40) |
         ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
@@ -62,9 +57,7 @@ object Md5Hashes {
     * pinned equal to (hash60Bytes, hash56Bytes) in ShardSinkSpec.
     */
   def hash60And56Bytes(b: Array[Byte]): (Long, Long) = {
-    val m = md.get()
-    m.reset()
-    val d = m.digest(b)
+    val d = digest(b)
     val hi =
       ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) | ((d(2) & 0xffL) << 40) |
         ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
@@ -80,9 +73,9 @@ object Md5Hashes {
     * chars 16..29 of md5 as a long), for per-row JVM callers.
     */
   def hash56Bytes(b: Array[Byte]): Long = {
-    val m = md.get()
-    m.reset()
-    val d = m.digest(b)
+    val d = digest(b)
+    // hex chars 16..29 (1-indexed) = 0-indexed nibbles 15..28: the LOW
+    // nibble of byte 7 through the HIGH nibble of byte 14
     val be64 =
       ((d(7) & 0xffL) << 56) | ((d(8) & 0xffL) << 48) | ((d(9) & 0xffL) << 40) |
         ((d(10) & 0xffL) << 32) | ((d(11) & 0xffL) << 24) | ((d(12) & 0xffL) << 16) |
@@ -111,22 +104,19 @@ object Md5Hashes {
     * `MessageDigest.getInstance("MD5").digest(x).map("%02x"...)` hot-path
     * replacement (same string, one digest instance per thread).
     */
-  def md5Hex(b: Array[Byte]): String = {
-    val m = md.get()
-    m.reset()
-    hexLower(m.digest(b))
+  def md5Hex(b: Array[Byte]): String = hexLower(digest(b))
+
+  /** md5 hex digest of `s`'s UTF-8 bytes. */
+  def md5Hex(s: String): String = md5Hex(s.getBytes("UTF-8"))
+
+  /** md5 hex digest of the concatenation of `parts`, without building it. */
+  def md5HexOfParts(parts: Iterator[Array[Byte]]): String = {
+    val m = fresh()
+    parts.foreach(p => m.update(p))
+    hexLower(m.digest())
   }
 
-  def hash56(s: UTF8String): Long = {
-    val d = digest(s)
-    // hex chars 16..29 (1-indexed) = 0-indexed nibbles 15..28: the LOW
-    // nibble of byte 7 through the HIGH nibble of byte 14
-    val be64 =
-      ((d(7) & 0xffL) << 56) | ((d(8) & 0xffL) << 48) | ((d(9) & 0xffL) << 40) |
-        ((d(10) & 0xffL) << 32) | ((d(11) & 0xffL) << 24) | ((d(12) & 0xffL) << 16) |
-        ((d(13) & 0xffL) << 8) | (d(14) & 0xffL)
-    (be64 >>> 4) & ((1L << 56) - 1)
-  }
+  def hash56(s: UTF8String): Long = hash56Bytes(s.getBytes)
 }
 
 /** Native codegen'd 60-bit md5 hash (SURVEY.md §2.10 scalar extension

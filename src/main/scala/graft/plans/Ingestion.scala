@@ -42,11 +42,11 @@ case class Warehouse(
 }
 
 /** What one batch changes in the warehouse saved at `base`: the rows each
-  * table in `appended` gains (a table that gains none is absent), the
-  * tables in `replaced` that change in place, and, by omission, the
-  * tables left as they were.
+  * table in `appended` gains and how many (a table that gains none is
+  * absent), the tables in `replaced` that change in place, and, by
+  * omission, the tables left as they were.
   */
-case class WarehouseDelta(base: String, appended: Map[String, DataFrame],
+case class WarehouseDelta(base: String, appended: Map[String, (DataFrame, Long)],
                           replaced: Set[String])
 
 /** Pipeline 2 of the reference (`import_files_to_postgre.py`, SURVEY.md
@@ -102,10 +102,11 @@ case class WarehouseDelta(base: String, appended: Map[String, DataFrame],
   * `product`, `purchase` and `operation` and by merging into `price`;
   * `payment_type` it only reads. Besides the full next state, the result
   * carries that change ([[WarehouseDelta]]): each appended table's new
-  * rows, and `price` as replaced when the batch adds a purchase. The rank
-  * pass counts each kind's new keys on the driver, so a table that gains
-  * nothing is left out of the change without a count job, and
-  * [[WarehouseStore.save]] writes nothing for it.
+  * rows and their count, and `price` as replaced when the batch adds a
+  * purchase. The rank pass counts each kind's new keys on the driver, so
+  * a table that gains nothing is left out of the change without a count
+  * job, [[WarehouseStore.save]] writes nothing for it, and it sizes each
+  * append's files from the count.
   */
 object Ingestion {
 
@@ -354,7 +355,7 @@ object Ingestion {
     val Seq(store, provider, product, purchase, operation) =
       appends.map { case (_, table, rows, _) => table.unionByName(rows) }
     val change = existing.origin.map(base => WarehouseDelta(base,
-      appended = appends.collect { case (t, _, rows, n) if n > 0 => t -> rows }.toMap,
+      appended = appends.collect { case (t, _, rows, n) if n > 0 => t -> (rows, n) }.toMap,
       replaced = if (added("purchase") > 0) Set("price") else Set.empty))
 
     Warehouse(existing.paymentType, store, provider, product, purchase, operation, price,

@@ -15,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * warehouse it is about to change (streaming ingest,
   * [[graft.streaming.IngestStream]]). Publishing then, table by table:
   *  - appends: moves the staged part files into the live directory (part
-  *    file names are unique per write, so they never collide);
+  *    file names are unique per write, so they never collide); an append
+  *    is written as one file per scan split of its rows, one file for any
+  *    batch of workbooks;
   *  - replaces: renames the live directory aside, renames the staged one
   *    into its place, and deletes the old one.
   * A state saved back to the directory it was built from (its
@@ -75,7 +77,9 @@ object WarehouseStore {
       else {
         val files = dataFiles(fs, live)
         if (fragmented(spark, files)) Some(Replace(t, full.coalesce(compactedCount(spark, files))))
-        else Some(change.flatMap(_.appended.get(t)).fold[Step](Replace(t, full))(Append(t, _)))
+        else Some(change.flatMap(_.appended.get(t)).fold[Step](Replace(t, full)) {
+          case (rows, n) => Append(t, rows.coalesce(fileCount(spark, n * rows.schema.defaultSize)))
+        })
       }
     }
     // stage everything first (plans still read the live tables) …
@@ -135,9 +139,16 @@ object WarehouseStore {
     files.size > compactedCount(spark, files) + conf.filesMaxPartitionBytes / conf.filesOpenCostInBytes
   }
 
-  /** The file count a rewrite of `files` compacts to: one per full scan split. */
-  private def compactedCount(spark: SparkSession, files: Seq[FileStatus]): Int = {
+  /** The file count a rewrite of `files` compacts to. */
+  private def compactedCount(spark: SparkSession, files: Seq[FileStatus]): Int =
+    fileCount(spark, files.map(_.getLen).sum)
+
+  /** The files `bytes` of rows are written as: one per full scan split.
+    * An append takes its bytes from its row count times Spark's per-row
+    * size estimate of its schema, so sizing it runs no job.
+    */
+  private def fileCount(spark: SparkSession, bytes: Long): Int = {
     val split = spark.sessionState.conf.filesMaxPartitionBytes
-    math.max(1L, (files.map(_.getLen).sum + split - 1) / split).toInt
+    math.max(1L, (bytes + split - 1) / split).toInt
   }
 }

@@ -1,16 +1,23 @@
 package graft.queries
 
 import graft.Engine
+import graft.expressions.Md5Hashes
+import graft.expressions.Md5Hashes.{hash60Bytes, md5Hex}
 import graft.plans.Ingestion
 import graft.{functions => gf}
 import graft.functions.{c_round => round}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Driver-contract coverage for the ingestion pipeline's sink-side merge
-  * operators (SURVEY.md §2.9) over the TPC-H-ish testdata — the xlsx
-  * end-to-end path is covered by IngestionSpec's golden tests; this
-  * exposes the reusable SCD merge to the DuckDB correctness gate.
+/** The format-reader queries: the engine's own readers for the files a
+  * corpus or a lake arrives in — ORC, CSV, JSONL and text encodings, XZ
+  * and LZMA, Hudi, Iceberg, Delta, gzip/WARC, tar, zip, Parquet, bzip2
+  * and zstd — each decoding committed fixture bytes (or bytes the query
+  * builds) back to relational truth the DuckDB oracle recomputes from
+  * `documents`. Most take their blobs through [[Blobs]]. Also q39, the
+  * ingestion pipeline's SCD price merge (SURVEY.md §2.9) over the
+  * TPC-H-ish testdata; the xlsx end-to-end path is covered by the
+  * ingestion golden tests.
   */
 object IngestionQueries {
 
@@ -255,21 +262,11 @@ object IngestionQueries {
   // (pyarrow.orc) for the oracle to join — same binding pattern as
   // q257's manifest_length.
   private def orcDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val Fixture = "/root/repo/fixtures/orc_files.parquet"
+    val Fixture = Blobs.path("orc_files.parquet")
     Seq("q264_orc_tail_census" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(Fixture)), "blob_key")
+        Blobs.fixture(s, dir, "orc:", Fixture)
           .select(col("blob_id"), col("file_bytes"), col("n_stripes"),
             col("content_length"))
           .as[(Long, Array[Byte], Long, Long)]
@@ -342,14 +339,7 @@ object IngestionQueries {
     "q267_orc_stripe_prune" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(Fixture)), "blob_key")
+        Blobs.fixture(s, dir, "orc:", Fixture)
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -437,14 +427,7 @@ object IngestionQueries {
     "q268_orc_data_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(Fixture)), "blob_key")
+        Blobs.fixture(s, dir, "orc:", Fixture)
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -502,25 +485,11 @@ object IngestionQueries {
     "q274_orc_string_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orcstr:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_str_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orcstr:", "orc_str_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
             val O = graft.sources.Orc
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             O.parseTail(bytes).toSeq.flatMap { t =>
               if (t.fieldNames != Seq("rec_id", "name", "cat")) Nil
               else {
@@ -547,8 +516,10 @@ object IngestionQueries {
                       if names.length.toLong == st.numRows &&
                         cats.length == names.length =>
                       rows += names.length
-                      names.foreach(v => nameSum += h60(v) % 1000003L)
-                      cats.foreach(v => catSum += h60(v) % 1000003L)
+                      names.foreach(v =>
+                        nameSum += hash60Bytes(v.getBytes("UTF-8")) % 1000003L)
+                      cats.foreach(v =>
+                        catSum += hash60Bytes(v.getBytes("UTF-8")) % 1000003L)
                     case _ => ok = false
                   }
                 }
@@ -602,15 +573,7 @@ object IngestionQueries {
     "q276_orc_bloom_skip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orcstr:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_str_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orcstr:", "orc_str_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -684,15 +647,7 @@ object IngestionQueries {
     "q300_orc_skip_stack" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orcstr:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_str_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orcstr:", "orc_str_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -817,25 +772,11 @@ object IngestionQueries {
     "q277_orc_nullable_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orcnull:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_null_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orcnull:", "orc_null_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
             val O = graft.sources.Orc
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             O.parseTail(bytes).toSeq.flatMap { t =>
               if (t.fieldNames != Seq("rec_id", "val", "tag", "pad")) Nil
               else {
@@ -861,7 +802,8 @@ object IngestionQueries {
                       }
                       i = 0
                       while (i < tv.length) {
-                        if (tv(i)) tagHash += h60(tags(i)) % 1000003L
+                        if (tv(i))
+                          tagHash += hash60Bytes(tags(i).getBytes("UTF-8")) % 1000003L
                         else tagNulls += 1
                         i += 1
                       }
@@ -909,15 +851,7 @@ object IngestionQueries {
     "q278_orc_row_index_skip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orc:", "orc_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -1032,15 +966,7 @@ object IngestionQueries {
     "q279_orc_temporal_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orctime:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_time_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orctime:", "orc_time_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -1116,15 +1042,7 @@ object IngestionQueries {
     "q284_orc_list_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orclist:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_list_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orclist:", "orc_list_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -1183,25 +1101,11 @@ object IngestionQueries {
     "q288_orc_map_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("orcmap:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/orc_map_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "orcmap:", "orc_map_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
             val O = graft.sources.Orc
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             O.parseTail(bytes).toSeq.flatMap { t =>
               // struct(long, map<string,long>, string)
               if (t.fieldNames != Seq("rec_id", "m", "pad") ||
@@ -1222,7 +1126,7 @@ object IngestionQueries {
                         nEntries += m.length
                         m.foreach { case (k, v) =>
                           valSum += v
-                          keyHash += h60(k) % 1000003L
+                          keyHash += hash60Bytes(k.getBytes("UTF-8")) % 1000003L
                         }
                       }
                     case _ => ok = false
@@ -1267,30 +1171,13 @@ object IngestionQueries {
   // (QUOTE_MINIMAL + CRLF) is the independent writer; hash sums of
   // the reassembled fields re-derive relationally on the oracle side.
   private def csvDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     Seq("q291_csv_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("csv:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/csv_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "csv:", "csv_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             graft.sources.Csv.parse(bytes).toSeq.flatMap { rows =>
               if (rows.isEmpty ||
                 rows.head != Vector("doc_id", "name", "note")) Nil
@@ -1306,8 +1193,8 @@ object IngestionQueries {
                     n += 1
                     try idSum += r(0).toLong
                     catch { case _: NumberFormatException => ok = false }
-                    nameHash += h60(r(1)) % 1000003L
-                    noteHash += h60(r(2)) % 1000003L
+                    nameHash += hash60Bytes(r(1).getBytes("UTF-8")) % 1000003L
+                    noteHash += hash60Bytes(r(2).getBytes("UTF-8")) % 1000003L
                   }
                 }
                 if (ok) Seq((blobId, n, idSum, nameHash, noteHash))
@@ -1341,25 +1228,11 @@ object IngestionQueries {
     "q292_jsonl_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("jsonl:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/jsonl_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "jsonl:", "jsonl_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
             import graft.sources.Json.{JArray, JLong, JObject, JString}
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             val lines = new String(bytes,
               java.nio.charset.StandardCharsets.UTF_8)
               .split("\n").iterator.filter(_.nonEmpty).toSeq
@@ -1388,14 +1261,15 @@ object IngestionQueries {
                   } yield {
                     n += 1
                     idSum += id
-                    langHash += h60(lang) % 1000003L
+                    langHash += hash60Bytes(lang.getBytes("UTF-8")) % 1000003L
                     scoreSum += score
                     tags.foreach {
                       case JString(t) =>
-                        nTags += 1; tagHash += h60(t) % 1000003L
+                        nTags += 1
+                        tagHash += hash60Bytes(t.getBytes("UTF-8")) % 1000003L
                       case _ => ok = false
                     }
-                    textHash += h60(text) % 1000003L
+                    textHash += hash60Bytes(text.getBytes("UTF-8")) % 1000003L
                   }
                   if (r.isEmpty) ok = false
                 case _ => ok = false
@@ -1446,31 +1320,18 @@ object IngestionQueries {
     "q293_text_encoding_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("textenc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/textenc_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "textenc:", "textenc_files.parquet")
           .select(col("blob_id"), col("kind"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .flatMap { case (blobId, kind, bytes) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             graft.sources.TextEncoding.decode(bytes).toSeq.flatMap {
               case (det, text) =>
                 if (det.name != kind) Nil // sniff must match truth
                 else {
                   val lines = text.split("\n").filter(_.nonEmpty)
                   var hsum = 0L
-                  lines.foreach(l => hsum += h60(l) % 1000003L)
+                  lines.foreach(l =>
+                    hsum += hash60Bytes(l.getBytes("UTF-8")) % 1000003L)
                   Seq((blobId, kind, lines.length.toLong, hsum))
                 }
             }
@@ -1505,26 +1366,11 @@ object IngestionQueries {
     "q294_parquet_list_struct_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("parquetls:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/parquet_liststruct_files.parquet")),
-            "blob_key")
+        Blobs.fixture(s, dir, "parquetls:", "parquet_liststruct_files.parquet")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
             val P = graft.sources.Parquet
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             P.parseFooter(bytes).toSeq.flatMap { fm =>
               val levels = fm.leafLevels
               val tls = fm.leafTypeLengths
@@ -1562,7 +1408,8 @@ object IngestionQueries {
                     val sb = new java.lang.StringBuilder
                     var open = false
                     def closeRow(): Unit = if (open) {
-                      rowHash += h60(sb.toString) % 1000003L
+                      rowHash +=
+                        hash60Bytes(sb.toString.getBytes("UTF-8")) % 1000003L
                       rowCount += 1
                       sb.setLength(0)
                     }
@@ -1631,29 +1478,22 @@ object IngestionQueries {
     "q295_parquet_write_roundtrip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val bytes = graft.sources.ParquetWrite.writeInt64(
-              Seq("rec_id", "val"),
-              ids.map(d => Array(d, (d * 11) % 1000)))
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val fileMd5 = md.digest(bytes).map("%02x".format(_)).mkString
-            // decode-own-write law: the engine's reader must get the
-            // relational truth back out of its own bytes
-            val P = graft.sources.Parquet
-            (P.columnLongs(bytes, "rec_id"),
-              P.columnLongs(bytes, "val")) match {
-              case (Some(r), Some(v)) if r.toSeq == ids =>
-                Seq((blobId, fileMd5, bytes.length.toLong,
-                  r.length.toLong, r.sum, v.sum))
-              case _ => Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val bytes = graft.sources.ParquetWrite.writeInt64(
+            Seq("rec_id", "val"),
+            ids.map(d => Array(d, (d * 11) % 1000)))
+          val fileMd5 = md5Hex(bytes)
+          // decode-own-write law: the engine's reader must get the
+          // relational truth back out of its own bytes
+          val P = graft.sources.Parquet
+          (P.columnLongs(bytes, "rec_id"),
+            P.columnLongs(bytes, "val")) match {
+            case (Some(r), Some(v)) if r.toSeq == ids =>
+              Seq((blobId, fileMd5, bytes.length.toLong,
+                r.length.toLong, r.sum, v.sum))
+            case _ => Nil
           }
-          .toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
+        }.toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
             "id_sum", "val_sum")
       },
       oracle = Some("""
@@ -1686,27 +1526,21 @@ object IngestionQueries {
     "q296_parquet_write_snappy" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val rows = ids.map(d => Array(d, (d * 11) % 1000))
-            val W = graft.sources.ParquetWrite
-            val snappy = W.writeInt64(Seq("rec_id", "val"), rows,
-              codec = 1)
-            val plain = W.writeInt64(Seq("rec_id", "val"), rows)
-            val P = graft.sources.Parquet
-            (P.columnLongs(snappy, "rec_id"),
-              P.columnLongs(snappy, "val")) match {
-              case (Some(r), Some(v)) if r.toSeq == ids =>
-                Seq((blobId, r.length.toLong, r.sum, v.sum,
-                  if (snappy.length < plain.length) 1L else 0L))
-              case _ => Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val rows = ids.map(d => Array(d, (d * 11) % 1000))
+          val W = graft.sources.ParquetWrite
+          val snappy = W.writeInt64(Seq("rec_id", "val"), rows,
+            codec = 1)
+          val plain = W.writeInt64(Seq("rec_id", "val"), rows)
+          val P = graft.sources.Parquet
+          (P.columnLongs(snappy, "rec_id"),
+            P.columnLongs(snappy, "val")) match {
+            case (Some(r), Some(v)) if r.toSeq == ids =>
+              Seq((blobId, r.length.toLong, r.sum, v.sum,
+                if (snappy.length < plain.length) 1L else 0L))
+            case _ => Nil
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum",
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum",
             "compressed_smaller")
       },
       oracle = Some("""
@@ -1731,33 +1565,27 @@ object IngestionQueries {
     "q297_orc_write_roundtrip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val bytes = graft.sources.OrcWrite.writeLongs(
-              Seq("rec_id", "val"),
-              ids.map(d => Array(d, (d * 13) % 997)))
-            val O = graft.sources.Orc
-            O.parseTail(bytes).toSeq.flatMap { t =>
-              if (t.typeKinds != Seq(12, 4, 4) ||
-                t.fieldNames != Seq("rec_id", "val") ||
-                t.stripes.map(_.numRows).sum != t.numRows) Nil
-              else {
-                val r = t.stripes.flatMap(st =>
-                  O.stripeColumnLongs(bytes, t, st, 1).toSeq.flatten)
-                val v = t.stripes.flatMap(st =>
-                  O.stripeColumnLongs(bytes, t, st, 2).toSeq.flatten)
-                if (r == ids && v.length == r.length)
-                  Seq((blobId, t.stripes.length.toLong,
-                    r.length.toLong, r.sum, v.sum))
-                else Nil
-              }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val bytes = graft.sources.OrcWrite.writeLongs(
+            Seq("rec_id", "val"),
+            ids.map(d => Array(d, (d * 13) % 997)))
+          val O = graft.sources.Orc
+          O.parseTail(bytes).toSeq.flatMap { t =>
+            if (t.typeKinds != Seq(12, 4, 4) ||
+              t.fieldNames != Seq("rec_id", "val") ||
+              t.stripes.map(_.numRows).sum != t.numRows) Nil
+            else {
+              val r = t.stripes.flatMap(st =>
+                O.stripeColumnLongs(bytes, t, st, 1).toSeq.flatten)
+              val v = t.stripes.flatMap(st =>
+                O.stripeColumnLongs(bytes, t, st, 2).toSeq.flatten)
+              if (r == ids && v.length == r.length)
+                Seq((blobId, t.stripes.length.toLong,
+                  r.length.toLong, r.sum, v.sum))
+              else Nil
             }
           }
-          .toDF("blob_id", "n_stripes", "n_rows", "id_sum", "val_sum")
+        }.toDF("blob_id", "n_stripes", "n_rows", "id_sum", "val_sum")
       },
       oracle = Some("""
         WITH r AS (
@@ -1780,31 +1608,25 @@ object IngestionQueries {
     "q298_orc_write_snappy" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val rows = ids.map(d => Array(d, (d * 13) % 997))
-            val W = graft.sources.OrcWrite
-            val snappy = W.writeLongs(Seq("rec_id", "val"), rows,
-              compression = 2)
-            val plain = W.writeLongs(Seq("rec_id", "val"), rows)
-            val O = graft.sources.Orc
-            O.parseTail(snappy).toSeq.flatMap { t =>
-              val r = t.stripes.flatMap(st =>
-                O.stripeColumnLongs(snappy, t, st, 1).toSeq.flatten)
-              val v = t.stripes.flatMap(st =>
-                O.stripeColumnLongs(snappy, t, st, 2).toSeq.flatten)
-              if (t.compression == O.CompSnappy && r == ids &&
-                v.length == r.length)
-                Seq((blobId, r.length.toLong, r.sum, v.sum,
-                  if (snappy.length < plain.length) 1L else 0L))
-              else Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val rows = ids.map(d => Array(d, (d * 13) % 997))
+          val W = graft.sources.OrcWrite
+          val snappy = W.writeLongs(Seq("rec_id", "val"), rows,
+            compression = 2)
+          val plain = W.writeLongs(Seq("rec_id", "val"), rows)
+          val O = graft.sources.Orc
+          O.parseTail(snappy).toSeq.flatMap { t =>
+            val r = t.stripes.flatMap(st =>
+              O.stripeColumnLongs(snappy, t, st, 1).toSeq.flatten)
+            val v = t.stripes.flatMap(st =>
+              O.stripeColumnLongs(snappy, t, st, 2).toSeq.flatten)
+            if (t.compression == O.CompSnappy && r == ids &&
+              v.length == r.length)
+              Seq((blobId, r.length.toLong, r.sum, v.sum,
+                if (snappy.length < plain.length) 1L else 0L))
+            else Nil
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum",
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum",
             "compressed_smaller")
       },
       oracle = Some("""
@@ -1829,32 +1651,26 @@ object IngestionQueries {
     "q303_write_throughput" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            // 64 replicas: the sf0.1 shard is ~640k rows per task
-            val rows = new scala.collection.mutable.ArrayBuffer[
-              Array[Long]](ids.length * 64)
-            var rep = 0
-            while (rep < 64) {
-              ids.foreach(d => rows += Array(d, (d * 11 + rep) % 1000))
-              rep += 1
-            }
-            val bytes = graft.sources.ParquetWrite.writeInt64(
-              Seq("rec_id", "val"), rows.toSeq, codec = 1)
-            val P = graft.sources.Parquet
-            (P.columnLongs(bytes, "rec_id"),
-              P.columnLongs(bytes, "val")) match {
-              case (Some(r), Some(v)) if r.length == rows.length =>
-                Seq((blobId, r.length.toLong, r.sum, v.sum,
-                  bytes.length.toLong > 0L))
-              case _ => Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          // 64 replicas: the sf0.1 shard is ~640k rows per task
+          val rows = new scala.collection.mutable.ArrayBuffer[
+            Array[Long]](ids.length * 64)
+          var rep = 0
+          while (rep < 64) {
+            ids.foreach(d => rows += Array(d, (d * 11 + rep) % 1000))
+            rep += 1
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum", "wrote")
+          val bytes = graft.sources.ParquetWrite.writeInt64(
+            Seq("rec_id", "val"), rows.toSeq, codec = 1)
+          val P = graft.sources.Parquet
+          (P.columnLongs(bytes, "rec_id"),
+            P.columnLongs(bytes, "val")) match {
+            case (Some(r), Some(v)) if r.length == rows.length =>
+              Seq((blobId, r.length.toLong, r.sum, v.sum,
+                bytes.length.toLong > 0L))
+            case _ => Nil
+          }
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum", "wrote")
           .filter(col("wrote"))
           .select(col("blob_id"), col("n_rows"), col("id_sum"),
             col("val_sum"))
@@ -1885,54 +1701,48 @@ object IngestionQueries {
     "q308_own_write_stats_skip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length
-            val shards = (0 to 3).map(q =>
-              ids.zipWithIndex.collect {
-                case (d, i) if i * 4 / n == q => d })
-              .filter(_.nonEmpty)
-              .map(part => graft.sources.ParquetWrite.writeInt64(
-                Seq("rec_id", "val"),
-                part.map(d => Array(d, (d * 11) % 1000)),
-                codec = 1, withStats = true))
-            val lo = ids.head + (ids.last - ids.head) / 3
-            val hi = ids.head + 2 * (ids.last - ids.head) / 3
-            val P = graft.sources.Parquet
-            var nSel = 0L
-            var rows = 0L
-            var idSum = 0L
-            var ok = true
-            shards.foreach { bytes =>
-              P.parseFooter(bytes) match {
-                case Some(fm) =>
-                  val cm = fm.rowGroups.head.cols
-                    .find(_.path == "rec_id")
-                  val hit = (for {
-                    c <- cm
-                    mn <- c.minLong
-                    mx <- c.maxLong
-                  } yield mx >= lo && mn <= hi)
-                    .getOrElse { ok = false; false }
-                  if (hit) {
-                    nSel += 1
-                    P.columnLongs(bytes, "rec_id") match {
-                      case Some(r) => rows += r.length; idSum += r.sum
-                      case None => ok = false
-                    }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val n = ids.length
+          val shards = (0 to 3).map(q =>
+            ids.zipWithIndex.collect {
+              case (d, i) if i * 4 / n == q => d })
+            .filter(_.nonEmpty)
+            .map(part => graft.sources.ParquetWrite.writeInt64(
+              Seq("rec_id", "val"),
+              part.map(d => Array(d, (d * 11) % 1000)),
+              codec = 1, withStats = true))
+          val lo = ids.head + (ids.last - ids.head) / 3
+          val hi = ids.head + 2 * (ids.last - ids.head) / 3
+          val P = graft.sources.Parquet
+          var nSel = 0L
+          var rows = 0L
+          var idSum = 0L
+          var ok = true
+          shards.foreach { bytes =>
+            P.parseFooter(bytes) match {
+              case Some(fm) =>
+                val cm = fm.rowGroups.head.cols
+                  .find(_.path == "rec_id")
+                val hit = (for {
+                  c <- cm
+                  mn <- c.minLong
+                  mx <- c.maxLong
+                } yield mx >= lo && mn <= hi)
+                  .getOrElse { ok = false; false }
+                if (hit) {
+                  nSel += 1
+                  P.columnLongs(bytes, "rec_id") match {
+                    case Some(r) => rows += r.length; idSum += r.sum
+                    case None => ok = false
                   }
-                case None => ok = false
-              }
+                }
+              case None => ok = false
             }
-            if (ok)
-              Seq((blobId, shards.length.toLong, nSel, rows, idSum))
-            else Nil
           }
-          .toDF("blob_id", "n_shards", "n_selected", "sel_rows",
+          if (ok)
+            Seq((blobId, shards.length.toLong, nSel, rows, idSum))
+          else Nil
+        }.toDF("blob_id", "n_shards", "n_selected", "sel_rows",
             "sel_id_sum")
       },
       oracle = Some("""
@@ -1981,21 +1791,10 @@ object IngestionQueries {
   // walked — LZMA2 chunk framing included — with all three header
   // CRC32s verified. Both check types liblzma emits are classified.
   private def xzDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     Seq("q304_xz_container_census" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("xz:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/xz_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "xz:", "xz_files.parquet")
           .select(col("blob_id"), col("kind"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .flatMap { case (blobId, kind, bytes) =>
@@ -2041,24 +1840,10 @@ object IngestionQueries {
     "q305_xz_full_decode" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("xz:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/xz_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "xz:", "xz_files.parquet")
           .select(col("blob_id"), col("kind"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .flatMap { case (blobId, kind, bytes) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             graft.sources.Xz.parse(bytes).toSeq.flatMap { info =>
               val sb = new java.lang.StringBuilder
               var checkOk = true
@@ -2097,7 +1882,7 @@ object IngestionQueries {
               }
               if (ok)
                 Seq((blobId, kind, sb.length.toLong,
-                  h60(sb.toString) % 1000003L,
+                  hash60Bytes(sb.toString.getBytes("UTF-8")) % 1000003L,
                   if (checkOk) 1L else 0L))
               else Nil
             }
@@ -2133,25 +1918,11 @@ object IngestionQueries {
     "q307_xz_concat_streams" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("xz:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/xz_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "xz:", "xz_files.parquet")
           .filter(col("kind") === "concat")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             graft.sources.Xz.parseAll(bytes).toSeq.flatMap { streams =>
               val sb = new java.lang.StringBuilder
               var ok = true
@@ -2166,7 +1937,7 @@ object IngestionQueries {
               }
               if (ok)
                 Seq((blobId, streams.length.toLong, sb.length.toLong,
-                  h60(sb.toString) % 1000003L))
+                  hash60Bytes(sb.toString.getBytes("UTF-8")) % 1000003L))
               else Nil
             }
           }.toDF("blob_id", "n_streams", "n_chars", "text_hash")
@@ -2196,28 +1967,14 @@ object IngestionQueries {
     "q309_lzma_alone_decode" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("xz:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/xz_files.parquet")), "blob_key")
+        Blobs.fixture(s, dir, "xz:", "xz_files.parquet")
           .filter(col("kind") === "alone")
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
             graft.sources.Lzma2.decodeAlone(bytes).toSeq.map { x =>
               val t = new String(x, "UTF-8")
-              (blobId, t.length.toLong, h60(t) % 1000003L)
+              (blobId, t.length.toLong, hash60Bytes(t.getBytes("UTF-8")) % 1000003L)
             }
           }.toDF("blob_id", "n_chars", "text_hash")
       },
@@ -2247,23 +2004,11 @@ object IngestionQueries {
   // The completed commits' own partitionToWriteStats (numWrites) must
   // agree with the decoded live rows — metadata and data cross-pin.
   private def hudiDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val q283 = "q283_hudi_cow_timeline" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.types._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("hudi:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/hudi_files.parquet")), "blob_key")
+        val files = Blobs.fixture(s, dir, "hudi:", "hudi_files.parquet")
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         // completed instants: only `<instant>.commit` counts —
@@ -2371,48 +2116,37 @@ object IngestionQueries {
     val q302 = "q302_hudi_write_table" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val files = graft.sources.HudiWrite.writeTable(ids)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            files.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val files = graft.sources.HudiWrite.writeTable(ids)
+          val bundleMd5 = Blobs.bundleMd5(files)
+          // replay our own timeline: completed only, last-wins
+          val Completed = "^\\.hoodie/(\\d+)\\.commit$".r
+          val Slice = "^p/([^_/]+)_[^_/]+_(\\d+)\\.parquet$".r
+          val completed = files.keys.collect {
+            case Completed(i) => i }.toSet
+          val live = files.keys.toSeq.collect {
+            case p @ Slice(fid, inst) if completed(inst) =>
+              (fid, inst, p)
+          }.groupBy(_._1).map { case (_, ss) => ss.maxBy(_._2)._3 }
+            .toSeq.sorted
+          val P = graft.sources.Parquet
+          var rows = 0L
+          var idSum = 0L
+          var valSum = 0L
+          var ok = true
+          live.foreach { p =>
+            (P.columnLongs(files(p), "rec_id"),
+              P.columnLongs(files(p), "val")) match {
+              case (Some(r), Some(v)) =>
+                rows += r.length; idSum += r.sum; valSum += v.sum
+              case _ => ok = false
             }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
-            // replay our own timeline: completed only, last-wins
-            val Completed = "^\\.hoodie/(\\d+)\\.commit$".r
-            val Slice = "^p/([^_/]+)_[^_/]+_(\\d+)\\.parquet$".r
-            val completed = files.keys.collect {
-              case Completed(i) => i }.toSet
-            val live = files.keys.toSeq.collect {
-              case p @ Slice(fid, inst) if completed(inst) =>
-                (fid, inst, p)
-            }.groupBy(_._1).map { case (_, ss) => ss.maxBy(_._2)._3 }
-              .toSeq.sorted
-            val P = graft.sources.Parquet
-            var rows = 0L
-            var idSum = 0L
-            var valSum = 0L
-            var ok = true
-            live.foreach { p =>
-              (P.columnLongs(files(p), "rec_id"),
-                P.columnLongs(files(p), "val")) match {
-                case (Some(r), Some(v)) =>
-                  rows += r.length; idSum += r.sum; valSum += v.sum
-                case _ => ok = false
-              }
-            }
-            if (ok && live.length == 2)
-              Seq((blobId, completed.size.toLong, live.length.toLong,
-                rows, idSum, valSum, bundleMd5))
-            else Nil
           }
-          .toDF("blob_id", "n_completed", "n_live", "rows_decoded",
+          if (ok && live.length == 2)
+            Seq((blobId, completed.size.toLong, live.length.toLong,
+              rows, idSum, valSum, bundleMd5))
+          else Nil
+        }.toDF("blob_id", "n_completed", "n_live", "rows_decoded",
             "id_sum", "val_sum", "bundle_md5")
       },
       oracle = Some("""
@@ -2457,16 +2191,7 @@ object IngestionQueries {
     val q315 = "q315_hudi_merge_on_read" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("hudimor:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/hudi_mor_files.parquet")), "blob_key")
+        val files = Blobs.fixture(s, dir, "hudimor:", "hudi_mor_files.parquet")
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         // completed instants: `<instant>.commit` AND
@@ -2641,88 +2366,77 @@ object IngestionQueries {
     val q318 = "q318_hudi_mor_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val files = graft.sources.HudiWrite.writeMorTable(ids)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            files.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val files = graft.sources.HudiWrite.writeMorTable(ids)
+          val bundleMd5 = Blobs.bundleMd5(files)
+          // replay our own table: completed instants, per-fg merge
+          val Completed =
+            "^\\.hoodie/(\\d+)\\.(commit|deltacommit)$".r
+          val completed = files.keys.collect {
+            case Completed(i, _) => i }.toSet
+          val Base = "^p/([^_/.]+)_[^_/]+_(\\d+)\\.parquet$".r
+          val Log = "^p/\\.([^_/.]+)_(\\d+)\\.log\\..*$".r
+          val P = graft.sources.Parquet
+          val H = graft.sources.HudiLog
+          var ok = true
+          var nRows = 0L; var idSum = 0L; var valSum = 0L
+          var nDeleted = 0L; var nSkipped = 0L
+          var baseRows = 0L; var baseVal = 0L
+          val fgs = files.keys.toSeq.collect {
+            case p @ Base(fid, inst) if completed(inst) =>
+              (fid, inst, p)
+          }.groupBy(_._1).toSeq.sortBy(_._1)
+          fgs.foreach { case (fid, slices) =>
+            val (_, baseInstant, basePath) = slices.maxBy(_._2)
+            val state = scala.collection.mutable.LinkedHashMap
+              .empty[Long, Long]
+            (P.columnLongs(files(basePath), "rec_id"),
+              P.columnLongs(files(basePath), "val")) match {
+              case (Some(rs), Some(vs)) if rs.length == vs.length =>
+                var i = 0
+                while (i < rs.length) { state(rs(i)) = vs(i); i += 1 }
+                baseRows += rs.length; baseVal += vs.sum
+              case _ => ok = false
             }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
-            // replay our own table: completed instants, per-fg merge
-            val Completed =
-              "^\\.hoodie/(\\d+)\\.(commit|deltacommit)$".r
-            val completed = files.keys.collect {
-              case Completed(i, _) => i }.toSet
-            val Base = "^p/([^_/.]+)_[^_/]+_(\\d+)\\.parquet$".r
-            val Log = "^p/\\.([^_/.]+)_(\\d+)\\.log\\..*$".r
-            val P = graft.sources.Parquet
-            val H = graft.sources.HudiLog
-            var ok = true
-            var nRows = 0L; var idSum = 0L; var valSum = 0L
-            var nDeleted = 0L; var nSkipped = 0L
-            var baseRows = 0L; var baseVal = 0L
-            val fgs = files.keys.toSeq.collect {
-              case p @ Base(fid, inst) if completed(inst) =>
-                (fid, inst, p)
-            }.groupBy(_._1).toSeq.sortBy(_._1)
-            fgs.foreach { case (fid, slices) =>
-              val (_, baseInstant, basePath) = slices.maxBy(_._2)
-              val state = scala.collection.mutable.LinkedHashMap
-                .empty[Long, Long]
-              (P.columnLongs(files(basePath), "rec_id"),
-                P.columnLongs(files(basePath), "val")) match {
-                case (Some(rs), Some(vs)) if rs.length == vs.length =>
-                  var i = 0
-                  while (i < rs.length) { state(rs(i)) = vs(i); i += 1 }
-                  baseRows += rs.length; baseVal += vs.sum
-                case _ => ok = false
-              }
-              files.keys.toSeq.collect {
-                case p @ Log(f, _) if f == fid => p
-              }.sorted.foreach { lp =>
-                H.parse(files(lp)) match {
-                  case Some(blocks) =>
-                    blocks.sortBy(_.instant).foreach { b =>
-                      if (!completed(b.instant) ||
-                        b.instant <= baseInstant) nSkipped += 1
-                      else if (b.blockType == H.TypeAvroData) {
-                        b.records.foreach { r =>
-                          (r.field("rec_id").flatMap(_.asLong),
-                            r.field("val").flatMap(_.asLong)) match {
-                            case (Some(k), Some(v)) => state(k) = v
-                            case _ => ok = false
-                          }
+            files.keys.toSeq.collect {
+              case p @ Log(f, _) if f == fid => p
+            }.sorted.foreach { lp =>
+              H.parse(files(lp)) match {
+                case Some(blocks) =>
+                  blocks.sortBy(_.instant).foreach { b =>
+                    if (!completed(b.instant) ||
+                      b.instant <= baseInstant) nSkipped += 1
+                    else if (b.blockType == H.TypeAvroData) {
+                      b.records.foreach { r =>
+                        (r.field("rec_id").flatMap(_.asLong),
+                          r.field("val").flatMap(_.asLong)) match {
+                          case (Some(k), Some(v)) => state(k) = v
+                          case _ => ok = false
                         }
-                      } else if (b.blockType == H.TypeDelete) {
-                        b.deleteKeys.foreach { k =>
-                          scala.util.Try(k.toLong).toOption match {
-                            case Some(kk) =>
-                              if (state.remove(kk).nonEmpty)
-                                nDeleted += 1
-                            case None => ok = false
-                          }
+                      }
+                    } else if (b.blockType == H.TypeDelete) {
+                      b.deleteKeys.foreach { k =>
+                        scala.util.Try(k.toLong).toOption match {
+                          case Some(kk) =>
+                            if (state.remove(kk).nonEmpty)
+                              nDeleted += 1
+                          case None => ok = false
                         }
                       }
                     }
-                  case None => ok = false
-                }
+                  }
+                case None => ok = false
               }
-              nRows += state.size; idSum += state.keys.sum
-              valSum += state.values.sum
             }
-            val baseBreaks =
-              if (valSum != baseVal || nRows != baseRows) 1L else 0L
-            if (!ok || fgs.length != 2) Nil
-            else Seq((blobId, bundleMd5, completed.size.toLong, nRows,
-              idSum, valSum, nDeleted, nSkipped, baseBreaks))
+            nRows += state.size; idSum += state.keys.sum
+            valSum += state.values.sum
           }
-          .toDF("blob_id", "bundle_md5", "n_completed", "n_rows",
+          val baseBreaks =
+            if (valSum != baseVal || nRows != baseRows) 1L else 0L
+          if (!ok || fgs.length != 2) Nil
+          else Seq((blobId, bundleMd5, completed.size.toLong, nRows,
+            idSum, valSum, nDeleted, nSkipped, baseBreaks))
+        }.toDF("blob_id", "bundle_md5", "n_completed", "n_rows",
             "id_sum", "val_sum", "n_deleted", "n_skipped",
             "base_breaks")
       },
@@ -2781,69 +2495,57 @@ object IngestionQueries {
     val q336 = "q336_hudi_compaction_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.HudiWrite
-            val files = W.writeMorTable(ids)
-            val t5 = "00000000000005"
-            (W.replay(files), W.compact(files, t5)) match {
-              case (Some(pre), Some(delta)) =>
-                val md = java.security.MessageDigest.getInstance("MD5")
-                delta.toSeq.sortBy(_._1).foreach { case (p, b) =>
-                  md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-                  md.update(b)
-                }
-                val compactMd5 =
-                  md.digest().map("%02x".format(_)).mkString
-                W.replay(files ++ delta) match {
-                  case Some(post) =>
-                    def rows(st: Seq[W.FgState]) =
-                      st.iterator.map(_.rows.length.toLong).sum
-                    def idSum(st: Seq[W.FgState]) =
-                      st.iterator.flatMap(_.rows.map(_._1)).sum
-                    def valSum(st: Seq[W.FgState]) =
-                      st.iterator.flatMap(_.rows.map(_._2)).sum
-                    val preserves =
-                      if (rows(post) == rows(pre) &&
-                        idSum(post) == idSum(pre) &&
-                        valSum(post) == valSum(pre)) 1L else 0L
-                    val basePreferred =
-                      if (post.forall(_.baseInstant == t5)) 1L else 0L
-                    // base-only read: decode ONLY the compacted bases
-                    val P = graft.sources.Parquet
-                    var boRows = 0L; var boId = 0L; var boVal = 0L
-                    var boOk = true
-                    delta.toSeq.sortBy(_._1).foreach { case (p, b) =>
-                      if (p.endsWith(".parquet"))
-                        (P.columnLongs(b, "rec_id"),
-                          P.columnLongs(b, "val")) match {
-                          case (Some(rs), Some(vs))
-                              if rs.length == vs.length =>
-                            boRows += rs.length
-                            boId += rs.sum; boVal += vs.sum
-                          case _ => boOk = false
-                        }
-                    }
-                    val baseOnlyExact =
-                      if (boOk && boRows == rows(pre) &&
-                        boId == idSum(pre) && boVal == valSum(pre)) 1L
-                      else 0L
-                    if (pre.length != 2) Nil
-                    else Seq((blobId, compactMd5, pre.length.toLong,
-                      rows(pre), idSum(pre), valSum(pre),
-                      pre.iterator.map(_.nSkipped).sum,
-                      post.iterator.map(_.nSkipped).sum,
-                      preserves, basePreferred, baseOnlyExact))
-                  case None => Nil
-                }
-              case _ => Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.HudiWrite
+          val files = W.writeMorTable(ids)
+          val t5 = "00000000000005"
+          (W.replay(files), W.compact(files, t5)) match {
+            case (Some(pre), Some(delta)) =>
+              val compactMd5 = Blobs.bundleMd5(delta)
+              W.replay(files ++ delta) match {
+                case Some(post) =>
+                  def rows(st: Seq[W.FgState]) =
+                    st.iterator.map(_.rows.length.toLong).sum
+                  def idSum(st: Seq[W.FgState]) =
+                    st.iterator.flatMap(_.rows.map(_._1)).sum
+                  def valSum(st: Seq[W.FgState]) =
+                    st.iterator.flatMap(_.rows.map(_._2)).sum
+                  val preserves =
+                    if (rows(post) == rows(pre) &&
+                      idSum(post) == idSum(pre) &&
+                      valSum(post) == valSum(pre)) 1L else 0L
+                  val basePreferred =
+                    if (post.forall(_.baseInstant == t5)) 1L else 0L
+                  // base-only read: decode ONLY the compacted bases
+                  val P = graft.sources.Parquet
+                  var boRows = 0L; var boId = 0L; var boVal = 0L
+                  var boOk = true
+                  delta.toSeq.sortBy(_._1).foreach { case (p, b) =>
+                    if (p.endsWith(".parquet"))
+                      (P.columnLongs(b, "rec_id"),
+                        P.columnLongs(b, "val")) match {
+                        case (Some(rs), Some(vs))
+                            if rs.length == vs.length =>
+                          boRows += rs.length
+                          boId += rs.sum; boVal += vs.sum
+                        case _ => boOk = false
+                      }
+                  }
+                  val baseOnlyExact =
+                    if (boOk && boRows == rows(pre) &&
+                      boId == idSum(pre) && boVal == valSum(pre)) 1L
+                    else 0L
+                  if (pre.length != 2) Nil
+                  else Seq((blobId, compactMd5, pre.length.toLong,
+                    rows(pre), idSum(pre), valSum(pre),
+                    pre.iterator.map(_.nSkipped).sum,
+                    post.iterator.map(_.nSkipped).sum,
+                    preserves, basePreferred, baseOnlyExact))
+                case None => Nil
+              }
+            case _ => Nil
           }
-          .toDF("blob_id", "compact_md5", "n_fg", "n_rows", "id_sum",
+        }.toDF("blob_id", "compact_md5", "n_fg", "n_rows", "id_sum",
             "val_sum", "n_skipped_pre", "n_skipped_post", "preserves",
             "base_preferred", "base_only_exact")
       },
@@ -2902,54 +2604,48 @@ object IngestionQueries {
     val q361 = "q361_hudi_clean_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.HudiWrite
-            val files = W.writeMorTable(ids)
-            val res = for {
-              noop <- W.clean(files, "00000000000005")
-              delta <- W.compact(files, "00000000000005")
-              compacted = files ++ delta
-              pre <- W.replay(compacted)
-              cr <- W.clean(compacted, "00000000000006")
-              cleaned = (compacted -- cr.deleted) +
-                (cr.timelineName -> cr.timeline)
-              post <- W.replay(cleaned)
-              cr2 <- W.clean(cleaned, "00000000000007")
-            } yield {
-              def rows(st: Seq[W.FgState]) =
-                st.iterator.map(_.rows.length.toLong).sum
-              def idSum(st: Seq[W.FgState]) =
-                st.iterator.flatMap(_.rows.map(_._1)).sum
-              def valSum(st: Seq[W.FgState]) =
-                st.iterator.flatMap(_.rows.map(_._2)).sum
-              val preserves =
-                if (rows(post) == rows(pre) &&
-                  idSum(post) == idSum(pre) &&
-                  valSum(post) == valSum(pre)) 1L else 0L
-              val pendingLog = compacted.keys
-                .find(p => p.startsWith("p/.fg1_")) // t4 inflight
-              val pendingPreserved =
-                if (pendingLog.exists(cleaned.contains) &&
-                  !cr.deleted.exists(_.startsWith("p/.fg1_"))) 1L
-                else 0L
-              val deadOk =
-                if (cr.deleted.count(_.endsWith(".parquet")) == 2 &&
-                  cr.deleted.count(_.startsWith("p/.fg0_")) == 1) 1L
-                else 0L
-              Seq((blobId, rows(pre), idSum(pre), valSum(pre),
-                cr.deleted.length.toLong, deadOk, preserves,
-                pendingPreserved,
-                if (cr2.deleted.isEmpty) 1L else 0L,
-                if (noop.deleted.isEmpty) 1L else 0L))
-            }
-            res.toSeq.flatten
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.HudiWrite
+          val files = W.writeMorTable(ids)
+          val res = for {
+            noop <- W.clean(files, "00000000000005")
+            delta <- W.compact(files, "00000000000005")
+            compacted = files ++ delta
+            pre <- W.replay(compacted)
+            cr <- W.clean(compacted, "00000000000006")
+            cleaned = (compacted -- cr.deleted) +
+              (cr.timelineName -> cr.timeline)
+            post <- W.replay(cleaned)
+            cr2 <- W.clean(cleaned, "00000000000007")
+          } yield {
+            def rows(st: Seq[W.FgState]) =
+              st.iterator.map(_.rows.length.toLong).sum
+            def idSum(st: Seq[W.FgState]) =
+              st.iterator.flatMap(_.rows.map(_._1)).sum
+            def valSum(st: Seq[W.FgState]) =
+              st.iterator.flatMap(_.rows.map(_._2)).sum
+            val preserves =
+              if (rows(post) == rows(pre) &&
+                idSum(post) == idSum(pre) &&
+                valSum(post) == valSum(pre)) 1L else 0L
+            val pendingLog = compacted.keys
+              .find(p => p.startsWith("p/.fg1_")) // t4 inflight
+            val pendingPreserved =
+              if (pendingLog.exists(cleaned.contains) &&
+                !cr.deleted.exists(_.startsWith("p/.fg1_"))) 1L
+              else 0L
+            val deadOk =
+              if (cr.deleted.count(_.endsWith(".parquet")) == 2 &&
+                cr.deleted.count(_.startsWith("p/.fg0_")) == 1) 1L
+              else 0L
+            Seq((blobId, rows(pre), idSum(pre), valSum(pre),
+              cr.deleted.length.toLong, deadOk, preserves,
+              pendingPreserved,
+              if (cr2.deleted.isEmpty) 1L else 0L,
+              if (noop.deleted.isEmpty) 1L else 0L))
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum", "n_deleted",
+          res.toSeq.flatten
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum", "n_deleted",
             "dead_set_ok", "preserves", "pending_preserved",
             "fixed_point", "noop_before_compact")
       },
@@ -2990,10 +2686,7 @@ object IngestionQueries {
   // At 100 TB the manifest layer IS how a scan plans: reading ~KBs of
   // manifests instead of listing millions of files.
   private def icebergDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val Fixture = "/root/repo/fixtures/iceberg_meta_files.parquet"
+    val Fixture = Blobs.path("iceberg_meta_files.parquet")
 
     def tableFiles(s: SparkSession, dir: String) = {
       import s.implicits._
@@ -3006,7 +2699,7 @@ object IngestionQueries {
         (t, md5Hex("iceberg:" +
           rows.map(r => s"${r._2}=${r._3}").mkString(",")))
       }.toDF("table_id", "blob_key")
-      keys.join(broadcast(s.read.parquet(Fixture)), "blob_key")
+      Blobs.join(keys, Fixture)
         .select(col("table_id"), col("rel_path"), col("kind"),
           col("file_bytes"))
     }
@@ -3253,20 +2946,13 @@ object IngestionQueries {
     // (q258's shape) overcounts and cannot pass. Per-table metadata +
     // delete files are KB-scale bounded groups (comment law as q259);
     // data-file decode is the engine's own byte reader.
-    val FixtureMor = "/root/repo/fixtures/iceberg_mor_files.parquet"
+    val FixtureMor = Blobs.path("iceberg_mor_files.parquet")
     val q262 = "q262_iceberg_row_level_deletes" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JArray, JLong, JObject, JString}
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (t, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (t, md5Hex("icebergmor:" + ids.mkString(",")))
-        }.toDF("table_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(FixtureMor)), "blob_key")
-          .select(col("table_id"), col("rel_path"), col("file_bytes"))
+        Blobs.fixture(s, dir, "icebergmor:", FixtureMor)
+          .select(col("blob_id"), col("rel_path"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .groupByKey(_._1)
           .flatMapGroups { (t, it) =>
@@ -3469,7 +3155,7 @@ object IngestionQueries {
     // struct), and bounds_ok pins every opened entry's partition
     // inside its manifest's claimed bounds. Per-table metadata stays
     // a KB-scale bounded group.
-    val FixturePart = "/root/repo/fixtures/iceberg_part_files.parquet"
+    val FixturePart = Blobs.path("iceberg_part_files.parquet")
     val q271 = "q271_iceberg_manifest_prune" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
@@ -3482,7 +3168,7 @@ object IngestionQueries {
           (t, md5Hex("icebergpart:" +
             rows.map(r => s"${r._2}=${r._3}").mkString(",")))
         }.toDF("table_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(FixturePart)), "blob_key")
+        Blobs.join(keys, FixturePart)
           .select(col("table_id"), col("rel_path"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .groupByKey(_._1)
@@ -3591,7 +3277,7 @@ object IngestionQueries {
           (t, md5Hex("icebergpart:" +
             rows.map(r => s"${r._2}=${r._3}").mkString(",")))
         }.toDF("table_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(FixturePart)), "blob_key")
+        Blobs.join(keys, FixturePart)
           .select(col("table_id"), col("rel_path"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .groupByKey(_._1)
@@ -3944,9 +3630,7 @@ object IngestionQueries {
           (t, md5Hex("icebergevo:" +
             rows.map(r => s"${r._2}=${r._3}").mkString(",")))
         }.toDF("table_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/iceberg_specevo_files.parquet")),
-            "blob_key")
+        Blobs.join(keys, "iceberg_specevo_files.parquet")
           .select(col("table_id"), col("rel_path"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .groupByKey(_._1)
@@ -4049,68 +3733,57 @@ object IngestionQueries {
     val q301 = "q301_iceberg_write_metadata" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            import graft.sources.Json.{JArray, JLong, JObject, JString}
-            val ids = it.map(_._2).toSeq.sorted
-            val key = md5Hex("icebergwrite:" + ids.mkString(","))
-            val files = graft.sources.IcebergWrite.writeTable(key, ids)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            files.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          import graft.sources.Json.{JArray, JLong, JObject, JString}
+          val key = Blobs.key("icebergwrite:", ids)
+          val files = graft.sources.IcebergWrite.writeTable(key, ids)
+          val bundleMd5 = Blobs.bundleMd5(files)
+          // read our own metadata back through our own readers
+          val out = for {
+            metaBytes <- files.get("v1.metadata.json")
+            meta <- graft.sources.Json
+              .parse(new String(metaBytes, "UTF-8"))
+            mo <- meta match {
+              case o: JObject => Some(o); case _ => None
             }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
-            // read our own metadata back through our own readers
-            val out = for {
-              metaBytes <- files.get("v1.metadata.json")
-              meta <- graft.sources.Json
-                .parse(new String(metaBytes, "UTF-8"))
-              mo <- meta match {
-                case o: JObject => Some(o); case _ => None
-              }
-              current <- mo.get("current-snapshot-id").collect {
-                case JLong(v) => v }
-              snaps <- mo.get("snapshots").collect {
-                case JArray(xs) => xs }
-              so <- snaps.collectFirst {
-                case o: JObject
-                  if o.get("snapshot-id") == Some(JLong(current)) => o }
-              lp <- so.get("manifest-list").collect {
-                case JString(p) => p }
-              listBytes <- files.get(lp)
-              list <- graft.sources.AvroGeneric.parseContainer(listBytes)
-            } yield {
-              var nLive = 0L
-              var liveRows = 0L
-              var ok = true
-              list.records.foreach { mf =>
-                (for {
-                  mp <- mf.field("manifest_path").flatMap(_.asString)
-                  mb <- files.get(mp)
-                  m <- graft.sources.AvroGeneric.parseContainer(mb)
-                } yield m) match {
-                  case Some(m) => m.records.foreach { e =>
-                    if (e.field("status").flatMap(_.asLong)
-                        .contains(1L)) {
-                      nLive += 1
-                      liveRows += e.field("data_file")
-                        .flatMap(_.field("record_count"))
-                        .flatMap(_.asLong).getOrElse {
-                          ok = false; 0L }
-                    }
+            current <- mo.get("current-snapshot-id").collect {
+              case JLong(v) => v }
+            snaps <- mo.get("snapshots").collect {
+              case JArray(xs) => xs }
+            so <- snaps.collectFirst {
+              case o: JObject
+                if o.get("snapshot-id") == Some(JLong(current)) => o }
+            lp <- so.get("manifest-list").collect {
+              case JString(p) => p }
+            listBytes <- files.get(lp)
+            list <- graft.sources.AvroGeneric.parseContainer(listBytes)
+          } yield {
+            var nLive = 0L
+            var liveRows = 0L
+            var ok = true
+            list.records.foreach { mf =>
+              (for {
+                mp <- mf.field("manifest_path").flatMap(_.asString)
+                mb <- files.get(mp)
+                m <- graft.sources.AvroGeneric.parseContainer(mb)
+              } yield m) match {
+                case Some(m) => m.records.foreach { e =>
+                  if (e.field("status").flatMap(_.asLong)
+                      .contains(1L)) {
+                    nLive += 1
+                    liveRows += e.field("data_file")
+                      .flatMap(_.field("record_count"))
+                      .flatMap(_.asLong).getOrElse {
+                        ok = false; 0L }
                   }
-                  case None => ok = false
                 }
+                case None => ok = false
               }
-              if (ok) Seq((t, nLive, liveRows, bundleMd5)) else Nil
             }
-            out.toSeq.flatten.iterator
+            if (ok) Seq((t, nLive, liveRows, bundleMd5)) else Nil
           }
-          .toDF("table_id", "n_live", "live_rows", "bundle_md5")
+          out.toSeq.flatten.iterator
+        }.toDF("table_id", "n_live", "live_rows", "bundle_md5")
       },
       oracle = Some("""
         WITH r AS (
@@ -4158,12 +3831,7 @@ object IngestionQueries {
             val G = graft.sources.AvroGeneric
             val J = graft.sources.Json
             val bundle = W.writePartitionedTable(bkey, rows)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            bundle.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
-            }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
+            val bundleMd5 = Blobs.bundleMd5(bundle)
             def leInt(b: Array[Byte]): Option[Int] =
               if (b.length != 4) None
               else Some((b(0) & 0xff) | (b(1) & 0xff) << 8 |
@@ -4296,139 +3964,128 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JArray, JLong, JObject, JString}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val bkey = md5Hex("icebergmorw:" + ids.mkString(","))
-            val W = graft.sources.IcebergWrite
-            val G = graft.sources.AvroGeneric
-            val P = graft.sources.Parquet
-            val bundle = W.writeMorTable(bkey, ids)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            bundle.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val bkey = Blobs.key("icebergmorw:", ids)
+          val W = graft.sources.IcebergWrite
+          val G = graft.sources.AvroGeneric
+          val P = graft.sources.Parquet
+          val bundle = W.writeMorTable(bkey, ids)
+          val bundleMd5 = Blobs.bundleMd5(bundle)
+          val res = for {
+            meta <- graft.sources.Json.parse(new String(
+              bundle("v1.metadata.json"), "UTF-8"))
+            mo <- Some(meta).collect { case o: JObject => o }
+            cur <- mo.get("current-snapshot-id")
+              .collect { case JLong(v) => v }
+            snaps <- mo.get("snapshots")
+              .collect { case JArray(xs) => xs }
+            listPath <- snaps.collectFirst {
+              case o: JObject if o.get("snapshot-id")
+                .contains(JLong(cur)) =>
+                o.get("manifest-list")
+                  .collect { case JString(p) => p }
+            }.flatten
+            listBytes <- bundle.get(listPath)
+            list <- G.parseContainer(listBytes)
+          } yield {
+            var ok = true
+            val manifests = list.records.flatMap { r =>
+              for {
+                p <- r.field("manifest_path").flatMap(_.asString)
+                c <- r.field("content").flatMap(_.asLong)
+              } yield (p, c)
             }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
-            val res = for {
-              meta <- graft.sources.Json.parse(new String(
-                bundle("v1.metadata.json"), "UTF-8"))
-              mo <- Some(meta).collect { case o: JObject => o }
-              cur <- mo.get("current-snapshot-id")
-                .collect { case JLong(v) => v }
-              snaps <- mo.get("snapshots")
-                .collect { case JArray(xs) => xs }
-              listPath <- snaps.collectFirst {
-                case o: JObject if o.get("snapshot-id")
-                  .contains(JLong(cur)) =>
-                  o.get("manifest-list")
-                    .collect { case JString(p) => p }
-              }.flatten
-              listBytes <- bundle.get(listPath)
-              list <- G.parseContainer(listBytes)
-            } yield {
-              var ok = true
-              val manifests = list.records.flatMap { r =>
-                for {
-                  p <- r.field("manifest_path").flatMap(_.asString)
-                  c <- r.field("content").flatMap(_.asLong)
-                } yield (p, c)
+            def entries(mp: String) =
+              bundle.get(mp).flatMap(G.parseContainer) match {
+                case Some(m) => m.records.flatMap { e =>
+                  val res = for {
+                    st <- e.field("status").flatMap(_.asLong)
+                    seq <- e.field("sequence_number")
+                      .flatMap(_.asLong)
+                    d <- e.field("data_file")
+                    c <- d.field("content").flatMap(_.asLong)
+                    p <- d.field("file_path").flatMap(_.asString)
+                    rc <- d.field("record_count").flatMap(_.asLong)
+                  } yield (st != 2L, seq, c, p, rc)
+                  if (res.isEmpty) ok = false
+                  res
+                }
+                case None => ok = false; Nil
               }
-              def entries(mp: String) =
-                bundle.get(mp).flatMap(G.parseContainer) match {
-                  case Some(m) => m.records.flatMap { e =>
-                    val res = for {
-                      st <- e.field("status").flatMap(_.asLong)
-                      seq <- e.field("sequence_number")
-                        .flatMap(_.asLong)
-                      d <- e.field("data_file")
-                      c <- d.field("content").flatMap(_.asLong)
-                      p <- d.field("file_path").flatMap(_.asString)
-                      rc <- d.field("record_count").flatMap(_.asLong)
-                    } yield (st != 2L, seq, c, p, rc)
-                    if (res.isEmpty) ok = false
-                    res
-                  }
+            val dataEntries = manifests.filter(_._2 == 0L)
+              .flatMap(m => entries(m._1)).filter(_._1)
+            val delEntries = manifests.filter(_._2 == 1L)
+              .flatMap(m => entries(m._1)).filter(_._1)
+            // decode delete files once
+            val posDels = delEntries.filter(_._3 == 1L).flatMap {
+              case (_, seq, _, p, rc) =>
+                (for {
+                  b <- bundle.get(p)
+                  paths <- P.columnStrings(b, "file_path")
+                  poss <- P.columnLongs(b, "pos")
+                  if paths.length == poss.length &&
+                    poss.length == rc
+                } yield paths.zip(poss).map { case (fp, pos) =>
+                  (seq, fp, pos)
+                }.toSeq) match {
+                  case Some(xs) => xs
                   case None => ok = false; Nil
                 }
-              val dataEntries = manifests.filter(_._2 == 0L)
-                .flatMap(m => entries(m._1)).filter(_._1)
-              val delEntries = manifests.filter(_._2 == 1L)
-                .flatMap(m => entries(m._1)).filter(_._1)
-              // decode delete files once
-              val posDels = delEntries.filter(_._3 == 1L).flatMap {
-                case (_, seq, _, p, rc) =>
-                  (for {
-                    b <- bundle.get(p)
-                    paths <- P.columnStrings(b, "file_path")
-                    poss <- P.columnLongs(b, "pos")
-                    if paths.length == poss.length &&
-                      poss.length == rc
-                  } yield paths.zip(poss).map { case (fp, pos) =>
-                    (seq, fp, pos)
-                  }.toSeq) match {
-                    case Some(xs) => xs
-                    case None => ok = false; Nil
-                  }
-              }
-              val eqDels = delEntries.filter(_._3 == 2L).map {
-                case (_, seq, _, p, rc) =>
-                  bundle.get(p).flatMap(P.columnLongs(_, "rec_id")) match {
-                    case Some(xs) if xs.length == rc => (seq, xs.toSet)
-                    case _ => ok = false; (seq, Set.empty[Long])
-                  }
-              }
-              var liveRows = 0L; var idSum = 0L; var valSum = 0L
-              var posApplied = 0L; var eqApplied = 0L
-              var poisonApplied = 0L
-              dataEntries.foreach { case (_, dSeq, c, p, rc) =>
-                if (c != 0L) ok = false
-                (bundle.get(p).flatMap(P.columnLongs(_, "rec_id")),
-                  bundle.get(p).flatMap(P.columnLongs(_, "val"))) match {
-                  case (Some(rs), Some(vs))
-                    if rs.length == vs.length && rs.length == rc =>
-                    val dead = new Array[Boolean](rs.length)
-                    // position deletes: apply at seq >= data seq
-                    posDels.foreach { case (seq, fp, pos) =>
-                      if (fp == p && seq >= dSeq && pos >= 0 &&
-                        pos < rs.length && !dead(pos.toInt)) {
-                        dead(pos.toInt) = true; posApplied += 1
-                      }
+            }
+            val eqDels = delEntries.filter(_._3 == 2L).map {
+              case (_, seq, _, p, rc) =>
+                bundle.get(p).flatMap(P.columnLongs(_, "rec_id")) match {
+                  case Some(xs) if xs.length == rc => (seq, xs.toSet)
+                  case _ => ok = false; (seq, Set.empty[Long])
+                }
+            }
+            var liveRows = 0L; var idSum = 0L; var valSum = 0L
+            var posApplied = 0L; var eqApplied = 0L
+            var poisonApplied = 0L
+            dataEntries.foreach { case (_, dSeq, c, p, rc) =>
+              if (c != 0L) ok = false
+              (bundle.get(p).flatMap(P.columnLongs(_, "rec_id")),
+                bundle.get(p).flatMap(P.columnLongs(_, "val"))) match {
+                case (Some(rs), Some(vs))
+                  if rs.length == vs.length && rs.length == rc =>
+                  val dead = new Array[Boolean](rs.length)
+                  // position deletes: apply at seq >= data seq
+                  posDels.foreach { case (seq, fp, pos) =>
+                    if (fp == p && seq >= dSeq && pos >= 0 &&
+                      pos < rs.length && !dead(pos.toInt)) {
+                      dead(pos.toInt) = true; posApplied += 1
                     }
-                    // equality deletes: STRICTLY greater only
-                    eqDels.foreach { case (seq, keys) =>
-                      var i = 0
-                      while (i < rs.length) {
-                        if (!dead(i) && keys.contains(rs(i))) {
-                          if (seq > dSeq) {
-                            dead(i) = true; eqApplied += 1
-                          } else poisonApplied += 1
-                        }
-                        i += 1
-                      }
-                    }
+                  }
+                  // equality deletes: STRICTLY greater only
+                  eqDels.foreach { case (seq, keys) =>
                     var i = 0
                     while (i < rs.length) {
-                      if (!dead(i)) {
-                        liveRows += 1; idSum += rs(i); valSum += vs(i)
+                      if (!dead(i) && keys.contains(rs(i))) {
+                        if (seq > dSeq) {
+                          dead(i) = true; eqApplied += 1
+                        } else poisonApplied += 1
                       }
                       i += 1
                     }
-                  case _ => ok = false
-                }
+                  }
+                  var i = 0
+                  while (i < rs.length) {
+                    if (!dead(i)) {
+                      liveRows += 1; idSum += rs(i); valSum += vs(i)
+                    }
+                    i += 1
+                  }
+                case _ => ok = false
               }
-              if (!ok) Nil
-              else Seq((t, bundleMd5, dataEntries.length.toLong,
-                delEntries.length.toLong, liveRows, idSum, valSum,
-                posApplied, eqApplied,
-                if (poisonApplied > 0) 1L else 0L))
             }
-            res.toSeq.flatten
+            if (!ok) Nil
+            else Seq((t, bundleMd5, dataEntries.length.toLong,
+              delEntries.length.toLong, liveRows, idSum, valSum,
+              posApplied, eqApplied,
+              if (poisonApplied > 0) 1L else 0L))
           }
-          .toDF("table_id", "bundle_md5", "n_data_files",
+          res.toSeq.flatten
+        }.toDF("table_id", "bundle_md5", "n_data_files",
             "n_delete_files", "live_rows", "live_id_sum",
             "live_val_sum", "n_pos_applied", "n_eq_applied",
             "poison_seen_not_applied")
@@ -4494,11 +4151,7 @@ object IngestionQueries {
     val q338 = "q338_iceberg_expire_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-        docs.groupByKey(_._1).flatMapGroups { (t, it) =>
-          val ids = it.map(_._2).toSeq.sorted
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
           val W = graft.sources.IcebergWrite
           val files = W.writeHistoryTable(s"tbl-$t", ids)
           val cutoff = 1700000000500L
@@ -4574,62 +4227,56 @@ object IngestionQueries {
     val q347 = "q347_iceberg_rewrite_manifests" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val files = W.writeSprawlTable(s"tbl-$t", ids)
-            val out = for {
-              rw <- W.rewriteManifests(files, "v3.metadata.json",
-                1700000001000L)
-              after = files ++ rw.newFiles +
-                (rw.newMetaName -> rw.newMeta)
-              ex <- W.expireSnapshots(after, rw.newMetaName,
-                1700000000500L)
-              pruned = (after -- ex.deleted) +
-                (ex.newMetaName -> ex.newMeta)
-              rw2 <- W.rewriteManifests(pruned, ex.newMetaName,
-                1700000002000L)
-            } yield {
-              // post walk: decode the merged manifest's data files
-              val merged = pruned.get("m-merged.avro")
-                .flatMap(graft.sources.AvroGeneric.parseContainer)
-              val paths = merged.toSeq.flatMap(_.records.flatMap(r =>
-                r.field("data_file").flatMap(
-                  _.field("file_path")).flatMap(_.asString)))
-              var rows = 0L; var idSum = 0L; var valSum = 0L
-              var ok = paths.length == 3
-              paths.foreach { p =>
-                (pruned.get(p).flatMap(P.columnLongs(_, "rec_id")),
-                  pruned.get(p).flatMap(P.columnLongs(_, "val"))) match {
-                  case (Some(rs), Some(vs))
-                      if rs.length == vs.length =>
-                    rows += rs.length; idSum += rs.sum
-                    valSum += vs.sum
-                  case _ => ok = false
-                }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          val files = W.writeSprawlTable(s"tbl-$t", ids)
+          val out = for {
+            rw <- W.rewriteManifests(files, "v3.metadata.json",
+              1700000001000L)
+            after = files ++ rw.newFiles +
+              (rw.newMetaName -> rw.newMeta)
+            ex <- W.expireSnapshots(after, rw.newMetaName,
+              1700000000500L)
+            pruned = (after -- ex.deleted) +
+              (ex.newMetaName -> ex.newMeta)
+            rw2 <- W.rewriteManifests(pruned, ex.newMetaName,
+              1700000002000L)
+          } yield {
+            // post walk: decode the merged manifest's data files
+            val merged = pruned.get("m-merged.avro")
+              .flatMap(graft.sources.AvroGeneric.parseContainer)
+            val paths = merged.toSeq.flatMap(_.records.flatMap(r =>
+              r.field("data_file").flatMap(
+                _.field("file_path")).flatMap(_.asString)))
+            var rows = 0L; var idSum = 0L; var valSum = 0L
+            var ok = paths.length == 3
+            paths.foreach { p =>
+              (pruned.get(p).flatMap(P.columnLongs(_, "rec_id")),
+                pruned.get(p).flatMap(P.columnLongs(_, "val"))) match {
+                case (Some(rs), Some(vs))
+                    if rs.length == vs.length =>
+                  rows += rs.length; idSum += rs.sum
+                  valSum += vs.sum
+                case _ => ok = false
               }
-              val expireMetaOnly =
-                if (ex.dataDeleted == 0 && ex.listsDeleted == 1 &&
-                  ex.manifestsDeleted == 3 &&
-                  ex.keptRows == ids.length.toLong) 1L
-                else 0L
-              val fixedPoint =
-                if (rw2.manifestsBefore == 1 &&
-                  rw2.liveRows == rw.liveRows) 1L
-                else 0L
-              if (!ok) Nil
-              else Seq((t, rw.manifestsBefore.toLong,
-                rw.manifestsAfter.toLong, rows, idSum, valSum,
-                expireMetaOnly, fixedPoint))
             }
-            out.toSeq.flatten
+            val expireMetaOnly =
+              if (ex.dataDeleted == 0 && ex.listsDeleted == 1 &&
+                ex.manifestsDeleted == 3 &&
+                ex.keptRows == ids.length.toLong) 1L
+              else 0L
+            val fixedPoint =
+              if (rw2.manifestsBefore == 1 &&
+                rw2.liveRows == rw.liveRows) 1L
+              else 0L
+            if (!ok) Nil
+            else Seq((t, rw.manifestsBefore.toLong,
+              rw.manifestsAfter.toLong, rows, idSum, valSum,
+              expireMetaOnly, fixedPoint))
           }
-          .toDF("table_id", "manifests_before", "manifests_after",
+          out.toSeq.flatten
+        }.toDF("table_id", "manifests_before", "manifests_after",
             "n_rows", "id_sum", "val_sum", "expire_meta_only",
             "fixed_point")
       },
@@ -4667,102 +4314,96 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JArray, JLong, JObject}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val A = graft.sources.AvroGeneric
-            val files = W.writeSpecEvoTable(s"tbl-$t", ids)
-            val probe = 1L
-            val out = for {
-              meta <- graft.sources.Json.parse(new String(
-                files("v2.metadata.json"), "UTF-8"))
-              mo <- Some(meta).collect { case o: JObject => o }
-              specs <- mo.get("partition-specs").collect {
-                case JArray(xs) => xs.collect { case o: JObject => o }
-              }
-              partitioned = specs.flatMap { so =>
-                for {
-                  sid <- so.get("spec-id")
-                    .collect { case JLong(x) => x }
-                  nf <- so.get("fields")
-                    .collect { case JArray(fs) => fs.nonEmpty }
-                } yield sid -> nf
-              }.toMap
-              list <- A.parseContainer(files("snap-2.avro"))
-              if partitioned.size == 2
-            } yield {
-              var ok = true
-              var nRead = 0L
-              var nPruned = 0L
-              var rows = 0L; var idSum = 0L; var valSum = 0L
-              var oldRows = 0L
-              list.records.foreach { mf =>
-                val res = for {
-                  mp <- mf.field("manifest_path")
-                    .flatMap(_.asString)
-                  sid <- mf.field("partition_spec_id")
-                    .flatMap(_.asLong)
-                  hasPart <- partitioned.get(sid)
-                  mb <- files.get(mp)
-                  m <- A.parseContainer(mb)
-                } yield (hasPart, m)
-                res match {
-                  case Some((hasPart, m)) => m.records.foreach { e =>
-                    val df = e.field("data_file")
-                    val take =
-                      if (!hasPart) true
-                      else df.flatMap(_.field("partition"))
-                        .flatMap(_.field("p2")).flatMap(_.asLong)
-                        .contains(probe)
-                    if (!take) nPruned += 1
-                    else {
-                      nRead += 1
-                      val decode = for {
-                        path <- df.flatMap(_.field("file_path"))
-                          .flatMap(_.asString)
-                        b <- files.get(path)
-                        rs <- P.columnLongs(b, "rec_id")
-                        vs <- P.columnLongs(b, "val")
-                        if rs.length == vs.length
-                      } yield (rs, vs)
-                      decode match {
-                        case Some((rs, vs)) =>
-                          var i = 0
-                          while (i < rs.length) {
-                            if (!hasPart) oldRows += 1
-                            // row-level predicate after the scan
-                            if (rs(i) % 3 == probe) {
-                              rows += 1
-                              idSum += rs(i)
-                              valSum += vs(i)
-                            }
-                            i += 1
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          val A = graft.sources.AvroGeneric
+          val files = W.writeSpecEvoTable(s"tbl-$t", ids)
+          val probe = 1L
+          val out = for {
+            meta <- graft.sources.Json.parse(new String(
+              files("v2.metadata.json"), "UTF-8"))
+            mo <- Some(meta).collect { case o: JObject => o }
+            specs <- mo.get("partition-specs").collect {
+              case JArray(xs) => xs.collect { case o: JObject => o }
+            }
+            partitioned = specs.flatMap { so =>
+              for {
+                sid <- so.get("spec-id")
+                  .collect { case JLong(x) => x }
+                nf <- so.get("fields")
+                  .collect { case JArray(fs) => fs.nonEmpty }
+              } yield sid -> nf
+            }.toMap
+            list <- A.parseContainer(files("snap-2.avro"))
+            if partitioned.size == 2
+          } yield {
+            var ok = true
+            var nRead = 0L
+            var nPruned = 0L
+            var rows = 0L; var idSum = 0L; var valSum = 0L
+            var oldRows = 0L
+            list.records.foreach { mf =>
+              val res = for {
+                mp <- mf.field("manifest_path")
+                  .flatMap(_.asString)
+                sid <- mf.field("partition_spec_id")
+                  .flatMap(_.asLong)
+                hasPart <- partitioned.get(sid)
+                mb <- files.get(mp)
+                m <- A.parseContainer(mb)
+              } yield (hasPart, m)
+              res match {
+                case Some((hasPart, m)) => m.records.foreach { e =>
+                  val df = e.field("data_file")
+                  val take =
+                    if (!hasPart) true
+                    else df.flatMap(_.field("partition"))
+                      .flatMap(_.field("p2")).flatMap(_.asLong)
+                      .contains(probe)
+                  if (!take) nPruned += 1
+                  else {
+                    nRead += 1
+                    val decode = for {
+                      path <- df.flatMap(_.field("file_path"))
+                        .flatMap(_.asString)
+                      b <- files.get(path)
+                      rs <- P.columnLongs(b, "rec_id")
+                      vs <- P.columnLongs(b, "val")
+                      if rs.length == vs.length
+                    } yield (rs, vs)
+                    decode match {
+                      case Some((rs, vs)) =>
+                        var i = 0
+                        while (i < rs.length) {
+                          if (!hasPart) oldRows += 1
+                          // row-level predicate after the scan
+                          if (rs(i) % 3 == probe) {
+                            rows += 1
+                            idSum += rs(i)
+                            valSum += vs(i)
                           }
-                        case None => ok = false
-                      }
+                          i += 1
+                        }
+                      case None => ok = false
                     }
                   }
-                  case None => ok = false
                 }
+                case None => ok = false
               }
-              // the classic bug's deficit: a default-spec reader
-              // prunes EVERY spec-0 file (no p2 -> no match), losing
-              // the pre-evolution rows that satisfy the predicate
-              val naiveLoses = oldRows // rows only a spec-aware
-              // reader ever scans (re-derived in DuckDB)
-              if (ok)
-                Seq((t, nRead, nPruned, rows, idSum, valSum,
-                  naiveLoses))
-              else Nil
             }
-            out.toSeq.flatten
+            // the classic bug's deficit: a default-spec reader
+            // prunes EVERY spec-0 file (no p2 -> no match), losing
+            // the pre-evolution rows that satisfy the predicate
+            val naiveLoses = oldRows // rows only a spec-aware
+            // reader ever scans (re-derived in DuckDB)
+            if (ok)
+              Seq((t, nRead, nPruned, rows, idSum, valSum,
+                naiveLoses))
+            else Nil
           }
-          .toDF("table_id", "n_files_read", "n_files_pruned",
+          out.toSeq.flatten
+        }.toDF("table_id", "n_files_read", "n_files_pruned",
             "n_rows", "id_sum", "val_sum", "naive_loses")
       },
       oracle = Some("""
@@ -4803,22 +4444,11 @@ object IngestionQueries {
   // tasks. The fixture's three commits bait both failure modes: a
   // removed file (commit 1) and a re-added path (commit 2).
   private def deltaLogDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val Fixture = "/root/repo/fixtures/delta_log_files.parquet"
+    val Fixture = Blobs.path("delta_log_files.parquet")
     val q254 = "q254_delta_log_replay" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltalog:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(Fixture)), "blob_key")
+        val files = Blobs.fixture(s, dir, "deltalog:", Fixture)
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         // ---- log replay: pure relational ops on metadata rows ------
@@ -4920,19 +4550,11 @@ object IngestionQueries {
     // wrong). All metadata joins/windows run on KB-scale rows per
     // table (≤ 6 actions, ≤ 4 commits — bounded by the log protocol
     // itself); file decode stays in scan tasks.
-    val Fixture261 = "/root/repo/fixtures/delta_ckpt_files.parquet"
+    val Fixture261 = Blobs.path("delta_ckpt_files.parquet")
     val q261 = "q261_delta_checkpoint_replay" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltackpt:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(Fixture261)), "blob_key")
+        val files = Blobs.fixture(s, dir, "deltackpt:", Fixture261)
           .select(col("blob_id"), col("blob_key"), col("rel_path"),
             col("kind"), col("file_bytes"))
 
@@ -5147,19 +4769,12 @@ object IngestionQueries {
     // bitmap cannot pass silently. The protocol gate is honest:
     // reader feature "deletionVectors" is required (v3) and checked.
     // Per-table work is the bounded metadata+blob group (≤ 6 files).
-    val Fixture270 = "/root/repo/fixtures/delta_dv_files.parquet"
+    val Fixture270 = Blobs.path("delta_dv_files.parquet")
     val q270 = "q270_delta_deletion_vectors" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JArray, JLong, JObject, JString}
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltadv:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(Fixture270)), "blob_key")
+        Blobs.fixture(s, dir, "deltadv:", Fixture270)
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
           .as[(Long, String, String, Array[Byte])]
@@ -5343,14 +4958,7 @@ object IngestionQueries {
     val q272 = "q272_delta_multipart_checkpoint" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltackptm:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(Fixture261)), "blob_key")
+        Blobs.fixture(s, dir, "deltackptm:", Fixture261)
           .select(col("blob_id"), col("blob_key"), col("rel_path"),
             col("kind"), col("file_bytes"))
           .as[(Long, String, String, String, Array[Byte])]
@@ -5520,17 +5128,8 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.types._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltacolmap:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/delta_colmap_files.parquet")),
-            "blob_key")
+        val files = Blobs.fixture(s, dir, "deltacolmap:",
+          "delta_colmap_files.parquet")
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         val actionSchema = StructType(Seq(
@@ -5664,16 +5263,7 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.types._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltacdf:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/delta_cdf_files.parquet")), "blob_key")
+        val files = Blobs.fixture(s, dir, "deltacdf:", "delta_cdf_files.parquet")
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         val actionSchema = StructType(Seq(
@@ -5782,17 +5372,7 @@ object IngestionQueries {
         import s.implicits._
         import org.apache.spark.sql.types._
         val cutoffMs = 1700000100000L
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("deltavac:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        val files = keys
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/delta_vacuum_files.parquet")),
-            "blob_key")
+        val files = Blobs.fixture(s, dir, "deltavac:", "delta_vacuum_files.parquet")
           .select(col("blob_id"), col("rel_path"), col("kind"),
             col("file_bytes"))
         val actionSchema = StructType(Seq(
@@ -5883,65 +5463,54 @@ object IngestionQueries {
     val q299 = "q299_delta_write_table" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            import graft.sources.Json.{JObject, JString}
-            val ids = it.map(_._2).toSeq.sorted
-            val key = md5Hex("deltawrite:" + ids.mkString(","))
-            val files = graft.sources.DeltaWrite.writeTable(key, ids)
-            // bundle md5 over sorted (path NUL bytes) — the twin's law
-            val md = java.security.MessageDigest.getInstance("MD5")
-            files.toSeq.sortBy(_._1).foreach { case (p, b) =>
-              md.update(p.getBytes("UTF-8")); md.update(0.toByte)
-              md.update(b)
-            }
-            val bundleMd5 = md.digest().map("%02x".format(_)).mkString
-            // replay OUR OWN log through OUR OWN json parser
-            val logs = files.filter(_._1.startsWith("_delta_log/"))
-              .toSeq.sortBy(_._1)
-            var verdict = Map.empty[String, (Int, Boolean)]
-            var ok = true
-            logs.zipWithIndex.foreach { case ((_, bytes), v) =>
-              new String(bytes, "UTF-8").split("\n")
-                .filter(_.nonEmpty).foreach { line =>
-                  graft.sources.Json.parse(line) match {
-                    case Some(o: JObject) =>
-                      def path(k: String): Option[String] =
-                        o.get(k).collect { case a: JObject => a }
-                          .flatMap(_.get("path"))
-                          .collect { case JString(p) => p }
-                      path("add").foreach(p => verdict += p -> (v, true))
-                      path("remove").foreach { p =>
-                        if (!verdict.get(p).exists(_._1 > v))
-                          verdict += p -> (v, false)
-                      }
-                    case _ => ok = false
-                  }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          import graft.sources.Json.{JObject, JString}
+          val key = Blobs.key("deltawrite:", ids)
+          val files = graft.sources.DeltaWrite.writeTable(key, ids)
+          // bundle md5 over sorted (path NUL bytes) — the twin's law
+          val bundleMd5 = Blobs.bundleMd5(files)
+          // replay OUR OWN log through OUR OWN json parser
+          val logs = files.filter(_._1.startsWith("_delta_log/"))
+            .toSeq.sortBy(_._1)
+          var verdict = Map.empty[String, (Int, Boolean)]
+          var ok = true
+          logs.zipWithIndex.foreach { case ((_, bytes), v) =>
+            new String(bytes, "UTF-8").split("\n")
+              .filter(_.nonEmpty).foreach { line =>
+                graft.sources.Json.parse(line) match {
+                  case Some(o: JObject) =>
+                    def path(k: String): Option[String] =
+                      o.get(k).collect { case a: JObject => a }
+                        .flatMap(_.get("path"))
+                        .collect { case JString(p) => p }
+                    path("add").foreach(p => verdict += p -> (v, true))
+                    path("remove").foreach { p =>
+                      if (!verdict.get(p).exists(_._1 > v))
+                        verdict += p -> (v, false)
+                    }
+                  case _ => ok = false
                 }
-            }
-            val active = verdict.collect {
-              case (p, (_, true)) => p }.toSeq.sorted
-            val P = graft.sources.Parquet
-            var rows = 0L
-            var idSum = 0L
-            var valSum = 0L
-            active.foreach { p =>
-              (files.get(p).flatMap(P.columnLongs(_, "rec_id")),
-                files.get(p).flatMap(P.columnLongs(_, "val"))) match {
-                case (Some(r), Some(v2)) =>
-                  rows += r.length; idSum += r.sum; valSum += v2.sum
-                case _ => ok = false
               }
-            }
-            if (ok)
-              Seq((blobId, logs.length.toLong, active.length.toLong,
-                rows, idSum, valSum, bundleMd5))
-            else Nil
           }
-          .toDF("blob_id", "n_commits", "n_active", "rows_decoded",
+          val active = verdict.collect {
+            case (p, (_, true)) => p }.toSeq.sorted
+          val P = graft.sources.Parquet
+          var rows = 0L
+          var idSum = 0L
+          var valSum = 0L
+          active.foreach { p =>
+            (files.get(p).flatMap(P.columnLongs(_, "rec_id")),
+              files.get(p).flatMap(P.columnLongs(_, "val"))) match {
+              case (Some(r), Some(v2)) =>
+                rows += r.length; idSum += r.sum; valSum += v2.sum
+              case _ => ok = false
+            }
+          }
+          if (ok)
+            Seq((blobId, logs.length.toLong, active.length.toLong,
+              rows, idSum, valSum, bundleMd5))
+          else Nil
+        }.toDF("blob_id", "n_commits", "n_active", "rows_decoded",
             "id_sum", "val_sum", "bundle_md5")
       },
       oracle = Some("""
@@ -5987,67 +5556,61 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JBool, JObject}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val files = W.writeTable(s"tbl-$t", ids)
-            def liveSums(fs: Map[String, Array[Byte]])
-                : Option[(Long, Long, Long, Long)] =
-              W.replayLive(fs).flatMap { case (live, _) =>
-                val dec = live.map { p =>
-                  for {
-                    b <- fs.get(p)
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                  } yield (rs.length.toLong, rs.sum, vs.sum)
-                }
-                if (dec.exists(_.isEmpty)) None
-                else Some(dec.map(_.get).foldLeft(
-                  (live.length.toLong, 0L, 0L, 0L)) {
-                  case ((n, r, i, v), (r2, i2, v2)) =>
-                    (n, r + r2, i + i2, v + v2)
-                })
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val files = W.writeTable(s"tbl-$t", ids)
+          def liveSums(fs: Map[String, Array[Byte]])
+              : Option[(Long, Long, Long, Long)] =
+            W.replayLive(fs).flatMap { case (live, _) =>
+              val dec = live.map { p =>
+                for {
+                  b <- fs.get(p)
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                } yield (rs.length.toLong, rs.sum, vs.sum)
               }
-            (liveSums(files), W.optimize(files)) match {
-              case (Some((nPre, rowsPre, idPre, valPre)),
-                    Some(res)) =>
-                val after = (files -- Nil) +
-                  (res.commitName -> res.commit) +
-                  (res.compactedName -> res.compacted)
-                // CDF law: the optimize commit carries ONLY
-                // dataChange=false actions
-                val dcFalse = new String(res.commit, "UTF-8")
-                  .split("\n").filter(_.nonEmpty).forall { line =>
-                    graft.sources.Json.parse(line) match {
-                      case Some(o: JObject) =>
-                        Seq("add", "remove").flatMap(k =>
-                          o.get(k).collect { case a: JObject =>
-                            a.get("dataChange") }).flatten
-                          .forall(_ == JBool(false))
-                      case _ => false
-                    }
-                  }
-                (liveSums(after), W.optimize(after)) match {
-                  case (Some((nPost, rowsPost, idPost, valPost)),
-                        Some(res2)) =>
-                    val preserves =
-                      if (rowsPost == rowsPre && idPost == idPre &&
-                        valPost == valPre) 1L else 0L
-                    val fixedPoint =
-                      if (res2.rows == res.rows) 1L else 0L
-                    Seq((t, nPre, nPost, rowsPre, idPre, valPre,
-                      preserves, if (dcFalse) 1L else 0L, fixedPoint))
-                  case _ => Nil
-                }
-              case _ => Nil
+              if (dec.exists(_.isEmpty)) None
+              else Some(dec.map(_.get).foldLeft(
+                (live.length.toLong, 0L, 0L, 0L)) {
+                case ((n, r, i, v), (r2, i2, v2)) =>
+                  (n, r + r2, i + i2, v + v2)
+              })
             }
+          (liveSums(files), W.optimize(files)) match {
+            case (Some((nPre, rowsPre, idPre, valPre)),
+                  Some(res)) =>
+              val after = (files -- Nil) +
+                (res.commitName -> res.commit) +
+                (res.compactedName -> res.compacted)
+              // CDF law: the optimize commit carries ONLY
+              // dataChange=false actions
+              val dcFalse = new String(res.commit, "UTF-8")
+                .split("\n").filter(_.nonEmpty).forall { line =>
+                  graft.sources.Json.parse(line) match {
+                    case Some(o: JObject) =>
+                      Seq("add", "remove").flatMap(k =>
+                        o.get(k).collect { case a: JObject =>
+                          a.get("dataChange") }).flatten
+                        .forall(_ == JBool(false))
+                    case _ => false
+                  }
+                }
+              (liveSums(after), W.optimize(after)) match {
+                case (Some((nPost, rowsPost, idPost, valPost)),
+                      Some(res2)) =>
+                  val preserves =
+                    if (rowsPost == rowsPre && idPost == idPre &&
+                      valPost == valPre) 1L else 0L
+                  val fixedPoint =
+                    if (res2.rows == res.rows) 1L else 0L
+                  Seq((t, nPre, nPost, rowsPre, idPre, valPre,
+                    preserves, if (dcFalse) 1L else 0L, fixedPoint))
+                case _ => Nil
+              }
+            case _ => Nil
           }
-          .toDF("table_id", "n_live_pre", "n_live_post", "n_rows",
+        }.toDF("table_id", "n_live_pre", "n_live_post", "n_rows",
             "id_sum", "val_sum", "preserves", "dc_false", "fixed_point")
       },
       oracle = Some("""
@@ -6084,120 +5647,114 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JLong, JObject, JString}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.DeltaWrite
-            val D = graft.sources.DeletionVectors
-            val P = graft.sources.Parquet
-            val files = W.writeDvTable(s"tbl-$t", t, ids)
-            var ok = true
-            // replay commits in version order; adds keep their DV
-            val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
-            val commits = files.keys.toSeq.collect {
-              case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
-            val state = scala.collection.mutable.LinkedHashMap
-              .empty[String, Option[JObject]]
-            var featureOk = false
-            commits.foreach { case (_, p) =>
-              new String(files(p), "UTF-8").split("\n")
-                .filter(_.nonEmpty).foreach { line =>
-                  graft.sources.Json.parse(line) match {
-                    case Some(o: JObject) =>
-                      o.get("protocol").foreach {
-                        case pr: JObject =>
-                          featureOk = pr.get("minReaderVersion")
-                            .contains(JLong(3L)) &&
-                            (pr.get("readerFeatures") match {
-                              case Some(
-                                graft.sources.Json.JArray(xs)) =>
-                                xs.contains(
-                                  JString("deletionVectors"))
-                              case _ => false
-                            })
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val D = graft.sources.DeletionVectors
+          val P = graft.sources.Parquet
+          val files = W.writeDvTable(s"tbl-$t", t, ids)
+          var ok = true
+          // replay commits in version order; adds keep their DV
+          val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
+          val commits = files.keys.toSeq.collect {
+            case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
+          val state = scala.collection.mutable.LinkedHashMap
+            .empty[String, Option[JObject]]
+          var featureOk = false
+          commits.foreach { case (_, p) =>
+            new String(files(p), "UTF-8").split("\n")
+              .filter(_.nonEmpty).foreach { line =>
+                graft.sources.Json.parse(line) match {
+                  case Some(o: JObject) =>
+                    o.get("protocol").foreach {
+                      case pr: JObject =>
+                        featureOk = pr.get("minReaderVersion")
+                          .contains(JLong(3L)) &&
+                          (pr.get("readerFeatures") match {
+                            case Some(
+                              graft.sources.Json.JArray(xs)) =>
+                              xs.contains(
+                                JString("deletionVectors"))
+                            case _ => false
+                          })
+                      case _ => ok = false
+                    }
+                    o.get("add").foreach {
+                      case a: JObject => a.get("path") match {
+                        case Some(JString(x)) => state(x) = Some(a)
                         case _ => ok = false
                       }
-                      o.get("add").foreach {
-                        case a: JObject => a.get("path") match {
-                          case Some(JString(x)) => state(x) = Some(a)
-                          case _ => ok = false
-                        }
+                      case _ => ok = false
+                    }
+                    o.get("remove").foreach {
+                      case r: JObject => r.get("path") match {
+                        case Some(JString(x)) => state(x) = None
                         case _ => ok = false
                       }
-                      o.get("remove").foreach {
-                        case r: JObject => r.get("path") match {
-                          case Some(JString(x)) => state(x) = None
-                          case _ => ok = false
-                        }
-                        case _ => ok = false
-                      }
-                    case _ => ok = false
-                  }
+                      case _ => ok = false
+                    }
+                  case _ => ok = false
                 }
-            }
-            def js(o: JObject, k: String): Option[String] =
-              o.get(k) match { case Some(JString(v)) => Some(v)
-                case _ => None }
-            def jl(o: JObject, k: String): Option[Long] =
-              o.get(k) match { case Some(JLong(v)) => Some(v)
-                case _ => None }
-            var nInline = 0L; var nFile = 0L
-            var rows = 0L; var idSum = 0L; var valSum = 0L
-            val live = state.toSeq.collect {
-              case (p, Some(a)) => (p, a) }.sortBy(_._1)
-            live.foreach { case (path, a) =>
-              val dead: Set[Long] = a.get("deletionVector") match {
-                case None => Set.empty
-                case Some(d: JObject) =>
-                  val res = for {
-                    st <- js(d, "storageType")
-                    pod <- js(d, "pathOrInlineDv")
-                    size <- jl(d, "sizeInBytes")
-                    card <- jl(d, "cardinality")
-                    vals <- st match {
-                      case "i" =>
-                        nInline += 1
-                        D.inlineBitmap(pod, size, card)
-                      case "u" =>
-                        nFile += 1
-                        for {
-                          off <- jl(d, "offset")
-                          name <- D.uuidPath(pod)
-                          fb <- files.get(name)
-                          data <- D.fileSlice(fb, off, size)
-                          bs <- D.bitmap(data)
-                          if bs.length.toLong == card
-                        } yield bs
-                      case _ => None
-                    }
-                  } yield vals.toSet
-                  res.getOrElse { ok = false; Set.empty }
-                case Some(_) => ok = false; Set.empty
               }
-              (files.get(path).flatMap(P.columnLongs(_, "rec_id")),
-                files.get(path).flatMap(P.columnLongs(_, "val"))) match {
-                case (Some(rs), Some(vs)) if rs.length == vs.length =>
-                  dead.foreach(pos =>
-                    if (pos < 0 || pos >= rs.length) ok = false)
-                  var i = 0
-                  while (i < rs.length) {
-                    if (!dead.contains(i.toLong)) {
-                      rows += 1; idSum += rs(i); valSum += vs(i)
-                    }
-                    i += 1
-                  }
-                case _ => ok = false
-              }
-            }
-            if (ok && featureOk && live.length == 3)
-              Seq((t, live.length.toLong, nInline, nFile, rows,
-                idSum, valSum))
-            else Nil
           }
-          .toDF("table_id", "n_live_files", "n_dv_inline",
+          def js(o: JObject, k: String): Option[String] =
+            o.get(k) match { case Some(JString(v)) => Some(v)
+              case _ => None }
+          def jl(o: JObject, k: String): Option[Long] =
+            o.get(k) match { case Some(JLong(v)) => Some(v)
+              case _ => None }
+          var nInline = 0L; var nFile = 0L
+          var rows = 0L; var idSum = 0L; var valSum = 0L
+          val live = state.toSeq.collect {
+            case (p, Some(a)) => (p, a) }.sortBy(_._1)
+          live.foreach { case (path, a) =>
+            val dead: Set[Long] = a.get("deletionVector") match {
+              case None => Set.empty
+              case Some(d: JObject) =>
+                val res = for {
+                  st <- js(d, "storageType")
+                  pod <- js(d, "pathOrInlineDv")
+                  size <- jl(d, "sizeInBytes")
+                  card <- jl(d, "cardinality")
+                  vals <- st match {
+                    case "i" =>
+                      nInline += 1
+                      D.inlineBitmap(pod, size, card)
+                    case "u" =>
+                      nFile += 1
+                      for {
+                        off <- jl(d, "offset")
+                        name <- D.uuidPath(pod)
+                        fb <- files.get(name)
+                        data <- D.fileSlice(fb, off, size)
+                        bs <- D.bitmap(data)
+                        if bs.length.toLong == card
+                      } yield bs
+                    case _ => None
+                  }
+                } yield vals.toSet
+                res.getOrElse { ok = false; Set.empty }
+              case Some(_) => ok = false; Set.empty
+            }
+            (files.get(path).flatMap(P.columnLongs(_, "rec_id")),
+              files.get(path).flatMap(P.columnLongs(_, "val"))) match {
+              case (Some(rs), Some(vs)) if rs.length == vs.length =>
+                dead.foreach(pos =>
+                  if (pos < 0 || pos >= rs.length) ok = false)
+                var i = 0
+                while (i < rs.length) {
+                  if (!dead.contains(i.toLong)) {
+                    rows += 1; idSum += rs(i); valSum += vs(i)
+                  }
+                  i += 1
+                }
+              case _ => ok = false
+            }
+          }
+          if (ok && featureOk && live.length == 3)
+            Seq((t, live.length.toLong, nInline, nFile, rows,
+              idSum, valSum))
+          else Nil
+        }.toDF("table_id", "n_live_files", "n_dv_inline",
             "n_dv_file", "rows_live", "id_sum", "val_sum")
       },
       oracle = Some("""
@@ -6241,143 +5798,137 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JBool, JObject, JString}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val J = graft.sources.Json
-            val base = W.writeCdfTable(s"tbl-$t", ids)
-            val updates = ids.filter(d => (d / 6) % 4 == 1)
-              .map(d => (d, (d * 31) % 1009)).toMap
-            val deletes = ids.filter(d => (d / 6) % 4 == 2).toSet
-            val inserts = ids.filter(d => (d / 6) % 4 == 3)
-              .map(d => (d + 1000000L, (d * 17) % 1013))
-            def state(fs: Map[String, Array[Byte]])
-                : Option[Map[Long, Long]] =
-              W.replayLive(fs).flatMap { case (live, _) =>
-                val dec = live.map(p => for {
-                  b <- fs.get(p)
-                  rs <- P.columnLongs(b, "rec_id")
-                  vs <- P.columnLongs(b, "val")
-                  if rs.length == vs.length
-                } yield rs.zip(vs))
-                if (dec.exists(_.isEmpty)) None
-                else Some(dec.flatMap(_.get).toMap)
-              }
-            // own CDF read from version `from`: a commit WITH cdc
-            // actions feeds ONLY from its cdc files; one without
-            // synthesizes inserts from dataChange=true adds (q282's
-            // per-commit selection law). Gated on the metaData flag.
-            def cdfRows(fs: Map[String, Array[Byte]], from: Long)
-                : Option[Seq[(Long, Long, String)]] = {
-              val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
-              val commits = fs.keys.toSeq.collect {
-                case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
-              var enabled = false
-              var bad = false
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[(Long, Long, String)]
-              commits.foreach { case (ver, p) =>
-                val objs = new String(fs(p), "UTF-8").split("\n")
-                  .filter(_.nonEmpty).flatMap(J.parse)
-                  .collect { case o: JObject => o }
-                if (objs.exists(_.get("metaData").exists {
-                  case m: JObject => m.get("configuration").exists {
-                    case c: JObject =>
-                      c.get("delta.enableChangeDataFeed")
-                        .contains(JString("true"))
-                    case _ => false
-                  }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val J = graft.sources.Json
+          val base = W.writeCdfTable(s"tbl-$t", ids)
+          val updates = ids.filter(d => (d / 6) % 4 == 1)
+            .map(d => (d, (d * 31) % 1009)).toMap
+          val deletes = ids.filter(d => (d / 6) % 4 == 2).toSet
+          val inserts = ids.filter(d => (d / 6) % 4 == 3)
+            .map(d => (d + 1000000L, (d * 17) % 1013))
+          def state(fs: Map[String, Array[Byte]])
+              : Option[Map[Long, Long]] =
+            W.replayLive(fs).flatMap { case (live, _) =>
+              val dec = live.map(p => for {
+                b <- fs.get(p)
+                rs <- P.columnLongs(b, "rec_id")
+                vs <- P.columnLongs(b, "val")
+                if rs.length == vs.length
+              } yield rs.zip(vs))
+              if (dec.exists(_.isEmpty)) None
+              else Some(dec.flatMap(_.get).toMap)
+            }
+          // own CDF read from version `from`: a commit WITH cdc
+          // actions feeds ONLY from its cdc files; one without
+          // synthesizes inserts from dataChange=true adds (q282's
+          // per-commit selection law). Gated on the metaData flag.
+          def cdfRows(fs: Map[String, Array[Byte]], from: Long)
+              : Option[Seq[(Long, Long, String)]] = {
+            val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
+            val commits = fs.keys.toSeq.collect {
+              case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
+            var enabled = false
+            var bad = false
+            val out = scala.collection.mutable.ArrayBuffer
+              .empty[(Long, Long, String)]
+            commits.foreach { case (ver, p) =>
+              val objs = new String(fs(p), "UTF-8").split("\n")
+                .filter(_.nonEmpty).flatMap(J.parse)
+                .collect { case o: JObject => o }
+              if (objs.exists(_.get("metaData").exists {
+                case m: JObject => m.get("configuration").exists {
+                  case c: JObject =>
+                    c.get("delta.enableChangeDataFeed")
+                      .contains(JString("true"))
                   case _ => false
-                })) enabled = true
-                if (ver >= from) {
-                  val cdcPaths = objs.flatMap(_.get("cdc")).collect {
-                    case c: JObject => c.get("path")
-                  }.flatten.collect { case JString(x) => x }
-                  if (cdcPaths.nonEmpty) cdcPaths.foreach { cp =>
-                    (fs.get(cp).flatMap(P.columnLongs(_, "rec_id")),
-                      fs.get(cp).flatMap(P.columnLongs(_, "val")),
-                      fs.get(cp)
-                        .flatMap(P.columnStrings(_, "_change_type")))
+                }
+                case _ => false
+              })) enabled = true
+              if (ver >= from) {
+                val cdcPaths = objs.flatMap(_.get("cdc")).collect {
+                  case c: JObject => c.get("path")
+                }.flatten.collect { case JString(x) => x }
+                if (cdcPaths.nonEmpty) cdcPaths.foreach { cp =>
+                  (fs.get(cp).flatMap(P.columnLongs(_, "rec_id")),
+                    fs.get(cp).flatMap(P.columnLongs(_, "val")),
+                    fs.get(cp)
+                      .flatMap(P.columnStrings(_, "_change_type")))
+                  match {
+                    case (Some(rs), Some(vs), Some(ct))
+                      if rs.length == vs.length &&
+                        ct.length == rs.length =>
+                      rs.indices.foreach(i =>
+                        out += ((rs(i), vs(i), ct(i))))
+                    case _ => bad = true
+                  }
+                }
+                else objs.flatMap(_.get("add")).collect {
+                  case a: JObject
+                    if a.get("dataChange").contains(JBool(true)) =>
+                    a.get("path")
+                }.flatten.collect { case JString(x) => x }
+                  .foreach { ap =>
+                    (fs.get(ap).flatMap(P.columnLongs(_, "rec_id")),
+                      fs.get(ap).flatMap(P.columnLongs(_, "val")))
                     match {
-                      case (Some(rs), Some(vs), Some(ct))
-                        if rs.length == vs.length &&
-                          ct.length == rs.length =>
+                      case (Some(rs), Some(vs))
+                        if rs.length == vs.length =>
                         rs.indices.foreach(i =>
-                          out += ((rs(i), vs(i), ct(i))))
+                          out += ((rs(i), vs(i), "insert")))
                       case _ => bad = true
                     }
                   }
-                  else objs.flatMap(_.get("add")).collect {
-                    case a: JObject
-                      if a.get("dataChange").contains(JBool(true)) =>
-                      a.get("path")
-                  }.flatten.collect { case JString(x) => x }
-                    .foreach { ap =>
-                      (fs.get(ap).flatMap(P.columnLongs(_, "rec_id")),
-                        fs.get(ap).flatMap(P.columnLongs(_, "val")))
-                      match {
-                        case (Some(rs), Some(vs))
-                          if rs.length == vs.length =>
-                          rs.indices.foreach(i =>
-                            out += ((rs(i), vs(i), "insert")))
-                        case _ => bad = true
-                      }
-                    }
-                }
               }
-              if (bad || !enabled) None else Some(out.toSeq)
             }
-            val res = for {
-              pre <- state(base)
-              mr <- W.mergeCdf(base, updates, deletes, inserts)
-              merged = base ++ mr.files + (mr.commitName -> mr.commit)
-              post <- state(merged)
-              feed <- cdfRows(merged, 1L)
-            } yield {
-              var ok = true
-              val st =
-                scala.collection.mutable.Map.empty[Long, Long] ++ pre
-              feed.foreach { case (k, vv, ct) =>
-                ct match {
-                  case "insert" =>
-                    if (st.contains(k)) ok = false else st(k) = vv
-                  case "update_preimage" =>
-                    if (!st.get(k).contains(vv)) ok = false
-                  case "update_postimage" =>
-                    if (!st.contains(k)) ok = false else st(k) = vv
-                  case "delete" =>
-                    if (!st.get(k).contains(vv)) ok = false
-                    else st -= k
-                  case _ => ok = false
-                }
-              }
-              val foldOk = ok && st.toMap == post
-              val optZero = W.optimize(merged) match {
-                case Some(o) =>
-                  val after = merged + (o.commitName -> o.commit) +
-                    (o.compactedName -> o.compacted)
-                  val ov = o.commitName.stripPrefix("_delta_log/")
-                    .stripSuffix(".json").toLong
-                  (cdfRows(after, ov), state(after)) match {
-                    case (Some(rows), Some(ps))
-                      if rows.isEmpty && ps == post => 1L
-                    case _ => 0L
-                  }
-                case None => 0L
-              }
-              Seq((t, mr.nTouched, mr.nUpd, mr.nDel, mr.nIns,
-                feed.length.toLong, feed.map(_._2).sum,
-                post.size.toLong, post.keys.sum, post.values.sum,
-                if (foldOk) 1L else 0L, optZero))
-            }
-            res.toSeq.flatten
+            if (bad || !enabled) None else Some(out.toSeq)
           }
-          .toDF("table_id", "n_touched", "n_upd", "n_del", "n_ins",
+          val res = for {
+            pre <- state(base)
+            mr <- W.mergeCdf(base, updates, deletes, inserts)
+            merged = base ++ mr.files + (mr.commitName -> mr.commit)
+            post <- state(merged)
+            feed <- cdfRows(merged, 1L)
+          } yield {
+            var ok = true
+            val st =
+              scala.collection.mutable.Map.empty[Long, Long] ++ pre
+            feed.foreach { case (k, vv, ct) =>
+              ct match {
+                case "insert" =>
+                  if (st.contains(k)) ok = false else st(k) = vv
+                case "update_preimage" =>
+                  if (!st.get(k).contains(vv)) ok = false
+                case "update_postimage" =>
+                  if (!st.contains(k)) ok = false else st(k) = vv
+                case "delete" =>
+                  if (!st.get(k).contains(vv)) ok = false
+                  else st -= k
+                case _ => ok = false
+              }
+            }
+            val foldOk = ok && st.toMap == post
+            val optZero = W.optimize(merged) match {
+              case Some(o) =>
+                val after = merged + (o.commitName -> o.commit) +
+                  (o.compactedName -> o.compacted)
+                val ov = o.commitName.stripPrefix("_delta_log/")
+                  .stripSuffix(".json").toLong
+                (cdfRows(after, ov), state(after)) match {
+                  case (Some(rows), Some(ps))
+                    if rows.isEmpty && ps == post => 1L
+                  case _ => 0L
+                }
+              case None => 0L
+            }
+            Seq((t, mr.nTouched, mr.nUpd, mr.nDel, mr.nIns,
+              feed.length.toLong, feed.map(_._2).sum,
+              post.size.toLong, post.keys.sum, post.values.sum,
+              if (foldOk) 1L else 0L, optZero))
+          }
+          res.toSeq.flatten
+        }.toDF("table_id", "n_touched", "n_upd", "n_del", "n_ins",
             "n_cdc_rows", "cdc_val_sum", "post_rows", "post_id_sum",
             "post_val_sum", "fold_ok", "opt_cdf_zero")
       },
@@ -6450,103 +6001,97 @@ object IngestionQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JObject, JString, JLong}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val J = graft.sources.Json
-            val files = W.writeColMapTable(s"tbl-$t", ids)
-            val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
-            val commits = files.keys.toSeq.collect {
-              case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
-            var lastMeta: Option[JObject] = None
-            var protoOk = false
-            var renameOnlyMeta = true
-            commits.foreach { case (ver, p) =>
-              new String(files(p), "UTF-8").split("\n")
-                .filter(_.nonEmpty).flatMap(J.parse).foreach {
-                  case o: JObject =>
-                    o.get("protocol").foreach {
-                      case pr: JObject =>
-                        protoOk =
-                          pr.get("minReaderVersion")
-                            .contains(JLong(2L)) &&
-                            pr.get("minWriterVersion")
-                              .contains(JLong(5L))
-                      case _ => ()
-                    }
-                    o.get("metaData").foreach {
-                      case m: JObject => lastMeta = Some(m)
-                      case _ => ()
-                    }
-                    if (ver >= 1 && (o.get("add").nonEmpty ||
-                      o.get("remove").nonEmpty))
-                      renameOnlyMeta = false
-                  case _ => ()
-                }
-            }
-            val res = for {
-              meta <- lastMeta
-              cfg <- meta.get("configuration")
-                .collect { case c: JObject => c }
-              if cfg.get("delta.columnMapping.mode")
-                .contains(JString("name"))
-              ss <- meta.get("schemaString")
-                .collect { case JString(x) => x }
-              schema <- J.parse(ss)
-              so <- Some(schema).collect { case o: JObject => o }
-              fields <- so.get("fields").collect {
-                case J.JArray(fs) => fs.collect {
-                  case f: JObject =>
-                    (f.get("name").collect { case JString(x) => x },
-                      f.get("metadata").collect { case md: JObject =>
-                        md.get(
-                          "delta.columnMapping.physicalName")
-                          .collect { case JString(x) => x }
-                      }.flatten)
-                }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val J = graft.sources.Json
+          val files = W.writeColMapTable(s"tbl-$t", ids)
+          val CommitRe = "^_delta_log/(\\d{20})\\.json$".r
+          val commits = files.keys.toSeq.collect {
+            case p @ CommitRe(v) => (v.toLong, p) }.sortBy(_._1)
+          var lastMeta: Option[JObject] = None
+          var protoOk = false
+          var renameOnlyMeta = true
+          commits.foreach { case (ver, p) =>
+            new String(files(p), "UTF-8").split("\n")
+              .filter(_.nonEmpty).flatMap(J.parse).foreach {
+                case o: JObject =>
+                  o.get("protocol").foreach {
+                    case pr: JObject =>
+                      protoOk =
+                        pr.get("minReaderVersion")
+                          .contains(JLong(2L)) &&
+                          pr.get("minWriterVersion")
+                            .contains(JLong(5L))
+                    case _ => ()
+                  }
+                  o.get("metaData").foreach {
+                    case m: JObject => lastMeta = Some(m)
+                    case _ => ()
+                  }
+                  if (ver >= 1 && (o.get("add").nonEmpty ||
+                    o.get("remove").nonEmpty))
+                    renameOnlyMeta = false
+                case _ => ()
               }
-              mapping = fields.collect {
-                case (Some(l), Some(ph)) => (l, ph)
-              }
-              if mapping.length == 2
-              (live, _) <- W.replayLive(files)
-            } yield {
-              val m = mapping.toMap
-              val renamedOk = m.contains("record_id") &&
-                !m.contains("rec_id")
-              var nRows = 0L; var idSum = 0L; var valSum = 0L
-              var ok = protoOk && live.length == 3
-              var logicalBlind = true
-              live.foreach { p =>
-                val b = files(p)
-                // the failure mode the feature creates: logical
-                // names resolve to NOTHING in the data file
-                if (P.columnLongs(b, "record_id").nonEmpty ||
-                  P.columnLongs(b, "rec_id").nonEmpty)
-                  logicalBlind = false
-                (P.columnLongs(b, m("record_id")),
-                  P.columnLongs(b, m("val"))) match {
-                  case (Some(rs), Some(vs))
-                    if rs.length == vs.length =>
-                    nRows += rs.length; idSum += rs.sum
-                    valSum += vs.sum
-                  case _ => ok = false
-                }
-              }
-              if (!ok) Nil
-              else Seq((t, live.length.toLong, nRows, idSum, valSum,
-                if (renamedOk) 1L else 0L,
-                if (logicalBlind) 1L else 0L,
-                if (renameOnlyMeta) 1L else 0L))
-            }
-            res.toSeq.flatten
           }
-          .toDF("table_id", "n_live", "n_rows", "id_sum", "val_sum",
+          val res = for {
+            meta <- lastMeta
+            cfg <- meta.get("configuration")
+              .collect { case c: JObject => c }
+            if cfg.get("delta.columnMapping.mode")
+              .contains(JString("name"))
+            ss <- meta.get("schemaString")
+              .collect { case JString(x) => x }
+            schema <- J.parse(ss)
+            so <- Some(schema).collect { case o: JObject => o }
+            fields <- so.get("fields").collect {
+              case J.JArray(fs) => fs.collect {
+                case f: JObject =>
+                  (f.get("name").collect { case JString(x) => x },
+                    f.get("metadata").collect { case md: JObject =>
+                      md.get(
+                        "delta.columnMapping.physicalName")
+                        .collect { case JString(x) => x }
+                    }.flatten)
+              }
+            }
+            mapping = fields.collect {
+              case (Some(l), Some(ph)) => (l, ph)
+            }
+            if mapping.length == 2
+            (live, _) <- W.replayLive(files)
+          } yield {
+            val m = mapping.toMap
+            val renamedOk = m.contains("record_id") &&
+              !m.contains("rec_id")
+            var nRows = 0L; var idSum = 0L; var valSum = 0L
+            var ok = protoOk && live.length == 3
+            var logicalBlind = true
+            live.foreach { p =>
+              val b = files(p)
+              // the failure mode the feature creates: logical
+              // names resolve to NOTHING in the data file
+              if (P.columnLongs(b, "record_id").nonEmpty ||
+                P.columnLongs(b, "rec_id").nonEmpty)
+                logicalBlind = false
+              (P.columnLongs(b, m("record_id")),
+                P.columnLongs(b, m("val"))) match {
+                case (Some(rs), Some(vs))
+                  if rs.length == vs.length =>
+                  nRows += rs.length; idSum += rs.sum
+                  valSum += vs.sum
+                case _ => ok = false
+              }
+            }
+            if (!ok) Nil
+            else Seq((t, live.length.toLong, nRows, idSum, valSum,
+              if (renamedOk) 1L else 0L,
+              if (logicalBlind) 1L else 0L,
+              if (renameOnlyMeta) 1L else 0L))
+          }
+          res.toSeq.flatten
+        }.toDF("table_id", "n_live", "n_rows", "id_sum", "val_sum",
             "renamed_ok", "logical_blind", "rename_zero_rewrite")
       },
       oracle = Some("""
@@ -6596,7 +6141,7 @@ object IngestionQueries {
             col("n_chars")))
           .as[(Long, String, Long)]
         val members = docs.mapPartitions(_.map { case (id, text, nChars) =>
-          val hex = graft.expressions.Md5Hashes.md5Hex(
+          val hex = md5Hex(
             text.getBytes("UTF-8"))
           val payload = hex * (1 + nChars % 7).toInt
           val rec = s"WARC/1.0\r\nWARC-Type: response\r\n" +
@@ -6680,13 +6225,11 @@ object IngestionQueries {
           .as[(Long, String, Long)]
           .mapPartitions(_.map { case (id, text, nChars) =>
             val (s1, _) = MediaGen.seeds(text)
-            def hex(in: String) = graft.expressions.Md5Hashes
-              .md5Hex(in.getBytes("UTF-8"))
             val k = (1 + nChars % 4).toInt
             val mtime = s1 % (1L << 30)
             graft.sources.Tar.TarBlob(id, graft.sources.Tar.write(Seq(
-              ("doc.txt", (hex(text) * k).getBytes("US-ASCII"), mtime),
-              ("meta.json", hex(text + ":meta").getBytes("US-ASCII"),
+              ("doc.txt", (md5Hex(text) * k).getBytes("US-ASCII"), mtime),
+              ("meta.json", md5Hex(text + ":meta").getBytes("US-ASCII"),
                 mtime + 1))))
           })
         graft.sources.Tar.entries(blobs).toDF()
@@ -6734,14 +6277,12 @@ object IngestionQueries {
           .as[(Long, String, Long)]
           .mapPartitions(_.map { case (id, text, nChars) =>
             val (s1, _) = MediaGen.seeds(text)
-            def hex(in: String) = graft.expressions.Md5Hashes
-              .md5Hex(in.getBytes("UTF-8"))
             val k = (1 + nChars % 4).toInt
             val mtime = s1 % (1L << 30)
             val shard = "data/shard-" + "s" * (95 + (s1 % 40).toInt) + ".jsonl"
             graft.sources.Tar.TarBlob(id, graft.sources.Tar.write(Seq(
-              (shard, (hex(text) * k).getBytes("US-ASCII"), mtime),
-              ("meta.json", hex(text + ":meta").getBytes("US-ASCII"),
+              (shard, (md5Hex(text) * k).getBytes("US-ASCII"), mtime),
+              ("meta.json", md5Hex(text + ":meta").getBytes("US-ASCII"),
                 mtime + 1))))
           })
         graft.sources.Tar.entries(blobs).toDF()
@@ -6794,13 +6335,11 @@ object IngestionQueries {
           .as[(Long, String, Long)]
           .mapPartitions(_.flatMap { case (id, text, nChars) =>
             val (s1, _) = MediaGen.seeds(text)
-            def hex(in: String) = graft.expressions.Md5Hashes
-              .md5Hex(in.getBytes("UTF-8"))
             val k = (1 + nChars % 4).toInt
             val mtime = s1 % (1L << 30)
             val tar = graft.sources.Tar.write(Seq(
-              ("doc.txt", (hex(text) * k).getBytes("US-ASCII"), mtime),
-              ("meta.json", hex(text + ":meta").getBytes("US-ASCII"),
+              ("doc.txt", (md5Hex(text) * k).getBytes("US-ASCII"), mtime),
+              ("meta.json", md5Hex(text + ":meta").getBytes("US-ASCII"),
                 mtime + 1)))
             val blob = graft.sources.Gzip.writeMember(tar, Some("doc.tar"))
             graft.sources.Gzip.members(blob).flatMap { m =>
@@ -7325,10 +6864,7 @@ object IngestionQueries {
   // parquet-mr on Spark-written files, dictionary routing, and the
   // damage shapes.
   private def parquetDefs: Seq[(String, QueryDef)] = {
-    val FixtureFiles = "/root/repo/fixtures/parquet_files.parquet"
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val FixtureFiles = Blobs.path("parquet_files.parquet")
 
     // (blob_id, file_bytes) for the current sf dir: content-derived
     // keys select the matching pyarrow-written files
@@ -7345,7 +6881,7 @@ object IngestionQueries {
         (blobId, md5Hex("parquet:" + codec + ":" +
           recs.map(t => s"${t._2}=${t._3}").mkString(",")))
       }.toDF("blob_id", "blob_key")
-      keys.join(broadcast(s.read.parquet(FixtureFiles)), "blob_key")
+      Blobs.join(keys, FixtureFiles)
         .select(col("blob_id"), col("file_bytes"))
         .as[(Long, Array[Byte])]
     }
@@ -7456,9 +6992,6 @@ object IngestionQueries {
   // 18-row fixture join, all decode in scan tasks; at lake scale the
   // blobs are files and both disappear.
   private def parquetDictDefs: Seq[(String, QueryDef)] = {
-    def md5Hex(x: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val codecName = Seq("snappy", "gzip", "none")
 
     def blobFiles(s: SparkSession, dir: String, fixture: String,
@@ -7479,7 +7012,7 @@ object IngestionQueries {
           recs.map(t => s"${t._2}=${Option(t._3).getOrElse("NULL")}")
             .mkString(",")))
       }.toDF("blob_id", "blob_key")
-      keys.join(broadcast(s.read.parquet(fixture)), "blob_key")
+      Blobs.join(keys, fixture)
         .select(col("blob_id"), col("file_bytes"))
         .as[(Long, Array[Byte])]
     }
@@ -7565,18 +7098,11 @@ object IngestionQueries {
     // layout. Values derive from doc_id alone; the oracle recomputes
     // every sum relationally (DATE arithmetic included) and takes only
     // the blob size from the fixture.
-    val TypedFixture = "/root/repo/fixtures/parquet_typed_files.parquet"
+    val TypedFixture = Blobs.path("parquet_typed_files.parquet")
     val q246 = "q246_parquet_typed_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("parquettyped:snappy:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(TypedFixture)), "blob_key")
+        Blobs.fixture(s, dir, "parquettyped:snappy:", TypedFixture)
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -7642,14 +7168,7 @@ object IngestionQueries {
     def typedBlobs(s: SparkSession,
                    dir: String): Dataset[(Long, Array[Byte])] = {
       import s.implicits._
-      val docs = Engine.table(s, dir, "documents")
-        .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-        .as[(Long, Long)]
-      val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-        val ids = it.map(_._2).toSeq.sorted
-        (blobId, md5Hex("parquettyped:snappy:" + ids.mkString(",")))
-      }.toDF("blob_id", "blob_key")
-      keys.join(broadcast(s.read.parquet(TypedFixture)), "blob_key")
+      Blobs.fixture(s, dir, "parquettyped:snappy:", TypedFixture)
         .select(col("blob_id"), col("file_bytes"))
         .as[(Long, Array[Byte])]
     }
@@ -7832,18 +7351,11 @@ object IngestionQueries {
     // claims. A forged index (ParquetSpec) fails closed at the
     // header-length cross-check.
     val PageIdxFixture =
-      "/root/repo/fixtures/parquet_pageindex_files.parquet"
+      Blobs.path("parquet_pageindex_files.parquet")
     val q263 = "q263_parquet_page_index_skip" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("pageindex:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(PageIdxFixture)), "blob_key")
+        Blobs.fixture(s, dir, "pageindex:", PageIdxFixture)
           .select(col("blob_id"), col("file_bytes"))
           .as[(Long, Array[Byte])]
           .flatMap { case (blobId, bytes) =>
@@ -8035,18 +7547,11 @@ object IngestionQueries {
     // engine must refuse it AT THE PAGE, so decoded_ok = 0 with zeroed
     // sums — an engine without verification emits the wrong sum and
     // fails the oracle.
-    val CrcFixture = "/root/repo/fixtures/parquet_crc_files.parquet"
+    val CrcFixture = Blobs.path("parquet_crc_files.parquet")
     val q273 = "q273_parquet_page_crc" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-          val ids = it.map(_._2).toSeq.sorted
-          (blobId, md5Hex("pqcrc:" + ids.mkString(",")))
-        }.toDF("blob_id", "blob_key")
-        keys.join(broadcast(s.read.parquet(CrcFixture)), "blob_key")
+        Blobs.fixture(s, dir, "pqcrc:", CrcFixture)
           .select(col("blob_id"), col("variant"), col("file_bytes"))
           .as[(Long, String, Array[Byte])]
           .map { case (blobId, variant, bytes) =>
@@ -8096,10 +7601,10 @@ object IngestionQueries {
       q269,
       q273,
       "q240_parquet_dict_snappy_scan" -> scanDef(
-        "/root/repo/fixtures/parquet_dict_files.parquet",
+        Blobs.path("parquet_dict_files.parquet"),
         "parquetdict1", headline = true),
       "q241_parquet_v2_page_scan" -> scanDef(
-        "/root/repo/fixtures/parquet_v2_files.parquet",
+        Blobs.path("parquet_v2_files.parquet"),
         "parquetdict2", headline = false),
       // q251 — parquet ZSTD pages (codec 6), the OTHER modern lake
       // codec (Spark and Iceberg deployments increasingly default to
@@ -8110,7 +7615,7 @@ object IngestionQueries {
       // with dictionary/plain by parity — the full zstd x page-layout
       // x encoding matrix in one oracle.
       "q251_parquet_zstd_scan" -> scanDef(
-        "/root/repo/fixtures/parquet_zstd_files.parquet",
+        Blobs.path("parquet_zstd_files.parquet"),
         "parquetzstd", headline = false,
         codecs = Seq("zstd", "zstd", "zstd")),
       // q252 — parquet LZ4_RAW pages (codec 7, pyarrow's `lz4`):
@@ -8121,7 +7626,7 @@ object IngestionQueries {
       // ParquetSpec pins BOTH lz4 flavors (raw blocks AND the legacy
       // codec-5 Hadoop framing Spark writes) from Spark-written files.
       "q252_parquet_lz4_scan" -> scanDef(
-        "/root/repo/fixtures/parquet_lz4_files.parquet",
+        Blobs.path("parquet_lz4_files.parquet"),
         "parquetlz4", headline = false,
         codecs = Seq("lz4", "lz4", "lz4")),
       // q255 — LIST columns, the 3-level repeated layout embedding
@@ -8139,15 +7644,7 @@ object IngestionQueries {
       "q255_parquet_list_scan" -> QueryDef(
         build = (s, dir) => {
           import s.implicits._
-          val docs = Engine.table(s, dir, "documents")
-            .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-            .as[(Long, Long)]
-          val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            (blobId, md5Hex("parquetlist:snappy:" + ids.mkString(",")))
-          }.toDF("blob_id", "blob_key")
-          keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/parquet_list_files.parquet")), "blob_key")
+          Blobs.fixture(s, dir, "parquetlist:snappy:", "parquet_list_files.parquet")
             .select(col("blob_id"), col("file_bytes"))
             .as[(Long, Array[Byte])]
             .flatMap { case (blobId, bytes) =>
@@ -8380,15 +7877,7 @@ object IngestionQueries {
       "q260_parquet_decimal_int96_scan" -> QueryDef(
         build = (s, dir) => {
           import s.implicits._
-          val docs = Engine.table(s, dir, "documents")
-            .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-            .as[(Long, Long)]
-          val keys = docs.groupByKey(_._1).mapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            (blobId, md5Hex("parquetdec:snappy:" + ids.mkString(",")))
-          }.toDF("blob_id", "blob_key")
-          keys.join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/parquet_dec_files.parquet")), "blob_key")
+          Blobs.fixture(s, dir, "parquetdec:snappy:", "parquet_dec_files.parquet")
             .select(col("blob_id"), col("file_bytes"))
             .as[(Long, Array[Byte])]
             .flatMap { case (blobId, bytes) =>
@@ -8445,7 +7934,7 @@ object IngestionQueries {
       // dictionary overflows, so a reader without these encodings
       // silently loses exactly the high-cardinality columns.
       "q253_parquet_delta_scan" -> scanDef(
-        "/root/repo/fixtures/parquet_delta_files.parquet",
+        Blobs.path("parquet_delta_files.parquet"),
         "parquetdelta", headline = false),
       q246, q248, q249)
   }
@@ -8481,7 +7970,7 @@ object IngestionQueries {
       Engine.fanOut(Engine.table(s, dir, "documents")
         .select(col("doc_id"), payloadCol.as("payload"))
         .withColumn("blob_key", md5(concat(lit("bz2:"), col("payload"))))
-        .join(broadcast(s.read.parquet(fixture)), "blob_key")
+        .transform(Blobs.join(_, fixture))
         .select(col("doc_id"), col("payload"), col("bz")))
         .as[(Long, String, Array[Byte])]
     }
@@ -8489,10 +7978,10 @@ object IngestionQueries {
       "q238_bz2_decode" -> QueryDef(
         build = (s, dir) => {
           import s.implicits._
-          joined(s, dir, "/root/repo/fixtures/bz2_blobs.parquet")
+          joined(s, dir, "bz2_blobs.parquet")
             .mapPartitions(_.flatMap { case (id, payload, bz) =>
               graft.sources.Bzip2.decompress(bz).map { dec =>
-                val md = graft.expressions.Md5Hashes.md5Hex(dec)
+                val md = md5Hex(dec)
                 Bz2DecodeRow(id, md, dec.length.toLong, bz.length.toLong,
                   new String(dec,
                     java.nio.charset.StandardCharsets.US_ASCII) == payload)
@@ -8518,7 +8007,7 @@ object IngestionQueries {
       "q239_tarbz2_walk" -> QueryDef(
         build = (s, dir) => {
           import s.implicits._
-          joined(s, dir, "/root/repo/fixtures/tarbz2_blobs.parquet")
+          joined(s, dir, "tarbz2_blobs.parquet")
             .mapPartitions(_.flatMap { case (id, _, bz) =>
               graft.sources.Bzip2.decompress(bz).toSeq.flatMap { tar =>
                 graft.sources.Tar.parse(id, tar).map(e =>
@@ -8579,11 +8068,11 @@ object IngestionQueries {
   // space, no codec in the loop) and takes only the blob SIZE from the
   // fixture. Per-doc key join is broadcast; decode is scan-task work.
   private def zstdDefs: Seq[(String, QueryDef)] = {
-    val Fixture = "/root/repo/fixtures/zstd_blobs.parquet"
-    val FullFixture = "/root/repo/fixtures/zstd_full_blobs.parquet"
-    val TarZstFixture = "/root/repo/fixtures/tarzst_blobs.parquet"
+    val Fixture = Blobs.path("zstd_blobs.parquet")
+    val FullFixture = Blobs.path("zstd_full_blobs.parquet")
+    val TarZstFixture = Blobs.path("tarzst_blobs.parquet")
     def hexOf(b: Array[Byte]): String =
-      graft.expressions.Md5Hashes.hexLower(b) // same string, no per-byte format
+      Md5Hashes.hexLower(b) // same string, no per-byte format
     Seq(
       "q243_zstd_census" -> QueryDef(
         build = (s, dir) => {
@@ -8595,7 +8084,7 @@ object IngestionQueries {
               expr("""md5('zstd:' || CAST(doc_id AS STRING) || ':' ||
                       CAST(n_chars AS STRING) || ':' ||
                       md5(coalesce(text, '')))""").as("blob_key"))
-            .join(broadcast(s.read.parquet(Fixture)), "blob_key")
+            .transform(Blobs.join(_, Fixture))
             .select(col("doc_id"), col("zst")))
             .as[(Long, Array[Byte])]
             .mapPartitions(_.flatMap { case (id, zst) =>
@@ -8676,7 +8165,7 @@ object IngestionQueries {
               expr("""md5('zstd:' || CAST(doc_id AS STRING) || ':' ||
                       CAST(n_chars AS STRING) || ':' ||
                       md5(coalesce(text, '')))""").as("blob_key"))
-            .join(broadcast(s.read.parquet(FullFixture)), "blob_key")
+            .transform(Blobs.join(_, FullFixture))
             .select(col("doc_id"), col("payload"), col("zst"))
             // NO fanOut (measured r18: 0.278 s -> 0.444 s with it at
             // sf0.1 — one small single-frame entropy decode per row is
@@ -8686,7 +8175,7 @@ object IngestionQueries {
               graft.sources.Zstd.walk(zst).toSeq.flatMap {
                 case Seq(f) if f.kind == "zstd" && f.decoded != null =>
                   val dec = f.decoded
-                  val md = graft.expressions.Md5Hashes.md5Hex(dec)
+                  val md = md5Hex(dec)
                   Seq(ZstdFullRow(id, md, dec.length.toLong,
                     zst.length.toLong, f.checksumState,
                     new String(dec,
@@ -8735,7 +8224,7 @@ object IngestionQueries {
                 .as("payload"))
             .withColumn("blob_key",
               md5(concat(lit("tarzst:"), col("payload"))))
-            .join(broadcast(s.read.parquet(TarZstFixture)), "blob_key")
+            .transform(Blobs.join(_, TarZstFixture))
             .select(col("doc_id"), col("zst"))
             // fanOut: level-19 entropy decode + tar walk per row
             .transform(Engine.fanOut)
@@ -8807,8 +8296,7 @@ object IngestionQueries {
                 .as("payload"))
             .withColumn("blob_key",
               md5(concat(lit("tarxz:"), col("payload"))))
-            .join(broadcast(s.read.parquet(
-              "/root/repo/fixtures/tarxz_blobs.parquet")), "blob_key")
+            .transform(Blobs.join(_, "tarxz_blobs.parquet"))
             .select(col("doc_id"), col("xz"))
             // fanOut: per-row LZMA2 decode + tar walk (q238 rationale)
             .transform(Engine.fanOut)

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Engine
+import graft.expressions.Md5Hashes
+import graft.expressions.Md5Hashes.{hash60Bytes, md5Hex}
 import org.apache.spark.sql.functions._
 
 /** Round-13 write-side queries: the engine's own columnar writers
@@ -20,10 +22,6 @@ import org.apache.spark.sql.functions._
   * principles on both ends.
   */
 object WriterQueries {
-
-  private def md5Hex(x: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** The q310 shard derivations, shared by build and twin: all
     * derived from doc_id so the same ids always yield the same file
@@ -48,66 +46,59 @@ object WriterQueries {
     "q310_parquet_write_corpus" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted.toArray
-            val n = ids.length
-            val W = graft.sources.ParquetWrite
-            def utf8(x: String) = x.getBytes("UTF-8")
-            val txts = ids.map(d => utf8("doc-" + d + "-" +
-              ("x" * (d % 17).toInt)))
-            val langDefs = ids.map(d => if (d % 7 == 0) 0 else 1)
-            val langs = ids.filter(_ % 7 != 0)
-              .map(d => utf8(Langs((d % 5).toInt)))
-            val scoreDefs = ids.map(d => if (d % 11 == 3) 0 else 1)
-            val scores = ids.filter(_ % 11 != 3).map(d => (d * d) % 997)
-            val fields = Seq(
-              W.Leaf("rec_id", 0, 2),
-              W.Leaf("txt", 0, 6, convertedType = 0),
-              W.Leaf("lang", 1, 6, convertedType = 0),
-              W.Leaf("score", 1, 2))
-            val bytes = W.writeFile(fields, Seq(
-              W.LeafData(Array.fill(n)(0), null, longs = ids),
-              W.LeafData(Array.fill(n)(0), null, bins = txts),
-              W.LeafData(langDefs, null, bins = langs, dict = true),
-              W.LeafData(scoreDefs, null, longs = scores)),
-              withStats = true)
-            val fileMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(bytes).map("%02x".format(_)).mkString
-            // decode-own-write law: every output number below comes
-            // from the engine's reader walking the bytes it just wrote
-            val P = graft.sources.Parquet
-            P.parseFooter(bytes).toSeq.flatMap { fm =>
-              def cells(path: String) = {
-                val (d, r) = fm.leafLevels(path)
-                fm.rowGroups.head.cols.find(_.path == path)
-                  .flatMap(c => P.readChunkCells(bytes, c, d, r))
-              }
-              (cells("rec_id"), cells("txt"), cells("lang"),
-                cells("score")) match {
-                case (Some(rc), Some(tc), Some(lc), Some(sc))
-                  if rc.longs.toSeq == ids.toSeq =>
-                  val idCol = fm.rowGroups.head.cols
-                    .find(_.path == "rec_id").get
-                  (idCol.minLong, idCol.maxLong) match {
-                    case (Some(mn), Some(mx)) =>
-                      Seq((blobId, fileMd5, bytes.length.toLong,
-                        rc.longs.length.toLong, rc.longs.sum,
-                        tc.bins.map(_.length.toLong).sum,
-                        lc.defs.count(_ == 0).toLong,
-                        lc.bins.map(_.length.toLong).sum,
-                        sc.defs.count(_ == 0).toLong,
-                        sc.longs.sum, mn, mx))
-                    case _ => Nil
-                  }
-                case _ => Nil
-              }
+        Blobs.byBlob(s, dir, 6) { (blobId, sortedIds) =>
+          val ids = sortedIds.toArray
+          val n = ids.length
+          val W = graft.sources.ParquetWrite
+          def utf8(x: String) = x.getBytes("UTF-8")
+          val txts = ids.map(d => utf8(Blobs.payload(d)))
+          val langDefs = ids.map(d => if (d % 7 == 0) 0 else 1)
+          val langs = ids.filter(_ % 7 != 0)
+            .map(d => utf8(Langs((d % 5).toInt)))
+          val scoreDefs = ids.map(d => if (d % 11 == 3) 0 else 1)
+          val scores = ids.filter(_ % 11 != 3).map(d => (d * d) % 997)
+          val fields = Seq(
+            W.Leaf("rec_id", 0, 2),
+            W.Leaf("txt", 0, 6, convertedType = 0),
+            W.Leaf("lang", 1, 6, convertedType = 0),
+            W.Leaf("score", 1, 2))
+          val bytes = W.writeFile(fields, Seq(
+            W.LeafData(Array.fill(n)(0), null, longs = ids),
+            W.LeafData(Array.fill(n)(0), null, bins = txts),
+            W.LeafData(langDefs, null, bins = langs, dict = true),
+            W.LeafData(scoreDefs, null, longs = scores)),
+            withStats = true)
+          val fileMd5 = md5Hex(bytes)
+          // decode-own-write law: every output number below comes
+          // from the engine's reader walking the bytes it just wrote
+          val P = graft.sources.Parquet
+          P.parseFooter(bytes).toSeq.flatMap { fm =>
+            def cells(path: String) = {
+              val (d, r) = fm.leafLevels(path)
+              fm.rowGroups.head.cols.find(_.path == path)
+                .flatMap(c => P.readChunkCells(bytes, c, d, r))
+            }
+            (cells("rec_id"), cells("txt"), cells("lang"),
+              cells("score")) match {
+              case (Some(rc), Some(tc), Some(lc), Some(sc))
+                if rc.longs.toSeq == ids.toSeq =>
+                val idCol = fm.rowGroups.head.cols
+                  .find(_.path == "rec_id").get
+                (idCol.minLong, idCol.maxLong) match {
+                  case (Some(mn), Some(mx)) =>
+                    Seq((blobId, fileMd5, bytes.length.toLong,
+                      rc.longs.length.toLong, rc.longs.sum,
+                      tc.bins.map(_.length.toLong).sum,
+                      lc.defs.count(_ == 0).toLong,
+                      lc.bins.map(_.length.toLong).sum,
+                      sc.defs.count(_ == 0).toLong,
+                      sc.longs.sum, mn, mx))
+                  case _ => Nil
+                }
+              case _ => Nil
             }
           }
-          .toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
+        }.toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
             "id_sum", "txt_len_sum", "n_lang_null", "lang_len_sum",
             "n_score_null", "score_sum", "stat_min_id", "stat_max_id")
       },
@@ -156,54 +147,48 @@ object WriterQueries {
     "q311_orc_write_corpus" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.OrcWrite
-            val cols = Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.OStringCol("txt", ids.map(d =>
-                Some("doc-" + d + "-" + ("x" * (d % 17).toInt)))),
-              W.OStringCol("lang", ids.map(d =>
-                if (d % 7 == 0) None
-                else Some(Langs((d % 5).toInt)))),
-              W.OLongCol("score", ids.map(d =>
-                if (d % 11 == 3) None else Some((d * d) % 997))),
-              W.ODoubleCol("ratio", ids.map(d =>
-                (d % 40).toDouble / 4.0)))
-            val bytes = W.writeTable(cols)
-            val snappy = W.writeTable(cols, compression = 2)
-            val O = graft.sources.Orc
-            O.parseTail(snappy).toSeq.flatMap { t =>
-              if (t.typeKinds != Seq(12, 4, 7, 7, 4, 6) ||
-                t.compression != O.CompSnappy) Nil
-              else {
-                val st = t.stripes.head
-                (O.stripeColumnLongsOpt(snappy, t, st, 1),
-                  O.stripeColumnStrings(snappy, t, st, 2),
-                  O.stripeColumnStringsOpt(snappy, t, st, 3),
-                  O.stripeColumnLongsOpt(snappy, t, st, 4),
-                  O.stripeColumnDoubles(snappy, t, st, 5)) match {
-                  case (Some((v1, l1)), Some(txts), Some((v3, s3)),
-                    Some((v4, l4)), Some(d5))
-                    if v1.forall(identity) && l1.toSeq == ids =>
-                    Seq((blobId, ids.length.toLong, l1.sum,
-                      txts.map(_.length.toLong).sum,
-                      v3.count(!_).toLong,
-                      s3.filter(_ != null).map(_.length.toLong).sum,
-                      v4.count(!_).toLong,
-                      v4.zip(l4).collect { case (true, x) => x }.sum,
-                      d5.sum,
-                      if (snappy.length < bytes.length) 1L else 0L))
-                  case _ => Nil
-                }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.OrcWrite
+          val cols = Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.OStringCol("txt", ids.map(d =>
+              Some(Blobs.payload(d)))),
+            W.OStringCol("lang", ids.map(d =>
+              if (d % 7 == 0) None
+              else Some(Langs((d % 5).toInt)))),
+            W.OLongCol("score", ids.map(d =>
+              if (d % 11 == 3) None else Some((d * d) % 997))),
+            W.ODoubleCol("ratio", ids.map(d =>
+              (d % 40).toDouble / 4.0)))
+          val bytes = W.writeTable(cols)
+          val snappy = W.writeTable(cols, compression = 2)
+          val O = graft.sources.Orc
+          O.parseTail(snappy).toSeq.flatMap { t =>
+            if (t.typeKinds != Seq(12, 4, 7, 7, 4, 6) ||
+              t.compression != O.CompSnappy) Nil
+            else {
+              val st = t.stripes.head
+              (O.stripeColumnLongsOpt(snappy, t, st, 1),
+                O.stripeColumnStrings(snappy, t, st, 2),
+                O.stripeColumnStringsOpt(snappy, t, st, 3),
+                O.stripeColumnLongsOpt(snappy, t, st, 4),
+                O.stripeColumnDoubles(snappy, t, st, 5)) match {
+                case (Some((v1, l1)), Some(txts), Some((v3, s3)),
+                  Some((v4, l4)), Some(d5))
+                  if v1.forall(identity) && l1.toSeq == ids =>
+                  Seq((blobId, ids.length.toLong, l1.sum,
+                    txts.map(_.length.toLong).sum,
+                    v3.count(!_).toLong,
+                    s3.filter(_ != null).map(_.length.toLong).sum,
+                    v4.count(!_).toLong,
+                    v4.zip(l4).collect { case (true, x) => x }.sum,
+                    d5.sum,
+                    if (snappy.length < bytes.length) 1L else 0L))
+                case _ => Nil
               }
             }
           }
-          .toDF("blob_id", "n_rows", "id_sum", "txt_len_sum",
+        }.toDF("blob_id", "n_rows", "id_sum", "txt_len_sum",
             "n_lang_null", "lang_len_sum", "n_score_null", "score_sum",
             "ratio_sum", "compressed_smaller")
       },
@@ -244,47 +229,34 @@ object WriterQueries {
     "q312_deflate_own_encoder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d =>
-              "doc-" + d + "-" + ("x" * (d % 17).toInt) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val m = graft.sources.Gzip.writeMemberOwn(data)
-            val gzMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(m).map("%02x".format(_)).mkString
-            // decode-own-write: the member walk must reproduce the
-            // payload exactly (CRC verified inside)
-            val ms = graft.sources.Gzip.members(m)
-            // parquet codec=2 through the same encoder, own-read back
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val fields = Seq(W.Leaf("rec_id", 0, 2))
-            val ld = Seq(W.LeafData(Array.fill(ids.length)(0), null,
-              longs = ids.toArray))
-            val pgz = W.writeFile(fields, ld, codec = 2)
-            val pplain = W.writeFile(fields, ld, codec = 0)
-            val pqOk = P.columnLongs(pgz, "rec_id")
-              .exists(_.toSeq == ids)
-            if (ms.length == 1 && ms.head.crc_ok &&
-              java.util.Arrays.equals(ms.head.data, data) && pqOk)
-              Seq((blobId, gzMd5, m.length.toLong,
-                ms.head.data.length.toLong,
-                h60(new String(ms.head.data, "UTF-8")),
-                if (m.length.toLong * 2 < data.length) 1L else 0L,
-                if (pgz.length < pplain.length) 1L else 0L))
-            else Nil
-          }
-          .toDF("blob_id", "gz_md5", "gz_len", "orig_len",
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d =>
+            Blobs.payload(d) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val m = graft.sources.Gzip.writeMemberOwn(data)
+          val gzMd5 = md5Hex(m)
+          // decode-own-write: the member walk must reproduce the
+          // payload exactly (CRC verified inside)
+          val ms = graft.sources.Gzip.members(m)
+          // parquet codec=2 through the same encoder, own-read back
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val fields = Seq(W.Leaf("rec_id", 0, 2))
+          val ld = Seq(W.LeafData(Array.fill(ids.length)(0), null,
+            longs = ids.toArray))
+          val pgz = W.writeFile(fields, ld, codec = 2)
+          val pplain = W.writeFile(fields, ld, codec = 0)
+          val pqOk = P.columnLongs(pgz, "rec_id")
+            .exists(_.toSeq == ids)
+          if (ms.length == 1 && ms.head.crc_ok &&
+            java.util.Arrays.equals(ms.head.data, data) && pqOk)
+            Seq((blobId, gzMd5, m.length.toLong,
+              ms.head.data.length.toLong,
+              hash60Bytes(new String(ms.head.data, "UTF-8").getBytes("UTF-8")),
+              if (m.length.toLong * 2 < data.length) 1L else 0L,
+              if (pgz.length < pplain.length) 1L else 0L))
+          else Nil
+        }.toDF("blob_id", "gz_md5", "gz_len", "orig_len",
             "payload_hash", "beats_half", "pq_gz_smaller")
       },
       oracle = Some(s"""
@@ -326,97 +298,91 @@ object WriterQueries {
     "q313_parquet_write_pageindex_bloom" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted.toArray
-            val n = ids.length
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val fields = Seq(W.Leaf("rec_id", 0, 2),
-              W.Leaf("val", 0, 2))
-            val data = Seq(
-              W.LeafData(Array.fill(n)(0), null, longs = ids),
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.map(d => (d * 17) % 1009)))
-            val pr = math.max(1, n / 8)
-            val bytes = W.writeFile(fields, data, withStats = true,
-              pageRows = pr, withIndex = true, bloomCols = Set(0))
-            val fileMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(bytes).map("%02x".format(_)).mkString
-            val res = for {
-              fm <- P.parseFooter(bytes)
-              idCol <- fm.rowGroups.head.cols.find(_.path == "rec_id")
-              valCol <- fm.rowGroups.head.cols.find(_.path == "val")
-              oi <- P.parseOffsetIndex(bytes, idCol)
-              oiV <- P.parseOffsetIndex(bytes, valCol)
-              ci <- P.parseColumnIndex(bytes, idCol)
-              bloom <- P.parseBloomFilter(bytes, idCol)
-              if ci.nullPages.length == oi.length
-            } yield {
-              val probePos = Seq(0, (n - 1) / 4, (n - 1) / 2,
-                3 * (n - 1) / 4, n - 1).distinct
-              var foundSum = 0L
-              var pagesDecoded = 0L
-              var ok = true
-              probePos.foreach { pos =>
-                val probe = ids(pos)
-                if (!bloom.mightContainLong(probe)) ok = false
-                else {
-                  // index-selected pages ONLY: [min,max] containment
-                  val sel = oi.indices.filter { i =>
-                    !ci.nullPages(i) &&
-                    ci.minLong(i).exists(_ <= probe) &&
-                    ci.maxLong(i).exists(_ >= probe)
-                  }
-                  pagesDecoded += sel.length
-                  var hit = false
-                  sel.foreach { i =>
-                    P.readPageCells(bytes, oi(i), idCol) match {
-                      case Some(cells) =>
-                        val at = cells.longs.indexOf(probe)
-                        if (at >= 0) {
-                          // the matching val page row: same page index
-                          // (both chunks split on the same records)
-                          P.readPageCells(bytes, oiV(i), valCol)
-                            .foreach { vc =>
-                              foundSum += vc.longs(at); hit = true
-                            }
-                        }
-                      case None => ok = false
-                    }
-                  }
-                  if (!hit) ok = false
-                }
-              }
-              // absent probes: bloom-negative or zero pages selected
-              val mx = ids.last
-              var bloomNeg = 0L
-              var absentPages = 0L
-              (1L to 20L).foreach { k =>
-                val probe = mx + k
-                if (!bloom.mightContainLong(probe)) bloomNeg += 1
-                else absentPages += oi.indices.count { i =>
+        Blobs.byBlob(s, dir, 6) { (blobId, sortedIds) =>
+          val ids = sortedIds.toArray
+          val n = ids.length
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val fields = Seq(W.Leaf("rec_id", 0, 2),
+            W.Leaf("val", 0, 2))
+          val data = Seq(
+            W.LeafData(Array.fill(n)(0), null, longs = ids),
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.map(d => (d * 17) % 1009)))
+          val pr = math.max(1, n / 8)
+          val bytes = W.writeFile(fields, data, withStats = true,
+            pageRows = pr, withIndex = true, bloomCols = Set(0))
+          val fileMd5 = md5Hex(bytes)
+          val res = for {
+            fm <- P.parseFooter(bytes)
+            idCol <- fm.rowGroups.head.cols.find(_.path == "rec_id")
+            valCol <- fm.rowGroups.head.cols.find(_.path == "val")
+            oi <- P.parseOffsetIndex(bytes, idCol)
+            oiV <- P.parseOffsetIndex(bytes, valCol)
+            ci <- P.parseColumnIndex(bytes, idCol)
+            bloom <- P.parseBloomFilter(bytes, idCol)
+            if ci.nullPages.length == oi.length
+          } yield {
+            val probePos = Seq(0, (n - 1) / 4, (n - 1) / 2,
+              3 * (n - 1) / 4, n - 1).distinct
+            var foundSum = 0L
+            var pagesDecoded = 0L
+            var ok = true
+            probePos.foreach { pos =>
+              val probe = ids(pos)
+              if (!bloom.mightContainLong(probe)) ok = false
+              else {
+                // index-selected pages ONLY: [min,max] containment
+                val sel = oi.indices.filter { i =>
                   !ci.nullPages(i) &&
                   ci.minLong(i).exists(_ <= probe) &&
                   ci.maxLong(i).exists(_ >= probe)
                 }
+                pagesDecoded += sel.length
+                var hit = false
+                sel.foreach { i =>
+                  P.readPageCells(bytes, oi(i), idCol) match {
+                    case Some(cells) =>
+                      val at = cells.longs.indexOf(probe)
+                      if (at >= 0) {
+                        // the matching val page row: same page index
+                        // (both chunks split on the same records)
+                        P.readPageCells(bytes, oiV(i), valCol)
+                          .foreach { vc =>
+                            foundSum += vc.longs(at); hit = true
+                          }
+                      }
+                    case None => ok = false
+                  }
+                }
+                if (!hit) ok = false
               }
-              // forged index entry must fail closed
-              val forged = oi.head.copy(offset = oi.head.offset + 1)
-              val forgedFail =
-                if (P.readPageCells(bytes, forged, idCol).isEmpty) 1L
-                else 0L
-              if (!ok) Nil
-              else Seq((blobId, fileMd5, bytes.length.toLong,
-                oi.length.toLong, probePos.length.toLong, foundSum,
-                pagesDecoded, bloomNeg, absentPages, forgedFail))
             }
-            res.toSeq.flatten
+            // absent probes: bloom-negative or zero pages selected
+            val mx = ids.last
+            var bloomNeg = 0L
+            var absentPages = 0L
+            (1L to 20L).foreach { k =>
+              val probe = mx + k
+              if (!bloom.mightContainLong(probe)) bloomNeg += 1
+              else absentPages += oi.indices.count { i =>
+                !ci.nullPages(i) &&
+                ci.minLong(i).exists(_ <= probe) &&
+                ci.maxLong(i).exists(_ >= probe)
+              }
+            }
+            // forged index entry must fail closed
+            val forged = oi.head.copy(offset = oi.head.offset + 1)
+            val forgedFail =
+              if (P.readPageCells(bytes, forged, idCol).isEmpty) 1L
+              else 0L
+            if (!ok) Nil
+            else Seq((blobId, fileMd5, bytes.length.toLong,
+              oi.length.toLong, probePos.length.toLong, foundSum,
+              pagesDecoded, bloomNeg, absentPages, forgedFail))
           }
-          .toDF("blob_id", "file_md5", "file_bytes_len", "n_pages",
+          res.toSeq.flatten
+        }.toDF("blob_id", "file_md5", "file_bytes_len", "n_pages",
             "n_probes", "found_sum", "pages_decoded", "n_bloom_neg",
             "absent_pages", "forged_fail")
       },
@@ -475,109 +441,102 @@ object WriterQueries {
     "q314_delta_checkpoint_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val bkey = md5Hex("deltackptw:" + ids.mkString(","))
-            val D = graft.sources.DeltaWrite
-            val J = graft.sources.Json
-            val P = graft.sources.Parquet
-            val bundle = D.writeTableWithCheckpoint(bkey, ids)
-            val ckpt =
-              bundle("_delta_log/00000000000000000001.checkpoint.parquet")
-            val ckptMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(ckpt).map("%02x".format(_)).mkString
-            def jstr(o: J.JObject, k: String): Option[String] =
-              o.get(k).collect { case J.JString(x) => x }
-            val res = for {
-              lc <- J.parse(new String(
-                bundle("_delta_log/_last_checkpoint"), "UTF-8").trim)
-              ver <- lc match {
-                case o: J.JObject =>
-                  o.get("version").collect { case J.JLong(v) => v }
-                case _ => None
-              }
-              acts <- graft.sources.DeltaCheckpoint.parse(ckpt)
-            } yield {
-              // path -> (version, isAdd, part); checkpoint state first
-              val st = scala.collection.mutable.LinkedHashMap
-                .empty[String, (Long, Boolean, String)]
-              acts.foreach { a =>
-                if (a.addPath != null)
-                  st(a.addPath) =
-                    (ver, true, a.addParts.getOrElse("part", null))
-                else if (a.removePath != null)
-                  st(a.removePath) = (ver, false, null)
-              }
-              // surviving JSON tail strictly after the checkpoint,
-              // through the engine's own JSON parser
-              val LogName = "_delta_log/(\\d{20})\\.json".r
-              val tail = bundle.keys.toSeq.collect {
-                case k @ LogName(v) if v.toLong > ver => (v.toLong, k)
-              }.sortBy(_._1)
-              val jsonLive = scala.collection.mutable.Set.empty[String]
-              var ok = true
-              tail.foreach { case (v, k) =>
-                new String(bundle(k), "UTF-8").split("\n")
-                  .filter(_.trim.nonEmpty).foreach { line =>
-                    J.parse(line) match {
-                      case Some(o: J.JObject) =>
-                        (o.get("add"), o.get("remove")) match {
-                          case (Some(a: J.JObject), _) =>
-                            jstr(a, "path") match {
-                              case Some(p) =>
-                                val part = a.get("partitionValues")
-                                  .collect { case pv: J.JObject => pv }
-                                  .flatMap(jstr(_, "part")).orNull
-                                st(p) = (v, true, part)
-                                jsonLive += p
-                              case None => ok = false
-                            }
-                          case (_, Some(r: J.JObject)) =>
-                            jstr(r, "path") match {
-                              case Some(p) =>
-                                st(p) = (v, false, null)
-                                jsonLive -= p
-                              case None => ok = false
-                            }
-                          case _ => ()
-                        }
-                      case _ => ok = false
-                    }
-                  }
-              }
-              val live = st.toSeq.collect {
-                case (p, (_, true, part)) => (p, part)
-              }.sortBy(_._1)
-              val misses =
-                live.map(_._1).count(p => !jsonLive.contains(p))
-              var nRows = 0L; var idSum = 0L
-              var valSum = 0L; var partSum = 0L
-              live.foreach { case (p, part) =>
-                if (part == null) ok = false
-                else {
-                  partSum += part.toLong
-                  (P.columnLongs(bundle(p), "rec_id"),
-                    P.columnLongs(bundle(p), "val")) match {
-                    case (Some(rs), Some(vs)) if rs.length == vs.length =>
-                      nRows += rs.length
-                      idSum += rs.sum
-                      valSum += vs.sum
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val bkey = Blobs.key("deltackptw:", ids)
+          val D = graft.sources.DeltaWrite
+          val J = graft.sources.Json
+          val P = graft.sources.Parquet
+          val bundle = D.writeTableWithCheckpoint(bkey, ids)
+          val ckpt =
+            bundle("_delta_log/00000000000000000001.checkpoint.parquet")
+          val ckptMd5 = md5Hex(ckpt)
+          def jstr(o: J.JObject, k: String): Option[String] =
+            o.get(k).collect { case J.JString(x) => x }
+          val res = for {
+            lc <- J.parse(new String(
+              bundle("_delta_log/_last_checkpoint"), "UTF-8").trim)
+            ver <- lc match {
+              case o: J.JObject =>
+                o.get("version").collect { case J.JLong(v) => v }
+              case _ => None
+            }
+            acts <- graft.sources.DeltaCheckpoint.parse(ckpt)
+          } yield {
+            // path -> (version, isAdd, part); checkpoint state first
+            val st = scala.collection.mutable.LinkedHashMap
+              .empty[String, (Long, Boolean, String)]
+            acts.foreach { a =>
+              if (a.addPath != null)
+                st(a.addPath) =
+                  (ver, true, a.addParts.getOrElse("part", null))
+              else if (a.removePath != null)
+                st(a.removePath) = (ver, false, null)
+            }
+            // surviving JSON tail strictly after the checkpoint,
+            // through the engine's own JSON parser
+            val LogName = "_delta_log/(\\d{20})\\.json".r
+            val tail = bundle.keys.toSeq.collect {
+              case k @ LogName(v) if v.toLong > ver => (v.toLong, k)
+            }.sortBy(_._1)
+            val jsonLive = scala.collection.mutable.Set.empty[String]
+            var ok = true
+            tail.foreach { case (v, k) =>
+              new String(bundle(k), "UTF-8").split("\n")
+                .filter(_.trim.nonEmpty).foreach { line =>
+                  J.parse(line) match {
+                    case Some(o: J.JObject) =>
+                      (o.get("add"), o.get("remove")) match {
+                        case (Some(a: J.JObject), _) =>
+                          jstr(a, "path") match {
+                            case Some(p) =>
+                              val part = a.get("partitionValues")
+                                .collect { case pv: J.JObject => pv }
+                                .flatMap(jstr(_, "part")).orNull
+                              st(p) = (v, true, part)
+                              jsonLive += p
+                            case None => ok = false
+                          }
+                        case (_, Some(r: J.JObject)) =>
+                          jstr(r, "path") match {
+                            case Some(p) =>
+                              st(p) = (v, false, null)
+                              jsonLive -= p
+                            case None => ok = false
+                          }
+                        case _ => ()
+                      }
                     case _ => ok = false
                   }
                 }
-              }
-              if (!ok) Nil
-              else Seq((blobId, ckptMd5, ckpt.length.toLong,
-                acts.length.toLong, live.length.toLong, nRows, idSum,
-                valSum, partSum, misses.toLong))
             }
-            res.toSeq.flatten
+            val live = st.toSeq.collect {
+              case (p, (_, true, part)) => (p, part)
+            }.sortBy(_._1)
+            val misses =
+              live.map(_._1).count(p => !jsonLive.contains(p))
+            var nRows = 0L; var idSum = 0L
+            var valSum = 0L; var partSum = 0L
+            live.foreach { case (p, part) =>
+              if (part == null) ok = false
+              else {
+                partSum += part.toLong
+                (P.columnLongs(bundle(p), "rec_id"),
+                  P.columnLongs(bundle(p), "val")) match {
+                  case (Some(rs), Some(vs)) if rs.length == vs.length =>
+                    nRows += rs.length
+                    idSum += rs.sum
+                    valSum += vs.sum
+                  case _ => ok = false
+                }
+              }
+            }
+            if (!ok) Nil
+            else Seq((blobId, ckptMd5, ckpt.length.toLong,
+              acts.length.toLong, live.length.toLong, nRows, idSum,
+              valSum, partSum, misses.toLong))
           }
-          .toDF("blob_id", "ckpt_md5", "ckpt_len", "n_ckpt_acts",
+          res.toSeq.flatten
+        }.toDF("blob_id", "ckpt_md5", "ckpt_len", "n_ckpt_acts",
             "n_live", "n_rows", "id_sum", "val_sum", "part_sum",
             "json_only_misses")
       },
@@ -623,42 +582,30 @@ object WriterQueries {
     "q316_zstd_own_encoder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d =>
-              "doc-" + d + "-" + ("x" * (d % 17).toInt) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val Z = graft.sources.Zstd
-            val z = graft.sources.ZstdEncode.compress(data)
-            val stored = Z.frameStored(data)
-            val ownOk = Z.walk(z) match {
-              case Some(Seq(f)) => f.kind == "zstd" &&
-                f.checksumState == "ok" &&
-                java.util.Arrays.equals(f.decoded, data)
-              case _ => false
-            }
-            val jniOk = scala.util.Try(
-              com.github.luben.zstd.Zstd.decompress(z,
-                math.max(1, data.length))).toOption
-              .exists(java.util.Arrays.equals(_, data))
-            if (!ownOk) Nil
-            else Seq((blobId, data.length.toLong, h60(payload),
-              ((data.length + 65535) / 65536).toLong,
-              if (z.length * 2 < data.length) 1L else 0L,
-              if (z.length < stored.length) 1L else 0L,
-              if (jniOk) 1L else 0L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d =>
+            Blobs.payload(d) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val Z = graft.sources.Zstd
+          val z = graft.sources.ZstdEncode.compress(data)
+          val stored = Z.frameStored(data)
+          val ownOk = Z.walk(z) match {
+            case Some(Seq(f)) => f.kind == "zstd" &&
+              f.checksumState == "ok" &&
+              java.util.Arrays.equals(f.decoded, data)
+            case _ => false
           }
-          .toDF("blob_id", "orig_len", "payload_hash", "n_blocks",
+          val jniOk = scala.util.Try(
+            com.github.luben.zstd.Zstd.decompress(z,
+              math.max(1, data.length))).toOption
+            .exists(java.util.Arrays.equals(_, data))
+          if (!ownOk) Nil
+          else Seq((blobId, data.length.toLong, hash60Bytes(data),
+            ((data.length + 65535) / 65536).toLong,
+            if (z.length * 2 < data.length) 1L else 0L,
+            if (z.length < stored.length) 1L else 0L,
+            if (jniOk) 1L else 0L))
+        }.toDF("blob_id", "orig_len", "payload_hash", "n_blocks",
             "beats_half", "beats_stored", "jni_ok")
       },
       oracle = Some(s"""
@@ -697,42 +644,30 @@ object WriterQueries {
     "q320_zstd_huffman_literals" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def md5x(x: String): String =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-            def h60(x: String): Long =
-              java.lang.Long.parseLong(md5x(x).take(15), 16)
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d => md5x("h:" + d) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val z = graft.sources.ZstdEncode.compress(data)
-            val frame = graft.sources.Zstd.walk(z) match {
-              case Some(Seq(f)) if f.kind == "zstd" &&
-                f.checksumState == "ok" &&
-                java.util.Arrays.equals(f.decoded, data) => Some(f)
-              case _ => None
-            }
-            val jniOk = scala.util.Try(
-              com.github.luben.zstd.Zstd.decompress(z,
-                math.max(1, data.length))).toOption
-              .exists(java.util.Arrays.equals(_, data))
-            frame match {
-              case Some(f) =>
-                Seq((blobId, data.length.toLong, h60(payload),
-                  f.compBlocks.toLong,
-                  if (z.length.toLong * 3 < data.length.toLong * 2) 1L
-                  else 0L,
-                  if (jniOk) 1L else 0L))
-              case None => Nil
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d => md5Hex("h:" + d) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val z = graft.sources.ZstdEncode.compress(data)
+          val frame = graft.sources.Zstd.walk(z) match {
+            case Some(Seq(f)) if f.kind == "zstd" &&
+              f.checksumState == "ok" &&
+              java.util.Arrays.equals(f.decoded, data) => Some(f)
+            case _ => None
           }
-          .toDF("blob_id", "orig_len", "payload_hash",
+          val jniOk = scala.util.Try(
+            com.github.luben.zstd.Zstd.decompress(z,
+              math.max(1, data.length))).toOption
+            .exists(java.util.Arrays.equals(_, data))
+          frame match {
+            case Some(f) =>
+              Seq((blobId, data.length.toLong, hash60Bytes(data),
+                f.compBlocks.toLong,
+                if (z.length.toLong * 3 < data.length.toLong * 2) 1L
+                else 0L,
+                if (jniOk) 1L else 0L))
+            case None => Nil
+          }
+        }.toDF("blob_id", "orig_len", "payload_hash",
             "n_comp_blocks", "huff_wins", "jni_ok")
       },
       oracle = Some(s"""
@@ -769,68 +704,61 @@ object WriterQueries {
     "q321_parquet_write_pagev2" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted.toArray
-            val n = ids.length
-            val W = graft.sources.ParquetWrite
-            def utf8(x: String) = x.getBytes("UTF-8")
-            val txts = ids.map(d => utf8("doc-" + d + "-" +
-              ("x" * (d % 17).toInt)))
-            val langDefs = ids.map(d => if (d % 7 == 0) 0 else 1)
-            val langs = ids.filter(_ % 7 != 0)
-              .map(d => utf8(Langs((d % 5).toInt)))
-            val scoreDefs = ids.map(d => if (d % 11 == 3) 0 else 1)
-            val scores = ids.filter(_ % 11 != 3).map(d => (d * d) % 997)
-            val fields = Seq(
-              W.Leaf("rec_id", 0, 2),
-              W.Leaf("txt", 0, 6, convertedType = 0),
-              W.Leaf("lang", 1, 6, convertedType = 0),
-              W.Leaf("score", 1, 2))
-            val data = Seq(
-              W.LeafData(Array.fill(n)(0), null, longs = ids),
-              W.LeafData(Array.fill(n)(0), null, bins = txts),
-              W.LeafData(langDefs, null, bins = langs, dict = true),
-              W.LeafData(scoreDefs, null, longs = scores))
-            val pr = math.max(1, n / 4)
-            val bytes = W.writeFile(fields, data, withStats = true,
-              pageRows = pr, pageV2 = true)
-            val snappy = W.writeFile(fields, data, codec = 1,
-              withStats = true, pageRows = pr, pageV2 = true)
-            val fileMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(bytes).map("%02x".format(_)).mkString
-            val P = graft.sources.Parquet
-            def decode(b: Array[Byte]) =
-              P.parseFooter(b).flatMap { fm =>
-                def cells(path: String) = {
-                  val (d, r) = fm.leafLevels(path)
-                  fm.rowGroups.head.cols.find(_.path == path)
-                    .flatMap(c => P.readChunkCells(b, c, d, r))
-                }
-                (cells("rec_id"), cells("txt"), cells("lang"),
-                  cells("score")) match {
-                  case (Some(rc), Some(tc), Some(lc), Some(sc))
-                    if rc.longs.toSeq == ids.toSeq =>
-                    Some((rc.longs.length.toLong, rc.longs.sum,
-                      tc.bins.map(_.length.toLong).sum,
-                      lc.defs.count(_ == 0).toLong,
-                      lc.bins.map(_.length.toLong).sum,
-                      sc.defs.count(_ == 0).toLong, sc.longs.sum))
-                  case _ => None
-                }
+        Blobs.byBlob(s, dir, 6) { (blobId, sortedIds) =>
+          val ids = sortedIds.toArray
+          val n = ids.length
+          val W = graft.sources.ParquetWrite
+          def utf8(x: String) = x.getBytes("UTF-8")
+          val txts = ids.map(d => utf8(Blobs.payload(d)))
+          val langDefs = ids.map(d => if (d % 7 == 0) 0 else 1)
+          val langs = ids.filter(_ % 7 != 0)
+            .map(d => utf8(Langs((d % 5).toInt)))
+          val scoreDefs = ids.map(d => if (d % 11 == 3) 0 else 1)
+          val scores = ids.filter(_ % 11 != 3).map(d => (d * d) % 997)
+          val fields = Seq(
+            W.Leaf("rec_id", 0, 2),
+            W.Leaf("txt", 0, 6, convertedType = 0),
+            W.Leaf("lang", 1, 6, convertedType = 0),
+            W.Leaf("score", 1, 2))
+          val data = Seq(
+            W.LeafData(Array.fill(n)(0), null, longs = ids),
+            W.LeafData(Array.fill(n)(0), null, bins = txts),
+            W.LeafData(langDefs, null, bins = langs, dict = true),
+            W.LeafData(scoreDefs, null, longs = scores))
+          val pr = math.max(1, n / 4)
+          val bytes = W.writeFile(fields, data, withStats = true,
+            pageRows = pr, pageV2 = true)
+          val snappy = W.writeFile(fields, data, codec = 1,
+            withStats = true, pageRows = pr, pageV2 = true)
+          val fileMd5 = md5Hex(bytes)
+          val P = graft.sources.Parquet
+          def decode(b: Array[Byte]) =
+            P.parseFooter(b).flatMap { fm =>
+              def cells(path: String) = {
+                val (d, r) = fm.leafLevels(path)
+                fm.rowGroups.head.cols.find(_.path == path)
+                  .flatMap(c => P.readChunkCells(b, c, d, r))
               }
-            (decode(bytes), decode(snappy)) match {
-              case (Some(t1), Some(t2)) if t1 == t2 =>
-                Seq((blobId, fileMd5, bytes.length.toLong,
-                  t1._1, t1._2, t1._3, t1._4, t1._5, t1._6, t1._7,
-                  if (snappy.length < bytes.length) 1L else 0L))
-              case _ => Nil
+              (cells("rec_id"), cells("txt"), cells("lang"),
+                cells("score")) match {
+                case (Some(rc), Some(tc), Some(lc), Some(sc))
+                  if rc.longs.toSeq == ids.toSeq =>
+                  Some((rc.longs.length.toLong, rc.longs.sum,
+                    tc.bins.map(_.length.toLong).sum,
+                    lc.defs.count(_ == 0).toLong,
+                    lc.bins.map(_.length.toLong).sum,
+                    sc.defs.count(_ == 0).toLong, sc.longs.sum))
+                case _ => None
+              }
             }
+          (decode(bytes), decode(snappy)) match {
+            case (Some(t1), Some(t2)) if t1 == t2 =>
+              Seq((blobId, fileMd5, bytes.length.toLong,
+                t1._1, t1._2, t1._3, t1._4, t1._5, t1._6, t1._7,
+                if (snappy.length < bytes.length) 1L else 0L))
+            case _ => Nil
           }
-          .toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
+        }.toDF("blob_id", "file_md5", "file_bytes_len", "n_rows",
             "id_sum", "txt_len_sum", "n_lang_null", "lang_len_sum",
             "n_score_null", "score_sum", "snappy_smaller")
       },
@@ -878,57 +806,51 @@ object WriterQueries {
     "q322_orc_write_dictionary" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.OrcWrite
-            val O = graft.sources.Orc
-            def cat(d: Long) = "cat-" + (d % 7)
-            val colsDict = Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.ODictStringCol("cat", ids.map(d => Some(cat(d)))),
-              W.ODictStringCol("lang", ids.map(d =>
-                if (d % 7 == 0) None
-                else Some(Langs((d % 5).toInt)))))
-            val colsDirect = Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.OStringCol("cat", ids.map(d => Some(cat(d)))),
-              W.OStringCol("lang", ids.map(d =>
-                if (d % 7 == 0) None
-                else Some(Langs((d % 5).toInt)))))
-            val bytes = W.writeTable(colsDict)
-            val direct = W.writeTable(colsDirect)
-            val res = for {
-              t <- O.parseTail(bytes)
-              if t.typeKinds == Seq(12, 4, 7, 7)
-              st = t.stripes.head
-              sf <- O.parseStripeFooter(bytes, t, st)
-              (v1, l1) <- O.stripeColumnLongsOpt(bytes, t, st, 1)
-              if v1.forall(identity) && l1.toSeq == ids
-              cats <- O.stripeColumnStrings(bytes, t, st, 2)
-              if cats.toSeq == ids.map(cat)
-              (v3, s3) <- O.stripeColumnStringsOpt(bytes, t, st, 3)
-            } yield {
-              val nDict = sf.encodings.count(_._1 == 3)
-              val langsOk = v3.zip(s3).zip(ids).forall {
-                case ((valid, v), d) =>
-                  if (d % 7 == 0) !valid
-                  else valid && v == Langs((d % 5).toInt)
-              }
-              if (!langsOk) Nil
-              else Seq((blobId, ids.length.toLong,
-                cats.map(_.length.toLong).sum,
-                v3.count(!_).toLong,
-                s3.filter(_ != null).map(_.length.toLong).sum,
-                nDict.toLong,
-                if (bytes.length < direct.length) 1L else 0L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.OrcWrite
+          val O = graft.sources.Orc
+          def cat(d: Long) = "cat-" + (d % 7)
+          val colsDict = Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.ODictStringCol("cat", ids.map(d => Some(cat(d)))),
+            W.ODictStringCol("lang", ids.map(d =>
+              if (d % 7 == 0) None
+              else Some(Langs((d % 5).toInt)))))
+          val colsDirect = Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.OStringCol("cat", ids.map(d => Some(cat(d)))),
+            W.OStringCol("lang", ids.map(d =>
+              if (d % 7 == 0) None
+              else Some(Langs((d % 5).toInt)))))
+          val bytes = W.writeTable(colsDict)
+          val direct = W.writeTable(colsDirect)
+          val res = for {
+            t <- O.parseTail(bytes)
+            if t.typeKinds == Seq(12, 4, 7, 7)
+            st = t.stripes.head
+            sf <- O.parseStripeFooter(bytes, t, st)
+            (v1, l1) <- O.stripeColumnLongsOpt(bytes, t, st, 1)
+            if v1.forall(identity) && l1.toSeq == ids
+            cats <- O.stripeColumnStrings(bytes, t, st, 2)
+            if cats.toSeq == ids.map(cat)
+            (v3, s3) <- O.stripeColumnStringsOpt(bytes, t, st, 3)
+          } yield {
+            val nDict = sf.encodings.count(_._1 == 3)
+            val langsOk = v3.zip(s3).zip(ids).forall {
+              case ((valid, v), d) =>
+                if (d % 7 == 0) !valid
+                else valid && v == Langs((d % 5).toInt)
             }
-            res.toSeq.flatten
+            if (!langsOk) Nil
+            else Seq((blobId, ids.length.toLong,
+              cats.map(_.length.toLong).sum,
+              v3.count(!_).toLong,
+              s3.filter(_ != null).map(_.length.toLong).sum,
+              nDict.toLong,
+              if (bytes.length < direct.length) 1L else 0L))
           }
-          .toDF("blob_id", "n_rows", "cat_len_sum", "n_lang_null",
+          res.toSeq.flatten
+        }.toDF("blob_id", "n_rows", "cat_len_sum", "n_lang_null",
             "lang_len_sum", "n_dict_encodings", "dict_beats_direct")
       },
       oracle = Some("""
@@ -960,120 +882,111 @@ object WriterQueries {
     "q323_delta_multipart_checkpoint_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val bkey = md5Hex("deltackptmw:" + ids.mkString(","))
-            val D = graft.sources.DeltaWrite
-            val J = graft.sources.Json
-            val P = graft.sources.Parquet
-            val bundle = D.writeTableWithMultipartCheckpoint(bkey, ids)
-            def md5b(b: Array[Byte]): String =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(b).map("%02x".format(_)).mkString
-            val PartRe =
-              "_delta_log/(\\d+)\\.checkpoint\\.(\\d+)\\.(\\d+)\\.parquet".r
-            def jlong(o: J.JObject, k: String): Option[Long] =
-              o.get(k).collect { case J.JLong(v) => v }
-            val res = for {
-              lc <- J.parse(new String(
-                bundle("_delta_log/_last_checkpoint"), "UTF-8").trim)
-              lco <- Some(lc).collect { case o: J.JObject => o }
-              ver <- jlong(lco, "version")
-              nParts <- jlong(lco, "parts").filter(p => p > 0 && p <= 64)
-            } yield {
-              var ok = true
-              // single-name reader law: the unsplit name must be gone
-              val singleName = f"_delta_log/$ver%020d.checkpoint.parquet"
-              if (bundle.contains(singleName)) ok = false
-              val parts = bundle.keys.toSeq.flatMap { k =>
-                k match {
-                  case PartRe(v, i, n) =>
-                    if (v.toLong != ver || n.toLong != nParts) ok = false
-                    Seq((i.toInt, bundle(k)))
-                  case _ => Nil
-                }
-              }.sortBy(_._1)
-              if (parts.map(_._1) != (1 to nParts.toInt)) ok = false
-              val acts = parts.flatMap { case (_, b) =>
-                graft.sources.DeltaCheckpoint.parse(b) match {
-                  case Some(a) => a
-                  case None => ok = false; Nil
-                }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val bkey = Blobs.key("deltackptmw:", ids)
+          val D = graft.sources.DeltaWrite
+          val J = graft.sources.Json
+          val P = graft.sources.Parquet
+          val bundle = D.writeTableWithMultipartCheckpoint(bkey, ids)
+          val PartRe =
+            "_delta_log/(\\d+)\\.checkpoint\\.(\\d+)\\.(\\d+)\\.parquet".r
+          def jlong(o: J.JObject, k: String): Option[Long] =
+            o.get(k).collect { case J.JLong(v) => v }
+          val res = for {
+            lc <- J.parse(new String(
+              bundle("_delta_log/_last_checkpoint"), "UTF-8").trim)
+            lco <- Some(lc).collect { case o: J.JObject => o }
+            ver <- jlong(lco, "version")
+            nParts <- jlong(lco, "parts").filter(p => p > 0 && p <= 64)
+          } yield {
+            var ok = true
+            // single-name reader law: the unsplit name must be gone
+            val singleName = f"_delta_log/$ver%020d.checkpoint.parquet"
+            if (bundle.contains(singleName)) ok = false
+            val parts = bundle.keys.toSeq.flatMap { k =>
+              k match {
+                case PartRe(v, i, n) =>
+                  if (v.toLong != ver || n.toLong != nParts) ok = false
+                  Seq((i.toInt, bundle(k)))
+                case _ => Nil
               }
-              val metaOk = acts.exists(_.metaId == bkey)
-              // checkpoint state + JSON tail, last-wins (q314's walk)
-              val st = scala.collection.mutable.LinkedHashMap
-                .empty[String, (Long, Boolean, String)]
-              acts.foreach { a =>
-                if (a.addPath != null)
-                  st(a.addPath) =
-                    (ver, true, a.addParts.getOrElse("part", null))
-                else if (a.removePath != null)
-                  st(a.removePath) = (ver, false, null)
+            }.sortBy(_._1)
+            if (parts.map(_._1) != (1 to nParts.toInt)) ok = false
+            val acts = parts.flatMap { case (_, b) =>
+              graft.sources.DeltaCheckpoint.parse(b) match {
+                case Some(a) => a
+                case None => ok = false; Nil
               }
-              val LogName = "_delta_log/(\\d{20})\\.json".r
-              bundle.keys.toSeq.collect {
-                case k @ LogName(v) if v.toLong > ver => (v.toLong, k)
-              }.sortBy(_._1).foreach { case (v, k) =>
-                new String(bundle(k), "UTF-8").split("\n")
-                  .filter(_.trim.nonEmpty).foreach { line =>
-                    J.parse(line) match {
-                      case Some(o: J.JObject) =>
-                        (o.get("add"), o.get("remove")) match {
-                          case (Some(a: J.JObject), _) =>
-                            (a.get("path"), a.get("partitionValues"))
-                              match {
-                              case (Some(J.JString(p)),
-                                Some(pv: J.JObject)) =>
-                                st(p) = (v, true, pv.get("part")
-                                  .collect {
-                                    case J.JString(x) => x
-                                  }.orNull)
-                              case _ => ok = false
-                            }
-                          case (_, Some(r: J.JObject)) =>
-                            r.get("path") match {
-                              case Some(J.JString(p)) =>
-                                st(p) = (v, false, null)
-                              case _ => ok = false
-                            }
-                          case _ => ()
-                        }
-                      case _ => ok = false
-                    }
-                  }
-              }
-              val live = st.toSeq.collect {
-                case (p, (_, true, part)) => (p, part)
-              }.sortBy(_._1)
-              var nRows = 0L; var idSum = 0L
-              var valSum = 0L; var partSum = 0L
-              live.foreach { case (p, part) =>
-                if (part == null) ok = false
-                else {
-                  partSum += part.toLong
-                  (P.columnLongs(bundle(p), "rec_id"),
-                    P.columnLongs(bundle(p), "val")) match {
-                    case (Some(rs), Some(vs))
-                      if rs.length == vs.length =>
-                      nRows += rs.length; idSum += rs.sum
-                      valSum += vs.sum
+            }
+            val metaOk = acts.exists(_.metaId == bkey)
+            // checkpoint state + JSON tail, last-wins (q314's walk)
+            val st = scala.collection.mutable.LinkedHashMap
+              .empty[String, (Long, Boolean, String)]
+            acts.foreach { a =>
+              if (a.addPath != null)
+                st(a.addPath) =
+                  (ver, true, a.addParts.getOrElse("part", null))
+              else if (a.removePath != null)
+                st(a.removePath) = (ver, false, null)
+            }
+            val LogName = "_delta_log/(\\d{20})\\.json".r
+            bundle.keys.toSeq.collect {
+              case k @ LogName(v) if v.toLong > ver => (v.toLong, k)
+            }.sortBy(_._1).foreach { case (v, k) =>
+              new String(bundle(k), "UTF-8").split("\n")
+                .filter(_.trim.nonEmpty).foreach { line =>
+                  J.parse(line) match {
+                    case Some(o: J.JObject) =>
+                      (o.get("add"), o.get("remove")) match {
+                        case (Some(a: J.JObject), _) =>
+                          (a.get("path"), a.get("partitionValues"))
+                            match {
+                            case (Some(J.JString(p)),
+                              Some(pv: J.JObject)) =>
+                              st(p) = (v, true, pv.get("part")
+                                .collect {
+                                  case J.JString(x) => x
+                                }.orNull)
+                            case _ => ok = false
+                          }
+                        case (_, Some(r: J.JObject)) =>
+                          r.get("path") match {
+                            case Some(J.JString(p)) =>
+                              st(p) = (v, false, null)
+                            case _ => ok = false
+                          }
+                        case _ => ()
+                      }
                     case _ => ok = false
                   }
                 }
-              }
-              if (!ok || !metaOk) Nil
-              else Seq((blobId, md5b(parts(0)._2), md5b(parts(1)._2),
-                nParts, acts.length.toLong, live.length.toLong, nRows,
-                idSum, valSum, partSum))
             }
-            res.toSeq.flatten
+            val live = st.toSeq.collect {
+              case (p, (_, true, part)) => (p, part)
+            }.sortBy(_._1)
+            var nRows = 0L; var idSum = 0L
+            var valSum = 0L; var partSum = 0L
+            live.foreach { case (p, part) =>
+              if (part == null) ok = false
+              else {
+                partSum += part.toLong
+                (P.columnLongs(bundle(p), "rec_id"),
+                  P.columnLongs(bundle(p), "val")) match {
+                  case (Some(rs), Some(vs))
+                    if rs.length == vs.length =>
+                    nRows += rs.length; idSum += rs.sum
+                    valSum += vs.sum
+                  case _ => ok = false
+                }
+              }
+            }
+            if (!ok || !metaOk) Nil
+            else Seq((blobId, md5Hex(parts(0)._2), md5Hex(parts(1)._2),
+              nParts, acts.length.toLong, live.length.toLong, nRows,
+              idSum, valSum, partSum))
           }
-          .toDF("blob_id", "part1_md5", "part2_md5", "n_parts",
+          res.toSeq.flatten
+        }.toDF("blob_id", "part1_md5", "part2_md5", "n_parts",
             "n_ckpt_acts", "n_live", "n_rows", "id_sum", "val_sum",
             "part_sum")
       },
@@ -1119,41 +1032,29 @@ object WriterQueries {
     "q324_zstd_custom_fse_tables" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d =>
-              "doc-" + d + "-" + ("x" * (d % 17).toInt) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val E = graft.sources.ZstdEncode
-            val z = E.compress(data)
-            val zPred = E.compress(data, adaptiveTables = false)
-            val ownOk = graft.sources.Zstd.walk(z) match {
-              case Some(Seq(f)) => f.kind == "zstd" &&
-                f.checksumState == "ok" &&
-                java.util.Arrays.equals(f.decoded, data)
-              case _ => false
-            }
-            val jniOk = scala.util.Try(
-              com.github.luben.zstd.Zstd.decompress(z,
-                math.max(1, data.length))).toOption
-              .exists(java.util.Arrays.equals(_, data))
-            if (!ownOk) Nil
-            else Seq((blobId, data.length.toLong, h60(payload),
-              if (z.length < zPred.length) 1L else 0L,
-              if (z.length * 3 < data.length) 1L else 0L,
-              if (jniOk) 1L else 0L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d =>
+            Blobs.payload(d) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val E = graft.sources.ZstdEncode
+          val z = E.compress(data)
+          val zPred = E.compress(data, adaptiveTables = false)
+          val ownOk = graft.sources.Zstd.walk(z) match {
+            case Some(Seq(f)) => f.kind == "zstd" &&
+              f.checksumState == "ok" &&
+              java.util.Arrays.equals(f.decoded, data)
+            case _ => false
           }
-          .toDF("blob_id", "orig_len", "payload_hash",
+          val jniOk = scala.util.Try(
+            com.github.luben.zstd.Zstd.decompress(z,
+              math.max(1, data.length))).toOption
+            .exists(java.util.Arrays.equals(_, data))
+          if (!ownOk) Nil
+          else Seq((blobId, data.length.toLong, hash60Bytes(data),
+            if (z.length < zPred.length) 1L else 0L,
+            if (z.length * 3 < data.length) 1L else 0L,
+            if (jniOk) 1L else 0L))
+        }.toDF("blob_id", "orig_len", "payload_hash",
             "adaptive_smaller", "beats_third", "jni_ok")
       },
       oracle = Some(s"""
@@ -1191,60 +1092,47 @@ object WriterQueries {
     "q325_lz4_own_encoder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d =>
-              "doc-" + d + "-" + ("x" * (d % 17).toInt) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val E = graft.sources.Lz4Encode
-            val L = graft.sources.Lz4
-            val z = E.compressBlock(data)
-            val ownOk = L.decompressBlock(z, 0, z.length, data.length)
-              .exists(java.util.Arrays.equals(_, data))
-            val jniOk = scala.util.Try {
-              val out = new Array[Byte](data.length)
-              net.jpountz.lz4.LZ4Factory.fastestJavaInstance()
-                .safeDecompressor().decompress(z, 0, z.length, out, 0)
-              out
-            }.toOption.exists(java.util.Arrays.equals(_, data))
-            val framed = E.hadoopFrame(data)
-            val framedOk = L.decompressFramed(framed, 0, framed.length,
-              data.length).exists(java.util.Arrays.equals(_, data))
-            // parquet LZ4_RAW pages through the same encoder
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val fields = Seq(W.Leaf("rec_id", 0, 2),
-              W.Leaf("txt", 0, 6, convertedType = 0))
-            val ld = Seq(
-              W.LeafData(Array.fill(ids.length)(0), null,
-                longs = ids.toArray),
-              W.LeafData(Array.fill(ids.length)(0), null,
-                bins = ids.map(d => ("doc-" + d + "-" +
-                  ("x" * (d % 17).toInt)).getBytes("UTF-8")).toArray))
-            val plz4 = W.writeFile(fields, ld, codec = 7)
-            val pplain = W.writeFile(fields, ld, codec = 0)
-            val pqOk = P.columnLongs(plz4, "rec_id")
-              .exists(_.toSeq == ids) &&
-              P.columnStrings(plz4, "txt").exists(_.length == ids.length)
-            if (!ownOk) Nil
-            else Seq((blobId, data.length.toLong, h60(payload),
-              if (z.length * 2 < data.length) 1L else 0L,
-              if (jniOk) 1L else 0L,
-              if (framedOk) 1L else 0L,
-              if (pqOk) 1L else 0L,
-              if (plz4.length < pplain.length) 1L else 0L))
-          }
-          .toDF("blob_id", "orig_len", "payload_hash", "beats_half",
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d =>
+            Blobs.payload(d) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val E = graft.sources.Lz4Encode
+          val L = graft.sources.Lz4
+          val z = E.compressBlock(data)
+          val ownOk = L.decompressBlock(z, 0, z.length, data.length)
+            .exists(java.util.Arrays.equals(_, data))
+          val jniOk = scala.util.Try {
+            val out = new Array[Byte](data.length)
+            net.jpountz.lz4.LZ4Factory.fastestJavaInstance()
+              .safeDecompressor().decompress(z, 0, z.length, out, 0)
+            out
+          }.toOption.exists(java.util.Arrays.equals(_, data))
+          val framed = E.hadoopFrame(data)
+          val framedOk = L.decompressFramed(framed, 0, framed.length,
+            data.length).exists(java.util.Arrays.equals(_, data))
+          // parquet LZ4_RAW pages through the same encoder
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val fields = Seq(W.Leaf("rec_id", 0, 2),
+            W.Leaf("txt", 0, 6, convertedType = 0))
+          val ld = Seq(
+            W.LeafData(Array.fill(ids.length)(0), null,
+              longs = ids.toArray),
+            W.LeafData(Array.fill(ids.length)(0), null,
+              bins = ids.map(Blobs.payload(_).getBytes("UTF-8")).toArray))
+          val plz4 = W.writeFile(fields, ld, codec = 7)
+          val pplain = W.writeFile(fields, ld, codec = 0)
+          val pqOk = P.columnLongs(plz4, "rec_id")
+            .exists(_.toSeq == ids) &&
+            P.columnStrings(plz4, "txt").exists(_.length == ids.length)
+          if (!ownOk) Nil
+          else Seq((blobId, data.length.toLong, hash60Bytes(data),
+            if (z.length * 2 < data.length) 1L else 0L,
+            if (jniOk) 1L else 0L,
+            if (framedOk) 1L else 0L,
+            if (pqOk) 1L else 0L,
+            if (plz4.length < pplain.length) 1L else 0L))
+        }.toDF("blob_id", "orig_len", "payload_hash", "beats_half",
             "jni_ok", "framed_ok", "pq_lz4_ok", "pq_lz4_smaller")
       },
       oracle = Some(s"""
@@ -1283,84 +1171,77 @@ object WriterQueries {
     "q326_container_codec_matrix" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val OW = graft.sources.OrcWrite
-            val O = graft.sources.Orc
-            val cols = Seq(
-              OW.OLongCol("rec_id", ids.map(Some(_))),
-              OW.OStringCol("txt", ids.map(d =>
-                Some("doc-" + d + "-" + ("x" * (d % 17).toInt)))))
-            val orcPlain = OW.writeTable(cols)
-            def orcOk(codec: Int): Boolean = {
-              val b = OW.writeTable(cols, compression = codec)
-              b.length < orcPlain.length && (O.parseTail(b) match {
-                case Some(t) =>
-                  val st = t.stripes.head
-                  (O.stripeColumnLongs(b, t, st, 1),
-                    O.stripeColumnStrings(b, t, st, 2)) match {
-                    case (Some(l1), Some(t2)) =>
-                      l1.toSeq == ids &&
-                        t2.map(_.length.toLong).sum == ids.map(d =>
-                          ("doc-" + d + "-").length + d % 17).sum
-                    case _ => false
-                  }
-                case None => false
-              })
-            }
-            // parquet codec 6: one own zstd frame per page
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val fields = Seq(W.Leaf("rec_id", 0, 2),
-              W.Leaf("txt", 0, 6, convertedType = 0))
-            val ld = Seq(
-              W.LeafData(Array.fill(ids.length)(0), null,
-                longs = ids.toArray),
-              W.LeafData(Array.fill(ids.length)(0), null,
-                bins = ids.map(d => ("doc-" + d + "-" +
-                  ("x" * (d % 17).toInt)).getBytes("UTF-8")).toArray))
-            val pqZstd = W.writeFile(fields, ld, codec = 6)
-            val pqPlain = W.writeFile(fields, ld, codec = 0)
-            val pqOk = pqZstd.length < pqPlain.length &&
-              P.columnLongs(pqZstd, "rec_id").exists(_.toSeq == ids) &&
-              P.columnStrings(pqZstd, "txt")
-                .exists(_.length == ids.length)
-            // avro container, codec deflate through the own encoder
-            val IW = graft.sources.IcebergWrite
-            val G = graft.sources.AvroGeneric
-            val schema =
-              """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},{"name":"txt","type":"string"}]}"""
-            def rec(v: Long): Array[Byte] = {
-              val out = new java.io.ByteArrayOutputStream()
-              graft.sources.Bytes.putZigzag(out, v)
-              val tb = ("doc-" + v + "-" + ("x" * (v % 17).toInt))
-                .getBytes("UTF-8")
-              graft.sources.Bytes.putZigzag(out, tb.length.toLong)
-              out.write(tb, 0, tb.length)
-              out.toByteArray
-            }
-            val sync = java.security.MessageDigest.getInstance("MD5")
-              .digest(("sync:" + blobId).getBytes("UTF-8"))
-            val recs = ids.map(rec)
-            val avroNull = IW.container(schema, recs, sync)
-            val avroDef = IW.container(schema, recs, sync, "deflate")
-            val avroOk = avroDef.length < avroNull.length &&
-              G.parseContainer(avroDef).exists { d =>
-                d.records.flatMap(_.field("id").flatMap(_.asLong)) ==
-                  ids.toVector &&
-                d.records.flatMap(_.field("txt").flatMap(_.asString))
-                  .map(_.length.toLong).sum == ids.map(d =>
-                    ("doc-" + d + "-").length.toLong + d % 17).sum
-              }
-            val nOk = Seq(orcOk(1), orcOk(4), orcOk(5), pqOk, avroOk)
-              .count(identity)
-            Seq((blobId, ids.length.toLong, ids.sum, nOk.toLong))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val OW = graft.sources.OrcWrite
+          val O = graft.sources.Orc
+          val cols = Seq(
+            OW.OLongCol("rec_id", ids.map(Some(_))),
+            OW.OStringCol("txt", ids.map(d =>
+              Some(Blobs.payload(d)))))
+          val orcPlain = OW.writeTable(cols)
+          def orcOk(codec: Int): Boolean = {
+            val b = OW.writeTable(cols, compression = codec)
+            b.length < orcPlain.length && (O.parseTail(b) match {
+              case Some(t) =>
+                val st = t.stripes.head
+                (O.stripeColumnLongs(b, t, st, 1),
+                  O.stripeColumnStrings(b, t, st, 2)) match {
+                  case (Some(l1), Some(t2)) =>
+                    l1.toSeq == ids &&
+                      t2.map(_.length.toLong).sum == ids.map(d =>
+                        ("doc-" + d + "-").length + d % 17).sum
+                  case _ => false
+                }
+              case None => false
+            })
           }
-          .toDF("blob_id", "n_rows", "id_sum", "n_codecs_ok")
+          // parquet codec 6: one own zstd frame per page
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val fields = Seq(W.Leaf("rec_id", 0, 2),
+            W.Leaf("txt", 0, 6, convertedType = 0))
+          val ld = Seq(
+            W.LeafData(Array.fill(ids.length)(0), null,
+              longs = ids.toArray),
+            W.LeafData(Array.fill(ids.length)(0), null,
+              bins = ids.map(Blobs.payload(_).getBytes("UTF-8")).toArray))
+          val pqZstd = W.writeFile(fields, ld, codec = 6)
+          val pqPlain = W.writeFile(fields, ld, codec = 0)
+          val pqOk = pqZstd.length < pqPlain.length &&
+            P.columnLongs(pqZstd, "rec_id").exists(_.toSeq == ids) &&
+            P.columnStrings(pqZstd, "txt")
+              .exists(_.length == ids.length)
+          // avro container, codec deflate through the own encoder
+          val IW = graft.sources.IcebergWrite
+          val G = graft.sources.AvroGeneric
+          val schema =
+            """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},{"name":"txt","type":"string"}]}"""
+          def rec(v: Long): Array[Byte] = {
+            val out = new java.io.ByteArrayOutputStream()
+            graft.sources.Bytes.putZigzag(out, v)
+            val tb = Blobs.payload(v)
+              .getBytes("UTF-8")
+            graft.sources.Bytes.putZigzag(out, tb.length.toLong)
+            out.write(tb, 0, tb.length)
+            out.toByteArray
+          }
+          val sync =
+            Md5Hashes.digest(("sync:" + blobId).getBytes("UTF-8"))
+          val recs = ids.map(rec)
+          val avroNull = IW.container(schema, recs, sync)
+          val avroDef = IW.container(schema, recs, sync, "deflate")
+          val avroOk = avroDef.length < avroNull.length &&
+            G.parseContainer(avroDef).exists { d =>
+              d.records.flatMap(_.field("id").flatMap(_.asLong)) ==
+                ids.toVector &&
+              d.records.flatMap(_.field("txt").flatMap(_.asString))
+                .map(_.length.toLong).sum == ids.map(d =>
+                  ("doc-" + d + "-").length.toLong + d % 17).sum
+            }
+          val nOk = Seq(orcOk(1), orcOk(4), orcOk(5), pqOk, avroOk)
+            .count(identity)
+          Seq((blobId, ids.length.toLong, ids.sum, nOk.toLong))
+        }.toDF("blob_id", "n_rows", "id_sum", "n_codecs_ok")
       },
       oracle = Some("""
         SELECT doc_id % 6 AS blob_id,
@@ -1384,57 +1265,45 @@ object WriterQueries {
     "q327_warc_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def md5x(x: String): String =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-            def h60(x: String): Long =
-              java.lang.Long.parseLong(md5x(x).take(15), 16)
-            val ids = it.map(_._2).toSeq.sorted
-            val WW = graft.sources.WarcWrite
-            def payload(d: Long) =
-              ("doc-" + d + "-" + ("x" * (d % 17).toInt) + "\n")
-                .getBytes("UTF-8")
-            val info = WW.record("warcinfo", "", md5x("rid:info:" +
-              blobId), "2024-01-01T00:00:00Z",
-              "software: graft\n".getBytes("UTF-8"))
-            val recs = info +: ids.map(d => WW.record("response",
-              "https://example.com/doc/" + d, md5x("rid:" + d),
-              f"2024-01-${d % 28 + 1}%02dT00:00:00Z", payload(d)))
-            val warc = WW.write(recs)
-            val warcGz = WW.writeGz(recs)
-            val parsed = graft.sources.Warc.parse(blobId, warc)
-            val viaGz = graft.sources.Warc.parseAuto(blobId, warcGz)
-            val members = graft.sources.Gzip.members(warcGz)
-            val responses = parsed.filter(_.record_type == "response")
-            // offsets must stride exactly: record k+1 starts where
-            // record k's framing ends
-            var stride = 0L
-            var strideOk = true
-            parsed.zip(recs).foreach { case (r, bytes) =>
-              if (r.offset != stride) strideOk = false
-              stride += bytes.length
-            }
-            val gzOk = viaGz.map(r => (r.record_type, r.target_uri,
-              r.content_length, r.payload)) ==
-              parsed.map(r => (r.record_type, r.target_uri,
-                r.content_length, r.payload))
-            if (parsed.length != ids.length + 1 || !strideOk) Nil
-            else Seq((blobId, responses.length.toLong,
-              h60(responses.map(_.payload).mkString),
-              responses.map(_.target_uri.length.toLong).sum,
-              responses.map(_.content_length).sum,
-              if (members.length == recs.length &&
-                members.forall(_.crc_ok)) 1L else 0L,
-              if (gzOk) 1L else 0L,
-              if (warcGz.length < warc.length) 1L else 0L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val WW = graft.sources.WarcWrite
+          def payload(d: Long) =
+            (Blobs.payload(d) + "\n")
+              .getBytes("UTF-8")
+          val info = WW.record("warcinfo", "", md5Hex("rid:info:" +
+            blobId), "2024-01-01T00:00:00Z",
+            "software: graft\n".getBytes("UTF-8"))
+          val recs = info +: ids.map(d => WW.record("response",
+            "https://example.com/doc/" + d, md5Hex("rid:" + d),
+            f"2024-01-${d % 28 + 1}%02dT00:00:00Z", payload(d)))
+          val warc = WW.write(recs)
+          val warcGz = WW.writeGz(recs)
+          val parsed = graft.sources.Warc.parse(blobId, warc)
+          val viaGz = graft.sources.Warc.parseAuto(blobId, warcGz)
+          val members = graft.sources.Gzip.members(warcGz)
+          val responses = parsed.filter(_.record_type == "response")
+          // offsets must stride exactly: record k+1 starts where
+          // record k's framing ends
+          var stride = 0L
+          var strideOk = true
+          parsed.zip(recs).foreach { case (r, bytes) =>
+            if (r.offset != stride) strideOk = false
+            stride += bytes.length
           }
-          .toDF("blob_id", "n_responses", "payload_hash",
+          val gzOk = viaGz.map(r => (r.record_type, r.target_uri,
+            r.content_length, r.payload)) ==
+            parsed.map(r => (r.record_type, r.target_uri,
+              r.content_length, r.payload))
+          if (parsed.length != ids.length + 1 || !strideOk) Nil
+          else Seq((blobId, responses.length.toLong,
+            hash60Bytes(responses.map(_.payload).mkString.getBytes("UTF-8")),
+            responses.map(_.target_uri.length.toLong).sum,
+            responses.map(_.content_length).sum,
+            if (members.length == recs.length &&
+              members.forall(_.crc_ok)) 1L else 0L,
+            if (gzOk) 1L else 0L,
+            if (warcGz.length < warc.length) 1L else 0L))
+        }.toDF("blob_id", "n_responses", "payload_hash",
             "uri_len_sum", "cl_sum", "members_ok", "gz_roundtrip_ok",
             "gz_smaller")
       },
@@ -1474,44 +1343,32 @@ object WriterQueries {
     "q328_codec_throughput" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 32).as("grp"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (grp, it) =>
-            def h60(x: Array[Byte]): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x).map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val one = ids.map(d => "doc-" + d + "-" +
-              ("x" * (d % 17).toInt) + "\n").mkString
-            val sb = new StringBuilder(one.length * 32)
-            var k = 0
-            while (k < 32) { sb.append(one); k += 1 }
-            val data = sb.toString.getBytes("UTF-8")
-            val z = graft.sources.ZstdEncode.compress(data)
-            val l = graft.sources.Lz4Encode.compressBlock(data)
-            val sn = graft.sources.Snappy.compress(data)
-            val zOk = graft.sources.Zstd.walk(z) match {
-              case Some(Seq(f)) => f.checksumState == "ok" &&
-                java.util.Arrays.equals(f.decoded, data)
-              case _ => false
-            }
-            val lOk = graft.sources.Lz4
-              .decompressBlock(l, 0, l.length, data.length)
-              .exists(java.util.Arrays.equals(_, data))
-            val snOk = graft.sources.Snappy
-              .uncompressSelf(sn, 0, sn.length, data.length)
-              .exists(java.util.Arrays.equals(_, data))
-            if (!zOk || !lOk || !snOk) Nil
-            else Seq((grp, ids.length.toLong, data.length.toLong,
-              h60(data),
-              if (z.length < data.length && l.length < data.length &&
-                sn.length < data.length) 1L else 0L))
+        Blobs.byBlob(s, dir, 32) { (grp, ids) =>
+          val one = ids.map(d => Blobs.payload(d) + "\n").mkString
+          val sb = new StringBuilder(one.length * 32)
+          var k = 0
+          while (k < 32) { sb.append(one); k += 1 }
+          val data = sb.toString.getBytes("UTF-8")
+          val z = graft.sources.ZstdEncode.compress(data)
+          val l = graft.sources.Lz4Encode.compressBlock(data)
+          val sn = graft.sources.Snappy.compress(data)
+          val zOk = graft.sources.Zstd.walk(z) match {
+            case Some(Seq(f)) => f.checksumState == "ok" &&
+              java.util.Arrays.equals(f.decoded, data)
+            case _ => false
           }
-          .toDF("grp", "n_docs", "orig_len", "payload_hash",
+          val lOk = graft.sources.Lz4
+            .decompressBlock(l, 0, l.length, data.length)
+            .exists(java.util.Arrays.equals(_, data))
+          val snOk = graft.sources.Snappy
+            .uncompressSelf(sn, 0, sn.length, data.length)
+            .exists(java.util.Arrays.equals(_, data))
+          if (!zOk || !lOk || !snOk) Nil
+          else Seq((grp, ids.length.toLong, data.length.toLong,
+            hash60Bytes(data),
+            if (z.length < data.length && l.length < data.length &&
+              sn.length < data.length) 1L else 0L))
+        }.toDF("grp", "n_docs", "orig_len", "payload_hash",
             "all_smaller")
       },
       oracle = Some(s"""
@@ -1548,41 +1405,29 @@ object WriterQueries {
     "q329_zstd_fse_weights" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def md5x(x: String): String =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-            def h60(x: String): Long =
-              java.lang.Long.parseLong(md5x(x).take(15), 16)
-            val ids = it.map(_._2).toSeq.sorted
-            val hex = ids.map(d => md5x("hb:" + d)).mkString
-            val data = hex.map { c =>
-              val v = if (c <= '9') c - '0' else c - 'a' + 10
-              (160 + v).toByte
-            }.toArray
-            val z = graft.sources.ZstdEncode.compress(data)
-            val ownOk = graft.sources.Zstd.walk(z) match {
-              case Some(Seq(f)) => f.kind == "zstd" &&
-                f.checksumState == "ok" &&
-                java.util.Arrays.equals(f.decoded, data)
-              case _ => false
-            }
-            val jniOk = scala.util.Try(
-              com.github.luben.zstd.Zstd.decompress(z,
-                math.max(1, data.length))).toOption
-              .exists(java.util.Arrays.equals(_, data))
-            if (!ownOk) Nil
-            else Seq((blobId, data.length.toLong, h60(hex),
-              if (z.length.toLong * 3 < data.length.toLong * 2) 1L
-              else 0L,
-              if (jniOk) 1L else 0L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val hex = ids.map(d => md5Hex("hb:" + d)).mkString
+          val data = hex.map { c =>
+            val v = if (c <= '9') c - '0' else c - 'a' + 10
+            (160 + v).toByte
+          }.toArray
+          val z = graft.sources.ZstdEncode.compress(data)
+          val ownOk = graft.sources.Zstd.walk(z) match {
+            case Some(Seq(f)) => f.kind == "zstd" &&
+              f.checksumState == "ok" &&
+              java.util.Arrays.equals(f.decoded, data)
+            case _ => false
           }
-          .toDF("blob_id", "orig_len", "payload_hash", "huff_wins",
+          val jniOk = scala.util.Try(
+            com.github.luben.zstd.Zstd.decompress(z,
+              math.max(1, data.length))).toOption
+            .exists(java.util.Arrays.equals(_, data))
+          if (!ownOk) Nil
+          else Seq((blobId, data.length.toLong, hash60Bytes(hex.getBytes("UTF-8")),
+            if (z.length.toLong * 3 < data.length.toLong * 2) 1L
+            else 0L,
+            if (jniOk) 1L else 0L))
+        }.toDF("blob_id", "orig_len", "payload_hash", "huff_wins",
             "jni_ok")
       },
       oracle = Some(s"""
@@ -1616,70 +1461,64 @@ object WriterQueries {
     "q330_parquet_multi_rowgroup_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted.toIndexedSeq
-            val n = ids.length
-            def v(d: Long): Long = (d * 19) % 977
-            val groups = (0 to 3).map { q =>
-              ids.indices.filter(i => i * 4 / n == q)
-                .map(i => Array(ids(i), v(ids(i))))
-            }.filter(_.nonEmpty)
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val bytes = W.writeInt64RowGroups(Seq("rec_id", "val"),
-              groups)
-            val fileMd5 = java.security.MessageDigest.getInstance("MD5")
-              .digest(bytes).map("%02x".format(_)).mkString
-            val res = for {
-              fm <- P.parseFooter(bytes)
-              if fm.rowGroups.nonEmpty
-              bounds <- {
-                val bs = fm.rowGroups.map { rg =>
-                  rg.cols.find(_.path == "rec_id").flatMap { c =>
-                    for { mn <- c.minLong; mx <- c.maxLong }
-                      yield (c, mn, mx)
-                  }
-                }
-                if (bs.forall(_.isDefined)) Some(bs.flatten) else None
-              }
-            } yield {
-              // probe from the file's OWN footer bounds
-              val gmin = bounds.map(_._2).min
-              val gmax = bounds.map(_._3).max
-              val lo = gmin + (gmax - gmin) / 3
-              val hi = gmin + 2 * (gmax - gmin) / 3
-              var nSel = 0L
-              var selRows = 0L
-              var idSum = 0L
-              var valSum = 0L
-              var ok = true
-              fm.rowGroups.zip(bounds).foreach { case (rg, (c, mn, mx)) =>
-                if (mx >= lo && mn <= hi) {
-                  nSel += 1
-                  (P.readChunkCells(bytes, c, 0, 0),
-                    rg.cols.find(_.path == "val")
-                      .flatMap(P.readChunkCells(bytes, _, 0, 0))) match {
-                    case (Some(rc), Some(vc))
-                      if rc.longs.length == vc.longs.length =>
-                      selRows += rc.longs.length
-                      idSum += rc.longs.sum
-                      valSum += vc.longs.sum
-                    case _ => ok = false
-                  }
+        Blobs.byBlob(s, dir, 6) { (blobId, sortedIds) =>
+          val ids = sortedIds.toIndexedSeq
+          val n = ids.length
+          def v(d: Long): Long = (d * 19) % 977
+          val groups = (0 to 3).map { q =>
+            ids.indices.filter(i => i * 4 / n == q)
+              .map(i => Array(ids(i), v(ids(i))))
+          }.filter(_.nonEmpty)
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val bytes = W.writeInt64RowGroups(Seq("rec_id", "val"),
+            groups)
+          val fileMd5 = md5Hex(bytes)
+          val res = for {
+            fm <- P.parseFooter(bytes)
+            if fm.rowGroups.nonEmpty
+            bounds <- {
+              val bs = fm.rowGroups.map { rg =>
+                rg.cols.find(_.path == "rec_id").flatMap { c =>
+                  for { mn <- c.minLong; mx <- c.maxLong }
+                    yield (c, mn, mx)
                 }
               }
-              if (!ok) Nil
-              else Seq((blobId, fileMd5, bytes.length.toLong,
-                fm.rowGroups.length.toLong, nSel, selRows, idSum,
-                valSum))
+              if (bs.forall(_.isDefined)) Some(bs.flatten) else None
             }
-            res.toSeq.flatten
+          } yield {
+            // probe from the file's OWN footer bounds
+            val gmin = bounds.map(_._2).min
+            val gmax = bounds.map(_._3).max
+            val lo = gmin + (gmax - gmin) / 3
+            val hi = gmin + 2 * (gmax - gmin) / 3
+            var nSel = 0L
+            var selRows = 0L
+            var idSum = 0L
+            var valSum = 0L
+            var ok = true
+            fm.rowGroups.zip(bounds).foreach { case (rg, (c, mn, mx)) =>
+              if (mx >= lo && mn <= hi) {
+                nSel += 1
+                (P.readChunkCells(bytes, c, 0, 0),
+                  rg.cols.find(_.path == "val")
+                    .flatMap(P.readChunkCells(bytes, _, 0, 0))) match {
+                  case (Some(rc), Some(vc))
+                    if rc.longs.length == vc.longs.length =>
+                    selRows += rc.longs.length
+                    idSum += rc.longs.sum
+                    valSum += vc.longs.sum
+                  case _ => ok = false
+                }
+              }
+            }
+            if (!ok) Nil
+            else Seq((blobId, fileMd5, bytes.length.toLong,
+              fm.rowGroups.length.toLong, nSel, selRows, idSum,
+              valSum))
           }
-          .toDF("blob_id", "file_md5", "file_bytes_len", "n_groups",
+          res.toSeq.flatten
+        }.toDF("blob_id", "file_md5", "file_bytes_len", "n_groups",
             "n_selected", "sel_rows", "sel_id_sum", "sel_val_sum")
       },
       oracle = Some("""
@@ -1934,109 +1773,104 @@ object WriterQueries {
     "q332_orc_write_skip_stack" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.OrcWrite
-            val O = graft.sources.Orc
-            val bytes = W.writeTable(Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.OLongCol("val", ids.map(d =>
-                if (d % 11 == 3) None else Some((d * 7) % 1000))),
-              W.OStringCol("tag", ids.map(d =>
-                Some("t" + (d % 13))))),
-              rowIndexStride = 32, bloomCols = Set(0))
-            O.parseTail(bytes).toSeq.flatMap { t =>
-              val stride = t.rowIndexStride
-              if (stride <= 0 ||
-                t.stripeStats.length != t.stripes.length) Nil
-              else {
-                val rgStats = scala.collection.mutable
-                  .Map.empty[Int, Option[Seq[graft.sources.Orc.ColStats]]]
-                val blooms = scala.collection.mutable
-                  .Map.empty[Int, Option[Seq[graft.sources.Orc.OrcBloom]]]
-                val decoded = scala.collection.mutable
-                  .Map.empty[Int, Option[Array[Long]]]
-                def rg(i: Int) = rgStats.getOrElseUpdate(i,
-                  O.stripeRowGroupStats(bytes, t, t.stripes(i), 1))
-                def bl(i: Int) = blooms.getOrElseUpdate(i,
-                  O.stripeBlooms(bytes, t, t.stripes(i), 1))
-                def dec(i: Int) = decoded.getOrElseUpdate(i,
-                  O.stripeColumnLongs(bytes, t, t.stripes(i), 1))
-                var ok = true
-                def probe(k: Long): (Boolean, Boolean) = {
-                  var found = false
-                  var rangeGroups = 0L
-                  var bloomConsults = 0L
-                  var bloomPasses = 0L
-                  var decodes = 0L
-                  for (i <- t.stripes.indices) {
-                    val ss = t.stripeStats(i).lift(1)
-                    val stripeHit = (for {
-                      mn <- ss.flatMap(_.intMin)
-                      mx <- ss.flatMap(_.intMax)
-                    } yield k >= mn && k <= mx)
-                      .getOrElse { ok = false; false }
-                    if (stripeHit) {
-                      (rg(i), bl(i)) match {
-                        case (Some(gs), Some(bs))
-                          if gs.length == bs.length =>
-                          for (g <- gs.indices) {
-                            val gHit = (for {
-                              mn <- gs(g).intMin
-                              mx <- gs(g).intMax
-                            } yield k >= mn && k <= mx)
-                              .getOrElse { ok = false; false }
-                            if (gHit) {
-                              rangeGroups += 1
-                              bloomConsults += 1
-                              if (bs(g).testLong(k)) {
-                                bloomPasses += 1
-                                dec(i) match {
-                                  case Some(vals) =>
-                                    decodes += 1
-                                    val lo = (g * stride).toInt
-                                    val hi = math.min((g + 1) * stride,
-                                      vals.length.toLong).toInt
-                                    var j = lo
-                                    while (j < hi && !found) {
-                                      if (vals(j) == k) found = true
-                                      j += 1
-                                    }
-                                  case None => ok = false
-                                }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.OrcWrite
+          val O = graft.sources.Orc
+          val bytes = W.writeTable(Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.OLongCol("val", ids.map(d =>
+              if (d % 11 == 3) None else Some((d * 7) % 1000))),
+            W.OStringCol("tag", ids.map(d =>
+              Some("t" + (d % 13))))),
+            rowIndexStride = 32, bloomCols = Set(0))
+          O.parseTail(bytes).toSeq.flatMap { t =>
+            val stride = t.rowIndexStride
+            if (stride <= 0 ||
+              t.stripeStats.length != t.stripes.length) Nil
+            else {
+              val rgStats = scala.collection.mutable
+                .Map.empty[Int, Option[Seq[graft.sources.Orc.ColStats]]]
+              val blooms = scala.collection.mutable
+                .Map.empty[Int, Option[Seq[graft.sources.Orc.OrcBloom]]]
+              val decoded = scala.collection.mutable
+                .Map.empty[Int, Option[Array[Long]]]
+              def rg(i: Int) = rgStats.getOrElseUpdate(i,
+                O.stripeRowGroupStats(bytes, t, t.stripes(i), 1))
+              def bl(i: Int) = blooms.getOrElseUpdate(i,
+                O.stripeBlooms(bytes, t, t.stripes(i), 1))
+              def dec(i: Int) = decoded.getOrElseUpdate(i,
+                O.stripeColumnLongs(bytes, t, t.stripes(i), 1))
+              var ok = true
+              def probe(k: Long): (Boolean, Boolean) = {
+                var found = false
+                var rangeGroups = 0L
+                var bloomConsults = 0L
+                var bloomPasses = 0L
+                var decodes = 0L
+                for (i <- t.stripes.indices) {
+                  val ss = t.stripeStats(i).lift(1)
+                  val stripeHit = (for {
+                    mn <- ss.flatMap(_.intMin)
+                    mx <- ss.flatMap(_.intMax)
+                  } yield k >= mn && k <= mx)
+                    .getOrElse { ok = false; false }
+                  if (stripeHit) {
+                    (rg(i), bl(i)) match {
+                      case (Some(gs), Some(bs))
+                        if gs.length == bs.length =>
+                        for (g <- gs.indices) {
+                          val gHit = (for {
+                            mn <- gs(g).intMin
+                            mx <- gs(g).intMax
+                          } yield k >= mn && k <= mx)
+                            .getOrElse { ok = false; false }
+                          if (gHit) {
+                            rangeGroups += 1
+                            bloomConsults += 1
+                            if (bs(g).testLong(k)) {
+                              bloomPasses += 1
+                              dec(i) match {
+                                case Some(vals) =>
+                                  decodes += 1
+                                  val lo = (g * stride).toInt
+                                  val hi = math.min((g + 1) * stride,
+                                    vals.length.toLong).toInt
+                                  var j = lo
+                                  while (j < hi && !found) {
+                                    if (vals(j) == k) found = true
+                                    j += 1
+                                  }
+                                case None => ok = false
                               }
                             }
                           }
-                        case _ => ok = false
-                      }
+                        }
+                      case _ => ok = false
                     }
                   }
-                  val laws = bloomConsults <= rangeGroups &&
-                    bloomPasses <= bloomConsults &&
-                    decodes <= bloomPasses
-                  (found, laws)
                 }
-                val present = ids.filter(_ % 97 == 0)
-                val outRows = present.flatMap { k =>
-                  val (f1, l1) = probe(k)
-                  val (f2, l2) = probe(-k - 1)
-                  val (f3, l3) = probe(k + 1)
-                  Seq(
-                    (blobId, k, 1L, if (f1) 1L else 0L,
-                      if (l1) 1L else 0L),
-                    (blobId, -k - 1, 0L, if (f2) 1L else 0L,
-                      if (l2) 1L else 0L),
-                    (blobId, k + 1, 0L, if (f3) 1L else 0L,
-                      if (l3) 1L else 0L))
-                }
-                if (ok) outRows else Nil
+                val laws = bloomConsults <= rangeGroups &&
+                  bloomPasses <= bloomConsults &&
+                  decodes <= bloomPasses
+                (found, laws)
               }
+              val present = ids.filter(_ % 97 == 0)
+              val outRows = present.flatMap { k =>
+                val (f1, l1) = probe(k)
+                val (f2, l2) = probe(-k - 1)
+                val (f3, l3) = probe(k + 1)
+                Seq(
+                  (blobId, k, 1L, if (f1) 1L else 0L,
+                    if (l1) 1L else 0L),
+                  (blobId, -k - 1, 0L, if (f2) 1L else 0L,
+                    if (l2) 1L else 0L),
+                  (blobId, k + 1, 0L, if (f3) 1L else 0L,
+                    if (l3) 1L else 0L))
+              }
+              if (ok) outRows else Nil
             }
-          }.toDF("blob_id", "probe_key", "expected_present", "found",
+          }
+        }.toDF("blob_id", "probe_key", "expected_present", "found",
             "laws_ok")
       },
       oracle = Some("""
@@ -2073,50 +1907,38 @@ object WriterQueries {
     "q333_deflate_dynamic_huffman" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val payload = ids.map(d =>
-              "dyn doc " + d + " lorem ipsum " +
-                ("ab" * (d % 9).toInt) + "\n").mkString
-            val data = payload.getBytes("UTF-8")
-            val D = graft.sources.Deflate
-            val I = graft.sources.Inflate
-            val fix = D.compressFixed(data)
-            val dyn = D.compressDynamic(data)
-            val dynWins = dyn.length < fix.length
-            val ownRt = I.inflateRaw(dyn).exists { case (p, c) =>
-              java.util.Arrays.equals(p, data) && c == dyn.length
-            }
-            val m = graft.sources.Gzip.writeMemberOwnBest(data)
-            val ms = graft.sources.Gzip.members(m)
-            val memberOk = ms.length == 1 && ms.head.crc_ok &&
-              java.util.Arrays.equals(ms.head.data, data) &&
-              m.length < graft.sources.Gzip.writeMemberOwn(data).length
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val fields = Seq(W.Leaf("rec_id", 0, 2))
-            val ld = Seq(W.LeafData(Array.fill(ids.length)(0), null,
-              longs = ids.toArray))
-            val pgz = W.writeFile(fields, ld, codec = 2)
-            val pqOk = P.columnLongs(pgz, "rec_id")
-              .exists(_.toSeq == ids) &&
-              pgz.length < W.writeFile(fields, ld, codec = 0).length
-            if (dynWins && ownRt && memberOk && pqOk)
-              Seq((blobId, data.length.toLong, h60(payload), 1L, 1L,
-                1L, 1L))
-            else Nil
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val payload = ids.map(d =>
+            "dyn doc " + d + " lorem ipsum " +
+              ("ab" * (d % 9).toInt) + "\n").mkString
+          val data = payload.getBytes("UTF-8")
+          val D = graft.sources.Deflate
+          val I = graft.sources.Inflate
+          val fix = D.compressFixed(data)
+          val dyn = D.compressDynamic(data)
+          val dynWins = dyn.length < fix.length
+          val ownRt = I.inflateRaw(dyn).exists { case (p, c) =>
+            java.util.Arrays.equals(p, data) && c == dyn.length
           }
-          .toDF("blob_id", "orig_len", "payload_hash",
+          val m = graft.sources.Gzip.writeMemberOwnBest(data)
+          val ms = graft.sources.Gzip.members(m)
+          val memberOk = ms.length == 1 && ms.head.crc_ok &&
+            java.util.Arrays.equals(ms.head.data, data) &&
+            m.length < graft.sources.Gzip.writeMemberOwn(data).length
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val fields = Seq(W.Leaf("rec_id", 0, 2))
+          val ld = Seq(W.LeafData(Array.fill(ids.length)(0), null,
+            longs = ids.toArray))
+          val pgz = W.writeFile(fields, ld, codec = 2)
+          val pqOk = P.columnLongs(pgz, "rec_id")
+            .exists(_.toSeq == ids) &&
+            pgz.length < W.writeFile(fields, ld, codec = 0).length
+          if (dynWins && ownRt && memberOk && pqOk)
+            Seq((blobId, data.length.toLong, hash60Bytes(data), 1L, 1L,
+              1L, 1L))
+          else Nil
+        }.toDF("blob_id", "orig_len", "payload_hash",
             "dyn_beats_fixed", "own_roundtrip", "member_ok", "pq_ok")
       },
       oracle = Some(s"""
@@ -2155,37 +1977,25 @@ object WriterQueries {
     "q334_bzip2_own_encoder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val p1 = ids.map(d => "doc-" + d + "|" + (d % 23) + "\n")
-              .mkString
-            val p2 = ids.mkString(",")
-            val tar = graft.sources.Tar.write(Seq(
-              ("docs.txt", p1.getBytes("UTF-8"), 1234567L),
-              ("ids.csv", p2.getBytes("UTF-8"), 1234567L)))
-            val bz = graft.sources.Bzip2Encode.compress(tar, level = 1)
-            val back = graft.sources.Bzip2.decompress(bz)
-            val rtExact = back.exists(java.util.Arrays.equals(_, tar))
-            val sizeLaw = bz.length < tar.length
-            if (!(rtExact && sizeLaw)) Nil
-            else graft.sources.Tar.parse(blobId, tar).map { e =>
-              val payload = new String(tar, e.data_offset.toInt,
-                e.size.toInt, "UTF-8")
-              (blobId, e.entry_name, e.size, h60(payload),
-                tar.length.toLong, 1L, 1L)
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val p1 = ids.map(d => "doc-" + d + "|" + (d % 23) + "\n")
+            .mkString
+          val p2 = ids.mkString(",")
+          val tar = graft.sources.Tar.write(Seq(
+            ("docs.txt", p1.getBytes("UTF-8"), 1234567L),
+            ("ids.csv", p2.getBytes("UTF-8"), 1234567L)))
+          val bz = graft.sources.Bzip2Encode.compress(tar, level = 1)
+          val back = graft.sources.Bzip2.decompress(bz)
+          val rtExact = back.exists(java.util.Arrays.equals(_, tar))
+          val sizeLaw = bz.length < tar.length
+          if (!(rtExact && sizeLaw)) Nil
+          else graft.sources.Tar.parse(blobId, tar).map { e =>
+            val payload = new String(tar, e.data_offset.toInt,
+              e.size.toInt, "UTF-8")
+            (blobId, e.entry_name, e.size, hash60Bytes(payload.getBytes("UTF-8")),
+              tar.length.toLong, 1L, 1L)
           }
-          .toDF("blob_id", "entry_name", "size", "data_hash",
+        }.toDF("blob_id", "entry_name", "size", "data_hash",
             "tar_len", "bz_smaller", "rt_exact")
       },
       oracle = Some(s"""
@@ -2233,57 +2043,50 @@ object WriterQueries {
     "q335_avro_container_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val G = graft.sources.AvroGeneric
-            val ids = it.map(_._2).toSeq.sorted
-            val schema =
-              """{"type":"record","name":"doc","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"name","type":"string"},
-                |{"name":"lang","type":["null","string"]},
-                |{"name":"toks","type":{"type":"array","items":"long"}}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val recs = ids.map { d =>
-              G.VRecord(Vector(
-                "id" -> G.VLong(d),
-                "name" -> G.VString("doc-" + d + "-" +
-                  ("x" * (d % 17).toInt)),
-                "lang" -> (if (d % 7 == 0) G.VNull
-                           else G.VString(Langs((d % 5).toInt))),
-                "toks" -> G.VArray((0L until (1 + d % 5))
-                  .map(j => G.VLong((d + j) % 1000)).toVector)))
-            }
-            val nullBytes = graft.sources.AvroWrite.container(
-              schema, recs, "null", s"q335-$blobId", 256)
-            Seq("null", "deflate", "snappy", "zstandard").flatMap {
-              codec =>
-                val b =
-                  if (codec == "null") nullBytes
-                  else graft.sources.AvroWrite.container(
-                    schema, recs, codec, s"q335-$blobId", 256)
-                G.parseContainer(b).toSeq.flatMap { dec =>
-                  if (dec.records != recs.toVector) Nil
-                  else {
-                    val idSum = ids.sum
-                    val nameLen = ids.map(d =>
-                      ("doc-" + d + "-").length + d % 17).sum
-                    val nLangNull = ids.count(_ % 7 == 0).toLong
-                    val tokSlots = ids.map(d => 1 + d % 5).sum
-                    val tokSum = ids.map(d => (0L until (1 + d % 5))
-                      .map(j => (d + j) % 1000).sum).sum
-                    Seq((blobId, codec, ids.length.toLong, idSum,
-                      nameLen, nLangNull, tokSlots, tokSum,
-                      if (codec == "null" ||
-                        b.length < nullBytes.length) 1L else 0L))
-                  }
-                }
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val G = graft.sources.AvroGeneric
+          val schema =
+            """{"type":"record","name":"doc","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"name","type":"string"},
+              |{"name":"lang","type":["null","string"]},
+              |{"name":"toks","type":{"type":"array","items":"long"}}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val recs = ids.map { d =>
+            G.VRecord(Vector(
+              "id" -> G.VLong(d),
+              "name" -> G.VString(Blobs.payload(d)),
+              "lang" -> (if (d % 7 == 0) G.VNull
+                         else G.VString(Langs((d % 5).toInt))),
+              "toks" -> G.VArray((0L until (1 + d % 5))
+                .map(j => G.VLong((d + j) % 1000)).toVector)))
           }
-          .toDF("blob_id", "codec", "n_records", "id_sum",
+          val nullBytes = graft.sources.AvroWrite.container(
+            schema, recs, "null", s"q335-$blobId", 256)
+          Seq("null", "deflate", "snappy", "zstandard").flatMap {
+            codec =>
+              val b =
+                if (codec == "null") nullBytes
+                else graft.sources.AvroWrite.container(
+                  schema, recs, codec, s"q335-$blobId", 256)
+              G.parseContainer(b).toSeq.flatMap { dec =>
+                if (dec.records != recs.toVector) Nil
+                else {
+                  val idSum = ids.sum
+                  val nameLen = ids.map(d =>
+                    ("doc-" + d + "-").length + d % 17).sum
+                  val nLangNull = ids.count(_ % 7 == 0).toLong
+                  val tokSlots = ids.map(d => 1 + d % 5).sum
+                  val tokSum = ids.map(d => (0L until (1 + d % 5))
+                    .map(j => (d + j) % 1000).sum).sum
+                  Seq((blobId, codec, ids.length.toLong, idSum,
+                    nameLen, nLangNull, tokSlots, tokSum,
+                    if (codec == "null" ||
+                      b.length < nullBytes.length) 1L else 0L))
+                }
+              }
+          }
+        }.toDF("blob_id", "codec", "n_records", "id_sum",
             "name_len_sum", "n_lang_null", "tok_slots", "tok_sum",
             "beats_null")
       },
@@ -2336,61 +2139,49 @@ object WriterQueries {
     "q337_xz_own_encoder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val p1 = ids.map(d => "doc-" + d + "|" + (d % 29) + "\n")
-              .mkString
-            val p2 = ids.mkString(";")
-            val tar = graft.sources.Tar.write(Seq(
-              ("corpus.txt", p1.getBytes("UTF-8"), 1234567L),
-              ("ids.lst", p2.getBytes("UTF-8"), 1234567L)))
-            val E = graft.sources.LzmaEncode
-            def decodeOwn(z: Array[Byte]): Option[Array[Byte]] =
-              graft.sources.Xz.parse(z).flatMap { info =>
-                val out = new java.io.ByteArrayOutputStream()
-                var ok = info.checkType == 4
-                info.blocks.foreach { blk =>
-                  graft.sources.Lzma2.decode(z, blk.dataStart,
-                    blk.unpackedLen) match {
-                    case Some(x) => out.write(x, 0, x.length)
-                    case None => ok = false
-                  }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val p1 = ids.map(d => "doc-" + d + "|" + (d % 29) + "\n")
+            .mkString
+          val p2 = ids.mkString(";")
+          val tar = graft.sources.Tar.write(Seq(
+            ("corpus.txt", p1.getBytes("UTF-8"), 1234567L),
+            ("ids.lst", p2.getBytes("UTF-8"), 1234567L)))
+          val E = graft.sources.LzmaEncode
+          def decodeOwn(z: Array[Byte]): Option[Array[Byte]] =
+            graft.sources.Xz.parse(z).flatMap { info =>
+              val out = new java.io.ByteArrayOutputStream()
+              var ok = info.checkType == 4
+              info.blocks.foreach { blk =>
+                graft.sources.Lzma2.decode(z, blk.dataStart,
+                  blk.unpackedLen) match {
+                  case Some(x) => out.write(x, 0, x.length)
+                  case None => ok = false
                 }
-                if (ok) Some(out.toByteArray) else None
               }
-            val z1 = E.xz(tar)
-            val zN = E.xz(tar, blockSize = 2048)
-            val wantBlocks = (tar.length + 2047) / 2048
-            val gotBlocks = graft.sources.Xz.parse(zN)
-              .map(_.blocks.length).getOrElse(-1)
-            val al = E.alone(tar)
-            val rtExact =
-              decodeOwn(z1).exists(java.util.Arrays.equals(_, tar)) &&
-                decodeOwn(zN).exists(
-                  java.util.Arrays.equals(_, tar)) &&
-                graft.sources.Lzma2.decodeAlone(al).exists(
-                  java.util.Arrays.equals(_, tar))
-            val sizeLaw = z1.length < tar.length &&
-              al.length < tar.length
-            if (!(rtExact && sizeLaw && gotBlocks == wantBlocks)) Nil
-            else graft.sources.Tar.parse(blobId, tar).map { e =>
-              val payload = new String(tar, e.data_offset.toInt,
-                e.size.toInt, "UTF-8")
-              (blobId, e.entry_name, e.size, h60(payload),
-                tar.length.toLong, wantBlocks.toLong, 1L, 1L)
+              if (ok) Some(out.toByteArray) else None
             }
+          val z1 = E.xz(tar)
+          val zN = E.xz(tar, blockSize = 2048)
+          val wantBlocks = (tar.length + 2047) / 2048
+          val gotBlocks = graft.sources.Xz.parse(zN)
+            .map(_.blocks.length).getOrElse(-1)
+          val al = E.alone(tar)
+          val rtExact =
+            decodeOwn(z1).exists(java.util.Arrays.equals(_, tar)) &&
+              decodeOwn(zN).exists(
+                java.util.Arrays.equals(_, tar)) &&
+              graft.sources.Lzma2.decodeAlone(al).exists(
+                java.util.Arrays.equals(_, tar))
+          val sizeLaw = z1.length < tar.length &&
+            al.length < tar.length
+          if (!(rtExact && sizeLaw && gotBlocks == wantBlocks)) Nil
+          else graft.sources.Tar.parse(blobId, tar).map { e =>
+            val payload = new String(tar, e.data_offset.toInt,
+              e.size.toInt, "UTF-8")
+            (blobId, e.entry_name, e.size, hash60Bytes(payload.getBytes("UTF-8")),
+              tar.length.toLong, wantBlocks.toLong, 1L, 1L)
           }
-          .toDF("blob_id", "entry_name", "size", "data_hash",
+        }.toDF("blob_id", "entry_name", "size", "data_hash",
             "tar_len", "n_blocks", "xz_smaller", "rt_exact")
       },
       oracle = Some(s"""
@@ -2446,56 +2237,50 @@ object WriterQueries {
     "q341_parquet_v2_encodings_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length
-            val names = ids.map(d => f"doc-$d%012d/s-${d % 7}")
-            val langs = ids.map(d => s"lang-${d % 5}")
-            val scoreBits = ids.map(d =>
-              java.lang.Double.doubleToLongBits((d % 48) / 8.0))
-            val fields = Seq(
-              W.Leaf("doc_id", 0, 2),
-              W.Leaf("name", 0, 6, convertedType = 0),
-              W.Leaf("lang", 0, 6, convertedType = 0),
-              W.Leaf("score", 0, 5))
-            def mk(encs: (Int, Int, Int, Int)) = Seq(
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.toArray, enc = encs._1),
-              W.LeafData(Array.fill(n)(0), null,
-                bins = names.map(_.getBytes("UTF-8")).toArray,
-                enc = encs._2),
-              W.LeafData(Array.fill(n)(0), null,
-                bins = langs.map(_.getBytes("UTF-8")).toArray,
-                enc = encs._3),
-              W.LeafData(Array.fill(n)(0), null,
-                longs = scoreBits.toArray, enc = encs._4))
-            val v2 = W.writeFile(fields, mk((5, 7, 6, 9)),
-              pageRows = 512)
-            val plain = W.writeFile(fields, mk((0, 0, 0, 0)),
-              pageRows = 512)
-            val rt =
-              P.columnLongs(v2, "doc_id").exists(_.toSeq == ids) &&
-                P.columnStrings(v2, "name").exists(
-                  _.toSeq == names) &&
-                P.columnStrings(v2, "lang").exists(
-                  _.toSeq == langs) &&
-                P.columnLongs(v2, "score").exists(
-                  _.toSeq == scoreBits)
-            val smaller = v2.length < plain.length
-            if (!(rt && smaller)) Nil
-            else Seq((blobId, n.toLong, ids.sum,
-              names.map(_.length.toLong).sum,
-              langs.distinct.length.toLong,
-              scoreBits.map(java.lang.Double.longBitsToDouble).sum,
-              1L, 1L))
-          }
-          .toDF("blob_id", "n_rows", "id_sum", "name_len_sum",
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val n = ids.length
+          val names = ids.map(d => f"doc-$d%012d/s-${d % 7}")
+          val langs = ids.map(d => s"lang-${d % 5}")
+          val scoreBits = ids.map(d =>
+            java.lang.Double.doubleToLongBits((d % 48) / 8.0))
+          val fields = Seq(
+            W.Leaf("doc_id", 0, 2),
+            W.Leaf("name", 0, 6, convertedType = 0),
+            W.Leaf("lang", 0, 6, convertedType = 0),
+            W.Leaf("score", 0, 5))
+          def mk(encs: (Int, Int, Int, Int)) = Seq(
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.toArray, enc = encs._1),
+            W.LeafData(Array.fill(n)(0), null,
+              bins = names.map(_.getBytes("UTF-8")).toArray,
+              enc = encs._2),
+            W.LeafData(Array.fill(n)(0), null,
+              bins = langs.map(_.getBytes("UTF-8")).toArray,
+              enc = encs._3),
+            W.LeafData(Array.fill(n)(0), null,
+              longs = scoreBits.toArray, enc = encs._4))
+          val v2 = W.writeFile(fields, mk((5, 7, 6, 9)),
+            pageRows = 512)
+          val plain = W.writeFile(fields, mk((0, 0, 0, 0)),
+            pageRows = 512)
+          val rt =
+            P.columnLongs(v2, "doc_id").exists(_.toSeq == ids) &&
+              P.columnStrings(v2, "name").exists(
+                _.toSeq == names) &&
+              P.columnStrings(v2, "lang").exists(
+                _.toSeq == langs) &&
+              P.columnLongs(v2, "score").exists(
+                _.toSeq == scoreBits)
+          val smaller = v2.length < plain.length
+          if (!(rt && smaller)) Nil
+          else Seq((blobId, n.toLong, ids.sum,
+            names.map(_.length.toLong).sum,
+            langs.distinct.length.toLong,
+            scoreBits.map(java.lang.Double.longBitsToDouble).sum,
+            1L, 1L))
+        }.toDF("blob_id", "n_rows", "id_sum", "name_len_sum",
             "n_langs", "score_sum", "rt_exact", "v2_smaller")
       },
       oracle = Some("""
@@ -2528,42 +2313,36 @@ object WriterQueries {
     "q342_avro_archive_codecs" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val G = graft.sources.AvroGeneric
-            val ids = it.map(_._2).toSeq.sorted
-            val schema =
-              """{"type":"record","name":"doc","fields":[""" +
-                """{"name":"id","type":"long"},""" +
-                """{"name":"body","type":"string"}]}"""
-            val recs = ids.map { d =>
-              G.VRecord(Vector(
-                "id" -> G.VLong(d),
-                "body" -> G.VString(
-                  s"doc $d lang ${d % 5} " + ("lorem " * (d % 9).toInt))))
-            }
-            val nullBytes = graft.sources.AvroWrite.container(
-              schema, recs, "null", s"q342-$blobId", 512)
-            Seq("bzip2", "xz").flatMap { codec =>
-              val b = graft.sources.AvroWrite.container(
-                schema, recs, codec, s"q342-$blobId", 512)
-              G.parseContainer(b).toSeq.flatMap { dec =>
-                if (dec.records != recs.toVector ||
-                  b.length >= nullBytes.length) Nil
-                else {
-                  val bodyLen = ids.map(d =>
-                    (s"doc $d lang ${d % 5} ").length +
-                      6L * (d % 9)).sum
-                  Seq((blobId, codec, ids.length.toLong, ids.sum,
-                    bodyLen, 1L, 1L))
-                }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val G = graft.sources.AvroGeneric
+          val schema =
+            """{"type":"record","name":"doc","fields":[""" +
+              """{"name":"id","type":"long"},""" +
+              """{"name":"body","type":"string"}]}"""
+          val recs = ids.map { d =>
+            G.VRecord(Vector(
+              "id" -> G.VLong(d),
+              "body" -> G.VString(
+                s"doc $d lang ${d % 5} " + ("lorem " * (d % 9).toInt))))
+          }
+          val nullBytes = graft.sources.AvroWrite.container(
+            schema, recs, "null", s"q342-$blobId", 512)
+          Seq("bzip2", "xz").flatMap { codec =>
+            val b = graft.sources.AvroWrite.container(
+              schema, recs, codec, s"q342-$blobId", 512)
+            G.parseContainer(b).toSeq.flatMap { dec =>
+              if (dec.records != recs.toVector ||
+                b.length >= nullBytes.length) Nil
+              else {
+                val bodyLen = ids.map(d =>
+                  (s"doc $d lang ${d % 5} ").length +
+                    6L * (d % 9)).sum
+                Seq((blobId, codec, ids.length.toLong, ids.sum,
+                  bodyLen, 1L, 1L))
               }
             }
           }
-          .toDF("blob_id", "codec", "n_records", "id_sum",
+        }.toDF("blob_id", "codec", "n_records", "id_sum",
             "body_len_sum", "rt_exact", "beats_null")
       },
       oracle = Some("""
@@ -2601,80 +2380,74 @@ object WriterQueries {
     "q343_warc_cdx_index_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val W = graft.sources.WarcWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def uriOf(d: Long) = s"https://ex-${d % 7}.org/doc/$d?x=${d % 3}"
-            def payloadOf(d: Long) =
-              s"payload for $d: " + ("w" * (d % 11).toInt)
-            def tsOf(d: Long) = f"20260101${(d % 24)}%02d0000"
-            val recs = ids.map { d =>
-              W.record("response", uriOf(d), f"$d%08d", 
-                "2026-01-01T00:00:00Z",
-                payloadOf(d).getBytes("UTF-8"))
-            }
-            val (gz, offs) = W.writeGzIndexed(recs)
-            val fname = s"blob-$blobId.warc.gz"
-            val entries = ids.zip(offs).map { case (d, (off, len)) =>
-              W.CdxEntry(uriOf(d), tsOf(d), off, len,
-                W.sha1B32(payloadOf(d).getBytes("UTF-8")), fname)
-            }
-            val cdx = new String(W.cdxj(entries), "UTF-8")
-            val lines = cdx.split("\n").filter(_.nonEmpty)
-            // law 1: lines sorted by (SURT, ts)
-            val keys = lines.map { l =>
-              val a = l.split(" ", 3); (a(0), a(1))
-            }
-            val sortedOk = keys.zip(keys.drop(1)).forall {
-              case (x, y) => x._1 < y._1 ||
-                (x._1 == y._1 && x._2 <= y._2)
-            }
-            // law 2: index-driven fetch decodes ONLY the probed
-            // members; payload + digest byte-exact
-            val byUri = entries.map(e => (e.uri, e)).toMap
-            val probes = ids.filter(_ % 5 == 2)
-            var nDecoded = 0L
-            var probeLen = 0L
-            var fetchOk = true
-            probes.foreach { d =>
-              byUri.get(uriOf(d)) match {
-                case Some(e) =>
-                  val slice = java.util.Arrays.copyOfRange(gz,
-                    e.offset.toInt, (e.offset + e.length).toInt)
-                  graft.sources.Warc.gunzip(slice)
-                    .map(m => graft.sources.Warc.parse(blobId, m)) match {
-                    case Some(Seq(r)) =>
-                      nDecoded += 1
-                      val want = payloadOf(d)
-                      if (r.target_uri != uriOf(d) ||
-                        r.payload != want ||
-                        e.digest != W.sha1B32(want.getBytes("UTF-8")))
-                        fetchOk = false
-                      else probeLen += r.content_length
-                    case _ => fetchOk = false
-                  }
-                case None => fetchOk = false
-              }
-            }
-            // law 3: the index's length census == full-archive replay
-            val full = graft.sources.Warc.parseAuto(blobId, gz)
-            val censusOk =
-              full.length == ids.length &&
-                full.map(_.content_length).sum ==
-                  ids.map(payloadOf(_).length.toLong).sum
-            val totalLen = full.map(_.content_length).sum
-            if (!(sortedOk && fetchOk && censusOk &&
-              nDecoded == probes.length.toLong &&
-              lines.length == ids.length)) Nil
-            else Seq((blobId, ids.length.toLong,
-              lines.length.toLong, nDecoded, probeLen, totalLen,
-              1L, 1L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.WarcWrite
+          def uriOf(d: Long) = s"https://ex-${d % 7}.org/doc/$d?x=${d % 3}"
+          def payloadOf(d: Long) =
+            s"payload for $d: " + ("w" * (d % 11).toInt)
+          def tsOf(d: Long) = f"20260101${(d % 24)}%02d0000"
+          val recs = ids.map { d =>
+            W.record("response", uriOf(d), f"$d%08d", 
+              "2026-01-01T00:00:00Z",
+              payloadOf(d).getBytes("UTF-8"))
           }
-          .toDF("blob_id", "n_records", "n_cdx", "n_probes",
+          val (gz, offs) = W.writeGzIndexed(recs)
+          val fname = s"blob-$blobId.warc.gz"
+          val entries = ids.zip(offs).map { case (d, (off, len)) =>
+            W.CdxEntry(uriOf(d), tsOf(d), off, len,
+              W.sha1B32(payloadOf(d).getBytes("UTF-8")), fname)
+          }
+          val cdx = new String(W.cdxj(entries), "UTF-8")
+          val lines = cdx.split("\n").filter(_.nonEmpty)
+          // law 1: lines sorted by (SURT, ts)
+          val keys = lines.map { l =>
+            val a = l.split(" ", 3); (a(0), a(1))
+          }
+          val sortedOk = keys.zip(keys.drop(1)).forall {
+            case (x, y) => x._1 < y._1 ||
+              (x._1 == y._1 && x._2 <= y._2)
+          }
+          // law 2: index-driven fetch decodes ONLY the probed
+          // members; payload + digest byte-exact
+          val byUri = entries.map(e => (e.uri, e)).toMap
+          val probes = ids.filter(_ % 5 == 2)
+          var nDecoded = 0L
+          var probeLen = 0L
+          var fetchOk = true
+          probes.foreach { d =>
+            byUri.get(uriOf(d)) match {
+              case Some(e) =>
+                val slice = java.util.Arrays.copyOfRange(gz,
+                  e.offset.toInt, (e.offset + e.length).toInt)
+                graft.sources.Warc.gunzip(slice)
+                  .map(m => graft.sources.Warc.parse(blobId, m)) match {
+                  case Some(Seq(r)) =>
+                    nDecoded += 1
+                    val want = payloadOf(d)
+                    if (r.target_uri != uriOf(d) ||
+                      r.payload != want ||
+                      e.digest != W.sha1B32(want.getBytes("UTF-8")))
+                      fetchOk = false
+                    else probeLen += r.content_length
+                  case _ => fetchOk = false
+                }
+              case None => fetchOk = false
+            }
+          }
+          // law 3: the index's length census == full-archive replay
+          val full = graft.sources.Warc.parseAuto(blobId, gz)
+          val censusOk =
+            full.length == ids.length &&
+              full.map(_.content_length).sum ==
+                ids.map(payloadOf(_).length.toLong).sum
+          val totalLen = full.map(_.content_length).sum
+          if (!(sortedOk && fetchOk && censusOk &&
+            nDecoded == probes.length.toLong &&
+            lines.length == ids.length)) Nil
+          else Seq((blobId, ids.length.toLong,
+            lines.length.toLong, nDecoded, probeLen, totalLen,
+            1L, 1L))
+        }.toDF("blob_id", "n_records", "n_cdx", "n_probes",
             "probe_len_sum", "total_len", "sorted_ok", "fetch_exact")
       },
       oracle = Some("""
@@ -2717,43 +2490,37 @@ object WriterQueries {
     "q344_zstd_dictionary" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val E = graft.sources.ZstdEncode
-            val Z = graft.sources.Zstd
-            val ids = it.map(_._2).toSeq.sorted
-            val langs = Seq("en", "es", "fr", "de", "pt")
-            def docOf(d: Long): String =
-              "{'license': 'cc-by-4.0', 'source': 'commoncrawl', " +
-                "'quality_gates': ['gopher', 'dedup', 'decontam'], " +
-                s"'doc_id': $d, 'lang': '${langs((d % 5).toInt)}', " +
-                s"'text': 'sample ${d % 13}'}"
-            val dict = docOf(0L).getBytes("UTF-8")
-            var rawSum = 0L
-            var dictSum = 0L
-            var plainSum = 0L
-            var rt = true
-            ids.foreach { d =>
-              val doc = docOf(d).getBytes("UTF-8")
-              rawSum += doc.length
-              val z = E.compressWithDict(doc, dict)
-              dictSum += z.length
-              plainSum += E.compress(doc).length
-              val back = Z.walkWithDict(z, dict)
-              if (!back.exists(fr => fr.length == 1 &&
-                fr.head.checksumState == "ok" &&
-                java.util.Arrays.equals(fr.head.decoded, doc)))
-                rt = false
-              // the frame must be undecodable WITHOUT its dictionary
-              if (Z.walk(z).isDefined) rt = false
-            }
-            if (!(rt && dictSum < plainSum)) Nil
-            else Seq((blobId, ids.length.toLong, rawSum, 1L, 1L))
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val E = graft.sources.ZstdEncode
+          val Z = graft.sources.Zstd
+          val langs = Seq("en", "es", "fr", "de", "pt")
+          def docOf(d: Long): String =
+            "{'license': 'cc-by-4.0', 'source': 'commoncrawl', " +
+              "'quality_gates': ['gopher', 'dedup', 'decontam'], " +
+              s"'doc_id': $d, 'lang': '${langs((d % 5).toInt)}', " +
+              s"'text': 'sample ${d % 13}'}"
+          val dict = docOf(0L).getBytes("UTF-8")
+          var rawSum = 0L
+          var dictSum = 0L
+          var plainSum = 0L
+          var rt = true
+          ids.foreach { d =>
+            val doc = docOf(d).getBytes("UTF-8")
+            rawSum += doc.length
+            val z = E.compressWithDict(doc, dict)
+            dictSum += z.length
+            plainSum += E.compress(doc).length
+            val back = Z.walkWithDict(z, dict)
+            if (!back.exists(fr => fr.length == 1 &&
+              fr.head.checksumState == "ok" &&
+              java.util.Arrays.equals(fr.head.decoded, doc)))
+              rt = false
+            // the frame must be undecodable WITHOUT its dictionary
+            if (Z.walk(z).isDefined) rt = false
           }
-          .toDF("blob_id", "n_docs", "raw_len_sum", "rt_exact",
+          if (!(rt && dictSum < plainSum)) Nil
+          else Seq((blobId, ids.length.toLong, rawSum, 1L, 1L))
+        }.toDF("blob_id", "n_docs", "raw_len_sum", "rt_exact",
             "dict_beats_plain")
       },
       // KFIXED = every non-digit char of the doc template (the two
@@ -2977,53 +2744,47 @@ object WriterQueries {
     "q348_orc_temporal_decimal_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val W = graft.sources.OrcWrite
-            val Epoch2015Us = 1420070400000000L
-            def tsOf(d: Long): Long =
-              if (d % 9 == 0) Epoch2015Us - d * 1000000L - 500000L
-              else 1700000000000000L + d * 1000000L +
-                (d % 1000) * 1000L
-            def amtOf(d: Long): Long = (d * 37) % 100000L - 5000L
-            val cols = Seq(
-              W.OLongCol("event_id", ids.map(Some(_))),
-              W.OTimestampCol("ts", ids.map(tsOf)),
-              W.ODecimalCol("amount", ids.map(amtOf), scale = 2),
-              W.ODictStringCol("kind", ids.map(d =>
-                Some(s"k${d % 5}"))))
-            val bytes = W.writeTable(cols)
-            val snappy = W.writeTable(cols, compression = 2)
-            val O = graft.sources.Orc
-            O.parseTail(snappy).toSeq.flatMap { t =>
-              if (t.typeKinds != Seq(12, 4, 9, 14, 7)) Nil
-              else {
-                val st = t.stripes.head
-                (O.stripeColumnLongs(snappy, t, st, 1),
-                  O.stripeColumnTimestampMicros(snappy, t, st, 2),
-                  O.stripeColumnDecimals(snappy, t, st, 3),
-                  O.stripeColumnStrings(snappy, t, st, 4)) match {
-                  case (Some(evs), Some(tss), Some((uns, scs)),
-                    Some(kinds))
-                    if evs.toSeq == ids &&
-                      tss.toSeq == ids.map(tsOf) &&
-                      uns.toSeq == ids.map(amtOf) &&
-                      scs.forall(_ == 2L) &&
-                      kinds.toSeq == ids.map(d => s"k${d % 5}") =>
-                    Seq((blobId, ids.length.toLong, ids.sum,
-                      tss.sum, uns.sum, 2L,
-                      kinds.distinct.length.toLong,
-                      if (snappy.length < bytes.length) 1L else 0L))
-                  case _ => Nil
-                }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.OrcWrite
+          val Epoch2015Us = 1420070400000000L
+          def tsOf(d: Long): Long =
+            if (d % 9 == 0) Epoch2015Us - d * 1000000L - 500000L
+            else 1700000000000000L + d * 1000000L +
+              (d % 1000) * 1000L
+          def amtOf(d: Long): Long = (d * 37) % 100000L - 5000L
+          val cols = Seq(
+            W.OLongCol("event_id", ids.map(Some(_))),
+            W.OTimestampCol("ts", ids.map(tsOf)),
+            W.ODecimalCol("amount", ids.map(amtOf), scale = 2),
+            W.ODictStringCol("kind", ids.map(d =>
+              Some(s"k${d % 5}"))))
+          val bytes = W.writeTable(cols)
+          val snappy = W.writeTable(cols, compression = 2)
+          val O = graft.sources.Orc
+          O.parseTail(snappy).toSeq.flatMap { t =>
+            if (t.typeKinds != Seq(12, 4, 9, 14, 7)) Nil
+            else {
+              val st = t.stripes.head
+              (O.stripeColumnLongs(snappy, t, st, 1),
+                O.stripeColumnTimestampMicros(snappy, t, st, 2),
+                O.stripeColumnDecimals(snappy, t, st, 3),
+                O.stripeColumnStrings(snappy, t, st, 4)) match {
+                case (Some(evs), Some(tss), Some((uns, scs)),
+                  Some(kinds))
+                  if evs.toSeq == ids &&
+                    tss.toSeq == ids.map(tsOf) &&
+                    uns.toSeq == ids.map(amtOf) &&
+                    scs.forall(_ == 2L) &&
+                    kinds.toSeq == ids.map(d => s"k${d % 5}") =>
+                  Seq((blobId, ids.length.toLong, ids.sum,
+                    tss.sum, uns.sum, 2L,
+                    kinds.distinct.length.toLong,
+                    if (snappy.length < bytes.length) 1L else 0L))
+                case _ => Nil
               }
             }
           }
-          .toDF("blob_id", "n_rows", "id_sum", "ts_sum", "amount_sum",
+        }.toDF("blob_id", "n_rows", "id_sum", "ts_sum", "amount_sum",
             "dec_scale", "n_kinds", "snappy_smaller")
       },
       oracle = Some("""
@@ -3146,61 +2907,55 @@ object WriterQueries {
     "q350_parquet_page_crc_write" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length
-            val fields = Seq(
-              W.Leaf("doc_id", 0, 2),
-              W.Leaf("tag", 0, 6, convertedType = 0))
-            val data = Seq(
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.toArray),
-              W.LeafData(Array.fill(n)(0), null,
-                bins = ids.map(d => s"t${d % 7}".getBytes("UTF-8"))
-                  .toArray, dict = true))
-            val crcd = W.writeFile(fields, data, withCrc = true)
-            val plain = W.writeFile(fields, data)
-            def sums(b: Array[Byte]): Option[(Long, Long)] =
-              for {
-                rs <- P.columnLongs(b, "doc_id")
-                ts <- P.columnStrings(b, "tag")
-              } yield (rs.sum, ts.map(_.length.toLong).sum)
-            val want = sums(crcd)
-            val rt = want.isDefined && sums(plain) == want
-            // flip sweep over the page region (everything before the
-            // footer is pages here); the files differ in length --
-            // each sweeps its own bound
-            def silentFlips(b: Array[Byte]): Int = {
-              var count = 0
-              var i = 4
-              val end = math.min(b.length - 8, 2048)
-              while (i < end) {
-                val bad = b.clone(); bad(i) = (bad(i) ^ 0x5a).toByte
-                sums(bad) match {
-                  case Some(v) if want.contains(v) => ()
-                  case Some(_) => count += 1
-                  case None => ()
-                }
-                i += 3
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val n = ids.length
+          val fields = Seq(
+            W.Leaf("doc_id", 0, 2),
+            W.Leaf("tag", 0, 6, convertedType = 0))
+          val data = Seq(
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.toArray),
+            W.LeafData(Array.fill(n)(0), null,
+              bins = ids.map(d => s"t${d % 7}".getBytes("UTF-8"))
+                .toArray, dict = true))
+          val crcd = W.writeFile(fields, data, withCrc = true)
+          val plain = W.writeFile(fields, data)
+          def sums(b: Array[Byte]): Option[(Long, Long)] =
+            for {
+              rs <- P.columnLongs(b, "doc_id")
+              ts <- P.columnStrings(b, "tag")
+            } yield (rs.sum, ts.map(_.length.toLong).sum)
+          val want = sums(crcd)
+          val rt = want.isDefined && sums(plain) == want
+          // flip sweep over the page region (everything before the
+          // footer is pages here); the files differ in length --
+          // each sweeps its own bound
+          def silentFlips(b: Array[Byte]): Int = {
+            var count = 0
+            var i = 4
+            val end = math.min(b.length - 8, 2048)
+            while (i < end) {
+              val bad = b.clone(); bad(i) = (bad(i) ^ 0x5a).toByte
+              sums(bad) match {
+                case Some(v) if want.contains(v) => ()
+                case Some(_) => count += 1
+                case None => ()
               }
-              count
+              i += 3
             }
-            val crcSilent = silentFlips(crcd)
-            val plainSilent = silentFlips(plain)
-            (want, rt) match {
-              case (Some((idSum, tagLen)), true)
-                if crcSilent == 0 && plainSilent > 0 =>
-                Seq((blobId, n.toLong, idSum, tagLen, 1L, 1L))
-              case _ => Nil
-            }
+            count
           }
-          .toDF("blob_id", "n_rows", "id_sum", "tag_len_sum",
+          val crcSilent = silentFlips(crcd)
+          val plainSilent = silentFlips(plain)
+          (want, rt) match {
+            case (Some((idSum, tagLen)), true)
+              if crcSilent == 0 && plainSilent > 0 =>
+              Seq((blobId, n.toLong, idSum, tagLen, 1L, 1L))
+            case _ => Nil
+          }
+        }.toDF("blob_id", "n_rows", "id_sum", "tag_len_sum",
             "crc_catches_all", "silent_possible_without")
       },
       oracle = Some("""
@@ -3318,76 +3073,69 @@ object WriterQueries {
     "q353_parquet_encryption" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val C = graft.sources.ParquetCrypto
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length
-            def md5(x: String): Array[Byte] =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(x.getBytes("UTF-8"))
-            val footerKey = md5("pqenc:" + ids.mkString(","))
-            val valKey = md5("pqenccol:" + ids.mkString(","))
-            val aadUnique = md5("pqencaad:" + ids.mkString(","))
-              .take(8)
-            val fields = Seq(
-              W.Leaf("rec_id", 0, 2),
-              W.Leaf("val", 0, 2),
-              W.Leaf("cat", 0, 6, convertedType = 0))
-            val data = Seq(
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.toArray),
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.map(d => (d * 29) % 1021).toArray),
-              W.LeafData(Array.fill(n)(0), null,
-                bins = ids.map(d => s"c${d % 3}".getBytes("UTF-8"))
-                  .toArray, dict = true))
-            val plain = W.writeFile(fields, data, pageRows = 32)
-            val res = C.encryptFileDeterministic(plain,
-              C.Keys(footerKey, Map("val" -> valKey)), aadUnique)
-            res.toSeq.flatMap { enc =>
-              val colKeys = Map("k:val" -> valKey)
-              val back = C.decryptFile(enc.bytes, footerKey, colKeys)
-              val identityOk = back.exists(
-                java.util.Arrays.equals(_, plain))
-              // tamper: flip a ciphertext byte mid first data page
-              val pm = enc.modules
-                .find(m => m.modType == C.ModDataPage)
-              val flipClosed = pm.exists { m =>
-                val x = enc.bytes.clone()
-                x(m.off + m.len / 2) =
-                  (x(m.off + m.len / 2) ^ 0x01).toByte
-                C.decryptFile(x, footerKey, colKeys).isEmpty
-              }
-              val wrongClosed = C.decryptFile(enc.bytes,
-                footerKey.reverse, colKeys).isEmpty
-              val missingClosed =
-                C.decryptFile(enc.bytes, footerKey).isEmpty
-              val sums = back.flatMap { b =>
-                for {
-                  rs <- P.columnLongs(b, "rec_id")
-                  vs <- P.columnLongs(b, "val")
-                  cs <- P.columnStrings(b, "cat")
-                  if rs.length == vs.length && cs.length == rs.length
-                } yield (rs.length.toLong, rs.sum, vs.sum,
-                  cs.map(_.length.toLong).sum)
-              }
-              sums.toSeq.map { case (nr, idSum, valSum, catLen) =>
-                (t, enc.modules.length.toLong, nr, idSum, valSum,
-                  catLen,
-                  if (identityOk) 1L else 0L,
-                  if (flipClosed) 1L else 0L,
-                  if (wrongClosed) 1L else 0L,
-                  if (missingClosed) 1L else 0L)
-              }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val C = graft.sources.ParquetCrypto
+          val n = ids.length
+          def md5(x: String): Array[Byte] =
+            Md5Hashes.digest(x.getBytes("UTF-8"))
+          val footerKey = md5("pqenc:" + ids.mkString(","))
+          val valKey = md5("pqenccol:" + ids.mkString(","))
+          val aadUnique = md5("pqencaad:" + ids.mkString(","))
+            .take(8)
+          val fields = Seq(
+            W.Leaf("rec_id", 0, 2),
+            W.Leaf("val", 0, 2),
+            W.Leaf("cat", 0, 6, convertedType = 0))
+          val data = Seq(
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.toArray),
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.map(d => (d * 29) % 1021).toArray),
+            W.LeafData(Array.fill(n)(0), null,
+              bins = ids.map(d => s"c${d % 3}".getBytes("UTF-8"))
+                .toArray, dict = true))
+          val plain = W.writeFile(fields, data, pageRows = 32)
+          val res = C.encryptFileDeterministic(plain,
+            C.Keys(footerKey, Map("val" -> valKey)), aadUnique)
+          res.toSeq.flatMap { enc =>
+            val colKeys = Map("k:val" -> valKey)
+            val back = C.decryptFile(enc.bytes, footerKey, colKeys)
+            val identityOk = back.exists(
+              java.util.Arrays.equals(_, plain))
+            // tamper: flip a ciphertext byte mid first data page
+            val pm = enc.modules
+              .find(m => m.modType == C.ModDataPage)
+            val flipClosed = pm.exists { m =>
+              val x = enc.bytes.clone()
+              x(m.off + m.len / 2) =
+                (x(m.off + m.len / 2) ^ 0x01).toByte
+              C.decryptFile(x, footerKey, colKeys).isEmpty
+            }
+            val wrongClosed = C.decryptFile(enc.bytes,
+              footerKey.reverse, colKeys).isEmpty
+            val missingClosed =
+              C.decryptFile(enc.bytes, footerKey).isEmpty
+            val sums = back.flatMap { b =>
+              for {
+                rs <- P.columnLongs(b, "rec_id")
+                vs <- P.columnLongs(b, "val")
+                cs <- P.columnStrings(b, "cat")
+                if rs.length == vs.length && cs.length == rs.length
+              } yield (rs.length.toLong, rs.sum, vs.sum,
+                cs.map(_.length.toLong).sum)
+            }
+            sums.toSeq.map { case (nr, idSum, valSum, catLen) =>
+              (t, enc.modules.length.toLong, nr, idSum, valSum,
+                catLen,
+                if (identityOk) 1L else 0L,
+                if (flipClosed) 1L else 0L,
+                if (wrongClosed) 1L else 0L,
+                if (missingClosed) 1L else 0L)
             }
           }
-          .toDF("table_id", "n_modules", "n_rows", "id_sum",
+        }.toDF("table_id", "n_modules", "n_rows", "id_sum",
             "val_sum", "cat_len_sum", "identity_ok", "flip_closed",
             "wrongkey_closed", "missingkey_closed")
       },
@@ -3436,15 +3184,12 @@ object WriterQueries {
               .mkString.getBytes("UTF-8")
             // content-keyed: same doc_ids carry different texts at
             // different scale factors
-            val key = java.security.MessageDigest.getInstance("MD5")
-              .digest("brotli:".getBytes("UTF-8") ++ payload)
-              .map("%02x".format(_)).mkString
+            val key = md5Hex("brotli:".getBytes("UTF-8") ++ payload)
             (b, key, payload)
           }
           .toDF("blob_id", "blob_key", "payload")
         blobs
-          .join(broadcast(s.read.parquet(
-            "/root/repo/fixtures/brotli_files.parquet")), "blob_key")
+          .transform(Blobs.join(_, "brotli_files.parquet"))
           .select(col("blob_id"), col("payload"), col("kind"),
             col("file_bytes"))
           .as[(Long, Array[Byte], String, Array[Byte])]
@@ -3460,8 +3205,7 @@ object WriterQueries {
                 .exists(java.util.Arrays.equals(_, payload))) 1L
               else 0L
             val q11md5 = byKind.get("q11").flatMap(B.decode(_))
-              .map(o => java.security.MessageDigest.getInstance("MD5")
-                .digest(o).map("%02x".format(_)).mkString)
+              .map(o => md5Hex(o))
               .getOrElse("")
             val dmgClosed =
               if (byKind.get("q11").forall(x => B.decode(
@@ -3537,94 +3281,88 @@ object WriterQueries {
       build = (s, dir) => {
         import s.implicits._
         import graft.sources.Json.{JArray, JLong, JObject, JString}
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val P = graft.sources.Puffin
-            val T = graft.sources.ThetaSketch
-            val J = graft.sources.Json
-            val sid = 3000L + t
-            def jstr(x: String) = "\"" + x + "\""
-            val cols = Seq(
-              (1, ids),
-              (2, ids.map(d => (d * 13) % 97)),
-              (3, ids.map(d => (d / 6) % 23)))
-            val blobs = cols.map { case (fid, vs) =>
-              val sk = T.compact(vs)
-              val ndv = T.parse(sk).map(_.estimate.round).getOrElse(-1L)
-              P.Blob("apache-datasketches-theta-v1", Seq(fid), sid,
-                1L, sk, Map("ndv" -> ndv.toString))
-            }
-            val puffin =
-              P.write(blobs, Map("created-by" -> "graft engine"))
-            val fsz = P.footerSize(puffin).getOrElse(-1)
-            // iceberg metadata with the statistics entry (spec field
-            // names), canonical JSON
-            val statsPath = s"stats-$sid.puffin"
-            val meta = (s"""{"current-snapshot-id": $sid, """ +
-              s""""format-version": 2, "statistics": [{""" +
-              s""""file-footer-size-in-bytes": $fsz, """ +
-              s""""file-size-in-bytes": ${puffin.length}, """ +
-              s""""snapshot-id": $sid, """ +
-              s""""statistics-path": ${jstr(statsPath)}}]}""")
-              .getBytes("UTF-8")
-            val bundle = Map(
-              "metadata.json" -> meta, statsPath -> puffin)
-            // ---- read side: own walk over own bytes ----
-            val res = for {
-              m <- J.parse(new String(bundle("metadata.json"), "UTF-8"))
-              mo <- Some(m).collect { case o: JObject => o }
-              cur <- mo.get("current-snapshot-id")
-                .collect { case JLong(x) => x }
-              stats <- mo.get("statistics").collect {
-                case JArray(xs) => xs.collect { case o: JObject => o }
-              }
-              entry <- stats.find(_.get("snapshot-id")
-                .contains(JLong(cur)))
-              path <- entry.get("statistics-path")
-                .collect { case JString(x) => x }
-              fileSz <- entry.get("file-size-in-bytes")
-                .collect { case JLong(x) => x }
-              ftrSz <- entry.get("file-footer-size-in-bytes")
-                .collect { case JLong(x) => x }
-              file <- bundle.get(path)
-              if fileSz == file.length.toLong
-              (metas, _) <- P.read(file)
-              if metas.length == 3
-            } yield {
-              val footerOk =
-                P.footerSize(file).contains(ftrSz.toInt) &&
-                  metas.forall(b =>
-                    b._1.snapshotId == cur &&
-                      b._1.tpe == "apache-datasketches-theta-v1")
-              val ndvs = metas.map { case (bm, bytes) =>
-                val est = T.parse(bytes).map(_.estimate.round)
-                  .getOrElse(-1L)
-                // the recorded ndv property must agree w/ the sketch
-                (bm.fields.head,
-                  if (bm.properties.get("ndv")
-                    .contains(est.toString)) est
-                  else -1L)
-              }.toMap
-              // planning probe: broadcast the min-NDV side (field 1
-              // vs field 2), ties to the lower field id
-              val bcast =
-                if (ndvs(1) <= ndvs(2)) 1L else 2L
-              val flipClosed = {
-                val x = file.clone()
-                x(0) = (x(0) ^ 0x01).toByte
-                if (P.read(x).isEmpty) 1L else 0L
-              }
-              (t, ndvs(1), ndvs(2), ndvs(3), bcast,
-                metas.length.toLong,
-                if (footerOk) 1L else 0L, flipClosed)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val P = graft.sources.Puffin
+          val T = graft.sources.ThetaSketch
+          val J = graft.sources.Json
+          val sid = 3000L + t
+          def jstr(x: String) = "\"" + x + "\""
+          val cols = Seq(
+            (1, ids),
+            (2, ids.map(d => (d * 13) % 97)),
+            (3, ids.map(d => (d / 6) % 23)))
+          val blobs = cols.map { case (fid, vs) =>
+            val sk = T.compact(vs)
+            val ndv = T.parse(sk).map(_.estimate.round).getOrElse(-1L)
+            P.Blob("apache-datasketches-theta-v1", Seq(fid), sid,
+              1L, sk, Map("ndv" -> ndv.toString))
           }
-          .toDF("table_id", "ndv_rec", "ndv_val", "ndv_grp",
+          val puffin =
+            P.write(blobs, Map("created-by" -> "graft engine"))
+          val fsz = P.footerSize(puffin).getOrElse(-1)
+          // iceberg metadata with the statistics entry (spec field
+          // names), canonical JSON
+          val statsPath = s"stats-$sid.puffin"
+          val meta = (s"""{"current-snapshot-id": $sid, """ +
+            s""""format-version": 2, "statistics": [{""" +
+            s""""file-footer-size-in-bytes": $fsz, """ +
+            s""""file-size-in-bytes": ${puffin.length}, """ +
+            s""""snapshot-id": $sid, """ +
+            s""""statistics-path": ${jstr(statsPath)}}]}""")
+            .getBytes("UTF-8")
+          val bundle = Map(
+            "metadata.json" -> meta, statsPath -> puffin)
+          // ---- read side: own walk over own bytes ----
+          val res = for {
+            m <- J.parse(new String(bundle("metadata.json"), "UTF-8"))
+            mo <- Some(m).collect { case o: JObject => o }
+            cur <- mo.get("current-snapshot-id")
+              .collect { case JLong(x) => x }
+            stats <- mo.get("statistics").collect {
+              case JArray(xs) => xs.collect { case o: JObject => o }
+            }
+            entry <- stats.find(_.get("snapshot-id")
+              .contains(JLong(cur)))
+            path <- entry.get("statistics-path")
+              .collect { case JString(x) => x }
+            fileSz <- entry.get("file-size-in-bytes")
+              .collect { case JLong(x) => x }
+            ftrSz <- entry.get("file-footer-size-in-bytes")
+              .collect { case JLong(x) => x }
+            file <- bundle.get(path)
+            if fileSz == file.length.toLong
+            (metas, _) <- P.read(file)
+            if metas.length == 3
+          } yield {
+            val footerOk =
+              P.footerSize(file).contains(ftrSz.toInt) &&
+                metas.forall(b =>
+                  b._1.snapshotId == cur &&
+                    b._1.tpe == "apache-datasketches-theta-v1")
+            val ndvs = metas.map { case (bm, bytes) =>
+              val est = T.parse(bytes).map(_.estimate.round)
+                .getOrElse(-1L)
+              // the recorded ndv property must agree w/ the sketch
+              (bm.fields.head,
+                if (bm.properties.get("ndv")
+                  .contains(est.toString)) est
+                else -1L)
+            }.toMap
+            // planning probe: broadcast the min-NDV side (field 1
+            // vs field 2), ties to the lower field id
+            val bcast =
+              if (ndvs(1) <= ndvs(2)) 1L else 2L
+            val flipClosed = {
+              val x = file.clone()
+              x(0) = (x(0) ^ 0x01).toByte
+              if (P.read(x).isEmpty) 1L else 0L
+            }
+            (t, ndvs(1), ndvs(2), ndvs(3), bcast,
+              metas.length.toLong,
+              if (footerOk) 1L else 0L, flipClosed)
+          }
+          res.toSeq
+        }.toDF("table_id", "ndv_rec", "ndv_val", "ndv_grp",
             "broadcast_field", "n_blobs", "footer_ok", "flip_closed")
       },
       oracle = Some("""
@@ -3737,84 +3475,77 @@ object WriterQueries {
     "q359_parquet_encryption_ctr" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.ParquetWrite
-            val P = graft.sources.Parquet
-            val C = graft.sources.ParquetCrypto
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length
-            def md5(x: String): Array[Byte] =
-              java.security.MessageDigest.getInstance("MD5")
-                .digest(x.getBytes("UTF-8"))
-            val footerKey = md5("pqctr:" + ids.mkString(","))
-            val valKey = md5("pqctrcol:" + ids.mkString(","))
-            val aadUnique = md5("pqctraad:" + ids.mkString(","))
-              .take(8)
-            val fields = Seq(
-              W.Leaf("rec_id", 0, 2), W.Leaf("val", 0, 2))
-            val data = Seq(
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.toArray),
-              W.LeafData(Array.fill(n)(0), null,
-                longs = ids.map(d => (d * 41) % 1033).toArray))
-            val plain = W.writeFile(fields, data, pageRows = 32)
-            val keys = C.Keys(footerKey, Map("val" -> valKey))
-            val colKeys = Map("k:val" -> valKey)
-            val res = for {
-              ctrE <- C.encryptFileDeterministic(plain, keys,
-                aadUnique, ctr = true)
-              gcmE <- C.encryptFileDeterministic(plain, keys,
-                aadUnique)
-              back <- C.decryptFile(ctrE.bytes, footerKey, colKeys)
-            } yield {
-              val identityOk =
-                java.util.Arrays.equals(back, plain)
-              // each page body saves AT LEAST the 16-byte GCM tag; a
-              // lower bound (not equality) because the patched
-              // compressed_page_size varints (plain+32 GCM vs
-              // plain+16 CTR) and the footer's totalCompressed can
-              // straddle a zigzag-varint length boundary on small
-              // tail pages, adding a byte or two to the GCM side
-              val nPages = ctrE.modules.count(m =>
-                m.modType == C.ModDataPage ||
-                  m.modType == C.ModDictPage)
-              val sizeGapOk = gcmE.bytes.length - ctrE.bytes.length >=
-                16 * nPages
-              val hm = ctrE.modules
-                .find(_.modType == C.ModDataPageHeader).get
-              val th = ctrE.bytes.clone()
-              th(hm.off + hm.len / 2) =
-                (th(hm.off + hm.len / 2) ^ 1).toByte
-              val headerClosed =
-                C.decryptFile(th, footerKey, colKeys).isEmpty
-              val bm = ctrE.modules
-                .find(_.modType == C.ModDataPage).get
-              val tb = ctrE.bytes.clone()
-              tb(bm.off + bm.len / 2) =
-                (tb(bm.off + bm.len / 2) ^ 1).toByte
-              val silent = C.decryptFile(tb, footerKey, colKeys)
-              val silentPossible = silent.exists(
-                !java.util.Arrays.equals(_, plain))
-              val sums = for {
-                rs <- P.columnLongs(back, "rec_id")
-                vs <- P.columnLongs(back, "val")
-                if rs.length == vs.length
-              } yield (rs.length.toLong, rs.sum, vs.sum)
-              sums.toSeq.map { case (nr, idSum, valSum) =>
-                (t, nr, idSum, valSum,
-                  if (identityOk) 1L else 0L,
-                  if (sizeGapOk) 1L else 0L,
-                  if (headerClosed) 1L else 0L,
-                  if (silentPossible) 1L else 0L)
-              }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.ParquetWrite
+          val P = graft.sources.Parquet
+          val C = graft.sources.ParquetCrypto
+          val n = ids.length
+          def md5(x: String): Array[Byte] =
+            Md5Hashes.digest(x.getBytes("UTF-8"))
+          val footerKey = md5("pqctr:" + ids.mkString(","))
+          val valKey = md5("pqctrcol:" + ids.mkString(","))
+          val aadUnique = md5("pqctraad:" + ids.mkString(","))
+            .take(8)
+          val fields = Seq(
+            W.Leaf("rec_id", 0, 2), W.Leaf("val", 0, 2))
+          val data = Seq(
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.toArray),
+            W.LeafData(Array.fill(n)(0), null,
+              longs = ids.map(d => (d * 41) % 1033).toArray))
+          val plain = W.writeFile(fields, data, pageRows = 32)
+          val keys = C.Keys(footerKey, Map("val" -> valKey))
+          val colKeys = Map("k:val" -> valKey)
+          val res = for {
+            ctrE <- C.encryptFileDeterministic(plain, keys,
+              aadUnique, ctr = true)
+            gcmE <- C.encryptFileDeterministic(plain, keys,
+              aadUnique)
+            back <- C.decryptFile(ctrE.bytes, footerKey, colKeys)
+          } yield {
+            val identityOk =
+              java.util.Arrays.equals(back, plain)
+            // each page body saves AT LEAST the 16-byte GCM tag; a
+            // lower bound (not equality) because the patched
+            // compressed_page_size varints (plain+32 GCM vs
+            // plain+16 CTR) and the footer's totalCompressed can
+            // straddle a zigzag-varint length boundary on small
+            // tail pages, adding a byte or two to the GCM side
+            val nPages = ctrE.modules.count(m =>
+              m.modType == C.ModDataPage ||
+                m.modType == C.ModDictPage)
+            val sizeGapOk = gcmE.bytes.length - ctrE.bytes.length >=
+              16 * nPages
+            val hm = ctrE.modules
+              .find(_.modType == C.ModDataPageHeader).get
+            val th = ctrE.bytes.clone()
+            th(hm.off + hm.len / 2) =
+              (th(hm.off + hm.len / 2) ^ 1).toByte
+            val headerClosed =
+              C.decryptFile(th, footerKey, colKeys).isEmpty
+            val bm = ctrE.modules
+              .find(_.modType == C.ModDataPage).get
+            val tb = ctrE.bytes.clone()
+            tb(bm.off + bm.len / 2) =
+              (tb(bm.off + bm.len / 2) ^ 1).toByte
+            val silent = C.decryptFile(tb, footerKey, colKeys)
+            val silentPossible = silent.exists(
+              !java.util.Arrays.equals(_, plain))
+            val sums = for {
+              rs <- P.columnLongs(back, "rec_id")
+              vs <- P.columnLongs(back, "val")
+              if rs.length == vs.length
+            } yield (rs.length.toLong, rs.sum, vs.sum)
+            sums.toSeq.map { case (nr, idSum, valSum) =>
+              (t, nr, idSum, valSum,
+                if (identityOk) 1L else 0L,
+                if (sizeGapOk) 1L else 0L,
+                if (headerClosed) 1L else 0L,
+                if (silentPossible) 1L else 0L)
             }
-            res.toSeq.flatten
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq.flatten
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "identity_ok", "size_gap_ok", "header_flip_closed",
             "body_flip_silent")
       },
@@ -3847,50 +3578,44 @@ object WriterQueries {
     "q363_puffin_incremental_stats" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val P = graft.sources.Puffin
-            val T = graft.sources.ThetaSketch
-            def v(d: Long): Long = (d * 13) % 61
-            val gen0 = ids.filter(d => (d / 6) % 4 != 1)
-            val gen1 = ids.filter(d => (d / 6) % 4 == 1)
-            val skBaseId = T.compact(gen0)
-            val skBaseV = T.compact(gen0.map(v))
-            val skNewId = T.compact(gen1)
-            val skNewV = T.compact(gen1.map(v))
-            val res = for {
-              uId <- T.union(Seq(skBaseId, skNewId))
-              uV <- T.union(Seq(skBaseV, skNewV))
-              // snapshot-2 statistics file carries the UNIONED blobs
-              puffin = P.write(Seq(
-                P.Blob("apache-datasketches-theta-v1", Seq(1), 2L,
-                  2L, uId),
-                P.Blob("apache-datasketches-theta-v1", Seq(2), 2L,
-                  2L, uV)), Map("created-by" -> "graft engine"))
-              (blobs, _) <- P.read(puffin)
-              if blobs.length == 2
-              rId <- T.parse(blobs(0)._2)
-              rV <- T.parse(blobs(1)._2)
-              rebuiltV <- Some(T.compact(ids.map(v)))
-            } yield {
-              val unionEqRebuild =
-                if (java.util.Arrays.equals(uV, rebuiltV)) 1L else 0L
-              val ndvBaseV = T.parse(skBaseV)
-                .map(_.estimate.round).getOrElse(-1L)
-              val ndvNewV = T.parse(skNewV)
-                .map(_.estimate.round).getOrElse(-1L)
-              (t, rId.estimate.round, rV.estimate.round, ndvBaseV,
-                ndvNewV, unionEqRebuild,
-                if (rV.estimate.round <
-                  ndvBaseV + ndvNewV) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val P = graft.sources.Puffin
+          val T = graft.sources.ThetaSketch
+          def v(d: Long): Long = (d * 13) % 61
+          val gen0 = ids.filter(d => (d / 6) % 4 != 1)
+          val gen1 = ids.filter(d => (d / 6) % 4 == 1)
+          val skBaseId = T.compact(gen0)
+          val skBaseV = T.compact(gen0.map(v))
+          val skNewId = T.compact(gen1)
+          val skNewV = T.compact(gen1.map(v))
+          val res = for {
+            uId <- T.union(Seq(skBaseId, skNewId))
+            uV <- T.union(Seq(skBaseV, skNewV))
+            // snapshot-2 statistics file carries the UNIONED blobs
+            puffin = P.write(Seq(
+              P.Blob("apache-datasketches-theta-v1", Seq(1), 2L,
+                2L, uId),
+              P.Blob("apache-datasketches-theta-v1", Seq(2), 2L,
+                2L, uV)), Map("created-by" -> "graft engine"))
+            (blobs, _) <- P.read(puffin)
+            if blobs.length == 2
+            rId <- T.parse(blobs(0)._2)
+            rV <- T.parse(blobs(1)._2)
+            rebuiltV <- Some(T.compact(ids.map(v)))
+          } yield {
+            val unionEqRebuild =
+              if (java.util.Arrays.equals(uV, rebuiltV)) 1L else 0L
+            val ndvBaseV = T.parse(skBaseV)
+              .map(_.estimate.round).getOrElse(-1L)
+            val ndvNewV = T.parse(skNewV)
+              .map(_.estimate.round).getOrElse(-1L)
+            (t, rId.estimate.round, rV.estimate.round, ndvBaseV,
+              ndvNewV, unionEqRebuild,
+              if (rV.estimate.round <
+                ndvBaseV + ndvNewV) 1L else 0L)
           }
-          .toDF("table_id", "ndv_id_all", "ndv_v_all", "ndv_v_base",
+          res.toSeq
+        }.toDF("table_id", "ndv_id_all", "ndv_v_all", "ndv_v_base",
             "ndv_v_new", "union_eq_rebuild", "overlap_law")
       },
       oracle = Some("""
@@ -3926,83 +3651,77 @@ object WriterQueries {
     "q365_avro_logical_types" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val G = graft.sources.AvroGeneric
-            val W = graft.sources.AvroWrite
-            val J = graft.sources.Json
-            val ids = it.map(_._2).toSeq.sorted
-            def cents(d: Long): Long = (d * 7919) % 100000 - 50000
-            def day(d: Long): Long = 19000 + (d % 700)
-            def ts(d: Long): Long = 1700000000000000L + d * 1000003L
-            val schema =
-              """{"type":"record","name":"ledger","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"price","type":{"type":"bytes","logicalType":"decimal","precision":18,"scale":2}},
-                |{"name":"day","type":{"type":"int","logicalType":"date"}},
-                |{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val recs = ids.map { d =>
-              val pb = W.decimalBytes(cents(d))
-              G.VRecord(Vector(
-                "id" -> G.VLong(d),
-                "price" -> G.VBytes(pb.length, pb),
-                "day" -> G.VLong(day(d)),
-                "ts" -> G.VLong(ts(d))))
-            }
-            val bytes =
-              W.container(schema, recs, "null", s"q365-$blobId", 256)
-            val out = for {
-              dec <- G.parseContainer(bytes)
-              sj <- J.parse(dec.schemaJson)
-              so <- Some(sj).collect { case o: J.JObject => o }
-              fields <- so.get("fields").collect {
-                case J.JArray(fs) => fs.collect {
-                  case f: J.JObject => f
-                }
-              }
-              lt = fields.flatMap(f =>
-                f.get("type").collect { case t: J.JObject =>
-                  t.get("logicalType")
-                    .collect { case J.JString(x) => x }
-                }.flatten)
-            } yield {
-              val schemaOk = lt.sorted ==
-                Seq("date", "decimal", "timestamp-micros")
-              var ok = dec.records.length == ids.length
-              var minimalOk = true
-              var n = 0L; var sumCents = 0L; var nNeg = 0L
-              var minDay = Long.MaxValue; var sumTs = 0L
-              dec.records.foreach { r =>
-                val row = for {
-                  pb <- r.field("price").flatMap(_.asBytes)
-                  c <- G.decimalLong(pb)
-                  dy <- r.field("day").flatMap(_.asLong)
-                  t <- r.field("ts").flatMap(_.asLong)
-                } yield {
-                  if (!java.util.Arrays.equals(
-                    W.decimalBytes(c), pb)) minimalOk = false
-                  n += 1
-                  sumCents += c
-                  if (c < 0) nNeg += 1
-                  if (dy < minDay) minDay = dy
-                  sumTs += t
-                }
-                if (row.isEmpty) ok = false
-              }
-              if (!ok) Nil
-              else Seq((blobId, n, sumCents, nNeg,
-                java.time.LocalDate.ofEpochDay(minDay).toString,
-                sumTs,
-                if (schemaOk) 1L else 0L,
-                if (minimalOk) 1L else 0L))
-            }
-            out.toSeq.flatten
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val G = graft.sources.AvroGeneric
+          val W = graft.sources.AvroWrite
+          val J = graft.sources.Json
+          def cents(d: Long): Long = (d * 7919) % 100000 - 50000
+          def day(d: Long): Long = 19000 + (d % 700)
+          def ts(d: Long): Long = 1700000000000000L + d * 1000003L
+          val schema =
+            """{"type":"record","name":"ledger","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"price","type":{"type":"bytes","logicalType":"decimal","precision":18,"scale":2}},
+              |{"name":"day","type":{"type":"int","logicalType":"date"}},
+              |{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val recs = ids.map { d =>
+            val pb = W.decimalBytes(cents(d))
+            G.VRecord(Vector(
+              "id" -> G.VLong(d),
+              "price" -> G.VBytes(pb.length, pb),
+              "day" -> G.VLong(day(d)),
+              "ts" -> G.VLong(ts(d))))
           }
-          .toDF("blob_id", "n_rows", "price_sum_cents", "n_neg",
+          val bytes =
+            W.container(schema, recs, "null", s"q365-$blobId", 256)
+          val out = for {
+            dec <- G.parseContainer(bytes)
+            sj <- J.parse(dec.schemaJson)
+            so <- Some(sj).collect { case o: J.JObject => o }
+            fields <- so.get("fields").collect {
+              case J.JArray(fs) => fs.collect {
+                case f: J.JObject => f
+              }
+            }
+            lt = fields.flatMap(f =>
+              f.get("type").collect { case t: J.JObject =>
+                t.get("logicalType")
+                  .collect { case J.JString(x) => x }
+              }.flatten)
+          } yield {
+            val schemaOk = lt.sorted ==
+              Seq("date", "decimal", "timestamp-micros")
+            var ok = dec.records.length == ids.length
+            var minimalOk = true
+            var n = 0L; var sumCents = 0L; var nNeg = 0L
+            var minDay = Long.MaxValue; var sumTs = 0L
+            dec.records.foreach { r =>
+              val row = for {
+                pb <- r.field("price").flatMap(_.asBytes)
+                c <- G.decimalLong(pb)
+                dy <- r.field("day").flatMap(_.asLong)
+                t <- r.field("ts").flatMap(_.asLong)
+              } yield {
+                if (!java.util.Arrays.equals(
+                  W.decimalBytes(c), pb)) minimalOk = false
+                n += 1
+                sumCents += c
+                if (c < 0) nNeg += 1
+                if (dy < minDay) minDay = dy
+                sumTs += t
+              }
+              if (row.isEmpty) ok = false
+            }
+            if (!ok) Nil
+            else Seq((blobId, n, sumCents, nNeg,
+              java.time.LocalDate.ofEpochDay(minDay).toString,
+              sumTs,
+              if (schemaOk) 1L else 0L,
+              if (minimalOk) 1L else 0L))
+          }
+          out.toSeq.flatten
+        }.toDF("blob_id", "n_rows", "price_sum_cents", "n_neg",
             "min_day", "ts_sum", "schema_ok", "minimal_ok")
       },
       oracle = Some("""
@@ -4045,126 +3764,120 @@ object WriterQueries {
     "q366_avro_schema_resolution" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val G = graft.sources.AvroGeneric
-            val R = graft.sources.AvroResolve
-            val W = graft.sources.AvroWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def cents(d: Long): Long = (d * 7919) % 100000 - 50000
-            def day(d: Long): Long = 19000 + (d % 700)
-            val writerJson =
-              """{"type":"record","name":"ledger","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"price","type":{"type":"bytes","logicalType":"decimal","precision":18,"scale":2}},
-                |{"name":"day","type":{"type":"int","logicalType":"date"}},
-                |{"name":"status","type":{"type":"enum","name":"Status","symbols":["NEW","SHIPPED","RETURNED"]}},
-                |{"name":"legacy_tag","type":"string"}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val recs = ids.map { d =>
-              val pb = W.decimalBytes(cents(d))
-              G.VRecord(Vector(
-                "id" -> G.VLong(d),
-                "price" -> G.VBytes(pb.length, pb),
-                "day" -> G.VLong(day(d)),
-                "status" -> G.VEnum((d % 3).toInt),
-                "legacy_tag" -> G.VString("t" + (d % 5))))
-            }
-            val bytes =
-              W.container(writerJson, recs, "null", s"q366-$blobId", 256)
-            val readerJson =
-              """{"type":"record","name":"ledger","fields":[
-                |{"name":"event_day","type":"long","aliases":["day"]},
-                |{"name":"id","type":"long"},
-                |{"name":"price","type":"bytes"},
-                |{"name":"source","type":"string","default":"v1"},
-                |{"name":"status","type":{"type":"enum","name":"Status","symbols":["OTHER","NEW","SHIPPED"],"default":"OTHER"}},
-                |{"name":"qty","type":"long","default":0}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val narrowJson =
-              """{"type":"record","name":"ledger","fields":[
-                |{"name":"id","type":"int"}]}"""
-                .stripMargin.replaceAll("\n", "")
-            val readerSymbols = Vector("OTHER", "NEW", "SHIPPED")
-            val out = for {
-              dec <- R.parseContainer(bytes, readerJson)
-              if dec.records.length == ids.length
-            } yield {
-              val closedOk = R.parseContainer(bytes, narrowJson).isEmpty
-              val apacheOk = try {
-                import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
-                import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-                val rs = new org.apache.avro.Schema.Parser()
-                  .parse(readerJson)
-                val rd = new DataFileReader[GenericRecord](
-                  new SeekableByteArrayInput(bytes),
-                  new GenericDatumReader[GenericRecord](null, rs))
-                var ok = true
-                dec.records.foreach { r =>
-                  if (!rd.hasNext) ok = false
-                  else {
-                    val a = rd.next()
-                    val bb = a.get("price")
-                      .asInstanceOf[java.nio.ByteBuffer]
-                    val ab = new Array[Byte](bb.remaining())
-                    bb.get(ab)
-                    ok &&= r.field("id").flatMap(_.asLong)
-                      .contains(a.get("id").asInstanceOf[Long])
-                    ok &&= r.field("event_day").flatMap(_.asLong)
-                      .contains(a.get("event_day").asInstanceOf[Long])
-                    ok &&= r.field("price").flatMap(_.asBytes)
-                      .exists(java.util.Arrays.equals(_, ab))
-                    ok &&= r.field("source").flatMap(_.asString)
-                      .contains(a.get("source").toString)
-                    ok &&= r.field("qty").flatMap(_.asLong)
-                      .contains(a.get("qty").asInstanceOf[Long])
-                    ok &&= r.field("status").exists {
-                      case G.VEnum(i) =>
-                        readerSymbols(i) == a.get("status").toString
-                      case _ => false
-                    }
-                  }
-                }
-                ok &&= !rd.hasNext
-                rd.close()
-                ok
-              } catch { case _: Exception => false }
-              var n = 0L; var idSum = 0L; var priceSum = 0L
-              var daySum = 0L; var statusIdxSum = 0L; var nOther = 0L
-              var nSrc = 0L; var qtySum = 0L
-              var rowsOk = true
-              dec.records.foreach { r =>
-                val row = for {
-                  id <- r.field("id").flatMap(_.asLong)
-                  pb <- r.field("price").flatMap(_.asBytes)
-                  c <- G.decimalLong(pb)
-                  ed <- r.field("event_day").flatMap(_.asLong)
-                  src <- r.field("source").flatMap(_.asString)
-                  q <- r.field("qty").flatMap(_.asLong)
-                  si <- r.field("status").collect {
-                    case G.VEnum(i) => i.toLong
-                  }
-                } yield {
-                  n += 1; idSum += id; priceSum += c; daySum += ed
-                  statusIdxSum += si
-                  if (si == 0L) nOther += 1
-                  if (src == "v1") nSrc += 1
-                  qtySum += q
-                }
-                if (row.isEmpty) rowsOk = false
-              }
-              if (!rowsOk || qtySum != 0L) Nil
-              else Seq((blobId, n, idSum, priceSum, daySum,
-                statusIdxSum, nOther, nSrc,
-                if (apacheOk) 1L else 0L,
-                if (closedOk) 1L else 0L))
-            }
-            out.toSeq.flatten
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val G = graft.sources.AvroGeneric
+          val R = graft.sources.AvroResolve
+          val W = graft.sources.AvroWrite
+          def cents(d: Long): Long = (d * 7919) % 100000 - 50000
+          def day(d: Long): Long = 19000 + (d % 700)
+          val writerJson =
+            """{"type":"record","name":"ledger","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"price","type":{"type":"bytes","logicalType":"decimal","precision":18,"scale":2}},
+              |{"name":"day","type":{"type":"int","logicalType":"date"}},
+              |{"name":"status","type":{"type":"enum","name":"Status","symbols":["NEW","SHIPPED","RETURNED"]}},
+              |{"name":"legacy_tag","type":"string"}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val recs = ids.map { d =>
+            val pb = W.decimalBytes(cents(d))
+            G.VRecord(Vector(
+              "id" -> G.VLong(d),
+              "price" -> G.VBytes(pb.length, pb),
+              "day" -> G.VLong(day(d)),
+              "status" -> G.VEnum((d % 3).toInt),
+              "legacy_tag" -> G.VString("t" + (d % 5))))
           }
-          .toDF("blob_id", "n_rows", "id_sum", "price_sum_cents",
+          val bytes =
+            W.container(writerJson, recs, "null", s"q366-$blobId", 256)
+          val readerJson =
+            """{"type":"record","name":"ledger","fields":[
+              |{"name":"event_day","type":"long","aliases":["day"]},
+              |{"name":"id","type":"long"},
+              |{"name":"price","type":"bytes"},
+              |{"name":"source","type":"string","default":"v1"},
+              |{"name":"status","type":{"type":"enum","name":"Status","symbols":["OTHER","NEW","SHIPPED"],"default":"OTHER"}},
+              |{"name":"qty","type":"long","default":0}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val narrowJson =
+            """{"type":"record","name":"ledger","fields":[
+              |{"name":"id","type":"int"}]}"""
+              .stripMargin.replaceAll("\n", "")
+          val readerSymbols = Vector("OTHER", "NEW", "SHIPPED")
+          val out = for {
+            dec <- R.parseContainer(bytes, readerJson)
+            if dec.records.length == ids.length
+          } yield {
+            val closedOk = R.parseContainer(bytes, narrowJson).isEmpty
+            val apacheOk = try {
+              import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
+              import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+              val rs = new org.apache.avro.Schema.Parser()
+                .parse(readerJson)
+              val rd = new DataFileReader[GenericRecord](
+                new SeekableByteArrayInput(bytes),
+                new GenericDatumReader[GenericRecord](null, rs))
+              var ok = true
+              dec.records.foreach { r =>
+                if (!rd.hasNext) ok = false
+                else {
+                  val a = rd.next()
+                  val bb = a.get("price")
+                    .asInstanceOf[java.nio.ByteBuffer]
+                  val ab = new Array[Byte](bb.remaining())
+                  bb.get(ab)
+                  ok &&= r.field("id").flatMap(_.asLong)
+                    .contains(a.get("id").asInstanceOf[Long])
+                  ok &&= r.field("event_day").flatMap(_.asLong)
+                    .contains(a.get("event_day").asInstanceOf[Long])
+                  ok &&= r.field("price").flatMap(_.asBytes)
+                    .exists(java.util.Arrays.equals(_, ab))
+                  ok &&= r.field("source").flatMap(_.asString)
+                    .contains(a.get("source").toString)
+                  ok &&= r.field("qty").flatMap(_.asLong)
+                    .contains(a.get("qty").asInstanceOf[Long])
+                  ok &&= r.field("status").exists {
+                    case G.VEnum(i) =>
+                      readerSymbols(i) == a.get("status").toString
+                    case _ => false
+                  }
+                }
+              }
+              ok &&= !rd.hasNext
+              rd.close()
+              ok
+            } catch { case _: Exception => false }
+            var n = 0L; var idSum = 0L; var priceSum = 0L
+            var daySum = 0L; var statusIdxSum = 0L; var nOther = 0L
+            var nSrc = 0L; var qtySum = 0L
+            var rowsOk = true
+            dec.records.foreach { r =>
+              val row = for {
+                id <- r.field("id").flatMap(_.asLong)
+                pb <- r.field("price").flatMap(_.asBytes)
+                c <- G.decimalLong(pb)
+                ed <- r.field("event_day").flatMap(_.asLong)
+                src <- r.field("source").flatMap(_.asString)
+                q <- r.field("qty").flatMap(_.asLong)
+                si <- r.field("status").collect {
+                  case G.VEnum(i) => i.toLong
+                }
+              } yield {
+                n += 1; idSum += id; priceSum += c; daySum += ed
+                statusIdxSum += si
+                if (si == 0L) nOther += 1
+                if (src == "v1") nSrc += 1
+                qtySum += q
+              }
+              if (row.isEmpty) rowsOk = false
+            }
+            if (!rowsOk || qtySum != 0L) Nil
+            else Seq((blobId, n, idSum, priceSum, daySum,
+              statusIdxSum, nOther, nSrc,
+              if (apacheOk) 1L else 0L,
+              if (closedOk) 1L else 0L))
+          }
+          out.toSeq.flatten
+        }.toDF("blob_id", "n_rows", "id_sum", "price_sum_cents",
             "day_sum", "status_idx_sum", "n_other",
             "n_default_source", "apache_ok", "closed_ok")
       },
@@ -4206,68 +3919,62 @@ object WriterQueries {
     "q367_iceberg_wap_refs" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 23) % 941
-            val oldIds = ids.filter(d => (d / 6) % 4 != 1)
-            val newIds = ids.filter(d => (d / 6) % 4 == 1)
-            def expect(xs: Seq[Long]) =
-              xs.map(d => (d, v(d))).sortBy(_._1)
-            val base = W.writeRefsTable(s"tbl-$t", oldIds, v,
-              "v1", 5000L)
-            val res = for {
-              st <- W.stageBranch(base, "v1.metadata.json", "audit",
-                newIds.map(d => (d, v(d))), 1700000001000L)
-              staged = base ++ st.newFiles
-              mainBefore <- W.scanRef(staged, st.newMetaName, "main")
-              branchRows <- W.scanRef(staged, st.newMetaName, "audit")
-              ff <- W.fastForward(staged, st.newMetaName, "audit")
-              published = staged + (ff._1 -> ff._2)
-              mainAfter <- W.scanRef(published, ff._1, "main")
-              tagRows <- W.scanRef(published, ff._1, "v1")
-              ex1 <- W.expireSnapshots(published, ff._1,
-                1700000000500L, 1700000002000L)
-              pruned1 = (published -- ex1.deleted) +
-                (ex1.newMetaName -> ex1.newMeta)
-              ex2 <- W.expireSnapshots(pruned1, ex1.newMetaName,
-                1700000000500L, 1700000010000L)
-              pruned2 = (pruned1 -- ex2.deleted) +
-                (ex2.newMetaName -> ex2.newMeta)
-              mainFinal <- W.scanRef(pruned2, ex2.newMetaName, "main")
-            } yield {
-              val tagGone =
-                W.scanRef(pruned2, ex2.newMetaName, "v1").isEmpty
-              val wapOk = mainBefore.sortBy(_._1) == expect(oldIds)
-              val auditOk = branchRows.sortBy(_._1) == expect(ids)
-              val publishOk =
-                mainAfter.sortBy(_._1) == branchRows.sortBy(_._1)
-              val tagOk = tagRows.sortBy(_._1) == expect(oldIds)
-              val retentionOk = ex1.nExpired == 0 &&
-                ex1.deleted.isEmpty
-              val expireOk = ex2.nExpired == 1 &&
-                ex2.deleted == Seq("snap-1.avro") &&
-                ex2.dataDeleted == 0
-              val finalOk =
-                mainFinal.sortBy(_._1) == expect(ids) && tagGone
-              (t, mainBefore.length.toLong,
-                (branchRows.length - mainBefore.length).toLong,
-                mainBefore.map(_._2).sum, mainAfter.map(_._2).sum,
-                if (wapOk) 1L else 0L,
-                if (auditOk) 1L else 0L,
-                if (publishOk) 1L else 0L,
-                if (tagOk) 1L else 0L,
-                if (retentionOk) 1L else 0L,
-                if (expireOk) 1L else 0L,
-                if (finalOk) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 23) % 941
+          val oldIds = ids.filter(d => (d / 6) % 4 != 1)
+          val newIds = ids.filter(d => (d / 6) % 4 == 1)
+          def expect(xs: Seq[Long]) =
+            xs.map(d => (d, v(d))).sortBy(_._1)
+          val base = W.writeRefsTable(s"tbl-$t", oldIds, v,
+            "v1", 5000L)
+          val res = for {
+            st <- W.stageBranch(base, "v1.metadata.json", "audit",
+              newIds.map(d => (d, v(d))), 1700000001000L)
+            staged = base ++ st.newFiles
+            mainBefore <- W.scanRef(staged, st.newMetaName, "main")
+            branchRows <- W.scanRef(staged, st.newMetaName, "audit")
+            ff <- W.fastForward(staged, st.newMetaName, "audit")
+            published = staged + (ff._1 -> ff._2)
+            mainAfter <- W.scanRef(published, ff._1, "main")
+            tagRows <- W.scanRef(published, ff._1, "v1")
+            ex1 <- W.expireSnapshots(published, ff._1,
+              1700000000500L, 1700000002000L)
+            pruned1 = (published -- ex1.deleted) +
+              (ex1.newMetaName -> ex1.newMeta)
+            ex2 <- W.expireSnapshots(pruned1, ex1.newMetaName,
+              1700000000500L, 1700000010000L)
+            pruned2 = (pruned1 -- ex2.deleted) +
+              (ex2.newMetaName -> ex2.newMeta)
+            mainFinal <- W.scanRef(pruned2, ex2.newMetaName, "main")
+          } yield {
+            val tagGone =
+              W.scanRef(pruned2, ex2.newMetaName, "v1").isEmpty
+            val wapOk = mainBefore.sortBy(_._1) == expect(oldIds)
+            val auditOk = branchRows.sortBy(_._1) == expect(ids)
+            val publishOk =
+              mainAfter.sortBy(_._1) == branchRows.sortBy(_._1)
+            val tagOk = tagRows.sortBy(_._1) == expect(oldIds)
+            val retentionOk = ex1.nExpired == 0 &&
+              ex1.deleted.isEmpty
+            val expireOk = ex2.nExpired == 1 &&
+              ex2.deleted == Seq("snap-1.avro") &&
+              ex2.dataDeleted == 0
+            val finalOk =
+              mainFinal.sortBy(_._1) == expect(ids) && tagGone
+            (t, mainBefore.length.toLong,
+              (branchRows.length - mainBefore.length).toLong,
+              mainBefore.map(_._2).sum, mainAfter.map(_._2).sum,
+              if (wapOk) 1L else 0L,
+              if (auditOk) 1L else 0L,
+              if (publishOk) 1L else 0L,
+              if (tagOk) 1L else 0L,
+              if (retentionOk) 1L else 0L,
+              if (expireOk) 1L else 0L,
+              if (finalOk) 1L else 0L)
           }
-          .toDF("table_id", "n_old", "n_new", "old_val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_old", "n_new", "old_val_sum",
             "all_val_sum", "wap_ok", "audit_ok", "publish_ok",
             "tag_ok", "retention_ok", "expire_ok", "final_ok")
       },
@@ -4312,76 +4019,70 @@ object WriterQueries {
     "q368_hudi_metadata_table" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTable(ids)
-            val res = for {
-              mdt <- M.sync(files)
-              table = files ++ mdt
-              planM <- M.planFromMdt(table)
-              listing <- M.listing(table)
-              rows <- {
-                val per = planM.map { p =>
-                  for {
-                    b <- table.get(p)
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                    if rs.length == vs.length
-                  } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val P = graft.sources.Parquet
+          val files = W.writeTable(ids)
+          val res = for {
+            mdt <- M.sync(files)
+            table = files ++ mdt
+            planM <- M.planFromMdt(table)
+            listing <- M.listing(table)
+            rows <- {
+              val per = planM.map { p =>
+                for {
+                  b <- table.get(p)
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                  if rs.length == vs.length
+                } yield rs.zip(vs).toSeq
               }
-              cr <- W.clean(files, "00000000000004")
-              mdt2 <- M.appendClean(mdt, "00000000000004", cr.deleted)
-              cleaned = (table -- cr.deleted) ++ mdt2 +
-                (cr.timelineName -> cr.timeline)
-              listing2 <- M.listing(cleaned)
-              planM2 <- M.planFromMdt(cleaned)
-            } yield {
-              val planL = M.planFromListing(table)
-              val planMatch = planM == planL
-              val orphan = "p/fg9_0-0-0_00000000000001.parquet"
-              val withOrphan = table + (orphan ->
-                graft.sources.ParquetWrite.writeInt64(
-                  Seq("rec_id", "val"), Seq(Array(999L, 999L))))
-              val orphanInvisible =
-                M.planFromListing(withOrphan).contains(orphan) &&
-                  M.planFromMdt(withOrphan).contains(planM)
-              val cleanPlanOk = planM2 == planM &&
-                planM2 == M.planFromListing(cleaned) &&
-                !listing2("p").exists(
-                  _._1 == "fg0_0-0-0_00000000000001.parquet")
-              val cleanDropped = listing("p").length == 3 &&
-                listing2("p").length == 2
-              val prefixOk = {
-                val a = mdt(M.LogPath); val b = mdt2(M.LogPath)
-                b.length > a.length &&
-                  java.util.Arrays.equals(b.take(a.length), a)
-              }
-              val sizesOk = listing("p").forall { case (n, sz) =>
-                files.get("p/" + n).exists(_.length.toLong == sz)
-              }
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum,
-                listing("p").length.toLong,
-                listing2("p").length.toLong,
-                if (planMatch) 1L else 0L,
-                if (orphanInvisible) 1L else 0L,
-                if (cleanPlanOk && cleanDropped) 1L else 0L,
-                if (prefixOk) 1L else 0L,
-                if (sizesOk) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+            cr <- W.clean(files, "00000000000004")
+            mdt2 <- M.appendClean(mdt, "00000000000004", cr.deleted)
+            cleaned = (table -- cr.deleted) ++ mdt2 +
+              (cr.timelineName -> cr.timeline)
+            listing2 <- M.listing(cleaned)
+            planM2 <- M.planFromMdt(cleaned)
+          } yield {
+            val planL = M.planFromListing(table)
+            val planMatch = planM == planL
+            val orphan = "p/fg9_0-0-0_00000000000001.parquet"
+            val withOrphan = table + (orphan ->
+              graft.sources.ParquetWrite.writeInt64(
+                Seq("rec_id", "val"), Seq(Array(999L, 999L))))
+            val orphanInvisible =
+              M.planFromListing(withOrphan).contains(orphan) &&
+                M.planFromMdt(withOrphan).contains(planM)
+            val cleanPlanOk = planM2 == planM &&
+              planM2 == M.planFromListing(cleaned) &&
+              !listing2("p").exists(
+                _._1 == "fg0_0-0-0_00000000000001.parquet")
+            val cleanDropped = listing("p").length == 3 &&
+              listing2("p").length == 2
+            val prefixOk = {
+              val a = mdt(M.LogPath); val b = mdt2(M.LogPath)
+              b.length > a.length &&
+                java.util.Arrays.equals(b.take(a.length), a)
+            }
+            val sizesOk = listing("p").forall { case (n, sz) =>
+              files.get("p/" + n).exists(_.length.toLong == sz)
+            }
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum,
+              listing("p").length.toLong,
+              listing2("p").length.toLong,
+              if (planMatch) 1L else 0L,
+              if (orphanInvisible) 1L else 0L,
+              if (cleanPlanOk && cleanDropped) 1L else 0L,
+              if (prefixOk) 1L else 0L,
+              if (sizesOk) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "n_files_mdt", "n_files_after_clean", "plan_match",
             "orphan_invisible", "clean_sync_ok", "append_prefix_ok",
             "sizes_ok")
@@ -4423,55 +4124,49 @@ object WriterQueries {
     "q369_iceberg_incremental_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 27) % 929
-            val files = W.writeIncrTable(s"tbl-$t", ids, v)
-            val meta = "v1.metadata.json"
-            val res = for {
-              inc14 <- W.incrementalScan(files, meta, 1L, 4L)
-              inc23 <- W.incrementalScan(files, meta, 2L, 3L)
-              scans <- {
-                val ss = (1L to 4L).map(
-                  W.scanSnapshot(files, meta, _))
-                if (ss.exists(_.isEmpty)) None
-                else Some(ss.map(_.get))
-              }
-              steps <- {
-                val is = (1L to 3L).map(i =>
-                  W.incrementalScan(files, meta, i, i + 1))
-                if (is.exists(_.isEmpty)) None
-                else Some(is.map(_.get))
-              }
-            } yield {
-              def srt(xs: Seq[(Long, Long)]) = xs.sorted
-              // fold law at every boundary
-              val foldOk = (0 until 3).forall { i =>
-                srt(scans(i) ++ steps(i).rows) == srt(scans(i + 1))
-              }
-              val replaceZeroOk = inc23.rows.isEmpty &&
-                inc23.replacesSkipped == 1 &&
-                inc23.appendsConsumed == 0
-              val totalOk =
-                srt(scans(0) ++ inc14.rows) == srt(scans(3))
-              val consumedOk = inc14.appendsConsumed == 2 &&
-                inc14.replacesSkipped == 1
-              (t, inc14.rows.length.toLong,
-                inc14.rows.map(_._2).sum,
-                scans(3).length.toLong, scans(3).map(_._2).sum,
-                if (foldOk) 1L else 0L,
-                if (replaceZeroOk) 1L else 0L,
-                if (totalOk) 1L else 0L,
-                if (consumedOk) 1L else 0L)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 27) % 929
+          val files = W.writeIncrTable(s"tbl-$t", ids, v)
+          val meta = "v1.metadata.json"
+          val res = for {
+            inc14 <- W.incrementalScan(files, meta, 1L, 4L)
+            inc23 <- W.incrementalScan(files, meta, 2L, 3L)
+            scans <- {
+              val ss = (1L to 4L).map(
+                W.scanSnapshot(files, meta, _))
+              if (ss.exists(_.isEmpty)) None
+              else Some(ss.map(_.get))
             }
-            res.toSeq
+            steps <- {
+              val is = (1L to 3L).map(i =>
+                W.incrementalScan(files, meta, i, i + 1))
+              if (is.exists(_.isEmpty)) None
+              else Some(is.map(_.get))
+            }
+          } yield {
+            def srt(xs: Seq[(Long, Long)]) = xs.sorted
+            // fold law at every boundary
+            val foldOk = (0 until 3).forall { i =>
+              srt(scans(i) ++ steps(i).rows) == srt(scans(i + 1))
+            }
+            val replaceZeroOk = inc23.rows.isEmpty &&
+              inc23.replacesSkipped == 1 &&
+              inc23.appendsConsumed == 0
+            val totalOk =
+              srt(scans(0) ++ inc14.rows) == srt(scans(3))
+            val consumedOk = inc14.appendsConsumed == 2 &&
+              inc14.replacesSkipped == 1
+            (t, inc14.rows.length.toLong,
+              inc14.rows.map(_._2).sum,
+              scans(3).length.toLong, scans(3).map(_._2).sum,
+              if (foldOk) 1L else 0L,
+              if (replaceZeroOk) 1L else 0L,
+              if (totalOk) 1L else 0L,
+              if (consumedOk) 1L else 0L)
           }
-          .toDF("table_id", "n_incr", "incr_val_sum", "n_full",
+          res.toSeq
+        }.toDF("table_id", "n_incr", "incr_val_sum", "n_full",
             "full_val_sum", "fold_ok", "replace_zero_ok", "total_ok",
             "consumed_ok")
       },
@@ -4511,27 +4206,21 @@ object WriterQueries {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.streaming.Trigger
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val increments = docs.groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 27) % 929
-            val files = W.writeIncrTable(s"tbl-$t", ids, v)
-            (1L to 3L).flatMap { i =>
-              W.incrementalScan(files, "v1.metadata.json", i, i + 1)
-                .map { inc =>
-                  val op =
-                    if (inc.replacesSkipped > 0) "replace"
-                    else "append"
-                  (t, i + 1, op, inc.rows.length.toLong,
-                    inc.rows.map(_._2).sum)
-                }
-            }
+        val increments = Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 27) % 929
+          val files = W.writeIncrTable(s"tbl-$t", ids, v)
+          (1L to 3L).flatMap { i =>
+            W.incrementalScan(files, "v1.metadata.json", i, i + 1)
+              .map { inc =>
+                val op =
+                  if (inc.replacesSkipped > 0) "replace"
+                  else "append"
+                (t, i + 1, op, inc.rows.length.toLong,
+                  inc.rows.map(_._2).sum)
+              }
           }
-          .toDF("table_id", "to_sid", "op", "n_rows", "val_sum")
+        }.toDF("table_id", "to_sid", "op", "n_rows", "val_sum")
         val dv = new StreamDeliveries("graft_q372_incr")
         (2L to 4L).foreach { sid =>
           dv.land(increments.filter(col("to_sid") === sid), s"s$sid",
@@ -4603,55 +4292,49 @@ object WriterQueries {
     "q370_delta_v2_checkpoint" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTableWithV2Checkpoint(s"tbl-$t", ids)
-            val feats = Set("v2Checkpoint")
-            val res = for {
-              st <- W.readStateV2(files, 3L, feats)
-              rows <- {
-                val per = st.liveAdds.map { case (p, sz, _) =>
-                  for {
-                    b <- files.get(p)
-                    if b.length.toLong == sz
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                    if rs.length == vs.length
-                  } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val files = W.writeTableWithV2Checkpoint(s"tbl-$t", ids)
+          val feats = Set("v2Checkpoint")
+          val res = for {
+            st <- W.readStateV2(files, 3L, feats)
+            rows <- {
+              val per = st.liveAdds.map { case (p, sz, _) =>
+                for {
+                  b <- files.get(p)
+                  if b.length.toLong == sz
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                  if rs.length == vs.length
+                } yield rs.zip(vs).toSeq
               }
-            } yield {
-              val gateClosed =
-                W.readStateV2(files, 1L, feats).isEmpty &&
-                  W.readStateV2(files, 3L, Set.empty).isEmpty
-              val classicAbsent = !files.contains(
-                "_delta_log/00000000000000000001.checkpoint.parquet")
-              val scName = files.keys
-                .find(_.startsWith("_delta_log/_sidecars/")).get
-              val sidecarIntegrity =
-                W.readStateV2(files - scName, 3L, feats).isEmpty &&
-                  W.readStateV2(files +
-                    (scName -> files(scName).dropRight(1)), 3L,
-                    feats).isEmpty
-              val partsOk = st.liveAdds.map(_._3) == Seq("2", "3")
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum, st.nSidecars.toLong,
-                if (gateClosed) 1L else 0L,
-                if (classicAbsent) 1L else 0L,
-                if (sidecarIntegrity) 1L else 0L,
-                if (partsOk) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+          } yield {
+            val gateClosed =
+              W.readStateV2(files, 1L, feats).isEmpty &&
+                W.readStateV2(files, 3L, Set.empty).isEmpty
+            val classicAbsent = !files.contains(
+              "_delta_log/00000000000000000001.checkpoint.parquet")
+            val scName = files.keys
+              .find(_.startsWith("_delta_log/_sidecars/")).get
+            val sidecarIntegrity =
+              W.readStateV2(files - scName, 3L, feats).isEmpty &&
+                W.readStateV2(files +
+                  (scName -> files(scName).dropRight(1)), 3L,
+                  feats).isEmpty
+            val partsOk = st.liveAdds.map(_._3) == Seq("2", "3")
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum, st.nSidecars.toLong,
+              if (gateClosed) 1L else 0L,
+              if (classicAbsent) 1L else 0L,
+              if (sidecarIntegrity) 1L else 0L,
+              if (partsOk) 1L else 0L)
           }
-          .toDF("table_id", "n_live", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_live", "id_sum", "val_sum",
             "n_sidecars", "gate_closed", "classic_absent",
             "sidecar_integrity", "parts_ok")
       },
@@ -4694,72 +4377,64 @@ object WriterQueries {
     "q371_orc_column_encryption" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.OrcWrite
-            val C = graft.sources.OrcCrypto
-            val O = graft.sources.Orc
-            val ids = it.map(_._2).toSeq.sorted
-            def sal(d: Long): Long = (d * 31) % 1009
-            val master = java.security.MessageDigest
-              .getInstance("MD5")
-              .digest(s"orcenc:$t:${ids.mkString(",")}"
-                .getBytes("UTF-8"))
-            val plain = W.writeTable(Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.OLongCol("salary", ids.map(d => Some(sal(d)))),
-              W.OStringCol("name",
-                ids.map(d => Some(s"u-${d % 7}")))),
-              compression = 0, rowIndexStride = 64)
-            val res = for {
-              enc <- C.encryptFile(plain, master, "pii", Set(2, 3),
-                deterministic = true)
-              back <- C.decryptFile(enc, master)
-              te <- O.parseTail(enc)
-              tp <- O.parseTail(plain)
-              tb <- O.parseTail(back)
-              encIds <- O.stripeColumnLongs(enc, te,
-                te.stripes.head, 1)
-              sals <- O.stripeColumnLongs(back, tb,
-                tb.stripes.head, 2)
-            } yield {
-              val identityOk = java.util.Arrays.equals(back, plain)
-              val unencReadable = encIds.toSeq == ids
-              val maskedOk = te.stats(2).intMin.isEmpty &&
-                te.stats(2).intMax.isEmpty &&
-                tp.stats(2).intMin.nonEmpty &&
-                te.stripeStats.head(2).intMin.isEmpty &&
-                te.stats(1) == tp.stats(1)
-              val wrongKeyClosed =
-                C.decryptFile(enc, master.reverse).isEmpty
-              val tamperSilent = {
-                val sf = O.parseStripeFooter(enc, te,
-                  te.stripes.head).get
-                var pos = te.stripes.head.offset
-                var at = -1L
-                sf.streams.foreach { st =>
-                  if (st.column == 2 && st.kind == 1 && at < 0)
-                    at = pos + st.length / 2
-                  pos += st.length
-                }
-                val x = enc.clone()
-                x(at.toInt) = (x(at.toInt) ^ 0x01).toByte
-                C.decryptFile(x, master)
-                  .exists(!java.util.Arrays.equals(_, plain))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.OrcWrite
+          val C = graft.sources.OrcCrypto
+          val O = graft.sources.Orc
+          def sal(d: Long): Long = (d * 31) % 1009
+          val master = Md5Hashes.digest(
+            s"orcenc:$t:${ids.mkString(",")}".getBytes("UTF-8"))
+          val plain = W.writeTable(Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.OLongCol("salary", ids.map(d => Some(sal(d)))),
+            W.OStringCol("name",
+              ids.map(d => Some(s"u-${d % 7}")))),
+            compression = 0, rowIndexStride = 64)
+          val res = for {
+            enc <- C.encryptFile(plain, master, "pii", Set(2, 3),
+              deterministic = true)
+            back <- C.decryptFile(enc, master)
+            te <- O.parseTail(enc)
+            tp <- O.parseTail(plain)
+            tb <- O.parseTail(back)
+            encIds <- O.stripeColumnLongs(enc, te,
+              te.stripes.head, 1)
+            sals <- O.stripeColumnLongs(back, tb,
+              tb.stripes.head, 2)
+          } yield {
+            val identityOk = java.util.Arrays.equals(back, plain)
+            val unencReadable = encIds.toSeq == ids
+            val maskedOk = te.stats(2).intMin.isEmpty &&
+              te.stats(2).intMax.isEmpty &&
+              tp.stats(2).intMin.nonEmpty &&
+              te.stripeStats.head(2).intMin.isEmpty &&
+              te.stats(1) == tp.stats(1)
+            val wrongKeyClosed =
+              C.decryptFile(enc, master.reverse).isEmpty
+            val tamperSilent = {
+              val sf = O.parseStripeFooter(enc, te,
+                te.stripes.head).get
+              var pos = te.stripes.head.offset
+              var at = -1L
+              sf.streams.foreach { st =>
+                if (st.column == 2 && st.kind == 1 && at < 0)
+                  at = pos + st.length / 2
+                pos += st.length
               }
-              (t, ids.length.toLong, ids.sum, sals.sum,
-                if (identityOk) 1L else 0L,
-                if (unencReadable) 1L else 0L,
-                if (maskedOk) 1L else 0L,
-                if (wrongKeyClosed) 1L else 0L,
-                if (tamperSilent) 1L else 0L)
+              val x = enc.clone()
+              x(at.toInt) = (x(at.toInt) ^ 0x01).toByte
+              C.decryptFile(x, master)
+                .exists(!java.util.Arrays.equals(_, plain))
             }
-            res.toSeq
+            (t, ids.length.toLong, ids.sum, sals.sum,
+              if (identityOk) 1L else 0L,
+              if (unencReadable) 1L else 0L,
+              if (maskedOk) 1L else 0L,
+              if (wrongKeyClosed) 1L else 0L,
+              if (tamperSilent) 1L else 0L)
           }
-          .toDF("blob_id", "n_rows", "id_sum", "salary_sum",
+          res.toSeq
+        }.toDF("blob_id", "n_rows", "id_sum", "salary_sum",
             "identity_ok", "unenc_readable", "masked_ok",
             "wrong_key_closed", "tamper_silent")
       },
@@ -4796,95 +4471,89 @@ object WriterQueries {
     "q373_avro_single_object" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val G = graft.sources.AvroGeneric
-            val SO = graft.sources.AvroSingleObject
-            val ids = it.map(_._2).toSeq.sorted
-            def amt(d: Long): Long = (d * 11) % 501
-            val v1 =
-              """{"type":"record","name":"ev","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"amount","type":"int"},
-                |{"name":"tag","type":"string"}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val v2 =
-              """{"type":"record","name":"ev","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"amount","type":"long"},
-                |{"name":"source","type":"string","default":"s2"}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val reader =
-              """{"type":"record","name":"ev","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"amount","type":"long"},
-                |{"name":"source","type":"string","default":"v1"}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val res = for {
-              fp1 <- SO.fingerprint(v1)
-              fp2 <- SO.fingerprint(v2)
-              registry = Map(fp1 -> v1, fp2 -> v2)
-              msgs <- {
-                val ms = ids.map { d =>
-                  if ((d / 6) % 2 == 0)
-                    SO.write(v1, G.VRecord(Vector(
-                      "id" -> G.VLong(d),
-                      "amount" -> G.VLong(amt(d)),
-                      "tag" -> G.VString("t" + (d % 3)))))
-                  else
-                    SO.write(v2, G.VRecord(Vector(
-                      "id" -> G.VLong(d),
-                      "amount" -> G.VLong(amt(d) + (1L << 40)),
-                      "source" -> G.VString("k2"))))
-                }
-                if (ms.exists(_.isEmpty)) None
-                else Some(ms.map(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val G = graft.sources.AvroGeneric
+          val SO = graft.sources.AvroSingleObject
+          def amt(d: Long): Long = (d * 11) % 501
+          val v1 =
+            """{"type":"record","name":"ev","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"amount","type":"int"},
+              |{"name":"tag","type":"string"}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val v2 =
+            """{"type":"record","name":"ev","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"amount","type":"long"},
+              |{"name":"source","type":"string","default":"s2"}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val reader =
+            """{"type":"record","name":"ev","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"amount","type":"long"},
+              |{"name":"source","type":"string","default":"v1"}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val res = for {
+            fp1 <- SO.fingerprint(v1)
+            fp2 <- SO.fingerprint(v2)
+            registry = Map(fp1 -> v1, fp2 -> v2)
+            msgs <- {
+              val ms = ids.map { d =>
+                if ((d / 6) % 2 == 0)
+                  SO.write(v1, G.VRecord(Vector(
+                    "id" -> G.VLong(d),
+                    "amount" -> G.VLong(amt(d)),
+                    "tag" -> G.VString("t" + (d % 3)))))
+                else
+                  SO.write(v2, G.VRecord(Vector(
+                    "id" -> G.VLong(d),
+                    "amount" -> G.VLong(amt(d) + (1L << 40)),
+                    "source" -> G.VString("k2"))))
               }
-              decoded <- {
-                val ds = msgs.map(SO.read(_, registry, reader))
-                if (ds.exists(_.isEmpty)) None
-                else Some(ds.map(_.get))
-              }
-            } yield {
-              val apacheFpOk = try {
-                import org.apache.avro.{Schema, SchemaNormalization}
-                SchemaNormalization.parsingFingerprint64(
-                  new Schema.Parser().parse(v1)) == fp1 &&
-                  SchemaNormalization.parsingFingerprint64(
-                    new Schema.Parser().parse(v2)) == fp2
-              } catch { case _: Exception => false }
-              val closedOk =
-                SO.read(msgs.head, registry - fp1, reader).isEmpty && {
-                  val x = msgs.head.clone(); x(0) = 0x00
-                  SO.read(x, registry, reader).isEmpty
-                }
-              var n1 = 0L; var n2 = 0L; var amountSum = 0L
-              var idSum = 0L; var nDefSrc = 0L
-              var rowsOk = true
-              decoded.foreach { r =>
-                val row = for {
-                  id <- r.field("id").flatMap(_.asLong)
-                  a <- r.field("amount").flatMap(_.asLong)
-                  src <- r.field("source").flatMap(_.asString)
-                } yield {
-                  idSum += id; amountSum += a
-                  if (src == "v1") { n1 += 1; nDefSrc += 1 }
-                  else n2 += 1
-                }
-                if (row.isEmpty) rowsOk = false
-              }
-              if (!rowsOk) Nil
-              else Seq((t, decoded.length.toLong, n1, n2, idSum,
-                amountSum, nDefSrc,
-                if (apacheFpOk) 1L else 0L,
-                if (closedOk) 1L else 0L))
+              if (ms.exists(_.isEmpty)) None
+              else Some(ms.map(_.get))
             }
-            res.toSeq.flatten
+            decoded <- {
+              val ds = msgs.map(SO.read(_, registry, reader))
+              if (ds.exists(_.isEmpty)) None
+              else Some(ds.map(_.get))
+            }
+          } yield {
+            val apacheFpOk = try {
+              import org.apache.avro.{Schema, SchemaNormalization}
+              SchemaNormalization.parsingFingerprint64(
+                new Schema.Parser().parse(v1)) == fp1 &&
+                SchemaNormalization.parsingFingerprint64(
+                  new Schema.Parser().parse(v2)) == fp2
+            } catch { case _: Exception => false }
+            val closedOk =
+              SO.read(msgs.head, registry - fp1, reader).isEmpty && {
+                val x = msgs.head.clone(); x(0) = 0x00
+                SO.read(x, registry, reader).isEmpty
+              }
+            var n1 = 0L; var n2 = 0L; var amountSum = 0L
+            var idSum = 0L; var nDefSrc = 0L
+            var rowsOk = true
+            decoded.foreach { r =>
+              val row = for {
+                id <- r.field("id").flatMap(_.asLong)
+                a <- r.field("amount").flatMap(_.asLong)
+                src <- r.field("source").flatMap(_.asString)
+              } yield {
+                idSum += id; amountSum += a
+                if (src == "v1") { n1 += 1; nDefSrc += 1 }
+                else n2 += 1
+              }
+              if (row.isEmpty) rowsOk = false
+            }
+            if (!rowsOk) Nil
+            else Seq((t, decoded.length.toLong, n1, n2, idSum,
+              amountSum, nDefSrc,
+              if (apacheFpOk) 1L else 0L,
+              if (closedOk) 1L else 0L))
           }
-          .toDF("blob_id", "n_msgs", "n_v1", "n_v2", "id_sum",
+          res.toSeq.flatten
+        }.toDF("blob_id", "n_msgs", "n_v1", "n_v2", "id_sum",
             "amount_sum", "n_default_source", "apache_fp_ok",
             "closed_ok")
       },
@@ -4925,82 +4594,76 @@ object WriterQueries {
     "q374_hudi_mdt_column_stats" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 13) % 1200
-            val t1 = "00000000000001"
-            val buckets = (0 to 2).map(b =>
-              b -> ids.filter(d => v(d) / 400 == b))
-              .filter(_._2.nonEmpty)
-            val names = buckets.map { case (b, _) =>
-              b -> s"p/r$b-0-0_0-0-0_$t1.parquet" }.toMap
-            val data = buckets.map { case (b, p) =>
-              names(b) -> graft.sources.ParquetWrite.writeInt64(
-                Seq("rec_id", "val"), p.map(d => Array(d, v(d))))
-            }.toMap
-            val commit = W.commitJson(buckets.map { case (b, p) =>
-              (s"r$b-0-0", names(b), p.length.toLong) })
-            val files = Map(s".hoodie/$t1.commit" ->
-              commit.getBytes("UTF-8")) ++ data
-            val res = for {
-              mdt <- M.sync(files)
-              cs <- M.syncColumnStats(files, Seq("rec_id", "val"))
-              table = files ++ mdt ++ cs
-              full <- M.planFromMdt(table)
-              pruned <- M.prunePlan(table, "val", 100L, 250L)
-              noStats <- M.prunePlan(table, "nope", 100L, 250L)
-              stats <- M.colStatsListing(table)
-              scanned <- {
-                def scan(plan: Seq[String]) = {
-                  val per = plan.map { p =>
-                    for {
-                      b <- table.get(p)
-                      rs <- P.columnLongs(b, "rec_id")
-                      vs <- P.columnLongs(b, "val")
-                      if rs.length == vs.length
-                    } yield rs.zip(vs).toSeq
-                      .filter(r => r._2 >= 100 && r._2 <= 250)
-                  }
-                  if (per.exists(_.isEmpty)) None
-                  else Some(per.flatMap(_.get).sortBy(_._1))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val P = graft.sources.Parquet
+          def v(d: Long): Long = (d * 13) % 1200
+          val t1 = "00000000000001"
+          val buckets = (0 to 2).map(b =>
+            b -> ids.filter(d => v(d) / 400 == b))
+            .filter(_._2.nonEmpty)
+          val names = buckets.map { case (b, _) =>
+            b -> s"p/r$b-0-0_0-0-0_$t1.parquet" }.toMap
+          val data = buckets.map { case (b, p) =>
+            names(b) -> graft.sources.ParquetWrite.writeInt64(
+              Seq("rec_id", "val"), p.map(d => Array(d, v(d))))
+          }.toMap
+          val commit = W.commitJson(buckets.map { case (b, p) =>
+            (s"r$b-0-0", names(b), p.length.toLong) })
+          val files = Map(s".hoodie/$t1.commit" ->
+            commit.getBytes("UTF-8")) ++ data
+          val res = for {
+            mdt <- M.sync(files)
+            cs <- M.syncColumnStats(files, Seq("rec_id", "val"))
+            table = files ++ mdt ++ cs
+            full <- M.planFromMdt(table)
+            pruned <- M.prunePlan(table, "val", 100L, 250L)
+            noStats <- M.prunePlan(table, "nope", 100L, 250L)
+            stats <- M.colStatsListing(table)
+            scanned <- {
+              def scan(plan: Seq[String]) = {
+                val per = plan.map { p =>
+                  for {
+                    b <- table.get(p)
+                    rs <- P.columnLongs(b, "rec_id")
+                    vs <- P.columnLongs(b, "val")
+                    if rs.length == vs.length
+                  } yield rs.zip(vs).toSeq
+                    .filter(r => r._2 >= 100 && r._2 <= 250)
                 }
-                for {
-                  a <- scan(pruned)
-                  b <- scan(full)
-                } yield (a, b)
+                if (per.exists(_.isEmpty)) None
+                else Some(per.flatMap(_.get).sortBy(_._1))
               }
-            } yield {
-              val (prunedRows, fullRows) = scanned
-              val expectPruned = buckets.collect {
-                case (b, p)
-                  if p.map(v).max >= 100 && p.map(v).min <= 250 =>
-                  names(b)
-              }.sorted
-              val pruneExact = pruned == expectPruned
-              val noWrongSkip = prunedRows == fullRows
-              val conservative = noStats == full
-              val statsProven = buckets.forall { case (b, p) =>
-                stats.get((names(b), "val")).contains(
-                  (p.map(v).min, p.map(v).max, p.length.toLong))
-              }
-              (t, prunedRows.length.toLong,
-                prunedRows.map(_._1).sum, prunedRows.map(_._2).sum,
-                full.length.toLong, pruned.length.toLong,
-                if (pruneExact) 1L else 0L,
-                if (noWrongSkip) 1L else 0L,
-                if (conservative) 1L else 0L,
-                if (statsProven) 1L else 0L)
+              for {
+                a <- scan(pruned)
+                b <- scan(full)
+              } yield (a, b)
             }
-            res.toSeq
+          } yield {
+            val (prunedRows, fullRows) = scanned
+            val expectPruned = buckets.collect {
+              case (b, p)
+                if p.map(v).max >= 100 && p.map(v).min <= 250 =>
+                names(b)
+            }.sorted
+            val pruneExact = pruned == expectPruned
+            val noWrongSkip = prunedRows == fullRows
+            val conservative = noStats == full
+            val statsProven = buckets.forall { case (b, p) =>
+              stats.get((names(b), "val")).contains(
+                (p.map(v).min, p.map(v).max, p.length.toLong))
+            }
+            (t, prunedRows.length.toLong,
+              prunedRows.map(_._1).sum, prunedRows.map(_._2).sum,
+              full.length.toLong, pruned.length.toLong,
+              if (pruneExact) 1L else 0L,
+              if (noWrongSkip) 1L else 0L,
+              if (conservative) 1L else 0L,
+              if (statsProven) 1L else 0L)
           }
-          .toDF("blob_id", "n_match", "filt_id_sum", "filt_val_sum",
+          res.toSeq
+        }.toDF("blob_id", "n_match", "filt_id_sum", "filt_val_sum",
             "n_files_full", "n_files_pruned", "prune_exact",
             "no_wrong_skip", "conservative_ok", "stats_proven")
       },
@@ -5051,63 +4714,57 @@ object WriterQueries {
     "q375_iceberg_changelog_scan" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 29) % 997
-            val files = W.writeChangelogTable(s"tbl-$t", ids, v)
-            val meta = "v1.metadata.json"
-            def applyTo(base: Seq[(Long, Long)],
-                        cs: Seq[W.Change]): Seq[(Long, Long)] = {
-              val m = scala.collection.mutable
-                .Map.empty[(Long, Long), Int].withDefaultValue(0)
-              base.foreach(r => m(r) += 1)
-              cs.foreach { c =>
-                if (c.changeType == "INSERT")
-                  m((c.recId, c.value)) += 1
-                else m((c.recId, c.value)) -= 1
-              }
-              m.toSeq.flatMap { case (r, n) => Seq.fill(n)(r) }
-                .sorted
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 29) % 997
+          val files = W.writeChangelogTable(s"tbl-$t", ids, v)
+          val meta = "v1.metadata.json"
+          def applyTo(base: Seq[(Long, Long)],
+                      cs: Seq[W.Change]): Seq[(Long, Long)] = {
+            val m = scala.collection.mutable
+              .Map.empty[(Long, Long), Int].withDefaultValue(0)
+            base.foreach(r => m(r) += 1)
+            cs.foreach { c =>
+              if (c.changeType == "INSERT")
+                m((c.recId, c.value)) += 1
+              else m((c.recId, c.value)) -= 1
             }
-            val res = for {
-              all <- W.changelogScan(files, meta, 1L, 4L)
-              delWin <- W.changelogScan(files, meta, 2L, 3L)
-              scans <- {
-                val ss = (1L to 4L).map(
-                  W.scanSnapshotMor(files, meta, _))
-                if (ss.exists(_.isEmpty)) None
-                else Some(ss.map(_.get))
-              }
-              steps <- {
-                val is = (1L to 3L).map(i =>
-                  W.changelogScan(files, meta, i, i + 1))
-                if (is.exists(_.isEmpty)) None
-                else Some(is.map(_.get))
-              }
-            } yield {
-              val foldOk = (0 until 3).forall { i =>
-                applyTo(scans(i), steps(i)) == scans(i + 1).sorted
-              }
-              val totalOk = applyTo(scans(0), all) == scans(3).sorted
-              val windowOk = delWin.nonEmpty &&
-                delWin.forall(_.changeType == "DELETE")
-              val ins = all.filter(_.changeType == "INSERT")
-              val del = all.filter(_.changeType == "DELETE")
-              (t, ins.length.toLong, del.length.toLong,
-                ins.map(_.value).sum, del.map(_.value).sum,
-                scans(3).length.toLong, scans(3).map(_._2).sum,
-                if (foldOk) 1L else 0L,
-                if (totalOk) 1L else 0L,
-                if (windowOk) 1L else 0L)
-            }
-            res.toSeq
+            m.toSeq.flatMap { case (r, n) => Seq.fill(n)(r) }
+              .sorted
           }
-          .toDF("table_id", "n_inserts", "n_deletes", "ins_val_sum",
+          val res = for {
+            all <- W.changelogScan(files, meta, 1L, 4L)
+            delWin <- W.changelogScan(files, meta, 2L, 3L)
+            scans <- {
+              val ss = (1L to 4L).map(
+                W.scanSnapshotMor(files, meta, _))
+              if (ss.exists(_.isEmpty)) None
+              else Some(ss.map(_.get))
+            }
+            steps <- {
+              val is = (1L to 3L).map(i =>
+                W.changelogScan(files, meta, i, i + 1))
+              if (is.exists(_.isEmpty)) None
+              else Some(is.map(_.get))
+            }
+          } yield {
+            val foldOk = (0 until 3).forall { i =>
+              applyTo(scans(i), steps(i)) == scans(i + 1).sorted
+            }
+            val totalOk = applyTo(scans(0), all) == scans(3).sorted
+            val windowOk = delWin.nonEmpty &&
+              delWin.forall(_.changeType == "DELETE")
+            val ins = all.filter(_.changeType == "INSERT")
+            val del = all.filter(_.changeType == "DELETE")
+            (t, ins.length.toLong, del.length.toLong,
+              ins.map(_.value).sum, del.map(_.value).sum,
+              scans(3).length.toLong, scans(3).map(_._2).sum,
+              if (foldOk) 1L else 0L,
+              if (totalOk) 1L else 0L,
+              if (windowOk) 1L else 0L)
+          }
+          res.toSeq
+        }.toDF("table_id", "n_inserts", "n_deletes", "ins_val_sum",
             "del_val_sum", "n_final", "final_val_sum", "fold_ok",
             "total_ok", "window_ok")
       },
@@ -5150,57 +4807,51 @@ object WriterQueries {
     "q377_delta_version_checksum" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTable(s"tbl-$t", ids)
-            val res = for {
-              crc0 <- W.writeCrc(files, 0L)
-              crc1 <- W.writeCrc(files, 1L)
-              table = files + crc0 + crc1
-              v0 <- W.validateCrc(table, 0L)
-              v1 <- W.validateCrc(table, 1L)
-              live <- W.replayLiveSized(table, 1L)
-              rows <- {
-                val per = live.keys.toSeq.sorted.map { p =>
-                  for {
-                    b <- table.get(p)
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                    if rs.length == vs.length
-                  } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val files = W.writeTable(s"tbl-$t", ids)
+          val res = for {
+            crc0 <- W.writeCrc(files, 0L)
+            crc1 <- W.writeCrc(files, 1L)
+            table = files + crc0 + crc1
+            v0 <- W.validateCrc(table, 0L)
+            v1 <- W.validateCrc(table, 1L)
+            live <- W.replayLiveSized(table, 1L)
+            rows <- {
+              val per = live.keys.toSeq.sorted.map { p =>
+                for {
+                  b <- table.get(p)
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                  if rs.length == vs.length
+                } yield rs.zip(vs).toSeq
               }
-            } yield {
-              val sizeLaw = v1.crcSize == live.keys.toSeq.map(p =>
-                table(p).length.toLong).sum
-              val addOnly = new String(files(
-                "_delta_log/00000000000000000001.json"), "UTF-8")
-                .split("\n").filter(_.contains("\"add\""))
-                .mkString("", "\n", "\n")
-              val tampered = table +
-                ("_delta_log/00000000000000000001.json" ->
-                  addOnly.getBytes("UTF-8"))
-              val detected = W.validateCrc(tampered, 1L).exists(c =>
-                !c.ok && c.replayFiles == 3L && c.crcFiles == 2L)
-              val missingClosed = W.validateCrc(files, 1L).isEmpty
-              (t, v0.crcFiles, v1.crcFiles, rows.length.toLong,
-                rows.map(_._1).sum, rows.map(_._2).sum,
-                if (v0.ok && v1.ok) 1L else 0L,
-                if (sizeLaw) 1L else 0L,
-                if (detected) 1L else 0L,
-                if (missingClosed) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+          } yield {
+            val sizeLaw = v1.crcSize == live.keys.toSeq.map(p =>
+              table(p).length.toLong).sum
+            val addOnly = new String(files(
+              "_delta_log/00000000000000000001.json"), "UTF-8")
+              .split("\n").filter(_.contains("\"add\""))
+              .mkString("", "\n", "\n")
+            val tampered = table +
+              ("_delta_log/00000000000000000001.json" ->
+                addOnly.getBytes("UTF-8"))
+            val detected = W.validateCrc(tampered, 1L).exists(c =>
+              !c.ok && c.replayFiles == 3L && c.crcFiles == 2L)
+            val missingClosed = W.validateCrc(files, 1L).isEmpty
+            (t, v0.crcFiles, v1.crcFiles, rows.length.toLong,
+              rows.map(_._1).sum, rows.map(_._2).sum,
+              if (v0.ok && v1.ok) 1L else 0L,
+              if (sizeLaw) 1L else 0L,
+              if (detected) 1L else 0L,
+              if (missingClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_files_v0", "n_files_v1", "n_live",
+          res.toSeq
+        }.toDF("table_id", "n_files_v0", "n_files_v1", "n_live",
             "id_sum", "val_sum", "valid_ok", "size_law_ok",
             "tamper_detected", "missing_closed")
       },
@@ -5242,22 +4893,16 @@ object WriterQueries {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.streaming.Trigger
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val changes = docs.groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 29) % 997
-            val files = W.writeChangelogTable(s"tbl-$t", ids, v)
-            (1L to 3L).flatMap { i =>
-              W.changelogScan(files, "v1.metadata.json", i, i + 1)
-                .toSeq.flatten.map(c =>
-                  (t, i + 1, c.changeType, c.recId, c.value))
-            }
+        val changes = Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 29) % 997
+          val files = W.writeChangelogTable(s"tbl-$t", ids, v)
+          (1L to 3L).flatMap { i =>
+            W.changelogScan(files, "v1.metadata.json", i, i + 1)
+              .toSeq.flatten.map(c =>
+                (t, i + 1, c.changeType, c.recId, c.value))
           }
-          .toDF("table_id", "to_sid", "change_type", "rec_id", "val")
+        }.toDF("table_id", "to_sid", "change_type", "rec_id", "val")
         val dv = new StreamDeliveries("graft_q378_mv")
         // snapshot 3 (deletes) lands in its own batch AFTER the
         // inserts it kills; snapshot 4 after that
@@ -5333,64 +4978,58 @@ object WriterQueries {
     "q379_avro_split_read" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val G = graft.sources.AvroGeneric
-            val W = graft.sources.AvroWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 37) % 911
-            val schema =
-              """{"type":"record","name":"ev","fields":[
-                |{"name":"id","type":"long"},
-                |{"name":"val","type":"long"}
-                |]}""".stripMargin.replaceAll("\n", "")
-            val recs = ids.map(d => G.VRecord(Vector(
-              "id" -> G.VLong(d), "val" -> G.VLong(v(d)))))
-            val bytes = W.container(schema, recs, "null",
-              s"q379-$t", 8) // many small blocks: real split surface
-            val res = for {
-              full <- G.parseContainer(bytes)
-              tiled <- {
-                def tile(n: Int): Option[Seq[G.V]] = {
-                  val len = bytes.length.toLong
-                  val cuts = (0 to n).map(k => len * k / n)
-                  val per = cuts.sliding(2).toSeq.map {
-                    case Seq(a, b) => G.readSplit(bytes, a, b)
-                  }
-                  if (per.exists(_.isEmpty)) None
-                  else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val G = graft.sources.AvroGeneric
+          val W = graft.sources.AvroWrite
+          def v(d: Long): Long = (d * 37) % 911
+          val schema =
+            """{"type":"record","name":"ev","fields":[
+              |{"name":"id","type":"long"},
+              |{"name":"val","type":"long"}
+              |]}""".stripMargin.replaceAll("\n", "")
+          val recs = ids.map(d => G.VRecord(Vector(
+            "id" -> G.VLong(d), "val" -> G.VLong(v(d)))))
+          val bytes = W.container(schema, recs, "null",
+            s"q379-$t", 8) // many small blocks: real split surface
+          val res = for {
+            full <- G.parseContainer(bytes)
+            tiled <- {
+              def tile(n: Int): Option[Seq[G.V]] = {
+                val len = bytes.length.toLong
+                val cuts = (0 to n).map(k => len * k / n)
+                val per = cuts.sliding(2).toSeq.map {
+                  case Seq(a, b) => G.readSplit(bytes, a, b)
                 }
-                for { a <- tile(4); b <- tile(7) } yield (a, b)
+                if (per.exists(_.isEmpty)) None
+                else Some(per.flatMap(_.get))
               }
-            } yield {
-              val (t4, t7) = tiled
-              val tileOk = t4 == full.records && t7 == full.records
-              val emptyOk = G.readSplit(bytes,
-                bytes.length + 5L, bytes.length + 9L)
-                .exists(_.isEmpty)
-              val truncClosed = G.readSplit(bytes.dropRight(7), 0L,
-                bytes.length.toLong).isEmpty
-              var n = 0L; var idSum = 0L; var valSum = 0L
-              var rowsOk = true
-              t4.foreach { r =>
-                val row = for {
-                  id <- r.field("id").flatMap(_.asLong)
-                  vv <- r.field("val").flatMap(_.asLong)
-                } yield { n += 1; idSum += id; valSum += vv }
-                if (row.isEmpty) rowsOk = false
-              }
-              if (!rowsOk) Nil
-              else Seq((t, n, idSum, valSum,
-                if (tileOk) 1L else 0L,
-                if (emptyOk) 1L else 0L,
-                if (truncClosed) 1L else 0L))
+              for { a <- tile(4); b <- tile(7) } yield (a, b)
             }
-            res.toSeq.flatten
+          } yield {
+            val (t4, t7) = tiled
+            val tileOk = t4 == full.records && t7 == full.records
+            val emptyOk = G.readSplit(bytes,
+              bytes.length + 5L, bytes.length + 9L)
+              .exists(_.isEmpty)
+            val truncClosed = G.readSplit(bytes.dropRight(7), 0L,
+              bytes.length.toLong).isEmpty
+            var n = 0L; var idSum = 0L; var valSum = 0L
+            var rowsOk = true
+            t4.foreach { r =>
+              val row = for {
+                id <- r.field("id").flatMap(_.asLong)
+                vv <- r.field("val").flatMap(_.asLong)
+              } yield { n += 1; idSum += id; valSum += vv }
+              if (row.isEmpty) rowsOk = false
+            }
+            if (!rowsOk) Nil
+            else Seq((t, n, idSum, valSum,
+              if (tileOk) 1L else 0L,
+              if (emptyOk) 1L else 0L,
+              if (truncClosed) 1L else 0L))
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq.flatten
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum",
             "tile_ok", "empty_ok", "trunc_closed")
       },
       oracle = Some("""
@@ -5423,71 +5062,65 @@ object WriterQueries {
     "q380_parquet_rowgroup_split" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val P = graft.sources.Parquet
-            val W = graft.sources.ParquetWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 41) % 877
-            val nG = 8
-            val per = math.max(1, (ids.length + nG - 1) / nG)
-            val groups = ids.grouped(per).toSeq
-              .map(_.map(d => Array(d, v(d))))
-            val bytes = W.writeInt64RowGroups(Seq("rec_id", "val"),
-              groups)
-            val res = for {
-              fm <- P.parseFooter(bytes)
-              sums <- {
-                def rgSums(rgIdx: Seq[Int]) = {
-                  val per2 = rgIdx.map { i =>
-                    val rg = fm.rowGroups(i)
-                    val cs = rg.cols.map(c =>
-                      P.decodeChunk(bytes, c))
-                    if (cs.exists(_.isEmpty)) None
-                    else Some((cs.head.get.numValues,
-                      rg.cols.zip(cs.map(_.get)).map {
-                        case (c, d) => c.path -> d.longSum
-                      }.toMap))
-                  }
-                  if (per2.exists(_.isEmpty)) None
-                  else Some(per2.map(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val P = graft.sources.Parquet
+          val W = graft.sources.ParquetWrite
+          def v(d: Long): Long = (d * 41) % 877
+          val nG = 8
+          val per = math.max(1, (ids.length + nG - 1) / nG)
+          val groups = ids.grouped(per).toSeq
+            .map(_.map(d => Array(d, v(d))))
+          val bytes = W.writeInt64RowGroups(Seq("rec_id", "val"),
+            groups)
+          val res = for {
+            fm <- P.parseFooter(bytes)
+            sums <- {
+              def rgSums(rgIdx: Seq[Int]) = {
+                val per2 = rgIdx.map { i =>
+                  val rg = fm.rowGroups(i)
+                  val cs = rg.cols.map(c =>
+                    P.decodeChunk(bytes, c))
+                  if (cs.exists(_.isEmpty)) None
+                  else Some((cs.head.get.numValues,
+                    rg.cols.zip(cs.map(_.get)).map {
+                      case (c, d) => c.path -> d.longSum
+                    }.toMap))
                 }
-                def tile(n: Int) = {
-                  val len = bytes.length.toLong
-                  val cuts = (0 to n).map(k => len * k / n)
-                  val claimed = cuts.sliding(2).toSeq.map {
-                    case Seq(a, b) => P.splitRowGroups(fm, a, b)
-                  }
-                  val flat = claimed.flatten
-                  if (flat.sorted == fm.rowGroups.indices.toSeq)
-                    rgSums(flat).map(ss =>
-                      (ss.map(_._1).sum,
-                        ss.map(_._2("rec_id")).sum,
-                        ss.map(_._2("val")).sum))
-                  else None
-                }
-                for { a <- tile(3); b <- tile(5) } yield (a, b)
+                if (per2.exists(_.isEmpty)) None
+                else Some(per2.map(_.get))
               }
-            } yield {
-              val (t3, t5) = sums
-              val tileOk = t3 == t5
-              val emptyOk = P.splitRowGroups(fm,
-                bytes.length.toLong + 4, bytes.length.toLong + 9)
-                .isEmpty &&
-                P.splitRowGroups(fm, 0L, 4L).isEmpty
-              val nGroupsOk = fm.rowGroups.length == groups.length
-              (t, t3._1, t3._2, t3._3,
-                fm.rowGroups.length.toLong,
-                if (tileOk) 1L else 0L,
-                if (emptyOk) 1L else 0L,
-                if (nGroupsOk) 1L else 0L)
+              def tile(n: Int) = {
+                val len = bytes.length.toLong
+                val cuts = (0 to n).map(k => len * k / n)
+                val claimed = cuts.sliding(2).toSeq.map {
+                  case Seq(a, b) => P.splitRowGroups(fm, a, b)
+                }
+                val flat = claimed.flatten
+                if (flat.sorted == fm.rowGroups.indices.toSeq)
+                  rgSums(flat).map(ss =>
+                    (ss.map(_._1).sum,
+                      ss.map(_._2("rec_id")).sum,
+                      ss.map(_._2("val")).sum))
+                else None
+              }
+              for { a <- tile(3); b <- tile(5) } yield (a, b)
             }
-            res.toSeq
+          } yield {
+            val (t3, t5) = sums
+            val tileOk = t3 == t5
+            val emptyOk = P.splitRowGroups(fm,
+              bytes.length.toLong + 4, bytes.length.toLong + 9)
+              .isEmpty &&
+              P.splitRowGroups(fm, 0L, 4L).isEmpty
+            val nGroupsOk = fm.rowGroups.length == groups.length
+            (t, t3._1, t3._2, t3._3,
+              fm.rowGroups.length.toLong,
+              if (tileOk) 1L else 0L,
+              if (emptyOk) 1L else 0L,
+              if (nGroupsOk) 1L else 0L)
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum",
             "n_row_groups", "tile_ok", "empty_ok", "n_groups_ok")
       },
       oracle = Some("""
@@ -5522,92 +5155,86 @@ object WriterQueries {
     "q381_delta_zorder" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            def fx(d: Long): Long = (d * 7) % 256
-            def fy(d: Long): Long = (d * 13) % 256
-            def fv(d: Long): Long = (d * 17) % 769
-            val nF = 8
-            val per = math.max(1, (ids.length + nF - 1) / nF)
-            val parts = ids.grouped(per).toSeq
-            val names = parts.indices.map(i => s"part-u$i.parquet")
-            val data = parts.map(p => graft.sources.ParquetWrite
-              .writeInt64(Seq("rec_id", "x", "y", "val"),
-                p.map(d => Array(d, fx(d), fy(d), fv(d)))))
-            val c0 = (Seq(W.protocolAction,
-              W.metaDataAction(s"tbl-$t")) ++
-              names.zip(data).map { case (n, d) =>
-                W.addAction(n, d.length.toLong) })
-              .mkString("\n") + "\n"
-            val files = Map("_delta_log/00000000000000000000.json" ->
-              c0.getBytes("UTF-8")) ++ names.zip(data)
-            val (bLoX, bHiX, bLoY, bHiY) = (64L, 95L, 64L, 95L)
-            def decode(table: Map[String, Array[Byte]], p: String) =
-              for {
-                b <- table.get(p)
-                rs <- P.columnLongs(b, "rec_id")
-                xs <- P.columnLongs(b, "x")
-                ys <- P.columnLongs(b, "y")
-                vs <- P.columnLongs(b, "val")
-              } yield (0 until rs.length).map(i =>
-                (rs(i), xs(i), ys(i), vs(i)))
-            def boxScan(table: Map[String, Array[Byte]],
-                        live: Seq[String]) = {
-              val per2 = live.map(decode(table, _))
-              if (per2.exists(_.isEmpty)) None
-              else {
-                val byFile = live.zip(per2.map(_.get))
-                val hits = byFile.filter { case (_, rows) =>
-                  rows.nonEmpty &&
-                    rows.map(_._2).min <= bHiX &&
-                    rows.map(_._2).max >= bLoX &&
-                    rows.map(_._3).min <= bHiY &&
-                    rows.map(_._3).max >= bLoY
-                }
-                val hitRows = hits.flatMap(_._2).filter(r =>
-                  r._2 >= bLoX && r._2 <= bHiX &&
-                    r._3 >= bLoY && r._3 <= bHiY)
-                val allRows = byFile.flatMap(_._2).filter(r =>
-                  r._2 >= bLoX && r._2 <= bHiX &&
-                    r._3 >= bLoY && r._3 <= bHiY)
-                Some((hits.length, hitRows.sortBy(_._1),
-                  allRows.sortBy(_._1), byFile.flatMap(_._2)))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          def fx(d: Long): Long = (d * 7) % 256
+          def fy(d: Long): Long = (d * 13) % 256
+          def fv(d: Long): Long = (d * 17) % 769
+          val nF = 8
+          val per = math.max(1, (ids.length + nF - 1) / nF)
+          val parts = ids.grouped(per).toSeq
+          val names = parts.indices.map(i => s"part-u$i.parquet")
+          val data = parts.map(p => graft.sources.ParquetWrite
+            .writeInt64(Seq("rec_id", "x", "y", "val"),
+              p.map(d => Array(d, fx(d), fy(d), fv(d)))))
+          val c0 = (Seq(W.protocolAction,
+            W.metaDataAction(s"tbl-$t")) ++
+            names.zip(data).map { case (n, d) =>
+              W.addAction(n, d.length.toLong) })
+            .mkString("\n") + "\n"
+          val files = Map("_delta_log/00000000000000000000.json" ->
+            c0.getBytes("UTF-8")) ++ names.zip(data)
+          val (bLoX, bHiX, bLoY, bHiY) = (64L, 95L, 64L, 95L)
+          def decode(table: Map[String, Array[Byte]], p: String) =
+            for {
+              b <- table.get(p)
+              rs <- P.columnLongs(b, "rec_id")
+              xs <- P.columnLongs(b, "x")
+              ys <- P.columnLongs(b, "y")
+              vs <- P.columnLongs(b, "val")
+            } yield (0 until rs.length).map(i =>
+              (rs(i), xs(i), ys(i), vs(i)))
+          def boxScan(table: Map[String, Array[Byte]],
+                      live: Seq[String]) = {
+            val per2 = live.map(decode(table, _))
+            if (per2.exists(_.isEmpty)) None
+            else {
+              val byFile = live.zip(per2.map(_.get))
+              val hits = byFile.filter { case (_, rows) =>
+                rows.nonEmpty &&
+                  rows.map(_._2).min <= bHiX &&
+                  rows.map(_._2).max >= bLoX &&
+                  rows.map(_._3).min <= bHiY &&
+                  rows.map(_._3).max >= bLoY
               }
+              val hitRows = hits.flatMap(_._2).filter(r =>
+                r._2 >= bLoX && r._2 <= bHiX &&
+                  r._3 >= bLoY && r._3 <= bHiY)
+              val allRows = byFile.flatMap(_._2).filter(r =>
+                r._2 >= bLoX && r._2 <= bHiX &&
+                  r._3 >= bLoY && r._3 <= bHiY)
+              Some((hits.length, hitRows.sortBy(_._1),
+                allRows.sortBy(_._1), byFile.flatMap(_._2)))
             }
-            val res = for {
-              z <- W.optimizeZOrder(files, nF)
-              table = files ++ z.newFiles +
-                (z.commitName -> z.commit)
-              liveAfter <- W.replayLive(table).map(_._1)
-              linear <- boxScan(files, names)
-              zscan <- boxScan(table, liveAfter)
-            } yield {
-              val (hitsL, hitRowsL, allRowsL, fullL) = linear
-              val (hitsZ, hitRowsZ, allRowsZ, fullZ) = zscan
-              val zPrunes = hitsZ < hitsL
-              val noWrongSkip = hitRowsL == allRowsL &&
-                hitRowsZ == allRowsZ && allRowsL == allRowsZ
-              val rowsPreserved =
-                fullL.sortBy(_._1) == fullZ.sortBy(_._1) &&
-                  z.rows == fullL.length.toLong
-              val dcOk = !new String(z.commit, "UTF-8")
-                .contains("\"dataChange\": true")
-              (t, fullL.length.toLong, fullL.map(_._4).sum,
-                allRowsL.length.toLong, allRowsL.map(_._4).sum,
-                if (zPrunes) 1L else 0L,
-                if (noWrongSkip) 1L else 0L,
-                if (rowsPreserved) 1L else 0L,
-                if (dcOk) 1L else 0L)
-            }
-            res.toSeq
           }
-          .toDF("blob_id", "n_rows", "val_sum", "n_box_rows",
+          val res = for {
+            z <- W.optimizeZOrder(files, nF)
+            table = files ++ z.newFiles +
+              (z.commitName -> z.commit)
+            liveAfter <- W.replayLive(table).map(_._1)
+            linear <- boxScan(files, names)
+            zscan <- boxScan(table, liveAfter)
+          } yield {
+            val (hitsL, hitRowsL, allRowsL, fullL) = linear
+            val (hitsZ, hitRowsZ, allRowsZ, fullZ) = zscan
+            val zPrunes = hitsZ < hitsL
+            val noWrongSkip = hitRowsL == allRowsL &&
+              hitRowsZ == allRowsZ && allRowsL == allRowsZ
+            val rowsPreserved =
+              fullL.sortBy(_._1) == fullZ.sortBy(_._1) &&
+                z.rows == fullL.length.toLong
+            val dcOk = !new String(z.commit, "UTF-8")
+              .contains("\"dataChange\": true")
+            (t, fullL.length.toLong, fullL.map(_._4).sum,
+              allRowsL.length.toLong, allRowsL.map(_._4).sum,
+              if (zPrunes) 1L else 0L,
+              if (noWrongSkip) 1L else 0L,
+              if (rowsPreserved) 1L else 0L,
+              if (dcOk) 1L else 0L)
+          }
+          res.toSeq
+        }.toDF("blob_id", "n_rows", "val_sum", "n_box_rows",
             "box_val_sum", "z_prunes", "no_wrong_skip",
             "rows_preserved", "datachange_ok")
       },
@@ -5649,64 +5276,58 @@ object WriterQueries {
     "q382_hudi_rollback" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val H = graft.sources.HudiLog
-            val ids = it.map(_._2).toSeq.sorted
-            val t4 = "00000000000004"; val t5 = "00000000000005"
-            val log0 = "p/.fg0_00000000000001.log.1_0-0-0"
-            val log1 = "p/.fg1_00000000000001.log.1_0-0-0"
-            val files0 = W.writeMorTable(ids)
-            val extra = H.writeBlock(H.TypeAvroData,
-              Seq(H.HdrInstantTime -> t5,
-                H.HdrSchema -> W.LogRecSchema),
-              H.dataContent(Seq(W.avroRec(999999L, 999L))))
-            val files = files0 +
-              (log0 -> (files0(log0) ++ extra)) +
-              (s".hoodie/$t5.deltacommit.inflight" ->
-                "{}".getBytes("UTF-8"))
-            val res = for {
-              before <- W.replay(files)
-              r1 <- W.rollback(files, t5, "00000000000006")
-              f1 = (files -- r1.deleted) ++ r1.appendedLogs +
-                (r1.timelineName -> r1.timeline)
-              r2 <- W.rollback(f1, t4, "00000000000007")
-              f2 = (f1 -- r2.deleted) ++ r2.appendedLogs +
-                (r2.timelineName -> r2.timeline)
-              after <- W.replay(f2)
-              r3 <- W.rollback(f2, t5, "00000000000008")
-            } yield {
-              val cmdAppended =
-                r1.appendedLogs.keySet == Set(log0) &&
-                  H.parse(f1(log0)).exists(bs =>
-                    bs.last.blockType == H.TypeCommand &&
-                      bs.last.target == t5)
-              val r2Ok = r2.deleted.toSet == Set(log1,
-                s".hoodie/$t4.deltacommit.inflight") &&
-                r2.appendedLogs.isEmpty
-              val replayStable =
-                before.map(f => (f.fileId, f.rows)) ==
-                  after.map(f => (f.fileId, f.rows))
-              val refused = W.rollback(f2, "00000000000002",
-                "00000000000009").isEmpty
-              val idempotent =
-                r3.deleted.isEmpty && r3.appendedLogs.isEmpty
-              val rows = after.flatMap(_.rows)
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum,
-                if (cmdAppended) 1L else 0L,
-                if (r2Ok) 1L else 0L,
-                if (replayStable) 1L else 0L,
-                if (refused) 1L else 0L,
-                if (idempotent) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val H = graft.sources.HudiLog
+          val t4 = "00000000000004"; val t5 = "00000000000005"
+          val log0 = "p/.fg0_00000000000001.log.1_0-0-0"
+          val log1 = "p/.fg1_00000000000001.log.1_0-0-0"
+          val files0 = W.writeMorTable(ids)
+          val extra = H.writeBlock(H.TypeAvroData,
+            Seq(H.HdrInstantTime -> t5,
+              H.HdrSchema -> W.LogRecSchema),
+            H.dataContent(Seq(W.avroRec(999999L, 999L))))
+          val files = files0 +
+            (log0 -> (files0(log0) ++ extra)) +
+            (s".hoodie/$t5.deltacommit.inflight" ->
+              "{}".getBytes("UTF-8"))
+          val res = for {
+            before <- W.replay(files)
+            r1 <- W.rollback(files, t5, "00000000000006")
+            f1 = (files -- r1.deleted) ++ r1.appendedLogs +
+              (r1.timelineName -> r1.timeline)
+            r2 <- W.rollback(f1, t4, "00000000000007")
+            f2 = (f1 -- r2.deleted) ++ r2.appendedLogs +
+              (r2.timelineName -> r2.timeline)
+            after <- W.replay(f2)
+            r3 <- W.rollback(f2, t5, "00000000000008")
+          } yield {
+            val cmdAppended =
+              r1.appendedLogs.keySet == Set(log0) &&
+                H.parse(f1(log0)).exists(bs =>
+                  bs.last.blockType == H.TypeCommand &&
+                    bs.last.target == t5)
+            val r2Ok = r2.deleted.toSet == Set(log1,
+              s".hoodie/$t4.deltacommit.inflight") &&
+              r2.appendedLogs.isEmpty
+            val replayStable =
+              before.map(f => (f.fileId, f.rows)) ==
+                after.map(f => (f.fileId, f.rows))
+            val refused = W.rollback(f2, "00000000000002",
+              "00000000000009").isEmpty
+            val idempotent =
+              r3.deleted.isEmpty && r3.appendedLogs.isEmpty
+            val rows = after.flatMap(_.rows)
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum,
+              if (cmdAppended) 1L else 0L,
+              if (r2Ok) 1L else 0L,
+              if (replayStable) 1L else 0L,
+              if (refused) 1L else 0L,
+              if (idempotent) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "cmd_appended", "all_target_deleted", "replay_stable",
             "completed_refused", "idempotent_ok")
       },
@@ -5746,54 +5367,48 @@ object WriterQueries {
     "q383_delta_restore" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTable(s"tbl-$t", ids)
-            val res = for {
-              r <- W.restore(files, 0L)
-              restored = files + (r.commitName -> r.commit)
-              after <- W.replayLiveSized(restored, 2L)
-              atV0 <- W.replayLiveSized(files, 0L)
-              rows <- {
-                val per = after.keys.toSeq.sorted.map { p =>
-                  for {
-                    b <- restored.get(p)
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                    if rs.length == vs.length
-                  } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val files = W.writeTable(s"tbl-$t", ids)
+          val res = for {
+            r <- W.restore(files, 0L)
+            restored = files + (r.commitName -> r.commit)
+            after <- W.replayLiveSized(restored, 2L)
+            atV0 <- W.replayLiveSized(files, 0L)
+            rows <- {
+              val per = after.keys.toSeq.sorted.map { p =>
+                for {
+                  b <- restored.get(p)
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                  if rs.length == vs.length
+                } yield rs.zip(vs).toSeq
               }
-              noop <- W.restore(files, 1L)
-            } yield {
-              val roundtrip = after == atV0
-              val actionsOk = r.adds == Seq("part-B.parquet") &&
-                r.removes == Seq("part-C.parquet")
-              val noopOk = noop.adds.isEmpty && noop.removes.isEmpty
-              val dcOk = new String(r.commit, "UTF-8")
-                .split("\n").filter(_.nonEmpty)
-                .forall(_.contains("\"dataChange\": true"))
-              val vacuumClosed =
-                W.restore(files - "part-B.parquet", 0L).isEmpty
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum,
-                if (roundtrip) 1L else 0L,
-                if (actionsOk) 1L else 0L,
-                if (noopOk) 1L else 0L,
-                if (dcOk) 1L else 0L,
-                if (vacuumClosed) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+            noop <- W.restore(files, 1L)
+          } yield {
+            val roundtrip = after == atV0
+            val actionsOk = r.adds == Seq("part-B.parquet") &&
+              r.removes == Seq("part-C.parquet")
+            val noopOk = noop.adds.isEmpty && noop.removes.isEmpty
+            val dcOk = new String(r.commit, "UTF-8")
+              .split("\n").filter(_.nonEmpty)
+              .forall(_.contains("\"dataChange\": true"))
+            val vacuumClosed =
+              W.restore(files - "part-B.parquet", 0L).isEmpty
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum,
+              if (roundtrip) 1L else 0L,
+              if (actionsOk) 1L else 0L,
+              if (noopOk) 1L else 0L,
+              if (dcOk) 1L else 0L,
+              if (vacuumClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "roundtrip_ok", "actions_ok", "noop_ok",
             "datachange_ok", "vacuum_closed")
       },
@@ -5830,38 +5445,32 @@ object WriterQueries {
     "q384_iceberg_rollback_to" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 27) % 929
-            val files = W.writeIncrTable(s"tbl-$t", ids, v)
-            val res = for {
-              (mName, mBytes) <- W.rollbackTo(files,
-                "v1.metadata.json", 2L)
-              rolled = files + (mName -> mBytes)
-              cur <- W.resolveRef(rolled, mName, "main")
-              nowRows <- W.scanSnapshot(rolled, mName, cur)
-              ttRows <- W.scanSnapshot(rolled, mName, 4L)
-              inc <- W.incrementalScan(rolled, mName, 2L, 4L)
-            } yield {
-              def srt(xs: Seq[(Long, Long)]) = xs.sorted
-              val ttOk = srt(ttRows) ==
-                ids.sorted.map(d => (d, v(d)))
-              val foldOk = srt(nowRows ++ inc.rows) == srt(ttRows)
-              val refused = W.rollbackTo(rolled, mName, 9L).isEmpty
-              (t, cur, nowRows.length.toLong,
-                nowRows.map(_._1).sum, nowRows.map(_._2).sum,
-                if (ttOk) 1L else 0L,
-                if (foldOk) 1L else 0L,
-                if (refused) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 27) % 929
+          val files = W.writeIncrTable(s"tbl-$t", ids, v)
+          val res = for {
+            (mName, mBytes) <- W.rollbackTo(files,
+              "v1.metadata.json", 2L)
+            rolled = files + (mName -> mBytes)
+            cur <- W.resolveRef(rolled, mName, "main")
+            nowRows <- W.scanSnapshot(rolled, mName, cur)
+            ttRows <- W.scanSnapshot(rolled, mName, 4L)
+            inc <- W.incrementalScan(rolled, mName, 2L, 4L)
+          } yield {
+            def srt(xs: Seq[(Long, Long)]) = xs.sorted
+            val ttOk = srt(ttRows) ==
+              ids.sorted.map(d => (d, v(d)))
+            val foldOk = srt(nowRows ++ inc.rows) == srt(ttRows)
+            val refused = W.rollbackTo(rolled, mName, 9L).isEmpty
+            (t, cur, nowRows.length.toLong,
+              nowRows.map(_._1).sum, nowRows.map(_._2).sum,
+              if (ttOk) 1L else 0L,
+              if (foldOk) 1L else 0L,
+              if (refused) 1L else 0L)
           }
-          .toDF("table_id", "current_sid", "n_rows", "id_sum",
+          res.toSeq
+        }.toDF("table_id", "current_sid", "n_rows", "id_sum",
             "val_sum", "timetravel_ok", "fold_ok",
             "unknown_refused")
       },
@@ -5898,61 +5507,55 @@ object WriterQueries {
     "q385_orc_stripe_split" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.OrcWrite
-            val O = graft.sources.Orc
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 43) % 863
-            val per = math.max(1, (ids.length + 7) / 8)
-            val bytes = W.writeLongsStripes(Seq("rec_id", "val"),
-              ids.map(d => Array(d, v(d))), per)
-            val res = for {
-              tail <- O.parseTail(bytes)
-              tiled <- {
-                def tile(n: Int): Option[(Long, Long, Long)] = {
-                  val len = bytes.length.toLong
-                  val cuts = (0 to n).map(k => len * k / n)
-                  val claimed = cuts.sliding(2).toSeq.flatMap {
-                    case Seq(a, b) => W.stripesForSplit(tail, a, b)
-                  }
-                  if (claimed.sorted !=
-                    tail.stripes.indices.toSeq) None
-                  else {
-                    val per2 = claimed.map { i =>
-                      for {
-                        rs <- O.stripeColumnLongs(bytes, tail,
-                          tail.stripes(i), 1)
-                        vs <- O.stripeColumnLongs(bytes, tail,
-                          tail.stripes(i), 2)
-                        if rs.length == vs.length
-                      } yield (rs.length.toLong, rs.sum, vs.sum)
-                    }
-                    if (per2.exists(_.isEmpty)) None
-                    else Some((per2.map(_.get._1).sum,
-                      per2.map(_.get._2).sum,
-                      per2.map(_.get._3).sum))
-                  }
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.OrcWrite
+          val O = graft.sources.Orc
+          def v(d: Long): Long = (d * 43) % 863
+          val per = math.max(1, (ids.length + 7) / 8)
+          val bytes = W.writeLongsStripes(Seq("rec_id", "val"),
+            ids.map(d => Array(d, v(d))), per)
+          val res = for {
+            tail <- O.parseTail(bytes)
+            tiled <- {
+              def tile(n: Int): Option[(Long, Long, Long)] = {
+                val len = bytes.length.toLong
+                val cuts = (0 to n).map(k => len * k / n)
+                val claimed = cuts.sliding(2).toSeq.flatMap {
+                  case Seq(a, b) => W.stripesForSplit(tail, a, b)
                 }
-                for { a <- tile(3); b <- tile(7) } yield (a, b)
+                if (claimed.sorted !=
+                  tail.stripes.indices.toSeq) None
+                else {
+                  val per2 = claimed.map { i =>
+                    for {
+                      rs <- O.stripeColumnLongs(bytes, tail,
+                        tail.stripes(i), 1)
+                      vs <- O.stripeColumnLongs(bytes, tail,
+                        tail.stripes(i), 2)
+                      if rs.length == vs.length
+                    } yield (rs.length.toLong, rs.sum, vs.sum)
+                  }
+                  if (per2.exists(_.isEmpty)) None
+                  else Some((per2.map(_.get._1).sum,
+                    per2.map(_.get._2).sum,
+                    per2.map(_.get._3).sum))
+                }
               }
-            } yield {
-              val (t3, t7) = tiled
-              val tileOk = t3 == t7
-              val emptyOk = W.stripesForSplit(tail,
-                bytes.length.toLong + 3, bytes.length.toLong + 9)
-                .isEmpty
-              (t, t3._1, t3._2, t3._3,
-                tail.stripes.length.toLong,
-                if (tileOk) 1L else 0L,
-                if (emptyOk) 1L else 0L)
+              for { a <- tile(3); b <- tile(7) } yield (a, b)
             }
-            res.toSeq
+          } yield {
+            val (t3, t7) = tiled
+            val tileOk = t3 == t7
+            val emptyOk = W.stripesForSplit(tail,
+              bytes.length.toLong + 3, bytes.length.toLong + 9)
+              .isEmpty
+            (t, t3._1, t3._2, t3._3,
+              tail.stripes.length.toLong,
+              if (tileOk) 1L else 0L,
+              if (emptyOk) 1L else 0L)
           }
-          .toDF("blob_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("blob_id", "n_rows", "id_sum", "val_sum",
             "n_stripes", "tile_ok", "empty_ok")
       },
       oracle = Some("""
@@ -5983,72 +5586,66 @@ object WriterQueries {
     "q386_delta_shallow_clone" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val source = W.writeTable(s"tbl-$t", ids)
-            def readRows(log: Map[String, Array[Byte]],
-                         data: Map[String, Array[Byte]],
-                         version: Long) =
-              W.replayLiveSized(log, version).flatMap { live =>
-                val per = live.toSeq.sortBy(_._1).map {
-                  case (p, sz) =>
-                    for {
-                      b <- data.get(p)
-                      if b.length.toLong == sz
-                      rs <- P.columnLongs(b, "rec_id")
-                      vs <- P.columnLongs(b, "val")
-                      if rs.length == vs.length
-                    } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val source = W.writeTable(s"tbl-$t", ids)
+          def readRows(log: Map[String, Array[Byte]],
+                       data: Map[String, Array[Byte]],
+                       version: Long) =
+            W.replayLiveSized(log, version).flatMap { live =>
+              val per = live.toSeq.sortBy(_._1).map {
+                case (p, sz) =>
+                  for {
+                    b <- data.get(p)
+                    if b.length.toLong == sz
+                    rs <- P.columnLongs(b, "rec_id")
+                    vs <- P.columnLongs(b, "val")
+                    if rs.length == vs.length
+                  } yield rs.zip(vs).toSeq
               }
-            val res = for {
-              clone <- W.shallowClone(source, 1L, s"clone-$t")
-              srcState <- W.replayLiveSized(source, 1L)
-              cloneState <- W.replayLiveSized(clone, 0L)
-              rows <- readRows(clone, source, 0L)
-            } yield {
-              val cloneMatches = cloneState == srcState
-              // source evolves: remove A at source v2 — clone blind
-              val src2 = source +
-                ("_delta_log/00000000000000000002.json" ->
-                  (W.removeAction("part-A.parquet") + "\n")
-                    .getBytes("UTF-8"))
-              val isolation1 =
-                W.replayLiveSized(clone, 0L).contains(cloneState) &&
-                  W.replayLiveSized(src2, 2L).exists(
-                    !_.contains("part-A.parquet"))
-              // clone evolves: remove C at clone v1 — source blind
-              val clone2 = clone +
-                ("_delta_log/00000000000000000001.json" ->
-                  (W.removeAction("part-C.parquet") + "\n")
-                    .getBytes("UTF-8"))
-              val isolation2 =
-                W.replayLiveSized(clone2, 1L).exists(
-                  !_.contains("part-C.parquet")) &&
-                  W.replayLiveSized(source, 1L).exists(
-                    _.contains("part-C.parquet"))
-              // vacuum hazard: the borrowed file's bytes vanish —
-              // the clone's read fails CLOSED
-              val vacuumClosed =
-                readRows(clone, source - "part-C.parquet", 0L).isEmpty
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum,
-                if (cloneMatches) 1L else 0L,
-                if (isolation1) 1L else 0L,
-                if (isolation2) 1L else 0L,
-                if (vacuumClosed) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+          val res = for {
+            clone <- W.shallowClone(source, 1L, s"clone-$t")
+            srcState <- W.replayLiveSized(source, 1L)
+            cloneState <- W.replayLiveSized(clone, 0L)
+            rows <- readRows(clone, source, 0L)
+          } yield {
+            val cloneMatches = cloneState == srcState
+            // source evolves: remove A at source v2 — clone blind
+            val src2 = source +
+              ("_delta_log/00000000000000000002.json" ->
+                (W.removeAction("part-A.parquet") + "\n")
+                  .getBytes("UTF-8"))
+            val isolation1 =
+              W.replayLiveSized(clone, 0L).contains(cloneState) &&
+                W.replayLiveSized(src2, 2L).exists(
+                  !_.contains("part-A.parquet"))
+            // clone evolves: remove C at clone v1 — source blind
+            val clone2 = clone +
+              ("_delta_log/00000000000000000001.json" ->
+                (W.removeAction("part-C.parquet") + "\n")
+                  .getBytes("UTF-8"))
+            val isolation2 =
+              W.replayLiveSized(clone2, 1L).exists(
+                !_.contains("part-C.parquet")) &&
+                W.replayLiveSized(source, 1L).exists(
+                  _.contains("part-C.parquet"))
+            // vacuum hazard: the borrowed file's bytes vanish —
+            // the clone's read fails CLOSED
+            val vacuumClosed =
+              readRows(clone, source - "part-C.parquet", 0L).isEmpty
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum,
+              if (cloneMatches) 1L else 0L,
+              if (isolation1) 1L else 0L,
+              if (isolation2) 1L else 0L,
+              if (vacuumClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "clone_matches", "source_isolated", "clone_isolated",
             "vacuum_closed")
       },
@@ -6088,74 +5685,68 @@ object WriterQueries {
     "q387_iceberg_v3_deletion_vectors" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def v(d: Long): Long = (d * 29) % 997
-            val meta = "v1.metadata.json"
-            val pdT = W.writeChangelogTable(s"pd-$t", ids, v)
-            val dvT = W.writeDvChangelogTable(s"dv-$t", ids, v)
-            val res = for {
-              scansEqual <- {
-                val per = (1L to 4L).map { sid =>
-                  for {
-                    a <- W.scanSnapshotMor(pdT, meta, sid)
-                    b <- W.scanSnapshotMor(dvT, meta, sid)
-                  } yield a.sorted == b.sorted
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.forall(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.IcebergWrite
+          def v(d: Long): Long = (d * 29) % 997
+          val meta = "v1.metadata.json"
+          val pdT = W.writeChangelogTable(s"pd-$t", ids, v)
+          val dvT = W.writeDvChangelogTable(s"dv-$t", ids, v)
+          val res = for {
+            scansEqual <- {
+              val per = (1L to 4L).map { sid =>
+                for {
+                  a <- W.scanSnapshotMor(pdT, meta, sid)
+                  b <- W.scanSnapshotMor(dvT, meta, sid)
+                } yield a.sorted == b.sorted
               }
-              cdcP <- W.changelogScan(pdT, meta, 1L, 4L)
-              cdcD <- W.changelogScan(dvT, meta, 1L, 4L)
-              finalScan <- W.scanSnapshotMor(dvT, meta, 4L)
-            } yield {
-              def key(c: W.Change) =
-                (c.changeType, c.sid, c.recId, c.value)
-              val cdcEqual =
-                cdcP.map(key).sorted == cdcD.map(key).sorted
-              val blobOk = (for {
-                (blobs, _) <- graft.sources.Puffin
-                  .read(dvT("dv-3.puffin"))
-                (bm, data) <- blobs.headOption
-                bits <- graft.sources.DeletionVectors.bitmap(data)
-              } yield bm.tpe == "deletion-vector-v1" &&
-                bm.properties.get("referenced-data-file")
-                  .contains("data/a.parquet") &&
-                bm.properties.get("cardinality")
-                  .contains(bits.length.toString))
-                .getOrElse(false)
-              val cardClosed = (for {
-                (blobs, _) <- graft.sources.Puffin
-                  .read(dvT("dv-3.puffin"))
-                (bm, data) <- blobs.headOption
-              } yield {
-                val bad = graft.sources.Puffin.write(Seq(
-                  graft.sources.Puffin.Blob(bm.tpe, bm.fields,
-                    bm.snapshotId, bm.sequenceNumber, data,
-                    bm.properties + ("cardinality" ->
-                      (bm.properties("cardinality").toLong + 1)
-                        .toString))),
-                  Map("created-by" -> "graft"))
-                W.scanSnapshotMor(dvT + ("dv-3.puffin" -> bad),
-                  meta, 4L).isEmpty
-              }).getOrElse(false)
-              val nDel = cdcD.count(_.changeType == "DELETE").toLong
-              (t, finalScan.length.toLong,
-                finalScan.map(_._1).sum, finalScan.map(_._2).sum,
-                nDel,
-                if (scansEqual) 1L else 0L,
-                if (cdcEqual) 1L else 0L,
-                if (blobOk) 1L else 0L,
-                if (cardClosed) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.forall(_.get))
             }
-            res.toSeq
+            cdcP <- W.changelogScan(pdT, meta, 1L, 4L)
+            cdcD <- W.changelogScan(dvT, meta, 1L, 4L)
+            finalScan <- W.scanSnapshotMor(dvT, meta, 4L)
+          } yield {
+            def key(c: W.Change) =
+              (c.changeType, c.sid, c.recId, c.value)
+            val cdcEqual =
+              cdcP.map(key).sorted == cdcD.map(key).sorted
+            val blobOk = (for {
+              (blobs, _) <- graft.sources.Puffin
+                .read(dvT("dv-3.puffin"))
+              (bm, data) <- blobs.headOption
+              bits <- graft.sources.DeletionVectors.bitmap(data)
+            } yield bm.tpe == "deletion-vector-v1" &&
+              bm.properties.get("referenced-data-file")
+                .contains("data/a.parquet") &&
+              bm.properties.get("cardinality")
+                .contains(bits.length.toString))
+              .getOrElse(false)
+            val cardClosed = (for {
+              (blobs, _) <- graft.sources.Puffin
+                .read(dvT("dv-3.puffin"))
+              (bm, data) <- blobs.headOption
+            } yield {
+              val bad = graft.sources.Puffin.write(Seq(
+                graft.sources.Puffin.Blob(bm.tpe, bm.fields,
+                  bm.snapshotId, bm.sequenceNumber, data,
+                  bm.properties + ("cardinality" ->
+                    (bm.properties("cardinality").toLong + 1)
+                      .toString))),
+                Map("created-by" -> "graft"))
+              W.scanSnapshotMor(dvT + ("dv-3.puffin" -> bad),
+                meta, 4L).isEmpty
+            }).getOrElse(false)
+            val nDel = cdcD.count(_.changeType == "DELETE").toLong
+            (t, finalScan.length.toLong,
+              finalScan.map(_._1).sum, finalScan.map(_._2).sum,
+              nDel,
+              if (scansEqual) 1L else 0L,
+              if (cdcEqual) 1L else 0L,
+              if (blobOk) 1L else 0L,
+              if (cardClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_final", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_final", "id_sum", "val_sum",
             "n_deletes", "scans_equal", "cdc_equal", "blob_ok",
             "cardinality_closed")
       },
@@ -6196,52 +5787,46 @@ object WriterQueries {
     "q388_hudi_restore" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val ids = it.map(_._2).toSeq.sorted
-            val mor = W.writeMorTable(ids)
-            val cow = W.writeTable(ids)
-            val res = for {
-              rm <- W.restoreTo(mor, "00000000000002",
-                "00000000000008")
-              morRestored = (mor -- rm.deleted) +
-                (rm.timelineName -> rm.timeline)
-              morState <- W.replay(morRestored)
-              rc <- W.restoreTo(cow, "00000000000001",
-                "00000000000009")
-              cowRestored = (cow -- rc.deleted) +
-                (rc.timelineName -> rc.timeline)
-              cowState <- W.replay(cowRestored)
-              noop <- W.restoreTo(mor, "00000000000003",
-                "00000000000008")
-            } yield {
-              val morDeletedOk =
-                rm.deleted == Seq(".hoodie/00000000000003.deltacommit")
-              val cowDeletedOk = rc.deleted.toSet == Set(
-                "p/fg0_0-0-0_00000000000002.parquet",
-                ".hoodie/00000000000002.commit")
-              val noopOk = noop.deleted.isEmpty
-              val refusedOk =
-                W.restoreTo(mor, "00000000000004", "9".padTo(14, '0'))
-                  .isEmpty &&
-                  W.restoreTo(mor, "00000000000099", "9".padTo(14, '0'))
-                    .isEmpty
-              val morRows = morState.flatMap(_.rows)
-              val cowRows = cowState.flatMap(_.rows)
-              (t, morRows.length.toLong, morRows.map(_._2).sum,
-                cowRows.length.toLong, cowRows.map(_._2).sum,
-                if (morDeletedOk) 1L else 0L,
-                if (cowDeletedOk) 1L else 0L,
-                if (noopOk) 1L else 0L,
-                if (refusedOk) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val mor = W.writeMorTable(ids)
+          val cow = W.writeTable(ids)
+          val res = for {
+            rm <- W.restoreTo(mor, "00000000000002",
+              "00000000000008")
+            morRestored = (mor -- rm.deleted) +
+              (rm.timelineName -> rm.timeline)
+            morState <- W.replay(morRestored)
+            rc <- W.restoreTo(cow, "00000000000001",
+              "00000000000009")
+            cowRestored = (cow -- rc.deleted) +
+              (rc.timelineName -> rc.timeline)
+            cowState <- W.replay(cowRestored)
+            noop <- W.restoreTo(mor, "00000000000003",
+              "00000000000008")
+          } yield {
+            val morDeletedOk =
+              rm.deleted == Seq(".hoodie/00000000000003.deltacommit")
+            val cowDeletedOk = rc.deleted.toSet == Set(
+              "p/fg0_0-0-0_00000000000002.parquet",
+              ".hoodie/00000000000002.commit")
+            val noopOk = noop.deleted.isEmpty
+            val refusedOk =
+              W.restoreTo(mor, "00000000000004", "9".padTo(14, '0'))
+                .isEmpty &&
+                W.restoreTo(mor, "00000000000099", "9".padTo(14, '0'))
+                  .isEmpty
+            val morRows = morState.flatMap(_.rows)
+            val cowRows = cowState.flatMap(_.rows)
+            (t, morRows.length.toLong, morRows.map(_._2).sum,
+              cowRows.length.toLong, cowRows.map(_._2).sum,
+              if (morDeletedOk) 1L else 0L,
+              if (cowDeletedOk) 1L else 0L,
+              if (noopOk) 1L else 0L,
+              if (refusedOk) 1L else 0L)
           }
-          .toDF("table_id", "mor_rows", "mor_val_sum", "cow_rows",
+          res.toSeq
+        }.toDF("table_id", "mor_rows", "mor_val_sum", "cow_rows",
             "cow_val_sum", "mor_deleted_ok", "cow_deleted_ok",
             "noop_ok", "refused_ok")
       },
@@ -6278,50 +5863,43 @@ object WriterQueries {
     "q389_orc_key_rotation" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.OrcWrite
-            val C = graft.sources.OrcCrypto
-            val O = graft.sources.Orc
-            val ids = it.map(_._2).toSeq.sorted
-            def sal(d: Long): Long = (d * 47) % 1013
-            def keyOf(seed: String) = java.security.MessageDigest
-              .getInstance("MD5")
-              .digest(s"$seed:$t:${ids.length}".getBytes("UTF-8"))
-            val m1 = keyOf("orcrot-old"); val m2 = keyOf("orcrot-new")
-            val plain = W.writeTable(Seq(
-              W.OLongCol("rec_id", ids.map(Some(_))),
-              W.OLongCol("salary", ids.map(d => Some(sal(d))))),
-              compression = 0, rowIndexStride = 64)
-            val res = for {
-              enc <- C.encryptFile(plain, m1, "pii", Set(2),
-                deterministic = true)
-              rot <- C.rotateMaster(enc, m1, m2, deterministic = true)
-              back <- C.decryptFile(rot, m2)
-              tb <- O.parseTail(back)
-              rs <- O.stripeColumnLongs(back, tb, tb.stripes.head, 1)
-              vs <- O.stripeColumnLongs(back, tb, tb.stripes.head, 2)
-              if rs.length == vs.length
-            } yield {
-              val identity = java.util.Arrays.equals(back, plain)
-              val spliceBound = rot.length == enc.length &&
-                rot.indices.count(i => rot(i) != enc(i)) <= 32
-              val oldDead = C.decryptFile(rot, m1).isEmpty
-              val wrongOldClosed =
-                C.rotateMaster(enc, m2, m1, deterministic = true)
-                  .isEmpty
-              (t, rs.length.toLong, rs.sum, vs.sum,
-                if (identity) 1L else 0L,
-                if (spliceBound) 1L else 0L,
-                if (oldDead) 1L else 0L,
-                if (wrongOldClosed) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.OrcWrite
+          val C = graft.sources.OrcCrypto
+          val O = graft.sources.Orc
+          def sal(d: Long): Long = (d * 47) % 1013
+          def keyOf(seed: String) = Md5Hashes.digest(
+            s"$seed:$t:${ids.length}".getBytes("UTF-8"))
+          val m1 = keyOf("orcrot-old"); val m2 = keyOf("orcrot-new")
+          val plain = W.writeTable(Seq(
+            W.OLongCol("rec_id", ids.map(Some(_))),
+            W.OLongCol("salary", ids.map(d => Some(sal(d))))),
+            compression = 0, rowIndexStride = 64)
+          val res = for {
+            enc <- C.encryptFile(plain, m1, "pii", Set(2),
+              deterministic = true)
+            rot <- C.rotateMaster(enc, m1, m2, deterministic = true)
+            back <- C.decryptFile(rot, m2)
+            tb <- O.parseTail(back)
+            rs <- O.stripeColumnLongs(back, tb, tb.stripes.head, 1)
+            vs <- O.stripeColumnLongs(back, tb, tb.stripes.head, 2)
+            if rs.length == vs.length
+          } yield {
+            val identity = java.util.Arrays.equals(back, plain)
+            val spliceBound = rot.length == enc.length &&
+              rot.indices.count(i => rot(i) != enc(i)) <= 32
+            val oldDead = C.decryptFile(rot, m1).isEmpty
+            val wrongOldClosed =
+              C.rotateMaster(enc, m2, m1, deterministic = true)
+                .isEmpty
+            (t, rs.length.toLong, rs.sum, vs.sum,
+              if (identity) 1L else 0L,
+              if (spliceBound) 1L else 0L,
+              if (oldDead) 1L else 0L,
+              if (wrongOldClosed) 1L else 0L)
           }
-          .toDF("blob_id", "n_rows", "id_sum", "salary_sum",
+          res.toSeq
+        }.toDF("blob_id", "n_rows", "id_sum", "salary_sum",
             "identity_ok", "splice_bound_ok", "old_master_dead",
             "wrong_old_closed")
       },
@@ -6357,62 +5935,56 @@ object WriterQueries {
     "q390_delta_to_iceberg_migrate" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val D = graft.sources.DeltaWrite
-            val I = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val delta = D.writeTable(s"tbl-$t", ids)
-            val res = for {
-              iceMeta <- I.migrateFromDelta(delta, s"ice-$t")
-              ice = delta ++ iceMeta
-              iceRows <- I.scanSnapshot(ice, "v1.metadata.json", 1L)
-              deltaLive <- D.replayLiveSized(delta, 1L)
-              deltaRows <- {
-                val per = deltaLive.keys.toSeq.sorted.map { p =>
-                  for {
-                    b <- delta.get(p)
-                    rs <- P.columnLongs(b, "rec_id")
-                    vs <- P.columnLongs(b, "val")
-                    if rs.length == vs.length
-                  } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val D = graft.sources.DeltaWrite
+          val I = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          val delta = D.writeTable(s"tbl-$t", ids)
+          val res = for {
+            iceMeta <- I.migrateFromDelta(delta, s"ice-$t")
+            ice = delta ++ iceMeta
+            iceRows <- I.scanSnapshot(ice, "v1.metadata.json", 1L)
+            deltaLive <- D.replayLiveSized(delta, 1L)
+            deltaRows <- {
+              val per = deltaLive.keys.toSeq.sorted.map { p =>
+                for {
+                  b <- delta.get(p)
+                  rs <- P.columnLongs(b, "rec_id")
+                  vs <- P.columnLongs(b, "val")
+                  if rs.length == vs.length
+                } yield rs.zip(vs).toSeq
               }
-            } yield {
-              val scanEqual =
-                iceRows.sorted == deltaRows.sorted
-              // the migration is a SNAPSHOT: Delta evolving after it
-              // must not leak into the Iceberg view
-              val delta2 = delta +
-                ("_delta_log/00000000000000000002.json" ->
-                  (D.removeAction("part-A.parquet") + "\n")
-                    .getBytes("UTF-8"))
-              val isolated = I.scanSnapshot(delta2 ++ iceMeta,
-                "v1.metadata.json", 1L).exists(
-                _.sorted == iceRows.sorted)
-              // a vacuumed source cannot migrate
-              val vacuumClosed = I.migrateFromDelta(
-                delta - "part-C.parquet", s"ice-$t").isEmpty
-              // the migrated table is first-class: expire accepts it
-              val firstClass = I.expireSnapshots(ice,
-                "v1.metadata.json", 1699999999999L).exists(
-                _.nExpired == 0)
-              (t, iceRows.length.toLong, iceRows.map(_._1).sum,
-                iceRows.map(_._2).sum,
-                if (scanEqual) 1L else 0L,
-                if (isolated) 1L else 0L,
-                if (vacuumClosed) 1L else 0L,
-                if (firstClass) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+          } yield {
+            val scanEqual =
+              iceRows.sorted == deltaRows.sorted
+            // the migration is a SNAPSHOT: Delta evolving after it
+            // must not leak into the Iceberg view
+            val delta2 = delta +
+              ("_delta_log/00000000000000000002.json" ->
+                (D.removeAction("part-A.parquet") + "\n")
+                  .getBytes("UTF-8"))
+            val isolated = I.scanSnapshot(delta2 ++ iceMeta,
+              "v1.metadata.json", 1L).exists(
+              _.sorted == iceRows.sorted)
+            // a vacuumed source cannot migrate
+            val vacuumClosed = I.migrateFromDelta(
+              delta - "part-C.parquet", s"ice-$t").isEmpty
+            // the migrated table is first-class: expire accepts it
+            val firstClass = I.expireSnapshots(ice,
+              "v1.metadata.json", 1699999999999L).exists(
+              _.nExpired == 0)
+            (t, iceRows.length.toLong, iceRows.map(_._1).sum,
+              iceRows.map(_._2).sum,
+              if (scanEqual) 1L else 0L,
+              if (isolated) 1L else 0L,
+              if (vacuumClosed) 1L else 0L,
+              if (firstClass) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "scan_equal", "snapshot_isolated", "vacuum_closed",
             "first_class")
       },
@@ -6449,37 +6021,31 @@ object WriterQueries {
     "q364_theta_set_algebra" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val ids = it.map(_._2).toSeq.sorted
-            val T = graft.sources.ThetaSketch
-            def v(d: Long): Long = (d * 17) % 43
-            val oldV = ids.filter(d => (d / 6) % 4 != 1).map(v)
-            val newV = ids.filter(d => (d / 6) % 4 == 1).map(v)
-            val skOld = T.compact(oldV)
-            val skNew = T.compact(newV)
-            val res = for {
-              added <- T.aNotB(skNew, skOld)
-              shared <- T.intersect(Seq(skOld, skNew))
-              u <- T.union(Seq(skOld, skNew))
-              rAdd <- T.parse(added)
-              rShared <- T.parse(shared)
-              rU <- T.parse(u)
-              rOld <- T.parse(skOld)
-            } yield {
-              val partitionLaw =
-                if (rU.estimate == rOld.estimate + rAdd.estimate) 1L
-                else 0L
-              (t, rOld.estimate.round, rAdd.estimate.round,
-                rShared.estimate.round, rU.estimate.round,
-                partitionLaw)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val T = graft.sources.ThetaSketch
+          def v(d: Long): Long = (d * 17) % 43
+          val oldV = ids.filter(d => (d / 6) % 4 != 1).map(v)
+          val newV = ids.filter(d => (d / 6) % 4 == 1).map(v)
+          val skOld = T.compact(oldV)
+          val skNew = T.compact(newV)
+          val res = for {
+            added <- T.aNotB(skNew, skOld)
+            shared <- T.intersect(Seq(skOld, skNew))
+            u <- T.union(Seq(skOld, skNew))
+            rAdd <- T.parse(added)
+            rShared <- T.parse(shared)
+            rU <- T.parse(u)
+            rOld <- T.parse(skOld)
+          } yield {
+            val partitionLaw =
+              if (rU.estimate == rOld.estimate + rAdd.estimate) 1L
+              else 0L
+            (t, rOld.estimate.round, rAdd.estimate.round,
+              rShared.estimate.round, rU.estimate.round,
+              partitionLaw)
           }
-          .toDF("table_id", "ndv_old", "ndv_added", "ndv_shared",
+          res.toSeq
+        }.toDF("table_id", "ndv_old", "ndv_added", "ndv_shared",
             "ndv_union", "partition_law")
       },
       oracle = Some("""
@@ -6527,80 +6093,74 @@ object WriterQueries {
     "q391_hudi_record_index" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val ids = it.map(_._2).toSeq.sorted
-            val t5 = "00000000000005"; val t6 = "00000000000006"
-            val files = W.writeMorTable(ids)
-            val res = for {
-              rli <- M.syncRecordIndex(files)
-              table = files ++ rli
-              idx <- M.recordIndexListing(table)
-              fgs <- W.replay(files)
-              fullScan = fgs.flatMap(f =>
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val t5 = "00000000000005"; val t6 = "00000000000006"
+          val files = W.writeMorTable(ids)
+          val res = for {
+            rli <- M.syncRecordIndex(files)
+            table = files ++ rli
+            idx <- M.recordIndexListing(table)
+            fgs <- W.replay(files)
+            fullScan = fgs.flatMap(f =>
+              f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
+            // compaction: new bases at t5, locations preserved
+            cf <- W.compact(files, t5)
+            compacted = table ++ cf
+            rli2 <- M.appendRecordIndex(rli, compacted, t5,
+              "commit")
+            idx2 <- M.recordIndexListing(compacted ++ rli2)
+            // append ≡ rebuild, byte-exact on the log
+            rebuilt <- M.syncRecordIndex(compacted)
+            // clean reclaims replaced slices; membership unchanged
+            cr <- W.clean(compacted, t6)
+            cleaned = (compacted ++ rli2 -- cr.deleted) +
+              (cr.timelineName -> cr.timeline)
+            rli3 <- M.appendRecordIndex(rli2, cleaned, t6, "clean")
+            cleanedAll = cleaned ++ rli3
+            idx3 <- M.recordIndexListing(cleanedAll)
+            cleanScan <- W.replay(cleanedAll)
+            // rollback of the pending t4: RLI needs no repair
+            rb <- W.rollback(cleanedAll, "00000000000004",
+              "00000000000007")
+            rolledBack = (cleanedAll -- rb.deleted) ++
+              rb.appendedLogs + (rb.timelineName -> rb.timeline)
+            rbScan <- W.replay(rolledBack)
+            idx4 <- M.recordIndexListing(rolledBack)
+          } yield {
+            val tagMatch = idx == fullScan &&
+              ids.forall(d => idx.get(d) == fullScan.get(d))
+            val orphan = "p/fg9_0-0-0_00000000000001.parquet"
+            val withOrphan = table + (orphan ->
+              graft.sources.ParquetWrite.writeInt64(
+                Seq("rec_id", "val"), Seq(Array(999999L, 999L))))
+            val orphanInvisible = W.replay(withOrphan).exists(
+              _.exists(_.rows.exists(_._1 == 999999L))) &&
+              M.recordIndexListing(withOrphan)
+                .exists(!_.contains(999999L))
+            val compactStable = idx2 == idx
+            val rebuildExact = java.util.Arrays.equals(
+              rebuilt(M.RecordIndexLogPath),
+              rli2(M.RecordIndexLogPath))
+            val cleanOk = idx3 == idx2 &&
+              idx3 == cleanScan.flatMap(f =>
                 f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
-              // compaction: new bases at t5, locations preserved
-              cf <- W.compact(files, t5)
-              compacted = table ++ cf
-              rli2 <- M.appendRecordIndex(rli, compacted, t5,
-                "commit")
-              idx2 <- M.recordIndexListing(compacted ++ rli2)
-              // append ≡ rebuild, byte-exact on the log
-              rebuilt <- M.syncRecordIndex(compacted)
-              // clean reclaims replaced slices; membership unchanged
-              cr <- W.clean(compacted, t6)
-              cleaned = (compacted ++ rli2 -- cr.deleted) +
-                (cr.timelineName -> cr.timeline)
-              rli3 <- M.appendRecordIndex(rli2, cleaned, t6, "clean")
-              cleanedAll = cleaned ++ rli3
-              idx3 <- M.recordIndexListing(cleanedAll)
-              cleanScan <- W.replay(cleanedAll)
-              // rollback of the pending t4: RLI needs no repair
-              rb <- W.rollback(cleanedAll, "00000000000004",
-                "00000000000007")
-              rolledBack = (cleanedAll -- rb.deleted) ++
-                rb.appendedLogs + (rb.timelineName -> rb.timeline)
-              rbScan <- W.replay(rolledBack)
-              idx4 <- M.recordIndexListing(rolledBack)
-            } yield {
-              val tagMatch = idx == fullScan &&
-                ids.forall(d => idx.get(d) == fullScan.get(d))
-              val orphan = "p/fg9_0-0-0_00000000000001.parquet"
-              val withOrphan = table + (orphan ->
-                graft.sources.ParquetWrite.writeInt64(
-                  Seq("rec_id", "val"), Seq(Array(999999L, 999L))))
-              val orphanInvisible = W.replay(withOrphan).exists(
-                _.exists(_.rows.exists(_._1 == 999999L))) &&
-                M.recordIndexListing(withOrphan)
-                  .exists(!_.contains(999999L))
-              val compactStable = idx2 == idx
-              val rebuildExact = java.util.Arrays.equals(
-                rebuilt(M.RecordIndexLogPath),
-                rli2(M.RecordIndexLogPath))
-              val cleanOk = idx3 == idx2 &&
-                idx3 == cleanScan.flatMap(f =>
-                  f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
-              val rollbackOk = idx4 == idx3 &&
-                idx4 == rbScan.flatMap(f =>
-                  f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
-              val nFg0 = idx.count(_._2._2 == "fg0").toLong
-              val nFg1 = idx.count(_._2._2 == "fg1").toLong
-              (t, idx.size.toLong, idx.keys.sum, nFg0, nFg1,
-                if (tagMatch) 1L else 0L,
-                if (orphanInvisible) 1L else 0L,
-                if (compactStable) 1L else 0L,
-                if (rebuildExact) 1L else 0L,
-                if (cleanOk) 1L else 0L,
-                if (rollbackOk) 1L else 0L)
-            }
-            res.toSeq
+            val rollbackOk = idx4 == idx3 &&
+              idx4 == rbScan.flatMap(f =>
+                f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
+            val nFg0 = idx.count(_._2._2 == "fg0").toLong
+            val nFg1 = idx.count(_._2._2 == "fg1").toLong
+            (t, idx.size.toLong, idx.keys.sum, nFg0, nFg1,
+              if (tagMatch) 1L else 0L,
+              if (orphanInvisible) 1L else 0L,
+              if (compactStable) 1L else 0L,
+              if (rebuildExact) 1L else 0L,
+              if (cleanOk) 1L else 0L,
+              if (rollbackOk) 1L else 0L)
           }
-          .toDF("table_id", "n_live", "live_key_sum", "n_fg0",
+          res.toSeq
+        }.toDF("table_id", "n_live", "live_key_sum", "n_fg0",
             "n_fg1", "tag_match", "orphan_invisible",
             "compact_stable", "rebuild_exact", "clean_ok",
             "rollback_ok")
@@ -6647,88 +6207,80 @@ object WriterQueries {
     "q392_iceberg_row_lineage" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def vf(d: Long): Long = (d * 29) % 997
-            val files = I.writeLineageTable(s"lin-$t", ids, vf)
-            val meta = "v1.metadata.json"
-            val res = for {
-              s1 <- I.lineageScan(files, meta, 1L)
-              s2 <- I.lineageScan(files, meta, 2L)
-              s3 <- I.lineageScan(files, meta, 3L)
-              s4 <- I.lineageScan(files, meta, 4L)
-              s5 <- I.lineageScan(files, meta, 5L)
-              nri <- I.nextRowId(files, meta)
-            } yield {
-              def gen(d: Long) = (d / 6) % 4
-              val a = ids.filter(gen(_) == 0).sorted
-              val b = ids.filter(gen(_) == 1).sorted
-              val na = a.length.toLong; val nb = b.length.toLong
-              val assignOk =
-                s1 == a.zipWithIndex.map { case (d, i) =>
-                  (i.toLong, d, vf(d)) } &&
-                s2.toSet == (a.zipWithIndex.map { case (d, i) =>
-                  (i.toLong, d, vf(d)) } ++
-                  b.zipWithIndex.map { case (d, i) =>
-                    (na + i, d, vf(d)) }).toSet
-              val compactStable = s3.toSet == s2.toSet
-              val newRids = s4.map(_._1).toSet -- s3.map(_._1).toSet
-              val noReuse = newRids.forall(_ >= 2L * (na + nb)) &&
-                newRids.size == s4.length - s3.length
-              val expectDead =
-                s3.filter(_._2 % 5 == 0).map(_._1).toSet
-              val delRids = s4.map(_._1).toSet -- s5.map(_._1).toSet
-              val dvStable = delRids == expectDead &&
-                s5.toSet == s4.filterNot(r =>
-                  expectDead(r._1)).toSet
-              // the row-id diff IS the changelog: applying it to
-              // scan(from) yields scan(to) at both boundaries
-              val changelogOk =
-                (s3.map(_._1).toSet ++ newRids) ==
-                  s4.map(_._1).toSet &&
-                (s4.toSet -- s5.toSet)
-                  .forall(r => expectDead(r._1))
-              val nriOk = nri == 2L * (na + nb) + newRids.size &&
-                s4.map(_._1).max == nri - 1L
-              // fail closed: no manifest block and no entry id
-              val md5 = java.security.MessageDigest
-                .getInstance("MD5")
-              val sync = md5.digest(
-                ("sync:" + s"lin-$t").getBytes("UTF-8"))
-              val mA = files("m-a.avro")
-              val badL1 = I.container(I.ListSchemaLin, Seq(
-                I.manifestFileRowLin("m-a.avro", mA.length.toLong,
-                  0, 1L, na, None)), sync)
-              val failClosed = I.lineageScan(
-                files + ("snap-1.avro" -> badL1), meta, 1L).isEmpty
-              // duplicate ids refuse: mD's block spliced onto C's
-              val mC = files("m-c.avro"); val mD = files("m-d.avro")
-              val badL4 = I.container(I.ListSchemaLin, Seq(
-                I.manifestFileRowLin("m-c.avro", mC.length.toLong,
-                  0, 3L, na + nb, Some(na + nb)),
-                I.manifestFileRowLin("m-d.avro", mD.length.toLong,
-                  0, 4L, newRids.size.toLong, Some(0L))), sync)
-              val dupRefused = I.lineageScan(
-                files + ("snap-4.avro" -> badL4), meta, 4L).isEmpty
-              (t, s5.length.toLong, s5.map(_._1).sum,
-                s5.map(_._2).sum, s5.map(_._3).sum, nri,
-                newRids.size.toLong, delRids.size.toLong,
-                if (assignOk) 1L else 0L,
-                if (compactStable) 1L else 0L,
-                if (noReuse) 1L else 0L,
-                if (dvStable) 1L else 0L,
-                if (changelogOk) 1L else 0L,
-                if (nriOk) 1L else 0L,
-                if (failClosed && dupRefused) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          def vf(d: Long): Long = (d * 29) % 997
+          val files = I.writeLineageTable(s"lin-$t", ids, vf)
+          val meta = "v1.metadata.json"
+          val res = for {
+            s1 <- I.lineageScan(files, meta, 1L)
+            s2 <- I.lineageScan(files, meta, 2L)
+            s3 <- I.lineageScan(files, meta, 3L)
+            s4 <- I.lineageScan(files, meta, 4L)
+            s5 <- I.lineageScan(files, meta, 5L)
+            nri <- I.nextRowId(files, meta)
+          } yield {
+            def gen(d: Long) = (d / 6) % 4
+            val a = ids.filter(gen(_) == 0).sorted
+            val b = ids.filter(gen(_) == 1).sorted
+            val na = a.length.toLong; val nb = b.length.toLong
+            val assignOk =
+              s1 == a.zipWithIndex.map { case (d, i) =>
+                (i.toLong, d, vf(d)) } &&
+              s2.toSet == (a.zipWithIndex.map { case (d, i) =>
+                (i.toLong, d, vf(d)) } ++
+                b.zipWithIndex.map { case (d, i) =>
+                  (na + i, d, vf(d)) }).toSet
+            val compactStable = s3.toSet == s2.toSet
+            val newRids = s4.map(_._1).toSet -- s3.map(_._1).toSet
+            val noReuse = newRids.forall(_ >= 2L * (na + nb)) &&
+              newRids.size == s4.length - s3.length
+            val expectDead =
+              s3.filter(_._2 % 5 == 0).map(_._1).toSet
+            val delRids = s4.map(_._1).toSet -- s5.map(_._1).toSet
+            val dvStable = delRids == expectDead &&
+              s5.toSet == s4.filterNot(r =>
+                expectDead(r._1)).toSet
+            // the row-id diff IS the changelog: applying it to
+            // scan(from) yields scan(to) at both boundaries
+            val changelogOk =
+              (s3.map(_._1).toSet ++ newRids) ==
+                s4.map(_._1).toSet &&
+              (s4.toSet -- s5.toSet)
+                .forall(r => expectDead(r._1))
+            val nriOk = nri == 2L * (na + nb) + newRids.size &&
+              s4.map(_._1).max == nri - 1L
+            // fail closed: no manifest block and no entry id
+            val sync = Md5Hashes.digest(
+              ("sync:" + s"lin-$t").getBytes("UTF-8"))
+            val mA = files("m-a.avro")
+            val badL1 = I.container(I.ListSchemaLin, Seq(
+              I.manifestFileRowLin("m-a.avro", mA.length.toLong,
+                0, 1L, na, None)), sync)
+            val failClosed = I.lineageScan(
+              files + ("snap-1.avro" -> badL1), meta, 1L).isEmpty
+            // duplicate ids refuse: mD's block spliced onto C's
+            val mC = files("m-c.avro"); val mD = files("m-d.avro")
+            val badL4 = I.container(I.ListSchemaLin, Seq(
+              I.manifestFileRowLin("m-c.avro", mC.length.toLong,
+                0, 3L, na + nb, Some(na + nb)),
+              I.manifestFileRowLin("m-d.avro", mD.length.toLong,
+                0, 4L, newRids.size.toLong, Some(0L))), sync)
+            val dupRefused = I.lineageScan(
+              files + ("snap-4.avro" -> badL4), meta, 4L).isEmpty
+            (t, s5.length.toLong, s5.map(_._1).sum,
+              s5.map(_._2).sum, s5.map(_._3).sum, nri,
+              newRids.size.toLong, delRids.size.toLong,
+              if (assignOk) 1L else 0L,
+              if (compactStable) 1L else 0L,
+              if (noReuse) 1L else 0L,
+              if (dvStable) 1L else 0L,
+              if (changelogOk) 1L else 0L,
+              if (nriOk) 1L else 0L,
+              if (failClosed && dupRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_final", "rid_sum_final",
+          res.toSeq
+        }.toDF("table_id", "n_final", "rid_sum_final",
             "key_sum_final", "val_sum_final", "next_row_id",
             "n_inserts", "n_deletes", "assign_ok", "compact_stable",
             "no_reuse", "dv_stable", "changelog_ok", "next_id_ok",
@@ -6802,82 +6354,76 @@ object WriterQueries {
     "q393_delta_row_tracking" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeRowTrackingTable(s"rt-$t", ids)
-            val n = ids.length.toLong
-            val res = for {
-              st <- W.replayRowTracking(files)
-              z <- W.optimizeZOrderRt(files, 2)
-              zTable = files + (z.commitName -> z.commit) ++
-                z.newFiles
-              st2 <- W.replayRowTracking(zTable)
-              cloneLog <- W.shallowCloneRt(files, s"rt-clone-$t")
-              cloneTable = cloneLog ++
-                files.filterNot(_._1.startsWith("_delta_log/"))
-              st3 <- W.replayRowTracking(cloneTable)
-            } yield {
-              val parts = (0 to 2).map(x =>
-                ids.filter(d => (d / 6) % 3 == x).sorted)
-              val offs = Seq(0L, parts(0).length.toLong,
-                (parts(0).length + parts(1).length).toLong)
-              val expect = (0 to 2).flatMap(g =>
-                parts(g).zipWithIndex.map { case (d, i) =>
-                  (offs(g) + i, d, (d * 31) % 1009) }).toSet
-              val assignOk = st.rows.toSet == expect &&
-                st.highWaterMark == n - 1L
-              val zorderStable = st2.rows.toSet == st.rows.toSet
-              val noReuse = st2.highWaterMark == 2L * n - 1L &&
-                !new String(z.commit, "UTF-8")
-                  .contains("\"dataChange\": true")
-              val cloneStable = st3.rows.toSet == st.rows.toSet &&
-                st3.highWaterMark == st.highWaterMark
-              // classic writer refused; rt-aware writer passes;
-              // a featureless table passes any writer
-              val gateOk =
-                W.writerGate(files, Set.empty).isEmpty &&
-                W.writerGate(files,
-                  Set("rowTracking", "domainMetadata")).isDefined &&
-                W.writerGate(W.writeTable(s"plain-$t", ids),
-                  Set.empty).isDefined
-              // fail closed: a classic table serves no lineage; an
-              // add with no ids at all refuses; a too-low mark trips
-              val classicNone = W.replayRowTracking(
-                W.writeTable(s"plain2-$t", ids)).isEmpty
-              val orphanData = graft.sources.ParquetWrite
-                .writeInt64(Seq("rec_id", "x", "y", "val"),
-                  Seq(Array(999999L, 1L, 1L, 1L)))
-              val badAdd = files +
-                ("_delta_log/00000000000000000002.json" ->
-                  (W.addAction("part-noid.parquet",
-                    orphanData.length.toLong) + "\n")
-                    .getBytes("UTF-8")) +
-                ("part-noid.parquet" -> orphanData)
-              val noIdNone = W.replayRowTracking(badAdd).isEmpty
-              val badHwm = files +
-                ("_delta_log/00000000000000000002.json" ->
-                  (W.rowIdHighWaterMarkAction(0L) + "\n")
-                    .getBytes("UTF-8"))
-              val hwmNone = W.replayRowTracking(badHwm).isEmpty
-              val failClosed = classicNone && noIdNone && hwmNone
-              (t, st.rows.length.toLong, st.rows.map(_._1).sum,
-                st.rows.map(_._2).sum, st.rows.map(_._3).sum,
-                st2.highWaterMark,
-                if (assignOk) 1L else 0L,
-                if (zorderStable) 1L else 0L,
-                if (cloneStable) 1L else 0L,
-                if (gateOk) 1L else 0L,
-                if (noReuse) 1L else 0L,
-                if (failClosed) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val files = W.writeRowTrackingTable(s"rt-$t", ids)
+          val n = ids.length.toLong
+          val res = for {
+            st <- W.replayRowTracking(files)
+            z <- W.optimizeZOrderRt(files, 2)
+            zTable = files + (z.commitName -> z.commit) ++
+              z.newFiles
+            st2 <- W.replayRowTracking(zTable)
+            cloneLog <- W.shallowCloneRt(files, s"rt-clone-$t")
+            cloneTable = cloneLog ++
+              files.filterNot(_._1.startsWith("_delta_log/"))
+            st3 <- W.replayRowTracking(cloneTable)
+          } yield {
+            val parts = (0 to 2).map(x =>
+              ids.filter(d => (d / 6) % 3 == x).sorted)
+            val offs = Seq(0L, parts(0).length.toLong,
+              (parts(0).length + parts(1).length).toLong)
+            val expect = (0 to 2).flatMap(g =>
+              parts(g).zipWithIndex.map { case (d, i) =>
+                (offs(g) + i, d, (d * 31) % 1009) }).toSet
+            val assignOk = st.rows.toSet == expect &&
+              st.highWaterMark == n - 1L
+            val zorderStable = st2.rows.toSet == st.rows.toSet
+            val noReuse = st2.highWaterMark == 2L * n - 1L &&
+              !new String(z.commit, "UTF-8")
+                .contains("\"dataChange\": true")
+            val cloneStable = st3.rows.toSet == st.rows.toSet &&
+              st3.highWaterMark == st.highWaterMark
+            // classic writer refused; rt-aware writer passes;
+            // a featureless table passes any writer
+            val gateOk =
+              W.writerGate(files, Set.empty).isEmpty &&
+              W.writerGate(files,
+                Set("rowTracking", "domainMetadata")).isDefined &&
+              W.writerGate(W.writeTable(s"plain-$t", ids),
+                Set.empty).isDefined
+            // fail closed: a classic table serves no lineage; an
+            // add with no ids at all refuses; a too-low mark trips
+            val classicNone = W.replayRowTracking(
+              W.writeTable(s"plain2-$t", ids)).isEmpty
+            val orphanData = graft.sources.ParquetWrite
+              .writeInt64(Seq("rec_id", "x", "y", "val"),
+                Seq(Array(999999L, 1L, 1L, 1L)))
+            val badAdd = files +
+              ("_delta_log/00000000000000000002.json" ->
+                (W.addAction("part-noid.parquet",
+                  orphanData.length.toLong) + "\n")
+                  .getBytes("UTF-8")) +
+              ("part-noid.parquet" -> orphanData)
+            val noIdNone = W.replayRowTracking(badAdd).isEmpty
+            val badHwm = files +
+              ("_delta_log/00000000000000000002.json" ->
+                (W.rowIdHighWaterMarkAction(0L) + "\n")
+                  .getBytes("UTF-8"))
+            val hwmNone = W.replayRowTracking(badHwm).isEmpty
+            val failClosed = classicNone && noIdNone && hwmNone
+            (t, st.rows.length.toLong, st.rows.map(_._1).sum,
+              st.rows.map(_._2).sum, st.rows.map(_._3).sum,
+              st2.highWaterMark,
+              if (assignOk) 1L else 0L,
+              if (zorderStable) 1L else 0L,
+              if (cloneStable) 1L else 0L,
+              if (gateOk) 1L else 0L,
+              if (noReuse) 1L else 0L,
+              if (failClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "rid_sum", "key_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "rid_sum", "key_sum",
             "val_sum", "hwm_after_zorder", "assign_ok",
             "zorder_stable", "clone_stable", "writer_gate_ok",
             "no_reuse", "fail_closed")
@@ -6937,72 +6483,66 @@ object WriterQueries {
     "q394_iceberg_partition_stats" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = I.writeSpecEvoTableV3(s"ps-$t", ids)
-            val res = for {
-              w2 <- I.writePartitionStats(files, "v2.metadata.json")
-              t2 = files + (w2._1 -> w2._2) +
-                ("v2.metadata.json" -> w2._3)
-              read2 <- I.readPartitionStats(t2, "v2.metadata.json")
-              walk2 <- I.computePartitionStats(files,
-                "v2.metadata.json", 2L)
-              w3 <- I.writePartitionStats(files, "v3.metadata.json")
-              t3 = files + (w3._1 -> w3._2) +
-                ("v3.metadata.json" -> w3._3)
-              read3 <- I.readPartitionStats(t3, "v3.metadata.json")
-              walk3 <- I.computePartitionStats(files,
-                "v3.metadata.json", 3L)
-              addContrib <- I.manifestPartitionStats(files,
-                "m-spec1-add.avro", 1)
-              keptProven <- {
-                // the files the p2 = 1 prune keeps, record counts
-                // PROVEN from their parquet bytes
-                val kept = Seq("f-old-0.parquet", "f-old-1.parquet",
-                  "f-new-1.parquet", "f-add-1.parquet")
-                val per = kept.map(p => files.get(p)
-                  .flatMap(P.columnLongs(_, "rec_id"))
-                  .map(_.length.toLong))
-                if (per.exists(_.isEmpty)) None
-                else Some(per.map(_.get).sum)
-              }
-            } yield {
-              val rebuildMatch = read2 == walk2 && read3 == walk3
-              val incrMatch =
-                I.mergePartitionStats(walk2, addContrib) == walk3
-              def keptRecords(st: Seq[I.PartStat]): Long =
-                st.filter(p => p.p2.isEmpty || p.p2.contains(1))
-                  .map(_.records).sum
-              val pruneMatch = keptRecords(read3) == keptProven
-              val sizeProven = new String(w3._3, "UTF-8")
-                .contains(s""""file-size-in-bytes": ${w3._2.length}""")
-              val failClosed = I.readPartitionStats(
-                t3 + (w3._1 -> w3._2.dropRight(1)),
-                "v3.metadata.json").isEmpty &&
-                I.readPartitionStats(t3 - w3._1,
-                  "v3.metadata.json").isEmpty
-              val nullPart = read3.filter(_.p2.isEmpty)
-                .map(_.records).sum
-              val p21 = read3.filter(_.p2.contains(1))
-                .map(_.records).sum
-              (t, read3.length.toLong,
-                read3.map(_.records).sum, nullPart, p21,
-                keptRecords(read3),
-                if (rebuildMatch) 1L else 0L,
-                if (incrMatch) 1L else 0L,
-                if (pruneMatch) 1L else 0L,
-                if (sizeProven) 1L else 0L,
-                if (failClosed) 1L else 0L)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          val files = I.writeSpecEvoTableV3(s"ps-$t", ids)
+          val res = for {
+            w2 <- I.writePartitionStats(files, "v2.metadata.json")
+            t2 = files + (w2._1 -> w2._2) +
+              ("v2.metadata.json" -> w2._3)
+            read2 <- I.readPartitionStats(t2, "v2.metadata.json")
+            walk2 <- I.computePartitionStats(files,
+              "v2.metadata.json", 2L)
+            w3 <- I.writePartitionStats(files, "v3.metadata.json")
+            t3 = files + (w3._1 -> w3._2) +
+              ("v3.metadata.json" -> w3._3)
+            read3 <- I.readPartitionStats(t3, "v3.metadata.json")
+            walk3 <- I.computePartitionStats(files,
+              "v3.metadata.json", 3L)
+            addContrib <- I.manifestPartitionStats(files,
+              "m-spec1-add.avro", 1)
+            keptProven <- {
+              // the files the p2 = 1 prune keeps, record counts
+              // PROVEN from their parquet bytes
+              val kept = Seq("f-old-0.parquet", "f-old-1.parquet",
+                "f-new-1.parquet", "f-add-1.parquet")
+              val per = kept.map(p => files.get(p)
+                .flatMap(P.columnLongs(_, "rec_id"))
+                .map(_.length.toLong))
+              if (per.exists(_.isEmpty)) None
+              else Some(per.map(_.get).sum)
             }
-            res.toSeq
+          } yield {
+            val rebuildMatch = read2 == walk2 && read3 == walk3
+            val incrMatch =
+              I.mergePartitionStats(walk2, addContrib) == walk3
+            def keptRecords(st: Seq[I.PartStat]): Long =
+              st.filter(p => p.p2.isEmpty || p.p2.contains(1))
+                .map(_.records).sum
+            val pruneMatch = keptRecords(read3) == keptProven
+            val sizeProven = new String(w3._3, "UTF-8")
+              .contains(s""""file-size-in-bytes": ${w3._2.length}""")
+            val failClosed = I.readPartitionStats(
+              t3 + (w3._1 -> w3._2.dropRight(1)),
+              "v3.metadata.json").isEmpty &&
+              I.readPartitionStats(t3 - w3._1,
+                "v3.metadata.json").isEmpty
+            val nullPart = read3.filter(_.p2.isEmpty)
+              .map(_.records).sum
+            val p21 = read3.filter(_.p2.contains(1))
+              .map(_.records).sum
+            (t, read3.length.toLong,
+              read3.map(_.records).sum, nullPart, p21,
+              keptRecords(read3),
+              if (rebuildMatch) 1L else 0L,
+              if (incrMatch) 1L else 0L,
+              if (pruneMatch) 1L else 0L,
+              if (sizeProven) 1L else 0L,
+              if (failClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_parts", "total_records",
+          res.toSeq
+        }.toDF("table_id", "n_parts", "total_records",
             "null_part_records", "p2_1_records", "kept_records",
             "rebuild_match", "incr_match", "prune_match",
             "size_proven", "fail_closed")
@@ -7150,81 +6690,75 @@ object WriterQueries {
     "q396_iceberg_to_delta_migrate" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val I = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val delta0 = W.writeTable(s"rt0-$t", ids)
-            val dataFiles =
-              delta0.filterNot(_._1.startsWith("_delta_log/"))
-            val res = for {
-              ice1 <- I.migrateFromDelta(delta0, s"ice-$t")
-              iceT1 = dataFiles ++ ice1
-              scan1 <- I.scanSnapshot(iceT1, "v1.metadata.json", 1L)
-              d2log <- I.migrateToDelta(iceT1, "v1.metadata.json",
-                s"rt2-$t")
-              delta2 = dataFiles ++ d2log
-              live2 <- W.replayLiveSized(delta2, 0L)
-              live0 <- W.replayLiveSized(delta0, 1L)
-              ice3 <- I.migrateFromDelta(delta2, s"ice-$t")
-              // native Iceberg source: the compacted history table
-              hist = I.writeHistoryTable(s"h-$t", ids)
-              histScan <- I.scanSnapshot(hist, "v3.metadata.json",
-                2L)
-              dhLog <- I.migrateToDelta(hist, "v3.metadata.json",
-                s"rth-$t")
-              dh = hist.filter(_._1.endsWith(".parquet")) ++ dhLog
-              dhLive <- W.replayLiveSized(dh, 0L)
-              dhRows <- {
-                val per = dhLive.toSeq.sortBy(_._1).map {
-                  case (p, _) =>
-                    for {
-                      b <- dh.get(p)
-                      rs <- P.columnLongs(b, "rec_id")
-                      vs <- P.columnLongs(b, "val")
-                      if rs.length == vs.length
-                    } yield rs.zip(vs).toSeq
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.flatMap(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val I = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          val delta0 = W.writeTable(s"rt0-$t", ids)
+          val dataFiles =
+            delta0.filterNot(_._1.startsWith("_delta_log/"))
+          val res = for {
+            ice1 <- I.migrateFromDelta(delta0, s"ice-$t")
+            iceT1 = dataFiles ++ ice1
+            scan1 <- I.scanSnapshot(iceT1, "v1.metadata.json", 1L)
+            d2log <- I.migrateToDelta(iceT1, "v1.metadata.json",
+              s"rt2-$t")
+            delta2 = dataFiles ++ d2log
+            live2 <- W.replayLiveSized(delta2, 0L)
+            live0 <- W.replayLiveSized(delta0, 1L)
+            ice3 <- I.migrateFromDelta(delta2, s"ice-$t")
+            // native Iceberg source: the compacted history table
+            hist = I.writeHistoryTable(s"h-$t", ids)
+            histScan <- I.scanSnapshot(hist, "v3.metadata.json",
+              2L)
+            dhLog <- I.migrateToDelta(hist, "v3.metadata.json",
+              s"rth-$t")
+            dh = hist.filter(_._1.endsWith(".parquet")) ++ dhLog
+            dhLive <- W.replayLiveSized(dh, 0L)
+            dhRows <- {
+              val per = dhLive.toSeq.sortBy(_._1).map {
+                case (p, _) =>
+                  for {
+                    b <- dh.get(p)
+                    rs <- P.columnLongs(b, "rec_id")
+                    vs <- P.columnLongs(b, "val")
+                    if rs.length == vs.length
+                  } yield rs.zip(vs).toSeq
               }
-            } yield {
-              val roundTripLive = live2 == live0
-              val byteIdentity = ice1.keySet == ice3.keySet &&
-                ice1.forall { case (k, v) =>
-                  java.util.Arrays.equals(v, ice3(k)) }
-              val histEqual =
-                dhRows.sorted == histScan.sorted &&
-                  dhLive.size == 1 // only the compacted file is live
-              // refusals: vacuumed bytes, size tamper, DV source
-              val firstLive = live0.keys.toSeq.sorted.head
-              val vacuumedRefused = I.migrateToDelta(
-                iceT1 - firstLive, "v1.metadata.json", "x").isEmpty
-              val tamperedRefused = I.migrateToDelta(
-                iceT1 + (firstLive ->
-                  iceT1(firstLive).dropRight(1)),
-                "v1.metadata.json", "x").isEmpty
-              val dvSource = I.writeChangelogTable(s"dv-$t", ids,
-                d => (d * 17) % 983)
-              val dvRefused = I.migrateToDelta(dvSource,
-                "v1.metadata.json", "x").isEmpty
-              (t, live0.size.toLong, scan1.length.toLong,
-                scan1.map(_._1).sum, scan1.map(_._2).sum,
-                histScan.length.toLong, histScan.map(_._2).sum,
-                if (roundTripLive) 1L else 0L,
-                if (byteIdentity) 1L else 0L,
-                if (histEqual) 1L else 0L,
-                if (vacuumedRefused && tamperedRefused) 1L else 0L,
-                if (dvRefused) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.flatMap(_.get))
             }
-            res.toSeq
+          } yield {
+            val roundTripLive = live2 == live0
+            val byteIdentity = ice1.keySet == ice3.keySet &&
+              ice1.forall { case (k, v) =>
+                java.util.Arrays.equals(v, ice3(k)) }
+            val histEqual =
+              dhRows.sorted == histScan.sorted &&
+                dhLive.size == 1 // only the compacted file is live
+            // refusals: vacuumed bytes, size tamper, DV source
+            val firstLive = live0.keys.toSeq.sorted.head
+            val vacuumedRefused = I.migrateToDelta(
+              iceT1 - firstLive, "v1.metadata.json", "x").isEmpty
+            val tamperedRefused = I.migrateToDelta(
+              iceT1 + (firstLive ->
+                iceT1(firstLive).dropRight(1)),
+              "v1.metadata.json", "x").isEmpty
+            val dvSource = I.writeChangelogTable(s"dv-$t", ids,
+              d => (d * 17) % 983)
+            val dvRefused = I.migrateToDelta(dvSource,
+              "v1.metadata.json", "x").isEmpty
+            (t, live0.size.toLong, scan1.length.toLong,
+              scan1.map(_._1).sum, scan1.map(_._2).sum,
+              histScan.length.toLong, histScan.map(_._2).sum,
+              if (roundTripLive) 1L else 0L,
+              if (byteIdentity) 1L else 0L,
+              if (histEqual) 1L else 0L,
+              if (vacuumedRefused && tamperedRefused) 1L else 0L,
+              if (dvRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_live", "n_rows", "key_sum",
+          res.toSeq
+        }.toDF("table_id", "n_live", "n_rows", "key_sum",
             "val_sum", "hist_rows", "hist_val_sum",
             "round_trip_live", "byte_identity", "hist_equal",
             "source_gate", "dv_refused")
@@ -7271,74 +6805,68 @@ object WriterQueries {
     "q397_hudi_bloom_filters" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTable(ids)
-            val t4 = "00000000000004"
-            val res = for {
-              mdt <- M.syncBloomFilters(files)
-              blooms <- M.bloomListing(files ++ mdt)
-              plan = M.planFromListing(files)
-              perFile <- {
-                val per = plan.map { p =>
-                  files.get(p).flatMap(P.columnLongs(_, "rec_id"))
-                    .map(ks => p -> ks.toSet)
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.map(_.get))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val P = graft.sources.Parquet
+          val files = W.writeTable(ids)
+          val t4 = "00000000000004"
+          val res = for {
+            mdt <- M.syncBloomFilters(files)
+            blooms <- M.bloomListing(files ++ mdt)
+            plan = M.planFromListing(files)
+            perFile <- {
+              val per = plan.map { p =>
+                files.get(p).flatMap(P.columnLongs(_, "rec_id"))
+                  .map(ks => p -> ks.toSet)
               }
-              cr <- W.clean(files, t4)
-              cleanedData = (files -- cr.deleted) +
-                (cr.timelineName -> cr.timeline)
-              mdt2 <- M.appendBloomFilters(mdt,
-                files + (cr.timelineName -> cr.timeline), t4,
-                "clean")
-              blooms2 <- M.bloomListing(cleanedData ++ mdt ++ mdt2)
-              rebuilt <- M.syncBloomFilters(
-                files + (cr.timelineName -> cr.timeline))
-            } yield {
-              val byFile = perFile.toMap
-              val noFalseNeg = perFile.forall { case (p, ks) =>
-                blooms.contains(p) &&
-                  ks.forall(blooms(p).mightContainLong)
-              }
-              val noWrongSkip = ids.forall { d =>
-                perFile.forall { case (p, ks) =>
-                  blooms(p).mightContainLong(d) || !ks.contains(d)
-                }
-              }
-              val tagExact = ids.forall { d =>
-                val cands = plan.filter(p =>
-                  blooms(p).mightContainLong(d))
-                val verified = cands.filter(p => byFile(p).contains(d))
-                val truth = plan.filter(p => byFile(p).contains(d))
-                verified == truth
-              }
-              val inflightAbsent =
-                !blooms.keys.exists(_.contains("00000000000003"))
-              val cleanOk = blooms2.size == blooms.size - 1 &&
-                !blooms2.contains("p/fg0_0-0-0_00000000000001.parquet")
-              val rebuildOk = java.util.Arrays.equals(
-                rebuilt(M.BloomLogPath), mdt2(M.BloomLogPath))
-              (t, ids.length.toLong, ids.sum,
-                blooms.size.toLong, blooms2.size.toLong,
-                if (noFalseNeg) 1L else 0L,
-                if (noWrongSkip) 1L else 0L,
-                if (tagExact) 1L else 0L,
-                if (inflightAbsent) 1L else 0L,
-                if (cleanOk) 1L else 0L,
-                if (rebuildOk) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.map(_.get))
             }
-            res.toSeq
+            cr <- W.clean(files, t4)
+            cleanedData = (files -- cr.deleted) +
+              (cr.timelineName -> cr.timeline)
+            mdt2 <- M.appendBloomFilters(mdt,
+              files + (cr.timelineName -> cr.timeline), t4,
+              "clean")
+            blooms2 <- M.bloomListing(cleanedData ++ mdt ++ mdt2)
+            rebuilt <- M.syncBloomFilters(
+              files + (cr.timelineName -> cr.timeline))
+          } yield {
+            val byFile = perFile.toMap
+            val noFalseNeg = perFile.forall { case (p, ks) =>
+              blooms.contains(p) &&
+                ks.forall(blooms(p).mightContainLong)
+            }
+            val noWrongSkip = ids.forall { d =>
+              perFile.forall { case (p, ks) =>
+                blooms(p).mightContainLong(d) || !ks.contains(d)
+              }
+            }
+            val tagExact = ids.forall { d =>
+              val cands = plan.filter(p =>
+                blooms(p).mightContainLong(d))
+              val verified = cands.filter(p => byFile(p).contains(d))
+              val truth = plan.filter(p => byFile(p).contains(d))
+              verified == truth
+            }
+            val inflightAbsent =
+              !blooms.keys.exists(_.contains("00000000000003"))
+            val cleanOk = blooms2.size == blooms.size - 1 &&
+              !blooms2.contains("p/fg0_0-0-0_00000000000001.parquet")
+            val rebuildOk = java.util.Arrays.equals(
+              rebuilt(M.BloomLogPath), mdt2(M.BloomLogPath))
+            (t, ids.length.toLong, ids.sum,
+              blooms.size.toLong, blooms2.size.toLong,
+              if (noFalseNeg) 1L else 0L,
+              if (noWrongSkip) 1L else 0L,
+              if (tagExact) 1L else 0L,
+              if (inflightAbsent) 1L else 0L,
+              if (cleanOk) 1L else 0L,
+              if (rebuildOk) 1L else 0L)
           }
-          .toDF("table_id", "n_keys", "key_sum",
+          res.toSeq
+        }.toDF("table_id", "n_keys", "key_sum",
             "n_filters", "n_filters_after_clean", "no_false_neg",
             "no_wrong_skip", "tag_exact", "inflight_absent",
             "clean_ok", "rebuild_ok")
@@ -7378,85 +6906,79 @@ object WriterQueries {
     "q398_hudi_clustering" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeMorTable(ids)
-            val t5 = "00000000000005"; val t6 = "00000000000006"
-            val t7 = "00000000000007"
-            val res = for {
-              before <- W.replay(files)
-              cf <- W.cluster(files, t5, 2)
-              clustered = files ++ cf.newFiles +
-                (cf.timelineName -> cf.timeline)
-              after <- W.replay(clustered)
-              cr <- W.clean(clustered, t6)
-              cleaned = (clustered -- cr.deleted) +
-                (cr.timelineName -> cr.timeline)
-              afterClean <- W.replay(cleaned)
-              // a PENDING second clustering: new bases + marker only
-              pf <- W.cluster(cleaned, t7, 1)
-              pending = cleaned ++ pf.newFiles +
-                (s".hoodie/$t7.replacecommit.inflight" ->
-                  "{}".getBytes("UTF-8"))
-              afterPending <- W.replay(pending)
-              rb <- W.rollback(pending, t7, "00000000000008")
-              rolledBack = (pending -- rb.deleted) ++
-                rb.appendedLogs + (rb.timelineName -> rb.timeline)
-              afterRb <- W.replay(rolledBack)
-            } yield {
-              val rowsB = before.flatMap(_.rows).sortBy(_._1)
-              val rowsA = after.flatMap(_.rows).sortBy(_._1)
-              val replayStable = rowsA == rowsB
-              val dark = cf.replacedFileIds == Seq("fg0", "fg1") &&
-                after.map(_.fileId).sorted == Seq("cl0", "cl1") &&
-                clustered.contains(
-                  "p/fg0_0-0-0_00000000000001.parquet")
-              val ranges = after.sortBy(_.fileId).map(f =>
-                (f.rows.map(_._1).min, f.rows.map(_._1).max))
-              val disjoint = ranges.length == 2 &&
-                ranges(0)._2 < ranges(1)._1
-              // clean: old bases + the fully-completed log die; the
-              // log holding the pending t4 block is RETAINED
-              val cleanOk = cr.deleted.toSet == Set(
-                "p/fg0_0-0-0_00000000000001.parquet",
-                "p/fg1_0-0-0_00000000000001.parquet",
-                "p/.fg0_00000000000001.log.1_0-0-0") &&
-                cleaned.contains("p/.fg1_00000000000001.log.1_0-0-0") &&
-                afterClean.flatMap(_.rows).sortBy(_._1) == rowsB
-              val pendingInvisible =
-                afterPending.flatMap(_.rows).sortBy(_._1) == rowsB &&
-                  afterPending.map(_.fileId).sorted ==
-                    Seq("cl0", "cl1")
-              val rollbackOk = rb.deleted.contains(
-                s"p/cl0_0-0-0_$t7.parquet") &&
-                afterRb.flatMap(_.rows).sortBy(_._1) == rowsB
-              // a replacecommit naming no replacements fails CLOSED
-              val anon = clustered + (cf.timelineName ->
-                """{"operation": "CLUSTER"}""".getBytes("UTF-8"))
-              val anonClosed = W.replay(anon).isEmpty
-              // clustered bytes really carry the rows (proven)
-              val proven = cf.newFiles.forall { case (p, b) =>
-                P.columnLongs(b, "rec_id").isDefined
-              }
-              (t, rowsA.length.toLong, rowsA.map(_._1).sum,
-                rowsA.map(_._2).sum,
-                if (replayStable) 1L else 0L,
-                if (dark) 1L else 0L,
-                if (disjoint) 1L else 0L,
-                if (cleanOk) 1L else 0L,
-                if (pendingInvisible) 1L else 0L,
-                if (rollbackOk) 1L else 0L,
-                if (anonClosed && proven) 1L else 0L)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val P = graft.sources.Parquet
+          val files = W.writeMorTable(ids)
+          val t5 = "00000000000005"; val t6 = "00000000000006"
+          val t7 = "00000000000007"
+          val res = for {
+            before <- W.replay(files)
+            cf <- W.cluster(files, t5, 2)
+            clustered = files ++ cf.newFiles +
+              (cf.timelineName -> cf.timeline)
+            after <- W.replay(clustered)
+            cr <- W.clean(clustered, t6)
+            cleaned = (clustered -- cr.deleted) +
+              (cr.timelineName -> cr.timeline)
+            afterClean <- W.replay(cleaned)
+            // a PENDING second clustering: new bases + marker only
+            pf <- W.cluster(cleaned, t7, 1)
+            pending = cleaned ++ pf.newFiles +
+              (s".hoodie/$t7.replacecommit.inflight" ->
+                "{}".getBytes("UTF-8"))
+            afterPending <- W.replay(pending)
+            rb <- W.rollback(pending, t7, "00000000000008")
+            rolledBack = (pending -- rb.deleted) ++
+              rb.appendedLogs + (rb.timelineName -> rb.timeline)
+            afterRb <- W.replay(rolledBack)
+          } yield {
+            val rowsB = before.flatMap(_.rows).sortBy(_._1)
+            val rowsA = after.flatMap(_.rows).sortBy(_._1)
+            val replayStable = rowsA == rowsB
+            val dark = cf.replacedFileIds == Seq("fg0", "fg1") &&
+              after.map(_.fileId).sorted == Seq("cl0", "cl1") &&
+              clustered.contains(
+                "p/fg0_0-0-0_00000000000001.parquet")
+            val ranges = after.sortBy(_.fileId).map(f =>
+              (f.rows.map(_._1).min, f.rows.map(_._1).max))
+            val disjoint = ranges.length == 2 &&
+              ranges(0)._2 < ranges(1)._1
+            // clean: old bases + the fully-completed log die; the
+            // log holding the pending t4 block is RETAINED
+            val cleanOk = cr.deleted.toSet == Set(
+              "p/fg0_0-0-0_00000000000001.parquet",
+              "p/fg1_0-0-0_00000000000001.parquet",
+              "p/.fg0_00000000000001.log.1_0-0-0") &&
+              cleaned.contains("p/.fg1_00000000000001.log.1_0-0-0") &&
+              afterClean.flatMap(_.rows).sortBy(_._1) == rowsB
+            val pendingInvisible =
+              afterPending.flatMap(_.rows).sortBy(_._1) == rowsB &&
+                afterPending.map(_.fileId).sorted ==
+                  Seq("cl0", "cl1")
+            val rollbackOk = rb.deleted.contains(
+              s"p/cl0_0-0-0_$t7.parquet") &&
+              afterRb.flatMap(_.rows).sortBy(_._1) == rowsB
+            // a replacecommit naming no replacements fails CLOSED
+            val anon = clustered + (cf.timelineName ->
+              """{"operation": "CLUSTER"}""".getBytes("UTF-8"))
+            val anonClosed = W.replay(anon).isEmpty
+            // clustered bytes really carry the rows (proven)
+            val proven = cf.newFiles.forall { case (p, b) =>
+              P.columnLongs(b, "rec_id").isDefined
             }
-            res.toSeq
+            (t, rowsA.length.toLong, rowsA.map(_._1).sum,
+              rowsA.map(_._2).sum,
+              if (replayStable) 1L else 0L,
+              if (dark) 1L else 0L,
+              if (disjoint) 1L else 0L,
+              if (cleanOk) 1L else 0L,
+              if (pendingInvisible) 1L else 0L,
+              if (rollbackOk) 1L else 0L,
+              if (anonClosed && proven) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "replay_stable", "replaced_dark", "ranges_disjoint",
             "clean_ok", "pending_invisible", "rollback_ok",
             "fail_closed")
@@ -7505,62 +7027,56 @@ object WriterQueries {
     "q399_iceberg_default_values" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            def vf(d: Long): Long = (d * 23) % 1013
-            val files = I.writeDefaultsTable(s"dv-$t", ids, vf)
-            val meta = "v1.metadata.json"
-            val res = for {
-              rows <- I.scanWithDefaults(files, meta, 3L)
-              fields <- I.parseSchema(files, meta)
-            } yield {
-              def gen(d: Long) = (d / 6) % 3
-              val expect = ids.map { d =>
-                val score = gen(d) match {
-                  case 0 => 7L
-                  case 1 => (d * 3) % 50
-                  case _ => 9L
-                }
-                (d, vf(d), score, Option.empty[Long])
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          def vf(d: Long): Long = (d * 23) % 1013
+          val files = I.writeDefaultsTable(s"dv-$t", ids, vf)
+          val meta = "v1.metadata.json"
+          val res = for {
+            rows <- I.scanWithDefaults(files, meta, 3L)
+            fields <- I.parseSchema(files, meta)
+          } yield {
+            def gen(d: Long) = (d / 6) % 3
+            val expect = ids.map { d =>
+              val score = gen(d) match {
+                case 0 => 7L
+                case 1 => (d * 3) % 50
+                case _ => 9L
               }
-              val scanOk = rows == expect
-              // the write-default is IN file C's bytes, not invented
-              val writeDefaultOk = P.columnLongs(
-                files("data/c.parquet"), "score")
-                .exists(_.forall(_ == 9L))
-              // schema parse carries both defaults
-              val schemaOk = fields.exists(f =>
-                f.name == "score" && f.required &&
-                  f.initialDefault.contains(7L) &&
-                  f.writeDefault.contains(9L)) &&
-                fields.exists(f => f.name == "tag" && !f.required &&
-                  f.initialDefault.isEmpty)
-              // strip initial-default: required column unservable
-              // for the pre-evolution file -> CLOSED
-              val stripped = new String(files(meta), "UTF-8")
-                .replace("\"initial-default\": 7, ", "")
-              val failClosed = I.scanWithDefaults(
-                files + (meta -> stripped.getBytes("UTF-8")),
-                meta, 3L).isEmpty
-              val nDefault = rows.count(_._3 == 7L)
-              val nTagNull = rows.count(_._4.isEmpty)
-              (t, rows.length.toLong, rows.map(_._2).sum,
-                rows.map(_._3).sum,
-                ids.count(gen(_) == 0).toLong, nTagNull.toLong,
-                if (scanOk) 1L else 0L,
-                if (writeDefaultOk && schemaOk) 1L else 0L,
-                if (failClosed) 1L else 0L,
-                if (nDefault >= ids.count(gen(_) == 0)) 1L else 0L)
+              (d, vf(d), score, Option.empty[Long])
             }
-            res.toSeq
+            val scanOk = rows == expect
+            // the write-default is IN file C's bytes, not invented
+            val writeDefaultOk = P.columnLongs(
+              files("data/c.parquet"), "score")
+              .exists(_.forall(_ == 9L))
+            // schema parse carries both defaults
+            val schemaOk = fields.exists(f =>
+              f.name == "score" && f.required &&
+                f.initialDefault.contains(7L) &&
+                f.writeDefault.contains(9L)) &&
+              fields.exists(f => f.name == "tag" && !f.required &&
+                f.initialDefault.isEmpty)
+            // strip initial-default: required column unservable
+            // for the pre-evolution file -> CLOSED
+            val stripped = new String(files(meta), "UTF-8")
+              .replace("\"initial-default\": 7, ", "")
+            val failClosed = I.scanWithDefaults(
+              files + (meta -> stripped.getBytes("UTF-8")),
+              meta, 3L).isEmpty
+            val nDefault = rows.count(_._3 == 7L)
+            val nTagNull = rows.count(_._4.isEmpty)
+            (t, rows.length.toLong, rows.map(_._2).sum,
+              rows.map(_._3).sum,
+              ids.count(gen(_) == 0).toLong, nTagNull.toLong,
+              if (scanOk) 1L else 0L,
+              if (writeDefaultOk && schemaOk) 1L else 0L,
+              if (failClosed) 1L else 0L,
+              if (nDefault >= ids.count(gen(_) == 0)) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "val_sum", "score_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "val_sum", "score_sum",
             "n_pre_evolution", "n_tag_nulls", "scan_ok",
             "write_default_ok", "fail_closed", "default_cover")
       },
@@ -7603,72 +7119,66 @@ object WriterQueries {
     "q400_hudi_mdt_point_lookup" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeTable(ids)
-            val res = for {
-              mFiles <- M.sync(files)
-              mStats <- M.syncColumnStats(files, Seq("rec_id"))
-              mBloom <- M.syncBloomFilters(files)
-              mRli <- M.syncRecordIndex(files)
-              table = files ++ mFiles ++ mStats ++ mBloom ++ mRli
-              plan <- M.planFromMdt(table)
-              blooms <- M.bloomListing(table)
-              idx <- M.recordIndexListing(table)
-              // truth: decode the planned files (verification only)
-              truth <- {
-                val per = plan.map { p =>
-                  files.get(p).flatMap(P.columnLongs(_, "rec_id"))
-                    .map(ks => p -> ks.toSet)
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.map(_.get).toMap)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val P = graft.sources.Parquet
+          val files = W.writeTable(ids)
+          val res = for {
+            mFiles <- M.sync(files)
+            mStats <- M.syncColumnStats(files, Seq("rec_id"))
+            mBloom <- M.syncBloomFilters(files)
+            mRli <- M.syncRecordIndex(files)
+            table = files ++ mFiles ++ mStats ++ mBloom ++ mRli
+            plan <- M.planFromMdt(table)
+            blooms <- M.bloomListing(table)
+            idx <- M.recordIndexListing(table)
+            // truth: decode the planned files (verification only)
+            truth <- {
+              val per = plan.map { p =>
+                files.get(p).flatMap(P.columnLongs(_, "rec_id"))
+                  .map(ks => p -> ks.toSet)
               }
-            } yield {
-              val planOk = plan == M.planFromListing(files)
-              var statsKeptSum = 0L
-              var sound = true
-              var lattice = true
-              ids.foreach { d =>
-                val statsKept =
-                  M.prunePlan(table, "rec_id", d, d).getOrElse(Nil)
-                statsKeptSum += statsKept.length.toLong
-                val cands = statsKept.filter(p =>
-                  blooms(p).mightContainLong(d))
-                val trueFiles = plan.filter(p => truth(p).contains(d))
-                // soundness: no stage ever skips the true file
-                if (!trueFiles.forall(statsKept.contains)) sound = false
-                if (!trueFiles.forall(cands.contains)) sound = false
-                // the lattice: RLI's answer sits inside every stage
-                idx.get(d) match {
-                  case Some((part, fid)) =>
-                    val loc = plan.find(_.startsWith(s"$part/${fid}_"))
-                    if (!loc.exists(p => cands.contains(p) &&
-                      truth(p).contains(d))) lattice = false
-                  case None => lattice = false // COW: every key lives
-                }
-              }
-              val rliExact = ids.forall { d =>
-                val scanTag = plan.find(p => truth(p).contains(d))
-                  .map(p => ("p", p.split("/")(1).split("_")(0)))
-                idx.get(d) == scanTag
-              }
-              (t, ids.length.toLong, ids.sum, statsKeptSum,
-                if (planOk) 1L else 0L,
-                if (sound) 1L else 0L,
-                if (lattice) 1L else 0L,
-                if (rliExact) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.map(_.get).toMap)
             }
-            res.toSeq
+          } yield {
+            val planOk = plan == M.planFromListing(files)
+            var statsKeptSum = 0L
+            var sound = true
+            var lattice = true
+            ids.foreach { d =>
+              val statsKept =
+                M.prunePlan(table, "rec_id", d, d).getOrElse(Nil)
+              statsKeptSum += statsKept.length.toLong
+              val cands = statsKept.filter(p =>
+                blooms(p).mightContainLong(d))
+              val trueFiles = plan.filter(p => truth(p).contains(d))
+              // soundness: no stage ever skips the true file
+              if (!trueFiles.forall(statsKept.contains)) sound = false
+              if (!trueFiles.forall(cands.contains)) sound = false
+              // the lattice: RLI's answer sits inside every stage
+              idx.get(d) match {
+                case Some((part, fid)) =>
+                  val loc = plan.find(_.startsWith(s"$part/${fid}_"))
+                  if (!loc.exists(p => cands.contains(p) &&
+                    truth(p).contains(d))) lattice = false
+                case None => lattice = false // COW: every key lives
+              }
+            }
+            val rliExact = ids.forall { d =>
+              val scanTag = plan.find(p => truth(p).contains(d))
+                .map(p => ("p", p.split("/")(1).split("_")(0)))
+              idx.get(d) == scanTag
+            }
+            (t, ids.length.toLong, ids.sum, statsKeptSum,
+              if (planOk) 1L else 0L,
+              if (sound) 1L else 0L,
+              if (lattice) 1L else 0L,
+              if (rliExact) 1L else 0L)
           }
-          .toDF("table_id", "n_probes", "key_sum", "stats_kept_sum",
+          res.toSeq
+        }.toDF("table_id", "n_probes", "key_sum", "stats_kept_sum",
             "plan_ok", "stages_sound", "lattice_ok", "rli_exact")
       },
       oracle = Some("""
@@ -7712,60 +7222,54 @@ object WriterQueries {
     "q401_delta_rt_checkpoint" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length.toLong
-            val base = W.writeRowTrackingTable(s"rtc-$t", ids)
-            val res = for {
-              ck <- W.checkpointRt(base, 1L)
-              z <- W.optimizeZOrderRt(base, 2)
-              files = base + (z.commitName -> z.commit) ++
-                z.newFiles
-              withCk = files + (ck._1 -> ck._2) +
-                ("_delta_log/_last_checkpoint" ->
-                  (ck._3 + "\n").getBytes("UTF-8"))
-              full <- W.replayRowTracking(files)
-              fromCk <- W.replayRowTrackingCkpt(withCk)
-              vacuumed = withCk -
-                "_delta_log/00000000000000000000.json" -
-                "_delta_log/00000000000000000001.json"
-              fromVac <- W.replayRowTrackingCkpt(vacuumed)
-            } yield {
-              val ckEqualsFull =
-                fromCk.rows == full.rows &&
-                  fromCk.highWaterMark == full.highWaterMark
-              val vacuumOk = fromVac.rows == full.rows &&
-                fromVac.highWaterMark == full.highWaterMark
-              // the classic JSON-from-zero replay DIES post-vacuum;
-              // the checkpoint read is what survives
-              val classicDies =
-                W.replayRowTracking(vacuumed).isEmpty
-              val truncated = withCk + (ck._1 ->
-                ck._2.dropRight(1))
-              val classicShape = withCk + (ck._1 ->
-                W.writeCheckpoint(Seq(
-                  W.CkptAct(minReader = 1L),
-                  W.CkptAct(metaId = s"rtc-$t"))))
-              val failClosed =
-                W.replayRowTrackingCkpt(truncated).isEmpty &&
-                  W.replayRowTrackingCkpt(classicShape).isEmpty
-              (t, fromVac.rows.length.toLong,
-                fromVac.rows.map(_._1).sum,
-                fromVac.rows.map(_._2).sum,
-                fromVac.rows.map(_._3).sum,
-                fromVac.highWaterMark,
-                if (ckEqualsFull) 1L else 0L,
-                if (vacuumOk && classicDies) 1L else 0L,
-                if (failClosed) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val n = ids.length.toLong
+          val base = W.writeRowTrackingTable(s"rtc-$t", ids)
+          val res = for {
+            ck <- W.checkpointRt(base, 1L)
+            z <- W.optimizeZOrderRt(base, 2)
+            files = base + (z.commitName -> z.commit) ++
+              z.newFiles
+            withCk = files + (ck._1 -> ck._2) +
+              ("_delta_log/_last_checkpoint" ->
+                (ck._3 + "\n").getBytes("UTF-8"))
+            full <- W.replayRowTracking(files)
+            fromCk <- W.replayRowTrackingCkpt(withCk)
+            vacuumed = withCk -
+              "_delta_log/00000000000000000000.json" -
+              "_delta_log/00000000000000000001.json"
+            fromVac <- W.replayRowTrackingCkpt(vacuumed)
+          } yield {
+            val ckEqualsFull =
+              fromCk.rows == full.rows &&
+                fromCk.highWaterMark == full.highWaterMark
+            val vacuumOk = fromVac.rows == full.rows &&
+              fromVac.highWaterMark == full.highWaterMark
+            // the classic JSON-from-zero replay DIES post-vacuum;
+            // the checkpoint read is what survives
+            val classicDies =
+              W.replayRowTracking(vacuumed).isEmpty
+            val truncated = withCk + (ck._1 ->
+              ck._2.dropRight(1))
+            val classicShape = withCk + (ck._1 ->
+              W.writeCheckpoint(Seq(
+                W.CkptAct(minReader = 1L),
+                W.CkptAct(metaId = s"rtc-$t"))))
+            val failClosed =
+              W.replayRowTrackingCkpt(truncated).isEmpty &&
+                W.replayRowTrackingCkpt(classicShape).isEmpty
+            (t, fromVac.rows.length.toLong,
+              fromVac.rows.map(_._1).sum,
+              fromVac.rows.map(_._2).sum,
+              fromVac.rows.map(_._3).sum,
+              fromVac.highWaterMark,
+              if (ckEqualsFull) 1L else 0L,
+              if (vacuumOk && classicDies) 1L else 0L,
+              if (failClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "rid_sum", "key_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "rid_sum", "key_sum",
             "val_sum", "hwm", "ck_equals_full", "vacuum_ok",
             "fail_closed")
       },
@@ -7818,62 +7322,56 @@ object WriterQueries {
     "q402_iceberg_bucket_transform" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            def vf(d: Long): Long = (d * 37) % 1021
-            val files = I.writeBucketTable(s"bk-$t", ids, vf, 4)
-            val meta = "v1.metadata.json"
-            val res = for {
-              n <- I.parseBucketSpec(files, meta)
-              perBucket <- {
-                val per = (0 until 4).map { bkt =>
-                  files.get(s"data/b-$bkt.parquet")
-                    .flatMap(P.columnLongs(_, "rec_id"))
-                    .map(ks => bkt -> ks.toSet)
-                }
-                if (per.exists(_.isEmpty)) None
-                else Some(per.map(_.get).toMap)
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          val P = graft.sources.Parquet
+          def vf(d: Long): Long = (d * 37) % 1021
+          val files = I.writeBucketTable(s"bk-$t", ids, vf, 4)
+          val meta = "v1.metadata.json"
+          val res = for {
+            n <- I.parseBucketSpec(files, meta)
+            perBucket <- {
+              val per = (0 until 4).map { bkt =>
+                files.get(s"data/b-$bkt.parquet")
+                  .flatMap(P.columnLongs(_, "rec_id"))
+                  .map(ks => bkt -> ks.toSet)
               }
-            } yield {
-              val partitionLaw =
-                perBucket.values.map(_.size).sum == ids.length &&
-                  ids.forall(d =>
-                    perBucket(I.bucketLong(d, 4)).contains(d)) &&
-                  perBucket.forall { case (bkt, ks) =>
-                    ks.forall(I.bucketLong(_, 4) == bkt) }
-              val lookupExact = ids.forall { d =>
-                I.bucketLookup(files, meta, d).exists {
-                  case (p, rows) =>
-                    p == s"data/b-${I.bucketLong(d, 4)}.parquet" &&
-                      rows == Seq((d, vf(d)))
-                }
-              }
-              val absentEmpty = (1L to 5L).forall { k =>
-                val probe = ids.max + k * 6 // same residue class
-                I.bucketLookup(files, meta, probe)
-                  .exists(_._2.isEmpty)
-              }
-              val alien = new String(files(meta), "UTF-8")
-                .replace("bucket[4]", "truncate[4]")
-                .getBytes("UTF-8")
-              val unknownRefused = I.bucketLookup(
-                files + (meta -> alien), meta, ids.head).isEmpty
-              (t, ids.length.toLong, ids.sum,
-                ids.map(vf).sum, n.toLong,
-                if (partitionLaw) 1L else 0L,
-                if (lookupExact) 1L else 0L,
-                if (absentEmpty) 1L else 0L,
-                if (unknownRefused) 1L else 0L)
+              if (per.exists(_.isEmpty)) None
+              else Some(per.map(_.get).toMap)
             }
-            res.toSeq
+          } yield {
+            val partitionLaw =
+              perBucket.values.map(_.size).sum == ids.length &&
+                ids.forall(d =>
+                  perBucket(I.bucketLong(d, 4)).contains(d)) &&
+                perBucket.forall { case (bkt, ks) =>
+                  ks.forall(I.bucketLong(_, 4) == bkt) }
+            val lookupExact = ids.forall { d =>
+              I.bucketLookup(files, meta, d).exists {
+                case (p, rows) =>
+                  p == s"data/b-${I.bucketLong(d, 4)}.parquet" &&
+                    rows == Seq((d, vf(d)))
+              }
+            }
+            val absentEmpty = (1L to 5L).forall { k =>
+              val probe = ids.max + k * 6 // same residue class
+              I.bucketLookup(files, meta, probe)
+                .exists(_._2.isEmpty)
+            }
+            val alien = new String(files(meta), "UTF-8")
+              .replace("bucket[4]", "truncate[4]")
+              .getBytes("UTF-8")
+            val unknownRefused = I.bucketLookup(
+              files + (meta -> alien), meta, ids.head).isEmpty
+            (t, ids.length.toLong, ids.sum,
+              ids.map(vf).sum, n.toLong,
+              if (partitionLaw) 1L else 0L,
+              if (lookupExact) 1L else 0L,
+              if (absentEmpty) 1L else 0L,
+              if (unknownRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "key_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "key_sum", "val_sum",
             "n_buckets", "partition_law", "lookup_exact",
             "absent_empty", "unknown_refused")
       },
@@ -7907,31 +7405,25 @@ object WriterQueries {
       build = (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.streaming.Trigger
-        val docs = Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-        val changes = docs.groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def vf(d: Long): Long = (d * 29) % 997
-            val files = I.writeLineageTable(s"lmv-$t", ids, vf)
-            val scans = (1L to 5L).map(sid => sid ->
-              I.lineageScan(files, "v1.metadata.json", sid)
-                .getOrElse(Seq.empty)).toMap
-            (2L to 5L).flatMap { sid =>
-              val prev = scans(sid - 1).map(r => r._1 -> r).toMap
-              val cur = scans(sid).map(r => r._1 -> r).toMap
-              val ins = (cur.keySet -- prev.keySet).toSeq.sorted
-                .map { rid =>
-                  (t, sid, "INSERT", rid, cur(rid)._3) }
-              val del = (prev.keySet -- cur.keySet).toSeq.sorted
-                .map { rid => (t, sid, "DELETE", rid, 0L) }
-              ins ++ del
-            } ++ scans(1L).map(r =>
-              (t, 1L, "INSERT", r._1, r._3))
-          }
-          .toDF("table_id", "to_sid", "change_type", "rec_id",
+        val changes = Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          def vf(d: Long): Long = (d * 29) % 997
+          val files = I.writeLineageTable(s"lmv-$t", ids, vf)
+          val scans = (1L to 5L).map(sid => sid ->
+            I.lineageScan(files, "v1.metadata.json", sid)
+              .getOrElse(Seq.empty)).toMap
+          (2L to 5L).flatMap { sid =>
+            val prev = scans(sid - 1).map(r => r._1 -> r).toMap
+            val cur = scans(sid).map(r => r._1 -> r).toMap
+            val ins = (cur.keySet -- prev.keySet).toSeq.sorted
+              .map { rid =>
+                (t, sid, "INSERT", rid, cur(rid)._3) }
+            val del = (prev.keySet -- cur.keySet).toSeq.sorted
+              .map { rid => (t, sid, "DELETE", rid, 0L) }
+            ins ++ del
+          } ++ scans(1L).map(r =>
+            (t, 1L, "INSERT", r._1, r._3))
+        }.toDF("table_id", "to_sid", "change_type", "rec_id",
             "val") // rec_id slot carries the ROW ID
         val dv = new StreamDeliveries("graft_q403_lmv")
         (1L to 5L).foreach { sid =>
@@ -8030,63 +7522,57 @@ object WriterQueries {
     "q404_hudi_mdt_clustering_sync" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeMorTable(ids)
-            val t5 = "00000000000005"; val t6 = "00000000000006"
-            val res = for {
-              mdt <- M.sync(files)
-              rli <- M.syncRecordIndex(files)
-              cf <- W.cluster(files, t5, 2)
-              clustered = files ++ cf.newFiles +
-                (cf.timelineName -> cf.timeline)
-              mdt2 <- M.sync(clustered)
-              rli2 <- M.syncRecordIndex(clustered)
-              planM <- M.planFromMdt(clustered ++ mdt2)
-              idx <- M.recordIndexListing(clustered ++ rli2)
-              scan <- W.replay(clustered)
-              cr <- W.clean(clustered, t6)
-              cleaned = (clustered -- cr.deleted) +
-                (cr.timelineName -> cr.timeline)
-              mdt3 <- M.appendClean(mdt2, t6, cr.deleted)
-              planM3 <- M.planFromMdt(cleaned ++ mdt2 ++ mdt3)
-            } yield {
-              val clNames = Seq(s"p/cl0_0-0-0_$t5.parquet",
-                s"p/cl1_0-0-0_$t5.parquet")
-              val planMatch = planM ==
-                M.planFromListing(clustered) && planM == clNames
-              val replacedDark = planM.forall(!_.contains("fg"))
-              val fullScan = scan.flatMap(f =>
-                f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
-              val rliMatch = idx == fullScan &&
-                idx.values.forall(_._2.startsWith("cl"))
-              def prefix(a: Array[Byte], b: Array[Byte]) =
-                b.length > a.length &&
-                  java.util.Arrays.equals(b.take(a.length), a)
-              val prefixOk =
-                prefix(mdt(M.LogPath), mdt2(M.LogPath)) &&
-                  prefix(rli(M.RecordIndexLogPath),
-                    rli2(M.RecordIndexLogPath))
-              val cleanOk = planM3 == planM &&
-                planM3 == M.planFromListing(cleaned)
-              val rows = scan.flatMap(_.rows).sortBy(_._1)
-              (t, rows.length.toLong, rows.map(_._1).sum,
-                rows.map(_._2).sum,
-                if (planMatch) 1L else 0L,
-                if (replacedDark) 1L else 0L,
-                if (rliMatch) 1L else 0L,
-                if (prefixOk) 1L else 0L,
-                if (cleanOk) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val files = W.writeMorTable(ids)
+          val t5 = "00000000000005"; val t6 = "00000000000006"
+          val res = for {
+            mdt <- M.sync(files)
+            rli <- M.syncRecordIndex(files)
+            cf <- W.cluster(files, t5, 2)
+            clustered = files ++ cf.newFiles +
+              (cf.timelineName -> cf.timeline)
+            mdt2 <- M.sync(clustered)
+            rli2 <- M.syncRecordIndex(clustered)
+            planM <- M.planFromMdt(clustered ++ mdt2)
+            idx <- M.recordIndexListing(clustered ++ rli2)
+            scan <- W.replay(clustered)
+            cr <- W.clean(clustered, t6)
+            cleaned = (clustered -- cr.deleted) +
+              (cr.timelineName -> cr.timeline)
+            mdt3 <- M.appendClean(mdt2, t6, cr.deleted)
+            planM3 <- M.planFromMdt(cleaned ++ mdt2 ++ mdt3)
+          } yield {
+            val clNames = Seq(s"p/cl0_0-0-0_$t5.parquet",
+              s"p/cl1_0-0-0_$t5.parquet")
+            val planMatch = planM ==
+              M.planFromListing(clustered) && planM == clNames
+            val replacedDark = planM.forall(!_.contains("fg"))
+            val fullScan = scan.flatMap(f =>
+              f.rows.map(r => r._1 -> ("p", f.fileId))).toMap
+            val rliMatch = idx == fullScan &&
+              idx.values.forall(_._2.startsWith("cl"))
+            def prefix(a: Array[Byte], b: Array[Byte]) =
+              b.length > a.length &&
+                java.util.Arrays.equals(b.take(a.length), a)
+            val prefixOk =
+              prefix(mdt(M.LogPath), mdt2(M.LogPath)) &&
+                prefix(rli(M.RecordIndexLogPath),
+                  rli2(M.RecordIndexLogPath))
+            val cleanOk = planM3 == planM &&
+              planM3 == M.planFromListing(cleaned)
+            val rows = scan.flatMap(_.rows).sortBy(_._1)
+            (t, rows.length.toLong, rows.map(_._1).sum,
+              rows.map(_._2).sum,
+              if (planMatch) 1L else 0L,
+              if (replacedDark) 1L else 0L,
+              if (rliMatch) 1L else 0L,
+              if (prefixOk) 1L else 0L,
+              if (cleanOk) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "id_sum", "val_sum",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "id_sum", "val_sum",
             "plan_match", "replaced_dark", "rli_moved",
             "append_prefix_ok", "clean_ok")
       },
@@ -8127,48 +7613,42 @@ object WriterQueries {
     "q405_iceberg_truncate_transform" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def vf(d: Long): Long = (d * 41) % 1031
-            val W = 96
-            val files = I.writeTruncTable(s"tr-$t", ids, vf, W)
-            val meta = "v1.metadata.json"
-            val lo = ids.min; val hi = ids.min + 191L
-            val res = for {
-              w <- I.parseTruncSpec(files, meta)
-              if w == W
-              (keptParts, rows) <- I.truncRangeScan(files, meta,
-                lo, hi)
-              (onePart, pointRows) <- I.truncRangeScan(files, meta,
-                ids.min, ids.min)
-            } yield {
-              val brute = ids.filter(d => d >= lo && d <= hi)
-                .map(d => (d, vf(d)))
-              val rangeExact = rows == brute
-              val pointOk = onePart <= 1 &&
-                pointRows == Seq((ids.min, vf(ids.min)))
-              val alien = new String(files(meta), "UTF-8")
-                .replace(s"truncate[$W]", s"bucket[$W]")
-                .getBytes("UTF-8")
-              val unknownRefused = I.truncRangeScan(
-                files + (meta -> alien), meta, lo, hi).isEmpty
-              val nParts =
-                ids.map(I.truncateLong(_, W)).distinct.length
-              (t, ids.length.toLong, nParts.toLong,
-                keptParts.toLong, rows.length.toLong,
-                rows.map(_._2).sum,
-                if (rangeExact) 1L else 0L,
-                if (pointOk) 1L else 0L,
-                if (unknownRefused) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          def vf(d: Long): Long = (d * 41) % 1031
+          val W = 96
+          val files = I.writeTruncTable(s"tr-$t", ids, vf, W)
+          val meta = "v1.metadata.json"
+          val lo = ids.min; val hi = ids.min + 191L
+          val res = for {
+            w <- I.parseTruncSpec(files, meta)
+            if w == W
+            (keptParts, rows) <- I.truncRangeScan(files, meta,
+              lo, hi)
+            (onePart, pointRows) <- I.truncRangeScan(files, meta,
+              ids.min, ids.min)
+          } yield {
+            val brute = ids.filter(d => d >= lo && d <= hi)
+              .map(d => (d, vf(d)))
+            val rangeExact = rows == brute
+            val pointOk = onePart <= 1 &&
+              pointRows == Seq((ids.min, vf(ids.min)))
+            val alien = new String(files(meta), "UTF-8")
+              .replace(s"truncate[$W]", s"bucket[$W]")
+              .getBytes("UTF-8")
+            val unknownRefused = I.truncRangeScan(
+              files + (meta -> alien), meta, lo, hi).isEmpty
+            val nParts =
+              ids.map(I.truncateLong(_, W)).distinct.length
+            (t, ids.length.toLong, nParts.toLong,
+              keptParts.toLong, rows.length.toLong,
+              rows.map(_._2).sum,
+              if (rangeExact) 1L else 0L,
+              if (pointOk) 1L else 0L,
+              if (unknownRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "n_parts", "kept_parts",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "n_parts", "kept_parts",
             "range_rows", "range_val_sum", "range_exact",
             "point_ok", "unknown_refused")
       },
@@ -8307,52 +7787,46 @@ object WriterQueries {
     "q407_delta_rt_deletion_vectors" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val ids = it.map(_._2).toSeq.sorted
-            val n = ids.length.toLong
-            val base = W.writeRowTrackingTable(s"rtd-$t", ids)
-            val files = W.writeRtDvTable(s"rtd-$t", ids)
-            val res = for {
-              st0 <- W.replayRowTracking(base)
-              st <- W.replayRowTracking(files)
-            } yield {
-              val a = ids.filter(d => (d / 6) % 3 == 0).sorted
-              val killedRids = a.zipWithIndex.collect {
-                case (d, i) if d % 5 == 0 => i.toLong }.toSet
-              val survivors = st0.rows.filterNot(r =>
-                killedRids(r._1))
-              val dvStable = st.rows == survivors &&
-                st.highWaterMark == st0.highWaterMark
-              val diffOk = st0.rows.map(_._1).toSet --
-                st.rows.map(_._1).toSet == killedRids
-              val refusals =
-                W.checkpointRt(files, 2L).isEmpty &&
-                  W.shallowCloneRt(files, "x").isEmpty &&
-                  W.optimizeZOrderRt(files, 2).isEmpty
-              // a descriptor lying about its cardinality closes
-              val lied = new String(files(
-                "_delta_log/00000000000000000002.json"), "UTF-8")
-                .replaceFirst("\"cardinality\": (\\d+)",
-                  "\"cardinality\": 999999")
-              val cardClosed = W.replayRowTracking(files +
-                ("_delta_log/00000000000000000002.json" ->
-                  lied.getBytes("UTF-8"))).isEmpty
-              (t, st.rows.length.toLong, st.rows.map(_._1).sum,
-                st.rows.map(_._2).sum, st.rows.map(_._3).sum,
-                st.highWaterMark, killedRids.size.toLong,
-                if (dvStable) 1L else 0L,
-                if (diffOk) 1L else 0L,
-                if (refusals) 1L else 0L,
-                if (cardClosed) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val n = ids.length.toLong
+          val base = W.writeRowTrackingTable(s"rtd-$t", ids)
+          val files = W.writeRtDvTable(s"rtd-$t", ids)
+          val res = for {
+            st0 <- W.replayRowTracking(base)
+            st <- W.replayRowTracking(files)
+          } yield {
+            val a = ids.filter(d => (d / 6) % 3 == 0).sorted
+            val killedRids = a.zipWithIndex.collect {
+              case (d, i) if d % 5 == 0 => i.toLong }.toSet
+            val survivors = st0.rows.filterNot(r =>
+              killedRids(r._1))
+            val dvStable = st.rows == survivors &&
+              st.highWaterMark == st0.highWaterMark
+            val diffOk = st0.rows.map(_._1).toSet --
+              st.rows.map(_._1).toSet == killedRids
+            val refusals =
+              W.checkpointRt(files, 2L).isEmpty &&
+                W.shallowCloneRt(files, "x").isEmpty &&
+                W.optimizeZOrderRt(files, 2).isEmpty
+            // a descriptor lying about its cardinality closes
+            val lied = new String(files(
+              "_delta_log/00000000000000000002.json"), "UTF-8")
+              .replaceFirst("\"cardinality\": (\\d+)",
+                "\"cardinality\": 999999")
+            val cardClosed = W.replayRowTracking(files +
+              ("_delta_log/00000000000000000002.json" ->
+                lied.getBytes("UTF-8"))).isEmpty
+            (t, st.rows.length.toLong, st.rows.map(_._1).sum,
+              st.rows.map(_._2).sum, st.rows.map(_._3).sum,
+              st.highWaterMark, killedRids.size.toLong,
+              if (dvStable) 1L else 0L,
+              if (diffOk) 1L else 0L,
+              if (refusals) 1L else 0L,
+              if (cardClosed) 1L else 0L)
           }
-          .toDF("table_id", "n_alive", "rid_sum", "key_sum",
+          res.toSeq
+        }.toDF("table_id", "n_alive", "rid_sum", "key_sum",
             "val_sum", "hwm", "n_killed", "dv_stable", "diff_ok",
             "refusals_ok", "card_closed")
       },
@@ -8574,64 +8048,58 @@ object WriterQueries {
     "q410_iceberg_temporal_transform" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val I = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            def tsOf(d: Long): Long = (d - 250L) * 21600000000L
-            def vf(d: Long): Long = (d * 37) % 1009
-            val rows = ids.map(d => (d, tsOf(d), vf(d)))
-            val meta = "v1.metadata.json"
-            val lo = tsOf(ids.min)
-            val hi = lo + 50L * 86400000000L
-            val res = for {
-              dayF <- I.writeTemporalTable(s"day-$t", rows, "day")
-              monF <- I.writeTemporalTable(s"mon-$t", rows, "month")
-              _ <- I.writeTemporalTable(s"x-$t", rows, "weekday")
-                .fold(Option(())) (_ => None) // unknown write refused
-              dtr <- I.parseTemporalSpec(dayF, meta)
-              if dtr == "day"
-              (keptD, rowsD) <- I.temporalRangeScan(dayF, meta,
-                lo, hi)
-              (keptM, rowsM) <- I.temporalRangeScan(monF, meta,
-                lo, hi)
-              dayStart = I.dayTransform(lo).toLong * 86400000000L
-              (onePart, pointRows) <- I.temporalRangeScan(dayF,
-                meta, dayStart, dayStart + 86399999999L)
-            } yield {
-              val brute = rows.filter(r => r._2 >= lo && r._2 <= hi)
-                .sortBy(r => (r._2, r._1))
-              val rangeExact = rowsD == brute
-              val monthExact = rowsM == brute
-              val pointBrute = rows.filter(r =>
-                I.dayTransform(r._2) == I.dayTransform(lo))
-                .sortBy(r => (r._2, r._1))
-              val pointOk = onePart == 1 && pointRows == pointBrute
-              val alien = new String(dayF(meta), "UTF-8")
-                .replace("\"transform\": \"day\"",
-                  "\"transform\": \"weekday\"").getBytes("UTF-8")
-              val unknownRefused = I.temporalRangeScan(
-                dayF + (meta -> alien), meta, lo, hi).isEmpty
-              val nDays =
-                rows.map(r => I.dayTransform(r._2)).distinct.length
-              val nMonths =
-                rows.map(r => I.monthTransform(r._2)).distinct.length
-              val pre = rows.count(_._2 < 0L)
-              (t, ids.length.toLong, nDays.toLong, nMonths.toLong,
-                keptD.toLong, rowsD.length.toLong,
-                rowsD.map(_._3).sum,
-                if (rangeExact) 1L else 0L,
-                if (monthExact) 1L else 0L,
-                if (pointOk) 1L else 0L,
-                pre.toLong,
-                if (unknownRefused) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val I = graft.sources.IcebergWrite
+          def tsOf(d: Long): Long = (d - 250L) * 21600000000L
+          def vf(d: Long): Long = (d * 37) % 1009
+          val rows = ids.map(d => (d, tsOf(d), vf(d)))
+          val meta = "v1.metadata.json"
+          val lo = tsOf(ids.min)
+          val hi = lo + 50L * 86400000000L
+          val res = for {
+            dayF <- I.writeTemporalTable(s"day-$t", rows, "day")
+            monF <- I.writeTemporalTable(s"mon-$t", rows, "month")
+            _ <- I.writeTemporalTable(s"x-$t", rows, "weekday")
+              .fold(Option(())) (_ => None) // unknown write refused
+            dtr <- I.parseTemporalSpec(dayF, meta)
+            if dtr == "day"
+            (keptD, rowsD) <- I.temporalRangeScan(dayF, meta,
+              lo, hi)
+            (keptM, rowsM) <- I.temporalRangeScan(monF, meta,
+              lo, hi)
+            dayStart = I.dayTransform(lo).toLong * 86400000000L
+            (onePart, pointRows) <- I.temporalRangeScan(dayF,
+              meta, dayStart, dayStart + 86399999999L)
+          } yield {
+            val brute = rows.filter(r => r._2 >= lo && r._2 <= hi)
+              .sortBy(r => (r._2, r._1))
+            val rangeExact = rowsD == brute
+            val monthExact = rowsM == brute
+            val pointBrute = rows.filter(r =>
+              I.dayTransform(r._2) == I.dayTransform(lo))
+              .sortBy(r => (r._2, r._1))
+            val pointOk = onePart == 1 && pointRows == pointBrute
+            val alien = new String(dayF(meta), "UTF-8")
+              .replace("\"transform\": \"day\"",
+                "\"transform\": \"weekday\"").getBytes("UTF-8")
+            val unknownRefused = I.temporalRangeScan(
+              dayF + (meta -> alien), meta, lo, hi).isEmpty
+            val nDays =
+              rows.map(r => I.dayTransform(r._2)).distinct.length
+            val nMonths =
+              rows.map(r => I.monthTransform(r._2)).distinct.length
+            val pre = rows.count(_._2 < 0L)
+            (t, ids.length.toLong, nDays.toLong, nMonths.toLong,
+              keptD.toLong, rowsD.length.toLong,
+              rowsD.map(_._3).sum,
+              if (rangeExact) 1L else 0L,
+              if (monthExact) 1L else 0L,
+              if (pointOk) 1L else 0L,
+              pre.toLong,
+              if (unknownRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "n_days", "n_months",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "n_days", "n_months",
             "kept_days", "range_rows", "range_val_sum",
             "range_exact", "month_exact", "point_ok",
             "pre1970_rows", "unknown_refused")
@@ -8699,120 +8167,114 @@ object WriterQueries {
     "q411_hudi_secondary_index" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.HudiWrite
-            val M = graft.sources.HudiMdt
-            val H = graft.sources.HudiLog
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeMorTable(ids)
-            val t5 = "00000000000005"
-            val res = for {
-              mdt <- M.syncSecondaryIndex(files)
-              rli <- M.syncRecordIndex(files)
-              table = files ++ mdt ++ rli
-              sl <- M.secondaryIndexListing(table)
-              idx <- M.recordIndexListing(table)
-              scanStates <- W.replay(files)
-              cf <- W.cluster(files, t5, 2)
-              clustered = files ++ cf.newFiles +
-                (cf.timelineName -> cf.timeline)
-              rebuilt <- M.syncSecondaryIndex(clustered)
-              rli2 <- M.syncRecordIndex(clustered)
-              app <- M.appendSecondaryIndex(mdt ++ rli, clustered,
-                t5, "replacecommit")
-            } yield {
-              val scan = scanStates.flatMap(_.rows)
-              val inverted = scan.groupBy(_._2)
-                .map { case (v, rs) => v -> rs.map(_._1).toSet }
-              val listingExact = sl == inverted
-              var fidsReadSum = 0L
-              var lookupExact = true
-              scan.map(_._2).distinct.foreach { target =>
-                M.secondaryLookup(table, target) match {
-                  case Some((fids, rows)) =>
-                    fidsReadSum += fids.length.toLong
-                    if (rows != scan.filter(_._2 == target)
-                      .sortBy(_._1)) lookupExact = false
-                    val trueFids = scan.filter(_._2 == target)
-                      .map(_._1).flatMap(idx.get).map(_._2)
-                      .distinct.sorted
-                    if (fids != trueFids) lookupExact = false
-                  case None => lookupExact = false
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.HudiWrite
+          val M = graft.sources.HudiMdt
+          val H = graft.sources.HudiLog
+          val files = W.writeMorTable(ids)
+          val t5 = "00000000000005"
+          val res = for {
+            mdt <- M.syncSecondaryIndex(files)
+            rli <- M.syncRecordIndex(files)
+            table = files ++ mdt ++ rli
+            sl <- M.secondaryIndexListing(table)
+            idx <- M.recordIndexListing(table)
+            scanStates <- W.replay(files)
+            cf <- W.cluster(files, t5, 2)
+            clustered = files ++ cf.newFiles +
+              (cf.timelineName -> cf.timeline)
+            rebuilt <- M.syncSecondaryIndex(clustered)
+            rli2 <- M.syncRecordIndex(clustered)
+            app <- M.appendSecondaryIndex(mdt ++ rli, clustered,
+              t5, "replacecommit")
+          } yield {
+            val scan = scanStates.flatMap(_.rows)
+            val inverted = scan.groupBy(_._2)
+              .map { case (v, rs) => v -> rs.map(_._1).toSet }
+            val listingExact = sl == inverted
+            var fidsReadSum = 0L
+            var lookupExact = true
+            scan.map(_._2).distinct.foreach { target =>
+              M.secondaryLookup(table, target) match {
+                case Some((fids, rows)) =>
+                  fidsReadSum += fids.length.toLong
+                  if (rows != scan.filter(_._2 == target)
+                    .sortBy(_._1)) lookupExact = false
+                  val trueFids = scan.filter(_._2 == target)
+                    .map(_._1).flatMap(idx.get).map(_._2)
+                    .distinct.sorted
+                  if (fids != trueFids) lookupExact = false
+                case None => lookupExact = false
+              }
+            }
+            if (M.secondaryLookup(table, 999983L) !=
+              Some((Seq.empty[String],
+                Seq.empty[(Long, Long)]))) lookupExact = false
+            val clusterZero = java.util.Arrays.equals(
+              rebuilt(M.SecondaryIndexLogPath),
+              mdt(M.SecondaryIndexLogPath)) &&
+              java.util.Arrays.equals(
+                app(M.SecondaryIndexLogPath),
+                mdt(M.SecondaryIndexLogPath))
+            val table2 = clustered ++ rebuilt ++ rli2
+            val scan2 = W.replay(clustered).get.flatMap(_.rows)
+            val postClusterOk = scan2.map(_._2).distinct
+              .forall { target =>
+                M.secondaryLookup(table2, target).exists {
+                  case (fids2, rows2) =>
+                    rows2 == scan2.filter(_._2 == target)
+                      .sortBy(_._1) &&
+                      fids2.forall(_.startsWith("cl"))
                 }
               }
-              if (M.secondaryLookup(table, 999983L) !=
-                Some((Seq.empty[String],
-                  Seq.empty[(Long, Long)]))) lookupExact = false
-              val clusterZero = java.util.Arrays.equals(
-                rebuilt(M.SecondaryIndexLogPath),
-                mdt(M.SecondaryIndexLogPath)) &&
-                java.util.Arrays.equals(
-                  app(M.SecondaryIndexLogPath),
-                  mdt(M.SecondaryIndexLogPath))
-              val table2 = clustered ++ rebuilt ++ rli2
-              val scan2 = W.replay(clustered).get.flatMap(_.rows)
-              val postClusterOk = scan2.map(_._2).distinct
-                .forall { target =>
-                  M.secondaryLookup(table2, target).exists {
-                    case (fids2, rows2) =>
-                      rows2 == scan2.filter(_._2 == target)
-                        .sortBy(_._1) &&
-                        fids2.forall(_.startsWith("cl"))
-                  }
-                }
-              // append == rebuild on a real update instant
-              val t6 = "00000000000006"
-              // any LIVE fg0 key works — d%3==0 keys were updated
-              // at t2, so their tombstone names val+7 (blob residue
-              // classes 0 and 3 hold ONLY d%3==0 keys)
-              val k6 = ids.find(d => (d / 6) % 2 == 0 &&
-                d % 5 != 0).get
-              val lname6 = s"p/.fg0_$t6.log.1_0-0-0"
-              val log6 = H.writeBlock(H.TypeAvroData,
-                Seq(H.HdrInstantTime -> t6,
-                  H.HdrSchema -> W.LogRecSchema),
-                H.dataContent(Seq(W.avroRec(k6, 777L))))
-              val files6 = files +
-                (s".hoodie/$t6.deltacommit" -> W.commitJson(
-                  Seq(("fg0", lname6, 1L))).getBytes("UTF-8")) +
-                (lname6 -> log6)
-              val appendRebuild = (for {
-                a6 <- M.appendSecondaryIndex(mdt, files6, t6,
-                  "deltacommit")
-                r6 <- M.syncSecondaryIndex(files6)
-                s6 <- M.secondaryIndexListing(files6 ++ a6)
-              } yield java.util.Arrays.equals(
-                a6(M.SecondaryIndexLogPath),
-                r6(M.SecondaryIndexLogPath)) &&
-                s6.getOrElse(777L, Set.empty).contains(k6))
-                .getOrElse(false)
-              // a delete of a never-written key refuses the sync
-              val t7 = "00000000000007"
-              val lname7 = s"p/.fg0_$t7.log.1_0-0-0"
-              val log7 = H.writeBlock(H.TypeDelete,
-                Seq(H.HdrInstantTime -> t7),
-                H.deleteContent(Seq("999999")))
-              val files7 = files +
-                (s".hoodie/$t7.deltacommit" -> W.commitJson(
-                  Seq(("fg0", lname7, 1L))).getBytes("UTF-8")) +
-                (lname7 -> log7)
-              val unknownRefused =
-                M.syncSecondaryIndex(files7).isEmpty
-              (t, scan.length.toLong, scan.map(_._2).sum,
-                scan.map(_._2).distinct.length.toLong, fidsReadSum,
-                if (listingExact && lookupExact) 1L else 0L,
-                if (clusterZero) 1L else 0L,
-                if (postClusterOk) 1L else 0L,
-                if (appendRebuild) 1L else 0L,
-                if (unknownRefused) 1L else 0L)
-            }
-            res.toSeq
+            // append == rebuild on a real update instant
+            val t6 = "00000000000006"
+            // any LIVE fg0 key works — d%3==0 keys were updated
+            // at t2, so their tombstone names val+7 (blob residue
+            // classes 0 and 3 hold ONLY d%3==0 keys)
+            val k6 = ids.find(d => (d / 6) % 2 == 0 &&
+              d % 5 != 0).get
+            val lname6 = s"p/.fg0_$t6.log.1_0-0-0"
+            val log6 = H.writeBlock(H.TypeAvroData,
+              Seq(H.HdrInstantTime -> t6,
+                H.HdrSchema -> W.LogRecSchema),
+              H.dataContent(Seq(W.avroRec(k6, 777L))))
+            val files6 = files +
+              (s".hoodie/$t6.deltacommit" -> W.commitJson(
+                Seq(("fg0", lname6, 1L))).getBytes("UTF-8")) +
+              (lname6 -> log6)
+            val appendRebuild = (for {
+              a6 <- M.appendSecondaryIndex(mdt, files6, t6,
+                "deltacommit")
+              r6 <- M.syncSecondaryIndex(files6)
+              s6 <- M.secondaryIndexListing(files6 ++ a6)
+            } yield java.util.Arrays.equals(
+              a6(M.SecondaryIndexLogPath),
+              r6(M.SecondaryIndexLogPath)) &&
+              s6.getOrElse(777L, Set.empty).contains(k6))
+              .getOrElse(false)
+            // a delete of a never-written key refuses the sync
+            val t7 = "00000000000007"
+            val lname7 = s"p/.fg0_$t7.log.1_0-0-0"
+            val log7 = H.writeBlock(H.TypeDelete,
+              Seq(H.HdrInstantTime -> t7),
+              H.deleteContent(Seq("999999")))
+            val files7 = files +
+              (s".hoodie/$t7.deltacommit" -> W.commitJson(
+                Seq(("fg0", lname7, 1L))).getBytes("UTF-8")) +
+              (lname7 -> log7)
+            val unknownRefused =
+              M.syncSecondaryIndex(files7).isEmpty
+            (t, scan.length.toLong, scan.map(_._2).sum,
+              scan.map(_._2).distinct.length.toLong, fidsReadSum,
+              if (listingExact && lookupExact) 1L else 0L,
+              if (clusterZero) 1L else 0L,
+              if (postClusterOk) 1L else 0L,
+              if (appendRebuild) 1L else 0L,
+              if (unknownRefused) 1L else 0L)
           }
-          .toDF("table_id", "n_rows", "val_sum", "n_vals",
+          res.toSeq
+        }.toDF("table_id", "n_rows", "val_sum", "n_vals",
             "fids_read_sum", "lookup_exact", "cluster_zero",
             "post_cluster_ok", "append_rebuild", "unknown_refused")
       },
@@ -8863,98 +8325,92 @@ object WriterQueries {
     "q412_delta_liquid_clustering" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val W = graft.sources.DeltaWrite
-            val P = graft.sources.Parquet
-            val ids = it.map(_._2).toSeq.sorted
-            val files = W.writeClusteredTable(s"lc-$t", ids)
-            val (bLo, bHi) = (64L, 95L)
-            def decode(table: Map[String, Array[Byte]], p: String) =
-              for {
-                b <- table.get(p)
-                rs <- P.columnLongs(b, "rec_id")
-                xs <- P.columnLongs(b, "x")
-                ys <- P.columnLongs(b, "y")
-                vs <- P.columnLongs(b, "val")
-              } yield rs.indices.map(i =>
-                (rs(i), xs(i), ys(i), vs(i)))
-            def boxScan(table: Map[String, Array[Byte]],
-                        live: Seq[String]) = {
-              val per = live.map(decode(table, _))
-              if (per.exists(_.isEmpty)) None
-              else {
-                val byFile = live.zip(per.map(_.get))
-                val hits = byFile.filter { case (_, rows) =>
-                  rows.nonEmpty &&
-                    rows.map(_._2).min <= bHi &&
-                    rows.map(_._2).max >= bLo &&
-                    rows.map(_._3).min <= bHi &&
-                    rows.map(_._3).max >= bLo
-                }
-                val hitRows = hits.flatMap(_._2).filter(r =>
-                  r._2 >= bLo && r._2 <= bHi &&
-                    r._3 >= bLo && r._3 <= bHi)
-                val allRows = byFile.flatMap(_._2).filter(r =>
-                  r._2 >= bLo && r._2 <= bHi &&
-                    r._3 >= bLo && r._3 <= bHi)
-                Some((hits.length, hitRows.sortBy(_._1),
-                  allRows.sortBy(_._1), byFile.flatMap(_._2)))
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val W = graft.sources.DeltaWrite
+          val P = graft.sources.Parquet
+          val files = W.writeClusteredTable(s"lc-$t", ids)
+          val (bLo, bHi) = (64L, 95L)
+          def decode(table: Map[String, Array[Byte]], p: String) =
+            for {
+              b <- table.get(p)
+              rs <- P.columnLongs(b, "rec_id")
+              xs <- P.columnLongs(b, "x")
+              ys <- P.columnLongs(b, "y")
+              vs <- P.columnLongs(b, "val")
+            } yield rs.indices.map(i =>
+              (rs(i), xs(i), ys(i), vs(i)))
+          def boxScan(table: Map[String, Array[Byte]],
+                      live: Seq[String]) = {
+            val per = live.map(decode(table, _))
+            if (per.exists(_.isEmpty)) None
+            else {
+              val byFile = live.zip(per.map(_.get))
+              val hits = byFile.filter { case (_, rows) =>
+                rows.nonEmpty &&
+                  rows.map(_._2).min <= bHi &&
+                  rows.map(_._2).max >= bLo &&
+                  rows.map(_._3).min <= bHi &&
+                  rows.map(_._3).max >= bLo
               }
+              val hitRows = hits.flatMap(_._2).filter(r =>
+                r._2 >= bLo && r._2 <= bHi &&
+                  r._3 >= bLo && r._3 <= bHi)
+              val allRows = byFile.flatMap(_._2).filter(r =>
+                r._2 >= bLo && r._2 <= bHi &&
+                  r._3 >= bLo && r._3 <= bHi)
+              Some((hits.length, hitRows.sortBy(_._1),
+                allRows.sortBy(_._1), byFile.flatMap(_._2)))
             }
-            val res = for {
-              cols <- W.parseClusteringColumns(files)
-              if cols == Seq("x", "y")
-              st0 <- W.replayRowTracking(files)
-              z <- W.optimizeCluster(files, 3)
-              table = files + (z.commitName -> z.commit) ++
-                z.newFiles
-              st1 <- W.replayRowTracking(table)
-              liveB <- W.replayLive(files).map(_._1)
-              liveA <- W.replayLive(table).map(_._1)
-              linear <- boxScan(files, liveB)
-              clus <- boxScan(table, liveA)
-            } yield {
-              val (hitsL, hitRowsL, allRowsL, fullL) = linear
-              val (hitsC, hitRowsC, allRowsC, fullC) = clus
-              val prunes = hitsC < hitsL
-              val noWrongSkip = hitRowsL == allRowsL &&
-                hitRowsC == allRowsC && allRowsL == allRowsC
-              val rowsPreserved =
-                fullL.sortBy(_._1) == fullC.sortBy(_._1) &&
-                  z.rows == fullL.length.toLong
-              val idsStable = st1.rows.toSet == st0.rows.toSet &&
-                st1.highWaterMark == st0.highWaterMark +
-                  st0.rows.length.toLong
-              val dcOk = !new String(z.commit, "UTF-8")
-                .contains("\"dataChange\": true")
-              val gateOk = W.writerGate(files,
-                Set("rowTracking", "domainMetadata")).isEmpty &&
-                W.writerGate(files, Set("rowTracking",
-                  "domainMetadata", "clusteredTable")).isDefined
-              val domainless = files +
-                ("_delta_log/00000000000000000000.json" ->
-                  new String(files(
-                    "_delta_log/00000000000000000000.json"),
-                    "UTF-8").split("\n")
-                    .filterNot(_.contains("delta.clustering"))
-                    .mkString("", "\n", "\n").getBytes("UTF-8"))
-              val domainRefused =
-                W.optimizeCluster(domainless, 3).isEmpty
-              (t, fullL.length.toLong, fullL.map(_._4).sum,
-                allRowsL.length.toLong, allRowsL.map(_._4).sum,
-                st1.highWaterMark,
-                if (prunes) 1L else 0L,
-                if (noWrongSkip) 1L else 0L,
-                if (rowsPreserved && idsStable) 1L else 0L,
-                if (dcOk && gateOk && domainRefused) 1L else 0L)
-            }
-            res.toSeq
           }
-          .toDF("table_id", "n_rows", "val_sum", "n_box_rows",
+          val res = for {
+            cols <- W.parseClusteringColumns(files)
+            if cols == Seq("x", "y")
+            st0 <- W.replayRowTracking(files)
+            z <- W.optimizeCluster(files, 3)
+            table = files + (z.commitName -> z.commit) ++
+              z.newFiles
+            st1 <- W.replayRowTracking(table)
+            liveB <- W.replayLive(files).map(_._1)
+            liveA <- W.replayLive(table).map(_._1)
+            linear <- boxScan(files, liveB)
+            clus <- boxScan(table, liveA)
+          } yield {
+            val (hitsL, hitRowsL, allRowsL, fullL) = linear
+            val (hitsC, hitRowsC, allRowsC, fullC) = clus
+            val prunes = hitsC < hitsL
+            val noWrongSkip = hitRowsL == allRowsL &&
+              hitRowsC == allRowsC && allRowsL == allRowsC
+            val rowsPreserved =
+              fullL.sortBy(_._1) == fullC.sortBy(_._1) &&
+                z.rows == fullL.length.toLong
+            val idsStable = st1.rows.toSet == st0.rows.toSet &&
+              st1.highWaterMark == st0.highWaterMark +
+                st0.rows.length.toLong
+            val dcOk = !new String(z.commit, "UTF-8")
+              .contains("\"dataChange\": true")
+            val gateOk = W.writerGate(files,
+              Set("rowTracking", "domainMetadata")).isEmpty &&
+              W.writerGate(files, Set("rowTracking",
+                "domainMetadata", "clusteredTable")).isDefined
+            val domainless = files +
+              ("_delta_log/00000000000000000000.json" ->
+                new String(files(
+                  "_delta_log/00000000000000000000.json"),
+                  "UTF-8").split("\n")
+                  .filterNot(_.contains("delta.clustering"))
+                  .mkString("", "\n", "\n").getBytes("UTF-8"))
+            val domainRefused =
+              W.optimizeCluster(domainless, 3).isEmpty
+            (t, fullL.length.toLong, fullL.map(_._4).sum,
+              allRowsL.length.toLong, allRowsL.map(_._4).sum,
+              st1.highWaterMark,
+              if (prunes) 1L else 0L,
+              if (noWrongSkip) 1L else 0L,
+              if (rowsPreserved && idsStable) 1L else 0L,
+              if (dcOk && gateOk && domainRefused) 1L else 0L)
+          }
+          res.toSeq
+        }.toDF("table_id", "n_rows", "val_sum", "n_box_rows",
             "box_val_sum", "hwm", "cluster_prunes",
             "no_wrong_skip", "rows_ids_stable", "protocol_ok")
       },
@@ -9004,51 +8460,39 @@ object WriterQueries {
     "q413_lz4_frame" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("blob_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (blobId, it) =>
-            val F = graft.sources.Lz4Frame
-            def h60(x: String): Long = {
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(x.getBytes("UTF-8"))
-                .map("%02x".format(_)).mkString
-              java.lang.Long.parseLong(hex.take(15), 16)
-            }
-            val ids = it.map(_._2).toSeq.sorted
-            val p1 = ids.map(d => "doc-" + d + "|" + (d % 23) + "\n")
-              .mkString
-            val p2 = ids.mkString(",")
-            val tar = graft.sources.Tar.write(Seq(
-              ("docs.txt", p1.getBytes("UTF-8"), 1234567L),
-              ("ids.csv", p2.getBytes("UTF-8"), 1234567L)))
-            val lz = F.write(tar, blockChecksum = true)
-            val back = F.decompress(lz)
-            val rtExact = back.exists(java.util.Arrays.equals(_, tar))
-            val sizeLaw = lz.length < tar.length
-            def flip(b: Array[Byte], i: Int): Array[Byte] = {
-              val c = b.clone(); c(i) = (c(i) ^ 0x01).toByte; c
-            }
-            val failClosed = F.decompress(flip(lz, 0)).isEmpty &&
-              F.decompress(flip(lz, 14)).isEmpty && // HC
-              F.decompress(flip(lz, lz.length - 1)).isEmpty &&
-              F.decompress(lz.dropRight(1)).isEmpty
-            val skip = Array[Byte](0x50, 0x2a.toByte, 0x4d, 0x18,
-              2, 0, 0, 0, 7, 7)
-            val wildOk = F.decompress(skip ++ lz).exists(
-              java.util.Arrays.equals(_, tar)) &&
-              F.decompress(lz ++ lz).exists(
-                java.util.Arrays.equals(_, tar ++ tar))
-            if (!(rtExact && sizeLaw && failClosed && wildOk)) Nil
-            else graft.sources.Tar.parse(blobId, tar).map { e =>
-              val payload = new String(tar, e.data_offset.toInt,
-                e.size.toInt, "UTF-8")
-              (blobId, e.entry_name, e.size, h60(payload),
-                tar.length.toLong, 1L, 1L, 1L)
-            }
+        Blobs.byBlob(s, dir, 6) { (blobId, ids) =>
+          val F = graft.sources.Lz4Frame
+          val p1 = ids.map(d => "doc-" + d + "|" + (d % 23) + "\n")
+            .mkString
+          val p2 = ids.mkString(",")
+          val tar = graft.sources.Tar.write(Seq(
+            ("docs.txt", p1.getBytes("UTF-8"), 1234567L),
+            ("ids.csv", p2.getBytes("UTF-8"), 1234567L)))
+          val lz = F.write(tar, blockChecksum = true)
+          val back = F.decompress(lz)
+          val rtExact = back.exists(java.util.Arrays.equals(_, tar))
+          val sizeLaw = lz.length < tar.length
+          def flip(b: Array[Byte], i: Int): Array[Byte] = {
+            val c = b.clone(); c(i) = (c(i) ^ 0x01).toByte; c
           }
-          .toDF("blob_id", "entry_name", "size", "data_hash",
+          val failClosed = F.decompress(flip(lz, 0)).isEmpty &&
+            F.decompress(flip(lz, 14)).isEmpty && // HC
+            F.decompress(flip(lz, lz.length - 1)).isEmpty &&
+            F.decompress(lz.dropRight(1)).isEmpty
+          val skip = Array[Byte](0x50, 0x2a.toByte, 0x4d, 0x18,
+            2, 0, 0, 0, 7, 7)
+          val wildOk = F.decompress(skip ++ lz).exists(
+            java.util.Arrays.equals(_, tar)) &&
+            F.decompress(lz ++ lz).exists(
+              java.util.Arrays.equals(_, tar ++ tar))
+          if (!(rtExact && sizeLaw && failClosed && wildOk)) Nil
+          else graft.sources.Tar.parse(blobId, tar).map { e =>
+            val payload = new String(tar, e.data_offset.toInt,
+              e.size.toInt, "UTF-8")
+            (blobId, e.entry_name, e.size, hash60Bytes(payload.getBytes("UTF-8")),
+              tar.length.toLong, 1L, 1L, 1L)
+          }
+        }.toDF("blob_id", "entry_name", "size", "data_hash",
             "tar_len", "lz_smaller", "rt_exact", "wild_ok")
       },
       oracle = Some(s"""
@@ -9256,71 +8700,65 @@ object WriterQueries {
     "q415_hudi_to_iceberg_migrate" -> QueryDef(
       build = (s, dir) => {
         import s.implicits._
-        Engine.table(s, dir, "documents")
-          .select((col("doc_id") % 6).as("table_id"), col("doc_id"))
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroups { (t, it) =>
-            val H = graft.sources.HudiWrite
-            val I = graft.sources.IcebergWrite
-            val ids = it.map(_._2).toSeq.sorted
-            val t5 = "00000000000005"
-            val cow = H.writeTable(ids)
-            val mor = H.writeMorTable(ids)
-            val res = for {
-              // COW migrates directly
-              iceCow <- I.migrateFromHudi(cow, s"ice-cow-$t")
-              cowScan <- I.scanSnapshot(cow ++ iceCow,
-                "v1.metadata.json", 1L)
-              cowReplay <- H.replay(cow).map(_.flatMap(_.rows))
-              // raw MOR refuses; compacted MOR migrates
-              if I.migrateFromHudi(mor, s"ice-mor-$t").isEmpty
-              cDelta <- H.compact(mor, t5)
-              compacted = mor ++ cDelta
-              iceMor <- I.migrateFromHudi(compacted, s"ice-mor-$t")
-              morScan <- I.scanSnapshot(compacted ++ iceMor,
-                "v1.metadata.json", 1L)
-              morReplay <- H.replay(compacted).map(_.flatMap(_.rows))
-              iceMor2 <- I.migrateFromHudi(compacted, s"ice-mor-$t")
-            } yield {
-              val scanEqual = cowScan.sorted == cowReplay.sorted &&
-                morScan.sorted == morReplay.sorted
-              val remigrateIdentical =
-                iceMor.keySet == iceMor2.keySet &&
-                  iceMor.keys.forall(k => java.util.Arrays.equals(
-                    iceMor(k), iceMor2(k)))
-              // tampered sources refuse
-              val tamperRefused =
-                I.migrateFromHudi(compacted -
-                  s"p/fg0_0-0-0_$t5.parquet", s"x-$t").isEmpty &&
-                I.migrateFromHudi(compacted -
-                  s".hoodie/$t5.commit", s"x-$t").isEmpty &&
-                I.migrateFromHudi(compacted +
-                  (".hoodie/00000000000007.replacecommit" ->
-                    "{not json".getBytes("UTF-8")), s"x-$t").isEmpty
-              // the migration is a SNAPSHOT: Hudi evolving after it
-              // must not leak into the frozen Iceberg view
-              val t6 = "00000000000006"
-              val evolved = compacted +
-                (s".hoodie/$t6.commit" -> H.commitJson(Seq(
-                  ("fg0", s"p/fg0_0-0-0_$t6.parquet", 1L)))
-                  .getBytes("UTF-8")) +
-                (s"p/fg0_0-0-0_$t6.parquet" ->
-                  graft.sources.ParquetWrite.writeInt64(
-                    Seq("rec_id", "val"), Seq(Array(999999L, 1L))))
-              val isolated = I.scanSnapshot(evolved ++ iceMor,
-                "v1.metadata.json", 1L).exists(
-                _.sorted == morScan.sorted)
-              (t, cowScan.length.toLong, cowScan.map(_._2).sum,
-                morScan.length.toLong, morScan.map(_._2).sum,
-                if (scanEqual) 1L else 0L,
-                if (remigrateIdentical) 1L else 0L,
-                if (tamperRefused) 1L else 0L,
-                if (isolated) 1L else 0L)
-            }
-            res.toSeq
+        Blobs.byBlob(s, dir, 6) { (t, ids) =>
+          val H = graft.sources.HudiWrite
+          val I = graft.sources.IcebergWrite
+          val t5 = "00000000000005"
+          val cow = H.writeTable(ids)
+          val mor = H.writeMorTable(ids)
+          val res = for {
+            // COW migrates directly
+            iceCow <- I.migrateFromHudi(cow, s"ice-cow-$t")
+            cowScan <- I.scanSnapshot(cow ++ iceCow,
+              "v1.metadata.json", 1L)
+            cowReplay <- H.replay(cow).map(_.flatMap(_.rows))
+            // raw MOR refuses; compacted MOR migrates
+            if I.migrateFromHudi(mor, s"ice-mor-$t").isEmpty
+            cDelta <- H.compact(mor, t5)
+            compacted = mor ++ cDelta
+            iceMor <- I.migrateFromHudi(compacted, s"ice-mor-$t")
+            morScan <- I.scanSnapshot(compacted ++ iceMor,
+              "v1.metadata.json", 1L)
+            morReplay <- H.replay(compacted).map(_.flatMap(_.rows))
+            iceMor2 <- I.migrateFromHudi(compacted, s"ice-mor-$t")
+          } yield {
+            val scanEqual = cowScan.sorted == cowReplay.sorted &&
+              morScan.sorted == morReplay.sorted
+            val remigrateIdentical =
+              iceMor.keySet == iceMor2.keySet &&
+                iceMor.keys.forall(k => java.util.Arrays.equals(
+                  iceMor(k), iceMor2(k)))
+            // tampered sources refuse
+            val tamperRefused =
+              I.migrateFromHudi(compacted -
+                s"p/fg0_0-0-0_$t5.parquet", s"x-$t").isEmpty &&
+              I.migrateFromHudi(compacted -
+                s".hoodie/$t5.commit", s"x-$t").isEmpty &&
+              I.migrateFromHudi(compacted +
+                (".hoodie/00000000000007.replacecommit" ->
+                  "{not json".getBytes("UTF-8")), s"x-$t").isEmpty
+            // the migration is a SNAPSHOT: Hudi evolving after it
+            // must not leak into the frozen Iceberg view
+            val t6 = "00000000000006"
+            val evolved = compacted +
+              (s".hoodie/$t6.commit" -> H.commitJson(Seq(
+                ("fg0", s"p/fg0_0-0-0_$t6.parquet", 1L)))
+                .getBytes("UTF-8")) +
+              (s"p/fg0_0-0-0_$t6.parquet" ->
+                graft.sources.ParquetWrite.writeInt64(
+                  Seq("rec_id", "val"), Seq(Array(999999L, 1L))))
+            val isolated = I.scanSnapshot(evolved ++ iceMor,
+              "v1.metadata.json", 1L).exists(
+              _.sorted == morScan.sorted)
+            (t, cowScan.length.toLong, cowScan.map(_._2).sum,
+              morScan.length.toLong, morScan.map(_._2).sum,
+              if (scanEqual) 1L else 0L,
+              if (remigrateIdentical) 1L else 0L,
+              if (tamperRefused) 1L else 0L,
+              if (isolated) 1L else 0L)
           }
-          .toDF("table_id", "cow_rows", "cow_val_sum", "mor_rows",
+          res.toSeq
+        }.toDF("table_id", "cow_rows", "cow_val_sum", "mor_rows",
             "mor_val_sum", "scan_equal", "remigrate_identical",
             "tamper_refused", "snapshot_isolated")
       },

@@ -25,10 +25,7 @@ package graft.tools
   * Usage: sbt "runMain graft.tools.MakeZstdFixture"
   */
 object MakeZstdFixture {
-
-  def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  import graft.expressions.Md5Hashes.md5Hex
 
   /** h1 = md5(seed), h_{i+1} = md5(h_i) — all over HEX STRINGS, so
     * DuckDB's VARCHAR-only md5 can replay the chain.

@@ -13,10 +13,10 @@ import scala.sys.process._
 /** Golden ingestion over the committed workbooks in `fixtures/ingestion/`
   * (FIXTURES.md §8), diffed against scripts/ingestion_oracle.py table by
   * table, surrogate ids included: the batch plan, the one-file-per-commit
-  * stream, re-drop idempotency, the commit protocol (a commit leaves the
-  * files it does not change in place, compacts a fragmented table, and
-  * fails whole when a publish step fails) and the Spark job budget of one
-  * commit.
+  * stream, re-drop idempotency, the commit protocol (a commit appends one
+  * file to each table that gains rows, leaves the files it does not change
+  * in place, compacts a fragmented table, and fails whole when a publish
+  * step fails) and the Spark job budget of one commit.
   */
 class IngestionGoldenSpec extends SparkSpec {
 
@@ -126,6 +126,16 @@ class IngestionGoldenSpec extends SparkSpec {
         assert(moved.isEmpty, s"$t: the commit rewrote ${moved.keys.mkString(", ")}")
       }
       assert(after("payment_type") == before("payment_type"))
+    }
+  }
+
+  test("a one-file commit appends exactly one file to each table that gains rows") {
+    streamed
+    val appendable = tableNames.filterNot(t => t == "price" || t == "payment_type")
+    streamedListings.zip(streamedListings.tail).foreach { case (before, after) =>
+      val added = appendable.map(t => t -> (after(t).keySet -- before(t).keySet).size).toMap
+      assert(added("purchase") == 1 && added("operation") == 1, s"files appended: $added")
+      assert(added.values.forall(_ <= 1), s"files appended: $added")
     }
   }
 
