@@ -119,6 +119,14 @@ object Engine {
     * than the compute it unblocks. Use ONLY ahead of expression-heavy
     * stages — for scan→filter→agg plans the extra exchange is a loss
     * (measured: q01 0.16 s → 0.48 s).
+    *
+    * What it spreads is only the work Catalyst leaves above the
+    * round-robin exchange: projections, generators, joins and aggregates
+    * written after it. A deterministic `where` written after it is
+    * pushed below the exchange (predicate pushdown through a
+    * repartition) and still runs in the scan stage, one task per row
+    * group: q102's logit gate behind `fanOut` plans as scan → Filter →
+    * Exchange, so fanning out gains that predicate nothing.
     */
   def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -9,11 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per table, a minimal commit protocol standing in for a transactional
   * table format (Delta/Iceberg `MERGE`).
   *
-  * A save stages, then publishes. Staging writes every table the save
-  * changes to a hidden `.staging_<table>` directory while the plans still
-  * read the live ones, which is what lets one micro-batch read the
-  * warehouse it is about to change (streaming ingest,
-  * [[graft.streaming.IngestStream]]). Publishing then, table by table:
+  * A save stages concurrently, then publishes. Staging writes every table
+  * the save changes to a hidden `.staging_<table>` directory while the
+  * plans still read the live ones, which is what lets one micro-batch read
+  * the warehouse it is about to change (streaming ingest,
+  * [[graft.streaming.IngestStream]]). Each table's write reads only the
+  * batch's pinned rows or its own live table and writes only its own
+  * staging directory, so all of them run at once, one driver thread each;
+  * the save waits for every one to return and publishes only when all
+  * staged, else it throws the first failure with every live table as it
+  * was. Publishing then runs table by table:
   *  - appends: moves the staged part files into the live directory (part
   *    file names are unique per write, so they never collide); an append
   *    is written as one file per scan split of its rows, one file for any
@@ -82,8 +87,9 @@ object WarehouseStore {
         })
       }
     }
-    // stage everything first (plans still read the live tables) …
-    steps.foreach(s => s.rows.write.mode("overwrite").parquet(new Path(root, Staging + s.table).toString))
+    // stage every table first, all at once (plans still read the live tables) …
+    inWave(steps.map(s => () =>
+      s.rows.write.mode("overwrite").parquet(new Path(root, Staging + s.table).toString)))
     // … then publish
     steps.foreach { s =>
       val live = new Path(root, s.table)
@@ -113,6 +119,30 @@ object WarehouseStore {
 
   private val Staging = ".staging_"
   private val Previous = ".previous_"
+
+  /** Run `writes` at once, each on a driver thread of its own started
+    * from the calling one, so its jobs carry the caller's Spark local
+    * properties (a streaming batch's query id, job group and SQL
+    * execution root). Returns once every write has returned, even when
+    * the caller is interrupted meanwhile; then throws the failure of the
+    * first write that failed, in `writes` order, as it was thrown.
+    */
+  private def inWave(writes: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (write, i) =>
+      val t = new Thread(() => try write() catch { case e: Throwable => failures(i) = e },
+        s"warehouse-stage-$i")
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    failures.find(_ != null).foreach(throw _)
+    if (interrupted) throw new InterruptedException("warehouse commit: interrupted while staging")
+  }
 
   private def check(ok: Boolean, what: String): Unit =
     if (!ok) throw new IOException(s"warehouse commit: could not $what")

@@ -148,9 +148,10 @@ object CurationQueries {
     // an independent formulation of the same deterministic filter.
     "q146_bloom_decontaminate" -> QueryDef(
       build = (s, dir) => {
-        // NO fanOut (A/B'd r18: +20% over run noise WITH it — the probe
-        // side's gram work is post-shuffle already, so the fan exchange
-        // only taxes the two scan branches)
+        // NO fanOut (A/B'd r18: +20% over run noise WITH it). The probe
+        // side's gram work (shingles, bloom probe, partial count) is not
+        // post-shuffle: it runs in the scan stage, before the doc_id
+        // shuffle, one task per row group of `documents`
         val d = Engine.table(s, dir, "documents")
         val isEval = substring(md5(col("text")), 1, 1).isin(evalHexes: _*)
         Curation.bloomDecontaminate(

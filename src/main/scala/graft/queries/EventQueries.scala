@@ -479,8 +479,8 @@ object EventQueries {
           .select(col("event_id"), col("user_id"), col("tstamp"))
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("tstamp"), col("value"))
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q208_ssjoin").toString
+        val root = org.apache.spark.graft.TempDirs
+          .create("graft_q208_ssjoin").toString
         def land(df: org.apache.spark.sql.DataFrame, sub: String): String = {
           val dropDir = java.nio.file.Paths.get(root, sub)
           java.nio.file.Files.createDirectories(dropDir)

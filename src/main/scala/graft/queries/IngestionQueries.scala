@@ -197,8 +197,8 @@ object IngestionQueries {
             x => x.getField("rec"))).as("s"))
           .select(col("blob_id"), encode(col("s"), "UTF-8").as("content"))
           .as[graft.sources.Warc.WarcBlob]
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q201_warc").toString
+        val root = org.apache.spark.graft.TempDirs
+          .create("graft_q201_warc").toString
         val drop = java.nio.file.Paths.get(root, "drop")
         java.nio.file.Files.createDirectories(drop)
         // land the blobs as files — bounded collect: exactly 8 blobs by
@@ -7472,8 +7472,8 @@ object IngestionQueries {
         import s.implicits._
         val d0 = Engine.table(s, dir, "documents")
           .select(col("doc_id").as("rec_id"))
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_q269_bloom").toString
+        val tmp = org.apache.spark.graft.TempDirs
+          .create("graft_q269_bloom").toString
         d0.coalesce(1).sortWithinPartitions("rec_id")
           .write.option("compression", "snappy")
           .option("parquet.enable.dictionary", "false")

@@ -27,7 +27,8 @@ object OracleSql {
 }
 
 /** Shared fixture plumbing for the oracle-backed streaming lifecycle
-  * queries (q203–q215): a temp root with a `drop/` directory, and
+  * queries (q203–q215): a temp root with a `drop/` directory (deleted at
+  * JVM exit, [[org.apache.spark.graft.TempDirs]]), and
   * [[land]] — write a frame as ONE parquet file into the drop dir with
   * an explicit mtime, so `maxFilesPerTrigger=1` file streams process
   * the deliveries as separate micro-batches in a deterministic order.
@@ -38,7 +39,7 @@ object OracleSql {
   */
 private[queries] final class StreamDeliveries(prefix: String) {
   val root: String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    org.apache.spark.graft.TempDirs.create(prefix).toString
   private val drop = java.nio.file.Paths.get(root, "drop")
   java.nio.file.Files.createDirectories(drop)
 

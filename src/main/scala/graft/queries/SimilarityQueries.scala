@@ -1149,8 +1149,8 @@ object SimilarityQueries {
         val centroids = e.filter(col("vec_id") % 101 === 0)
           .select(col("vec_id").as("centroid_id"),
             Similarity.asDouble(col("embedding")).as("cv"))
-        val statePath = java.nio.file.Files
-          .createTempDirectory("graft_q198_epoch").toString
+        val statePath = org.apache.spark.graft.TempDirs
+          .create("graft_q198_epoch").toString
         (0 until 3).foreach { b =>
           StreamOps.kmeansIterBatch(
             e.filter(pmod(col("vec_id"), lit(3)) === b), b.toLong,

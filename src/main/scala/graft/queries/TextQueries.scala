@@ -923,8 +923,8 @@ object TextQueries {
     "q193_shard_manifest" -> QueryDef(
       build = (s, dir) => {
         val d = Engine.table(s, dir, "documents")
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_q193_shards").toString
+        val tmp = org.apache.spark.graft.TempDirs
+          .create("graft_q193_shards").toString
         Engine.writeTrainingShards(d, col("text"), col("doc_id"), tmp,
           nShards = 8)
         s.read.parquet(s"$tmp/_shard_manifest")
@@ -960,8 +960,8 @@ object TextQueries {
           .select(col("doc_id"), (col("doc_id") % 1000).as("tok"))
         // bounded: ONE scalar (range divisor for deterministic shards)
         val maxId = d0.agg(max(col("doc_id"))).head().getLong(0)
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_q266_shards").toString
+        val tmp = org.apache.spark.graft.TempDirs
+          .create("graft_q266_shards").toString
         d0.withColumn("shard",
             expr(s"CAST(least(7, doc_id * 8 DIV ${maxId + 1}) AS BIGINT)"))
           .repartition(8, col("shard"))

@@ -2636,8 +2636,8 @@ object WriterQueries {
       build = (s, dir) => {
         import s.implicits._
         val K = graft.streaming.ShardSink
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q346").toString
+        val root = org.apache.spark.graft.TempDirs
+          .create("graft_q346").toString
         val d = Engine.table(s, dir, "documents")
           .select(col("doc_id"), col("text"), col("lang"),
             col("n_chars"))

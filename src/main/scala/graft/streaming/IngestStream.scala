@@ -13,9 +13,10 @@ import org.apache.spark.sql.types._
   * file's change ([[WarehouseStore]]) → archive or quarantine the file.
   *
   * Restart safety: the checkpoint skips committed batches. A batch whose
-  * save failed (any filesystem step reporting failure throws) is
-  * quarantined, and one cut short by a crash re-runs: either way every
-  * table was staged before any was published, the next load rolls back a
+  * save failed (a staging write failing, or any filesystem step reporting
+  * failure, throws) is quarantined only after all its staging writes have
+  * returned, and one cut short by a crash re-runs: either way every table
+  * was staged before any was published, the next load rolls back a
   * half-done table replacement, and a re-run's anti-joins and J5 dedup
   * gate add only the rows that did not land (the limits are in
   * [[WarehouseStore]]'s doc) — the reference's rollback, approximated

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.plans.{Ingestion, Warehouse, WarehouseStore}
 import graft.streaming.IngestStream
-import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import scala.sys.process._
@@ -15,8 +17,8 @@ import scala.sys.process._
   * table, surrogate ids included: the batch plan, the one-file-per-commit
   * stream, re-drop idempotency, the commit protocol (a commit appends one
   * file to each table that gains rows, leaves the files it does not change
-  * in place, compacts a fragmented table, and fails whole when a publish
-  * step fails) and the Spark job budget of one commit.
+  * in place, compacts a fragmented table, and fails whole when a staging
+  * write or a publish step fails) and the Spark job budget of one commit.
   */
 class IngestionGoldenSpec extends SparkSpec {
 
@@ -36,9 +38,10 @@ class IngestionGoldenSpec extends SparkSpec {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def commit(base: String): (Long, Long) =
+  /** Drain `$base/in` into the warehouse at `$base/wh`, under `scheme`. */
+  private def commit(base: String, scheme: String = ""): (Long, Long) =
     IngestStream.runAvailableNow(spark, s"$base/in",
-      warehouseDir = s"$base/wh", processedDir = s"$base/done",
+      warehouseDir = s"$scheme$base/wh", processedDir = s"$base/done",
       errorsDir = s"$base/bad", checkpointDir = s"$base/ckpt")
 
   /** Every table's rows, as sorted strings (taken out before the next
@@ -197,6 +200,32 @@ class IngestionGoldenSpec extends SparkSpec {
     assert(listing(s"$base/wh") == filesBefore)
   }
 
+  test("a commit whose staging write fails for one table waits for the others, is quarantined and leaves the live tables as they were") {
+    val base = Files.createTempDirectory("ingestion_golden_stage_failing").toString
+    spark.sparkContext.hadoopConfiguration.set("fs.failmv.impl", classOf[FailingRenameFs].getName)
+    copyInto(s"$base/in", files(0), files(0))
+    assert(commit(base, "failmv:") == ((1L, 0L)))
+    val before = snapshot(WarehouseStore.load(spark, s"$base/wh"))
+    val filesBefore = listing(s"$base/wh")
+
+    // the other tables' staging writes succeed: the save must wait for
+    // them before it throws and the batch quarantines its file
+    copyInto(s"$base/in", files(1), files(1))
+    FailingRenameFs.failingStage = Some("price")
+    try assert(commit(base, "failmv:") == ((0L, 1L))) finally FailingRenameFs.failingStage = None
+    val staged = new java.io.File(s"$base/wh").listFiles().toSeq
+      .filter(d => d.getName.startsWith(".staging_") && d.getName != ".staging_price")
+    assert(staged.nonEmpty && staged.forall(d => new java.io.File(d, "_SUCCESS").exists),
+      "a staging write outlived its commit")
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerDrain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty, "a staging job outlived its commit")
+    Checkpoints.release()
+    assert(new java.io.File(s"$base/bad").list().toSeq == Seq(files(1)))
+    assert(listing(s"$base/wh") == filesBefore)
+    assert(snapshot(WarehouseStore.load(spark, s"$base/wh")) == before)
+  }
+
   test("a one-workbook commit into a two-workbook warehouse stays within its job budget") {
     val base = Files.createTempDirectory("ingestion_golden_jobs").toString
     files.take(2).foreach(f => copyInto(s"$base/first", f, f))
@@ -236,7 +265,11 @@ class IngestionGoldenSpec extends SparkSpec {
 
 /** The local filesystem under the `failmv` scheme; while `failing` is set,
   * every rename outside a write's own `_temporary` directory (so every
-  * publish step of a warehouse save) reports failure.
+  * publish step of a warehouse save) reports failure, and while
+  * `failingStage` names a table, every file create under its
+  * `.staging_<table>` directory (so that table's staging write) throws,
+  * and one under any other staging directory first waits a second, so
+  * the failure comes while the other staging writes still run.
   */
 class FailingRenameFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: URI = URI.create("failmv:///")
@@ -244,8 +277,19 @@ class FailingRenameFs extends FilterFileSystem(new RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean =
     if (FailingRenameFs.failing && !src.toUri.getPath.contains("/_temporary/")) false
     else super.rename(src, dst)
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val path = f.toUri.getPath
+    FailingRenameFs.failingStage.filter(_ => path.contains("/.staging_")).foreach { t =>
+      if (path.contains(s"/.staging_$t/")) throw new java.io.IOException(s"failmv: create $f refused")
+      Thread.sleep(1000)
+    }
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object FailingRenameFs {
   @volatile var failing = false
+  @volatile var failingStage: Option[String] = None
 }
