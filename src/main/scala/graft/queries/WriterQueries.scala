@@ -1212,24 +1212,18 @@ object WriterQueries {
             P.columnStrings(pqZstd, "txt")
               .exists(_.length == ids.length)
           // avro container, codec deflate through the own encoder
-          val IW = graft.sources.IcebergWrite
+          val AW = graft.sources.AvroWrite
           val G = graft.sources.AvroGeneric
           val schema =
             """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},{"name":"txt","type":"string"}]}"""
-          def rec(v: Long): Array[Byte] = {
-            val out = new java.io.ByteArrayOutputStream()
-            graft.sources.Bytes.putZigzag(out, v)
-            val tb = Blobs.payload(v)
-              .getBytes("UTF-8")
-            graft.sources.Bytes.putZigzag(out, tb.length.toLong)
-            out.write(tb, 0, tb.length)
-            out.toByteArray
-          }
-          val sync =
-            Md5Hashes.digest(("sync:" + blobId).getBytes("UTF-8"))
-          val recs = ids.map(rec)
-          val avroNull = IW.container(schema, recs, sync)
-          val avroDef = IW.container(schema, recs, sync, "deflate")
+          val recs = ids.map(v => G.VRecord(Vector("id" -> G.VLong(v),
+            "txt" -> G.VString(Blobs.payload(v)))))
+          // one block, the deflate body at the fixed-Huffman level
+          def avro(codec: String)(body: Array[Byte] => Array[Byte]) =
+            AW.framed(schema, codec, AW.syncMarker(blobId.toString),
+              Iterator.single(recs))(body)
+          val avroNull = avro("null")(identity)
+          val avroDef = avro("deflate")(graft.sources.Deflate.compressFixed)
           val avroOk = avroDef.length < avroNull.length &&
             G.parseContainer(avroDef).exists { d =>
               d.records.flatMap(_.field("id").flatMap(_.asLong)) ==
@@ -6251,21 +6245,21 @@ object WriterQueries {
             val nriOk = nri == 2L * (na + nb) + newRids.size &&
               s4.map(_._1).max == nri - 1L
             // fail closed: no manifest block and no entry id
-            val sync = Md5Hashes.digest(
-              ("sync:" + s"lin-$t").getBytes("UTF-8"))
+            val AW = graft.sources.AvroWrite
             val mA = files("m-a.avro")
-            val badL1 = I.container(I.ListSchemaLin, Seq(
+            val badL1 = AW.container(I.ListSchemaLin, Seq(
               I.manifestFileRowLin("m-a.avro", mA.length.toLong,
-                0, 1L, na, None)), sync)
+                0, 1L, na, None)), syncSeed = s"lin-$t")
             val failClosed = I.lineageScan(
               files + ("snap-1.avro" -> badL1), meta, 1L).isEmpty
             // duplicate ids refuse: mD's block spliced onto C's
             val mC = files("m-c.avro"); val mD = files("m-d.avro")
-            val badL4 = I.container(I.ListSchemaLin, Seq(
+            val badL4 = AW.container(I.ListSchemaLin, Seq(
               I.manifestFileRowLin("m-c.avro", mC.length.toLong,
                 0, 3L, na + nb, Some(na + nb)),
               I.manifestFileRowLin("m-d.avro", mD.length.toLong,
-                0, 4L, newRids.size.toLong, Some(0L))), sync)
+                0, 4L, newRids.size.toLong, Some(0L))),
+              syncSeed = s"lin-$t")
             val dupRefused = I.lineageScan(
               files + ("snap-4.avro" -> badL4), meta, 4L).isEmpty
             (t, s5.length.toLong, s5.map(_._1).sum,

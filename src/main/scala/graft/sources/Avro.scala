@@ -24,6 +24,9 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * silently — and earlier blocks are kept (the gzip-member posture:
   * crawl-scale files are routinely cut mid-block).
   *
+  * The write side, [[write]], frames its blocks through
+  * [[AvroWrite.framed]], the engine's one container writer.
+  *
   * Scope: the `(long, string)` record schema the corpus queries use
   * (id + payload — the Kafka-dump shape), codecs `null`, `deflate`
   * (raw DEFLATE per the spec) and `snappy` (block payload + 4-byte
@@ -36,7 +39,7 @@ import org.apache.spark.sql.{Dataset, Encoders}
   * (blocks are independent); a malformed HEADER yields Nil.
   */
 object Avro {
-  import Bytes.{Reader, damage, putZigzag}
+  import Bytes.{Reader, damage}
 
   /** One input blob: an .avro container's raw bytes. */
   case class AvroBlob(blob_id: Long, content: Array[Byte])
@@ -47,12 +50,6 @@ object Avro {
                         codec: String, sync_ok: Boolean)
 
   private val Magic = Array[Byte]('O', 'b', 'j', 1)
-
-  private def putString(out: java.io.ByteArrayOutputStream, s: String): Unit = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    putZigzag(out, b.length.toLong)
-    out.write(b, 0, b.length)
-  }
 
   /** An Avro string or bytes payload: zigzag length, then the bytes. */
   private[sources] def str(r: Reader): String = r.utf8(r.len(r.zigzag()))
@@ -79,51 +76,30 @@ object Avro {
       """{"name":"rec_id","type":"long"},""" +
       """{"name":"payload","type":"string"}]}"""
 
-  /** Write an object container file: `(rec_id, payload)` records in
-    * blocks of `blockRecords`, codec `null` or `deflate` (level 6 —
-    * the q190-pinned canonical-zlib level), with the given 16-byte
-    * sync marker.
+  /** Write an object container file through [[AvroWrite.framed]]:
+    * `(rec_id, payload)` records in blocks of `blockRecords`, with the
+    * given 16-byte sync marker. Block bodies are the layout the size
+    * oracle pins: `deflate` is JDK zlib at level 6 (the q190-pinned
+    * canonical level), `snappy` and `zstandard` are their stored
+    * (literal-only / raw-block) forms, legal and deterministic.
     */
   def write(records: Seq[(Long, String)], sync: Array[Byte],
             codec: String = "null", blockRecords: Int = 5): Array[Byte] = {
-    require(sync.length == 16, "sync marker is 16 bytes")
     require(codec == "null" || codec == "deflate" ||
       codec == "snappy" || codec == "zstandard", s"codec $codec")
     require(blockRecords > 0, "blockRecords must be positive")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Magic, 0, 4)
-    // file metadata map: one count-prefixed group, then the 0 terminator
-    putZigzag(out, 2L)
-    putString(out, "avro.schema")
-    putString(out, SchemaJson)
-    putString(out, "avro.codec")
-    putString(out, codec)
-    putZigzag(out, 0L)
-    out.write(sync, 0, 16)
-    records.grouped(blockRecords).foreach { group =>
-      val body = new java.io.ByteArrayOutputStream()
-      group.foreach { case (id, payload) =>
-        putZigzag(body, id)
-        putString(body, payload)
-      }
-      val raw = body.toByteArray
-      val data =
-        if (codec == "null") raw
-        else if (codec == "zstandard")
-          // spec "avro.codec: zstandard": each block is one zstd
-          // frame; raw-block form (RFC 8878 legal, like the stored
-          // snappy) keeps the layout deterministic for the size oracle
-          Zstd.frameStored(raw)
-        else if (codec == "snappy") {
-          // spec: snappy payload, then BE CRC32 of the UNCOMPRESSED
-          // bytes; stored-literal form keeps the layout deterministic
-          val comp = Snappy.compressStored(raw)
-          val crc = new java.util.zip.CRC32()
-          crc.update(raw)
-          val v = crc.getValue
-          comp ++ Array[Byte]((v >> 24).toByte, (v >> 16).toByte,
-            (v >> 8).toByte, v.toByte)
-        } else {
+    import AvroGeneric.{VLong, VRecord, VString}
+    val blocks = records.grouped(blockRecords).map(_.map {
+      case (id, payload) =>
+        VRecord(Vector("rec_id" -> VLong(id), "payload" -> VString(payload)))
+    })
+    AvroWrite.framed(SchemaJson, codec, sync, blocks) { raw =>
+      codec match {
+        case "null" => raw
+        case "zstandard" => Zstd.frameStored(raw)
+        case "snappy" =>
+          AvroWrite.withCrc32(Snappy.compressStored(raw), raw)
+        case _ =>
           val d = new java.util.zip.Deflater(6, true)
           try {
             d.setInput(raw); d.finish()
@@ -132,13 +108,8 @@ object Avro {
             while (!d.finished()) bos.write(chunk, 0, d.deflate(chunk))
             bos.toByteArray
           } finally d.end()
-        }
-      putZigzag(out, group.length.toLong)
-      putZigzag(out, data.length.toLong)
-      out.write(data, 0, data.length)
-      out.write(sync, 0, 16)
+      }
     }
-    out.toByteArray
   }
 
   /** Walk one container. Malformed header → Nil; damage mid-stream

@@ -1,22 +1,25 @@
 package graft.sources
 
-/** Schema-driven Avro WRITE twin of [[AvroGeneric.parseContainer]]:
-  * encodes a value tree ([[AvroGeneric.V]]) against a schema tree
-  * ([[AvroGeneric.Schema]]) datum by datum — zigzag varints, IEEE LE
-  * floats, single-block arrays/maps, union branch dispatch by value
-  * shape — and frames records into an RFC-shaped object container
-  * (Obj\1 magic, avro.schema/avro.codec metadata map, deterministic
-  * md5 sync marker, per-block count/size/sync). Codecs are all
-  * ENGINE-OWNED: `deflate` via [[Deflate.compress]] (raw deflate,
-  * best-of fixed/dynamic — q333), `snappy` via [[Snappy.compress]]
-  * plus the BE CRC32-of-plaintext suffix Avro specifies, `zstandard`
-  * via [[ZstdEncode.compress]].
+/** The engine's one Avro writer, the WRITE twin of
+  * [[AvroGeneric.parseContainer]]: encodes a value tree
+  * ([[AvroGeneric.V]]) against a schema tree ([[AvroGeneric.Schema]])
+  * datum by datum — zigzag varints, IEEE LE floats, single-block
+  * arrays/maps, union branch dispatch by value shape — and frames
+  * records into an object container ([[framed]]: Obj\1 magic,
+  * avro.schema/avro.codec metadata map, sync marker, per-block
+  * count/size/sync). [[Avro.write]], the Iceberg manifests and lists
+  * and the Hudi log records all go through it. [[container]]'s codecs
+  * are all ENGINE-OWNED: `deflate` via [[Deflate.compress]] (raw
+  * deflate, best-of fixed/dynamic — q333), `snappy` via
+  * [[Snappy.compress]] plus the BE CRC32-of-plaintext suffix Avro
+  * specifies, `zstandard` via [[ZstdEncode.compress]].
   *
-  * The layout is deterministic (sync = md5 of a caller seed), the
-  * engine's own generic walk decodes it back, and Apache avro (the
-  * Java reference implementation, on the Spark classpath) cross-reads
-  * it in AvroGenericSpec — closing the Avro container on BOTH ends
-  * the way parquet (q310) and ORC (q311) already are.
+  * The layout is deterministic (a caller's sync bytes, or md5 of a
+  * caller seed through [[syncMarker]]), the engine's own generic walk
+  * decodes it back, and Apache avro (the Java reference
+  * implementation, on the Spark classpath) cross-reads it in
+  * AvroGenericSpec — closing the Avro container on BOTH ends the way
+  * parquet (q310) and ORC (q311) already are.
   *
   * Spec source: the Avro 1.12 specification, "Object Container Files"
   * and "Binary Encoding".
@@ -25,7 +28,7 @@ object AvroWrite {
 
   import AvroGeneric._
 
-  import Bytes.{damage, putLe32, putLe64, putZigzag}
+  import Bytes.{damage, putBe32, putLe32, putLe64, putZigzag}
 
   /** Avro `decimal` logical-type payload: the unscaled value as
     * minimal-length BIG-ENDIAN two's complement (Avro spec §Logical
@@ -140,12 +143,73 @@ object AvroWrite {
     case _ => damage()
   }
 
+  /** One datum as its own byte array (a bare record, as Hudi log
+    * blocks carry them).
+    */
+  def encode(v: V, schema: Schema): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    datum(out, v, schema)
+    out.toByteArray
+  }
+
+  /** The 16-byte sync marker seeded by `seed`: md5("sync:" + seed).
+    * Every container the engine writes with a derived marker derives
+    * it here, so the same inputs always give the same bytes.
+    */
+  def syncMarker(seed: String): Array[Byte] =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(("sync:" + seed).getBytes("UTF-8"))
+
+  /** The engine's one object-container framing: the `Obj\1` magic,
+    * the avro.schema / avro.codec metadata map and `sync`, then per
+    * group of `blocks` the record count, the size and bytes of
+    * `body` applied to the group's records (encoded against
+    * `schemaJson` by [[datum]]), and `sync` again. The caller owns the
+    * grouping and the codec's bytes; a record that does not fit the
+    * schema throws [[Bytes.Damage]].
+    */
+  def framed(schemaJson: String, codec: String, sync: Array[Byte],
+             blocks: Iterator[Seq[V]])
+            (body: Array[Byte] => Array[Byte]): Array[Byte] = {
+    require(sync.length == 16, "sync marker is 16 bytes")
+    val schema = AvroGeneric.parseSchema(schemaJson)
+      .getOrElse(throw new IllegalArgumentException("bad schema"))
+    val out = new java.io.ByteArrayOutputStream()
+    out.write('O'); out.write('b'); out.write('j'); out.write(1)
+    datum(out, VMap(Vector("avro.schema" -> VString(schemaJson),
+      "avro.codec" -> VString(codec))), SMap(SString))
+    out.write(sync, 0, 16)
+    blocks.foreach { group =>
+      val raw = new java.io.ByteArrayOutputStream()
+      group.foreach(datum(raw, _, schema))
+      val b = body(raw.toByteArray)
+      putZigzag(out, group.length.toLong)
+      putZigzag(out, b.length.toLong)
+      out.write(b, 0, b.length)
+      out.write(sync, 0, 16)
+    }
+    out.toByteArray
+  }
+
+  /** A snappy block body: the compressed bytes, then the big-endian
+    * CRC32 of the uncompressed ones (Avro spec, "Required Codecs").
+    */
+  private[sources] def withCrc32(comp: Array[Byte],
+                                 plain: Array[Byte]): Array[Byte] = {
+    val crc = new java.util.zip.CRC32
+    crc.update(plain)
+    val out = new java.io.ByteArrayOutputStream(comp.length + 4)
+    out.write(comp, 0, comp.length)
+    putBe32(out, crc.getValue.toInt)
+    out.toByteArray
+  }
+
   /** Write one object container: `records` of the schema embedded in
     * `schemaJson`, `blockRecords` records per block, codec one of
     * null / deflate / snappy / zstandard / bzip2 / xz — the FULL
     * Avro-spec codec table, every one an engine-owned encoder.
-    * `syncSeed` makes the 16-byte sync marker deterministic (md5),
-    * so same inputs always produce the same bytes.
+    * `syncSeed` makes the 16-byte sync marker deterministic
+    * ([[syncMarker]]), so same inputs always produce the same bytes.
     */
   def container(schemaJson: String, records: Seq[V],
                 codec: String = "null",
@@ -155,41 +219,16 @@ object AvroWrite {
       codec == "zstandard" || codec == "bzip2" || codec == "xz",
       s"codec $codec")
     require(blockRecords >= 1)
-    val schema = AvroGeneric.parseSchema(schemaJson)
-      .getOrElse(throw new IllegalArgumentException("bad schema"))
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('O'); out.write('b'); out.write('j'); out.write(1)
-    putZigzag(out, 2L) // metadata map: one block of two entries
-    utf8(out, "avro.schema"); utf8(out, schemaJson)
-    utf8(out, "avro.codec"); utf8(out, codec)
-    putZigzag(out, 0L) // map end
-    val sync = java.security.MessageDigest.getInstance("MD5")
-      .digest(("sync:" + syncSeed).getBytes("UTF-8"))
-    out.write(sync, 0, 16)
-    records.grouped(blockRecords).foreach { chunk =>
-      val raw = new java.io.ByteArrayOutputStream()
-      chunk.foreach(datum(raw, _, schema))
-      val plain = raw.toByteArray
-      val body = codec match {
+    framed(schemaJson, codec, syncMarker(syncSeed),
+      records.grouped(blockRecords)) { plain =>
+      codec match {
         case "deflate" => Deflate.compress(plain)
-        case "snappy" =>
-          val comp = Snappy.compress(plain)
-          val crc = new java.util.zip.CRC32
-          crc.update(plain)
-          val c = crc.getValue
-          comp ++ Array[Byte](((c >> 24) & 0xff).toByte,
-            ((c >> 16) & 0xff).toByte, ((c >> 8) & 0xff).toByte,
-            (c & 0xff).toByte)
+        case "snappy" => withCrc32(Snappy.compress(plain), plain)
         case "zstandard" => ZstdEncode.compress(plain)
         case "bzip2" => Bzip2Encode.compress(plain, level = 1)
         case "xz" => LzmaEncode.xz(plain)
         case _ => plain
       }
-      putZigzag(out, chunk.length.toLong)
-      putZigzag(out, body.length.toLong)
-      out.write(body, 0, body.length)
-      out.write(sync, 0, 16)
     }
-    out.toByteArray
   }
 }

@@ -150,4 +150,13 @@ object Bytes {
   def putBe64(out: ByteArrayOutputStream, v: Long): Unit = {
     putBe32(out, (v >>> 32).toInt); putBe32(out, v.toInt)
   }
+
+  /** `v` as 4 little-endian bytes (a parquet or Iceberg bound). */
+  def toLe32(v: Int): Array[Byte] = {
+    val out = new ByteArrayOutputStream(4); putLe32(out, v); out.toByteArray
+  }
+  /** `v` as 8 little-endian bytes. */
+  def toLe64(v: Long): Array[Byte] = {
+    val out = new ByteArrayOutputStream(8); putLe64(out, v); out.toByteArray
+  }
 }

@@ -86,9 +86,7 @@ object HudiMdt {
             "size" -> VLong(size),
             "isDeleted" -> VBool(deleted)))
       })))
-    val out = new java.io.ByteArrayOutputStream()
-    AvroWrite.datum(out, v, schema)
-    out.toByteArray
+    AvroWrite.encode(v, schema)
   }
 
   private def blockFor(instant: String,
@@ -336,9 +334,7 @@ object HudiMdt {
         "minValue" -> VLong(mn),
         "maxValue" -> VLong(mx),
         "valueCount" -> VLong(cnt)))))
-    val out = new java.io.ByteArrayOutputStream()
-    AvroWrite.datum(out, v, colStatsSchema)
-    out.toByteArray
+    AvroWrite.encode(v, colStatsSchema)
   }
 
   /** Bootstrap the column_stats partition: per completed data
@@ -479,9 +475,7 @@ object HudiMdt {
         "partitionPath" -> VString(partition),
         "fileId" -> VString(fileId),
         "instantTime" -> VString(instant)))))
-    val out = new java.io.ByteArrayOutputStream()
-    AvroWrite.datum(out, v, recordIndexSchema)
-    out.toByteArray
+    AvroWrite.encode(v, recordIndexSchema)
   }
 
   /** The (upserts, deletes) one data instant contributes to the
@@ -711,9 +705,7 @@ object HudiMdt {
       "bloomFilter" -> VRecord(Vector(
         "type" -> VString("SBBF_V1"),
         "bitmap" -> AvroGeneric.VBytes(bitmap.length, bitmap)))))
-    val out = new java.io.ByteArrayOutputStream()
-    AvroWrite.datum(out, v, bloomSchema)
-    out.toByteArray
+    AvroWrite.encode(v, bloomSchema)
   }
 
   private def longKeyBytes(d: Long): Array[Byte] = {
@@ -917,9 +909,7 @@ object HudiMdt {
       "type" -> VLong(7L),
       "secondaryIndexMetadata" -> VRecord(Vector(
         "isDeleted" -> VBool(isDeleted)))))
-    val out = new java.io.ByteArrayOutputStream()
-    AvroWrite.datum(out, v, secondaryIndexSchema)
-    out.toByteArray
+    AvroWrite.encode(v, secondaryIndexSchema)
   }
 
   /** The (rec_id -> val) upserts and deleted keys one data instant

@@ -66,11 +66,14 @@ object HudiWrite {
   val LogRecSchema: String =
     """{"type":"record","name":"rec","fields":[{"name":"rec_id","type":"long"},{"name":"val","type":"long"}]}"""
 
-  /** One bare avro record: zigzag varints for (rec_id, val). */
+  private lazy val logRecSchema =
+    AvroGeneric.parseSchema(LogRecSchema).get
+
+  /** One bare avro record of [[LogRecSchema]]: (rec_id, val). */
   def avroRec(recId: Long, v: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    Bytes.putZigzag(out, recId); Bytes.putZigzag(out, v)
-    out.toByteArray
+    import AvroGeneric.{VLong, VRecord}
+    AvroWrite.encode(VRecord(Vector("rec_id" -> VLong(recId),
+      "val" -> VLong(v))), logRecSchema)
   }
 
   /** The q318 MERGE-ON-READ bundle, all through the engine's own

@@ -2,10 +2,10 @@ package graft.sources
 
 /** Compose an Iceberg table's METADATA tree from first principles:
   * `vN.metadata.json` (hand-built canonical JSON), the manifest-list
-  * Avro container, and a data manifest — through a from-scratch Avro
-  * object-container writer (header map, sync markers, count/size
-  * block framing) and the binary record encoding (zigzag varints,
-  * length-prefixed strings). The layout is deterministic, the
+  * Avro container, and a data manifest. Each manifest row is a value
+  * tree that [[AvroWrite.framed]] encodes against the schema string it
+  * is framed with, so a row that drifts from its schema throws instead
+  * of writing wrong bytes. The layout is deterministic, the
   * engine's own generic Avro reader ([[AvroGeneric.parseContainer]])
   * and JSON parser round-trip it, and the independent Python twin
   * (scripts/make_iceberg_write_oracle.py) reproduces the whole
@@ -17,7 +17,20 @@ package graft.sources
   */
 object IcebergWrite {
 
-  import Bytes.putZigzag
+  import AvroGeneric.{V, VArray, VBool, VBytes, VLong, VNull, VRecord,
+    VString}
+
+  private def rec(fields: (String, V)*): V = VRecord(fields.toVector)
+  private def opt(x: Option[Long]): V = x.fold[V](VNull)(VLong(_))
+
+  /** A manifest, manifest list or statistics file: `records` in one
+    * stored block, written even when empty (the layout the Python
+    * twins reproduce).
+    */
+  private def avroFile(schemaJson: String, records: Seq[V],
+                       sync: Array[Byte]): Array[Byte] =
+    AvroWrite.framed(schemaJson, "null", sync,
+      Iterator.single(records))(identity)
 
   /** Reduced-but-valid manifest schemas (no unions — every field
     * required), shared verbatim with the Python twin.
@@ -27,59 +40,12 @@ object IcebergWrite {
   val ListSchema: String =
     """{"type":"record","name":"manifest_file","fields":[{"name":"manifest_path","type":"string"},{"name":"manifest_length","type":"long"},{"name":"added_files_count","type":"int"},{"name":"added_rows_count","type":"long"}]}"""
 
-  private def str(out: java.io.ByteArrayOutputStream,
-                  s: String): Unit = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    putZigzag(out, b.length.toLong); out.write(b, 0, b.length)
-  }
-
-  /** One Avro object container, one block. `codec` "null" (stored)
-    * or "deflate" — the deflate body through the engine's OWN
-    * encoder ([[Deflate.compressFixed]], raw-deflate per the Avro
-    * spec's codec definition).
-    */
-  def container(schemaJson: String, records: Seq[Array[Byte]],
-                sync: Array[Byte],
-                codec: String = "null"): Array[Byte] = {
-    require(sync.length == 16)
-    require(codec == "null" || codec == "deflate", codec)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('O'); out.write('b'); out.write('j'); out.write(1)
-    putZigzag(out, 2L)
-    str(out, "avro.schema"); str(out, schemaJson)
-    str(out, "avro.codec"); str(out, codec)
-    putZigzag(out, 0L)
-    out.write(sync, 0, 16)
-    val plain = new java.io.ByteArrayOutputStream()
-    records.foreach(r => plain.write(r, 0, r.length))
-    val body =
-      if (codec == "deflate") Deflate.compressFixed(plain.toByteArray)
-      else plain.toByteArray
-    putZigzag(out, records.length.toLong)
-    putZigzag(out, body.length.toLong)
-    out.write(body, 0, body.length)
-    out.write(sync, 0, 16)
-    out.toByteArray
-  }
-
-  def entry(path: String, rc: Long, fsz: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    putZigzag(out, 1L) // status = ADDED
-    str(out, path)
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    out.toByteArray
-  }
-
   def manifestFileRow(path: String, length: Long, files: Long,
-                      rows: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    str(out, path)
-    putZigzag(out, length)
-    putZigzag(out, files)
-    putZigzag(out, rows)
-    out.toByteArray
-  }
+                      rows: Long): V =
+    rec("manifest_path" -> VString(path),
+      "manifest_length" -> VLong(length),
+      "added_files_count" -> VLong(files),
+      "added_rows_count" -> VLong(rows))
 
   // ---- partitioned write (q317): the q271 read shapes, write side ------
 
@@ -96,51 +62,29 @@ object IcebergWrite {
   val EntrySchemaV2: String =
     """{"type":"record","name":"manifest_entry","fields":[{"name":"status","type":"int"},{"name":"snapshot_id","type":["null","long"]},{"name":"sequence_number","type":["null","long"]},{"name":"file_sequence_number","type":["null","long"]},{"name":"data_file","type":{"type":"record","name":"r2","fields":[{"name":"content","type":"int"},{"name":"file_path","type":"string"},{"name":"file_format","type":"string"},{"name":"partition","type":{"type":"record","name":"r102","fields":[{"name":"part","type":"int"}]}},{"name":"record_count","type":"long"},{"name":"file_size_in_bytes","type":"long"},{"name":"lower_bounds","type":["null",{"type":"array","items":{"type":"record","name":"k126_v127","fields":[{"name":"key","type":"int"},{"name":"value","type":"bytes"}]}}]},{"name":"upper_bounds","type":["null",{"type":"array","items":"k126_v127"}]},{"name":"sort_order_id","type":["null","int"]}]}}]}"""
 
-  private def bytesV(out: java.io.ByteArrayOutputStream,
-                     b: Array[Byte]): Unit = {
-    putZigzag(out, b.length.toLong); out.write(b, 0, b.length)
-  }
-
-  /** Union: zigzag branch index, then the branch payload. */
-  private def union(out: java.io.ByteArrayOutputStream, idx: Long)
-                   (payload: => Unit): Unit = {
-    putZigzag(out, idx); payload
-  }
-
-  private def le4(v: Int): Array[Byte] =
-    Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
-  private def le8(v: Long): Array[Byte] =
-    Array.tabulate[Byte](8)(k => ((v >>> (8 * k)) & 0xff).toByte)
-
   /** One v2 manifest entry: status ADDED, data_file with partition
     * record and rec_id (field id 1) bounds in Iceberg single-value
     * serialization (8-byte LE long).
     */
   def entryV2(part: Int, path: String, rc: Long, fsz: Long,
-              lo: Long, hi: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def boundMap(v: Long): Unit = union(out, 1) {
-      putZigzag(out, 1L) // one block of one entry
-      putZigzag(out, 1L) // key = field id 1 (rec_id)
-      bytesV(out, le8(v))
-      putZigzag(out, 0L) // end of blocks
-    }
-    putZigzag(out, 1L)               // status = ADDED
-    union(out, 1)(putZigzag(out, 99L)) // snapshot_id
-    union(out, 1)(putZigzag(out, 1L))  // sequence_number
-    union(out, 1)(putZigzag(out, 1L))  // file_sequence_number
-    putZigzag(out, 0L)               // data_file.content = DATA
-    str(out, path)
-    str(out, "PARQUET")
-    putZigzag(out, part.toLong)      // partition r102{part}
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    boundMap(lo)                  // lower_bounds {1: LE64}
-    boundMap(hi)                  // upper_bounds {1: LE64}
-    union(out, 1)(putZigzag(out, 0L)) // sort_order_id
-    out.toByteArray
+              lo: Long, hi: Long): V = {
+    // bounds map {1 (rec_id): LE64}, as the k126_v127 array
+    def bound(v: Long): V = VArray(Vector(
+      rec("key" -> VLong(1), "value" -> VBytes(8, Bytes.toLe64(v)))))
+    rec("status" -> VLong(1), // ADDED
+      "snapshot_id" -> VLong(99),
+      "sequence_number" -> VLong(1),
+      "file_sequence_number" -> VLong(1),
+      "data_file" -> rec(
+        "content" -> VLong(0), // DATA
+        "file_path" -> VString(path),
+        "file_format" -> VString("PARQUET"),
+        "partition" -> rec("part" -> VLong(part)),
+        "record_count" -> VLong(rc),
+        "file_size_in_bytes" -> VLong(fsz),
+        "lower_bounds" -> bound(lo),
+        "upper_bounds" -> bound(hi),
+        "sort_order_id" -> VLong(0)))
   }
 
   /** One v2 manifest_file row with the [part, part] field summary
@@ -148,27 +92,27 @@ object IcebergWrite {
     * selects on.
     */
   def manifestFileRowV2(path: String, length: Long, part: Int,
-                        files: Long, rows: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val bound = le4(part)
-    str(out, path)
-    putZigzag(out, length)
-    putZigzag(out, 0L)  // partition_spec_id
-    putZigzag(out, 0L)  // content = data
-    putZigzag(out, 1L); putZigzag(out, 1L) // sequence numbers
-    putZigzag(out, 99L) // added_snapshot_id
-    putZigzag(out, files); putZigzag(out, 0L); putZigzag(out, 0L)
-    putZigzag(out, rows); putZigzag(out, 0L); putZigzag(out, 0L)
-    union(out, 1) {  // partitions: one field_summary
-      putZigzag(out, 1L)
-      out.write(0)                  // contains_null = false
-      union(out, 1)(out.write(0))   // contains_nan = false
-      union(out, 1)(bytesV(out, bound)) // lower_bound
-      union(out, 1)(bytesV(out, bound)) // upper_bound
-      putZigzag(out, 0L)
-    }
-    union(out, 0)(()) // key_metadata = null
-    out.toByteArray
+                        files: Long, rows: Long): V = {
+    val bound = VBytes(4, Bytes.toLe32(part))
+    rec("manifest_path" -> VString(path),
+      "manifest_length" -> VLong(length),
+      "partition_spec_id" -> VLong(0),
+      "content" -> VLong(0), // data
+      "sequence_number" -> VLong(1),
+      "min_sequence_number" -> VLong(1),
+      "added_snapshot_id" -> VLong(99),
+      "added_files_count" -> VLong(files),
+      "existing_files_count" -> VLong(0),
+      "deleted_files_count" -> VLong(0),
+      "added_rows_count" -> VLong(rows),
+      "existing_rows_count" -> VLong(0),
+      "deleted_rows_count" -> VLong(0),
+      "partitions" -> VArray(Vector(rec(
+        "contains_null" -> VBool(false),
+        "contains_nan" -> VBool(false),
+        "lower_bound" -> bound,
+        "upper_bound" -> bound))),
+      "key_metadata" -> VNull)
   }
 
   /** The q317 PARTITIONED metadata tree: partition spec `part =
@@ -184,10 +128,9 @@ object IcebergWrite {
   def writePartitionedTable(id: String,
                             rows: Seq[(Long, Long)])
       : Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val out = Map.newBuilder[String, Array[Byte]]
-    val mrows = Seq.newBuilder[Array[Byte]]
+    val mrows = Seq.newBuilder[V]
     for (x <- 0 to 2) {
       // toIndexedSeq: quartile grouping below indexes positionally
       val part = rows.filter { case (d, _) => (d / 6) % 3 == x }
@@ -201,12 +144,12 @@ object IcebergWrite {
           grp.length.toLong, grp.map(r => 1L + r._2 % 9).sum,
           grp.map(_._1).min, grp.map(_._1).max))
       }
-      val m = container(EntrySchemaV2, entries, sync)
+      val m = avroFile(EntrySchemaV2, entries, sync)
       out += (s"m-$x.avro" -> m)
       mrows += manifestFileRowV2(s"m-$x.avro", m.length.toLong, x,
         entries.length.toLong, n.toLong)
     }
-    val list = container(ListSchemaV2, mrows.result(), sync)
+    val list = avroFile(ListSchemaV2, mrows.result(), sync)
     out += ("snap-1.avro" -> list)
     val meta = ("""{"format-version": 2, "table-uuid": """" + id +
       """", "partition-specs": [{"spec-id": 0, "fields": [{"field-id": 1000, "name": "part", "source-id": 3, "transform": "identity"}]}], "current-snapshot-id": 1, "snapshots": [{"snapshot-id": 1, "sequence-number": 1, "timestamp-ms": 1700000000000, "manifest-list": "snap-1.avro"}]}""")
@@ -233,25 +176,19 @@ object IcebergWrite {
   val EntrySchemaEvo1: String =
     """{"type":"record","name":"manifest_entry","fields":[{"name":"status","type":"int"},{"name":"data_file","type":{"type":"record","name":"r2","fields":[{"name":"file_path","type":"string"},{"name":"partition","type":{"type":"record","name":"r103","fields":[{"name":"p2","type":"int"}]}},{"name":"record_count","type":"long"},{"name":"file_size_in_bytes","type":"long"}]}}]}"""
 
-  def manifestFileRowEvo(path: String, length: Long,
-                         specId: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    str(out, path)
-    putZigzag(out, length)
-    putZigzag(out, specId.toLong)
-    out.toByteArray
-  }
+  def manifestFileRowEvo(path: String, length: Long, specId: Int): V =
+    rec("manifest_path" -> VString(path),
+      "manifest_length" -> VLong(length),
+      "partition_spec_id" -> VLong(specId))
 
-  def entryEvo(path: String, rc: Long, fsz: Long,
-               p2: Option[Int]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    putZigzag(out, 1L) // status = ADDED
-    str(out, path)
-    p2.foreach(v => putZigzag(out, v.toLong)) // empty record if None
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    out.toByteArray
-  }
+  /** `p2` None: the spec-0 entry's empty partition record. */
+  def entryEvo(path: String, rc: Long, fsz: Long, p2: Option[Int]): V =
+    rec("status" -> VLong(1), // ADDED
+      "data_file" -> rec(
+        "file_path" -> VString(path),
+        "partition" -> VRecord(p2.map(v => "p2" -> (VLong(v): V)).toVector),
+        "record_count" -> VLong(rc),
+        "file_size_in_bytes" -> VLong(fsz)))
 
   /** The q362 table: generation 0 ((d/6) % 4 != 1) lands at snapshot
     * 1 under UNPARTITIONED spec 0 in two files split by (d/6) % 2;
@@ -263,8 +200,7 @@ object IcebergWrite {
     */
   def writeSpecEvoTable(id: String,
                         ids: Seq[Long]): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def v(d: Long): Long = (d * 7) % 1000
     def dataFile(p: Seq[Long]): Array[Byte] =
       ParquetWrite.writeInt64(Seq("rec_id", "val"),
@@ -280,7 +216,7 @@ object IcebergWrite {
       entryEvo(s"f-old-$g.parquet", p.length.toLong,
         bytes.length.toLong, None)
     }
-    val m0 = container(EntrySchemaEvo0, e0, sync)
+    val m0 = avroFile(EntrySchemaEvo0, e0, sync)
     out += ("m-spec0.avro" -> m0)
     // spec-1 manifest: three p2 files
     val e1 = (0 to 2).map { b =>
@@ -290,9 +226,9 @@ object IcebergWrite {
       entryEvo(s"f-new-$b.parquet", p.length.toLong,
         bytes.length.toLong, Some(b))
     }
-    val m1 = container(EntrySchemaEvo1, e1, sync)
+    val m1 = avroFile(EntrySchemaEvo1, e1, sync)
     out += ("m-spec1.avro" -> m1)
-    val list = container(ListSchemaEvo, Seq(
+    val list = avroFile(ListSchemaEvo, Seq(
       manifestFileRowEvo("m-spec0.avro", m0.length.toLong, 0),
       manifestFileRowEvo("m-spec1.avro", m1.length.toLong, 1)), sync)
     out += ("snap-2.avro" -> list)
@@ -318,18 +254,12 @@ object IcebergWrite {
   final case class PartStat(p2: Option[Int], specId: Int,
                             records: Long, files: Long, bytes: Long)
 
-  def partStatRecord(ps: PartStat): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    ps.p2 match {
-      case Some(v) => union(out, 1)(putZigzag(out, v.toLong))
-      case None => union(out, 0)(())
-    }
-    putZigzag(out, ps.specId.toLong)
-    putZigzag(out, ps.records)
-    putZigzag(out, ps.files)
-    putZigzag(out, ps.bytes)
-    out.toByteArray
-  }
+  def partStatRecord(ps: PartStat): V =
+    rec("partition" -> rec("p2" -> opt(ps.p2.map(_.toLong))),
+      "spec_id" -> VLong(ps.specId),
+      "data_record_count" -> VLong(ps.records),
+      "data_file_count" -> VLong(ps.files),
+      "total_data_file_size_in_bytes" -> VLong(ps.bytes))
 
   /** Per-partition aggregation of ONE evo-shape manifest (the
     * incremental unit: what an appended manifest contributes).
@@ -421,9 +351,8 @@ object IcebergWrite {
         .collect { case Json.JString(x) => x }
       stats <- computePartitionStats(files, metaName, sid)
     } yield {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sync = md.digest(("sync:" + uuid).getBytes("UTF-8"))
-      val body = container(PartStatsSchema,
+      val sync = AvroWrite.syncMarker(uuid)
+      val body = avroFile(PartStatsSchema,
         stats.map(partStatRecord), sync)
       val path = s"partition-stats-$sid.avro"
       val metaStr = new String(files(metaName),
@@ -488,8 +417,7 @@ object IcebergWrite {
   def writeSpecEvoTableV3(id: String,
                           ids: Seq[Long]): Map[String, Array[Byte]] = {
     val base = writeSpecEvoTable(id, ids)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def v(d: Long): Long = (d * 7) % 1000 + 3
     val gen3 = ids.filter(d => (d / 6) % 4 == 3)
     val out = Map.newBuilder[String, Array[Byte]]
@@ -501,10 +429,10 @@ object IcebergWrite {
       entryEvo(s"f-add-$b.parquet", p.length.toLong,
         bytes.length.toLong, Some(b))
     }
-    val m2 = container(EntrySchemaEvo1, e2, sync)
+    val m2 = avroFile(EntrySchemaEvo1, e2, sync)
     out += ("m-spec1-add.avro" -> m2)
     val m0 = base("m-spec0.avro"); val m1 = base("m-spec1.avro")
-    val list3 = container(ListSchemaEvo, Seq(
+    val list3 = avroFile(ListSchemaEvo, Seq(
       manifestFileRowEvo("m-spec0.avro", m0.length.toLong, 0),
       manifestFileRowEvo("m-spec1.avro", m1.length.toLong, 1),
       manifestFileRowEvo("m-spec1-add.avro", m2.length.toLong, 1)),
@@ -539,43 +467,41 @@ object IcebergWrite {
   def entryMor(status: Int, seq: Long, content: Int, path: String,
                rc: Long, fsz: Long,
                eqIds: Seq[Int] = Nil,
-               format: String = "PARQUET"): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    putZigzag(out, status.toLong)
-    union(out, 1)(putZigzag(out, 99L))
-    union(out, 1)(putZigzag(out, seq))
-    union(out, 1)(putZigzag(out, seq))
-    putZigzag(out, content.toLong)
-    str(out, path)
-    str(out, format)
-    // partition: empty record, zero bytes
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    if (eqIds.nonEmpty) union(out, 1) {
-      putZigzag(out, eqIds.length.toLong)
-      eqIds.foreach(i => putZigzag(out, i.toLong))
-      putZigzag(out, 0L)
-    } else union(out, 0)(())
-    union(out, 1)(putZigzag(out, 0L))
-    out.toByteArray
-  }
+               format: String = "PARQUET"): V =
+    rec("status" -> VLong(status),
+      "snapshot_id" -> VLong(99),
+      "sequence_number" -> VLong(seq),
+      "file_sequence_number" -> VLong(seq),
+      "data_file" -> rec(
+        "content" -> VLong(content),
+        "file_path" -> VString(path),
+        "file_format" -> VString(format),
+        "partition" -> rec(),
+        "record_count" -> VLong(rc),
+        "file_size_in_bytes" -> VLong(fsz),
+        "equality_ids" ->
+          (if (eqIds.isEmpty) VNull
+           else VArray(eqIds.map(i => VLong(i): V).toVector)),
+        "sort_order_id" -> VLong(0)))
 
   /** One MoR manifest_file row (content 0 data / 1 deletes). */
   def manifestFileRowMor(path: String, length: Long, content: Int,
                          seq: Long, af: Long, df: Long, ar: Long,
-                         dr: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    str(out, path)
-    putZigzag(out, length)
-    putZigzag(out, 0L)
-    putZigzag(out, content.toLong)
-    putZigzag(out, seq); putZigzag(out, 1L)
-    putZigzag(out, 99L)
-    putZigzag(out, af); putZigzag(out, 0L); putZigzag(out, df)
-    putZigzag(out, ar); putZigzag(out, 0L); putZigzag(out, dr)
-    union(out, 0)(())
-    out.toByteArray
-  }
+                         dr: Long): V =
+    rec("manifest_path" -> VString(path),
+      "manifest_length" -> VLong(length),
+      "partition_spec_id" -> VLong(0),
+      "content" -> VLong(content),
+      "sequence_number" -> VLong(seq),
+      "min_sequence_number" -> VLong(1),
+      "added_snapshot_id" -> VLong(99),
+      "added_files_count" -> VLong(af),
+      "existing_files_count" -> VLong(0),
+      "deleted_files_count" -> VLong(df),
+      "added_rows_count" -> VLong(ar),
+      "existing_rows_count" -> VLong(0),
+      "deleted_rows_count" -> VLong(dr),
+      "key_metadata" -> VNull)
 
   /** The q319 MERGE-ON-READ bundle with ROW-LEVEL DELETES, all
     * through the engine's own writers: data files P0-P2 split by
@@ -592,8 +518,7 @@ object IcebergWrite {
     */
   def writeMorTable(id: String,
                     ids: Seq[Long]): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val parts = (0 to 2).map(x =>
       ids.filter(d => (d / 6) % 3 == x).toIndexedSeq)
     val names = (0 to 2).map(x => s"part-0000$x.parquet")
@@ -620,17 +545,17 @@ object IcebergWrite {
       ParquetWrite.writeInt64(Seq("rec_id"), xs.map(Array(_)))
     val ed1 = eqFile(ed1Ids)
     val ed0 = eqFile(ed0Ids)
-    val dataManifest = container(EntrySchemaMor,
+    val dataManifest = avroFile(EntrySchemaMor,
       (0 to 2).map(x => entryMor(1, 1L, 0, names(x),
         parts(x).length.toLong, data(x).length.toLong)), sync)
-    val delManifest = container(EntrySchemaMor, Seq(
+    val delManifest = avroFile(EntrySchemaMor, Seq(
       entryMor(1, 1L, 1, "pd-0.parquet", pd0Pos.length.toLong,
         pd0.length.toLong),
       entryMor(1, 2L, 2, "ed-1.parquet", ed1Ids.length.toLong,
         ed1.length.toLong, eqIds = Seq(1)),
       entryMor(1, 1L, 2, "ed-0.parquet", ed0Ids.length.toLong,
         ed0.length.toLong, eqIds = Seq(1))), sync)
-    val list = container(ListSchemaMor, Seq(
+    val list = avroFile(ListSchemaMor, Seq(
       manifestFileRowMor("md.avro", dataManifest.length.toLong, 0, 1L,
         3L, 0L, ids.length.toLong, 0L),
       manifestFileRowMor("dm.avro", delManifest.length.toLong, 1, 2L,
@@ -653,15 +578,14 @@ object IcebergWrite {
     */
   def writeTable(id: String,
                  ids: Seq[Long]): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val parts = (0 to 2).map(x => ids.filter(d => (d / 6) % 3 == x))
     val entries = parts.zipWithIndex.map { case (p, x) =>
-      entry(s"data/f-$x.parquet", p.length.toLong,
+      entrySt(1, s"data/f-$x.parquet", p.length.toLong,
         p.map(d => 1L + d % 9).sum)
     }
-    val manifest = container(EntrySchema, entries, sync)
-    val list = container(ListSchema, Seq(manifestFileRow(
+    val manifest = avroFile(EntrySchema, entries, sync)
+    val list = avroFile(ListSchema, Seq(manifestFileRow(
       "m1.avro", manifest.length.toLong, 3L,
       ids.length.toLong)), sync)
     val meta = ("""{"format-version": 2, "table-uuid": """" + id +
@@ -676,15 +600,12 @@ object IcebergWrite {
   /** One manifest entry with an explicit status (1 ADDED,
     * 2 DELETED) — the reduced EntrySchema shape.
     */
-  def entrySt(status: Int, path: String, rc: Long,
-              fsz: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    putZigzag(out, status.toLong)
-    str(out, path)
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    out.toByteArray
-  }
+  def entrySt(status: Int, path: String, rc: Long, fsz: Long): V =
+    rec("status" -> VLong(status),
+      "data_file" -> rec(
+        "file_path" -> VString(path),
+        "record_count" -> VLong(rc),
+        "file_size_in_bytes" -> VLong(fsz)))
 
   private def snapshotJson(sid: Long, seq: Long, ts: Long,
                            list: String): String =
@@ -706,8 +627,7 @@ object IcebergWrite {
     */
   def writeHistoryTable(id: String,
                         ids: Seq[Long]): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val parts = (0 to 2).map(x => ids.filter(d => (d / 6) % 3 == x))
     def v(d: Long): Long = (d * 19) % 977
     val data = parts.map(p => ParquetWrite.writeInt64(
@@ -716,17 +636,17 @@ object IcebergWrite {
     val sorted = ids.sorted
     val compacted = ParquetWrite.writeInt64(Seq("rec_id", "val"),
       sorted.map(d => Array(d, v(d))))
-    val ma = container(EntrySchema, (0 to 2).map(x =>
+    val ma = avroFile(EntrySchema, (0 to 2).map(x =>
       entrySt(1, names(x), parts(x).length.toLong,
         data(x).length.toLong)), sync)
-    val mb = container(EntrySchema,
+    val mb = avroFile(EntrySchema,
       (0 to 2).map(x => entrySt(2, names(x), parts(x).length.toLong,
         data(x).length.toLong)) :+
         entrySt(1, "data/c-0.parquet", sorted.length.toLong,
           compacted.length.toLong), sync)
-    val l1 = container(ListSchema, Seq(manifestFileRow("ma.avro",
+    val l1 = avroFile(ListSchema, Seq(manifestFileRow("ma.avro",
       ma.length.toLong, 3L, ids.length.toLong)), sync)
-    val l2 = container(ListSchema, Seq(manifestFileRow("mb.avro",
+    val l2 = avroFile(ListSchema, Seq(manifestFileRow("mb.avro",
       mb.length.toLong, 1L, sorted.length.toLong)), sync)
     val meta = metadataJson(id, 2L, Seq(
       snapshotJson(1L, 1L, 1700000000000L, "snap-1.avro"),
@@ -899,15 +819,14 @@ object IcebergWrite {
   def writeRefsTable(id: String, ids: Seq[Long], vf: Long => Long,
                      tagName: String,
                      tagMaxAgeMs: Long): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val sorted = ids.sorted
     val data = ParquetWrite.writeInt64(Seq("rec_id", "val"),
       sorted.map(d => Array(d, vf(d))))
-    val m1 = container(EntrySchema, Seq(entrySt(1,
+    val m1 = avroFile(EntrySchema, Seq(entrySt(1,
       "data/f-0.parquet", sorted.length.toLong, data.length.toLong)),
       sync)
-    val l1 = container(ListSchema, Seq(manifestFileRow("m1.avro",
+    val l1 = avroFile(ListSchema, Seq(manifestFileRow("m1.avro",
       m1.length.toLong, 1L, sorted.length.toLong)), sync)
     val meta = metadataJsonRefs(id, 1L,
       Seq(snapshotJson(1L, 1L, 1700000000000L, "snap-1.avro")),
@@ -953,18 +872,17 @@ object IcebergWrite {
         if (rs.exists(_.isEmpty)) None else Some(rs.map(_.get))
       }
     } yield {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sync = md.digest(("sync:" + uuid).getBytes("UTF-8"))
+      val sync = AvroWrite.syncMarker(uuid)
       val newSid = snaps.map(_.sid).max + 1
       val newSeq = snaps.map(_.seq).max + 1
       val sorted = rows.sortBy(_._1)
       val data = ParquetWrite.writeInt64(Seq("rec_id", "val"),
         sorted.map { case (i, v) => Array(i, v) })
       val dataName = s"data/b-$newSid.parquet"
-      val m2 = container(EntrySchema, Seq(entrySt(1, dataName,
+      val m2 = avroFile(EntrySchema, Seq(entrySt(1, dataName,
         sorted.length.toLong, data.length.toLong)), sync)
       val m2Name = s"m-b$newSid.avro"
-      val l2 = container(ListSchema, carried :+ manifestFileRow(
+      val l2 = avroFile(ListSchema, carried :+ manifestFileRow(
         m2Name, m2.length.toLong, 1L, sorted.length.toLong), sync)
       val refs = parseRefs(mo).filterNot(_._1 == branch) :+
         (branch -> Ref(newSid, "branch"))
@@ -1115,8 +1033,7 @@ object IcebergWrite {
     */
   def writeIncrTable(id: String, ids: Seq[Long],
                      vf: Long => Long): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def gen(d: Long): Long = (d / 6) % 4
     val a = ids.filter(gen(_) == 0).sorted
     val b = ids.filter(gen(_) == 1).sorted
@@ -1126,27 +1043,27 @@ object IcebergWrite {
       ParquetWrite.writeInt64(Seq("rec_id", "val"),
         xs.map(d => Array(d, vf(d))))
     val (fa, fb, fc, fd) = (pq(a), pq(b), pq(ab), pq(dd))
-    val m1 = container(EntrySchema, Seq(entrySt(1, "data/a.parquet",
+    val m1 = avroFile(EntrySchema, Seq(entrySt(1, "data/a.parquet",
       a.length.toLong, fa.length.toLong)), sync)
-    val m2 = container(EntrySchema, Seq(entrySt(1, "data/b.parquet",
+    val m2 = avroFile(EntrySchema, Seq(entrySt(1, "data/b.parquet",
       b.length.toLong, fb.length.toLong)), sync)
-    val m3 = container(EntrySchema, Seq(
+    val m3 = avroFile(EntrySchema, Seq(
       entrySt(2, "data/a.parquet", a.length.toLong, fa.length.toLong),
       entrySt(2, "data/b.parquet", b.length.toLong, fb.length.toLong),
       entrySt(1, "data/c.parquet", ab.length.toLong,
         fc.length.toLong)), sync)
-    val m4 = container(EntrySchema, Seq(entrySt(1, "data/d.parquet",
+    val m4 = avroFile(EntrySchema, Seq(entrySt(1, "data/d.parquet",
       dd.length.toLong, fd.length.toLong)), sync)
     def mrow(p: String, m: Array[Byte], nf: Long, nr: Long) =
       manifestFileRow(p, m.length.toLong, nf, nr)
-    val l1 = container(ListSchema, Seq(
+    val l1 = avroFile(ListSchema, Seq(
       mrow("m1.avro", m1, 1L, a.length.toLong)), sync)
-    val l2 = container(ListSchema, Seq(
+    val l2 = avroFile(ListSchema, Seq(
       mrow("m1.avro", m1, 1L, a.length.toLong),
       mrow("m2.avro", m2, 1L, b.length.toLong)), sync)
-    val l3 = container(ListSchema, Seq(
+    val l3 = avroFile(ListSchema, Seq(
       mrow("m3.avro", m3, 1L, ab.length.toLong)), sync)
-    val l4 = container(ListSchema, Seq(
+    val l4 = avroFile(ListSchema, Seq(
       mrow("m3.avro", m3, 1L, ab.length.toLong),
       mrow("m4.avro", m4, 1L, dd.length.toLong)), sync)
     val t0 = 1700000000000L
@@ -1186,37 +1103,26 @@ object IcebergWrite {
 
   def entryLin(status: Int, seq: Long, content: Int, path: String,
                rc: Long, fsz: Long, firstRowId: Option[Long],
-               format: String = "PARQUET"): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    putZigzag(out, status.toLong)
-    putZigzag(out, seq)
-    putZigzag(out, content.toLong)
-    str(out, path)
-    str(out, format)
-    putZigzag(out, rc)
-    putZigzag(out, fsz)
-    firstRowId match {
-      case Some(f) => union(out, 1)(putZigzag(out, f))
-      case None => union(out, 0)(())
-    }
-    out.toByteArray
-  }
+               format: String = "PARQUET"): V =
+    rec("status" -> VLong(status),
+      "sequence_number" -> VLong(seq),
+      "data_file" -> rec(
+        "content" -> VLong(content),
+        "file_path" -> VString(path),
+        "file_format" -> VString(format),
+        "record_count" -> VLong(rc),
+        "file_size_in_bytes" -> VLong(fsz),
+        "first_row_id" -> opt(firstRowId)))
 
   def manifestFileRowLin(path: String, length: Long, content: Int,
                          seq: Long, rows: Long,
-                         firstRowId: Option[Long]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    str(out, path)
-    putZigzag(out, length)
-    putZigzag(out, content.toLong)
-    putZigzag(out, seq)
-    putZigzag(out, rows)
-    firstRowId match {
-      case Some(f) => union(out, 1)(putZigzag(out, f))
-      case None => union(out, 0)(())
-    }
-    out.toByteArray
-  }
+                         firstRowId: Option[Long]): V =
+    rec("manifest_path" -> VString(path),
+      "manifest_length" -> VLong(length),
+      "content" -> VLong(content),
+      "sequence_number" -> VLong(seq),
+      "added_rows_count" -> VLong(rows),
+      "first_row_id" -> opt(firstRowId))
 
   private def snapshotJsonLin(sid: Long, seq: Long, ts: Long,
                               list: String, op: String,
@@ -1237,8 +1143,7 @@ object IcebergWrite {
     */
   def writeLineageTable(id: String, ids: Seq[Long],
                         vf: Long => Long): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def gen(d: Long): Long = (d / 6) % 4
     val a = ids.filter(gen(_) == 0).sorted
     val b = ids.filter(gen(_) == 1).sorted
@@ -1264,11 +1169,11 @@ object IcebergWrite {
       Map("referenced-data-file" -> "data/c.parquet",
         "cardinality" -> dvPos.length.toString))),
       Map("created-by" -> "graft"))
-    val mA = container(EntrySchemaLin, Seq(entryLin(1, 1L, 0,
+    val mA = avroFile(EntrySchemaLin, Seq(entryLin(1, 1L, 0,
       "data/a.parquet", na, fa.length.toLong, None)), sync)
-    val mB = container(EntrySchemaLin, Seq(entryLin(1, 2L, 0,
+    val mB = avroFile(EntrySchemaLin, Seq(entryLin(1, 2L, 0,
       "data/b.parquet", nb, fb.length.toLong, None)), sync)
-    val mC = container(EntrySchemaLin, Seq(
+    val mC = avroFile(EntrySchemaLin, Seq(
       // DELETED entries carry their ids EXPLICITLY — preserved, the
       // q259 EXISTING-discipline applied to lineage
       entryLin(2, 3L, 0, "data/a.parquet", na, fa.length.toLong,
@@ -1277,9 +1182,9 @@ object IcebergWrite {
         Some(na)),
       entryLin(1, 3L, 0, "data/c.parquet", na + nb,
         fc.length.toLong, None)), sync)
-    val mD = container(EntrySchemaLin, Seq(entryLin(1, 4L, 0,
+    val mD = avroFile(EntrySchemaLin, Seq(entryLin(1, 4L, 0,
       "data/d.parquet", nd, fd.length.toLong, None)), sync)
-    val mV = container(EntrySchemaLin, Seq(entryLin(1, 5L, 1,
+    val mV = avroFile(EntrySchemaLin, Seq(entryLin(1, 5L, 1,
       "dv-5.puffin", dvPos.length.toLong, puffin.length.toLong,
       None, format = "PUFFIN")), sync)
     def row(p: String, m: Array[Byte], content: Int, seq: Long,
@@ -1290,11 +1195,11 @@ object IcebergWrite {
     val rC = row("m-c.avro", mC, 0, 3L, na + nb, Some(na + nb))
     val rD = row("m-d.avro", mD, 0, 4L, nd, Some(2L * (na + nb)))
     val rV = row("m-v.avro", mV, 1, 5L, dvPos.length.toLong, None)
-    val l1 = container(ListSchemaLin, Seq(rA), sync)
-    val l2 = container(ListSchemaLin, Seq(rA, rB), sync)
-    val l3 = container(ListSchemaLin, Seq(rC), sync)
-    val l4 = container(ListSchemaLin, Seq(rC, rD), sync)
-    val l5 = container(ListSchemaLin, Seq(rC, rD, rV), sync)
+    val l1 = avroFile(ListSchemaLin, Seq(rA), sync)
+    val l2 = avroFile(ListSchemaLin, Seq(rA, rB), sync)
+    val l3 = avroFile(ListSchemaLin, Seq(rC), sync)
+    val l4 = avroFile(ListSchemaLin, Seq(rC, rD), sync)
+    val l5 = avroFile(ListSchemaLin, Seq(rC, rD, rV), sync)
     val t0 = 1700000000000L
     val nextRow = 2L * (na + nb) + nd
     val meta = s"""{"current-snapshot-id": 5, "format-version": 3, "next-row-id": $nextRow, "snapshots": [${
@@ -1466,12 +1371,11 @@ object IcebergWrite {
         if (per.exists(_.isEmpty)) None else Some(per.map(_.get))
       }
     } yield {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
-      val manifest = container(EntrySchema, counted.map {
+      val sync = AvroWrite.syncMarker(id)
+      val manifest = avroFile(EntrySchema, counted.map {
         case (p, sz, rc) => entrySt(1, p, rc, sz)
       }, sync)
-      val list = container(ListSchema, Seq(manifestFileRow(
+      val list = avroFile(ListSchema, Seq(manifestFileRow(
         "m-migrated.avro", manifest.length.toLong,
         counted.length.toLong, counted.map(_._3).sum)), sync)
       val meta = metadataJson(id, 1L, Seq(
@@ -1497,13 +1401,12 @@ object IcebergWrite {
   def migrateFromHudi(hudi: Map[String, Array[Byte]],
                       id: String): Option[Map[String, Array[Byte]]] =
     HudiWrite.cleanSnapshot(hudi).map { groups =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+      val sync = AvroWrite.syncMarker(id)
       val sorted = groups.sortBy(_._2)
-      val manifest = container(EntrySchema, sorted.map {
+      val manifest = avroFile(EntrySchema, sorted.map {
         case (_, p, rc) => entrySt(1, p, rc, hudi(p).length.toLong)
       }, sync)
-      val list = container(ListSchema, Seq(manifestFileRow(
+      val list = avroFile(ListSchema, Seq(manifestFileRow(
         "m-migrated.avro", manifest.length.toLong,
         sorted.length.toLong, sorted.map(_._3).sum)), sync)
       val meta = metadataJson(id, 1L, Seq(
@@ -1578,8 +1481,7 @@ object IcebergWrite {
     */
   def writeBucketTable(id: String, ids: Seq[Long], vf: Long => Long,
                        nBuckets: Int): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val out = Map.newBuilder[String, Array[Byte]]
     val entries = (0 until nBuckets).map { bkt =>
       val p = ids.filter(bucketLong(_, nBuckets) == bkt).sorted
@@ -1589,9 +1491,9 @@ object IcebergWrite {
       entryEvo(s"data/b-$bkt.parquet", p.length.toLong,
         bytes.length.toLong, Some(bkt))
     }
-    val m = container(EntrySchemaEvo1, entries, sync)
+    val m = avroFile(EntrySchemaEvo1, entries, sync)
     out += ("m-bucket.avro" -> m)
-    val list = container(ListSchemaEvo, Seq(
+    val list = avroFile(ListSchemaEvo, Seq(
       manifestFileRowEvo("m-bucket.avro", m.length.toLong, 0)), sync)
     out += ("snap-1.avro" -> list)
     val meta = (s"""{"format-version": 2, "table-uuid": "$id", """ +
@@ -1703,8 +1605,7 @@ object IcebergWrite {
     */
   def writeTruncTable(id: String, ids: Seq[Long], vf: Long => Long,
                       w: Int): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val out = Map.newBuilder[String, Array[Byte]]
     val buckets = ids.groupBy(truncateLong(_, w)).toSeq.sortBy(_._1)
     val entries = buckets.map { case (b, p0) =>
@@ -1715,9 +1616,9 @@ object IcebergWrite {
       entryEvo(s"data/t-$b.parquet", p.length.toLong,
         bytes.length.toLong, Some(b.toInt))
     }
-    val m = container(EntrySchemaEvo1, entries, sync)
+    val m = avroFile(EntrySchemaEvo1, entries, sync)
     out += ("m-trunc.avro" -> m)
-    val list = container(ListSchemaEvo, Seq(
+    val list = avroFile(ListSchemaEvo, Seq(
       manifestFileRowEvo("m-trunc.avro", m.length.toLong, 0)), sync)
     out += ("snap-1.avro" -> list)
     val meta = (s"""{"format-version": 2, "table-uuid": "$id", """ +
@@ -1869,8 +1770,7 @@ object IcebergWrite {
                          transform: String)
       : Option[Map[String, Array[Byte]]] = {
     if (temporalTransform(transform, 0L).isEmpty) return None
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val out = Map.newBuilder[String, Array[Byte]]
     val buckets = rows
       .groupBy(r => temporalTransform(transform, r._2).get)
@@ -1883,9 +1783,9 @@ object IcebergWrite {
       entryEvo(s"data/$transform-$ord.parquet", p.length.toLong,
         bytes.length.toLong, Some(ord))
     }
-    val m = container(EntrySchemaEvo1, entries, sync)
+    val m = avroFile(EntrySchemaEvo1, entries, sync)
     out += ("m-temporal.avro" -> m)
-    val list = container(ListSchemaEvo, Seq(
+    val list = avroFile(ListSchemaEvo, Seq(
       manifestFileRowEvo("m-temporal.avro", m.length.toLong, 0)),
       sync)
     out += ("snap-1.avro" -> list)
@@ -2052,8 +1952,7 @@ object IcebergWrite {
     */
   def writeDefaultsTable(id: String, ids: Seq[Long],
                          vf: Long => Long): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def gen(d: Long): Long = (d / 6) % 3
     val a = ids.filter(gen(_) == 0).sorted
     val b = ids.filter(gen(_) == 1).sorted
@@ -2064,13 +1963,13 @@ object IcebergWrite {
       b.map(d => Array(d, vf(d), (d * 3) % 50)))
     val fc = ParquetWrite.writeInt64(Seq("rec_id", "val", "score"),
       c.map(d => Array(d, vf(d), 9L))) // write-default MATERIALIZED
-    val mA = container(EntrySchema, Seq(entrySt(1, "data/a.parquet",
+    val mA = avroFile(EntrySchema, Seq(entrySt(1, "data/a.parquet",
       a.length.toLong, fa.length.toLong)), sync)
-    val mB = container(EntrySchema, Seq(entrySt(1, "data/b.parquet",
+    val mB = avroFile(EntrySchema, Seq(entrySt(1, "data/b.parquet",
       b.length.toLong, fb.length.toLong)), sync)
-    val mC = container(EntrySchema, Seq(entrySt(1, "data/c.parquet",
+    val mC = avroFile(EntrySchema, Seq(entrySt(1, "data/c.parquet",
       c.length.toLong, fc.length.toLong)), sync)
-    val l3 = container(ListSchema, Seq(
+    val l3 = avroFile(ListSchema, Seq(
       manifestFileRow("m-a.avro", mA.length.toLong, 1L,
         a.length.toLong),
       manifestFileRow("m-b.avro", mB.length.toLong, 1L,
@@ -2290,8 +2189,7 @@ object IcebergWrite {
     */
   def writeChangelogTable(id: String, ids: Seq[Long],
                           vf: Long => Long): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def gen(d: Long): Long = (d / 6) % 4
     val a = ids.filter(gen(_) == 0).sorted
     val b = ids.filter(gen(_) == 1).sorted
@@ -2312,28 +2210,28 @@ object IcebergWrite {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))),
         W.LeafData(Array.fill(pdPos.length)(0), null,
           longs = pdPos.toArray)))
-    val mA = container(EntrySchemaMor, Seq(entryMor(1, 1L, 0,
+    val mA = avroFile(EntrySchemaMor, Seq(entryMor(1, 1L, 0,
       "data/a.parquet", a.length.toLong, fa.length.toLong)), sync)
-    val mB = container(EntrySchemaMor, Seq(entryMor(1, 2L, 0,
+    val mB = avroFile(EntrySchemaMor, Seq(entryMor(1, 2L, 0,
       "data/b.parquet", b.length.toLong, fb.length.toLong)), sync)
-    val mD = container(EntrySchemaMor, Seq(entryMor(1, 3L, 1,
+    val mD = avroFile(EntrySchemaMor, Seq(entryMor(1, 3L, 1,
       "pd-3.parquet", pdPos.length.toLong, pd.length.toLong)), sync)
-    val mE = container(EntrySchemaMor, Seq(entryMor(1, 4L, 0,
+    val mE = avroFile(EntrySchemaMor, Seq(entryMor(1, 4L, 0,
       "data/d.parquet", dd.length.toLong, fd.length.toLong)), sync)
     def row(p: String, m: Array[Byte], content: Int, seq: Long,
             rows: Long) =
       manifestFileRowMor(p, m.length.toLong, content, seq, 1L, 0L,
         rows, 0L)
-    val l1 = container(ListSchemaMor, Seq(
+    val l1 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong)), sync)
-    val l2 = container(ListSchemaMor, Seq(
+    val l2 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong),
       row("m-b.avro", mB, 0, 2L, b.length.toLong)), sync)
-    val l3 = container(ListSchemaMor, Seq(
+    val l3 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong),
       row("m-b.avro", mB, 0, 2L, b.length.toLong),
       row("m-d.avro", mD, 1, 3L, pdPos.length.toLong)), sync)
-    val l4 = container(ListSchemaMor, Seq(
+    val l4 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong),
       row("m-b.avro", mB, 0, 2L, b.length.toLong),
       row("m-d.avro", mD, 1, 3L, pdPos.length.toLong),
@@ -2370,8 +2268,7 @@ object IcebergWrite {
                             vf: Long => Long)
       : Map[String, Array[Byte]] = {
     val base = writeChangelogTable(id, ids, vf)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     def gen(d: Long): Long = (d / 6) % 4
     val a = ids.filter(gen(_) == 0).sorted
     val pdPos = a.zipWithIndex.collect {
@@ -2383,7 +2280,7 @@ object IcebergWrite {
       Map("referenced-data-file" -> "data/a.parquet",
         "cardinality" -> pdPos.length.toString))),
       Map("created-by" -> "graft"))
-    val mD = container(EntrySchemaMor, Seq(entryMor(1, 3L, 1,
+    val mD = avroFile(EntrySchemaMor, Seq(entryMor(1, 3L, 1,
       "dv-3.puffin", pdPos.length.toLong, puffin.length.toLong,
       format = "PUFFIN")), sync)
     // splice the DV manifest over the parquet-delete one: same name,
@@ -2396,11 +2293,11 @@ object IcebergWrite {
     val dd = ids.filter(d => gen(d) >= 2).sorted
     val mA = base("m-a.avro"); val mB = base("m-b.avro")
     val mE = base("m-e.avro")
-    val l3 = container(ListSchemaMor, Seq(
+    val l3 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong),
       row("m-b.avro", mB, 0, 2L, b.length.toLong),
       row("m-d.avro", mD, 1, 3L, pdPos.length.toLong)), sync)
-    val l4 = container(ListSchemaMor, Seq(
+    val l4 = avroFile(ListSchemaMor, Seq(
       row("m-a.avro", mA, 0, 1L, a.length.toLong),
       row("m-b.avro", mB, 0, 2L, b.length.toLong),
       row("m-d.avro", mD, 1, 3L, pdPos.length.toLong),
@@ -2731,18 +2628,17 @@ object IcebergWrite {
     */
   def writeSprawlTable(id: String,
                        ids: Seq[Long]): Map[String, Array[Byte]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sync = md.digest(("sync:" + id).getBytes("UTF-8"))
+    val sync = AvroWrite.syncMarker(id)
     val parts = (0 to 2).map(x => ids.filter(d => (d / 6) % 3 == x))
     def v(d: Long): Long = (d * 21) % 953
     val data = parts.map(p => ParquetWrite.writeInt64(
       Seq("rec_id", "val"), p.map(d => Array(d, v(d)))))
     val names = (0 to 2).map(x => s"data/f-$x.parquet")
     val manifests = (0 to 2).map { x =>
-      container(EntrySchema, Seq(entrySt(1, names(x),
+      avroFile(EntrySchema, Seq(entrySt(1, names(x),
         parts(x).length.toLong, data(x).length.toLong)), sync)
     }
-    val list = container(ListSchema, (0 to 2).map(x =>
+    val list = avroFile(ListSchema, (0 to 2).map(x =>
       manifestFileRow(s"m-$x.avro", manifests(x).length.toLong, 1L,
         parts(x).length.toLong)), sync)
     val meta = metadataJson(id, 1L, Seq(
@@ -2813,11 +2709,10 @@ object IcebergWrite {
       }
     } yield {
       val live = entries.filter(_._4 != 2L).sortBy(_._1)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sync = md.digest(("sync:" + uuid).getBytes("UTF-8"))
-      val merged = container(EntrySchema, live.map(e =>
+      val sync = AvroWrite.syncMarker(uuid)
+      val merged = avroFile(EntrySchema, live.map(e =>
         entrySt(0, e._1, e._2, e._3)), sync)
-      val newList = container(ListSchema, Seq(manifestFileRow(
+      val newList = avroFile(ListSchema, Seq(manifestFileRow(
         "m-merged.avro", merged.length.toLong, live.length.toLong,
         live.map(_._2).sum)), sync)
       val newSid = current + 1

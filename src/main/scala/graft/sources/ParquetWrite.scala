@@ -20,7 +20,7 @@ package graft.sources
   * lists).
   */
 object ParquetWrite {
-  import Bytes.{putUvarint, putZigzag}
+  import Bytes.{putLe32, putLe64, putUvarint, putZigzag, toLe32, toLe64}
 
   // ---- thrift compact encoder -------------------------------------------
 
@@ -271,20 +271,13 @@ object ParquetWrite {
   private def bitsFor(m: Int): Int =
     32 - Integer.numberOfLeadingZeros(m)
 
-  private def le4(v: Int): Array[Byte] =
-    Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
-  private def le8(v: Long): Array[Byte] =
-    Array.tabulate[Byte](8)(k => ((v >>> (8 * k)) & 0xff).toByte)
-
   /** PLAIN encoding of one value (the same bytes Statistics /
     * ColumnIndex bounds and bloom hashing use).
     */
   private def plainOne(physType: Int, long: Long,
                        bin: Array[Byte]): Array[Byte] = physType match {
-    case 2 /* INT64 */ | 5 /* DOUBLE */ => le8(long)
-    case 1 /* INT32 */ | 4 /* FLOAT */ => le4(long.toInt)
+    case 2 /* INT64 */ | 5 /* DOUBLE */ => toLe64(long)
+    case 1 /* INT32 */ | 4 /* FLOAT */ => toLe32(long.toInt)
     case 6 /* BYTE_ARRAY */ => bin
     case t => throw new IllegalArgumentException(s"physType $t")
   }
@@ -518,8 +511,8 @@ object ParquetWrite {
               if (d > mx) mx = d
               i += 1
             }
-            statMin(c) = le8(java.lang.Double.doubleToLongBits(mn))
-            statMax(c) = le8(java.lang.Double.doubleToLongBits(mx))
+            statMin(c) = toLe64(java.lang.Double.doubleToLongBits(mn))
+            statMax(c) = toLe64(java.lang.Double.doubleToLongBits(mx))
           } else {
             var mn = ld.longs(0); var mx = ld.longs(0)
             var i = 1
@@ -539,9 +532,9 @@ object ParquetWrite {
         dictOffsets(c) = out.size().toLong
         val pb = new java.io.ByteArrayOutputStream()
         if (isBin) binDict.foreach { v =>
-          pb.write(le4(v.length), 0, 4); pb.write(v, 0, v.length)
+          putLe32(pb, v.length); pb.write(v, 0, v.length)
         }
-        else longDict.foreach(v => pb.write(le8(v), 0, 8))
+        else longDict.foreach(putLe64(pb, _))
         val plain = pb.toByteArray
         val body = compressBody(plain)
         val nd = if (isBin) binDict.length else longDict.length
@@ -581,11 +574,11 @@ object ParquetWrite {
           val body0 = new java.io.ByteArrayOutputStream()
           if (!pageV2) {
             if (sh.maxRep > 0) {
-              body0.write(le4(repRuns.length), 0, 4)
+              putLe32(body0, repRuns.length)
               body0.write(repRuns, 0, repRuns.length)
             }
             if (sh.maxDef > 0) {
-              body0.write(le4(defRuns.length), 0, 4)
+              putLe32(body0, defRuns.length)
               body0.write(defRuns, 0, defRuns.length)
             }
           }
@@ -610,10 +603,10 @@ object ParquetWrite {
               val lt =
                 if (isBin) binLt _
                 else if (sh.physType == 5) (a: Array[Byte], b: Array[Byte]) =>
-                  java.lang.Double.longBitsToDouble(leRead8(a)) <
-                    java.lang.Double.longBitsToDouble(leRead8(b))
+                  java.lang.Double.longBitsToDouble(Bytes.le64(a, 0)) <
+                    java.lang.Double.longBitsToDouble(Bytes.le64(b, 0))
                 else (a: Array[Byte], b: Array[Byte]) =>
-                  leRead8(a) < leRead8(b)
+                  Bytes.le64(a, 0) < Bytes.le64(b, 0)
               if (pMin == null || lt(enc, pMin)) pMin = enc
               if (pMax == null || lt(pMax, enc)) pMax = enc
               i += 1
@@ -672,7 +665,7 @@ object ParquetWrite {
               while (i < present) {
                 if (isBin) {
                   val v = ld.bins(presentAt + i)
-                  body0.write(le4(v.length), 0, 4)
+                  putLe32(body0, v.length)
                   body0.write(v, 0, v.length)
                 } else {
                   val enc = plainOne(sh.physType, ld.longs(presentAt + i),
@@ -889,12 +882,6 @@ object ParquetWrite {
     out.toByteArray
   }
 
-  private def leRead8(v: Array[Byte]): Long = {
-    var x = 0L; var k = 7
-    while (k >= 0) { x = (x << 8) | (v(k) & 0xffL); k -= 1 }
-    x
-  }
-
   /** Write `names.length` REQUIRED INT64 columns across MULTIPLE ROW
     * GROUPS — the parquet unit a 100 TB scan plans on: each group's
     * chunks carry their own footer Statistics, so a range-sorted
@@ -989,8 +976,8 @@ object ParquetWrite {
         if (withStats && ch.n > 0) {
           f.structField(12)
           f.i64(3, 0L)
-          f.bytesField(5, le8(ch.mx))
-          f.bytesField(6, le8(ch.mn))
+          f.bytesField(5, toLe64(ch.mx))
+          f.bytesField(6, toLe64(ch.mn))
           f.end()
         }
         f.end()
@@ -1114,12 +1101,10 @@ object ParquetWrite {
           if (v < mn) mn = v
           if (v > mx) mx = v
         }
-        def le8(v: Long): Array[Byte] =
-          Array.tabulate[Byte](8)(k => ((v >>> (8 * k)) & 0xff).toByte)
         f.structField(12)
         f.i64(3, 0L)                    // null_count
-        f.bytesField(5, le8(mx))        // max_value
-        f.bytesField(6, le8(mn))        // min_value
+        f.bytesField(5, toLe64(mx))        // max_value
+        f.bytesField(6, toLe64(mn))        // min_value
         f.end()
       }
       f.end()                           // ColumnMetaData

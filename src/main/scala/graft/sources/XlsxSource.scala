@@ -64,16 +64,26 @@ object XlsxSource {
     files.flatMap { row =>
       val file = row.getString(0)
       val parsed = XlsxParser.parseSheet(row.getAs[Array[Byte]](1), sheetName)
-      val hdr = headerRow(parsed).toMap // header name -> 0-based col index
-      val dataRows = parsed.rows.dropWhile(r => !isHeader(r._2)).drop(1)
-      dataRows.iterator.zipWithIndex.map { case ((_, cells), i) =>
-        val byCol = cells.iterator.map(c => c.col -> c).toMap
-        val vals = hdrs.map(h => hdr.get(h).flatMap(byCol.get).map(_.value).orNull)
-        val links = linkCols.map(h =>
-          hdr.get(h).flatMap(byCol.get).flatMap(_.hyperlink).orNull)
-        Row.fromSeq(Seq(file, sheetName, (i + 1).toLong) ++ vals ++ links)
+      dataRows(parsed).map { case (rownum, cell) =>
+        val vals = hdrs.map(h => cell(h).map(_.value).orNull)
+        val links = linkCols.map(h => cell(h).flatMap(_.hyperlink).orNull)
+        Row.fromSeq(Seq(file, sheetName, rownum) ++ vals ++ links)
       }
     }.toDF()
+  }
+
+  /** The rows below a parsed sheet's header, bound by header NAME: each
+    * row's 1-based `_rownum` and its cell under a header, if any. Both
+    * xlsx sources bind rows through this one walk.
+    */
+  private[graft] def dataRows(s: XlsxParser.Sheet)
+      : Iterator[(Long, String => Option[XlsxParser.Cell])] = {
+    val hdr = headerRow(s).toMap // header name -> 0-based col index
+    s.rows.dropWhile(r => !isHeader(r._2)).drop(1).iterator.zipWithIndex
+      .map { case ((_, cells), i) =>
+        val byCol = cells.iterator.map(c => c.col -> c).toMap
+        ((i + 1).toLong, (h: String) => hdr.get(h).flatMap(byCol.get))
+      }
   }
 
   /** The .xlsx workbooks at `path` (the file itself, or a directory's

@@ -140,21 +140,17 @@ private[v2] class XlsxPartitionReader(file: String, sheet: String,
 
   private val rows: Iterator[InternalRow] = {
     val parsed = XlsxParser.parseSheet(XlsxDataSource.readBytes(file), sheet)
-    val hdr = XlsxSource.headerRow(parsed).toMap // same binding as XlsxSource
-    val dataRows = parsed.rows
-      .dropWhile(r => !r._2.exists(_.value != null)).drop(1)
-    dataRows.iterator.zipWithIndex.map { case ((_, cells), i) =>
-      val byCol = cells.iterator.map(c => c.col -> c).toMap
+    // the same header-name binding as XlsxSource.read
+    XlsxSource.dataRows(parsed).map { case (rownum, cell) =>
       val vals: Array[Any] = columns.map {
         case "_file" => UTF8String.fromString(file)
         case "_sheet" => UTF8String.fromString(sheet)
-        case "_rownum" => (i + 1).toLong
+        case "_rownum" => rownum
         case h if h.startsWith("_hyperlink_") =>
-          hdr.get(h.stripPrefix("_hyperlink_")).flatMap(byCol.get)
-            .flatMap(_.hyperlink).map(UTF8String.fromString).orNull
-        case h =>
-          hdr.get(h).flatMap(byCol.get).map(_.value)
+          cell(h.stripPrefix("_hyperlink_")).flatMap(_.hyperlink)
             .map(UTF8String.fromString).orNull
+        case h =>
+          cell(h).map(_.value).map(UTF8String.fromString).orNull
       }
       new GenericInternalRow(vals)
     }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Brotli
+import org.apache.spark.graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the own RFC 7932 decoder against REAL libbrotli output
@@ -73,7 +74,7 @@ class BrotliSpec extends AnyFunSuite {
   test("encoder: libbrotlidec (the reference C decoder, via CPython " +
     "ctypes) decodes own streams byte-exact across the battery") {
     import scala.sys.process._
-    val tmp = java.nio.file.Files.createTempDirectory("brenc")
+    val tmp = TempDirs.create("brenc")
     val checks = Seq.newBuilder[String]
     for ((name, data) <- encCorpora) {
       java.nio.file.Files.write(tmp.resolve(s"$name.br"),
@@ -130,7 +131,7 @@ class BrotliSpec extends AnyFunSuite {
     assert(P.parseFooter(bytes).get.rowGroups.head.cols
       .forall(_.codec == P.CodecBrotli))
     assert(P.columnLongs(bytes, "rec_id").get.sum == ids.sum)
-    val tmp = java.nio.file.Files.createTempDirectory("brpq")
+    val tmp = TempDirs.create("brpq")
     val f = tmp.resolve("own.parquet")
     java.nio.file.Files.write(f, bytes)
     val pf = tmp.resolve("check.py")

@@ -15,7 +15,7 @@ class BytesLintSpec extends AnyFunSuite {
 
   private val helperDef = java.util.regex.Pattern.compile(
     "\\bdef\\s+(uvarint|varint|uleb|zigzag|zig|zz|le16|le32|le64|be16|" +
-      "be32|be64|u16|u32|u64|fixed64)\\b")
+      "be32|be64|u16|u32|u64|fixed64|le4|le8|leRead8)\\b")
   private val damageClass = java.util.regex.Pattern.compile(
     "extends\\s+RuntimeException\\s*\\(\\s*null\\s*,\\s*null\\s*,\\s*" +
       "false\\s*,\\s*false\\s*\\)")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Bzip2
+import org.apache.spark.graft.TempDirs
 
 /** From-scratch bzip2 decoder pinned against CPython's bz2 module (the
   * independent libbzip2 encoder) via fixtures/bz2_golden.parquet —
@@ -96,7 +97,7 @@ class Bzip2Spec extends SparkSpec {
   test("Bzip2Encode: CPython bz2 (libbzip2) decodes every encoder " +
     "output byte-exact, at levels 1 and 9") {
     import sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("bz2enc")
+    val dir = TempDirs.create("bz2enc")
     val checks = Seq.newBuilder[String]
     for ((name, data) <- encBattery; level <- Seq(1, 9)) {
       val bz = graft.sources.Bzip2Encode.compress(data, level)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.functions._
 
 /** Pins the engine's checkpoint hygiene: every `localCheckpoint` an
@@ -52,7 +53,7 @@ class CheckpointSpec extends SparkSpec {
     import spark.implicits._
     Checkpoints.release()
     val base = persistedCount
-    val tmp = java.nio.file.Files.createTempDirectory("ckpt_stream").toString
+    val tmp = TempDirs.create("ckpt_stream").toString
     // two micro-batches of the near-dup ingest gate — the long-running
     // service shape: per-batch blocks must not outlive the batch call
     graft.streaming.StreamOps.nearDupBatch(

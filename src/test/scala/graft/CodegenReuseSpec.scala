@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.streaming.IngestStream
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Generated code survives for the whole session: a second run of the
@@ -24,7 +25,7 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   test("a second pass of the four curation queries compiles no class") {
-    val out = Files.createTempDirectory("codegen_reuse_curate").toString
+    val out = TempDirs.create("codegen_reuse_curate").toString
     val queries = Seq("q161_pretrain_pipeline", "q102_curation_pipeline",
       "q146_bloom_decontaminate", "q34_minhash_lsh")
     def pass(): Long = compiled(queries.foreach { q =>
@@ -38,7 +39,7 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   test("the third of three one-file ingest commits compiles no class") {
-    val base = Files.createTempDirectory("codegen_reuse_ingest").toString
+    val base = TempDirs.create("codegen_reuse_ingest").toString
     val counts = Seq("wb_000.xlsx", "wb_001.xlsx", "wb_002.xlsx").map { f =>
       Files.createDirectories(Paths.get(base, "in"))
       Files.copy(Paths.get("fixtures/ingestion", f), Paths.get(base, "in", f),

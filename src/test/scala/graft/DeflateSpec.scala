@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Deflate, Gzip}
+import org.apache.spark.graft.TempDirs
 
 /** The own DEFLATE encoder's laws: stdlib Inflater (the canonical
   * RFC 1951 decoder) must reproduce every input byte-exact from the
@@ -221,7 +222,7 @@ class DeflateSpec extends SparkSpec {
     val fm = P.parseFooter(gz).getOrElse(fail("footer"))
     assert(fm.rowGroups.head.cols.forall(_.codec == 2))
     // parquet-mr (Spark) as the independent reader of own-gzip pages
-    val dir = java.nio.file.Files.createTempDirectory("pqgz").toFile
+    val dir = TempDirs.create("pqgz").toFile
     val p = new java.io.File(dir, "own_gzip.parquet")
     java.nio.file.Files.write(p.toPath, gz)
     val got = spark.read.parquet(p.getAbsolutePath)

@@ -7,12 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Engine.localCpus]], so a file that builds its own `SparkSession` or
   * reads `SPARK_GRAFT_CPUS` itself fails here. `Bench.scala` keeps its
   * own session and env-var contract and is the one exception. Temp
-  * directories come from [[org.apache.spark.graft.TempDirs]], which
-  * deletes them at JVM exit.
+  * directories, in the main tree and the tests alike, come from
+  * [[org.apache.spark.graft.TempDirs]], which deletes them at JVM exit.
   */
 class EntryPointLintSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get("src/main/scala")
+  private val testRoot = java.nio.file.Paths.get("src/test/scala")
   private val sessionFiles = Set("graft/Engine.scala", "graft/Bench.scala")
 
   private val builder =
@@ -20,10 +21,11 @@ class EntryPointLintSpec extends AnyFunSuite {
   private val cpusVar = java.util.regex.Pattern.compile("\"SPARK_GRAFT_CPUS\"")
   private val tempDir = java.util.regex.Pattern.compile("\\bcreateTemp(Directory|Dir)\\b")
 
-  /** Each main-tree file but `except`, as (relative path, code without
-    * comments).
+  /** Each file under `root` but `except`, as (relative path, code
+    * without comments).
     */
-  private def sources(except: Set[String]): Seq[(String, String)] = {
+  private def sources(except: Set[String],
+                      root: java.nio.file.Path = root): Seq[(String, String)] = {
     val files = LintSources.files(root, recursive = true)
     assert(files.nonEmpty, s"no sources under $root")
     files.map(f => (root.relativize(f).toString.replace('\\', '/'), f))
@@ -40,9 +42,9 @@ class EntryPointLintSpec extends AnyFunSuite {
   }
 
   test("no temp directory created outside TempDirs") {
-    val offenders = sources(Set("org/apache/spark/graft/TempDirs.scala")).collect {
-      case (rel, code) if tempDir.matcher(code).find() => rel
-    }
+    val offenders = (sources(Set("org/apache/spark/graft/TempDirs.scala")) ++
+      sources(Set.empty, testRoot).map { case (rel, code) => (s"test/$rel", code) })
+      .collect { case (rel, code) if tempDir.matcher(code).find() => rel }
     assert(offenders.isEmpty,
       s"temp directories not deleted at exit: ${offenders.mkString(", ")}")
   }

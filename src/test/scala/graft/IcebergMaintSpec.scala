@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.IcebergWrite
+import graft.sources.{AvroWrite, IcebergWrite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the Iceberg maintenance WRITE path (q338): the two-snapshot
@@ -351,21 +351,20 @@ class IcebergMaintSpec extends AnyFunSuite {
     assert(s5.toSet ==
       s4.filterNot(r => expectDead(r._1)).toSet)
     // fail closed: manifest block AND entry id both null
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val sync = md5.digest("sync:lin-spec".getBytes("UTF-8"))
-    val badL1 = W.container(W.ListSchemaLin, Seq(
+    val badL1 = AvroWrite.container(W.ListSchemaLin, Seq(
       W.manifestFileRowLin("m-a.avro",
-        files("m-a.avro").length.toLong, 0, 1L, na, None)), sync)
+        files("m-a.avro").length.toLong, 0, 1L, na, None)),
+      syncSeed = "lin-spec")
     assert(W.lineageScan(files + ("snap-1.avro" -> badL1), meta,
       1L).isEmpty, "unassignable ids must close")
     // duplicate ids (overlapping blocks) must close
-    val badL4 = W.container(W.ListSchemaLin, Seq(
+    val badL4 = AvroWrite.container(W.ListSchemaLin, Seq(
       W.manifestFileRowLin("m-c.avro",
         files("m-c.avro").length.toLong, 0, 3L,
         na + b.length, Some(na + b.length)),
       W.manifestFileRowLin("m-d.avro",
         files("m-d.avro").length.toLong, 0, 4L,
-        newRids.size.toLong, Some(0L))), sync)
+        newRids.size.toLong, Some(0L))), syncSeed = "lin-spec")
     assert(W.lineageScan(files + ("snap-4.avro" -> badL4), meta,
       4L).isEmpty, "duplicated row ids must close")
   }

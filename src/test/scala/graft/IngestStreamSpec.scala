@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.plans.WarehouseStore
 import graft.streaming.IngestStream
+import org.apache.spark.graft.TempDirs
 
 /** Streaming warehouse ingestion end-to-end: drop dir → per-file
   * micro-batches → parquet warehouse → archival, with replay idempotency.
@@ -22,7 +23,7 @@ class IngestStreamSpec extends SparkSpec {
   }
 
   test("drains the drop dir, builds the warehouse, archives the files") {
-    val base = Files.createTempDirectory("ingstream").toString
+    val base = TempDirs.create("ingstream").toString
     val in = s"$base/in"
     copyFixtures(in)
     val (ok, err) = IngestStream.runAvailableNow(spark, in,
@@ -59,7 +60,7 @@ class IngestStreamSpec extends SparkSpec {
   }
 
   test("corrupt workbook is quarantined; the good one still lands") {
-    val base = Files.createTempDirectory("ingbad").toString
+    val base = TempDirs.create("ingbad").toString
     val in = s"$base/in"
     new java.io.File(in).mkdirs()
     Files.copy(Paths.get(s"/root/reference/data_test/${fixtures.head}"),

@@ -8,6 +8,7 @@ import graft.streaming.IngestStream
 import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import scala.sys.process._
@@ -26,7 +27,7 @@ class IngestionGoldenSpec extends SparkSpec {
   private val files = Seq("wb_000.xlsx", "wb_001.xlsx", "wb_002.xlsx")
 
   private lazy val oracleDir: String = {
-    val dir = Files.createTempDirectory("ingestion_golden_oracle").toString
+    val dir = TempDirs.create("ingestion_golden_oracle").toString
     val rc = s"python3 scripts/ingestion_oracle.py $fixtures $dir".!
     assert(rc == 0, "oracle script failed")
     dir
@@ -88,7 +89,7 @@ class IngestionGoldenSpec extends SparkSpec {
 
   /** The three workbooks committed one per micro-batch, in name order. */
   private lazy val streamed: String = {
-    val base = Files.createTempDirectory("ingestion_golden_stream").toString
+    val base = TempDirs.create("ingestion_golden_stream").toString
     files.foreach { f =>
       copyInto(s"$base/in", f, f)
       assert(commit(base) == ((1L, 0L)), s"commit of $f")
@@ -154,7 +155,7 @@ class IngestionGoldenSpec extends SparkSpec {
   }
 
   test("a commit rewrites a table fragmented past the threshold whole, and still matches the oracle") {
-    val base = Files.createTempDirectory("ingestion_golden_compact").toString
+    val base = TempDirs.create("ingestion_golden_compact").toString
     files.take(2).foreach(f => copyInto(s"$base/first", f, f))
     copyInto(s"$base/third", files(2), files(2))
     WarehouseStore.save(spark,
@@ -175,7 +176,7 @@ class IngestionGoldenSpec extends SparkSpec {
   }
 
   test("a commit whose publish step fails is quarantined and leaves the live tables as they were") {
-    val base = Files.createTempDirectory("ingestion_golden_failing").toString
+    val base = TempDirs.create("ingestion_golden_failing").toString
     spark.sparkContext.hadoopConfiguration.set("fs.failmv.impl", classOf[FailingRenameFs].getName)
     def run(): (Long, Long) = IngestStream.runAvailableNow(spark, s"$base/in",
       warehouseDir = s"failmv:$base/wh", processedDir = s"$base/done",
@@ -201,7 +202,7 @@ class IngestionGoldenSpec extends SparkSpec {
   }
 
   test("a commit whose staging write fails for one table waits for the others, is quarantined and leaves the live tables as they were") {
-    val base = Files.createTempDirectory("ingestion_golden_stage_failing").toString
+    val base = TempDirs.create("ingestion_golden_stage_failing").toString
     spark.sparkContext.hadoopConfiguration.set("fs.failmv.impl", classOf[FailingRenameFs].getName)
     copyInto(s"$base/in", files(0), files(0))
     assert(commit(base, "failmv:") == ((1L, 0L)))
@@ -227,7 +228,7 @@ class IngestionGoldenSpec extends SparkSpec {
   }
 
   test("a one-workbook commit into a two-workbook warehouse stays within its job budget") {
-    val base = Files.createTempDirectory("ingestion_golden_jobs").toString
+    val base = TempDirs.create("ingestion_golden_jobs").toString
     files.take(2).foreach(f => copyInto(s"$base/first", f, f))
     copyInto(s"$base/third", files(2), files(2))
     WarehouseStore.save(spark,

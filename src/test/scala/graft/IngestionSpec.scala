@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.{Ingestion, Warehouse}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import scala.sys.process._
@@ -18,7 +19,7 @@ class IngestionSpec extends SparkSpec {
     Ingestion.ingestWorkbooks(spark, fixtures, Ingestion.empty(spark))
 
   private lazy val oracleDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("ingestion_oracle").toString
+    val dir = TempDirs.create("ingestion_oracle").toString
     val rc = s"python3 scripts/ingestion_oracle.py $fixtures $dir".!
     assert(rc == 0, "oracle script failed")
     dir
@@ -65,7 +66,7 @@ class IngestionSpec extends SparkSpec {
   test("the full 11-workbook historical corpus matches the oracle") {
     val corpus = "/root/reference/data_processed"
     val whC = Ingestion.ingestWorkbooks(spark, corpus, Ingestion.empty(spark))
-    val dir = java.nio.file.Files.createTempDirectory("ingestion_corpus").toString
+    val dir = TempDirs.create("ingestion_corpus").toString
     val rc = s"python3 scripts/ingestion_oracle.py $corpus $dir".!
     assert(rc == 0, "oracle script failed on the corpus")
     IngestionSpec.assertOracle(whC, dir)

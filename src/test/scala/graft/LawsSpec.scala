@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{XlsxSource, XlsxWriter}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -252,7 +253,7 @@ class LawsSpec extends SparkSpec {
     val rows = sample(nastyGen, 60).distinct
       .filter(s => s.trim.nonEmpty) // blank headers/cells read back as null
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }
-    val out = java.nio.file.Files.createTempDirectory("xlsxlaw").toString
+    val out = TempDirs.create("xlsxlaw").toString
     XlsxWriter.write(s"$out/law.xlsx", Seq("s" -> rows.toDF("id", "payload")))
     val back = XlsxSource.read(spark, s"$out/law.xlsx", "s")
       .orderBy(col("_rownum"))

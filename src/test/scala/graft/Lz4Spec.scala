@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Lz4
+import org.apache.spark.graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the from-scratch LZ4 block decoder (sources/Lz4.scala) against
@@ -310,7 +311,7 @@ class Lz4Spec extends AnyFunSuite {
     val lz4 = new java.io.File("/root/miniconda/bin/lz4")
     assume(lz4.exists, "lz4 CLI not installed")
     val F = graft.sources.Lz4Frame
-    val dir = java.nio.file.Files.createTempDirectory("lz4cli")
+    val dir = TempDirs.create("lz4cli")
     // repetitive >64 KB so -B4 -BD makes REAL cross-block matches
     val data = (("alpha beta gamma delta " * 400) + "tail").getBytes(
       "UTF-8") ++ Array.tabulate[Byte](150000)(i =>

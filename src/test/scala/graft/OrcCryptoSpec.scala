@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Orc, OrcCrypto, OrcWrite}
+import org.apache.spark.graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins ORC column encryption (q371): decrypt∘encrypt == identity
@@ -193,7 +194,7 @@ class OrcCryptoSpec extends SparkSpec {
     val plain = plainFile(stride = 0) // legacy stats envelope
     val enc = OrcCrypto.encryptFile(plain, master, "pii", Set(2),
       deterministic = true).getOrElse(fail("encrypt"))
-    val dir = java.nio.file.Files.createTempDirectory("orcenc").toFile
+    val dir = TempDirs.create("orcenc").toFile
     val p = new java.io.File(dir, "enc.orc")
     java.nio.file.Files.write(p.toPath, enc)
     val expectSalSum =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Orc
+import org.apache.spark.graft.TempDirs
 
 /** Pins the from-scratch ORC tail walk (sources/Orc.scala) against
   * liborc via the pyarrow-written fixture blobs: postscript ->
@@ -354,7 +355,7 @@ class OrcSpec extends SparkSpec {
     val v = Orc.stripeColumnLongs(b, t, t.stripes.head, 2)
       .getOrElse(fail("own read b"))
     assert(r.toSeq == rows.map(_(0)) && v.toSeq == rows.map(_(1)))
-    val dir = java.nio.file.Files.createTempDirectory("orcw").toFile
+    val dir = TempDirs.create("orcw").toFile
     val p = new java.io.File(dir, "own.orc")
     java.nio.file.Files.write(p.toPath, b)
     val got = spark.read.orc(p.getAbsolutePath)
@@ -409,7 +410,7 @@ class OrcSpec extends SparkSpec {
     assert(W.stripesForSplit(t, b.length.toLong, b.length + 9L)
       .isEmpty)
     // orc-core cross-read
-    val dir = java.nio.file.Files.createTempDirectory("orcms").toFile
+    val dir = TempDirs.create("orcms").toFile
     val p = new java.io.File(dir, "ms.orc")
     java.nio.file.Files.write(p.toPath, b)
     val got = spark.read.orc(p.getAbsolutePath)
@@ -460,7 +461,7 @@ class OrcSpec extends SparkSpec {
         .getOrElse(fail("doubles"))
       assert(d4.toSeq == ratios)
       // orc-core (Spark) as the independent reader
-      val dir = java.nio.file.Files.createTempDirectory("orcwt").toFile
+      val dir = TempDirs.create("orcwt").toFile
       val p = new java.io.File(dir, "own.orc")
       java.nio.file.Files.write(p.toPath, b)
       val got = spark.read.orc(p.getAbsolutePath)
@@ -508,7 +509,7 @@ class OrcSpec extends SparkSpec {
       assert(v3.zip(s3).collect { case (true, x) => x }.toSeq ==
         langs.flatten)
       // orc-core as the independent reader
-      val dir = java.nio.file.Files.createTempDirectory("orcdict").toFile
+      val dir = TempDirs.create("orcdict").toFile
       val p = new java.io.File(dir, "own.orc")
       java.nio.file.Files.write(p.toPath, b)
       val got = spark.read.orc(p.getAbsolutePath)
@@ -591,7 +592,7 @@ class OrcSpec extends SparkSpec {
       assert(bl3(g).testString(s0.get))
     assert(!bl3(0).testString("absent-tag-xyz"))
     // orc-core (Spark) still reads the indexed file
-    val dir = java.nio.file.Files.createTempDirectory("orcidx").toFile
+    val dir = TempDirs.create("orcidx").toFile
     val p = new java.io.File(dir, "own.orc")
     java.nio.file.Files.write(p.toPath, b)
     val got = spark.read.orc(p.getAbsolutePath)
@@ -631,7 +632,7 @@ class OrcSpec extends SparkSpec {
         .getOrElse(fail(s"own dec comp=$comp"))
       assert(uns.toSeq == amounts && scs.forall(_ == 2L))
       // orc-core as the independent reader
-      val dir = java.nio.file.Files.createTempDirectory("orctd").toFile
+      val dir = TempDirs.create("orctd").toFile
       val p = new java.io.File(dir, "own.orc")
       java.nio.file.Files.write(p.toPath, b)
       val got = spark.read.orc(p.getAbsolutePath)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Parquet, ParquetCrypto, ParquetWrite}
+import org.apache.spark.graft.TempDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins parquet modular encryption (q353): AES_GCM_V1 module framing,
@@ -197,7 +198,7 @@ class ParquetCryptoSpec extends AnyFunSuite {
     val enc = ParquetCrypto.encryptFile(plainFile(),
       ParquetCrypto.Keys(footerKey, Map("val" -> valKey)), aadUnique,
       ctr = true).getOrElse(fail("encrypt"))
-    val dir = java.nio.file.Files.createTempDirectory("pq_ctr")
+    val dir = TempDirs.create("pq_ctr")
     val f = dir.resolve("enc.parquet")
     java.nio.file.Files.write(f, enc.bytes)
     val retriever = new DecryptionKeyRetriever {
@@ -239,7 +240,7 @@ class ParquetCryptoSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.ParquetReadOptions
     val (_, enc) = encrypted()
-    val dir = java.nio.file.Files.createTempDirectory("pq_crypto")
+    val dir = TempDirs.create("pq_crypto")
     val f = dir.resolve("enc.parquet")
     java.nio.file.Files.write(f, enc.bytes)
     val retriever = new DecryptionKeyRetriever {

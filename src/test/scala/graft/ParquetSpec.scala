@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Parquet
+import org.apache.spark.graft.TempDirs
 
 /** Byte-level parquet walk, pinned against TWO independent
   * implementations: parquet-cpp via the pyarrow-written fixture blobs
@@ -65,8 +66,7 @@ class ParquetSpec extends SparkSpec {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import spark.implicits._
     for (codec <- Seq("gzip", "none")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"pq_spec_$codec").toString
+      val dir = TempDirs.create(s"pq_spec_$codec").toString
       val df = spark.range(0, 300).select(
         $"id".as("rec_id"),
         org.apache.spark.sql.functions.when($"id" % 7 =!= 0,
@@ -142,8 +142,7 @@ class ParquetSpec extends SparkSpec {
     // blocks) both route through the engine's own Lz4.
     for (codec <- Seq("gzip", "snappy", "zstd", "lz4", "lz4_raw",
       "none")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"pq_dict_$codec").toString
+      val dir = TempDirs.create(s"pq_dict_$codec").toString
       // k: scattered small domain (bit-packed indices); r: long runs
       // (RLE indices); s: strings with repeats; all nullable + nulls
       spark.range(0, 2000).select(
@@ -188,8 +187,7 @@ class ParquetSpec extends SparkSpec {
     import spark.implicits._
     for (codec <- Seq("gzip", "snappy", "zstd", "lz4", "lz4_raw",
       "none")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"pq_v2_$codec").toString
+      val dir = TempDirs.create(s"pq_v2_$codec").toString
       spark.range(0, 1500).select(
         ($"id" % 9).cast("long").as("k"),
         org.apache.spark.sql.functions.when($"id" % 6 =!= 0,
@@ -226,8 +224,7 @@ class ParquetSpec extends SparkSpec {
     import spark.implicits._
     for ((ver, codec) <- Seq(("v1", "snappy"), ("v2", "gzip"),
       ("v1", "none"))) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"pq_typed_${ver}_$codec").toString
+      val dir = TempDirs.create(s"pq_typed_${ver}_$codec").toString
       spark.range(0, 1200).select(
         ($"id" % 2 === 0).as("flag"),
         ($"id" % 97 - 40).cast("int").as("cnt"),
@@ -273,7 +270,7 @@ class ParquetSpec extends SparkSpec {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_stats").toString
+    val dir = TempDirs.create("pq_stats").toString
     spark.range(0, 900).select(
       ($"id" * 3 - 700).as("v64"),
       ($"id" % 83 - 11).cast("int").as("v32"),
@@ -507,7 +504,7 @@ class ParquetSpec extends SparkSpec {
     "DELTA_BINARY_PACKED ints and DELTA_BYTE_ARRAY strings — decoded " +
     "sums equal the source rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_delta").toString
+    val dir = TempDirs.create("pq_delta").toString
     spark.range(0, 3000).select(
       ($"id" * 2654435761L % 1000003L - 5000L).as("k"), // sign + spread
       org.apache.spark.sql.functions.when($"id" % 9 =!= 0,
@@ -552,8 +549,7 @@ class ParquetSpec extends SparkSpec {
     "lists and null elements all counted as level entries") {
     import spark.implicits._
     for (ver <- Seq("v1", "v2")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"pq_list_$ver").toString
+      val dir = TempDirs.create(s"pq_list_$ver").toString
       spark.range(0, 900).select(
         $"id",
         org.apache.spark.sql.functions.when($"id" % 13 =!= 0,
@@ -607,7 +603,7 @@ class ParquetSpec extends SparkSpec {
     "(legacy format): epoch-second and unscaled sums exact, " +
     "negatives included") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_dec").toString
+    val dir = TempDirs.create("pq_dec").toString
     val prevTs = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
     val prevLegacy = spark.conf.getOption("spark.sql.parquet.writeLegacyFormat")
     try {
@@ -725,7 +721,7 @@ class ParquetSpec extends SparkSpec {
     "per-page decode via direct addressing equals the sequential walk, " +
     "and forged indexes fail closed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_pageidx")
+    val dir = TempDirs.create("pq_pageidx")
       .toString
     spark.range(0, 1000).select($"id".as("rec_id"))
       .coalesce(1).write
@@ -794,7 +790,7 @@ class ParquetSpec extends SparkSpec {
     "page still carries its bit-width byte (parquet-cpp) and both " +
     "readers accept it") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_allnull")
+    val dir = TempDirs.create("pq_allnull")
       .toString
     spark.range(0, 50).select($"id".as("rec_id"),
       org.apache.spark.sql.functions.lit(null).cast("string").as("s"),
@@ -823,7 +819,7 @@ class ParquetSpec extends SparkSpec {
     "own reader for thousands of present AND absent keys; forged " +
     "pointers fail closed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pq_bloom")
+    val dir = TempDirs.create("pq_bloom")
       .toString
     spark.range(0, 4000).select(($"id" * 7).as("rec_id"))
       .coalesce(1).write
@@ -900,8 +896,7 @@ class ParquetSpec extends SparkSpec {
       CkRow(null, null, null, CkProto(3)),
       CkRow(CkAdd("d.parquet", null, null), null, null, null))
     for (wv <- Seq("PARQUET_1_0", "PARQUET_2_0")) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"ck_cells_$wv").toString
+      val dir = TempDirs.create(s"ck_cells_$wv").toString
       rows.toDS().coalesce(1).write
         .option("compression", "snappy")
         .option("parquet.writer.version", wv)
@@ -954,7 +949,7 @@ class ParquetSpec extends SparkSpec {
       .getOrElse(fail("own reader: b"))
     assert(ra.toSeq == rows.map(_(0)) && rb.toSeq == rows.map(_(1)))
     // parquet-mr (Spark) as the independent reader
-    val dir = java.nio.file.Files.createTempDirectory("pqw").toFile
+    val dir = TempDirs.create("pqw").toFile
     val p = new java.io.File(dir, "own.parquet")
     java.nio.file.Files.write(p.toPath, b)
     val df = spark.read.parquet(p.getAbsolutePath)
@@ -1039,7 +1034,7 @@ class ParquetSpec extends SparkSpec {
         assert(scCol.nullCount == scores.count(_.isEmpty))
       }
       // parquet-mr (Spark) as the independent reader
-      val dir = java.nio.file.Files.createTempDirectory("pqwf").toFile
+      val dir = TempDirs.create("pqwf").toFile
       val p = new java.io.File(dir, "own.parquet")
       java.nio.file.Files.write(p.toPath, b)
       val df = spark.read.parquet(p.getAbsolutePath)
@@ -1104,7 +1099,7 @@ class ParquetSpec extends SparkSpec {
     assert(!bloomTag.mightContainBinary("tag-99".getBytes("UTF-8")) ||
       !bloomTag.mightContainBinary("tag-77".getBytes("UTF-8")))
     // parquet-mr reads the indexed multi-page file
-    val dir = java.nio.file.Files.createTempDirectory("pqwi").toFile
+    val dir = TempDirs.create("pqwi").toFile
     val p = new java.io.File(dir, "own.parquet")
     java.nio.file.Files.write(p.toPath, b)
     val got = spark.read.parquet(p.getAbsolutePath)
@@ -1151,7 +1146,7 @@ class ParquetSpec extends SparkSpec {
       assert(oc.defs.count(_ == 0) == ids.count(_ % 5 == 0))
       assert(oc.longs.toSeq == optVals.toSeq)
       // parquet-mr
-      val dir = java.nio.file.Files.createTempDirectory("pqv2w").toFile
+      val dir = TempDirs.create("pqv2w").toFile
       val p = new java.io.File(dir, "own.parquet")
       java.nio.file.Files.write(p.toPath, b)
       val got = spark.read.parquet(p.getAbsolutePath)
@@ -1205,7 +1200,7 @@ class ParquetSpec extends SparkSpec {
       .getOrElse(fail("chunk"))
     assert(cells.longs.length == 150 && cells.longs.contains(180L))
     // parquet-mr: row-group structure + full content
-    val dir = java.nio.file.Files.createTempDirectory("pqrg").toFile
+    val dir = TempDirs.create("pqrg").toFile
     val p = new java.io.File(dir, "own.parquet")
     java.nio.file.Files.write(p.toPath, b)
     val got = spark.read.parquet(p.getAbsolutePath)
@@ -1245,7 +1240,7 @@ class ParquetSpec extends SparkSpec {
       Act("f2.parquet", 456L, Map("part" -> "2"), null, null, -1L),
       Act(null, -1L, null, "f1.parquet", null, -1L)))
     // parquet-mr: the foreign reader agrees on structs AND the map
-    val dir = java.nio.file.Files.createTempDirectory("ckw").toFile
+    val dir = TempDirs.create("ckw").toFile
     val p = new java.io.File(dir, "own.checkpoint.parquet")
     java.nio.file.Files.write(p.toPath, b)
     val df = spark.read.parquet(p.getAbsolutePath)
@@ -1298,7 +1293,7 @@ class ParquetSpec extends SparkSpec {
       assert(P.columnStrings(b, "name").exists(_.toSeq == names))
       assert(P.columnStrings(b, "tag").exists(_.toSeq == tags))
       assert(P.columnLongs(b, "emb").exists(_.toSeq == embBits))
-      val dir = java.nio.file.Files.createTempDirectory("pqv2e").toFile
+      val dir = TempDirs.create("pqv2e").toFile
       val p = new java.io.File(dir, "own.parquet")
       java.nio.file.Files.write(p.toPath, b)
       // Spark's vectorized reader has no BYTE_STREAM_SPLIT support;
@@ -1339,7 +1334,7 @@ class ParquetSpec extends SparkSpec {
         longs = vs.toArray, enc = 5))
       val bb = W.writeFile(f, d)
       assert(P.columnLongs(bb, "x").exists(_.toSeq == vs), vs.take(3))
-      val dir = java.nio.file.Files.createTempDirectory("dbpe").toFile
+      val dir = TempDirs.create("dbpe").toFile
       val p = new java.io.File(dir, "e.parquet")
       java.nio.file.Files.write(p.toPath, bb)
       val back = spark.read.parquet(p.getAbsolutePath)
@@ -1354,7 +1349,7 @@ class ParquetSpec extends SparkSpec {
       .map(i => i.toLong * 11).toArray
     val ob = W.writeFile(Seq(W.Leaf("ox", 1, 2)),
       Seq(W.LeafData(defs, null, longs = present, enc = 5)))
-    val dir2 = java.nio.file.Files.createTempDirectory("dbpo").toFile
+    val dir2 = TempDirs.create("dbpo").toFile
     val p2 = new java.io.File(dir2, "o.parquet")
     java.nio.file.Files.write(p2.toPath, ob)
     val g2 = spark.read.parquet(p2.getAbsolutePath)
@@ -1386,7 +1381,7 @@ class ParquetSpec extends SparkSpec {
     assert(P.columnLongs(crcd, "id").exists(
       _.toSeq == (0 until n).map(_.toLong * 7)))
     // parquet-mr with page verification enabled reads the crc'd file
-    val dir = java.nio.file.Files.createTempDirectory("pqcrc").toFile
+    val dir = TempDirs.create("pqcrc").toFile
     val p = new java.io.File(dir, "own.parquet")
     java.nio.file.Files.write(p.toPath, crcd)
     spark.conf.set("spark.sql.parquet.enableVectorizedReader", "true")

@@ -2,6 +2,7 @@ package graft
 
 import graft.plans.Statements
 import graft.sources.{PdfParser, XlsxSource}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -87,7 +88,7 @@ class PdfSpec extends SparkSpec {
   }
 
   test("dynamic filename derives from max operation date (S10)") {
-    val out = java.nio.file.Files.createTempDirectory("pdfout").toString
+    val out = TempDirs.create("pdfout").toString
     val path = Statements.writeWorkbook(extracted, out)
     assert(path.endsWith("cargos_bbva_17Sep2025.xlsx"))
     // written workbook round-trips through our own reader

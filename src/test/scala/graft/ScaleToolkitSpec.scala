@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Conform, Relational}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.functions._
 
 /** Scale-technique operators: skew salting, bucketed co-located joins,
@@ -76,7 +77,7 @@ class ScaleToolkitSpec extends SparkSpec {
 
   test("persisted IVF index: search prunes unprobed lists, equals in-flight ivfTopK") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val dir = TempDirs.create("ivfidx").toString
     val e = Engine.table(spark, sf(), "embeddings")
     val centroids = e.filter(col("vec_id") % 31 === 0)
       .select(col("vec_id").as("centroid_id"),
@@ -100,7 +101,7 @@ class ScaleToolkitSpec extends SparkSpec {
   test("IVF index append: increments equal a full rebuild, search sees " +
       "them with pruning intact") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("ivfapp").toString
+    val dir = TempDirs.create("ivfapp").toString
     val e = Engine.table(spark, sf(), "embeddings")
     val centroids = e.filter(col("vec_id") % 31 === 0)
       .select(col("vec_id").as("centroid_id"),
@@ -141,7 +142,7 @@ class ScaleToolkitSpec extends SparkSpec {
       "batch is a no-op, and list pruning survives the extra level") {
     import graft.operators.Similarity
     import graft.streaming.StreamOps
-    val dir = java.nio.file.Files.createTempDirectory("ivfstream").toString
+    val dir = TempDirs.create("ivfstream").toString
     val e = Engine.table(spark, sf(), "embeddings")
     val centroids = e.filter(col("vec_id") % 31 === 0)
       .select(col("vec_id").as("centroid_id"),
@@ -174,7 +175,7 @@ class ScaleToolkitSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes at planning time (PartitionFilters)") {
-    val dir = java.nio.file.Files.createTempDirectory("parted").toString
+    val dir = TempDirs.create("parted").toString
     val orders = Engine.table(spark, sf(), "orders")
       .withColumn("o_year", year(col("o_orderdate")))
     Engine.writePartitioned(orders, dir, Seq("o_year"))
@@ -192,7 +193,7 @@ class ScaleToolkitSpec extends SparkSpec {
   }
 
   test("compact: many small files become few, content preserved exactly") {
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
+    val base = TempDirs.create("compact").toString
     val src = s"$base/src"; val dst = s"$base/dst"
     val orders = Engine.table(spark, sf(), "orders")
     orders.repartition(20).write.parquet(src) // simulate streaming debris
@@ -232,7 +233,7 @@ class ScaleToolkitSpec extends SparkSpec {
   test("writeRangeSorted: disjoint file ranges, sorted within, content kept") {
     val orders = Engine.table(spark, sf(), "orders")
       .select("o_orderkey", "o_totalprice")
-    val dst = java.nio.file.Files.createTempDirectory("rs").toString + "/out"
+    val dst = TempDirs.create("rs").toString + "/out"
     Engine.writeRangeSorted(orders, dst, nFiles = 4, Seq("o_totalprice"))
     val files = new java.io.File(dst).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
@@ -259,7 +260,7 @@ class ScaleToolkitSpec extends SparkSpec {
   test("writeZOrdered: every file bounds BOTH dims tightly, content kept") {
     val orders = Engine.table(spark, sf(), "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val dst = java.nio.file.Files.createTempDirectory("zo").toString + "/out"
+    val dst = TempDirs.create("zo").toString + "/out"
     Engine.writeZOrdered(orders, dst, nFiles = 16,
       col("o_custkey"), col("o_orderkey"))
     val files = new java.io.File(dst).listFiles()
@@ -291,7 +292,7 @@ class ScaleToolkitSpec extends SparkSpec {
     import graft.functions.hash60
     val docs = Engine.table(spark, sf(), "documents")
       .select("doc_id", "text")
-    val dst = java.nio.file.Files.createTempDirectory("ts").toString + "/out"
+    val dst = TempDirs.create("ts").toString + "/out"
     val manifest = Engine.writeTrainingShards(docs, $"text", $"doc_id",
       dst, nShards = 8).localCheckpoint()
     // layout: 8 shard dirs, exactly one data file each; the manifest

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.functions._
 import sys.process._
 
@@ -25,8 +26,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("shardBatch replay rewrites byte-identical shards + manifest") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_shardsink_replay").toString
+    val out = TempDirs.create("graft_shardsink_replay").toString
     ShardSink.shardBatch(docsDf, 0L, out, binWidth = 16L)
     def snapshot(): Map[String, String] = {
       val base = java.nio.file.Paths.get(out)
@@ -49,8 +49,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("parquet-mr cross-reads an own-written shard incl. LIST column") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_shardsink_mr").toString
+    val out = TempDirs.create("graft_shardsink_mr").toString
     ShardSink.shardBatch(docsDf, 0L, out, binWidth = 64L)
     val df = spark.read.parquet(s"$out/shards/batch=0/bin=0.parquet")
     assert(df.schema.map(f => (f.name, f.dataType.simpleString)) ==
@@ -104,8 +103,7 @@ class ShardSinkSpec extends SparkSpec {
   }
 
   test("pyarrow cross-reads an own-written shard incl. LIST column") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_shardsink_pa").toString
+    val out = TempDirs.create("graft_shardsink_pa").toString
     ShardSink.shardBatch(docsDf, 0L, out, binWidth = 64L)
     val py =
       """
@@ -122,17 +120,14 @@ class ShardSinkSpec extends SparkSpec {
         |assert d['text'][5] == 'tok5 alpha b5'
         |print('PYARROW_OK')
       """.stripMargin
-    val f = java.nio.file.Files.createTempFile("shardsink_pa", ".py")
-    java.nio.file.Files.writeString(f, py)
-    val got = Seq("python3", f.toString,
+    val got = Seq("python3", "-c", py,
       s"$out/shards/batch=0/bin=0.parquet").!!
     assert(got.contains("PYARROW_OK"), got)
   }
 
   test("shardStream drain x2 from one checkpoint adds zero shards") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_shardsink_stream").toString
+    val root = TempDirs.create("graft_shardsink_stream").toString
     val drop = s"$root/drop"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(drop))
     val d = docsDf
@@ -166,8 +161,7 @@ class ShardSinkSpec extends SparkSpec {
     "wins on overlap, byte-stable across passes, decodeShard closes " +
     "on damage") {
     import spark.implicits._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
+    val out = TempDirs.create("graft_compact").toString
     val b0 = (0L until 40L by 2).map(i =>
       (i, s"tok$i alpha", if (i % 7 == 0) "zz" else "en", i + 1))
       .toDF("doc_id", "text", "lang", "n_chars")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.streaming.{EventWindows, FileDrop}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -203,7 +204,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("FileDrop: drains directory, archives success, quarantines failure") {
-    val base = Files.createTempDirectory("filedrop").toFile.getAbsolutePath
+    val base = TempDirs.create("filedrop").toFile.getAbsolutePath
     val in = s"$base/in"; val done = s"$base/done"; val bad = s"$base/bad"
     new java.io.File(in).mkdirs()
     Files.writeString(java.nio.file.Paths.get(s"$in/good.json"),
@@ -428,7 +429,7 @@ class StreamingSpec extends SparkSpec {
 
   test("nearDupIngest: cross-batch and within-batch near-dups dropped") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("ndi").toString
+    val dir = TempDirs.create("ndi").toString
     val (store, out, ckpt) = (s"$dir/store", s"$dir/out", s"$dir/ckpt")
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
@@ -518,7 +519,7 @@ class StreamingSpec extends SparkSpec {
   test("compactBatchStore interleaving: a batch running in the visible-" +
       "but-not-deleted window gates correctly; its store partition survives") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("ndic").toString
+    val dir = TempDirs.create("ndic").toString
     val (store, out) = (s"$dir/store", s"$dir/out")
     val dup = "the quick brown fox jumps over the lazy dog end"
     graft.streaming.StreamOps.nearDupBatch(
@@ -554,7 +555,7 @@ class StreamingSpec extends SparkSpec {
 
   test("nearDupIngest restart: a new query on the same checkpoint resumes, no rework") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("ndir").toString
+    val dir = TempDirs.create("ndir").toString
     val (store, out, ckpt) = (s"$dir/store", s"$dir/out", s"$dir/ckpt")
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
@@ -585,7 +586,7 @@ class StreamingSpec extends SparkSpec {
 
   test("kmeansIterStream: incremental epoch ≡ batch Lloyd's iteration, replay-proof") {
     import graft.operators.Similarity
-    val dir = Files.createTempDirectory("kmstream").toString
+    val dir = TempDirs.create("kmstream").toString
     val e = Engine.table(spark, sf(), "embeddings")
     val seeds = Similarity.kmeans(e, "embedding", "vec_id", k = 8, iters = 0)
     val oneIter = Similarity.kmeans(e, "embedding", "vec_id", k = 8, iters = 1)
@@ -614,7 +615,7 @@ class StreamingSpec extends SparkSpec {
       "exactly-once manifest compaction across generations") {
     import graft.operators.TextAnalysis
     import graft.streaming.StreamOps
-    val dir = Files.createTempDirectory("cmsstream").toString
+    val dir = TempDirs.create("cmsstream").toString
     val state = s"$dir/state"
     val d = Engine.table(spark, sf(), "documents")
     def direct(df: org.apache.spark.sql.DataFrame) = df
@@ -689,7 +690,7 @@ class StreamingSpec extends SparkSpec {
       "OR-fold compaction") {
     import graft.operators.Curation
     import graft.streaming.StreamOps
-    val dir = Files.createTempDirectory("bloomstream").toString
+    val dir = TempDirs.create("bloomstream").toString
     val state = s"$dir/state"
     val ev = Engine.table(spark, sf(), "documents").filter($"doc_id" % 8 === 0)
     // the batch construction the law compares against: the filter
@@ -746,7 +747,7 @@ class StreamingSpec extends SparkSpec {
       "batch; survivors globally near-dup-free; replay-idempotent") {
     import graft.operators.{Curation, Dedup}
     import graft.streaming.StreamOps
-    val dir = Files.createTempDirectory("curing").toString
+    val dir = TempDirs.create("curing").toString
     val (store, out) = (s"$dir/store", s"$dir/out")
     val d = Engine.table(spark, sf(), "documents")
     val eval = d.filter($"doc_id" % 8 === 0)
@@ -781,7 +782,7 @@ class StreamingSpec extends SparkSpec {
 
   test("embNearDupIngest: cosine gate across batches, replay-idempotent") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("endi").toString
+    val dir = TempDirs.create("endi").toString
     val (store, out, ckpt) = (s"$dir/store", s"$dir/out", s"$dir/ckpt")
     val input = MemoryStream[(Long, Seq[Float])]
     val vecs = input.toDF().toDF("vec_id", "embedding")
@@ -847,7 +848,7 @@ class StreamingSpec extends SparkSpec {
 
   test("substrDupIngest: passage-coverage gate across and within batches, replay-idempotent") {
     implicit val sq = spark.sqlContext
-    val dir = Files.createTempDirectory("ssd").toString
+    val dir = TempDirs.create("ssd").toString
     val (store, out, ckpt) = (s"$dir/store", s"$dir/out", s"$dir/ckpt")
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().toDF("doc_id", "text")
@@ -902,7 +903,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("FileDrop live mode: ProcessingTime trigger picks up files arriving mid-stream") {
-    val base = Files.createTempDirectory("filedroplive").toFile.getAbsolutePath
+    val base = TempDirs.create("filedroplive").toFile.getAbsolutePath
     val in = s"$base/in"; val done = s"$base/done"; val bad = s"$base/bad"
     new java.io.File(in).mkdirs()
     Files.writeString(java.nio.file.Paths.get(s"$in/first.json"), """{"k": 1}""")

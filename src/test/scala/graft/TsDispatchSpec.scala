@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,8 +21,7 @@ class TsDispatchSpec extends SparkSpec {
   }
 
   test("q25/q26/q44 results are invariant to the events.ts encoding") {
-    val base = java.nio.file.Files
-      .createTempDirectory("ts_dispatch").toString
+    val base = TempDirs.create("ts_dispatch").toString
     val ev = Engine.table(spark, sf(), "events") // normalized: TimestampType
     val variants = Seq(
       // epoch-nanos long — the nanosAsLong face of TIMESTAMP(NANOS)

@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.Warc
 import graft.sources.Warc.{WarcBlob, WarcRecord}
+import org.apache.spark.graft.TempDirs
 
 /** WARC record framing: the length-strided walk plus the dirty-data arms
   * a real crawl needs (resync after garbage, truncated tails, multibyte
@@ -99,8 +100,8 @@ class WarcSpec extends SparkSpec {
 
   test("recordStream: WARC files landing in a directory stream out as records") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("warc_in").toFile
-    val cp = java.nio.file.Files.createTempDirectory("warc_cp").toFile
+    val dir = TempDirs.create("warc_in").toFile
+    val cp = TempDirs.create("warc_cp").toFile
     (0 to 2).foreach { i =>
       val blob = rec(s"http://w/$i/a", s"p$i-a".getBytes) ++
         rec(s"http://w/$i/b", s"p$i-b".getBytes)

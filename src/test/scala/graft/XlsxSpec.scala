@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{XlsxParser, XlsxSource, XlsxWriter}
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -25,6 +26,24 @@ class XlsxSpec extends SparkSpec {
     assert(norm(v2).exceptAll(norm(v1)).isEmpty &&
       norm(v1).exceptAll(norm(v2)).isEmpty)
     assert(v2.count() > 0)
+  }
+
+  test("DataSource V2 matches XlsxSource on the committed ingestion " +
+    "workbooks, both sheets") {
+    val dir = "fixtures/ingestion"
+    def norm(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("_file", regexp_extract(col("_file"), "[^/]+$", 0))
+    Seq("Compras" -> Nil, "Precios" -> Seq("Preview")).foreach {
+      case (sheet, links) =>
+        val opts = Map("sheet" -> sheet) ++
+          links.map(_ => "hyperlinkColumns" -> links.mkString(","))
+        val v2 = spark.read.format("xlsx").options(opts).load(dir)
+        val v1 = XlsxSource.read(spark, dir, sheet, hyperlinkCols = links)
+        assert(v2.columns.toSeq == v1.columns.toSeq, sheet)
+        assert(norm(v2).exceptAll(norm(v1)).isEmpty &&
+          norm(v1).exceptAll(norm(v2)).isEmpty, sheet)
+        assert(v1.count() > 0, sheet)
+    }
   }
 
   test("DataSource V2 column pruning reaches the scan") {
@@ -123,14 +142,14 @@ class XlsxSpec extends SparkSpec {
 
   test("both xlsx sources take the first workbook's header in name order, and fail alike on none") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("xlsxh").toString
+    val dir = TempDirs.create("xlsxh").toString
     XlsxWriter.write(s"$dir/b.xlsx", Seq("s" -> Seq(("x", "y")).toDF("b1", "b2")))
     XlsxWriter.write(s"$dir/a.xlsx", Seq("s" -> Seq(("x", "y")).toDF("a1", "a2")))
     def data(cols: Array[String]) = cols.filterNot(_.startsWith("_")).toSeq
     assert(data(XlsxSource.read(spark, dir, "s").columns) == Seq("a1", "a2"))
     assert(data(spark.read.format("xlsx").option("sheet", "s").load(dir).columns) ==
       Seq("a1", "a2"))
-    val empty = java.nio.file.Files.createTempDirectory("xlsxe").toString
+    val empty = TempDirs.create("xlsxe").toString
     val e1 = intercept[IllegalArgumentException](XlsxSource.read(spark, empty, "s"))
     val e2 = intercept[IllegalArgumentException](
       spark.read.format("xlsx").option("sheet", "s").load(empty))
@@ -139,7 +158,7 @@ class XlsxSpec extends SparkSpec {
 
   test("writer round-trips through the reader") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("xlsxw").toString
+    val out = TempDirs.create("xlsxw").toString
     val a = Seq(("ab<c&d", 1L, 2.5, true), ("señor", 2L, -0.1, false))
       .toDF("name", "n", "x", "flag")
     val b = Seq(("k", java.lang.Double.valueOf(1.0)), ("m", null.asInstanceOf[java.lang.Double]))
@@ -160,7 +179,7 @@ class XlsxSpec extends SparkSpec {
 
   test("writer fence: a sheet over maxRowsPerSheet aborts, never drains the driver") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("xlsxf").toString
+    val out = TempDirs.create("xlsxf").toString
     val big = spark.range(0, 50).toDF("n")
     val e = intercept[IllegalStateException] {
       XlsxWriter.write(s"$out/big.xlsx", Seq("s" -> big), maxRowsPerSheet = 10)
@@ -178,7 +197,7 @@ class XlsxSpec extends SparkSpec {
 
   test("writer emits date cells as styled serials the reader restores") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("xlsxd").toString
+    val out = TempDirs.create("xlsxd").toString
     val df = Seq(("a", "2024-03-18"), ("b", "1999-12-31"))
       .toDF("k", "d").withColumn("d", col("d").cast("date"))
     XlsxWriter.write(s"$out/dates.xlsx", Seq("s" -> df))

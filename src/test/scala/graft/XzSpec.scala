@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{Crc64, Lzma2, Xz}
+import org.apache.spark.graft.TempDirs
 
 /** Pins the from-scratch XZ walk + LZMA decoder against liblzma (the
   * INDEPENDENT writer behind python lzma, via the fixture blobs):
@@ -245,7 +246,7 @@ class XzSpec extends SparkSpec {
   test("LzmaEncode: CPython lzma (liblzma) decodes own xz and own " +
     "alone byte-exact across the corpus battery") {
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("lzmaenc")
+    val dir = TempDirs.create("lzmaenc")
     val checks = Seq.newBuilder[String]
     for ((name, data) <- corpora if data.nonEmpty) {
       java.nio.file.Files.write(dir.resolve(s"$name.xz"),

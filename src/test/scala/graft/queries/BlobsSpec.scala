@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.expressions.Md5Hashes
+import org.apache.spark.graft.TempDirs
 import org.scalacheck.{Arbitrary, Prop, Test}
 import org.scalacheck.rng.Seed
 
@@ -18,7 +19,7 @@ class BlobsSpec extends SparkSpec {
   test("fixture joins each blob to the row filed under md5(tag + its sorted ids)") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("blobs_spec").toString
+    val dir = TempDirs.create("blobs_spec").toString
     try {
       val ids = Seq(5L, 41L, 0L, 12L, 97L, 1000L, 6L, 33L, 7L, 12345L, 2L, 60L, 9L)
       ids.toDF("doc_id").repartition(3).write.parquet(s"$dir/documents.parquet")
